@@ -84,13 +84,6 @@ def token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(r"\S+"))
 
 
-def word_tokens(col: Column) -> Column:
-    """BPE-ish tokenization: words, numbers, or single punctuation marks."""
-    return F.regexp_extract_all(
-        F.lower(col), F.lit(r"([a-zäöå]+|[0-9]+|[^\sa-zäöå0-9])"), 1
-    )
-
-
 def lang_score(col: Column, lang: str) -> Column:
     """Count of marker-stopword hits for one language."""
     padded = F.concat(F.lit(" "), F.lower(col), F.lit(" "))
@@ -162,11 +155,6 @@ def fingerprint(col: Column) -> Column:
     """Stable 64-bit content fingerprint (xxhash64 of normalized text)."""
     normalized = F.lower(F.regexp_replace(F.trim(col), _WS, " "))
     return F.xxhash64(normalized)
-
-
-def fingerprint_md5(col: Column) -> Column:
-    """MD5 hex digest of the raw text — matches DuckDB ``md5(text)``."""
-    return F.md5(col)
 
 
 def shingles(col: Column, k: int = 5) -> Column:

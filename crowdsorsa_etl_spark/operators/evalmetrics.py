@@ -224,23 +224,6 @@ def clipped_sql(n: int) -> str:
 # ---------------------------------------------------------------------------
 
 
-def corpus_bleu2(
-    cands: DataFrame,
-    refs: DataFrame,
-    *,
-    pair_col: str = "pair_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """One row: (n_pairs, c_len, r_len, p1, p2, bp, bleu2) with clipped
-    matches summed across pairs (clipping stays per-pair — the standard
-    corpus statistic). The fold is a single-row aggregation over the
-    per-pair count table, so the plan is the sentence pipeline plus one
-    bounded agg."""
-    u = _clipped(cands, refs, 1, pair_col=pair_col, text_col=text_col)
-    b = _clipped(cands, refs, 2, pair_col=pair_col, text_col=text_col)
-    return corpus_bleu2_from_clipped(u, b)
-
-
 def corpus_bleu2_from_clipped(u: DataFrame, b: DataFrame) -> DataFrame:
     """Corpus-BLEU fold over precomputed clipped-count tables (see
     :func:`bleu2_from_clipped`)."""

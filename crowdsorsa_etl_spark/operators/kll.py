@@ -221,11 +221,6 @@ def kll_merge(
     return out
 
 
-def kll_rank_estimate(cells, value: int) -> int:
-    """Cumulative-weight rank estimate: total weight of cells < value."""
-    return sum(w for _lv, _pos, v, w in cells if v < value)
-
-
 def kll_quantile(cells, phi: float):
     """Value at the phi-quantile per cumulative weight over value order."""
     total = sum(w for *_x, w in cells)

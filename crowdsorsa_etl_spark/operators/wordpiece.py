@@ -60,11 +60,6 @@ UNK = "[UNK]"
 DEPTH_SENTINEL = "?depth?"
 
 
-def _wp_spaced(word: str) -> list[str]:
-    """'key' -> ['k', '##e', '##y'] (BERT initial/continuation forms)."""
-    return [word[0]] + [f"##{c}" for c in word[1:]]
-
-
 def _strip_cont(sym: str) -> str:
     return sym[2:] if sym.startswith("##") else sym
 

@@ -20,6 +20,7 @@ Coverage map to SURVEY.md §2 is noted on each query.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -80,8 +81,10 @@ def _sf_cache_dir(sf_dir: str, tag: str, table: str) -> str:
     names + sizes + mtimes), not just the fixture basename: regenerating the
     sf fixture in place changes the fingerprint, so stale cached layouts are
     never served. Concurrent processes hashing the same unchanged fixture
-    share one path — safe because builders write via Spark's atomic-ish
-    overwrite and are idempotent for identical input.
+    share one path — safe because every directory artifact under it is
+    published through :func:`_at_rest` (JSON tables through
+    :func:`_json_sidecar_write`) and builds are idempotent for identical
+    input.
     """
     import hashlib
     import os
@@ -106,18 +109,6 @@ def _sf_cache_dir(sf_dir: str, tag: str, table: str) -> str:
         + "_"
         + h.hexdigest()[:12],
     )
-
-
-
-def _cpu_fanout(df):
-    """Spread CPU-bound per-row work across the session's cores when the
-    scan gives fewer splits — canonical implementation and rationale in
-    operators/fanout.cpu_fanout (r16: promoted to an operator so the
-    similarity/PQ/flagship tiers can use it without a layering violation).
-    """
-    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
-
-    return cpu_fanout(df)
 
 
 # normalization used by both the LLM pack and the curation funnels
@@ -297,7 +288,13 @@ def _json_sidecar_write(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
-def _promote_stage(stage: str, path: str, marker: str = "_SUCCESS") -> None:
+# The one completion marker of an at-rest artifact: Spark's own commit
+# marker, so a parquet artifact written straight into its stage already
+# carries it and every parquet reader skips it (a "_" file).
+_AT_REST_MARKER = "_SUCCESS"
+
+
+def _promote_stage(stage: str, path: str) -> None:
     """Atomically promote a fully-built staging dir to its final path.
 
     os.rename(dir, dir) fails with ENOTEMPTY when ``path`` already
@@ -320,7 +317,7 @@ def _promote_stage(stage: str, path: str, marker: str = "_SUCCESS") -> None:
     # COMPLETE artifact (marker present) ever appears, discard our stage —
     # never delete a winner out from under a concurrent reader.
     for _ in range(3):
-        if os.path.exists(os.path.join(path, marker)):
+        if os.path.exists(os.path.join(path, _AT_REST_MARKER)):
             shutil.rmtree(stage, ignore_errors=True)
             return
         shutil.rmtree(path, ignore_errors=True)
@@ -330,26 +327,57 @@ def _promote_stage(stage: str, path: str, marker: str = "_SUCCESS") -> None:
         except OSError:
             continue
     # final attempt: surface the error only if no winner exists either
-    if os.path.exists(os.path.join(path, marker)):
+    if os.path.exists(os.path.join(path, _AT_REST_MARKER)):
         shutil.rmtree(stage, ignore_errors=True)
         return
     os.rename(stage, path)
 
 
-def _stage_parquet(df: DataFrame, path: str) -> None:
-    """Materialize ``df`` as parquet at ``path`` via process-unique
-    staging + atomic rename. A direct mode('overwrite') to the final
-    path has a delete-then-write window during which a concurrent reader
-    (driver bench + oracle sweep run side by side) sees a partial table
-    even with a _SUCCESS gate — the write itself removes the old
-    _SUCCESS first (ADVICE r14 low on _ann_exact_topk)."""
+def _at_rest(path: str, build: Callable[[str], object]) -> str:
+    """Build-once protocol for every directory artifact under an
+    :func:`_sf_cache_dir` path; returns ``path``.
+
+    ``path/_SUCCESS`` present → the artifact is complete, return at once.
+    Otherwise ``build(stage)`` writes the whole artifact into the
+    process-unique ``{path}.stage.{pid}``, the marker is written last and
+    :func:`_promote_stage` renames the stage into place. ``path`` thus
+    only ever appears complete: a concurrent builder (a bench run and
+    an oracle sweep side by side) never overwrites files a reader is
+    scanning, a killed build leaves only an ignored stage, and a build
+    that raises removes its stage and publishes nothing."""
     import os
     import shutil
 
+    if os.path.exists(os.path.join(path, _AT_REST_MARKER)):
+        return path
     stage = f"{path}.stage.{os.getpid()}"
     shutil.rmtree(stage, ignore_errors=True)
-    df.write.mode("overwrite").parquet(stage)
+    try:
+        build(stage)
+        os.makedirs(stage, exist_ok=True)
+        open(os.path.join(stage, _AT_REST_MARKER), "w").close()
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     _promote_stage(stage, path)
+    return path
+
+
+@contextmanager
+def _scratch_copy(seed: str):
+    """Private copy of an at-rest store for one run to mutate (the live
+    apply/append a query demonstrates must never touch the shared seed);
+    yields its path and removes it on exit."""
+    import os
+    import shutil
+    import tempfile
+
+    with tempfile.TemporaryDirectory(
+        prefix="atrest_scratch_", ignore_cleanup_errors=True
+    ) as tmp:
+        root = os.path.join(tmp, "store")
+        shutil.copytree(seed, root)
+        yield root
 
 
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -364,16 +392,14 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.dedup import minhash_lsh_candidates
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "lshpairs_v1", "documents"), "pairs.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "lshpairs_v1", "documents"), "pairs.parquet"
+        ),
+        lambda stage: minhash_lsh_candidates(
+            _t(spark, sf_dir, "documents"), portable=True
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            minhash_lsh_candidates(
-                _t(spark, sf_dir, "documents"), portable=True
-            ),
-            path,
-        )
     return spark.read.parquet(path)
 
 
@@ -393,17 +419,15 @@ def _dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.clusters import dedup_clusters
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "dedupclusters_v1", "documents"),
-        "clusters.parquet",
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "dedupclusters_v1", "documents"),
+            "clusters.parquet",
+        ),
+        lambda stage: dedup_clusters(
+            _t(spark, sf_dir, "documents"), _lsh_pairs(spark, sf_dir)
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            dedup_clusters(
-                _t(spark, sf_dir, "documents"), _lsh_pairs(spark, sf_dir)
-            ),
-            path,
-        )
     return spark.read.parquet(path)
 
 
@@ -420,17 +444,18 @@ def _ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.similarity import cosine_topk
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "anntruth_v1", "embeddings"), "tk.parquet"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(stage: str) -> None:
         emb = _t(spark, sf_dir, "embeddings")
-        _stage_parquet(
-            cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5).select(
-                "query_id", "neighbor_id"
-            ),
-            path,
-        )
+        cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5).select(
+            "query_id", "neighbor_id"
+        ).write.parquet(stage)
+
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "anntruth_v1", "embeddings"), "tk.parquet"
+        ),
+        build,
+    )
     return spark.read.parquet(path)
 
 
@@ -443,15 +468,14 @@ def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and score literals are pure functions of the customer fixture."""
     import os
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "fspairs_v1", "customer"), "pairs.parquet"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from crowdsorsa_etl_spark.queries.round12_pack import (
-            _mp_linkage_frame,
-        )
+    from crowdsorsa_etl_spark.queries.round12_pack import _mp_linkage_frame
 
-        _stage_parquet(_mp_linkage_frame(spark, sf_dir), path)
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "fspairs_v1", "customer"), "pairs.parquet"
+        ),
+        lambda stage: _mp_linkage_frame(spark, sf_dir).write.parquet(stage),
+    )
     return spark.read.parquet(path)
 
 
@@ -471,13 +495,14 @@ def _kn_token_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         kneser_ney_token_scores,
     )
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "knscores_v1", "documents"), "lp.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "knscores_v1", "documents"), "lp.parquet"
+        ),
+        lambda stage: kneser_ney_token_scores(
+            _t(spark, sf_dir, "documents")
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            kneser_ney_token_scores(_t(spark, sf_dir, "documents")), path
-        )
     return spark.read.parquet(path)
 
 
@@ -492,16 +517,15 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.substring import _shingle_positions
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, f"shingles{k}_v1", "documents"), "sh.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, f"shingles{k}_v1", "documents"),
+            "sh.parquet",
+        ),
+        lambda stage: _shingle_positions(
+            _t(spark, sf_dir, "documents"), "doc_id", "text", k
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            _shingle_positions(
-                _t(spark, sf_dir, "documents"), "doc_id", "text", k
-            ),
-            path,
-        )
     return spark.read.parquet(path)
 
 
@@ -514,16 +538,14 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.dedup import simhash_signatures
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "simhash_v1", "documents"), "sig.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "simhash_v1", "documents"), "sig.parquet"
+        ),
+        lambda stage: simhash_signatures(
+            _t(spark, sf_dir, "documents"), portable=True
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            simhash_signatures(
-                _t(spark, sf_dir, "documents"), portable=True
-            ),
-            path,
-        )
     return spark.read.parquet(path)
 
 
@@ -538,14 +560,13 @@ def _shingle_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crowdsorsa_etl_spark.operators.dedup import shingle_jaccard_pairs
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "jactruth_v1", "documents"), "truth.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "jactruth_v1", "documents"),
+            "truth.parquet",
+        ),
+        lambda stage: shingle_jaccard_pairs(
+            _t(spark, sf_dir, "documents"), portable=True
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _stage_parquet(
-            shingle_jaccard_pairs(
-                _t(spark, sf_dir, "documents"), portable=True
-            ),
-            path,
-        )
     return spark.read.parquet(path)

@@ -15,6 +15,7 @@ from crowdsorsa_etl_spark.functions.text import token_count
 from crowdsorsa_etl_spark.operators.dedup import exact_dedup
 from crowdsorsa_etl_spark.queries._shared import (  # noqa: F401
     _NORM_SQL,
+    _at_rest,
     _sf_cache_dir,
     _t,
     register,
@@ -381,14 +382,14 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-pairs table is materialized once (localCheckpoint) and the
     # eval side derives from it (distinct-of-distinct and filter-on-doc_id
     # commute, so both sides are row-identical to the old plan).
-    from crowdsorsa_etl_spark.queries._shared import _cpu_fanout
+    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
-    # _cpu_fanout before the explode: the one-split documents scan ran
+    # cpu_fanout before the explode: the one-split documents scan ran
     # the interpreted shingle HOF + the distinct's partial aggregation on
     # ONE task — 6.2 s of the query's cold 10.6 s profile (r16, guide
     # §2.2); round-robin is a no-op at cluster scale
     pairs = (
-        _cpu_fanout(docs.select("doc_id", "text"))
+        cpu_fanout(docs.select("doc_id", "text"))
         .select("doc_id", F.explode(shingles(F.col("text"), 5)).alias("s"))
         .distinct()
         .localCheckpoint()
@@ -661,16 +662,15 @@ def q52_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REBUILT every run (the write path IS the thing under test), and two
     # concurrent processes overwrite+append-ing one shared directory would
     # corrupt each other's reads (the overwrite/append pair is not atomic)
-    base = tempfile.mkdtemp(prefix="q52_evolution_")
-    season1.write.mode("overwrite").parquet(base)
-    season2.write.mode("append").parquet(base)
-    out = read_evolved(
-        spark, base, target, rename_map={"id": "doc_id", "body": "text"}
-    ).localCheckpoint()
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    return out
+    with tempfile.TemporaryDirectory(
+        prefix="q52_evolution_", ignore_cleanup_errors=True
+    ) as tmp:
+        base = os.path.join(tmp, "seasons")
+        season1.write.parquet(base)
+        season2.write.mode("append").parquet(base)
+        return read_evolved(
+            spark, base, target, rename_map={"id": "doc_id", "body": "text"}
+        ).localCheckpoint()
 
 
 _Q50_SQL = """
@@ -761,16 +761,13 @@ def q53_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     are read (at 100 TB: the difference between scanning 2 partitions and
     scanning 7). The plan gate lives in tests/test_plans.py; the oracle is
     the equivalent static IN filter."""
-    import os
-    import tempfile
-
     orders = _t(spark, sf_dir, "orders")
-    base = _sf_cache_dir(sf_dir, "dpp", "orders")
-    marker = os.path.join(base, "_SUCCESS")
-    if not os.path.exists(marker):  # reuse the partitioned copy across calls
-        orders.withColumn("o_year", F.year("o_orderdate")).write.partitionBy(
-            "o_year"
-        ).mode("overwrite").parquet(base)
+    base = _at_rest(  # reuse the partitioned copy across calls
+        _sf_cache_dir(sf_dir, "dpp", "orders"),
+        lambda stage: orders.withColumn("o_year", F.year("o_orderdate"))
+        .write.partitionBy("o_year")
+        .parquet(stage),
+    )
     fact = spark.read.parquet(base)
     dim = spark.createDataFrame(
         [(y, 1 if y in (1994, 1995) else 0) for y in range(1990, 2001)],

@@ -143,24 +143,24 @@ def _encoded_ids(spark: SparkSession, sf_dir: str):
     import os
 
     from crowdsorsa_etl_spark.operators.bpe import bpe_encode_ids
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     merges, vocab, n_vocab = _learned_bpe(spark, sf_dir, _IDS_MERGES)
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, f"bpeids{_IDS_MERGES}", "documents"),
-        "ids.parquet",
+    # the small-fixture scan arrives as ONE split and the per-doc
+    # tokenize/md5 chain is CPU-bound — widen before the encode so the
+    # cold build runs at session parallelism (r16 batch 6 posture;
+    # no-op at cluster scale)
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, f"bpeids{_IDS_MERGES}", "documents"),
+            "ids.parquet",
+        ),
+        lambda stage: bpe_encode_ids(
+            cpu_fanout(_t(spark, sf_dir, "documents")),
+            merges, vocab, ids_col="token_ids",
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
-
-        # the small-fixture scan arrives as ONE split and the per-doc
-        # tokenize/md5 chain is CPU-bound — widen before the encode so the
-        # cold build runs at session parallelism (r16 batch 6 posture;
-        # no-op at cluster scale)
-        docs = cpu_fanout(_t(spark, sf_dir, "documents"))
-        bpe_encode_ids(
-            docs, merges, vocab, ids_col="token_ids"
-        ).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path), n_vocab
 
 

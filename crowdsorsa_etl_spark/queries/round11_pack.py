@@ -302,17 +302,21 @@ def _eval_clipped(spark: SparkSession, sf_dir: str, n: int):
     import os
 
     from crowdsorsa_etl_spark.operators.evalmetrics import _clipped
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, f"evalclipped{n}_v1", "documents"),
-        "counts.parquet",
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(stage: str) -> None:
         cand, ref = _eval_pair_frames(spark, sf_dir)
-        _clipped(cand, ref, n, pair_col="pair_id", text_col="text").write.mode(
-            "overwrite"
-        ).parquet(path)
+        _clipped(
+            cand, ref, n, pair_col="pair_id", text_col="text"
+        ).write.parquet(stage)
+
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, f"evalclipped{n}_v1", "documents"),
+            "counts.parquet",
+        ),
+        build,
+    )
     return spark.read.parquet(path)
 
 

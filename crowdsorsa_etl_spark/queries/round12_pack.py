@@ -887,23 +887,19 @@ def llm_image_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_index_match,
         image_index_write,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < _CI_MAXDOC)
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "imgidx_v1", "documents"), "idx"
+    path = _at_rest(
+        os.path.join(_sf_cache_dir(sf_dir, "imgidx_v1", "documents"), "idx"),
+        lambda stage: image_index_write(
+            attach_png_payload(
+                _ci_keyed(docs.filter(F.col("doc_id") < _IDX_SPLIT)),
+                text_col="img_key",
+            ),
+            stage,
+        ),
     )
-    # guard on _SUCCESS, not the dir: a killed build leaves an EMPTY
-    # bands/ dir that a bare isdir() check would serve forever (this
-    # exact poisoning happened once — UNABLE_TO_INFER_SCHEMA in a sweep
-    # after a timed-out builder); Spark writes _SUCCESS last, so its
-    # presence means the partitioned write completed
-    if not os.path.exists(os.path.join(path, "bands", "_SUCCESS")):
-        corpus = attach_png_payload(
-            _ci_keyed(docs.filter(F.col("doc_id") < _IDX_SPLIT)),
-            text_col="img_key",
-        )
-        image_index_write(corpus, path)
     batch = attach_png_payload(
         _ci_keyed(docs.filter(F.col("doc_id") >= _IDX_SPLIT)),
         text_col="img_key",

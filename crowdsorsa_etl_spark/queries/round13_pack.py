@@ -1284,7 +1284,7 @@ def llm_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import os
 
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     docs = _t(spark, sf_dir, "documents")
     pairs = _lsh_pairs(spark, sf_dir).select("id_a", "id_b")
@@ -1294,11 +1294,13 @@ def llm_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store has its registry materialized before any batch arrives), so it
     # memoizes per fixture like _lsh_pairs; the incremental fold of batch 1
     # — the operation this query demonstrates — always runs live.
-    reg_path = os.path.join(
-        _sf_cache_dir(sf_dir, "increg_v1", "documents"), "registry.parquet"
+    reg_path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "increg_v1", "documents"),
+            "registry.parquet",
+        ),
+        lambda stage: connected_components(b0).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(reg_path, "_SUCCESS")):
-        connected_components(b0).write.mode("overwrite").parquet(reg_path)
     reg = spark.read.parquet(reg_path)
     reg = incremental_components(reg, b1)
     out = docs.select("doc_id").join(

@@ -745,7 +745,7 @@ def llm_contamination_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval split — the k-sensitivity behind the decontamination rule.
     One corpus pass: every k's shingles come tagged out of one explode."""
     from crowdsorsa_etl_spark.functions.text import tagged_shingles
-    from crowdsorsa_etl_spark.queries._shared import _cpu_fanout
+    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
     docs = _t(spark, sf_dir, "documents")
     tr = docs.filter(F.col("doc_id") % 97 != 0).agg(
@@ -754,7 +754,7 @@ def llm_contamination_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan out BEFORE the explode: shingle building is interpreted-HOF CPU
     # (lambdas never enter whole-stage codegen), so a single-split local
     # fixture would serialize the whole sweep on one core
-    sh = _cpu_fanout(docs.select("doc_id", "text")).select(
+    sh = cpu_fanout(docs.select("doc_id", "text")).select(
         "doc_id",
         F.explode(tagged_shingles(F.col("text"), _CONTAM_KS)).alias("ks"),
     ).select("doc_id", F.col("ks.k").alias("k"), F.col("ks.s").alias("s"))

@@ -375,43 +375,32 @@ def _shuffle_incr_sql() -> str:
 def llm_shuffle_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shard store fold: memoized batch-0 seed + live batch-2 tail-append,
     manifest hash-verified against the batch-aware rank replay."""
-    import os
-    import shutil
-    import tempfile
-
     from crowdsorsa_etl_spark.operators.sharding import (
         shard_manifest,
         shard_store_append,
         shard_store_init,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import (
+        _at_rest,
+        _scratch_copy,
+        _sf_cache_dir,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     b1 = docs.filter(F.col("doc_id") % 3 != 0)
     b2 = docs.filter(F.col("doc_id") % 3 == 0)
 
-    seed = _sf_cache_dir(sf_dir, "shardstore_b1_v1", "documents")
-    if not os.path.exists(os.path.join(seed, "_DONE")):
-        build = tempfile.mkdtemp(prefix="shardseed_")
-        shard_store_init(
-            b1, f"{build}/s", shard_docs=_INCR_SHARD_DOCS, seed=_SHUF_SEED
-        )
-        with open(os.path.join(build, "_DONE"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(build, seed)
-        except OSError:  # concurrent builder won the rename
-            shutil.rmtree(build, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="shardstore_")
-    shutil.rmtree(root)
-    shutil.copytree(seed, root)
-    try:
+    seed = _at_rest(
+        _sf_cache_dir(sf_dir, "shardstore_b1_v1", "documents"),
+        lambda stage: shard_store_init(
+            b1, f"{stage}/s", shard_docs=_INCR_SHARD_DOCS, seed=_SHUF_SEED
+        ),
+    )
+    with _scratch_copy(seed) as root:
         shard_store_append(
             b2, f"{root}/s", shard_docs=_INCR_SHARD_DOCS, seed=_SHUF_SEED
         )
         return shard_manifest(spark, f"{root}/s").localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ===========================================================================

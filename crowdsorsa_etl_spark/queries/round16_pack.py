@@ -16,13 +16,17 @@ registrations): append only.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.portable_hash import hex60_sql
-from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir, _t, register
+from crowdsorsa_etl_spark.queries._shared import (
+    _at_rest,
+    _sf_cache_dir,
+    _t,
+    register,
+)
 
 # ===========================================================================
 # llm_epoch_reshuffle — the store is built ONCE (memoized one-shot init:
@@ -75,26 +79,18 @@ def _epoch_reshuffle_sql() -> str:
 
 def _full_store(spark: SparkSession, sf_dir: str) -> str:
     """Memoized one-shot shard store over the whole documents table
-    (content-fingerprinted dir; the seed-build atomic-rename pattern)."""
-    import shutil
-
+    (content-fingerprinted dir, published through _at_rest)."""
     from crowdsorsa_etl_spark.operators.sharding import shard_store_init
 
-    seed_dir = _sf_cache_dir(sf_dir, "shardstore_full_v1", "documents")
-    if not os.path.exists(os.path.join(seed_dir, "_DONE")):
-        build = tempfile.mkdtemp(prefix="shardfull_")
-        shard_store_init(
+    seed_dir = _at_rest(
+        _sf_cache_dir(sf_dir, "shardstore_full_v1", "documents"),
+        lambda stage: shard_store_init(
             _t(spark, sf_dir, "documents").select("doc_id"),
-            f"{build}/s",
+            f"{stage}/s",
             shard_docs=_EPOCH_SHARD_DOCS,
             seed=_EPOCH_SEED,
-        )
-        with open(os.path.join(build, "_DONE"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(build, seed_dir)
-        except OSError:  # concurrent builder won the rename
-            shutil.rmtree(build, ignore_errors=True)
+        ),
+    )
     return f"{seed_dir}/s"
 
 
@@ -407,17 +403,17 @@ _SUFFIX_MIN_LEN = 8
 
 
 def _suffix_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from crowdsorsa_etl_spark.operators.suffixarray import suffix_spans_exact
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "suffixspans8_v1", "documents"), "spans.parquet"
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        suffix_spans_exact(
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "suffixspans8_v1", "documents"),
+            "spans.parquet",
+        ),
+        lambda stage: suffix_spans_exact(
             _t(spark, sf_dir, "documents"), min_len=_SUFFIX_MIN_LEN
-        ).write.mode("overwrite").parquet(path)
+        ).write.parquet(stage),
+    )
     return spark.read.parquet(path)
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark import lsh_oracles  # noqa: F401
 from crowdsorsa_etl_spark.queries._shared import (
+    _at_rest,
     _sf_cache_dir,
     _t,
     register,
@@ -886,21 +887,19 @@ def q68_zone_map_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iceberg/Delta manifest-pruning idea with the file list coming from the
     stats table, verified against the oracle's full-table filter."""
     import datetime
-    import os
-    import tempfile
 
     from crowdsorsa_etl_spark.operators.skipping import (
         collect_file_stats,
         read_pruned,
     )
 
-    base = _sf_cache_dir(sf_dir, "zonemap", "lineitem")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        _t(spark, sf_dir, "lineitem").repartitionByRange(
-            16, "l_shipdate"
-        ).sortWithinPartitions("l_shipdate").write.mode("overwrite").parquet(
-            base
-        )
+    base = _at_rest(
+        _sf_cache_dir(sf_dir, "zonemap", "lineitem"),
+        lambda stage: _t(spark, sf_dir, "lineitem")
+        .repartitionByRange(16, "l_shipdate")
+        .sortWithinPartitions("l_shipdate")
+        .write.parquet(stage),
+    )
     stats = collect_file_stats(spark, base, ["l_shipdate"])
     lo = datetime.datetime(1996, 1, 1)
     hi = datetime.datetime(1996, 3, 31, 23, 59, 59)

@@ -185,19 +185,19 @@ def q90_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Zone maps cannot prune this shape (every file's custkey range
     is the full domain); pruning effectiveness is gated in
     tests/test_skipping.py."""
-    import os
-
     from crowdsorsa_etl_spark.operators.skipping import (
         collect_bloom_stats,
         read_bloom_pruned,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
-    base = _sf_cache_dir(sf_dir, "bloomidx", "orders")
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
-        _t(spark, sf_dir, "orders").repartitionByRange(
-            16, "o_orderdate"
-        ).sortWithinPartitions("o_orderdate").write.mode("overwrite").parquet(base)
+    base = _at_rest(
+        _sf_cache_dir(sf_dir, "bloomidx", "orders"),
+        lambda stage: _t(spark, sf_dir, "orders")
+        .repartitionByRange(16, "o_orderdate")
+        .sortWithinPartitions("o_orderdate")
+        .write.parquet(stage),
+    )
     stats = collect_bloom_stats(spark, base, "o_custkey")
     return read_bloom_pruned(spark, stats, "o_custkey", 42).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark import lsh_oracles
 from crowdsorsa_etl_spark import parity_oracles as _po
 from crowdsorsa_etl_spark.queries._shared import (
-    _promote_stage,
+    _at_rest,
     _sf_cache_dir,
     _t,
     register,
@@ -57,26 +57,13 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tag carries the index parameters: changing them (or the encode
     # format — bump the v1) invalidates the cached layout instead of
     # serving an index the oracle no longer describes
-    path = _sf_cache_dir(sf_dir, "ivfpq_v2_l16m8k64", "embeddings")
-    if not os.path.exists(os.path.join(path, "_built")):
-        # process-unique staging + atomic rename: the old guard keyed on
-        # _centroids, which exists the moment its own write STARTS — a
-        # killed build left a centroids dir with no code lists and the
-        # guard served the husk forever (the llm_image_dedup_index
-        # poisoning class). _built is written only after the full build.
-        import shutil
-
-        stage = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
-        ivfpq_write_index(
+    path = _at_rest(
+        _sf_cache_dir(sf_dir, "ivfpq_v2_l16m8k64", "embeddings"),
+        lambda stage: ivfpq_write_index(
             emb, stage,
             n_lists=16, m=8, k_codes=64, sample_size=2048, pq_iterations=4,
-        )
-        open(os.path.join(stage, "_built"), "w").close()
-        # promote, evicting a marker-less husk (a pre-existing old-format
-        # dir made the rename fail with ENOTEMPTY forever while every
-        # invocation rebuilt-and-discarded — ADVICE r14 medium)
-        _promote_stage(stage, path, marker="_built")
+        ),
+    )
     return ivfpq_query_index(
         spark, path, emb.filter(F.col("vec_id") < 10),
         k=5, n_probe=8, candidate_margin=32,
@@ -177,38 +164,25 @@ def llm_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing rows untouched) and the query. The oracle is the FULL-corpus
     BM25 (identical to llm_bm25_topk's), so the hash match proves
     merged ≡ rebuilt across engines."""
-    import os
-    import shutil
-    import tempfile
-
     from crowdsorsa_etl_spark.operators.bm25 import (
         bm25_append_index,
         bm25_query_index,
         bm25_write_index,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _scratch_copy
 
     docs = _t(spark, sf_dir, "documents")
-    seed = _sf_cache_dir(sf_dir, "bm25base_v1", "documents")
-    if not os.path.exists(os.path.join(seed, "_DONE")):
-        build = tempfile.mkdtemp(prefix="bm25seed_")
-        bm25_write_index(docs.filter(F.col("doc_id") % 10 != 0), f"{build}/i")
-        with open(os.path.join(build, "_DONE"), "w") as fh:
-            fh.write("ok")
-        try:
-            os.rename(build, seed)
-        except OSError:  # a concurrent builder already renamed its seed
-            shutil.rmtree(build, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="bm25idx_")
-    shutil.rmtree(root)
-    shutil.copytree(seed, root)
-    path = f"{root}/i"
-    try:
+    seed = _at_rest(
+        _sf_cache_dir(sf_dir, "bm25base_v1", "documents"),
+        lambda stage: bm25_write_index(
+            docs.filter(F.col("doc_id") % 10 != 0), f"{stage}/i"
+        ),
+    )
+    with _scratch_copy(seed) as root:
+        path = f"{root}/i"
         bm25_append_index(docs.filter(F.col("doc_id") % 10 == 0), path)
         qdf = spark.createDataFrame(_BM25_QUERIES, "query_id int, text string")
         return bm25_query_index(spark, path, qdf, k=10).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ===========================================================================
@@ -276,31 +250,29 @@ def q100_scd2_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
     each run copies it aside (the apply mutates the store) before the
     LIVE work this query demonstrates: batch 2's buffered apply plus the
     end-of-stream flush, disorder and all."""
-    import os
-    import shutil
-    import tempfile
-
     from crowdsorsa_etl_spark.operators.scd import (
         scd2_apply_batch_buffered,
         scd2_flush_buffer,
     )
     from crowdsorsa_etl_spark.queries._shared import (
         _json_sidecar_read,
-        _sf_cache_dir,
+        _json_sidecar_write,
+        _scratch_copy,
     )
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "event_id"
     )
-    # (lo, hi) is a pure function of the fixture — memoize it in the seed
-    # marker so warm runs skip the full events scan (one job per bench run)
+    # (lo, hi) is a pure function of the fixture — memoize it in the seed's
+    # bounds sidecar so warm runs skip the full events scan (one job per
+    # bench run)
     seed = _sf_cache_dir(sf_dir, "scd2buf_b1_v1", "events")
-    marker = _json_sidecar_read(os.path.join(seed, "_DONE"))
-    if isinstance(marker, dict) and "lo" in marker:
+    bounds = _json_sidecar_read(os.path.join(seed, "bounds.json"))
+    if isinstance(bounds, dict) and "lo" in bounds:
         from datetime import datetime
 
-        lo = datetime.fromisoformat(marker["lo"])
-        hi = datetime.fromisoformat(marker["hi"])
+        lo = datetime.fromisoformat(bounds["lo"])
+        hi = datetime.fromisoformat(bounds["hi"])
     else:
         lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
     span_s = (hi - lo).total_seconds()
@@ -320,28 +292,19 @@ def q100_scd2_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_cols=["user_id"], ts_col="ts", tracked_cols=["event_type"],
         tie_break_cols=["event_id"],
     )
-    if not os.path.exists(os.path.join(seed, "_DONE")):
-        import json
 
-        # build in a process-unique dir, then one atomic rename — a
-        # concurrent builder (driver bench + oracle sweep) either wins
-        # the rename or discards its build; never a half-written seed
-        build = tempfile.mkdtemp(prefix="scd2seed_")
+    def build(stage: str) -> None:
         scd2_apply_batch_buffered(
-            spark, f"{build}/v", f"{build}/b", b1,
+            spark, f"{stage}/v", f"{stage}/b", b1,
             max_delay_seconds=delay_s, **kw
         )
-        with open(os.path.join(build, "_DONE"), "w") as fh:
-            json.dump({"lo": lo.isoformat(), "hi": hi.isoformat()}, fh)
-        try:
-            os.rename(build, seed)
-        except OSError:  # a concurrent builder already renamed its seed
-            shutil.rmtree(build, ignore_errors=True)
-    root = tempfile.mkdtemp(prefix="scd2buf_")
-    shutil.rmtree(root)
-    shutil.copytree(seed, root)
-    vd, bd = f"{root}/v", f"{root}/b"
-    try:
+        _json_sidecar_write(
+            os.path.join(stage, "bounds.json"),
+            {"lo": lo.isoformat(), "hi": hi.isoformat()},
+        )
+
+    with _scratch_copy(_at_rest(seed, build)) as root:
+        vd, bd = f"{root}/v", f"{root}/b"
         scd2_apply_batch_buffered(
             spark, vd, bd, b2, max_delay_seconds=delay_s, **kw
         )
@@ -354,8 +317,6 @@ def q100_scd2_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # ===========================================================================
@@ -531,21 +492,14 @@ def llm_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _sf_cache_dir(sf_dir, "ivfpqr_v1_l16m8k64", "embeddings")
-    if not os.path.exists(os.path.join(path, "_built")):
-        # staged build + _built marker (see llm_ivfpq_topk: a _centroids
-        # guard serves a killed build's husk)
-        import shutil
-
-        stage = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
-        ivfpq_write_index(
+    path = _at_rest(
+        _sf_cache_dir(sf_dir, "ivfpqr_v1_l16m8k64", "embeddings"),
+        lambda stage: ivfpq_write_index(
             emb, stage,
             n_lists=16, m=8, k_codes=64, sample_size=2048, pq_iterations=4,
             by_residual=True,
-        )
-        open(os.path.join(stage, "_built"), "w").close()
-        _promote_stage(stage, path, marker="_built")
+        ),
+    )
     return ivfpq_query_index(
         spark, path, emb.filter(F.col("vec_id") < 10),
         k=5, n_probe=8, candidate_margin=32,

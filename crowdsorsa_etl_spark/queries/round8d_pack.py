@@ -217,47 +217,34 @@ def llm_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the persisted corpus signature index, exact-Jaccard verified at
     0.3 — per-batch cost is batch-sized, the corpus never recomputes or
     shuffles a signature."""
-    import os
-
     from crowdsorsa_etl_spark.operators.dedup import (
         jaccard_verify_pairs,
         lsh_append_index,
         lsh_match_index,
         lsh_write_index,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 25 != 0)
     probe = docs.filter(F.col("doc_id") % 25 == 0)
 
-    path = _sf_cache_dir(sf_dir, "lshidx_v1_h16b8s3", "documents")
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        # Build into a process-unique staging dir, then atomically rename
-        # into place: two concurrent builders sharing the cache path must
-        # not both run lsh_append_index against it (duplicated banded rows
-        # would inflate n_bands_matched). The loser's rename fails on the
-        # existing dir and its staging copy is discarded.
-        import shutil
-
-        stage = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
+    def build(stage: str) -> None:
         # half the corpus at write time, half appended — the registered
-        # result therefore gates incremental maintenance, not just build
+        # result therefore gates incremental maintenance, not just build.
+        # Staged by _at_rest: two concurrent builders must not both run
+        # lsh_append_index against one dir (duplicated banded rows would
+        # inflate n_bands_matched).
         lsh_write_index(
             corpus.filter(F.col("doc_id") % 2 == 0), stage, portable=True
         )
         lsh_append_index(
             corpus.filter(F.col("doc_id") % 2 == 1), stage, portable=True
         )
-        open(os.path.join(stage, "_built"), "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            # a concurrent builder won the race; use its index
-            shutil.rmtree(stage, ignore_errors=True)
 
+    path = _at_rest(
+        _sf_cache_dir(sf_dir, "lshidx_v1_h16b8s3", "documents"), build
+    )
     cand = lsh_match_index(spark, path, probe, portable=True)
     return jaccard_verify_pairs(cand, docs, threshold=0.3).select(
         F.col("id_a").alias("doc_id"),

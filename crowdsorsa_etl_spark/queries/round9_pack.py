@@ -64,16 +64,17 @@ def _flagged_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crowdsorsa_etl_spark.operators.substring import (
         duplicated_substring_spans,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
-    path = os.path.join(
-        _sf_cache_dir(sf_dir, "substr_spans8", "documents"), "spans.parquet"
+    path = _at_rest(
+        os.path.join(
+            _sf_cache_dir(sf_dir, "substr_spans8", "documents"),
+            "spans.parquet",
+        ),
+        lambda stage: duplicated_substring_spans(
+            _t(spark, sf_dir, "documents"), min_run=8
+        ).write.parquet(stage),
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        docs = _t(spark, sf_dir, "documents")
-        duplicated_substring_spans(docs, min_run=8).write.mode(
-            "overwrite"
-        ).parquet(path)
     return spark.read.parquet(path)
 
 
@@ -107,7 +108,7 @@ def llm_substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rebuild cross-engine — the same merged≡rebuilt gate as
 # llm_bm25_incremental and llm_dedup_index. The base-then-append index is
 # built ONCE per fixture into the shared cache (the llm_substring_index /
-# llm_dedup_index posture: process-unique staging + atomic rename); every
+# llm_dedup_index posture: published through _shared._at_rest); every
 # invocation still gates the full append≡rebuild equivalence because the
 # search reads the appended rows through the frozen artifacts.
 # ===========================================================================
@@ -127,20 +128,16 @@ def llm_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search through an index built base-then-append: the batch's
     codes are assigned/encoded with the stored artifacts and appended into
     the existing ``list_id=`` partitions."""
-    import os
-    import shutil
-
     from crowdsorsa_etl_spark.operators.pq import (
         ivfpq_append_index,
         ivfpq_query_index,
         ivfpq_write_index,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     emb = _t(spark, sf_dir, "embeddings")
-    path = _sf_cache_dir(sf_dir, "ivfpqinc_v1", "embeddings")
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
+
+    def build(stage: str) -> None:
         # base keeps every id < 256 — the deterministic training sample — so
         # frozen-artifact append is provably identical to the full rebuild
         base = emb.filter(
@@ -149,19 +146,13 @@ def llm_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = emb.filter(
             (F.col("vec_id") >= 256) & (F.col("vec_id") % 10 == 0)
         )
-        stage = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
         ivfpq_write_index(
             base, stage,
             n_lists=16, m=8, k_codes=64, sample_size=256, pq_iterations=4,
         )
         ivfpq_append_index(batch, stage)
-        open(os.path.join(stage, "_built"), "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
 
+    path = _at_rest(_sf_cache_dir(sf_dir, "ivfpqinc_v1", "embeddings"), build)
     return ivfpq_query_index(
         spark, path, emb.filter(F.col("vec_id") < 10),
         k=5, n_probe=8, candidate_margin=32,
@@ -306,33 +297,20 @@ def llm_substring_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
 def llm_substring_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch decontamination through the persisted eval-shingle index
     (doc_id < 250 non-eval docs play the ingest batch)."""
-    import os
-    import shutil
-
     from crowdsorsa_etl_spark.operators.substring import (
         substring_append_index,
         substring_match_index,
         substring_write_index,
     )
-    from crowdsorsa_etl_spark.queries._shared import _sf_cache_dir
+    from crowdsorsa_etl_spark.queries._shared import _at_rest, _sf_cache_dir
 
     docs = _t(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") % 10 == 0)
     batch = docs.filter((F.col("doc_id") % 10 != 0) & (F.col("doc_id") < 250))
 
-    path = _sf_cache_dir(sf_dir, "subidx_v1_k8", "documents")
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        # process-unique staging + atomic rename (concurrent-builder safe,
-        # same posture as llm_dedup_index)
-        stage = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(stage, ignore_errors=True)
+    def build(stage: str) -> None:
         substring_write_index(eval_df.filter(F.col("doc_id") % 20 == 0), stage)
         substring_append_index(eval_df.filter(F.col("doc_id") % 20 != 0), stage)
-        open(os.path.join(stage, "_built"), "w").close()
-        try:
-            os.rename(stage, path)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
 
+    path = _at_rest(_sf_cache_dir(sf_dir, "subidx_v1_k8", "documents"), build)
     return substring_match_index(spark, path, batch, min_run=8)

@@ -1,25 +1,24 @@
-"""Every on-disk artifact must be served through an ATOMIC guard.
+"""Every on-disk artifact must be published through ONE atomic protocol.
 
 The llm_image_dedup_index poisoning (round 13's one sweep failure): a
 killed build left an empty bands/ dir and a bare isdir() guard served it
 forever. The mechanical invariant: every function that derives an
-artifact path from _sf_cache_dir must gate its read path on one of the
-atomic completion markers —
+artifact path from _sf_cache_dir publishes it through one of —
 
-* ``_SUCCESS``   — Spark's own commit marker (written last by the
-                   parquet committer);
-* ``_DONE`` / ``_built`` — a marker written INSIDE a process-unique
-                   build dir before one atomic os.rename promotes the
-                   whole dir;
-* ``_json_sidecar_read`` — atomic tmp+rename JSON whose corrupt/partial
-                   reads degrade to a miss;
-* ``snapshot_versions`` — the sinks/snapshots manifest protocol (a
-                   version is visible only after the pointer flip).
+* ``_at_rest`` — the one helper for every directory artifact: the
+                 build runs into a process-unique stage, the single
+                 completion marker is written last and _promote_stage
+                 renames the stage into place (evicting a marker-less
+                 husk), so the path only ever appears complete;
+* ``_json_sidecar_read`` — atomic tmp+rename JSON (the learned
+                 BPE/unigram tables) whose corrupt/partial reads degrade
+                 to a miss;
+* ``snapshot_versions`` — the sinks/snapshots manifest protocol (q81: a
+                 version is visible only after the pointer flip).
 
-A bare ``os.path.isdir`` / ``os.path.exists`` on a data file is exactly
-the poisonable pattern and fails this test. ARTIFACTS.md carries the
-matching human-readable manifest (builder + measured cold cost per
-artifact)."""
+No artifact function renames, mkdtemp's or DataFrame-writes its cache
+path itself. ARTIFACTS.md carries the matching human-readable manifest (builder +
+measured cold cost per artifact)."""
 
 from __future__ import annotations
 
@@ -30,9 +29,7 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "crowdsorsa_etl_spark")
 
 _ATOMIC_MARKERS = (
-    "_SUCCESS",
-    "_DONE",
-    "_built",
+    "_at_rest",
     "_json_sidecar_read",
     "snapshot_versions",
 )
@@ -72,7 +69,7 @@ def test_every_artifact_reader_is_atomically_guarded():
             bad.append(f"{path}::{name}")
     assert not bad, (
         "artifact readers without an atomic completion guard "
-        f"(_SUCCESS/_DONE/_json_sidecar_read): {bad}"
+        f"({'/'.join(_ATOMIC_MARKERS)}): {bad}"
     )
 
 
@@ -86,6 +83,73 @@ def test_no_bare_isdir_guard_on_artifact_paths():
             assert any(m in seg for m in _ATOMIC_MARKERS), (
                 f"{path}::{name} guards an artifact with bare isdir()"
             )
+
+
+# The only calls that may write under a cache path themselves: atomic
+# JSON sidecars and the q81 snapshot store's pointer-flip protocol.
+_ATOMIC_WRITERS = ("_json_sidecar_write", "snapshot_write")
+
+
+def _dotted(func) -> list[str]:
+    """['df', 'write', 'mode', 'parquet'] for ``df.write.mode(..).parquet``."""
+    parts = []
+    while isinstance(func, (ast.Attribute, ast.Call)):
+        if isinstance(func, ast.Call):
+            func = func.func
+        else:
+            parts.append(func.attr)
+            func = func.value
+    if isinstance(func, ast.Name):
+        parts.append(func.id)
+    return parts[::-1] or [""]
+
+
+def _names(node) -> set[str]:
+    return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+
+_PATH_SOURCES = {"_sf_cache_dir", "_at_rest"}
+
+
+def test_no_artifact_is_published_by_hand():
+    """Only _at_rest creates a cache path: no artifact function renames
+    into it, builds in a mkdtemp dir, or points a writer at it (an
+    in-place write.mode("overwrite") deletes files a concurrent reader is
+    scanning; a bare rename never evicts a marker-less husk)."""
+    bad = []
+    for path, name, seg in _functions_using_cache_dir():
+        fn = ast.parse(seg)
+        # names bound to a cache path, directly or derived (os.path.join)
+        assigns = [n for n in ast.walk(fn) if isinstance(n, ast.Assign)]
+        cache: set[str] = set()
+        while True:
+            bound = {
+                t.id for a in assigns for t in a.targets
+                if isinstance(t, ast.Name)
+                and _names(a.value) & (cache | _PATH_SOURCES)
+            }
+            if bound <= cache:
+                break
+            cache |= bound
+        for call in (n for n in ast.walk(fn) if isinstance(n, ast.Call)):
+            chain = _dotted(call.func)
+            if chain in (["os", "rename"], ["os", "replace"]) or (
+                chain[-1] == "mkdtemp"
+            ):
+                bad.append(f"{path}::{name} calls {'.'.join(chain)}")
+                continue
+            writer = "write" in chain or any(
+                w in chain[-1] for w in ("write", "append")
+            )
+            if not writer or chain[-1] in _ATOMIC_WRITERS:
+                continue
+            args = list(call.args) + [k.value for k in call.keywords]
+            if any(_names(a) & (cache | _PATH_SOURCES) for a in args):
+                bad.append(
+                    f"{path}::{name} writes its cache path via "
+                    + ".".join(chain)
+                )
+    assert not bad, f"artifacts published outside _at_rest: {bad}"
 
 
 def test_manifest_covers_every_artifact_tag():
@@ -121,9 +185,9 @@ def test_promote_stage_evicts_markerless_husk(tmp_path):
     (path / "part-0").write_text("stale")
     stage.mkdir()
     (stage / "part-0").write_text("fresh")
-    (stage / "_built").write_text("")
-    _promote_stage(str(stage), str(path), marker="_built")
-    assert (path / "_built").exists()
+    (stage / "_SUCCESS").write_text("")
+    _promote_stage(str(stage), str(path))
+    assert (path / "_SUCCESS").exists()
     assert (path / "part-0").read_text() == "fresh"
     assert not stage.exists()
 
@@ -155,3 +219,63 @@ def test_promote_stage_clean_first_promotion(tmp_path):
     (stage / "_SUCCESS").write_text("")
     _promote_stage(str(stage), str(path))
     assert (path / "_SUCCESS").exists() and not stage.exists()
+
+
+def test_at_rest_builds_once(tmp_path):
+    from crowdsorsa_etl_spark.queries._shared import _at_rest
+
+    calls = []
+
+    def build(stage):
+        calls.append(stage)
+        os.makedirs(stage)
+        with open(os.path.join(stage, "part-0"), "w") as fh:
+            fh.write("built")
+
+    path = str(tmp_path / "idx")
+    assert _at_rest(path, build) == path
+    assert _at_rest(path, build) == path
+    assert len(calls) == 1
+    assert (tmp_path / "idx" / "part-0").read_text() == "built"
+    assert (tmp_path / "idx" / "_SUCCESS").exists()
+    assert os.listdir(tmp_path) == ["idx"]  # the stage was promoted
+
+
+def test_at_rest_failed_build_publishes_nothing(tmp_path):
+    import pytest
+
+    from crowdsorsa_etl_spark.queries._shared import _at_rest
+
+    def broken(stage):
+        os.makedirs(stage)
+        (tmp_path / os.path.basename(stage) / "part-0").write_text("half")
+        raise RuntimeError("killed mid-build")
+
+    path = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError):
+        _at_rest(path, broken)
+    assert os.listdir(tmp_path) == []  # no path, no stage left behind
+    _at_rest(path, lambda stage: os.makedirs(stage))
+    assert (tmp_path / "idx" / "_SUCCESS").exists()
+
+
+def test_at_rest_ignores_markerless_leftover_stage(tmp_path):
+    """A killed build's stage (this pid reused, or another pid's) is never
+    served: the artifact is rebuilt from scratch and only its bytes are
+    published."""
+    from crowdsorsa_etl_spark.queries._shared import _at_rest
+
+    for pid in (os.getpid(), 999999):
+        husk = tmp_path / f"idx.stage.{pid}"
+        husk.mkdir()
+        (husk / "part-0").write_text("stale")
+        (husk / "part-1").write_text("stale")
+
+    def build(stage):
+        os.makedirs(stage)
+        with open(os.path.join(stage, "part-0"), "w") as fh:
+            fh.write("fresh")
+
+    path = _at_rest(str(tmp_path / "idx"), build)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0"]
+    assert (tmp_path / "idx" / "part-0").read_text() == "fresh"

@@ -407,12 +407,16 @@ class TestRound8bPlans:
         assert "MapInPandas" not in plan
         assert "Join" not in plan
 
-    def test_hilbert_keys_no_exchange(self, spark):
-        """The Hilbert index is a pure projection over the scan."""
-        plan = plan_of(QUERIES["q105_hilbert_layout"](spark, SF_DIR))
-        assert "Exchange" not in plan
+    def test_hilbert_keys_single_round_robin_exchange(self, spark):
+        """The Hilbert index is a pure projection over the scan; the one
+        Exchange is cpu_fanout's round-robin widen under the CPU-bound
+        fold (never a key shuffle, join or Python stage)."""
+        plan = plan_of(QUERIES["q105_hilbert_layout"](spark, SF_DIR), "simple")
+        assert plan.count("Exchange") == 1
+        assert "Exchange RoundRobinPartitioning(" in plan
         assert "Join" not in plan
         assert "EvalPython" not in plan
+        assert "MapInPandas" not in plan
 
     def test_heavy_hitters_confirm_pass_shape(self, spark):
         """Pass 2 of MG heavy hitters: the bounded candidate set confirms

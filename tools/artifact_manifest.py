@@ -106,9 +106,20 @@ def main() -> None:
             "builder query, completion guard, and MEASURED cold build cost",
             "(cold-run minus warm-run wall time of the builder, one process,",
             "local[32]). A cold sandbox's first sweep pays the sum of the",
-            "build-cost column once; warm sweeps pay none of it. Guards are",
-            "pytest-enforced (tests/test_artifact_guards.py): every reader",
-            "gates on an atomic completion marker, never bare isdir().",
+            "build-cost column once; warm sweeps pay none of it.",
+            "",
+            "Guards (pytest-enforced by tests/test_artifact_guards.py): every",
+            "directory artifact is published by one helper,",
+            "`queries/_shared._at_rest(path, build)`. The build runs into a",
+            "process-unique `{path}.stage.{pid}`, the one completion marker",
+            "`_SUCCESS` is written last, and `_promote_stage` renames the",
+            "stage into place, evicting a marker-less husk. A reader sees a",
+            "complete artifact or none; a killed or failed build is rebuilt,",
+            "never served. Runs that mutate a store work on a",
+            "`_scratch_copy(seed)`. The learned BPE/unigram tables are",
+            "atomic JSON sidecars (`_json_sidecar_read`), and q81's `snap`",
+            "store keeps the snapshot manifest protocol. No artifact function",
+            "renames, mkdtemp's or writes its cache path itself.",
             "",
             f"Generated by tools/artifact_manifest.py at sf{sf}; regenerate",
             "with `python tools/artifact_manifest.py --clear --update-md`.",
