@@ -105,15 +105,22 @@ def order_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.join(cust_dim, orders.o_custkey == cust_dim.c_custkey)
         .join(units, orders.o_orderkey == units.l_orderkey, "left")
-        # pin the render width to the session's core count: the join
-        # output is small in BYTES (ids + structs), so AQE's size-based
-        # coalescing shrinks the post-join stage to 1-2 tasks — but the
-        # per-row JSON render is CPU-bound, and its cost is rows, not
-        # bytes (measured: the save stage ran 2.1 s on ONE task). One
-        # explicit exchange of the pre-JSON rows buys a cores-wide
-        # render at any scale; cpu_fanout can't help here because an
-        # un-executed AQE join reports its static partition count.
-        .repartition(spark.sparkContext.defaultParallelism)
+        # pin the render width to at least the session's core count: the
+        # join output is small in BYTES (ids + structs), so AQE's
+        # size-based coalescing shrinks the post-join stage to 1-2 tasks —
+        # but the per-row JSON render is CPU-bound, and its cost is rows,
+        # not bytes (measured: the save stage ran 2.1 s on ONE task). One
+        # explicit exchange of the pre-JSON rows buys a cores-wide render;
+        # cpu_fanout can't help here because an un-executed AQE join
+        # reports its static partition count. The width never drops below
+        # the shuffle width, so at cluster scale (shuffle partitions >
+        # cores) the render keeps the join's static partition count.
+        .repartition(
+            max(
+                spark.sparkContext.defaultParallelism,
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+            )
+        )
         .select(
             F.col("o_orderkey").alias("order_key"),
             F.col("o_totalprice").alias("total_price"),

@@ -19,6 +19,9 @@ would grow unboundedly — never ship a stateful query without one.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -38,6 +41,56 @@ EVENTS_RAW = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
+
+_EPOCH_DIR = re.compile(r"epoch=(-?\d+)", re.ASCII)
+
+
+def _epochs(root: str) -> list[int]:
+    """Sorted integer epochs of the ``epoch=<n>`` directories under
+    ``root`` ([] when ``root`` is missing).
+
+    The one parser of epoch names: only directories whose whole name is
+    ``epoch=<int>`` count, so leftovers such as a swap's ``epoch=-1__old``
+    or an ``epoch=3.tmp`` stage are ignored instead of crashing ``int()``.
+    """
+    if not os.path.isdir(root):
+        return []
+    with os.scandir(root) as entries:
+        return sorted(
+            int(m.group(1))
+            for d in entries
+            if d.is_dir() and (m := _EPOCH_DIR.fullmatch(d.name))
+        )
+
+
+def _newest_before(root: str, e: int) -> str | None:
+    """Path of the newest ``root/epoch=<n>`` with ``n < e``, or None.
+
+    The epoch-versioned state protocol every carried-state stream below
+    follows: micro-batch ``e`` derives its new state from the newest
+    state strictly below ``e`` and overwrites its own ``root/epoch=<e>``
+    directory. Epoch ``e``'s state is then a deterministic function of
+    its predecessor and the batch, so a crashed-and-replayed epoch
+    re-derives from the same predecessor and rewrites identical files —
+    replay never double-counts, and no ledger is needed. Only the newest
+    state below the running epoch is ever read: older epochs are garbage
+    once the newest two (replay headroom) are kept.
+    """
+    prior = [n for n in _epochs(root) if n < e]
+    return os.path.join(root, f"epoch={prior[-1]}") if prior else None
+
+
+def _write_state_rows(spark, rows, schema, path: str) -> None:
+    """Overwrite ``path`` with driver-side ``rows`` as one parquet file.
+
+    The rows are local (a carried total, a sketch, a summary), so there
+    is no upstream work to parallelize: ``coalesce(1)`` narrows the local
+    scan to one task without the shuffle ``repartition(1)`` would add,
+    and each state directory stays a single file.
+    """
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
 def _finalize_events(raw: DataFrame) -> DataFrame:
@@ -69,8 +122,6 @@ def read_event_stream(
     Unset, a failed peek falls back to ``"nanos"`` — the canonical fixture
     encoding — instead of raising.
     """
-    import os
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if ts_encoding is None:
@@ -733,15 +784,9 @@ def start_heavy_hitters_stream(
     keeps the total error ≤ n/(capacity+1) through any merge/prune
     sequence), and write the result to ``state_dir/epoch=<id>``.
 
-    Replay safety without a ledger: epoch e's state is a DETERMINISTIC
-    function of epoch e−1's state + the batch, and the writer overwrites
-    ``epoch=<e>`` — a crashed-and-replayed epoch reproduces the same
-    files instead of double-counting (the epoch_parquet_writer posture
-    applied to operator state). Readers use
-    :func:`streaming_heavy_hitter_candidates`.
+    Replay safety: the epoch-state protocol (:func:`_newest_before`).
+    Readers use :func:`streaming_heavy_hitter_candidates`.
     """
-    import os
-
     from pyspark.sql import Window as W
 
     from crowdsorsa_etl_spark.operators.heavyhitters import (
@@ -753,25 +798,13 @@ def start_heavy_hitters_stream(
 
     spark_active = docs_stream.sparkSession
 
-    def _latest_epoch_before(e: int) -> str | None:
-        if not os.path.isdir(state_dir):
-            return None
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(state_dir)
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        return (
-            os.path.join(state_dir, f"epoch={max(prior)}") if prior else None
-        )
-
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         batch_sum = mg_partition_summaries(
             batch_df, text_col, capacity=capacity
         )
-        prev_path = _latest_epoch_before(int(epoch_id))
+        prev_path = _newest_before(state_dir, int(epoch_id))
         if prev_path is not None:
             merged_in = batch_sum.unionByName(
                 spark_active.read.schema("token string, est long").parquet(
@@ -821,16 +854,10 @@ def streaming_heavy_hitter_candidates(spark, state_dir: str) -> DataFrame:
     """Read the newest MG state epoch: (token, est, n_total, max_err)
     where true_count ∈ [est, est + max_err] and every token with
     true_count > max_err is guaranteed present."""
-    import os
-
-    epochs = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_dir)
-        if d.startswith("epoch=")
-    ]
+    epochs = _epochs(state_dir)
     if not epochs:
         raise ValueError(f"no heavy-hitter state under {state_dir}")
-    latest = os.path.join(state_dir, f"epoch={max(epochs)}")
+    latest = os.path.join(state_dir, f"epoch={epochs[-1]}")
     state = spark.read.schema("token string, est long").parquet(latest)
     toks = state.filter(F.col("token").isNotNull())
     n_total = (
@@ -881,17 +908,10 @@ def start_shard_stream(
     shard_id, and the new running total (ONE number) is written to
     ``state_dir/epoch=<e>``.
 
-    Replay safety follows the epoch-versioned state posture
-    (start_heavy_hitters_stream): epoch e reads the newest state < e, so a
-    crashed-and-replayed epoch recomputes from the SAME carried total and
-    overwrites the same paths — no double-advance of the shard counter.
-
-    State growth: one single-row file per epoch; only the NEWEST epoch < e
-    is ever read, so older ``state_dir/epoch=*`` dirs are garbage — safe to
-    delete on any cadence (keep the latest two for replay headroom).
+    Replay safety: the epoch-state protocol (:func:`_newest_before`), so
+    a replayed epoch never double-advances the shard counter. State is one
+    single-row file per epoch; :func:`compact_shard_epochs` prunes it.
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
 
     if shard_budget < 1:
@@ -902,20 +922,10 @@ def start_shard_stream(
     spark_active = docs_stream.sparkSession
 
     def _carried_total(e: int) -> int:
-        if not os.path.isdir(state_dir):
+        prev = _newest_before(state_dir, e)
+        if prev is None:
             return 0
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(state_dir)
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        if not prior:
-            return 0
-        rows = (
-            spark_active.read.schema("total long")
-            .parquet(os.path.join(state_dir, f"epoch={max(prior)}"))
-            .collect()
-        )
+        rows = spark_active.read.schema("total long").parquet(prev).collect()
         return int(rows[0]["total"]) if rows else 0
 
     def assign(batch_df: DataFrame, epoch_id: int) -> None:
@@ -963,13 +973,11 @@ def start_shard_stream(
         )
         # ONE number of state per epoch — the carried running total
         batch_total = d.agg(F.sum("n_tokens").cast("bigint")).collect()[0][0]
-        (
-            spark_active.createDataFrame(
-                [(offset + int(batch_total),)], "total long"
-            )
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"epoch={int(epoch_id)}"))
+        _write_state_rows(
+            spark_active,
+            [(offset + int(batch_total),)],
+            "total long",
+            os.path.join(state_dir, f"epoch={int(epoch_id)}"),
         )
 
     return (
@@ -1012,8 +1020,8 @@ def compact_shard_epochs(
     crash between the swap's two renames leaves ``epoch=-1__old``; the
     next run repairs it here (promote if the base is missing, else drop
     the stale copy) before listing epochs, and the epoch listing itself
-    only accepts names matching ``epoch=<int>`` so the leftover can never
-    poison ``int()`` parsing or partition-value inference downstream.
+    (:func:`_epochs`) ignores the leftover, so it can never poison
+    partition-value inference downstream.
 
     Duplicate-drop is keyed: after the full-row ``dropDuplicates()`` the
     merge asserts ``id_col`` is unique — two *different* rows sharing an
@@ -1027,12 +1035,8 @@ def compact_shard_epochs(
     over (base ∪ folded epochs) per compaction — amortize by calling every
     N epochs, never on the per-batch path.
     """
-    import os
-
     from crowdsorsa_etl_spark.sinks.ledger import _hadoop_fs
     from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
-
-    import re
 
     if keep_epochs < 1:
         raise ValueError(f"keep_epochs must be >= 1; got {keep_epochs}")
@@ -1049,13 +1053,8 @@ def compact_shard_epochs(
             jvm_stale, fs0 = _hadoop_fs(spark, stale)
             fs0.delete(jvm_stale, True)
 
-    _epoch_re = re.compile(r"^epoch=(-?\d+)$")
-    epochs = sorted(
-        int(m.group(1))
-        for d in os.listdir(out_dir)
-        if (m := _epoch_re.match(d)) and int(m.group(1)) >= 0
-    )
-    fold = epochs[:-keep_epochs] if keep_epochs else epochs
+    epochs = [e for e in _epochs(out_dir) if e >= 0]
+    fold = epochs[:-keep_epochs]
     if not fold:
         return 0
     frames = [
@@ -1095,13 +1094,8 @@ def compact_shard_epochs(
         jvm_e, _ = _hadoop_fs(spark, os.path.join(out_dir, f"epoch={e}"))
         fs.delete(jvm_e, True)
 
-    if state_dir and os.path.isdir(state_dir):
-        states = sorted(
-            int(m.group(1))
-            for d in os.listdir(state_dir)
-            if (m := _epoch_re.match(d))
-        )
-        for e in states[:-keep_epochs]:
+    if state_dir:
+        for e in _epochs(state_dir)[:-keep_epochs]:
             jvm_s, _ = _hadoop_fs(spark, os.path.join(state_dir, f"epoch={e}"))
             fs.delete(jvm_s, True)
     return len(fold)
@@ -1133,17 +1127,16 @@ def start_sequence_pack_stream(
     State per epoch is one row ``(seqs_done, carry array<int>)`` — the
     number of sequences emitted so far plus the carried tail, bounded at
     ``max_len`` tokens by construction (a driver-safe artifact). Replay
-    follows the epoch-versioned posture (``start_shard_stream``): epoch e
-    reads the newest state < e and overwrites its own output and state
-    paths, so a crashed-and-replayed epoch emits the identical sequences
-    and never double-advances the counter.
+    follows the epoch-state protocol (:func:`_newest_before`) for both
+    the output and the state paths, so a replayed epoch emits the
+    identical sequences and never double-advances the counter.
 
     Per batch the distributed shape is the batch packer's: one range
     exchange for the in-batch cumsum, codegen positions, one
     key-partitioned regroup by sequence id (groups bounded at
     ``max_len``). The carry union is at most ``max_len`` rows.
     """
-    import os
+    import shutil
 
     from crowdsorsa_etl_spark.operators.bpe import bpe_encode_ids
     from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
@@ -1154,20 +1147,12 @@ def start_sequence_pack_stream(
     spark_active = docs_stream.sparkSession
 
     def _carried_state(e: int) -> tuple[int, list[int]]:
-        if not os.path.isdir(state_dir):
-            return 0, []
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(state_dir)
-            if d.startswith("epoch=")
-            and d.split("=", 1)[1].lstrip("-").isdigit()
-            and int(d.split("=", 1)[1]) < e
-        ]
-        if not prior:
+        prev = _newest_before(state_dir, e)
+        if prev is None:
             return 0, []
         rows = (
             spark_active.read.schema("seqs_done long, carry array<int>")
-            .parquet(os.path.join(state_dir, f"epoch={max(prior)}"))
+            .parquet(prev)
             .collect()
         )
         if not rows:
@@ -1244,27 +1229,16 @@ def start_sequence_pack_stream(
             cum.agg(F.sum("_n").cast("bigint")).collect()[0][0] or 0
         )
         new_done = (base + int(batch_total)) // max_len
-        (
-            spark_active.createDataFrame(
-                [(new_done, new_carry)], "seqs_done long, carry array<int>"
-            )
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"epoch={int(epoch_id)}"))
+        _write_state_rows(
+            spark_active,
+            [(new_done, new_carry)],
+            "seqs_done long, carry array<int>",
+            os.path.join(state_dir, f"epoch={int(epoch_id)}"),
         )
-        # keep the state-dir flat in stream age: only the newest state
-        # < e is ever read, so everything older than the newest two
-        # epochs (replay headroom — a replayed epoch e must still find
-        # its e-1 predecessor) is garbage, pruned in-band
-        import shutil
-
-        epochs = sorted(
-            int(name.split("=", 1)[1])
-            for name in os.listdir(state_dir)
-            if name.startswith("epoch=")
-            and name.split("=", 1)[1].lstrip("-").isdigit()
-        )
-        for e in epochs[:-2]:
+        # keep the state-dir flat in stream age: everything older than
+        # the newest two epochs (replay headroom — a replayed epoch e
+        # must still find its e-1 predecessor) is garbage, pruned in-band
+        for e in _epochs(state_dir)[:-2]:
             shutil.rmtree(
                 os.path.join(state_dir, f"epoch={e}"), ignore_errors=True
             )
@@ -1304,7 +1278,6 @@ def start_drift_stream(
     a replayed epoch overwrites an identical report.
     """
     import math
-    import os
 
     if bins < 2:
         raise ValueError(f"bins must be >= 2; got {bins}")
@@ -1360,15 +1333,12 @@ def start_drift_stream(
             )
             for b in occupied
         ]
-        (
-            spark_active.createDataFrame(
-                rows,
-                "epoch long, bin int, n_expected long, n_actual long,"
-                " psi_term double, psi_total double",
-            )
-            .repartition(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
+        _write_state_rows(
+            spark_active,
+            rows,
+            "epoch long, bin int, n_expected long, n_actual long,"
+            " psi_term double, psi_total double",
+            os.path.join(out_dir, f"epoch={int(epoch_id)}"),
         )
 
     return (
@@ -1413,8 +1383,6 @@ def start_lm_score_stream(
     itself the output is bit-identical to the batch query (parity-gated
     in tests/test_streaming.py).
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.ngramlm import _bigrams
 
     big_ref = _bigrams(reference, text_col=text_col, id_col=id_col)
@@ -1504,8 +1472,6 @@ def start_dsir_stream(
     batch drawn from the reference's raw slice the output is bit-identical
     to the batch query (parity-gated in tests/test_streaming.py).
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.dsir import (
         dsir_bucket_stats,
         dsir_scores,
@@ -1563,11 +1529,9 @@ def start_budget_mix_stream(
     tests/test_streaming.py asserts that equivalence epoch by epoch.
     Output lands under ``out_dir/epoch=<e>`` with (id, source, n_tokens,
     cum_tokens GLOBAL, kept); the carried per-source spend (≤ |sources|
-    rows — bounded by the source vocabulary, not the corpus) is
-    epoch-versioned under ``state_dir/epoch=<e>`` with the
-    start_shard_stream replay contract: epoch e reads the newest state
-    < e, so a crashed-and-replayed epoch recomputes from the SAME carried
-    totals and overwrites the same paths.
+    rows — bounded by the source vocabulary, not the corpus) lives under
+    ``state_dir/epoch=<e>`` with the epoch-state protocol
+    (:func:`_newest_before`) as its replay contract.
 
     Note the admission-order semantics: a batch run orders the WHOLE
     corpus by (md5, key); the stream orders by (arrival epoch, md5, key).
@@ -1575,8 +1539,6 @@ def start_budget_mix_stream(
     have not seen), and it is exactly reproducible: replaying the same
     epochs yields the same admission set.
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.curation import token_budget_sample
 
     if any(b < 0 for b in budgets.values()):
@@ -1585,18 +1547,12 @@ def start_budget_mix_stream(
     spark_active = docs_stream.sparkSession
 
     def _carried(e: int) -> dict[str, int]:
-        if not os.path.isdir(state_dir):
-            return {}
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(state_dir)
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        if not prior:
+        prev = _newest_before(state_dir, e)
+        if prev is None:
             return {}
         rows = (
             spark_active.read.schema("source string, spent long")
-            .parquet(os.path.join(state_dir, f"epoch={max(prior)}"))
+            .parquet(prev)
             .collect()
         )
         return {r["source"]: int(r["spent"]) for r in rows}
@@ -1642,10 +1598,11 @@ def start_budget_mix_stream(
         merged = dict(carried)
         for r in spent:
             merged[r["source"]] = merged.get(r["source"], 0) + int(r["spent"])
-        spark_active.createDataFrame(
-            sorted(merged.items()), "source string, spent long"
-        ).repartition(1).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"epoch={e}")
+        _write_state_rows(
+            spark_active,
+            sorted(merged.items()),
+            "source string, spent long",
+            os.path.join(state_dir, f"epoch={e}"),
         )
 
     return (
@@ -1683,8 +1640,6 @@ def start_image_dedup_stream(
     semantics — a crashed-and-replayed epoch rewrites the same dirs, no
     double-append, no self-match.
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.multimodal import (
         _AHASH_BANDS,
         _ahash_banded_rows,
@@ -1708,10 +1663,7 @@ def start_image_dedup_stream(
         ).localCheckpoint()
         bands_root = index_path.rstrip("/") + "/bands"
         out_path = os.path.join(out_dir, f"epoch={e}")
-        have_index = os.path.isdir(bands_root) and any(
-            d.startswith("epoch=") for d in os.listdir(bands_root)
-        )
-        if have_index:
+        if _epochs(bands_root):
             pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
             corpus = (
                 spark_active.read.parquet(bands_root)
@@ -1805,8 +1757,6 @@ def start_linkage_stream(
     feature-expression dict (Column expressions cannot be built before
     the joined schema exists on the executor-side plan).
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.linkage import fs_link_multipass
 
     if not block_passes:
@@ -1866,17 +1816,13 @@ def start_entity_registry_stream(
     edge log is never revisited), and the updated registry lands under
     ``registry_path/epoch=<e>``.
 
-    Replay contract: the CURRENT registry is the highest epoch dir
-    (epoch < e on read, so a crashed-and-replayed epoch re-derives from
-    its true predecessor and overwrites its own output — no
-    double-fold). After any sequence of batches the latest epoch is
+    Replay contract: the epoch-state protocol (:func:`_newest_before`) —
+    no double-fold. After any sequence of batches the latest epoch is
     bit-identical to a full CC recompute over all edges seen (the
     operator's hashed invariant), which the parity test drives
     end-to-end. Registry growth is |nodes|, not |edges|; compact old
     epoch dirs like the ledger when listings grow.
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.clusters import (
         connected_components,
         incremental_components,
@@ -1888,19 +1834,9 @@ def start_entity_registry_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(registry_path)
-                if os.path.isdir(registry_path)
-                else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        if prior:
-            labels = spark_active.read.parquet(
-                os.path.join(registry_path, f"epoch={max(prior)}")
-            )
+        prev = _newest_before(registry_path, e)
+        if prev is not None:
+            labels = spark_active.read.parquet(prev)
             reg = incremental_components(labels, batch_df, src=src, dst=dst)
         else:
             reg = connected_components(batch_df, src=src, dst=dst)
@@ -1931,18 +1867,13 @@ def start_shuffle_shard_stream(
     global position space, under ``store_path/epoch=<e>/rows`` with the
     new high-water mark in ``epoch=<e>/next``.
 
-    Replay contract (the entity-registry discipline): the current
-    high-water mark is read from the highest epoch dir STRICTLY BELOW the
-    incoming epoch id, and the batch overwrites its own epoch dir — a
-    crashed-and-replayed epoch re-derives from its true predecessor and
-    can never double-append. The live store is the union of all epoch
-    ``rows`` dirs (``spark.read.parquet(store/epoch=*/rows)``); positions
-    across any replay sequence equal the batch-sequential
+    Replay contract: the epoch-state protocol (:func:`_newest_before`) —
+    a replayed epoch can never double-append. The live store is the union
+    of all epoch ``rows`` dirs (``spark.read.parquet(store/epoch=*/rows)``);
+    positions across any replay sequence equal the batch-sequential
     ``shard_store_init``/``append`` fold, which the parity test drives.
     Epoch dirs are per-batch sized — compact old ones like the ledger
     when listings grow."""
-    import os
-
     from crowdsorsa_etl_spark.operators.sharding import _positions
 
     spark_active = docs_stream.sparkSession
@@ -1951,20 +1882,11 @@ def start_shuffle_shard_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(store_path) if os.path.isdir(store_path) else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        start = (
-            spark_active.read.parquet(
-                os.path.join(store_path, f"epoch={max(prior)}", "next")
-            ).collect()[0]["next_pos"]
-            if prior
-            else 0
-        )
+        prev = _newest_before(store_path, e)
+        start = 0
+        if prev is not None:
+            nxt = spark_active.read.parquet(os.path.join(prev, "next"))
+            start = nxt.collect()[0]["next_pos"]
         pos, total = _positions(batch_df, id_col, seed, start)
         (
             pos.withColumn(
@@ -1974,13 +1896,11 @@ def start_shuffle_shard_stream(
             .write.mode("overwrite")
             .parquet(os.path.join(store_path, f"epoch={e}", "rows"))
         )
-        (
-            spark_active.range(1)
-            .select(
-                F.lit(start + total).cast("long").alias("next_pos")
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_path, f"epoch={e}", "next"))
+        _write_state_rows(
+            spark_active,
+            [(int(start + total),)],
+            "next_pos long",
+            os.path.join(store_path, f"epoch={e}", "next"),
         )
 
     return (
@@ -2024,14 +1944,10 @@ def start_mix_stream(
       store's positions — the store itself is NEVER rewritten (the
       epoch-reshuffle posture: order is a manifest, not bytes).
 
-    Replay safety is the epoch-versioned state posture (start_shard_stream):
-    epoch e reads the newest state < e, so a crashed-and-replayed epoch
-    re-derives from the SAME carried totals and overwrites its own dirs —
-    no double count. Final-state == batch-rebuild is gated by
+    Replay safety: the epoch-state protocol (:func:`_newest_before`) — no
+    double count. Final-state == batch-rebuild is gated by
     tests/test_round16.py.
     """
-    import os
-
     from crowdsorsa_etl_spark.functions.text import (
         normalize_text,
         quality_score,
@@ -2041,17 +1957,11 @@ def start_mix_stream(
     spark_active = docs_stream.sparkSession
 
     def _carried(e: int, name: str, schema: str) -> DataFrame | None:
-        if not os.path.isdir(store_path):
-            return None
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(store_path)
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        if not prior:
+        prev = _newest_before(store_path, e)
+        if prev is None:
             return None
         return spark_active.read.schema(schema).parquet(
-            os.path.join(store_path, f"epoch={max(prior)}", name)
+            os.path.join(prev, name)
         )
 
     def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -2161,15 +2071,11 @@ def start_hll_stream(
     * ``epoch=<e>/summary``  — one row: v_zero, sum_fx (exact BIGINT
       fold), est (operators/hll estimate with the LC branch).
 
-    Replay safety: the epoch-versioned state posture (start_mix_stream) —
-    epoch e merges ONTO the newest state < e, so a crashed-and-replayed
-    epoch re-derives from the same predecessor; merge idempotence (max)
-    additionally makes even a double-fold of the same batch harmless —
-    the property tests/test_round16.py pins as
+    Replay safety: the epoch-state protocol (:func:`_newest_before`);
+    merge idempotence (max) additionally makes even a double-fold of the
+    same batch harmless — the property tests/test_round16.py pins as
     stream-final == one-shot batch sketch.
     """
-    import os
-
     from crowdsorsa_etl_spark.operators.hll import (
         HLL_M,
         HLL_WBITS,
@@ -2183,17 +2089,11 @@ def start_hll_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(store_path) if os.path.isdir(store_path) else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
+        prev = _newest_before(store_path, e)
         regs = hll_registers(batch_df, key_col, seed=seed)
-        if prior:
+        if prev is not None:
             carried = spark_active.read.schema("idx int, r int").parquet(
-                os.path.join(store_path, f"epoch={max(prior)}", "registers")
+                os.path.join(prev, "registers")
             )
             regs = (
                 regs.unionAll(carried)
@@ -2264,20 +2164,16 @@ def start_kll_stream(
     * ``epoch=<e>/summary`` — one row: n_total (exact — merge conserves
       weight), est_p50, est_p99.
 
-    Replay safety is the epoch-versioned posture: epoch ``e`` merges
-    ONTO the newest state ``< e``, so a crashed-and-replayed epoch
-    re-derives from the same predecessor and a full checkpoint loss
-    re-runs the whole fold onto nothing, landing on the identical final
-    state. NOTE the contrast with HLL: max-merge is idempotent, so HLL
-    replay safety holds even without versioning; KLL compaction is NOT
-    idempotent (re-folding a batch would double its weight) — the
-    version guard is load-bearing here. Likewise, merged cells are NOT
-    the one-shot sketch of the union (published KLL merges preserve the
-    rank-error bound, not the cell set); the pytest gate pins
-    stream-final == the same fold replayed in batch, exact weight
+    Replay safety is the epoch-state protocol (:func:`_newest_before`);
+    a full checkpoint loss re-runs the whole fold onto nothing, landing
+    on the identical final state. NOTE the contrast with HLL: max-merge
+    is idempotent, so HLL replay safety holds even without versioning;
+    KLL compaction is NOT idempotent (re-folding a batch would double its
+    weight) — the version guard is load-bearing here. Likewise, merged
+    cells are NOT the one-shot sketch of the union (published KLL merges
+    preserve the rank-error bound, not the cell set); the pytest gate
+    pins stream-final == the same fold replayed in batch, exact weight
     conservation, and the merge-degraded rank bound."""
-    import os
-
     from crowdsorsa_etl_spark.operators.kll import (
         kll_cells_sorted,
         kll_merge,
@@ -2292,35 +2188,30 @@ def start_kll_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(store_path) if os.path.isdir(store_path) else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
+        prev = _newest_before(store_path, e)
         batch_cells = [
             (r["level"], r["pos"], r["value"], r["weight"])
             for r in kll_cells_sorted(
                 batch_df, value_col, ties, k=k, max_levels=max_levels
             ).collect()
         ]
-        if prior:
+        if prev is not None:
             carried = [
                 (r["level"], r["pos"], r["value"], r["weight"])
                 for r in spark_active.read.schema(cells_schema)
-                .parquet(os.path.join(store_path, f"epoch={max(prior)}", "cells"))
+                .parquet(os.path.join(prev, "cells"))
                 .collect()
             ]
             merged = kll_merge(carried, batch_cells, k, max_levels)
         else:
             merged = batch_cells
         ep = os.path.join(store_path, f"epoch={e}")
-        spark_active.createDataFrame(merged, cells_schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(ep, "cells"))
+        _write_state_rows(
+            spark_active, merged, cells_schema, os.path.join(ep, "cells")
+        )
         n_total = sum(w for *_x, w in merged)
-        spark_active.createDataFrame(
+        _write_state_rows(
+            spark_active,
             [
                 (
                     n_total,
@@ -2329,8 +2220,7 @@ def start_kll_stream(
                 )
             ],
             "n_total bigint, est_p50 bigint, est_p99 bigint",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ep, "summary")
+            os.path.join(ep, "summary"),
         )
 
     return (
@@ -2376,8 +2266,6 @@ def start_kmv_stream(
     State is ≤ k BIGINTs regardless of stream length — the right
     100 TB shape (the distinct build is map-side combined per batch;
     the driver folds two ≤k-element lists)."""
-    import os
-
     from crowdsorsa_etl_spark.operators.kmv import (
         H_SPACE,
         kmv_hash_spark,
@@ -2401,38 +2289,31 @@ def start_kmv_stream(
                 .collect()
             )
         ]
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(store_path) if os.path.isdir(store_path) else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
-        if prior:
+        prev = _newest_before(store_path, e)
+        if prev is not None:
             carried = [
                 r["h"]
                 for r in spark_active.read.schema("h bigint")
-                .parquet(
-                    os.path.join(store_path, f"epoch={max(prior)}", "sketch")
-                )
+                .parquet(os.path.join(prev, "sketch"))
                 .collect()
             ]
             merged = sorted(set(carried) | set(batch_hashes))[:k]
         else:
             merged = batch_hashes
         ep = os.path.join(store_path, f"epoch={e}")
-        spark_active.createDataFrame(
-            [(h,) for h in merged], "h bigint"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ep, "sketch")
+        _write_state_rows(
+            spark_active,
+            [(h,) for h in merged],
+            "h bigint",
+            os.path.join(ep, "sketch"),
         )
         sample, theta = theta_split(merged, k)
         est = round(len(sample) * float(H_SPACE) / float(theta), 6)
-        spark_active.createDataFrame(
+        _write_state_rows(
+            spark_active,
             [(len(merged), theta, est)],
             "n_retained int, theta bigint, est double",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ep, "summary")
+            os.path.join(ep, "summary"),
         )
 
     return (
@@ -2460,18 +2341,16 @@ def start_psi_stream(
     NOW", with O(|categories|) carried state.
 
     Count folding is ADDITIVE (a replayed batch would double-count), so
-    the epoch-versioned posture is load-bearing exactly as in
-    ``start_kll_stream``: epoch ``e`` re-derives from the newest state
-    ``< e``. PSI uses the q120 Laplace-(+1) smoothed form over the union
-    of reference and observed categories — identical arithmetic, so the
-    stream's epoch score equals the batch query's on the same rows
-    (pinned by pytest).
+    the epoch-state protocol (:func:`_newest_before`) is load-bearing
+    exactly as in ``start_kll_stream``. PSI uses the q120 Laplace-(+1)
+    smoothed form over the union of reference and observed categories —
+    identical arithmetic, so the stream's epoch score equals the batch
+    query's on the same rows (pinned by pytest).
 
     Per epoch writes: ``epoch=<e>/counts`` (category, n) and
     ``epoch=<e>/summary`` (n_rows, n_categories, psi_micro BIGINT,
     psi double)."""
     import math
-    import os
 
     if not ref_counts:
         raise ValueError("ref_counts must be a non-empty mapping")
@@ -2504,31 +2383,25 @@ def start_psi_stream(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (
-                os.listdir(store_path) if os.path.isdir(store_path) else []
-            )
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < e
-        ]
+        prev = _newest_before(store_path, e)
         merged = dict(batch_counts)
-        if prior:
+        if prev is not None:
             for r in (
                 spark_active.read.schema("c string, n bigint")
-                .parquet(
-                    os.path.join(store_path, f"epoch={max(prior)}", "counts")
-                )
+                .parquet(os.path.join(prev, "counts"))
                 .collect()
             ):
                 merged[r["c"]] = merged.get(r["c"], 0) + int(r["n"])
         ep = os.path.join(store_path, f"epoch={e}")
-        spark_active.createDataFrame(
-            sorted(merged.items()), "c string, n bigint"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ep, "counts")
+        _write_state_rows(
+            spark_active,
+            sorted(merged.items()),
+            "c string, n bigint",
+            os.path.join(ep, "counts"),
         )
         pm = _psi_micro(merged)
-        spark_active.createDataFrame(
+        _write_state_rows(
+            spark_active,
             [
                 (
                     sum(merged.values()),
@@ -2538,8 +2411,7 @@ def start_psi_stream(
                 )
             ],
             "n_rows bigint, n_categories int, psi_micro bigint, psi double",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ep, "summary")
+            os.path.join(ep, "summary"),
         )
 
     return (

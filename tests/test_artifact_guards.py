@@ -279,3 +279,74 @@ def test_at_rest_ignores_markerless_leftover_stage(tmp_path):
     path = _at_rest(str(tmp_path / "idx"), build)
     assert sorted(os.listdir(path)) == ["_SUCCESS", "part-0"]
     assert (tmp_path / "idx" / "part-0").read_text() == "fresh"
+
+
+# --- streaming tier: one epoch-versioned state protocol -----------------
+
+STREAMING = os.path.join(PKG, "streaming", "pipeline.py")
+
+# the bare-int() / isdigit() parses, and any directory listing (the regex
+# listings in compact_shard_epochs were the third parser)
+_EPOCH_PARSE = ('startswith("epoch=")', 'split("=", 1)', "os.listdir(")
+
+
+def _epoch_protocol_violations(src: str) -> list[str]:
+    """Epoch-dir listing outside ``_epochs`` and local-row state writes
+    (``createDataFrame(...)`` narrowed to one partition and written)
+    outside ``_write_state_rows``."""
+    tree = ast.parse(src)
+    owner = {}  # line -> name of the top-level function containing it
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    bad = []
+    for ln, line in enumerate(src.splitlines(), 1):
+        if owner.get(ln) != "_epochs" and any(p in line for p in _EPOCH_PARSE):
+            bad.append(f"line {ln}: hand-rolled epoch listing: {line.strip()}")
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Attribute) and node.attr == "write"):
+            continue
+        narrow = node.value
+        if not (
+            isinstance(narrow, ast.Call)
+            and isinstance(narrow.func, ast.Attribute)
+            and narrow.func.attr in ("coalesce", "repartition")
+            and [ast.unparse(a) for a in narrow.args] == ["1"]
+            and "createDataFrame" in _dotted(narrow.func.value)
+        ):
+            continue
+        if owner.get(node.lineno) != "_write_state_rows":
+            bad.append(f"line {node.lineno}: local-row write by hand")
+    return bad
+
+
+def test_streaming_state_goes_through_the_epoch_helpers():
+    """Every stream lists its ``epoch=<n>`` dirs through ``_epochs`` /
+    ``_newest_before`` and writes driver-side state rows through
+    ``_write_state_rows``: one parser (a stray ``epoch=0__old`` once
+    crashed the bare-``int()`` readers) and one write posture."""
+    with open(STREAMING) as fh:
+        bad = _epoch_protocol_violations(fh.read())
+    assert not bad, f"streaming/pipeline.py bypasses the epoch helpers: {bad}"
+
+
+def test_epoch_guard_flags_hand_rolled_sites():
+    src = '''
+def _epochs(root):
+    return [d.split("=", 1)[1] for d in os.listdir(root)]
+
+def _write_state_rows(spark, rows, schema, path):
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+
+def start_x_stream(spark, root, e):
+    prior = [d for d in os.listdir(root) if d.startswith("epoch=")]
+    (
+        spark.createDataFrame([(1,)], "n long")
+        .repartition(1)
+        .write.mode("overwrite")
+        .parquet(root)
+    )
+'''
+    bad = _epoch_protocol_violations(src)
+    assert len(bad) == 2 and "line 9" in bad[0] and "line 11" in bad[1], bad

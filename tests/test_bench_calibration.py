@@ -109,3 +109,48 @@ def test_perf_gate_skips_without_pin(tmp_path, monkeypatch):
 
     monkeypatch.setattr(round_close, "REPO", str(tmp_path))
     assert check_perf_gate({"queries": {"q1": 99.0}}) == []
+
+
+def test_contention_flag_names_its_triggers():
+    assert bench._contention_flag([1.0, 1.1, 4.5], None) == {"spread"}
+    assert bench._contention_flag([12.0, 12.1, 12.2], 1.2) == {"uniform"}
+    assert bench._contention_flag([12.0, 12.1, 40.0], 1.2) == {
+        "spread", "uniform",
+    }
+    assert bench._contention_flag([1.0, 1.0, 1.0], 1.0) == set()
+
+
+def test_uniform_only_flag_between_idle_probes_is_slow_vs_pin():
+    """ADVICE bench.py:430: a steady >2x slowdown with idle probes on both
+    sides has no load to blame — it must not be discounted as contended."""
+    idle = bench.IDLE_ENV_FACTOR
+    assert bench._flag_kind({"uniform"}, [1.0, idle]) == "slow_vs_pin"
+    # either bracketing probe loaded: the load explanation stands
+    assert bench._flag_kind({"uniform"}, [1.0, idle + 0.01]) == "contended"
+    assert bench._flag_kind({"uniform"}, [2.4, 1.0]) == "contended"
+    # a spread spike is transient load whatever the probes read
+    assert bench._flag_kind({"spread"}, [1.0, 1.0]) == "contended"
+    assert bench._flag_kind({"spread", "uniform"}, [1.0, 1.0]) == "contended"
+    assert bench._flag_kind(set(), [1.0, 1.0]) is None
+
+
+def test_trigger_split_keeps_the_flagged_set():
+    """Naming the triggers must not change WHICH queries get flagged: the
+    flagged set equals the single-rule flag (spread measured against
+    min(runs ∪ pin), or best > 2x pin)."""
+    import itertools
+
+    def single_rule(runs, pin):
+        best = min(runs + ([pin] if pin is not None else []))
+        spread = max(runs[1:]) > 3 * best and max(runs[1:]) - best > 0.75
+        uniform = (
+            pin is not None and min(runs) > 2 * pin and min(runs) - pin > 0.75
+        )
+        return spread or uniform
+
+    grid = [0.2, 0.5, 1.0, 1.5, 2.3, 3.5, 6.0, 12.0]
+    for runs in itertools.product(grid, repeat=3):
+        for pin in [None, 0.2, 0.6, 1.2, 4.0]:
+            assert bool(bench._contention_flag(list(runs), pin)) == (
+                single_rule(list(runs), pin)
+            ), (runs, pin)

@@ -1670,3 +1670,105 @@ class TestKafkaDecode:
         )
         got = decode_kafka_events(wire).collect()
         assert [r["event_id"] for r in got] == [1]
+
+
+class TestEpochStateHelpers:
+    """The one epoch-name parser and prior-epoch lookup every
+    carried-state stream reads its state through."""
+
+    def _store(self, tmp_path, *names):
+        for n in names:
+            (tmp_path / n).mkdir()
+        return str(tmp_path)
+
+    def test_epochs_ignores_non_epoch_entries(self, tmp_path):
+        from crowdsorsa_etl_spark.streaming.pipeline import _epochs
+
+        root = self._store(
+            tmp_path, "epoch=2", "epoch=-1", "epoch=10", "epoch=-1__old",
+            "epoch=3.tmp", "epoch=", "epochs=4", "_SUCCESS",
+        )
+        (tmp_path / "epoch=7").write_text("a plain file, not a state dir")
+        (tmp_path / "part-0000.parquet").write_text("")
+        assert _epochs(root) == [-1, 2, 10]
+
+    def test_epochs_of_missing_root_is_empty(self, tmp_path):
+        from crowdsorsa_etl_spark.streaming.pipeline import _epochs
+
+        assert _epochs(str(tmp_path / "missing")) == []
+
+    def test_newest_before(self, tmp_path):
+        import os
+
+        from crowdsorsa_etl_spark.streaming.pipeline import _newest_before
+
+        assert _newest_before(str(tmp_path / "missing"), 5) is None
+        root = self._store(tmp_path, "epoch=-1", "epoch=0", "epoch=3",
+                           "epoch=7", "epoch=7__old")
+        # nothing strictly below the lowest epoch
+        assert _newest_before(root, -1) is None
+        # the negative base epoch is a valid predecessor
+        assert _newest_before(root, 0) == os.path.join(root, "epoch=-1")
+        # gaps in the numbering: the newest BELOW e, never e itself
+        assert _newest_before(root, 3) == os.path.join(root, "epoch=0")
+        assert _newest_before(root, 6) == os.path.join(root, "epoch=3")
+        assert _newest_before(root, 7) == os.path.join(root, "epoch=3")
+        assert _newest_before(root, 100) == os.path.join(root, "epoch=7")
+
+    def test_hll_stream_ignores_stray_epoch_dir(self, spark, tmp_path):
+        """A leftover ``epoch=0__old`` in the store (a crash mid-swap)
+        must neither crash the stream nor change where it lands: the
+        seeded store ends in the same state as a clean run."""
+        import os
+
+        from crowdsorsa_etl_spark.streaming.pipeline import (
+            _epochs,
+            start_hll_stream,
+        )
+
+        src = str(tmp_path / "ev")
+        for i in range(2):
+            spark.range(i * 500, (i + 1) * 500).select(
+                F.col("id").alias("user_id")
+            ).coalesce(1).write.parquet(os.path.join(src, f"b{i}"))
+
+        def drain(store: str, ckpt: str) -> dict:
+            q = start_hll_stream(
+                spark.readStream.schema("user_id long")
+                .option("maxFilesPerTrigger", 1)
+                .option("recursiveFileLookup", "true")
+                .parquet(src),
+                store,
+                checkpoint_dir=ckpt,
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            last = os.path.join(store, f"epoch={_epochs(store)[-1]}")
+            return {
+                "registers": sorted(
+                    tuple(r)
+                    for r in spark.read.parquet(
+                        os.path.join(last, "registers")
+                    ).collect()
+                ),
+                "summary": [
+                    tuple(r)
+                    for r in spark.read.parquet(
+                        os.path.join(last, "summary")
+                    ).collect()
+                ],
+                "epochs": _epochs(store),
+            }
+
+        clean = drain(str(tmp_path / "clean"), str(tmp_path / "ck_clean"))
+        seeded_store = tmp_path / "seeded"
+        stray = seeded_store / "epoch=0__old" / "registers"
+        stray.mkdir(parents=True)
+        spark.createDataFrame([(0, 99)], "idx int, r int").write.mode(
+            "overwrite"
+        ).parquet(str(stray))
+        seeded = drain(str(seeded_store), str(tmp_path / "ck_seeded"))
+        assert clean["epochs"] == [0, 1]
+        assert seeded == clean
