@@ -2,7 +2,7 @@
 
 ``entry(spark)`` runs the flagship nested-document pipeline on sf0.001;
 ``queries()``/``oracle_sql()`` expose the engine's operator surface
-(crowdsorsa_etl_spark/queries.py) for the DuckDB differential check.
+(the ``crowdsorsa_etl_spark/queries/`` registry) for the DuckDB differential check.
 """
 
 from __future__ import annotations

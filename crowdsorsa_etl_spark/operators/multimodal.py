@@ -209,7 +209,7 @@ def image_checksums(
     over the decoded row-major array (first channel). The weighted sum is
     order-sensitive, so any decode bug that permutes, shifts, or rescales
     pixels changes it — this is the hash-oracle surface for the codec
-    (queries/round3_pack.py llm_image_decode replays both sums in DuckDB
+    (queries/multimodal.py llm_image_decode replays both sums in DuckDB
     SQL straight from the source bytes, independent of this code path).
     Integer outputs only: no float-rounding parity risk cross-engine.
     """

@@ -3,7 +3,7 @@
 The reference has no language-model tier (its text ops are single-row string
 repairs, `crowdsorsa-etl-2023.R:88-94`); this module is north-star surface:
 the CCNet / KenLM perplexity-filter stage of a web-corpus pipeline, one
-modeling step up from the add-one bigram LM (`queries/round8d_pack.py`,
+modeling step up from the add-one bigram LM (`queries/curation.py`,
 ``llm_bigram_logprob``) that introduced the shape.
 
 Model (interpolated Kneser–Ney, bigram order, absolute discount ``D``):

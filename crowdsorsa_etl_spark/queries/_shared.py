@@ -19,30 +19,26 @@ Coverage map to SURVEY.md §2 is noted on each query.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.functions.text import (
-    _LANG_MARKERS,
-    detect_language,
-    quality_features,
-    quality_score,
-    token_count,
-)
-from crowdsorsa_etl_spark import lsh_oracles
-from crowdsorsa_etl_spark.operators.asof import asof_join
+from crowdsorsa_etl_spark.operators.clusters import dedup_clusters
 from crowdsorsa_etl_spark.operators.dedup import (
-    exact_dedup,
     minhash_lsh_candidates,
-    simhash_buckets,
-    token_jaccard_pairs,
+    shingle_jaccard_pairs,
+    simhash_signatures,
 )
-from crowdsorsa_etl_spark.operators.similarity import cosine_topk, lsh_topk
-from crowdsorsa_etl_spark.operators.topk import sessionize, topk_per_group
-from crowdsorsa_etl_spark.pipelines.flagship import order_documents
+from crowdsorsa_etl_spark.operators.ngramlm import kneser_ney_token_scores
+from crowdsorsa_etl_spark.operators.similarity import cosine_topk
+from crowdsorsa_etl_spark.operators.substring import _shingle_positions
 from crowdsorsa_etl_spark.sources.parquet import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -54,12 +50,12 @@ ORACLES: dict[str, str] = {}
 def register(name: str, sql: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
-            # fail at import time: a silent overwrite keeps the clobbered
-            # name's ORIGINAL insertion position (dict semantics), so the
-            # _ORDER_SNAPSHOT prefix guard can never catch it — the old
-            # query and its oracle just vanish from the sweep while every
-            # other gate stays green (this exact failure shipped once, as
-            # a round-15 name colliding with a round-11 registration)
+            # fail at import time: a silent overwrite leaves the name
+            # registered once, so the order check in queries/__init__.py
+            # cannot catch it — the first query and its oracle just vanish
+            # from the sweep while every other gate stays green (this
+            # exact failure shipped once, as a round-15 name colliding
+            # with a round-11 registration)
             raise ValueError(f"duplicate query registration: {name!r}")
         QUERIES[name] = fn
         if sql is not None:
@@ -86,10 +82,6 @@ def _sf_cache_dir(sf_dir: str, tag: str, table: str) -> str:
     :func:`_json_sidecar_write`) and builds are idempotent for identical
     input.
     """
-    import hashlib
-    import os
-    import tempfile
-
     src = os.path.join(sf_dir, f"{table}.parquet")
     h = hashlib.md5()
     if os.path.isdir(src):
@@ -115,157 +107,17 @@ def _sf_cache_dir(sf_dir: str, tag: str, table: str) -> str:
 _NORM_SQL = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 
-# Canonical registration order at the round-5 split (the driver's
-# correctness window samples a prefix of this; order drift breaks
-# cross-round comparability). Asserted by queries/__init__.py at import.
-_ORDER_SNAPSHOT = [
-    'q01_pricing_summary',
-    'q02_revenue_filter',
-    'q03_star_join',
-    'q04_bigjoin_priority',
-    'q05_semi_join',
-    'q06_anti_join',
-    'q07_topk_per_group',
-    'q08_window_nav',
-    'q09_rollup',
-    'q10_distinct_agg',
-    'q11_set_ops',
-    'q12_scalar_funcs',
-    'q13_asof_join',
-    'q14_json_extract',
-    'q15_pivot',
-    'q16_explode_tokens',
-    'q17_grouping_sets',
-    'q18_sessionize',
-    'q19_tumbling_window',
-    'q20_range_join',
-    'llm_exact_dedup',
-    'llm_token_jaccard',
-    'llm_text_stats',
-    'llm_quality',
-    'llm_lang_detect',
-    'llm_fingerprint',
-    'llm_cosine_topk',
-    'llm_multimodal_bytes',
-    'flagship_order_documents',
-    'flagship_doc_fields',
-    'llm_minhash_lsh',
-    'llm_simhash',
-    'llm_simhash_hamming',
-    'llm_multimodal_embed_topk',
-    'llm_winnow_overlap',
-    'llm_lsh_topk',
-    'llm_embedding_dups',
-    'llm_embedding_dups_lsh',
-    'llm_ivf_topk',
-    'q21_percentiles',
-    'q22_cross_join',
-    'q23_union_by_name',
-    'q24_correlated_agg',
-    'q25_string_funcs',
-    'q26_math_funcs',
-    'q27_null_funcs',
-    'q28_having',
-    'q29_top10_global',
-    'q30_range_frame',
-    'q31_rank_distributions',
-    'q32_first_last_value',
-    'q33_sliding_window',
-    'llm_embedding_stats',
-    'llm_cosine_topk_vectorized',
-    'q34_date_funcs',
-    'q35_array_hofs',
-    'q36_unpivot',
-    'q37_conditional_aggs',
-    'llm_trigram_topk',
-    'crowdsorsa_documents_2023',
-    'crowdsorsa_documents_2024',
-    'llm_dedup_clusters',
-    'q38_salted_distinct',
-    'q39_salted_join',
-    'q40_approx_aggs',
-    'q41_cube',
-    'q42_collect_agg',
-    'q43_shipping_priority',
-    'q44_regional_volume',
-    'q45_bination_volume',
-    'q47_hll_sketches',
-    'q46_gapfill_resample',
-    'q48_range_join_binned',
-    'llm_pii_redact',
-    'llm_quality_filter',
-    'llm_train_split',
-    'llm_seq_packing',
-    'llm_contamination',
-    'llm_domain_mix',
-    'llm_curation_funnel',
-    'q49_zorder_keys',
-    'q52_schema_evolution',
-    'q50_sql_parity',
-    'q51_decimal_aggs',
-    'q53_dpp_prune',
-    'q54_table_diff',
-    'llm_quantized_topk',
-    'q55_min_acctbal_supplier',
-    'q56_nation_value_share',
-    'q57_top_revenue_supplier',
-    'q58_supplier_part_counts',
-    'q59_large_orders',
-    'q60_dormant_customers',
-    'q61_interval_arith',
-    'q62_stratified_sample',
-    'q63_latest_per_key',
-    'q64_ffill_ignore_nulls',
-    'q65_pagerank',
-    'q66_histogram_quantiles',
-    'llm_repetition_filter',
-    'q67_incremental_agg',
-    'llm_span_dedup',
-    'q68_zone_map_scan',
-    'q69_rank_funcs',
-    'q70_regex_funcs',
-    'q71_nullsafe_join',
-    'q72_bitwise_aggs',
-    'q73_stats_aggs',
-    'llm_unigram_logprob',
-    'q74_data_quality',
-    'q75_rolling_stats',
-    'q76_fuzzy_match',
-    'llm_semdedup',
-    'q77_promo_revenue',
-    'q78_small_qty_revenue',
-    'q79_or_predicates',
-    'q80_try_casts',
-    'q81_snapshot_time_travel',
-    'llm_image_decode',
-    'llm_curation_funnel_v2',
-    'q82_bag_set_ops',
-    'q83_exists_flag',
-    'q84_grouping_metadata',
-    'llm_vocab_stats',
-    'q85_cohort_retention',
-    'q86_event_funnel',
-    'q87_ratio_to_report',
-    'llm_semdedup_scaled',
-    'llm_ivf_topk_scaled',
-    'q88_waiting_orders'
-]
-
-
 def _json_sidecar_read(path: str):
     """Load a tiny JSON artifact sidecar, or None if absent/corrupt.
 
     Sidecars persist driver-side learn outputs (BPE merge tables, vocab
     maps, unigram costs) next to their parquet artifacts so a FRESH
     process skips the learn collect chains entirely — the in-memory memo
-    dicts (e.g. round10_pack._BPE_ARTIFACTS) are per-process, and the
+    dicts (e.g. tokenizers._BPE_ARTIFACTS) are per-process, and the
     judge measured a 5× cold/warm gap (22.8 s vs 4.3 s llm_mask_forget)
     caused exactly by re-running learn jobs whose parquet products were
     already warm on disk. A corrupt/partial file reads as a miss, never
     an error (the llm_image_dedup_index poisoned-guard lesson)."""
-    import json
-    import os
-
     if not os.path.exists(path):
         return None
     try:
@@ -278,9 +130,6 @@ def _json_sidecar_read(path: str):
 def _json_sidecar_write(path: str, obj) -> None:
     """Atomically persist a JSON sidecar (tmp + rename: a killed writer
     leaves no partial file for _json_sidecar_read to trip on)."""
-    import json
-    import os
-
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
@@ -303,9 +152,6 @@ def _promote_stage(stage: str, path: str) -> None:
     a husk from a killed build / an old marker-less layout (evict it and
     retry, else every future invocation rebuilds into stage and discards
     the work while the husk is served forever — ADVICE r14 medium)."""
-    import os
-    import shutil
-
     try:
         os.rename(stage, path)
         return
@@ -345,9 +191,6 @@ def _at_rest(path: str, build: Callable[[str], object]) -> str:
     an oracle sweep side by side) never overwrites files a reader is
     scanning, a killed build leaves only an ignored stage, and a build
     that raises removes its stage and publishes nothing."""
-    import os
-    import shutil
-
     if os.path.exists(os.path.join(path, _AT_REST_MARKER)):
         return path
     stage = f"{path}.stage.{os.getpid()}"
@@ -368,10 +211,6 @@ def _scratch_copy(seed: str):
     """Private copy of an at-rest store for one run to mutate (the live
     apply/append a query demonstrates must never touch the shared seed);
     yields its path and removes it on exit."""
-    import os
-    import shutil
-    import tempfile
-
     with tempfile.TemporaryDirectory(
         prefix="atrest_scratch_", ignore_cleanup_errors=True
     ) as tmp:
@@ -388,10 +227,6 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ran the identical signature pipeline (the _encoded_ids / spans
     shared-artifact posture). Deterministic, so the cache cannot drift
     from a recompute; a regenerated fixture misses the cache."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.dedup import minhash_lsh_candidates
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "lshpairs_v1", "documents"), "pairs.parquet"
@@ -415,10 +250,6 @@ def _dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache. At 100 TB this IS the production shape — the cluster registry
     is materialized once per corpus snapshot and every downstream
     consumer (canonical pick, policy taint, datasheet, ROI) reads it."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.clusters import dedup_clusters
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "dedupclusters_v1", "documents"),
@@ -440,10 +271,6 @@ def _ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once per corpus snapshot; the LIVE work is each tier's probe
     + the recall join. Deterministic (sequential-double cosine), so the
     cache cannot drift from a recompute."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.similarity import cosine_topk
-
     def build(stage: str) -> None:
         emb = _t(spark, sf_dir, "embeddings")
         cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5).select(
@@ -459,26 +286,6 @@ def _ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _fs_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-fixture materialized multipass Fellegi–Sunter pair table
-    (c_custkey, d_custkey, fs_score, fs_class) — the scored linkage
-    output shared by llm_record_linkage_multipass and
-    llm_entity_resolution (VERDICT r11 next-#1: the ER chain rebuilt the
-    candidate pairs from scratch per query). Deterministic: blocking keys
-    and score literals are pure functions of the customer fixture."""
-    import os
-
-    from crowdsorsa_etl_spark.queries.round12_pack import _mp_linkage_frame
-
-    path = _at_rest(
-        os.path.join(
-            _sf_cache_dir(sf_dir, "fspairs_v1", "customer"), "pairs.parquet"
-        ),
-        lambda stage: _mp_linkage_frame(spark, sf_dir).write.parquet(stage),
-    )
-    return spark.read.parquet(path)
-
-
 def _kn_token_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-fixture materialized Kneser–Ney token-score stream
     (doc_id, lp) over the documents corpus — the frozen-filter-LM
@@ -489,12 +296,6 @@ def _kn_token_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same rounded expression every time; at 100 TB this IS the
     production posture — a filter LM is trained once and its scores
     serve from a table (SCALE.md's start_lm_score_stream form)."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.ngramlm import (
-        kneser_ney_token_scores,
-    )
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "knscores_v1", "documents"), "lp.parquet"
@@ -513,10 +314,6 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     Deterministic (md5 of the normalized window text); slices for a
     train/eval split are filters over it, so one artifact serves every
     split convention."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.substring import _shingle_positions
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, f"shingles{k}_v1", "documents"),
@@ -534,10 +331,6 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id, simhash) over documents — shared by llm_simhash and
     llm_simhash_hamming (each previously re-ran the token-hash vote
     aggregation). Deterministic md5-derived h64 votes."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.dedup import simhash_signatures
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "simhash_v1", "documents"), "sig.parquet"
@@ -556,10 +349,6 @@ def _shingle_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference table is computed once per corpus snapshot; the audit's
     LIVE work is the precision/recall joins. Deterministic (portable
     Carter-Wegman shingle hashes, exact integer intersection/union)."""
-    import os
-
-    from crowdsorsa_etl_spark.operators.dedup import shingle_jaccard_pairs
-
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "jactruth_v1", "documents"),

@@ -1,32 +1,6 @@
-"""Round 18: corpus drift, sampling, and tail statistics — the
-monitoring + selection tier a production training-data pipeline runs
-BETWEEN snapshots (did the crawl mix shift? did the length distribution
-move? is the vocabulary tail still Zipfian? what do we subsample?).
-All over the documents table:
-
-* ``q120_psi_drift``  — Population Stability Index per category between
-  two corpus snapshots (the standard drift gate in front of a filter
-  model / classifier retrain decision).
-* ``q121_ks_drift``   — two-sample Kolmogorov–Smirnov D on an integer
-  metric between snapshots, kept EXACT in integer arithmetic until one
-  final division.
-* ``llm_ks_sketch``   — the same KS from two KLL sketches (the 100 TB
-  path when the value grid is unbounded), exact tier + loss in-row.
-* ``llm_ngram_novelty`` — distinct-shingle novelty of the current half
-  vs the reference half (index-vs-index anti-join at rest).
-* ``llm_hill_tail``   — Hill estimator of the word-frequency tail index
-  (Zipf alpha) from the top-k counts: the vocabulary-health scalar a
-  tokenizer design reads next to Heaps' law (llm_heaps_law).
-* ``llm_weighted_reservoir`` — Efraimidis–Spirakis weighted sampling
-  without replacement (seeded-hash keys, TakeOrdered(s)).
-* ``llm_source_percentile`` — within-source percent-rank normalization
-  (cross-source score calibration before a global quality cut).
-* ``llm_source_heavy_hitters`` — grouped Misra-Gries: per-source
-  ≥φ-share tokens (boilerplate discovery), exact confirm pass.
-
-Registration ORDER is load-bearing (the driver's correctness window
-samples the first 50 registrations); this module is imported LAST by
-queries/__init__.py, so its entries append after the round-17 tier.
+"""Corpus drift and tail statistics between snapshots: PSI, two-sample KS
+(exact and from KLL sketches), Jensen-Shannon, CUSUM, robust MAD outliers,
+n-gram novelty and the Hill tail index.
 
 Float-parity posture (the repo's standard, see _shared.py): every
 transcendental is a single ``ln`` over ONE double division of exact
@@ -40,7 +14,91 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.queries._shared import _t, register
+from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum_multi
+from crowdsorsa_etl_spark.operators.kll import kll_cells_grouped, kll_grouped_sql
+from crowdsorsa_etl_spark.operators.substring import _NORM
+from crowdsorsa_etl_spark.queries._shared import _doc_shingles, _t, register
+
+# ===========================================================================
+# q106_drift_psi — population stability index between two corpus slices
+# (the train-vs-incoming drift monitor run before a retraining decision).
+# Equal-width bins over a fixed range, Laplace-smoothed proportions (the
+# standard zero-bin guard), psi_term = (p_a - p_e) * ln(p_a / p_e).
+# Everything is one aggregation + a 10-row post-agg window — the 100 TB
+# cost is the single groupBy(bin) shuffle with map-side combine.
+# ===========================================================================
+
+_PSI_BINS = 10
+_PSI_WIDTH = 60  # n_chars bin width; fixture range is [48, 553]
+
+
+@register(
+    "q106_drift_psi",
+    f"""
+    WITH binned AS (
+      SELECT least(CAST(floor(n_chars / {_PSI_WIDTH}) AS INT), {_PSI_BINS - 1}) AS bin,
+             CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_expected,
+             CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_actual
+      FROM documents GROUP BY 1
+    ),
+    tot AS (
+      SELECT CAST(sum(n_expected) AS BIGINT) AS te,
+             CAST(sum(n_actual) AS BIGINT) AS ta FROM binned
+    ),
+    terms AS (
+      SELECT bin, n_expected, n_actual,
+             ((n_actual + 1.0) / (ta + {_PSI_BINS}.0)
+              - (n_expected + 1.0) / (te + {_PSI_BINS}.0))
+             * ln(((n_actual + 1.0) / (ta + {_PSI_BINS}.0))
+                  / ((n_expected + 1.0) / (te + {_PSI_BINS}.0))) AS term
+      FROM binned, tot
+    )
+    SELECT bin, n_expected, n_actual,
+           round(term, 6) AS psi_term,
+           round(sum(term) OVER (), 6) AS psi_total
+    FROM terms
+    """,
+)
+def q106_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PSI drift between the even-doc_id slice (expected) and the odd slice
+    (actual) over an equal-width n_chars histogram."""
+    docs = _t(spark, sf_dir, "documents")
+    binned = (
+        docs.select(
+            F.least(
+                F.floor(F.col("n_chars") / _PSI_WIDTH).cast("int"),
+                F.lit(_PSI_BINS - 1),
+            ).alias("bin"),
+            (F.col("doc_id") % 2 == 0).cast("int").alias("is_e"),
+        )
+        .groupBy("bin")
+        .agg(
+            F.sum("is_e").cast("bigint").alias("n_expected"),
+            F.sum(1 - F.col("is_e")).cast("bigint").alias("n_actual"),
+        )
+    )
+    # totals ride a size-10 broadcast (bin cardinality is a constant)
+    tot = binned.agg(
+        F.sum("n_expected").cast("bigint").alias("te"),
+        F.sum("n_actual").cast("bigint").alias("ta"),
+    )
+    k = float(_PSI_BINS)
+    pe = (F.col("n_expected") + 1.0) / (F.col("te") + k)
+    pa = (F.col("n_actual") + 1.0) / (F.col("ta") + k)
+    term = (pa - pe) * F.log(pa / pe)
+    terms = binned.crossJoin(F.broadcast(tot)).select(
+        "bin", "n_expected", "n_actual", term.alias("term")
+    )
+    return terms.select(
+        "bin",
+        "n_expected",
+        "n_actual",
+        F.round("term", 6).alias("psi_term"),
+        # post-aggregation: at most _PSI_BINS rows ride this global window
+        F.round(F.sum("term").over(Window.partitionBy()), 6).alias("psi_total"),
+    )
+
 
 # ===========================================================================
 # q120_psi_drift — PSI between the doc_id-parity halves of the corpus
@@ -212,10 +270,6 @@ def q121_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mode = spark.conf.get(_KS_GRID_CONF, "twophase")
     if mode == "twophase":
-        from crowdsorsa_etl_spark.operators.global_rank import (
-            with_global_cumsum_multi,
-        )
-
         # materialize the (bounded, one row per distinct value) grid so
         # the range exchange's sampling pass reads blocks instead of
         # re-running the documents scan + aggregation
@@ -303,8 +357,6 @@ _NOVELTY_K = 8
 
 
 def _novelty_sql() -> str:
-    from crowdsorsa_etl_spark.operators.substring import _NORM
-
     k = _NOVELTY_K
 
     def keys(pred: str) -> str:
@@ -332,8 +384,6 @@ def _novelty_sql() -> str:
 @register("llm_ngram_novelty", _novelty_sql())
 def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-shingle novelty of the odd-id half vs the even-id half."""
-    from crowdsorsa_etl_spark.queries._shared import _doc_shingles
-
     sh = _doc_shingles(spark, sf_dir, _NOVELTY_K)
     ref = sh.filter(F.col("doc_id") % 2 == 0).select("sh").distinct()
     cur = sh.filter(F.col("doc_id") % 2 == 1).select("sh").distinct()
@@ -390,8 +440,6 @@ _HILL_SQL = f"""
 @register("llm_hill_tail", _HILL_SQL)
 def llm_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hill tail-index estimate from the top-k word frequencies."""
-    from crowdsorsa_etl_spark.functions.text import normalize_text
-
     docs = _t(spark, sf_dir, "documents")
     words = docs.select(
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
@@ -434,132 +482,6 @@ def llm_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# llm_weighted_reservoir — Efraimidis–Spirakis (A-ES) weighted sampling
-# without replacement: each item draws u_i from a SEEDED portable hash
-# (u = (hex60+1)/2^60, an exact rational in (0,1]) and is ranked by
-# key_i = ln(u_i)/w_i (the log form of u^(1/w); higher is better since
-# ln(u) < 0); the top-s keys are the weighted sample — the quality-
-# weighted corpus subsample selection every data-mixing pipeline runs.
-# Determinism: the key is ROUNDED to 6 dp before ranking with doc_id as
-# the tie-break (the cosine_topk convention — raw-double ordering would
-# hinge on sub-ulp libm agreement). Scale: one narrow projection + a
-# TakeOrdered(s); no shuffle beyond the top-k.
-# ===========================================================================
-
-_RES_SEED = "wres:v1:"
-_RES_S = 20
-
-
-def _wres_sql() -> str:
-    from crowdsorsa_etl_spark.functions.portable_hash import hex60_sql
-
-    h = hex60_sql(f"'{_RES_SEED}' || CAST(doc_id AS VARCHAR)")
-    return f"""
-    WITH keyed AS (
-      SELECT doc_id, n_chars AS w,
-             round(ln(({h} + 1) / 1152921504606846976.0)
-                   / CAST(n_chars AS DOUBLE), 6) AS key6
-      FROM documents WHERE n_chars > 0
-    )
-    SELECT CAST(row_number() OVER (ORDER BY key6 DESC, doc_id ASC) AS INT)
-             AS rank,
-           doc_id, CAST(w AS BIGINT) AS w, key6
-    FROM keyed
-    ORDER BY key6 DESC, doc_id ASC LIMIT {_RES_S}
-    """
-
-
-@register("llm_weighted_reservoir", _wres_sql())
-def llm_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-s A-ES weighted sample of documents, weight = n_chars."""
-    from crowdsorsa_etl_spark.functions.portable_hash import hex60_spark
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    h = hex60_spark(
-        F.concat(F.lit(_RES_SEED), F.col("doc_id").cast("string"))
-    )
-    keyed = docs.select(
-        "doc_id",
-        F.col("n_chars").cast("bigint").alias("w"),
-        F.round(
-            F.log((h + 1) / F.lit(1152921504606846976.0))
-            / F.col("n_chars").cast("double"),
-            6,
-        ).alias("key6"),
-    )
-    top = keyed.orderBy(F.col("key6").desc(), F.col("doc_id").asc()).limit(
-        _RES_S
-    )
-    w = Window.orderBy(F.col("key6").desc(), F.col("doc_id").asc())
-    return top.select(
-        F.row_number().over(w).cast("int").alias("rank"),
-        "doc_id",
-        "w",
-        "key6",
-    )
-
-
-# ===========================================================================
-# llm_source_percentile — per-source percent-rank normalization of a
-# quality proxy (n_chars): scores from different sources are not
-# comparable raw (each crawl has its own length/quality distribution),
-# so cross-source selection thresholds operate on the WITHIN-SOURCE
-# percentile instead — the standard score-calibration step before a
-# global quality cut. percent_rank = (rank−1)/(n−1) is exact integer
-# arithmetic + one division on both engines; RANK() gives ties the same
-# percentile (the convention that makes equal scores interchangeable).
-# Output is the bounded doc_id < 50 probe slice (exact rank/n carried
-# for audit); the corpus-wide term is one hash-partitioned window by
-# source — the honest shuffle, skew-bounded by |sources|.
-# ===========================================================================
-
-_SRC_PCTL_SQL = """
-    WITH ranked AS (
-      SELECT doc_id, source, n_chars,
-             CAST(rank() OVER (PARTITION BY source ORDER BY n_chars)
-                  AS BIGINT) AS rnk,
-             CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n_src
-      FROM documents
-    )
-    SELECT doc_id, source, n_chars, rnk, n_src,
-           round(CASE WHEN n_src = 1 THEN 0.0
-                      ELSE (rnk - 1) / CAST(n_src - 1 AS DOUBLE) END, 6)
-             AS pctl
-    FROM ranked WHERE doc_id < 50
-    """
-
-
-@register("llm_source_percentile", _SRC_PCTL_SQL)
-def llm_source_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-source percent-rank of n_chars for the probe slice."""
-    docs = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars")
-    ranked = docs.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.rank().over(w).cast("bigint").alias("rnk"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("source"))
-        .cast("bigint")
-        .alias("n_src"),
-    )
-    return ranked.filter(F.col("doc_id") < 50).select(
-        "doc_id",
-        "source",
-        "n_chars",
-        "rnk",
-        "n_src",
-        F.round(
-            F.when(F.col("n_src") == 1, F.lit(0.0)).otherwise(
-                (F.col("rnk") - 1) / (F.col("n_src") - 1).cast("double")
-            ),
-            6,
-        ).alias("pctl"),
-    )
-
-
-# ===========================================================================
 # llm_ks_sketch — the 100 TB SCALE PATH for q121_ks_drift: the KS
 # statistic estimated from two KLL sketches instead of the exact
 # distinct-value grid, with its loss MEASURED in-row against the exact
@@ -577,8 +499,6 @@ _KS_SK_K = 32
 
 
 def _ks_sketch_sql() -> str:
-    from crowdsorsa_etl_spark.operators.kll import kll_grouped_sql
-
     cells = kll_grouped_sql(
         "SELECT doc_id % 2 AS side, n_chars, doc_id FROM documents",
         "side",
@@ -642,8 +562,6 @@ def _ks_sketch_sql() -> str:
 @register("llm_ks_sketch", _ks_sketch_sql())
 def llm_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS drift from two KLL sketches, exact tier + loss in-row."""
-    from crowdsorsa_etl_spark.operators.kll import kll_cells_grouped
-
     docs = _t(spark, sf_dir, "documents")
     base = docs.select(
         (F.col("doc_id") % 2).alias("side"), "n_chars", "doc_id"
@@ -713,48 +631,6 @@ def llm_ks_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("na") * F.col("nb")).cast("double"),
             6,
         ).alias("est_err"),
-    )
-
-
-# ===========================================================================
-# llm_source_heavy_hitters — GROUPED Misra-Gries: per-source tokens with
-# within-source share ≥ 2% (the per-crawl boilerplate/top-token table —
-# the grouped rung of q103). Pass 1 keeps one capacity-k MG table per
-# (partition, source) — the per-group no-false-negative bound holds
-# exactly as in the global case — pass 2 confirms candidates EXACTLY per
-# (source, token), so the output is deterministically the exact
-# per-source frequent set and the oracle is a plain HAVING over exact
-# counts; any sketch miss is a missing row = a hash mismatch. Scale:
-# pass-1 movement is ≤ (k+1)·partitions·|sources| summary rows; pass-2
-# shuffle carries only candidate keys.
-# ===========================================================================
-
-from crowdsorsa_etl_spark.queries._shared import _NORM_SQL
-
-_SRC_HH_SQL = f"""
-    WITH toks AS (
-      SELECT source AS g, unnest(string_split({_NORM_SQL}, ' ')) AS token
-      FROM documents
-    ),
-    t AS (SELECT g, token FROM toks WHERE token <> ''),
-    n AS (SELECT g, CAST(count(*) AS BIGINT) AS total FROM t GROUP BY g)
-    SELECT g, token, CAST(count(*) AS BIGINT) AS cnt
-    FROM t JOIN n USING (g)
-    GROUP BY g, token, n.total
-    HAVING count(*) >= greatest(CAST(ceil(0.02 * n.total) AS BIGINT), 1)
-    """
-
-
-@register("llm_source_heavy_hitters", _SRC_HH_SQL)
-def llm_source_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source ≥2%-share tokens via grouped MG + exact confirm."""
-    from crowdsorsa_etl_spark.operators.heavyhitters import (
-        heavy_hitters_grouped,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return heavy_hitters_grouped(
-        docs, "source", "text", capacity=64, min_share=0.02
     )
 
 
@@ -841,125 +717,6 @@ def q122_cusum_days(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("day") == F.col("peak_day"))
             ).alias("is_peak"),
         )
-    )
-
-
-# ===========================================================================
-# llm_kcore_filter — fixed-round k-core peel over the memoized LSH dup
-# graph: the density rung between CC ("reachable") and LPA ("densely
-# tied") — a doc chained in through ONE bridge edge is not 2-core, which
-# is the template-farm/spam-ring membership test. Same engine-portable
-# contract as LPA: synchronous rounds, fixed count, converged flag, SQL
-# oracle replaying every peel round as unrolled CTEs over the identical
-# portable-MinHash edge derivation. Scale: O(rounds·|E|) — one degree
-# agg + two semi-joins per round, lineage truncated, no force-broadcast
-# of the corpus-proportional keep list.
-# ===========================================================================
-
-_KCORE_K = 2
-_KCORE_ROUNDS = 4
-
-
-def _kcore_sql() -> str:
-    from crowdsorsa_etl_spark.lsh_oracles import kcore_sql
-
-    return kcore_sql(k=_KCORE_K, rounds=_KCORE_ROUNDS)
-
-
-@register("llm_kcore_filter", _kcore_sql())
-def llm_kcore_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core membership + core degree per dup-graph vertex."""
-    from crowdsorsa_etl_spark.operators.clusters import kcore_filter
-    from crowdsorsa_etl_spark.queries._shared import _lsh_pairs
-
-    return kcore_filter(
-        _lsh_pairs(spark, sf_dir).select("id_a", "id_b"),
-        k=_KCORE_K,
-        rounds=_KCORE_ROUNDS,
-    )
-
-
-# ===========================================================================
-# llm_neyman_allocation — optimal stratified-sample allocation (Neyman
-# 1934): n_h ∝ N_h·σ_h, the planning table that decides how many docs
-# each stratum contributes BEFORE llm_reservoir_sample_k draws them
-# (uniform allocation oversamples homogeneous strata). The identity
-# N_h·σ_h = sqrt(N_h·Σx² − (Σx)²) keeps the weight the square root of
-# ONE exact BIGINT — and IEEE-754 sqrt is correctly rounded (unlike ln),
-# so the per-stratum weight is BIT-IDENTICAL on both engines; weights
-# cross the sum as exact micro-unit BIGINTs and the allocation is one
-# division + round each. Scale: one map-side (stratum) agg carrying
-# (count, sum, sum-of-squares); everything after runs on |strata| rows.
-# DOMAIN BOUND (ADVICE r15): var_num = n_h·s2 − s1² is exact only while
-# n_h·max(n_chars)² ≤ 2^63 ≈ 9.2e18 — e.g. 1e9 docs capped at 3e4 chars
-# (9e17) fits; 1e9 docs × 1e5-char docs (1e19) does NOT. Past the bound
-# Spark wraps silently (non-ANSI) where DuckDB raises; re-derive via
-# DECIMAL(38,0) or centered sums before lifting the n_chars cap.
-# ===========================================================================
-
-_NEYMAN_S = 100
-
-_NEYMAN_SQL = f"""
-    WITH strata AS (
-      SELECT lang,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(n_chars) AS BIGINT) AS s1,
-             CAST(sum(n_chars * n_chars) AS BIGINT) AS s2
-      FROM documents GROUP BY lang
-    ),
-    w AS (
-      SELECT lang, n_docs,
-             CAST(n_docs * s2 - s1 * s1 AS BIGINT) AS var_num,
-             CAST(round(sqrt(CAST(n_docs * s2 - s1 * s1 AS DOUBLE))
-                        * 1000000.0) AS BIGINT) AS w_micro
-      FROM strata
-    ),
-    tot AS (SELECT CAST(sum(w_micro) AS BIGINT) AS wm FROM w)
-    SELECT lang, n_docs, var_num, w_micro,
-           CAST(round({_NEYMAN_S} * w_micro / CAST(wm AS DOUBLE))
-                AS BIGINT) AS alloc_n,
-           round(w_micro / CAST(wm AS DOUBLE), 6) AS share
-    FROM w, tot
-    """
-
-
-@register("llm_neyman_allocation", _NEYMAN_SQL)
-def llm_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language Neyman sample allocation for a 100-doc budget."""
-    docs = _t(spark, sf_dir, "documents")
-    strata = docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("s1"),
-        F.sum(F.col("n_chars") * F.col("n_chars"))
-        .cast("bigint")
-        .alias("s2"),
-    )
-    w = strata.select(
-        "lang",
-        "n_docs",
-        (F.col("n_docs") * F.col("s2") - F.col("s1") * F.col("s1"))
-        .cast("bigint")
-        .alias("var_num"),
-    ).withColumn(
-        "w_micro",
-        F.round(F.sqrt(F.col("var_num").cast("double")) * 1000000.0).cast(
-            "bigint"
-        ),
-    )
-    tot = w.agg(F.sum("w_micro").cast("bigint").alias("wm"))
-    return w.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        "n_docs",
-        "var_num",
-        "w_micro",
-        F.round(
-            F.lit(_NEYMAN_S) * F.col("w_micro") / F.col("wm").cast("double")
-        )
-        .cast("bigint")
-        .alias("alloc_n"),
-        F.round(F.col("w_micro") / F.col("wm").cast("double"), 6).alias(
-            "share"
-        ),
     )
 
 

@@ -350,3 +350,97 @@ def start_x_stream(spark, root, e):
 '''
     bad = _epoch_protocol_violations(src)
     assert len(bad) == 2 and "line 9" in bad[0] and "line 11" in bad[1], bad
+
+
+# --- query registry: one order list, one module per domain --------------
+
+QUERIES_DIR = os.path.join(PKG, "queries")
+
+
+def test_registry_order_is_the_canonical_list():
+    from crowdsorsa_etl_spark.queries import _ORDER, ORACLES, QUERIES
+
+    assert len(_ORDER) == len(set(_ORDER)) == 301
+    assert list(QUERIES) == _ORDER
+    assert list(ORACLES) == [n for n in _ORDER if n in ORACLES]
+
+
+def test_order_check_rejects_a_registered_but_unlisted_name():
+    import pytest
+
+    from crowdsorsa_etl_spark.queries import _apply_order
+
+    with pytest.raises(ImportError, match=r"not listed \['b'\]"):
+        _apply_order({"a": 1, "b": 2}, {}, ["a"])
+
+
+def test_order_check_rejects_a_listed_but_unregistered_name():
+    import pytest
+
+    from crowdsorsa_etl_spark.queries import _apply_order
+
+    with pytest.raises(ImportError, match=r"not registered \['c'\]"):
+        _apply_order({"a": 1, "b": 2}, {}, ["a", "b", "c"])
+
+
+def test_order_check_reorders_both_dicts_in_place():
+    from crowdsorsa_etl_spark.queries import _apply_order
+
+    queries = {"c": 3, "a": 1, "b": 2}
+    oracles = {"c": "C", "a": "A"}
+    _apply_order(queries, oracles, ["a", "b", "c"])
+    assert list(queries.items()) == [("a", 1), ("b", 2), ("c", 3)]
+    assert list(oracles.items()) == [("a", "A"), ("c", "C")]
+
+
+def _registry_layout_violations(qdir: str) -> list[str]:
+    """Modules named after the build round that added them (``round*``,
+    ``*_pack``) and function-level imports, for every module in ``qdir``."""
+    bad = []
+    for f in sorted(os.listdir(qdir)):
+        if not f.endswith(".py"):
+            continue
+        stem = f[:-3]
+        if stem.startswith("round") or stem.endswith("_pack"):
+            bad.append(f"{f}: round-named module")
+        with open(os.path.join(qdir, f)) as fh:
+            tree = ast.parse(fh.read())
+        local = {
+            sub.lineno
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for sub in ast.walk(node)
+            if isinstance(sub, (ast.Import, ast.ImportFrom))
+        }
+        bad += [f"{f}:{ln}: function-level import" for ln in sorted(local)]
+    return bad
+
+
+def test_query_modules_are_domains_with_hoisted_imports():
+    """Queries are grouped by what they compute and each module imports
+    its dependencies once, at the top."""
+    bad = _registry_layout_violations(QUERIES_DIR)
+    assert not bad, bad
+
+
+def test_registry_layout_guard_flags_round_modules_and_local_imports(tmp_path):
+    (tmp_path / "round9_pack.py").write_text("X = 1\n")
+    (tmp_path / "llm_pack.py").write_text("Y = 2\n")
+    (tmp_path / "sketches.py").write_text(
+        "import os\n\n\n"
+        "def q(spark, sf_dir):\n"
+        "    import json\n"
+        "    from os import path\n"
+        "\n"
+        "    def inner():\n"
+        "        import math\n"
+        "        return math.pi\n"
+        "    return json, path, inner\n"
+    )
+    assert _registry_layout_violations(str(tmp_path)) == [
+        "llm_pack.py: round-named module",
+        "round9_pack.py: round-named module",
+        "sketches.py:5: function-level import",
+        "sketches.py:6: function-level import",
+        "sketches.py:9: function-level import",
+    ]

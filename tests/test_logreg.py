@@ -52,7 +52,7 @@ class TestLogregFit:
         assert np.abs(w - want).max() < 1e-6
 
     def test_numpy_parity_on_fixture_features(self, spark):
-        from crowdsorsa_etl_spark.queries.round8d_pack import _qc_feature_exprs
+        from crowdsorsa_etl_spark.queries.curation import _qc_feature_exprs
 
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         feats = _qc_feature_exprs()

@@ -436,7 +436,7 @@ class TestRecordLinkage:
         """Every true pair (same custkey) must classify match or possible;
         heavy multi-perturbation rows land in 'possible', cross pairs in
         'nonmatch'."""
-        from crowdsorsa_etl_spark.queries.round11_pack import (
+        from crowdsorsa_etl_spark.queries.graph_er import (
             llm_record_linkage,
         )
 

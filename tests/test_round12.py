@@ -122,7 +122,7 @@ class TestMultipassLinkage:
         whose pass keys is mangled; the only permitted misses are records
         mangled in BOTH pass keys (k%12 == 0) — and those misses must
         actually exist (the residual is honest, not vacuous)."""
-        from crowdsorsa_etl_spark.queries.round12_pack import (
+        from crowdsorsa_etl_spark.queries.graph_er import (
             llm_record_linkage_multipass,
         )
 
@@ -394,7 +394,7 @@ class TestCdcChunkDedup:
 
 class TestClusterPolicy:
     def test_flag_propagates_to_every_member(self, spark):
-        from crowdsorsa_etl_spark.queries.round12_pack import (
+        from crowdsorsa_etl_spark.queries.dedup import (
             llm_cluster_policy,
         )
 
@@ -459,7 +459,7 @@ class TestStratifiedSplit:
 
 class TestDatasetCard:
     def test_shares_and_dup_rates_consistent(self, spark):
-        from crowdsorsa_etl_spark.queries.round12_pack import llm_dataset_card
+        from crowdsorsa_etl_spark.queries.curation import llm_dataset_card
 
         rows = llm_dataset_card(spark, "/root/testdata/sf0.001").collect()
         assert rows

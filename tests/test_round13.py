@@ -588,7 +588,7 @@ class TestPow2BucketParity:
     bucket to n itself at every power of two."""
 
     def test_exact_powers_of_two_bucket_to_themselves(self, spark):
-        from crowdsorsa_etl_spark.queries.round13_pack import _pow2_bucket
+        from crowdsorsa_etl_spark.queries.training_mix import _pow2_bucket
 
         ns = [2**k for k in (1, 2, 10, 29, 30, 31, 39)] + [1]
         df = spark.createDataFrame([(n,) for n in ns], "n long")
@@ -601,7 +601,7 @@ class TestPow2BucketParity:
         assert got == {n: n for n in ns}
 
     def test_non_powers_bucket_to_next_power(self, spark):
-        from crowdsorsa_etl_spark.queries.round13_pack import _pow2_bucket
+        from crowdsorsa_etl_spark.queries.training_mix import _pow2_bucket
 
         cases = {0: 1, 3: 4, 5: 8, 2**29 + 1: 2**30, 2**29 - 1: 2**29}
         df = spark.createDataFrame([(n,) for n in cases], "n long")

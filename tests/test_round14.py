@@ -13,7 +13,7 @@ class TestAnnRecallCurve:
         """Recall must be non-decreasing in the probe budget, and probing
         every list (n_probe = n_lists = 16) IS brute force — recall
         exactly 1.0, the curve's built-in sanity anchor."""
-        from crowdsorsa_etl_spark.queries.round14_pack import (
+        from crowdsorsa_etl_spark.queries.retrieval import (
             llm_ann_recall_curve,
         )
 

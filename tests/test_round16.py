@@ -754,7 +754,7 @@ class TestJlTransform:
         max bounded — the measured-loss contract; signs are a pure
         function of the seed so the matrix is identical across runs."""
         from crowdsorsa_etl_spark.queries import QUERIES
-        from crowdsorsa_etl_spark.queries.round16_pack import _jl_signs
+        from crowdsorsa_etl_spark.queries.retrieval import _jl_signs
 
         signs = _jl_signs()
         assert len(signs) == 16 and all(len(r) == 64 for r in signs)

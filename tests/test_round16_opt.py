@@ -73,7 +73,7 @@ class TestGlobalCumsumMulti:
         import duckdb
 
         from crowdsorsa_etl_spark.queries import ORACLES
-        from crowdsorsa_etl_spark.queries.round18_pack import _KS_GRID_CONF
+        from crowdsorsa_etl_spark.queries.drift import _KS_GRID_CONF
 
         con = duckdb.connect()
         con.execute(

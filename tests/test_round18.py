@@ -78,7 +78,7 @@ def test_novelty_matches_pure_python(spark, docs):
     import hashlib
 
     from crowdsorsa_etl_spark.queries import QUERIES
-    from crowdsorsa_etl_spark.queries.round18_pack import _NOVELTY_K
+    from crowdsorsa_etl_spark.queries.drift import _NOVELTY_K
 
     row = QUERIES["llm_ngram_novelty"](spark, SF_DIR).collect()[0]
 
@@ -129,7 +129,7 @@ def test_cusum_matches_pure_python(spark):
 
 def test_hill_matches_pure_python(spark, docs):
     from crowdsorsa_etl_spark.queries import QUERIES
-    from crowdsorsa_etl_spark.queries.round18_pack import _HILL_K
+    from crowdsorsa_etl_spark.queries.drift import _HILL_K
 
     row = QUERIES["llm_hill_tail"](spark, SF_DIR).collect()[0]
     counts: dict[str, int] = {}
@@ -179,7 +179,7 @@ def test_kcore_peels_bridges_keeps_cliques(spark):
 
 def test_neyman_matches_pure_python(spark, docs):
     from crowdsorsa_etl_spark.queries import QUERIES
-    from crowdsorsa_etl_spark.queries.round18_pack import _NEYMAN_S
+    from crowdsorsa_etl_spark.queries.training_mix import _NEYMAN_S
 
     out = {
         r["lang"]: r.asDict()

@@ -122,7 +122,7 @@ class TestGlobalCumsum:
 class TestShardAssignment:
     def test_shard_sizes_respect_budget_start_rule(self, spark):
         from crowdsorsa_etl_spark.queries import QUERIES
-        from crowdsorsa_etl_spark.queries.round8d_pack import _SHARD_BUDGET
+        from crowdsorsa_etl_spark.queries.lakehouse import _SHARD_BUDGET
 
         out = QUERIES["q108_shard_assignment"](spark, SF_DIR).collect()
         assert len(out) > 0
@@ -583,7 +583,7 @@ class TestQualityClassifier:
         import re
 
         from crowdsorsa_etl_spark.queries import QUERIES
-        from crowdsorsa_etl_spark.queries.round8d_pack import _QC_WEIGHTS
+        from crowdsorsa_etl_spark.queries.curation import _QC_WEIGHTS
 
         out = {
             r.doc_id: (r.logit, r.keep)

@@ -1,72 +1,9 @@
-"""CSV/JSON/binaryFile source connectors: explicit-schema roundtrips."""
+"""Parquet sink maintenance (compaction, upsert) and the malformed-record
+policy of Spark's text readers."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from crowdsorsa_etl_spark.sources.parquet import load_table
-from crowdsorsa_etl_spark.sources.text_files import (
-    read_binary_files,
-    read_csv,
-    read_json,
-)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-NATION_SCHEMA = T.StructType(
-    [
-        T.StructField("n_nationkey", T.IntegerType()),
-        T.StructField("n_name", T.StringType()),
-        T.StructField("n_regionkey", T.IntegerType()),
-    ]
-)
-
-
-class TestTextSources:
-    def test_csv_roundtrip(self, spark, tmp_path):
-        nation = load_table(spark, "nation", SF_DIR)
-        out = str(tmp_path / "nation_csv")
-        nation.write.option("header", True).csv(out)
-        back = read_csv(spark, out, NATION_SCHEMA)
-        assert back.schema == NATION_SCHEMA
-        assert sorted(r.n_name for r in back.collect()) == sorted(
-            r.n_name for r in nation.collect()
-        )
-
-    def test_csv_requires_schema_or_optin(self, spark, tmp_path):
-        with pytest.raises(ValueError, match="declare a schema"):
-            read_csv(spark, str(tmp_path))
-
-    def test_json_roundtrip(self, spark, tmp_path):
-        nation = load_table(spark, "nation", SF_DIR)
-        out = str(tmp_path / "nation_json")
-        nation.write.json(out)
-        back = read_json(spark, out, NATION_SCHEMA)
-        assert back.count() == nation.count()
-        assert back.schema == NATION_SCHEMA
-
-    def test_binary_files_source(self, spark, tmp_path):
-        (tmp_path / "a.bin").write_bytes(b"\x89IMG payload-a")
-        (tmp_path / "b.bin").write_bytes(b"\x89IMG payload-bb")
-        (tmp_path / "skip.txt").write_bytes(b"nope")
-        df = read_binary_files(spark, str(tmp_path), glob="*.bin")
-        rows = {r.path.rsplit("/", 1)[-1]: bytes(r.content) for r in df.collect()}
-        assert set(rows) == {"a.bin", "b.bin"}
-        assert rows["a.bin"].startswith(b"\x89IMG")
-
-    def test_binary_files_feed_multimodal_decode(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.operators.multimodal import decode_images
-
-        (tmp_path / "x.bin").write_bytes(b"\x89IMG" + b"z" * 100)
-        df = (
-            read_binary_files(spark, str(tmp_path), glob="*.bin")
-            .select(F.monotonically_increasing_id().alias("doc_id"),
-                    F.col("content").alias("payload"))
-        )
-        meta = decode_images(df, allow_fake=True).collect()
-        assert len(meta) == 1 and meta[0].format == "fake-img"
 
 
 class TestCompaction:
@@ -84,25 +21,6 @@ class TestCompaction:
         after = len(glob.glob(f"{path}/part-*.parquet"))
         assert n == 1 and after < before
         assert spark.read.parquet(path).count() == 4000
-
-
-class TestObservedMetrics:
-    def test_metrics_ride_the_action(self, spark):
-        from pyspark.sql import functions as F
-
-        from crowdsorsa_etl_spark.sinks.metrics import observed
-        from crowdsorsa_etl_spark.sources.parquet import load_table
-
-        docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-        out, obs = observed(
-            docs,
-            "ingest",
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("text").isNull().cast("int")).alias("null_texts"),
-        )
-        n = out.count()  # the ONE action; metrics piggyback on it
-        assert obs.get["rows"] == n
-        assert obs.get["null_texts"] == 0
 
 
 class TestUpsert:
@@ -129,40 +47,6 @@ class TestUpsert:
         upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")
         upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")  # replay
         assert spark.read.parquet(path).count() == 1
-
-
-class TestOrc:
-    def test_roundtrip_preserves_schema_and_rows(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.sources.text_files import read_orc, write_orc
-
-        li = load_table(spark, "lineitem", SF_DIR).limit(1000)
-        path = str(tmp_path / "li_orc")
-        write_orc(li, path)
-        back = read_orc(spark, path)
-        assert [(f.name, f.dataType) for f in back.schema.fields] == [
-            (f.name, f.dataType) for f in li.schema.fields
-        ]
-        assert back.count() == 1000
-
-    def test_orc_scan_pushes_filters_and_prunes_columns(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from crowdsorsa_etl_spark.sources.text_files import read_orc, write_orc
-
-        write_orc(
-            load_table(spark, "lineitem", SF_DIR), str(tmp_path / "li_orc2")
-        )
-        q = (
-            read_orc(spark, str(tmp_path / "li_orc2"))
-            .filter(F.col("l_quantity") > 40)
-            .select("l_orderkey", "l_quantity")
-        )
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters: [" in plan and "l_quantity" in plan.split(
-            "PushedFilters"
-        )[1][:200]
-        read_schema = plan.split("ReadSchema")[1][:200]
-        assert "l_orderkey" in read_schema and "l_extendedprice" not in read_schema
 
 
 class TestCorruptRecords:

@@ -7,7 +7,7 @@ Distills the length heuristic (n_chars >= 300 — the GPT-3-style
 "reference-vs-raw" supervision signal, here a deterministic rule so the
 label is reproducible) into the linear feature scorer by full-batch GD
 over the documents table, then prints the ``_QC_WEIGHTS`` literal block to
-paste into queries/round8d_pack.py. Deterministic: zero init, fixed
+paste into queries/curation.py. Deterministic: zero init, fixed
 step/iterations, sorted-fold gradient aggregation — rerunning on the same
 fixture reproduces the same literals.
 """
@@ -19,10 +19,7 @@ import sys
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.operators.logreg import logreg_fit_distributed
-from crowdsorsa_etl_spark.queries.round8d_pack import (
-    _QC_WEIGHTS,
-    _qc_feature_exprs,
-)
+from crowdsorsa_etl_spark.queries.curation import _QC_WEIGHTS, _qc_feature_exprs
 from crowdsorsa_etl_spark.session import get_spark
 from crowdsorsa_etl_spark.sources.parquet import load_table
 
