@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 __all__ = [
     "bpe_learn_merges",
@@ -161,7 +162,7 @@ def bpe_learn_merges(
       memory with incremental pair-count maintenance (Sennrich et al.'s
       reference trainer shape). One Spark job total; a 32k-merge production
       vocabulary is a driver loop, not 32k sequential cluster jobs.
-    - ``"distributed"``: one Spark job + localCheckpoint per merge. Only
+    - ``"distributed"``: one Spark job + ``materialize`` per merge. Only
       worthwhile when the word dictionary itself exceeds driver memory
       (dedup'd multi-language 100 TB corpora) — the wall-clock crossover
       strongly favors the driver loop everywhere else.
@@ -208,7 +209,7 @@ def bpe_learn_merges(
         ).limit(max_vocab_words)
     # each iteration's argmax job and each output branch rescan this —
     # pin the aggregated dictionary instead of re-reading the corpus
-    words = words.localCheckpoint()
+    words = materialize(words)
 
     if strategy == "auto":
         if max_vocab_words is not None:
@@ -243,9 +244,9 @@ def bpe_learn_merges(
         if not top:  # corpus exhausted (every word is a single symbol)
             break
         sym_a, sym_b = top[0]["pair"].split(" ")
-        cur = cur.select(
+        cur = materialize(cur.select(
             _apply_merge(F.col("rep"), sym_a, sym_b).alias("rep"), "cnt"
-        ).localCheckpoint()
+        ))
 
     out = best_rows[0]
     for b in best_rows[1:]:

@@ -54,6 +54,7 @@ from crowdsorsa_etl_spark.operators.bpe import (
     _learn_stage_sql,
     _stage_rewrite_sql,
 )
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 __all__ = [
     "bytebpe_learn",
@@ -141,7 +142,7 @@ def bytebpe_learn(
         words = words.orderBy(F.desc("cnt"), F.asc("rep")).limit(
             max_vocab_words
         )
-    words = words.localCheckpoint()
+    words = materialize(words)
     if max_vocab_words is None and words.count() > max_driver_words:
         raise ValueError(
             f"uncapped dictionary exceeds max_driver_words="

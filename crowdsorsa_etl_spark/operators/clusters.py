@@ -16,7 +16,7 @@ After MinHash-LSH/SimHash produce near-duplicate *pairs*, deduplication needs
 Scale properties: every iteration is a bounded number of shuffles (edge
 join + groupBy min + pointer join) on uniform vertex-id keys; the per-round
 convergence check is a driver-side ``count()`` of an O(1)-sized result.
-``localCheckpoint`` truncates the lineage each round so plans don't grow
+``materialize`` truncates the lineage each round so plans don't grow
 exponentially (the classic iterative-Spark trap).
 
 Not SQL-expressible in one query (DuckDB's RECURSIVE could do it, but the
@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 
 def connected_components(
     edges: DataFrame,
@@ -37,26 +39,17 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    reliable_checkpoints: bool = False,
 ) -> DataFrame:
     """Return (id, component) where component = min vertex id in the
     component. Edges are undirected; isolated vertices don't appear (join
     the corpus afterwards with a coalesce(component, id) for those).
-
-    ``reliable_checkpoints=True`` → loss-tolerant checkpoint() lineage
-    truncation (see operators/checkpointing.py).
     """
-    from crowdsorsa_etl_spark.operators.checkpointing import truncate_lineage
-
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
     # undirected → both directions once
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = truncate_lineage(
-        sym.filter(F.col("src") != F.col("dst")).distinct(),
-        reliable=reliable_checkpoints,
-    )
+    sym = materialize(sym.filter(F.col("src") != F.col("dst")).distinct())
 
     labels = (
         sym.select(F.col("src").alias("id"))
@@ -103,9 +96,8 @@ def connected_components(
         # count, once for the eager checkpoint) — r16 optimization, guide
         # §1.2/§2.4. Both sides of the change-count join are checkpointed,
         # so the extra job is a cheap bounded join, not a recompute.
-        new_labels = truncate_lineage(  # truncate lineage every round
-            doubled.select("id", F.col("new_component").alias("component")),
-            reliable=reliable_checkpoints,
+        new_labels = materialize(  # truncate lineage every round
+            doubled.select("id", F.col("new_component").alias("component"))
         )
         n_changed = (
             new_labels.join(
@@ -187,19 +179,19 @@ def incremental_components(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
-    lab = labels.select(
+    lab = materialize(labels.select(
         F.col("id").cast("long").alias("id"),
         F.col("component").cast("long").alias("component"),
-    ).localCheckpoint()
+    ))
 
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    resolved = nodes.join(lab, "id", "left").select(
+    resolved = materialize(nodes.join(lab, "id", "left").select(
         "id", F.coalesce(F.col("component"), F.col("id")).alias("lbl")
-    ).localCheckpoint()
+    ))
 
     r1 = resolved.withColumnRenamed("id", "src").withColumnRenamed(
         "lbl", "la"
@@ -242,7 +234,6 @@ def lpa_communities(
     src: str = "id_a",
     dst: str = "id_b",
     rounds: int = 4,
-    reliable_checkpoints: bool = False,
 ) -> DataFrame:
     """Seeded synchronous label propagation (Raghavan et al. 2007) over
     the dup graph: finer communities than connected components on dense
@@ -266,21 +257,16 @@ def lpa_communities(
 
     Scale: each round is exactly two uniform-key shuffles (label join on
     dst + count/argmax groupBy on src) — O(rounds * |E|) total work, no
-    transitive materialization; ``truncate_lineage`` per round keeps the
-    plan linear (the iterative-Spark trap, same discipline as
+    transitive materialization; ``materialize`` per round keeps the plan
+    linear (the iterative-Spark trap, same discipline as
     connected_components above).
     """
-    from crowdsorsa_etl_spark.operators.checkpointing import truncate_lineage
-
     e = edges.select(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     )
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = truncate_lineage(
-        sym.filter(F.col("src") != F.col("dst")).distinct(),
-        reliable=reliable_checkpoints,
-    )
+    sym = materialize(sym.filter(F.col("src") != F.col("dst")).distinct())
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -305,7 +291,7 @@ def lpa_communities(
                 (-F.col("best.neg_label")).cast("long").alias("label"),
             )
         )
-        labels = truncate_lineage(cnt, reliable=reliable_checkpoints)
+        labels = materialize(cnt)
     return labels
 
 
@@ -316,7 +302,6 @@ def kcore_filter(
     dst: str = "id_b",
     k: int = 2,
     rounds: int = 4,
-    reliable_checkpoints: bool = False,
 ) -> DataFrame:
     """Fixed-round k-core peel over the dup graph (Seidman 1983): drop
     vertices with degree < ``k``, recompute degrees over the surviving
@@ -335,12 +320,10 @@ def kcore_filter(
 
     Returns (id, core_deg, in_core, converged) for every vertex of the
     edge set. Scale: each round is one degree groupBy + two semi-joins
-    — O(rounds · |E|), no transitive state; ``truncate_lineage`` per
-    round keeps the plan linear (the iterative-Spark trap, same
-    discipline as connected_components/lpa_communities above).
+    — O(rounds · |E|), no transitive state; ``materialize`` per round
+    keeps the plan linear (the iterative-Spark trap, same discipline as
+    connected_components/lpa_communities above).
     """
-    from crowdsorsa_etl_spark.operators.checkpointing import truncate_lineage
-
     e = edges.select(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
@@ -348,10 +331,7 @@ def kcore_filter(
     sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    sym = truncate_lineage(
-        sym.filter(F.col("src") != F.col("dst")).distinct(),
-        reliable=reliable_checkpoints,
-    )
+    sym = materialize(sym.filter(F.col("src") != F.col("dst")).distinct())
     cur = sym
     prev_cnt = None
     for _ in range(rounds):
@@ -362,14 +342,13 @@ def kcore_filter(
             .select("src")
         )
         prev_cnt = cur
-        cur = truncate_lineage(
+        cur = materialize(
             # keep is vertex-count-sized (corpus-proportional) — the
             # join stays planner-chosen, never force-broadcast (the
             # LPA r14 lesson)
             cur.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-            .select("src", "dst"),
-            reliable=reliable_checkpoints,
+            .select("src", "dst")
         )
     converged = (
         cur.agg(F.count(F.lit(1)).alias("c_cur"))

@@ -32,6 +32,7 @@ from crowdsorsa_etl_spark.functions.portable_hash import (
 from crowdsorsa_etl_spark.functions.text import shingles
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 
 # Hash family selector. Default xxhash64 (fastest; Spark-only). With
@@ -221,9 +222,9 @@ def minhash_lsh_candidates(
     """
     # materialize signatures once — the a/b sides of the self-join would
     # otherwise each recompute the whole explode→window→agg pipeline
-    sig = minhash_signatures(
+    sig = materialize(minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_k, portable=portable
-    ).localCheckpoint()
+    ))
     banded = _banded(sig, num_hashes, bands, portable)
 
     # same-band-bucket self-join; dedup ordered pairs. The join key
@@ -361,9 +362,9 @@ def simhash_hamming_candidates(
     sig = (
         signatures
         if signatures is not None
-        else simhash_signatures(
+        else materialize(simhash_signatures(
             df, text_col, id_col, portable=portable
-        ).localCheckpoint()
+        ))
     )
 
     def band_bits(b: int):
@@ -646,13 +647,13 @@ def jaccard_verify_pairs(
     # fuzzy-decontamination plan up to 22 parquet scans / 40 explodes /
     # 24 exchanges (plans/r16/llm_fuzzy_decontamination_before.txt).
     # Both tables are candidate-bounded — small by LSH construction.
-    cand = cand.localCheckpoint()
+    cand = materialize(cand)
     ids = (
         cand.select(F.col("id_a").alias(id_col))
         .unionAll(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    toks = (
+    toks = materialize(
         docs.join(F.broadcast(ids), id_col, "left_semi")
         .select(
             F.col(id_col).alias("_tid"),
@@ -660,7 +661,6 @@ def jaccard_verify_pairs(
                 F.array_distinct(F.split(_norm(F.col(text_col)), " "))
             ).alias("tok"),
         )
-        .localCheckpoint()
     )
     sizes = toks.groupBy("_tid").agg(F.count(F.lit(1)).alias("_n"))
     inter = (
@@ -894,7 +894,7 @@ def lsh_match_index(
     ).withColumn(
         "pfx", F.pmod(F.col("bucket"), F.lit(bucket_prefixes)).cast("int")
     )
-    b = b.localCheckpoint()  # prefix collect + join reuse one computation
+    b = materialize(b)  # prefix collect + join reuse one computation
     pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
     corpus = spark.read.parquet(path.rstrip("/") + "/bands").filter(
         F.col("pfx").isin(pfxs)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.portable_hash import hex60_spark, hex60_sql
 from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 #: fixed-point scale for bucket log-ratios (6 dp — the registry rounding
 #: convention, expressed as an integer scale so sums stay exact)
@@ -202,10 +203,9 @@ def dsir_weights_onepass(
         id_col=id_col,
         extra_cols=["_is_t"],
     )
-    grid = (
+    grid = materialize(
         feats.groupBy("doc_id", "bucket", "_is_t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint()
     )
     stats = grid.groupBy("bucket").agg(
         F.sum(F.when(F.col("_is_t"), F.col("cnt")).otherwise(F.lit(0)))

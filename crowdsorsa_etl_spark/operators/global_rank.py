@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 _MID_SEQ_BITS = 33  # monotonically_increasing_id: pid << 33 | local_seq
 
 
@@ -45,7 +47,7 @@ def with_global_row_number(
     """Return (df + ``rn_col`` 1-based global row number, total row count).
 
     ``order_cols`` must be a deterministic unique ordering (tie-breaker
-    included). The input is materialized once (``localCheckpoint``) so the
+    included). The input is materialized once (``materialize``) so the
     range-sampled partitioning is identical between the counts job and the
     output job — without it a resample could shift partition boundaries
     between the two passes.
@@ -54,10 +56,10 @@ def with_global_row_number(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    part = (
+    part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
+        .withColumn("_mid", F.monotonically_increasing_id()),
         # lazy: the counts job below is the first action, so it both
         # computes and persists the blocks in one pass — an eager
         # checkpoint would add a separate materialize job plus a full
@@ -65,7 +67,7 @@ def with_global_row_number(
         # across every sketch/rank caller is long-tail fixed cost).
         # Determinism is unchanged: blocks are computed exactly once,
         # and the output job reads those same blocks.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     pid = F.shiftrightunsigned("_mid", _MID_SEQ_BITS)
     local_rn = F.col("_mid").bitwiseAND(F.lit((1 << _MID_SEQ_BITS) - 1)) + 1
@@ -160,13 +162,13 @@ def with_global_cumsum(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    part = (
+    part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
+        .withColumn("_mid", F.monotonically_increasing_id()),
         # lazy for the same reason as with_global_row_number: the sums
         # job materializes the blocks, the output job re-reads them
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     pid = F.shiftrightunsigned("_mid", _MID_SEQ_BITS)
 
@@ -229,13 +231,13 @@ def with_global_cumsum_multi(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    part = (
+    part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .withColumn("_mid", F.monotonically_increasing_id())
+        .withColumn("_mid", F.monotonically_increasing_id()),
         # lazy for the same reason as with_global_row_number: the sums
         # job materializes the blocks, the output job re-reads them
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     pid = F.shiftrightunsigned("_mid", _MID_SEQ_BITS)
 

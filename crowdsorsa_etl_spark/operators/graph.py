@@ -8,11 +8,11 @@ centrality ranks).
 
 Scale shape: each iteration is ONE shuffle (join ranks->edges on src, then
 group by dst). Ranks and edges are co-partitioned on the join key so AQE
-reuses the exchange; ``localCheckpoint`` every ``checkpoint_every``
-iterations truncates the lineage that otherwise grows linearly and stalls
-the scheduler around iteration ~20. The only driver-side values are N (one
-count) and the per-iteration dangling-mass sum (a 1-row aggregate) — both
-bounded scalars, never row collections.
+reuses the exchange; ``materialize`` after every iteration truncates the
+lineage that otherwise grows linearly and stalls the scheduler around
+iteration ~20. The only driver-side values are N (one count) and the
+per-iteration dangling-mass sum (a 1-row aggregate) — both bounded
+scalars, never row collections.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.operators.checkpointing import truncate_lineage
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 
 def pagerank(
@@ -30,8 +30,6 @@ def pagerank(
     dst_col: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
-    reliable_checkpoints: bool = False,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
@@ -40,27 +38,19 @@ def pagerank(
     + dangling_mass/N)``. Deterministic: fixed iteration count, pure
     double arithmetic, no sampling.
 
-    ``reliable_checkpoints=True`` truncates lineage with reliable
-    ``checkpoint()`` files instead of localCheckpoint, so an executor loss
-    at cluster scale recomputes from the last round's files instead of
-    failing the job (requires ``sparkContext.setCheckpointDir``; see
-    operators/checkpointing.py).
-
     Output: (node, rank) — ranks sum to 1 (up to fp rounding).
     """
     # materialize the (deduped) edge list once: every iteration's join
     # re-traverses its lineage otherwise, turning k iterations into k
     # re-scans of the source
-    e = truncate_lineage(
+    e = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct(),
-        reliable=reliable_checkpoints,
+        .distinct()
     )
-    nodes = truncate_lineage(
+    nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        reliable=reliable_checkpoints,
+        .distinct()
     )
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -68,9 +58,9 @@ def pagerank(
     ranked = nodes.join(
         deg, nodes.node == deg.src, "left"
     ).select("node", "deg", F.lit(1.0 / n).alias("rank"))
-    ranked = truncate_lineage(ranked, reliable=reliable_checkpoints)
+    ranked = materialize(ranked)
 
-    for i in range(iterations):
+    for _ in range(iterations):
         # dangling mass as a LAZY 1-row broadcast (not a driver collect):
         # nothing materializes until a checkpoint / the final action, so k
         # iterations cost O(1) jobs instead of k
@@ -91,14 +81,12 @@ def pagerank(
                 + F.col("_dangling") / n
             )
         )
-        ranked = (
+        ranked = materialize(
             ranked.select("node", "deg")
             .join(contribs, F.col("node") == contribs.dst, "left")
             .crossJoin(F.broadcast(dang))
             .select("node", "deg", new_rank.alias("rank"))
         )
-        if (i + 1) % checkpoint_every == 0 or i == iterations - 1:
-            ranked = truncate_lineage(ranked, reliable=reliable_checkpoints)
 
     return ranked.select("node", F.col("rank").cast("double"))
 

@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 __all__ = ["logreg_fit_distributed", "logreg_first_step"]
 
 
@@ -104,7 +106,7 @@ def logreg_fit_distributed(
     intercept (standard). Deterministic — see module docstring."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    xy = _assemble(df, feature_cols, label_col).localCheckpoint()
+    xy = materialize(_assemble(df, feature_cols, label_col))
     d = len(feature_cols) + 1
     w = np.zeros(d)
     for _ in range(iterations):

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.functions import imagecodec
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 # Malformed payloads that pass the magic-byte sniff can surface as any of
 # these from the stdlib codec (corrupt IDAT → zlib.error, truncated headers
@@ -581,9 +582,9 @@ def image_ahash_dups(
         raise ValueError(
             f"pigeonhole needs 0 <= max_hamming < {_AHASH_BANDS}"
         )
-    sig = image_ahash(
+    sig = materialize(image_ahash(
         df, payload_col=payload_col, id_col=id_col
-    ).filter(F.col("bands").isNotNull()).localCheckpoint()
+    ).filter(F.col("bands").isNotNull()))
     banded = sig.select(
         F.col("doc_id").alias("id"),
         F.posexplode("bands").alias("band", "v"),
@@ -914,7 +915,7 @@ def band_signature_dups(
             .select("bands")
         )
         sig = sig.join(keep, "bands", "left_semi")
-    sig = sig.localCheckpoint()
+    sig = materialize(sig)
     n_sigs = sig.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n")
     )
@@ -1098,12 +1099,12 @@ def image_index_match(
         raise ValueError(
             f"pigeonhole needs 0 <= max_hamming < {_AHASH_BANDS}"
         )
-    b = _ahash_banded_rows(
+    b = materialize(_ahash_banded_rows(
         batch,
         payload_col=payload_col,
         id_col=id_col,
         bucket_prefixes=bucket_prefixes,
-    ).localCheckpoint()  # prefix collect + join reuse one computation
+    ))  # prefix collect + join reuse one computation
     pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
     corpus = spark.read.parquet(path.rstrip("/") + "/bands").filter(
         F.col("pfx").isin(pfxs)

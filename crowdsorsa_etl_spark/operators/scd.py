@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 
 def scd2_build(
     changes: DataFrame,
@@ -158,7 +160,7 @@ def scd2_apply_batch(
                 "place (its contents are the last complete table) before "
                 "applying more batches"
             )
-        out = scd2_build(events, tie_break_cols=ties, **build_kw).localCheckpoint()
+        out = materialize(scd2_build(events, tie_break_cols=ties, **build_kw))
         out.write.mode("overwrite").parquet(versions_dir)
         return out
 

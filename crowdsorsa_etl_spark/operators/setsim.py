@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 __all__ = ["shingle_sets", "setsim_prefix_join", "editdist_join"]
 
@@ -118,9 +119,9 @@ def setsim_prefix_join(
     # the shingle table feeds the rank window AND both verify sides —
     # pin it once instead of re-running the explode+distinct three times
     # (at cluster scale: persist to storage rather than executor memory)
-    sh = shingle_sets(
+    sh = materialize(shingle_sets(
         df, text_col=text_col, id_col=id_col, shingle_k=shingle_k
-    ).localCheckpoint()
+    ))
 
     # global canonical order: rare shingles first (minimizes prefix-join
     # fan-out). The frequency attaches via a window over the shingle key —
@@ -193,7 +194,7 @@ def setsim_prefix_join(
     # pair row, and counts the intersection in codegen. n_common is
     # identical: sh is distinct per id, and array_intersect returns the
     # distinct common elements.
-    cand = cand.localCheckpoint()
+    cand = materialize(cand)
     cand_ids = (
         cand.select(F.col("id_a").alias("id"))
         .union(cand.select(F.col("id_b").alias("id")))

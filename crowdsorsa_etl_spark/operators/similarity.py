@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -532,12 +534,12 @@ def embedding_cosine_pairs_lsh(
     # re-run the projection UDF otherwise
     from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
-    bucketed = emb.select(
+    bucketed = materialize(emb.select(
         F.col(id_col).alias("id"),
         F.posexplode(
             srp_buckets_arrow(F.col(vec_col), dim, n_tables, n_bits)
         ).alias("table", "bucket"),
-    ).localCheckpoint()
+    ))
     # widen the CHECKPOINTED bucket table (fixed-width rows, no vectors)
     # so the banded self-join + pair dedup probe in parallel instead of
     # on the scan's split count — at fixture scale the embeddings file is
@@ -932,7 +934,7 @@ def ivf_topk_curve(
         "query_id long, _qv array<float>",
     ).withColumn("_qn", l2_norm(F.col("_qv")))
 
-    scored = (
+    scored = materialize(  # score once; every budget's window reuses it
         # corpus-side norm hoisted below the probe joins (see ivf_topk):
         # one fold per corpus vector, not one per (query, candidate) pair
         assigned.withColumn("_nn", l2_norm(F.col(vec_col)))
@@ -949,7 +951,6 @@ def ivf_topk_curve(
         )
         .select("query_id", F.col(id_col).alias("neighbor_id"),
                 "cosine", "probe_rank")
-        .localCheckpoint()  # score once; every budget's window reuses it
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -1237,7 +1238,7 @@ def bitext_margin_pairs(
         F.col(vec_col).alias("_tv"),
         l2_norm(F.col(vec_col)).alias("_tn"),
     )
-    scored = (
+    scored = materialize(
         s.join(F.broadcast(t))
         .withColumn(
             "cosine",
@@ -1255,7 +1256,6 @@ def bitext_margin_pairs(
         )
         # both windows and the final argmax rescan the scored cross —
         # materialize the (bounded) score matrix once
-        .localCheckpoint()
     )
     wf = Window.partitionBy("src_id").orderBy(
         F.col("c6").desc(), F.col("tgt_id").asc()

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.operators.checkpointing import truncate_lineage
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.global_rank import with_global_row_number
 from crowdsorsa_etl_spark.operators.substring import _token_array
 
@@ -73,11 +73,11 @@ def suffix_ranks(
     up to ties between textually identical suffixes. Every table is
     lineage-truncated (reused by the LCP descend).
     """
-    tok = truncate_lineage(_token_positions(df, id_col, text_col))
+    tok = materialize(_token_positions(df, id_col, text_col))
     vocab, _ = with_global_row_number(
         tok.select("tok").distinct(), [F.col("tok")], rn_col="_r"
     )
-    cur = truncate_lineage(
+    cur = materialize(
         tok.join(vocab, "tok").select(
             "id", "pos", (F.col("_r") - 1).cast("bigint").alias("rank")
         )
@@ -101,7 +101,7 @@ def suffix_ranks(
             [F.col("rank"), F.col("rank2")],
             rn_col="_r",
         )
-        cur = truncate_lineage(
+        cur = materialize(
             paired.join(keys, ["rank", "rank2"]).select(
                 "id", "pos", (F.col("_r") - 1).cast("bigint").alias("rank")
             )
@@ -170,7 +170,7 @@ def _adjacent_lcp(tables: list[DataFrame], final: DataFrame) -> DataFrame:
             & F.col("_rb").isNotNull()
             & (F.col("_ra") == F.col("_rb"))
         )
-        pairs = truncate_lineage(
+        pairs = materialize(
             j.select(
                 "a_id",
                 "a_pos",

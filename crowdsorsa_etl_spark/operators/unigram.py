@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 MAX_PIECE_LEN = 4
 MIN_COUNT = 2
@@ -509,7 +510,7 @@ def unigram_train(
 
     Scale shape: the corpus is scanned and word-aggregated exactly ONCE
     per train call — the (w, cnt) dictionary (Zipf-bounded) materializes
-    via ``localCheckpoint`` and feeds the seed pass and every EM round
+    via ``materialize`` and feeds the seed pass and every EM round
     (r16: the earlier form re-ran the corpus explode + word groupBy per
     round, 1 + n_rounds full corpus passes for identical dictionaries).
     Each round is then ONE distributed E-step over the dictionary (the
@@ -525,7 +526,7 @@ def unigram_train(
     if not (0.0 <= prune_alpha < 1.0):
         raise ValueError(f"prune_alpha must be in [0, 1), got {prune_alpha}")
     spark = docs.sparkSession
-    wc = word_counts(docs, text_col=text_col, id_col=id_col).localCheckpoint()
+    wc = materialize(word_counts(docs, text_col=text_col, id_col=id_col))
     vocab = {
         r["piece"]: r["cnt"]
         for r in unigram_seed_vocab(

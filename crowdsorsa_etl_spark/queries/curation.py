@@ -19,6 +19,7 @@ from crowdsorsa_etl_spark.functions.text import (
     quality_score,
     token_count,
 )
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.curation import (
     assign_split,
     entropy_signals,
@@ -1369,7 +1370,7 @@ def llm_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes each range-sort it independently, and without the checkpoint
     # each pass re-ran the KN-score read + the classifier's feature
     # extraction from scratch.
-    joined = lm.join(qc, "doc_id").localCheckpoint()
+    joined = materialize(lm.join(qc, "doc_id"))
     r1, _ = with_global_row_number(
         joined, [F.col("avg_logprob").asc(), F.col("doc_id").asc()],
         rn_col="r1",

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark import lsh_oracles
 from crowdsorsa_etl_spark.functions.text import normalize_text
 from crowdsorsa_etl_spark.lsh_oracles import lsh_audit_sql
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.clusters import (
     connected_components,
     incremental_components,
@@ -976,14 +977,14 @@ def llm_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters) under the keep-min-id rule."""
     docs = _t(spark, sf_dir, "documents")
     nt = normalize_text(F.col("text"))
-    toks = docs.select(
+    toks = materialize(docs.select(
         "doc_id",
         F.when(nt == "", F.lit(0))
         .otherwise(F.size(F.split(nt, " ")))
         .cast("bigint")
         .alias("n_tokens"),
         F.md5(nt).alias("fp"),
-    ).localCheckpoint()
+    ))
     w = Window.partitionBy("fp")
     exact = toks.select(
         F.lit("exact").alias("tier"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum_multi
 from crowdsorsa_etl_spark.operators.kll import kll_cells_grouped, kll_grouped_sql
 from crowdsorsa_etl_spark.operators.substring import _NORM
@@ -241,21 +242,6 @@ _KS_SQL = """
     """
 
 
-#: conf key selecting the KS grid-cumsum plan. ``twophase`` (default,
-#: VERDICT r16 next-#4) routes through
-#: operators/global_rank.with_global_cumsum_multi (one range exchange +
-#: per-partition windows + a bounded driver offset fold) so the DEFAULT
-#: plan carries NO unpartitioned window — the metric's value domain is
-#: unbounded in general, and a single-partition grid cumsum is the one
-#: stage that cannot scale. ``window`` remains the escape hatch for
-#: metrics known to be bucketed/aggregate-sized, where the two-phase
-#: path's fixed jobs (range sample + offset collect; ~0.6 s at sf0.1
-#: after the lazy-checkpoint + pre-materialized-grid trims) are pure
-#: overhead. Both paths produce the identical hash-oracled output,
-#: gated by tests/test_round16_opt.py.
-_KS_GRID_CONF = "spark.crowdsorsa.grid_cumsum"
-
-
 @register("q121_ks_drift", _KS_SQL)
 def q121_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS statistic on n_chars between the parity halves."""
@@ -268,43 +254,23 @@ def q121_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("b"),
     )
-    mode = spark.conf.get(_KS_GRID_CONF, "twophase")
-    if mode == "twophase":
-        # materialize the (bounded, one row per distinct value) grid so
-        # the range exchange's sampling pass reads blocks instead of
-        # re-running the documents scan + aggregation
-        cum, (na, nb) = with_global_cumsum_multi(
-            grid.localCheckpoint(eager=False),
-            [F.col("v")],
-            ["a", "b"],
-            cum_cols=["ca", "cb"],
-        )
-        # grand totals fall out of the offset fold as exact BIGINTs and
-        # enter as literals; integer arithmetic matches the window path
-        dev = cum.select(
-            "v",
-            F.abs(F.col("ca") * F.lit(nb) - F.col("cb") * F.lit(na)).alias(
-                "d"
-            ),
-            F.lit(na).cast("bigint").alias("na"),
-            F.lit(nb).cast("bigint").alias("nb"),
-        )
-    else:
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-        wall = Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        dev = grid.select(
-            "v",
-            (
-                F.abs(
-                    F.sum("a").over(w) * F.sum("b").over(wall)
-                    - F.sum("b").over(w) * F.sum("a").over(wall)
-                )
-            ).alias("d"),
-            F.sum("a").over(wall).cast("bigint").alias("na"),
-            F.sum("b").over(wall).cast("bigint").alias("nb"),
-        )
+    # materialize the (bounded, one row per distinct value) grid so
+    # the range exchange's sampling pass reads blocks instead of
+    # re-running the documents scan + aggregation
+    cum, (na, nb) = with_global_cumsum_multi(
+        materialize(grid, eager=False),
+        [F.col("v")],
+        ["a", "b"],
+        cum_cols=["ca", "cb"],
+    )
+    # grand totals fall out of the offset fold as exact BIGINTs and
+    # enter as literals; integer arithmetic matches the oracle's windows
+    dev = cum.select(
+        "v",
+        F.abs(F.col("ca") * F.lit(nb) - F.col("cb") * F.lit(na)).alias("d"),
+        F.lit(na).cast("bigint").alias("na"),
+        F.lit(nb).cast("bigint").alias("nb"),
+    )
     mx = dev.agg(F.max("d").alias("dmax"))
     return (
         dev.crossJoin(F.broadcast(mx))

@@ -18,6 +18,7 @@ from crowdsorsa_etl_spark.operators.bloom import (
     bloom_prune_sql,
 )
 from crowdsorsa_etl_spark.operators.bpe import bpe_mask_forget_sql as _mask_sql
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.curation import (
     mask_doc_spans,
     pack_token_sequences,
@@ -106,7 +107,7 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE explode + ONE (doc_id, s) distinct for BOTH sides (r16, guide
     # §2.4): the bench and train branches previously each re-ran the
     # scan + interpreted-HOF shingle explode + their own distinct. The
-    # distinct-pairs table is materialized once (localCheckpoint) and the
+    # distinct-pairs table is materialized once (``materialize``) and the
     # eval side derives from it (distinct-of-distinct and filter-on-doc_id
     # commute, so both sides are row-identical to the old plan).
 
@@ -114,11 +115,10 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the interpreted shingle HOF + the distinct's partial aggregation on
     # ONE task — 6.2 s of the query's cold 10.6 s profile (r16, guide
     # §2.2); round-robin is a no-op at cluster scale
-    pairs = (
+    pairs = materialize(
         cpu_fanout(docs.select("doc_id", "text"))
         .select("doc_id", F.explode(shingles(F.col("text"), 5)).alias("s"))
         .distinct()
-        .localCheckpoint()
     )
     bench = (
         pairs.where(F.col("doc_id") % 97 == 0)

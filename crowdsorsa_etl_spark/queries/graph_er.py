@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark import lsh_oracles
 from crowdsorsa_etl_spark.lsh_oracles import kcore_sql, lpa_sql
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.clusters import (
     connected_components,
     kcore_filter,
@@ -532,7 +533,7 @@ def llm_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list AND both node-union branches — without this each
     # reference re-ran the full F-S blocking + scoring pipeline. Match
     # pairs are the bounded output of the blocking join.
-    m = pairs.select("c_custkey", "d_custkey").localCheckpoint()
+    m = materialize(pairs.select("c_custkey", "d_custkey"))
     edges = m.select(
         (F.col("c_custkey") * 2).alias("id_a"),
         (F.col("d_custkey") * 2 + 1).alias("id_b"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.diff import table_diff
 from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
@@ -142,9 +143,9 @@ def q52_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = os.path.join(tmp, "seasons")
         season1.write.parquet(base)
         season2.write.mode("append").parquet(base)
-        return read_evolved(
+        return materialize(read_evolved(
             spark, base, target, rename_map={"id": "doc_id", "body": "text"}
-        ).localCheckpoint()
+        ))
 
 
 @register(
@@ -552,7 +553,7 @@ def q91_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark only injects it when the creation side is too big to broadcast
 # (otherwise a broadcast join already avoids the fact shuffle) — true at
 # cluster scale, never at test-fixture scale. The query therefore scopes
-# {broadcast off, bloom on} around its own materialization (localCheckpoint
+# {broadcast off, bloom on} around its own materialization (``materialize``
 # runs the bloom plan inside the scope) and restores the session confs, so
 # no other query's plan is perturbed. The plan assertion lives in
 # tests/test_plans.py; the oracle is the plain join semantics (the filter is
@@ -627,7 +628,7 @@ def q96_bloom_join_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "runtime bloom filter was not injected — the query exists to "
                 "exercise that plan; check the scoped confs"
             )
-        return df.localCheckpoint()  # materialize INSIDE the conf scope
+        return materialize(df)  # materialize INSIDE the conf scope
     finally:
         _restore_confs(spark, saved)
 
@@ -814,13 +815,12 @@ def q100_scd2_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, vd, bd, b2, max_delay_seconds=delay_s, **kw
         )
         scd2_flush_buffer(spark, vd, bd, **kw)
-        return (
+        return materialize(
             spark.read.parquet(vd)
             .select(
                 "user_id", "event_type", "valid_from", "valid_to",
                 "version", "is_current",
             )
-            .localCheckpoint()
         )
 
 

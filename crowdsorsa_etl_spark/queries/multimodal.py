@@ -23,6 +23,7 @@ from crowdsorsa_etl_spark.functions.url import (
     registered_domain,
     url_host,
 )
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.dedup import minhash_lsh_candidates
 from crowdsorsa_etl_spark.operators.multimodal import (
     attach_avi_payload,
@@ -123,7 +124,7 @@ def llm_multimodal_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram → projection → float32 quantization → cosine re-rank end to
     end (lsh_oracles.multimodal_embed_topk_sql)."""
     docs = _t(spark, sf_dir, "documents")
-    emb = extract_features(attach_binary_payload(docs), dim=16).localCheckpoint()
+    emb = materialize(extract_features(attach_binary_payload(docs), dim=16))
     return cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=5)
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.operators.asof import asof_join
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.topk import sessionize, topk_per_group
 from crowdsorsa_etl_spark.queries._shared import _t, register
 
@@ -1156,7 +1157,7 @@ def q88_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     f_orders = orders.filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
-    late = (
+    late = materialize(
         li.join(f_orders, li.l_orderkey == f_orders.o_orderkey)
         .filter(
             F.col("l_shipdate")
@@ -1171,7 +1172,6 @@ def q88_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         # serve them and the lineitem⋈orders join ran twice (r16 profile:
         # two same-sized stages). Bounded by distinct (order, supplier)
         # pairs; at 100 TB recomputing it is a full extra fact-table join.
-        .localCheckpoint()
     )
     all_pairs = li.select("l_orderkey", "l_suppkey").distinct()
 

@@ -22,6 +22,7 @@ from crowdsorsa_etl_spark.operators.bm25 import (
     bm25_write_index,
     rrf_fuse,
 )
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.chunking import chunk_documents
 from crowdsorsa_etl_spark.operators.pca import embedding_covariance
 from crowdsorsa_etl_spark.operators.pq import (
@@ -610,7 +611,7 @@ def llm_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = f"{root}/i"
         bm25_append_index(docs.filter(F.col("doc_id") % 10 == 0), path)
         qdf = spark.createDataFrame(_BM25_QUERIES, "query_id int, text string")
-        return bm25_query_index(spark, path, qdf, k=10).localCheckpoint()
+        return materialize(bm25_query_index(spark, path, qdf, k=10))
 
 
 # ===========================================================================

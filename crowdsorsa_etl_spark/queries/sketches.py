@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark import lsh_oracles
 from crowdsorsa_etl_spark.functions.portable_hash import hex60_spark, hex60_sql
 from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.cmsketch import (
     _tokens,
     count_min_estimate,
@@ -231,7 +232,7 @@ def q92_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gated in tests/test_operators.py); the driver hash gate pins the
     exact cell layout against DuckDB."""
     docs = _t(spark, sf_dir, "documents")
-    sketch = count_min_sketch(docs).localCheckpoint()
+    sketch = materialize(count_min_sketch(docs))
     exact = (
         _tokens(docs, "text")
         .groupBy("token")

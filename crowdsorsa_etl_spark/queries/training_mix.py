@@ -17,6 +17,7 @@ from crowdsorsa_etl_spark.functions.text import (
 )
 from crowdsorsa_etl_spark.operators.bpe import bpe_pack_sequences_sql as _pack_sql
 from crowdsorsa_etl_spark.operators.bpe import bpe_provenance_sql as _prov_sql
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.curation import (
     assign_split,
     epoch_upsample,
@@ -961,7 +962,7 @@ def llm_source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch factor at a budget equal to the corpus token total."""
     docs = _t(spark, sf_dir, "documents")
     nt = normalize_text(F.col("text"))
-    per = (
+    per = materialize(
         docs.select(
             "source",
             F.when(nt == "", F.lit(0))
@@ -977,7 +978,6 @@ def llm_source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the per-source frame is O(sources) rows; cutting lineage here
         # means the corpus scan + tokenize runs ONCE, not once per use
         # (per feeds both the fold row and the final projection)
-        .localCheckpoint()
     )
     tot = per.agg(
         F.aggregate(
@@ -1109,7 +1109,7 @@ def llm_shuffle_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_store_append(
             b2, f"{root}/s", shard_docs=_INCR_SHARD_DOCS, seed=_SHUF_SEED
         )
-        return shard_manifest(spark, f"{root}/s").localCheckpoint()
+        return materialize(shard_manifest(spark, f"{root}/s"))
 
 
 # ===========================================================================

@@ -166,11 +166,3 @@ MUNICIPALITY_KEY = T.StructType(
         T.StructField("municipality_name_fi", T.StringType(), False),
     ]
 )
-
-TAXON_KEY = T.StructType(
-    [
-        T.StructField("taxon", T.StringType(), False),
-        T.StructField("taxon_id", T.StringType(), False),
-        T.StructField("season", T.IntegerType(), False),
-    ]
-)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.config import SinkConfig
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -251,18 +252,18 @@ def push_documents_idempotent(
     settled_prior = settled_batch_slice(seen, batch, key_col)
     fresh = batch
     if settled_prior is not None:
-        settled_prior = settled_prior.localCheckpoint()  # batch-bounded
+        settled_prior = materialize(settled_prior)  # batch-bounded
         fresh = batch.join(
             F.broadcast(settled_prior.select(key_col)), key_col, "left_anti"
         )
-    audit = push_documents(
+    audit = materialize(push_documents(
         fresh,
         cfg,
         key_col=key_col,
         json_col=json_col,
         dedup=True,
         num_partitions=num_partitions,
-    ).localCheckpoint()  # materialize: the POSTs must happen exactly once
+    ))  # materialize: the POSTs must happen exactly once
     permanent_4xx = (
         F.col("status_code").between(400, 499)
         & ~F.col("status_code").isin(sorted(TRANSIENT_4XX))
@@ -276,7 +277,7 @@ def push_documents_idempotent(
     ledger_rows = epoch_ledger_rows(settled_now, settled_prior, batch, key_col)
     # cut lineage before overwriting a path the plan reads from
     (
-        ledger_rows.localCheckpoint()
+        materialize(ledger_rows)
         .write.mode("overwrite")
         .parquet(f"{ledger_dir}/epoch={epoch_id}")
     )

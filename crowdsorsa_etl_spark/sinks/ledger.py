@@ -25,7 +25,7 @@ cost must NOT grow with stream age. Three mechanisms keep it flat:
 * ``settled_batch_slice`` extracts the ONLY part of the ledger a batch
   needs — rows whose key occurs in the batch — with a broadcast semi-join:
   the (huge) ledger side is scanned but never shuffled, and the result is
-  bounded by batch size, safe to ``localCheckpoint``. Consumers must
+  bounded by batch size, safe to ``materialize``. Consumers must
   never materialize or shuffle the full ``seen`` frame;
 * the full-ledger ``dropDuplicates`` that used to run on every read (a
   per-batch shuffle of the entire history) is gone: semi/anti joins are

@@ -23,7 +23,6 @@ from crowdsorsa_etl_spark.schemas import (
     MUNICIPALITY_KEY,
     OBSERVATIONS_2023,
     OBSERVATIONS_2024,
-    TAXON_KEY,
 )
 
 #: Statistics Finland municipality codes, FULL 2023 classification (public
@@ -231,10 +230,3 @@ def observations_2024(spark: SparkSession, n: int = 200, seed: int = 11) -> Data
 def municipality_dim(spark: SparkSession) -> DataFrame:
     """The broadcast dimension replacing geofi::municipality_key_2023."""
     return spark.createDataFrame(MUNICIPALITIES, MUNICIPALITY_KEY)
-
-
-def taxon_dim(spark: SparkSession) -> DataFrame:
-    rows = [(k, v, 2023) for k, v in TAXA_2023.items()] + [
-        (k, v, 2024) for k, v in TAXA_2024.items()
-    ]
-    return spark.createDataFrame(rows, TAXON_KEY)

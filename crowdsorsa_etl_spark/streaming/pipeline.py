@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.config import SinkConfig
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.sinks.http_push import push_documents
 
 #: physical schema of events.parquet (ts is INT64 TIMESTAMP(NANOS) — read as
@@ -502,11 +503,11 @@ def start_curation_stream(
         )
         settled_prior = settled_batch_slice(seen, kept.select("_md5"), "_md5")
         if settled_prior is not None:
-            settled_prior = settled_prior.localCheckpoint()
+            settled_prior = materialize(settled_prior)
             fresh = fresh.join(
                 F.broadcast(settled_prior), "_md5", "left_anti"
             )
-        fresh = fresh.localCheckpoint()  # one evaluation feeds sink + ledger
+        fresh = materialize(fresh)  # one evaluation feeds sink + ledger
 
         chunk_documents(
             fresh,
@@ -551,9 +552,9 @@ def start_curation_stream(
         # duplicate window: a crash between the chunk append and this write
         # re-appends one epoch's chunks on replay — dedupe downstream on
         # (doc, chunk) or use the snapshot sink for a stricter contract.
-        epoch_ledger_rows(
+        materialize(epoch_ledger_rows(
             fresh.select("_md5"), settled_prior, kept.select("_md5"), "_md5"
-        ).localCheckpoint().write.mode("overwrite").parquet(
+        )).write.mode("overwrite").parquet(
             f"{ledger_dir}/epoch={epoch_id}"
         )
         if compact_every and epoch_id % compact_every == compact_every - 1:
@@ -1163,7 +1164,7 @@ def start_sequence_pack_stream(
         if batch_df.isEmpty():
             return
         seqs_done, carry = _carried_state(int(epoch_id))
-        d = (
+        d = materialize(
             bpe_encode_ids(
                 batch_df,
                 merges,
@@ -1181,7 +1182,6 @@ def start_sequence_pack_stream(
             # partitioner samples its input, which would otherwise re-run
             # the whole encode chain per downstream job (the batch-side
             # llm_token_id_shards fix, applied to every trigger here)
-            .localCheckpoint()
         )
         base = seqs_done * max_len + len(carry)
         cum = with_global_cumsum(d, [F.col(id_col)], "_n", cum_col="_cum")
@@ -1199,7 +1199,7 @@ def start_sequence_pack_stream(
                     "_gpos long, _id int",
                 )
             )
-        seqs = (
+        seqs = materialize(
             tok.groupBy(
                 # integer DIV, not floor(double /): exact past 2^53 tokens
                 F.expr(f"_gpos DIV {int(max_len)}")
@@ -1213,7 +1213,6 @@ def start_sequence_pack_stream(
                     lambda s: s["_id"],
                 ).alias("ids"),
             )
-            .localCheckpoint()
         )
         (
             seqs.filter(F.col("seq_len") == max_len)
@@ -1655,12 +1654,12 @@ def start_image_dedup_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        b = _ahash_banded_rows(
+        b = materialize(_ahash_banded_rows(
             batch_df,
             payload_col=payload_col,
             id_col=id_col,
             bucket_prefixes=bucket_prefixes,
-        ).localCheckpoint()
+        ))
         bands_root = index_path.rstrip("/") + "/bands"
         out_path = os.path.join(out_dir, f"epoch={e}")
         if _epochs(bands_root):
@@ -1767,7 +1766,7 @@ def start_linkage_stream(
         if batch_df.isEmpty():
             return
         e = int(epoch_id)
-        batch = batch_df.localCheckpoint()
+        batch = materialize(batch_df)
         clean = spark_active.read.parquet(clean_path)
         pruned = None
         for keys in block_passes:

@@ -25,6 +25,8 @@ from __future__ import annotations
 import ast
 import os
 
+from crowdsorsa_etl_spark.operators.checkpointing import materialize
+
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "crowdsorsa_etl_spark")
 
@@ -444,3 +446,96 @@ def test_registry_layout_guard_flags_round_modules_and_local_imports(tmp_path):
         "sketches.py:6: function-level import",
         "sketches.py:9: function-level import",
     ]
+
+
+# --- one materialization point: operators/checkpointing.materialize ------
+
+CHECKPOINTING = os.path.join(PKG, "operators", "checkpointing.py")
+
+
+def _materialization_violations(src: str) -> list[str]:
+    """Direct ``.localCheckpoint(`` / ``.checkpoint(`` calls and any
+    ``reliable_checkpoints`` identifier (the per-call loss-tolerance flag
+    the session's checkpoint dir replaced)."""
+    bad = []
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ):
+            bad.append((node.lineno, f"direct .{node.func.attr}("))
+        name = (
+            getattr(node, "id", None)
+            or getattr(node, "arg", None)
+            or getattr(node, "attr", None)
+        )
+        if name == "reliable_checkpoints":
+            bad.append((node.lineno, "reliable_checkpoints"))
+    return [f"line {ln}: {what}" for ln, what in sorted(bad)]
+
+
+def test_every_lineage_cut_goes_through_materialize():
+    """Only ``operators/checkpointing.py`` calls Spark's checkpoint APIs,
+    so whether a cut survives executor loss is decided in one place (the
+    session's checkpoint dir), never per call site."""
+    bad = []
+    for dirpath, _, files in os.walk(PKG):
+        for f in sorted(files):
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == CHECKPOINTING:
+                continue
+            with open(path) as fh:
+                found = _materialization_violations(fh.read())
+            bad += [f"{os.path.relpath(path, PKG)}: {v}" for v in found]
+    assert not bad, bad
+
+
+def test_materialization_guard_flags_direct_checkpoints():
+    src = '''
+def pin(df):
+    return df.localCheckpoint()
+
+def rank(edges, *, reliable_checkpoints=False):
+    e = edges.distinct().checkpoint(eager=True)
+    return pin(e), reliable_checkpoints
+'''
+    assert _materialization_violations(src) == [
+        "line 3: direct .localCheckpoint(",
+        "line 5: reliable_checkpoints",
+        "line 6: direct .checkpoint(",
+        "line 7: reliable_checkpoints",
+    ]
+
+
+def _checkpoint_file(df):
+    """The checkpoint dir of the RDD behind a materialized frame, or None
+    for a local (executor block manager) checkpoint."""
+    f = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    return f.get().removeprefix("file:") if f.isDefined() else None
+
+
+def test_materialize_is_local_without_a_checkpoint_dir(spark):
+    assert spark.sparkContext.getCheckpointDir() is None
+    df = spark.range(0, 100, 1, 4)
+    for eager in (True, False):
+        out = materialize(df, eager=eager)
+        assert _checkpoint_file(out) is None
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
+def test_materialize_writes_reliable_files_eagerly_with_a_dir(spark, tmp_path):
+    """With a checkpoint dir set, even ``eager=False`` has written its
+    files by the time ``materialize`` returns: a lazy reliable checkpoint
+    would evaluate its input a second time to write them."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    try:
+        df = spark.range(0, 100, 1, 4)
+        for eager in (True, False):
+            out = materialize(df, eager=eager)
+            path = _checkpoint_file(out)
+            assert path is not None and path.startswith(str(tmp_path))
+            assert any(f.startswith("part-") for f in os.listdir(path))
+            assert sorted(r.id for r in out.collect()) == list(range(100))
+    finally:
+        spark.sparkContext.setCheckpointDir(None)

@@ -49,25 +49,19 @@ class TestPageRank:
         assert total == pytest.approx(1.0, abs=1e-9)
 
     def test_reliable_checkpoint_path(self, spark, tmp_path):
-        """Cluster-durable lineage truncation: same ranks through reliable
-        checkpoint() files, and a clear error when no checkpoint dir is set
-        (instead of a silent local fallback that would be wrong on a
-        cluster)."""
+        """Cluster-durable lineage truncation follows the session: with a
+        checkpoint dir set, pagerank and connected_components cut lineage
+        with reliable checkpoint() files (no per-call flag) and return the
+        same ranks and components."""
         from crowdsorsa_etl_spark.operators.clusters import connected_components
 
         df = spark.createDataFrame(EDGES, "src long, dst long")
-        old_dir = spark.sparkContext.getCheckpointDir()
-        assert old_dir is None
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            pagerank(df, iterations=2, reliable_checkpoints=True)
-
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+        ckpt = tmp_path / "ckpt"
+        spark.sparkContext.setCheckpointDir(str(ckpt))
         try:
             got = {
                 r.node: r.rank
-                for r in pagerank(
-                    df, iterations=10, reliable_checkpoints=True
-                ).collect()
+                for r in pagerank(df, iterations=10).collect()
             }
             want = _numpy_pagerank(EDGES, 9, iterations=10)
             for v in range(9):
@@ -78,13 +72,13 @@ class TestPageRank:
                 for r in connected_components(
                     spark.createDataFrame(
                         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
-                    ),
-                    reliable_checkpoints=True,
+                    )
                 ).collect()
             }
             assert {comp[1], comp[2], comp[3]} == {1} and comp[10] == comp[11] == 10
         finally:
             spark.sparkContext.setCheckpointDir(None)
+        assert any(p.name.startswith("part-") for p in ckpt.rglob("*"))
 
     def test_star_graph_center_dominates(self, spark):
         star = [(i, 0) for i in range(1, 8)]

@@ -52,9 +52,9 @@ class TestGlobalCumsumMulti:
         assert totals == [sums[0], sums[1]]
 
     def test_q121_twophase_has_no_partitionless_window(self, spark):
-        """The DEFAULT q121 plan (no conf set) must carry NO unpartitioned
-        window — the grid cumsum runs through the two-phase range-sort
-        machinery (VERDICT r16 next-#4: twophase is now the default)."""
+        """The q121 plan must carry NO unpartitioned window — the grid
+        cumsum runs through the two-phase range-sort machinery (VERDICT
+        r16 next-#4)."""
         df = QUERIES["q121_ks_drift"](spark, SF_DIR)
         plan = df._jdf.queryExecution().optimizedPlan()
 
@@ -67,13 +67,12 @@ class TestGlobalCumsumMulti:
 
         assert list(walk(plan)) == []
 
-    def test_q121_hash_contract_both_paths(self, spark):
-        """BOTH plan paths must produce the oracle's exact output (the
-        sweep pins the default path; this pins the scale path too)."""
+    def test_q121_matches_oracle(self, spark):
+        """The two-phase plan must produce the DuckDB oracle's exact
+        output."""
         import duckdb
 
         from crowdsorsa_etl_spark.queries import ORACLES
-        from crowdsorsa_etl_spark.queries.drift import _KS_GRID_CONF
 
         con = duckdb.connect()
         con.execute(
@@ -81,22 +80,11 @@ class TestGlobalCumsumMulti:
             f"'{SF_DIR}/documents.parquet'"
         )
         want = sorted(con.execute(ORACLES["q121_ks_drift"]).fetchall())
-        # default path (twophase since r17)
-        got_twophase = sorted(
+        got = sorted(
             tuple(r)
             for r in QUERIES["q121_ks_drift"](spark, SF_DIR).collect()
         )
-        # escape-hatch path (bounded-grid single window)
-        spark.conf.set(_KS_GRID_CONF, "window")
-        try:
-            got_window = sorted(
-                tuple(r)
-                for r in QUERIES["q121_ks_drift"](spark, SF_DIR).collect()
-            )
-        finally:
-            spark.conf.unset(_KS_GRID_CONF)
-        assert got_window == want
-        assert got_twophase == want
+        assert got == want
 
 
 class TestCpuFanout:
