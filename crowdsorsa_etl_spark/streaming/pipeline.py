@@ -19,16 +19,88 @@ would grow unboundedly — never ship a stateful query without one.
 
 from __future__ import annotations
 
+import math
 import os
 import re
+import shutil
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.config import SinkConfig
+from crowdsorsa_etl_spark.functions.text import (
+    normalize_text,
+    quality_score,
+    token_count,
+)
+from crowdsorsa_etl_spark.operators.bm25 import bm25_append_index
+from crowdsorsa_etl_spark.operators.bpe import bpe_encode_ids
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
-from crowdsorsa_etl_spark.sinks.http_push import push_documents
+from crowdsorsa_etl_spark.operators.chunking import chunk_documents
+from crowdsorsa_etl_spark.operators.clusters import (
+    connected_components,
+    incremental_components,
+)
+from crowdsorsa_etl_spark.operators.curation import (
+    quality_filter_signals,
+    quality_filter_verdict,
+    token_budget_sample,
+)
+from crowdsorsa_etl_spark.operators.dsir import (
+    FX,
+    dsir_bucket_stats,
+    dsir_scores,
+)
+from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
+from crowdsorsa_etl_spark.operators.heavyhitters import mg_partition_summaries
+from crowdsorsa_etl_spark.operators.hll import (
+    HLL_M,
+    HLL_WBITS,
+    hll_estimate_expr,
+    hll_registers,
+)
+from crowdsorsa_etl_spark.operators.kll import (
+    kll_cells_sorted,
+    kll_merge,
+    kll_quantile,
+)
+from crowdsorsa_etl_spark.operators.kmv import (
+    H_SPACE,
+    kmv_hash_spark,
+    theta_split,
+)
+from crowdsorsa_etl_spark.operators.linkage import fs_link_multipass
+from crowdsorsa_etl_spark.operators.multimodal import (
+    _AHASH_BANDS,
+    _ahash_banded_rows,
+    image_index_write_epoch,
+)
+from crowdsorsa_etl_spark.operators.ngramlm import _bigrams
+from crowdsorsa_etl_spark.operators.scd import (
+    scd2_apply_batch,
+    scd2_apply_batch_buffered,
+)
+from crowdsorsa_etl_spark.operators.sharding import _positions
+from crowdsorsa_etl_spark.operators.substring import substring_match_index
+from crowdsorsa_etl_spark.sinks.http_push import (
+    push_documents,
+    push_documents_idempotent,
+)
+from crowdsorsa_etl_spark.sinks.ledger import (
+    _hadoop_fs,
+    compact_ledger,
+    epoch_ledger_rows,
+    key_prefix,
+    read_ledger_keys,
+    settled_batch_slice,
+)
+from crowdsorsa_etl_spark.sinks.writers import (
+    _swap_dirs,
+    epoch_parquet_writer,
+    upsert_parquet,
+)
 
 #: physical schema of events.parquet (ts is INT64 TIMESTAMP(NANOS) — read as
 #: long under nanosAsLong, converted to a real timestamp in the stream).
@@ -44,6 +116,13 @@ EVENTS_RAW = T.StructType(
 )
 
 _EPOCH_DIR = re.compile(r"epoch=(-?\d+)", re.ASCII)
+_URI_ROOT = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:/")
+
+
+def _epoch_dir(root: str, e: int, *parts: str) -> str:
+    """``root/epoch=<e>[/parts...]`` — the one formatter of epoch paths
+    (:func:`_epochs` is the one parser)."""
+    return os.path.join(root, f"epoch={int(e)}", *parts)
 
 
 def _epochs(root: str) -> list[int]:
@@ -53,7 +132,17 @@ def _epochs(root: str) -> list[int]:
     The one parser of epoch names: only directories whose whole name is
     ``epoch=<int>`` count, so leftovers such as a swap's ``epoch=-1__old``
     or an ``epoch=3.tmp`` stage are ignored instead of crashing ``int()``.
+
+    The listing is local-filesystem only, so a URI root (``file:///…``,
+    ``hdfs://…``) raises: listed as a local path it would look empty, and
+    every carried-state stream would silently restart from the current
+    batch.
     """
+    if _URI_ROOT.match(root):
+        raise ValueError(
+            "the epoch-state protocol lists local paths only; got the URI "
+            f"root {root!r}"
+        )
     if not os.path.isdir(root):
         return []
     with os.scandir(root) as entries:
@@ -65,7 +154,17 @@ def _epochs(root: str) -> list[int]:
 
 
 def _newest_before(root: str, e: int) -> str | None:
-    """Path of the newest ``root/epoch=<n>`` with ``n < e``, or None.
+    """Path of the newest ``root/epoch=<n>`` with ``n < e``, or None."""
+    prior = [n for n in _epochs(root) if n < e]
+    return _epoch_dir(root, prior[-1]) if prior else None
+
+
+def _prior_state(
+    spark, root: str, e: int, schema: str, name: str | None = None
+) -> DataFrame | None:
+    """The state micro-batch ``e`` builds on: the newest ``root/epoch=<n>``
+    with ``n < e`` (its ``name`` sub-path when given), read with the
+    declared ``schema``; None when no earlier epoch exists.
 
     The epoch-versioned state protocol every carried-state stream below
     follows: micro-batch ``e`` derives its new state from the newest
@@ -77,8 +176,32 @@ def _newest_before(root: str, e: int) -> str | None:
     state below the running epoch is ever read: older epochs are garbage
     once the newest two (replay headroom) are kept.
     """
-    prior = [n for n in _epochs(root) if n < e]
-    return os.path.join(root, f"epoch={prior[-1]}") if prior else None
+    prev = _newest_before(root, e)
+    if prev is None:
+        return None
+    return spark.read.schema(schema).parquet(
+        os.path.join(prev, name) if name else prev
+    )
+
+
+def _start_per_epoch(
+    stream: DataFrame, on_epoch, *, checkpoint_dir: str, mode: str
+):
+    """Start ``stream`` and hand every non-empty micro-batch to
+    ``on_epoch(batch_df, epoch)`` — the one ``foreachBatch`` wiring of
+    the streaming tier. An empty micro-batch writes nothing (no empty
+    ``epoch=<id>`` dir) at the price of one ``isEmpty()`` job."""
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            on_epoch(batch_df, int(epoch_id))
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(mode)
+        .start()
+    )
 
 
 def _write_state_rows(spark, rows, schema, path: str) -> None:
@@ -292,17 +415,13 @@ def start_http_push_stream(
     before checkpoint commit) anti-joins to nothing instead of re-POSTing
     (sinks/http_push.push_documents_idempotent)."""
 
-    def deliver(batch_df: DataFrame, epoch_id: int) -> None:
+    def deliver(batch_df: DataFrame, e: int) -> None:
         if ledger_dir is not None:
-            from crowdsorsa_etl_spark.sinks.http_push import (
-                push_documents_idempotent,
-            )
-
             push_documents_idempotent(
                 batch_df,
                 cfg,
                 ledger_dir=ledger_dir,
-                epoch_id=epoch_id,
+                epoch_id=e,
                 key_col=key_col,
                 json_col=json_col,
             )
@@ -313,11 +432,8 @@ def start_http_push_stream(
         # count() forces the push; audit persistence is the caller's writer
         audit.count()
 
-    return (
-        docs_stream.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _start_per_epoch(
+        docs_stream, deliver, checkpoint_dir=checkpoint_dir, mode="update"
     )
 
 
@@ -348,19 +464,12 @@ def start_scd2_stream(
     including run splits — yields history identical to a fully-ordered
     rebuild (operators/scd.scd2_apply_batch_buffered; q100's cross-engine
     gate). Only beyond-bound events are dropped."""
-    from crowdsorsa_etl_spark.operators.scd import (
-        scd2_apply_batch,
-        scd2_apply_batch_buffered,
-    )
-
     if (max_delay_seconds is None) != (buffer_dir is None):
         raise ValueError(
             "max_delay_seconds and buffer_dir must be set together"
         )
 
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def apply(batch_df: DataFrame, e: int) -> None:
         kw = dict(
             key_cols=key_cols,
             ts_col=ts_col,
@@ -382,11 +491,8 @@ def start_scd2_stream(
             batch_df.sparkSession, versions_dir, batch_df, **kw
         )
 
-    return (
-        changes_stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _start_per_epoch(
+        changes_stream, apply, checkpoint_dir=checkpoint_dir, mode="update"
     )
 
 
@@ -446,36 +552,13 @@ def start_curation_stream(
     ``compact_every`` set — the epoch partitions fold into a deduplicated
     prefix-partitioned base every N epochs, capping the scan itself.
     """
-    from crowdsorsa_etl_spark.functions.text import normalize_text
-    from crowdsorsa_etl_spark.operators.curation import (
-        quality_filter_signals,
-        quality_filter_verdict,
-    )
-
-    from crowdsorsa_etl_spark.operators.chunking import chunk_documents
-
     if not 0 < chunk_stride <= chunk_size:  # validate at WIRING time, not
         raise ValueError(                    # mid-epoch inside the stream
             f"chunk_stride must be in (0, chunk_size]; got {chunk_stride}, "
             f"size {chunk_size}"
         )
 
-    def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from crowdsorsa_etl_spark.functions.text import normalize_text
-        from crowdsorsa_etl_spark.operators.curation import (
-            quality_filter_signals,
-            quality_filter_verdict,
-        )
-        from crowdsorsa_etl_spark.sinks.ledger import (
-            compact_ledger,
-            epoch_ledger_rows,
-            key_prefix,
-            read_ledger_keys,
-            settled_batch_slice,
-        )
-
+    def ingest(batch_df: DataFrame, e: int) -> None:
         spark = batch_df.sparkSession
         sig = quality_filter_signals(F.col(text_col))
         keep, _reason = quality_filter_verdict(sig)
@@ -517,16 +600,10 @@ def start_curation_stream(
             stride=chunk_stride,
         ).write.mode("append").parquet(out_dir)
         if postings_dir is not None:
-            from crowdsorsa_etl_spark.operators.bm25 import bm25_append_index
-
             bm25_append_index(
                 fresh, postings_dir, text_col=text_col, id_col=id_col
             )
         if decontam_index_dir is not None:
-            from crowdsorsa_etl_spark.operators.substring import (
-                substring_match_index,
-            )
-
             spans_dir = (
                 decontam_spans_dir
                 or out_dir.rstrip("/") + "_decontam_spans"
@@ -544,9 +621,7 @@ def start_curation_stream(
                 min_run=decontam_min_run,
                 text_col=text_col,
                 id_col=id_col,
-            ).write.mode("overwrite").parquet(
-                f"{spans_dir}/epoch={epoch_id}"
-            )
+            ).write.mode("overwrite").parquet(_epoch_dir(spans_dir, e))
         # commit point: the epoch's FULL ingested key set (replay rewrites
         # the same set — sinks/ledger.epoch_ledger_rows). Remaining
         # duplicate window: a crash between the chunk append and this write
@@ -554,17 +629,12 @@ def start_curation_stream(
         # (doc, chunk) or use the snapshot sink for a stricter contract.
         materialize(epoch_ledger_rows(
             fresh.select("_md5"), settled_prior, kept.select("_md5"), "_md5"
-        )).write.mode("overwrite").parquet(
-            f"{ledger_dir}/epoch={epoch_id}"
-        )
-        if compact_every and epoch_id % compact_every == compact_every - 1:
+        )).write.mode("overwrite").parquet(_epoch_dir(ledger_dir, e))
+        if compact_every and e % compact_every == compact_every - 1:
             compact_ledger(spark, ledger_dir, key_col="_md5")
 
-    return (
-        docs_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _start_per_epoch(
+        docs_stream, ingest, checkpoint_dir=checkpoint_dir, mode="update"
     )
 
 
@@ -573,20 +643,17 @@ def start_parquet_sink(
     path: str,
     *,
     checkpoint_dir: str,
-    output_mode: str = "append",
 ):
     """writeStream.foreachBatch → idempotent epoch-partitioned parquet
     (sinks/writers.epoch_parquet_writer). Combined with the checkpoint,
     delivery is exactly-once at epoch granularity: a post-crash replay of
     the last epoch overwrites its own ``epoch=<id>`` directory instead of
     appending duplicates."""
-    from crowdsorsa_etl_spark.sinks.writers import epoch_parquet_writer
-
-    return (
-        stream_df.writeStream.foreachBatch(epoch_parquet_writer(path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
+    return _start_per_epoch(
+        stream_df,
+        epoch_parquet_writer(path),
+        checkpoint_dir=checkpoint_dir,
+        mode="append",
     )
 
 
@@ -618,11 +685,8 @@ def start_upsert_sink(
     cadence only: every upsert rewrites the table (upsert_parquet's
     documented cost); at 100 TB slot a Delta/Iceberg MERGE into this same
     call site."""
-    from crowdsorsa_etl_spark.sinks.writers import upsert_parquet
 
-    def apply(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def apply(batch_df: DataFrame, e: int) -> None:
         upsert_parquet(
             batch_df.sparkSession,
             path,
@@ -631,11 +695,8 @@ def start_upsert_sink(
             order_col=order_col,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _start_per_epoch(
+        stream_df, apply, checkpoint_dir=checkpoint_dir, mode="update"
     )
 
 
@@ -730,8 +791,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     (bounded by |users|, not by stream length), updated one Arrow batch per
     user per micro-batch, emitting the refreshed stats in update mode.
     """
-    import pandas as pd  # executor-side
-
     def update(key, pdfs, state):
         (user_id,) = key
         if state.exists:
@@ -765,6 +824,11 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
+#: Misra–Gries state: per-token estimates plus one NULL-token row that
+#: carries the stream's total token count.
+_MG_SCHEMA = "token string, est long"
+
+
 def start_heavy_hitters_stream(
     docs_stream: DataFrame,
     state_dir: str,
@@ -785,36 +849,22 @@ def start_heavy_hitters_stream(
     keeps the total error ≤ n/(capacity+1) through any merge/prune
     sequence), and write the result to ``state_dir/epoch=<id>``.
 
-    Replay safety: the epoch-state protocol (:func:`_newest_before`).
+    Replay safety: the epoch-state protocol (:func:`_prior_state`).
     Readers use :func:`streaming_heavy_hitter_candidates`.
     """
-    from pyspark.sql import Window as W
-
-    from crowdsorsa_etl_spark.operators.heavyhitters import (
-        mg_partition_summaries,
-    )
-
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1; got {capacity}")
 
     spark_active = docs_stream.sparkSession
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def fold(batch_df: DataFrame, e: int) -> None:
         batch_sum = mg_partition_summaries(
             batch_df, text_col, capacity=capacity
         )
-        prev_path = _newest_before(state_dir, int(epoch_id))
-        if prev_path is not None:
-            merged_in = batch_sum.unionByName(
-                spark_active.read.schema("token string, est long").parquet(
-                    prev_path
-                )
-            )
-        else:
-            merged_in = batch_sum
-        merged = merged_in.groupBy("token").agg(F.sum("est").alias("est"))
+        prev = _prior_state(spark_active, state_dir, e, _MG_SCHEMA)
+        if prev is not None:
+            batch_sum = batch_sum.unionByName(prev)
+        merged = batch_sum.groupBy("token").agg(F.sum("est").alias("est"))
         toks = merged.filter(F.col("token").isNotNull())
         sent = merged.filter(F.col("token").isNull())
         # mergeable-summaries prune: keep the top `capacity` counters,
@@ -822,7 +872,7 @@ def start_heavy_hitters_stream(
         ranked = toks.withColumn(
             "_rnk",
             F.row_number().over(
-                W.orderBy(F.col("est").desc(), F.col("token"))
+                Window.orderBy(F.col("est").desc(), F.col("token"))
             ),
         )
         cut = (
@@ -840,26 +890,28 @@ def start_heavy_hitters_stream(
             pruned.unionByName(sent.select("token", "est"))
             .repartition(1)
             .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"epoch={int(epoch_id)}"))
+            .parquet(_epoch_dir(state_dir, e))
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _start_per_epoch(
+        docs_stream, fold, checkpoint_dir=checkpoint_dir, mode="update"
     )
 
 
 def streaming_heavy_hitter_candidates(spark, state_dir: str) -> DataFrame:
-    """Read the newest MG state epoch: (token, est, n_total, max_err)
-    where true_count ∈ [est, est + max_err] and every token with
-    true_count > max_err is guaranteed present."""
+    """Read the newest MG state epoch as (token, est, n_total).
+
+    The capacity is not persisted, so the error bound is the caller's:
+    with the ``capacity`` the stream ran at, max_err = n_total /
+    (capacity + 1), every token's true count lies in [est, est +
+    max_err], and every token whose true count exceeds max_err is
+    present."""
     epochs = _epochs(state_dir)
     if not epochs:
         raise ValueError(f"no heavy-hitter state under {state_dir}")
-    latest = os.path.join(state_dir, f"epoch={epochs[-1]}")
-    state = spark.read.schema("token string, est long").parquet(latest)
+    state = spark.read.schema(_MG_SCHEMA).parquet(
+        _epoch_dir(state_dir, epochs[-1])
+    )
     toks = state.filter(F.col("token").isNotNull())
     n_total = (
         state.filter(F.col("token").isNull())
@@ -867,10 +919,6 @@ def streaming_heavy_hitter_candidates(spark, state_dir: str) -> DataFrame:
         .collect()[0][0]
         or 0
     )
-    n_tokens = toks.count()
-    # capacity isn't persisted; the bound uses the kept-size lower bound
-    # n/(k+1) ≤ n/(kept+1) only when the table was full — report n and
-    # let callers apply their configured capacity
     return toks.select(
         "token", "est", F.lit(int(n_total)).cast("bigint").alias("n_total")
     )
@@ -909,12 +957,10 @@ def start_shard_stream(
     shard_id, and the new running total (ONE number) is written to
     ``state_dir/epoch=<e>``.
 
-    Replay safety: the epoch-state protocol (:func:`_newest_before`), so
+    Replay safety: the epoch-state protocol (:func:`_prior_state`), so
     a replayed epoch never double-advances the shard counter. State is one
     single-row file per epoch; :func:`compact_shard_epochs` prunes it.
     """
-    from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
-
     if shard_budget < 1:
         raise ValueError(f"shard_budget must be >= 1; got {shard_budget}")
     if (merges is None) != (vocab is None):
@@ -922,20 +968,11 @@ def start_shard_stream(
 
     spark_active = docs_stream.sparkSession
 
-    def _carried_total(e: int) -> int:
-        prev = _newest_before(state_dir, e)
-        if prev is None:
-            return 0
-        rows = spark_active.read.schema("total long").parquet(prev).collect()
-        return int(rows[0]["total"]) if rows else 0
-
-    def assign(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        offset = _carried_total(int(epoch_id))
+    def assign(batch_df: DataFrame, e: int) -> None:
+        prev = _prior_state(spark_active, state_dir, e, "total long")
+        rows = [] if prev is None else prev.collect()
+        offset = int(rows[0]["total"]) if rows else 0
         if merges is not None:
-            from crowdsorsa_etl_spark.operators.bpe import bpe_encode_ids
-
             d = bpe_encode_ids(
                 batch_df,
                 merges,
@@ -970,7 +1007,7 @@ def start_shard_stream(
         (
             out.write.mode("overwrite")
             .partitionBy("shard_id")
-            .parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
+            .parquet(_epoch_dir(out_dir, e))
         )
         # ONE number of state per epoch — the carried running total
         batch_total = d.agg(F.sum("n_tokens").cast("bigint")).collect()[0][0]
@@ -978,14 +1015,11 @@ def start_shard_stream(
             spark_active,
             [(offset + int(batch_total),)],
             "total long",
-            os.path.join(state_dir, f"epoch={int(epoch_id)}"),
+            _epoch_dir(state_dir, e),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(assign)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, assign, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1020,9 +1054,9 @@ def compact_shard_epochs(
     drops exact duplicates, and rerunning the compaction converges. A
     crash between the swap's two renames leaves ``epoch=-1__old``; the
     next run repairs it here (promote if the base is missing, else drop
-    the stale copy) before listing epochs, and the epoch listing itself
-    (:func:`_epochs`) ignores the leftover, so it can never poison
-    partition-value inference downstream.
+    the stale copy), and the epoch listing itself (:func:`_epochs`)
+    ignores the leftover, so it can never poison partition-value
+    inference downstream.
 
     Duplicate-drop is keyed: after the full-row ``dropDuplicates()`` the
     merge asserts ``id_col`` is unique — two *different* rows sharing an
@@ -1034,17 +1068,15 @@ def compact_shard_epochs(
 
     Returns the number of epoch dirs folded. One shuffle-free read+write
     over (base ∪ folded epochs) per compaction — amortize by calling every
-    N epochs, never on the per-batch path.
+    N epochs, never on the per-batch path. A URI ``out_dir`` or
+    ``state_dir`` raises before anything is touched (see :func:`_epochs`).
     """
-    from crowdsorsa_etl_spark.sinks.ledger import _hadoop_fs
-    from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
-
     if keep_epochs < 1:
         raise ValueError(f"keep_epochs must be >= 1; got {keep_epochs}")
-    if not os.path.isdir(out_dir):
-        return 0
+    epochs = [e for e in _epochs(out_dir) if e >= 0]
+    state_epochs = _epochs(state_dir) if state_dir else []
 
-    base = os.path.join(out_dir, "epoch=-1")
+    base = _epoch_dir(out_dir, -1)
     # repair a crash between _swap_dirs' two renames: epoch=-1__old left behind
     stale = base + "__old"
     if os.path.isdir(stale):
@@ -1054,13 +1086,10 @@ def compact_shard_epochs(
             jvm_stale, fs0 = _hadoop_fs(spark, stale)
             fs0.delete(jvm_stale, True)
 
-    epochs = [e for e in _epochs(out_dir) if e >= 0]
     fold = epochs[:-keep_epochs]
     if not fold:
         return 0
-    frames = [
-        spark.read.parquet(os.path.join(out_dir, f"epoch={e}")) for e in fold
-    ]
+    frames = [spark.read.parquet(_epoch_dir(out_dir, e)) for e in fold]
     _, fs = _hadoop_fs(spark, out_dir)
     jvm_base, _ = _hadoop_fs(spark, base)
     if fs.exists(jvm_base):
@@ -1092,13 +1121,12 @@ def compact_shard_epochs(
     writer.parquet(tmp)
     _swap_dirs(spark._jvm, fs, base, tmp)
     for e in fold:
-        jvm_e, _ = _hadoop_fs(spark, os.path.join(out_dir, f"epoch={e}"))
+        jvm_e, _ = _hadoop_fs(spark, _epoch_dir(out_dir, e))
         fs.delete(jvm_e, True)
 
-    if state_dir:
-        for e in _epochs(state_dir)[:-keep_epochs]:
-            jvm_s, _ = _hadoop_fs(spark, os.path.join(state_dir, f"epoch={e}"))
-            fs.delete(jvm_s, True)
+    for e in state_epochs[:-keep_epochs]:
+        jvm_s, _ = _hadoop_fs(spark, _epoch_dir(state_dir, e))
+        fs.delete(jvm_s, True)
     return len(fold)
 
 
@@ -1128,7 +1156,7 @@ def start_sequence_pack_stream(
     State per epoch is one row ``(seqs_done, carry array<int>)`` — the
     number of sequences emitted so far plus the carried tail, bounded at
     ``max_len`` tokens by construction (a driver-safe artifact). Replay
-    follows the epoch-state protocol (:func:`_newest_before`) for both
+    follows the epoch-state protocol (:func:`_prior_state`) for both
     the output and the state paths, so a replayed epoch emits the
     identical sequences and never double-advances the counter.
 
@@ -1137,33 +1165,18 @@ def start_sequence_pack_stream(
     key-partitioned regroup by sequence id (groups bounded at
     ``max_len``). The carry union is at most ``max_len`` rows.
     """
-    import shutil
-
-    from crowdsorsa_etl_spark.operators.bpe import bpe_encode_ids
-    from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
-
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1; got {max_len}")
 
     spark_active = docs_stream.sparkSession
 
-    def _carried_state(e: int) -> tuple[int, list[int]]:
-        prev = _newest_before(state_dir, e)
-        if prev is None:
-            return 0, []
-        rows = (
-            spark_active.read.schema("seqs_done long, carry array<int>")
-            .parquet(prev)
-            .collect()
-        )
-        if not rows:
-            return 0, []
-        return int(rows[0]["seqs_done"]), list(rows[0]["carry"] or [])
+    state_schema = "seqs_done long, carry array<int>"
 
-    def pack(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        seqs_done, carry = _carried_state(int(epoch_id))
+    def pack(batch_df: DataFrame, e: int) -> None:
+        prev = _prior_state(spark_active, state_dir, e, state_schema)
+        rows = [] if prev is None else prev.collect()
+        seqs_done = int(rows[0]["seqs_done"]) if rows else 0
+        carry = list(rows[0]["carry"] or []) if rows else []
         d = materialize(
             bpe_encode_ids(
                 batch_df,
@@ -1218,7 +1231,7 @@ def start_sequence_pack_stream(
             seqs.filter(F.col("seq_len") == max_len)
             .select("seq_id", "seq_len", "ids")
             .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
+            .parquet(_epoch_dir(out_dir, e))
         )
         # bounded state: the single incomplete tail row (or none), plus
         # the new absolute sequence counter
@@ -1231,22 +1244,17 @@ def start_sequence_pack_stream(
         _write_state_rows(
             spark_active,
             [(new_done, new_carry)],
-            "seqs_done long, carry array<int>",
-            os.path.join(state_dir, f"epoch={int(epoch_id)}"),
+            state_schema,
+            _epoch_dir(state_dir, e),
         )
         # keep the state-dir flat in stream age: everything older than
         # the newest two epochs (replay headroom — a replayed epoch e
         # must still find its e-1 predecessor) is garbage, pruned in-band
-        for e in _epochs(state_dir)[:-2]:
-            shutil.rmtree(
-                os.path.join(state_dir, f"epoch={e}"), ignore_errors=True
-            )
+        for old in _epochs(state_dir)[:-2]:
+            shutil.rmtree(_epoch_dir(state_dir, old), ignore_errors=True)
 
-    return (
-        docs_stream.writeStream.foreachBatch(pack)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, pack, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1276,8 +1284,6 @@ def start_drift_stream(
     report depends only on the batch content and the frozen reference, so
     a replayed epoch overwrites an identical report.
     """
-    import math
-
     if bins < 2:
         raise ValueError(f"bins must be >= 2; got {bins}")
 
@@ -1301,9 +1307,7 @@ def start_drift_stream(
     n_expected = {int(r["bin"]): int(r["count"]) for r in ref_rows}
     te = sum(n_expected.values())
 
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def monitor(batch_df: DataFrame, e: int) -> None:
         act_rows = (
             batch_df.select(_bin(value_col)).groupBy("bin").count().collect()
         )
@@ -1323,7 +1327,7 @@ def start_drift_stream(
         psi_total = round(sum(terms.values()), 6)
         rows = [
             (
-                int(epoch_id),
+                e,
                 b,
                 n_expected.get(b, 0),
                 n_actual.get(b, 0),
@@ -1337,14 +1341,11 @@ def start_drift_stream(
             rows,
             "epoch long, bin int, n_expected long, n_actual long,"
             " psi_term double, psi_total double",
-            os.path.join(out_dir, f"epoch={int(epoch_id)}"),
+            _epoch_dir(out_dir, e),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(monitor)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, monitor, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1382,8 +1383,6 @@ def start_lm_score_stream(
     itself the output is bit-identical to the batch query (parity-gated
     in tests/test_streaming.py).
     """
-    from crowdsorsa_etl_spark.operators.ngramlm import _bigrams
-
     big_ref = _bigrams(reference, text_col=text_col, id_col=id_col)
     bc = big_ref.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("bc")
@@ -1399,9 +1398,7 @@ def start_lm_score_stream(
 
     d = F.lit(float(discount))
 
-    def score(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def score(batch_df: DataFrame, e: int) -> None:
         big = _bigrams(batch_df, text_col=text_col, id_col=id_col)
         joined = (
             big.join(bc, ["w1", "w2"], "left")
@@ -1432,15 +1429,10 @@ def start_lm_score_stream(
                 ).alias("avg_logprob"),
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
+        out.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
 
-    return (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, score, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1471,11 +1463,6 @@ def start_dsir_stream(
     batch drawn from the reference's raw slice the output is bit-identical
     to the batch query (parity-gated in tests/test_streaming.py).
     """
-    from crowdsorsa_etl_spark.operators.dsir import (
-        dsir_bucket_stats,
-        dsir_scores,
-    )
-
     stats = dsir_bucket_stats(
         reference,
         target_pred,
@@ -1485,21 +1472,14 @@ def start_dsir_stream(
         id_col=id_col,
     )
 
-    def score(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def score(batch_df: DataFrame, e: int) -> None:
         out = dsir_scores(
             batch_df, stats, buckets=buckets, text_col=text_col, id_col=id_col
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
+        out.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
 
-    return (
-        docs_stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, score, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1530,7 +1510,7 @@ def start_budget_mix_stream(
     cum_tokens GLOBAL, kept); the carried per-source spend (≤ |sources|
     rows — bounded by the source vocabulary, not the corpus) lives under
     ``state_dir/epoch=<e>`` with the epoch-state protocol
-    (:func:`_newest_before`) as its replay contract.
+    (:func:`_prior_state`) as its replay contract.
 
     Note the admission-order semantics: a batch run orders the WHOLE
     corpus by (md5, key); the stream orders by (arrival epoch, md5, key).
@@ -1538,31 +1518,19 @@ def start_budget_mix_stream(
     have not seen), and it is exactly reproducible: replaying the same
     epochs yields the same admission set.
     """
-    from crowdsorsa_etl_spark.operators.curation import token_budget_sample
-
     if any(b < 0 for b in budgets.values()):
         raise ValueError(f"budgets must be >= 0; got {budgets}")
 
     spark_active = docs_stream.sparkSession
 
-    def _carried(e: int) -> dict[str, int]:
-        prev = _newest_before(state_dir, e)
-        if prev is None:
-            return {}
-        rows = (
-            spark_active.read.schema("source string, spent long")
-            .parquet(prev)
-            .collect()
-        )
-        return {r["source"]: int(r["spent"]) for r in rows}
+    state_schema = "source string, spent long"
 
-    def admit(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
-        carried = _carried(e)
-        from crowdsorsa_etl_spark.functions.text import token_count
-
+    def admit(batch_df: DataFrame, e: int) -> None:
+        prev = _prior_state(spark_active, state_dir, e, state_schema)
+        carried = {
+            r["source"]: int(r["spent"])
+            for r in ([] if prev is None else prev.collect())
+        }
         d = batch_df.select(
             F.col(id_col),
             F.col(group_col).alias("source"),
@@ -1586,9 +1554,7 @@ def start_budget_mix_stream(
         out = out.withColumn(
             "cum_tokens", (F.col("cum_tokens") + shift).cast("bigint")
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={e}")
-        )
+        out.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
         spent = (
             d.groupBy("source")
             .agg(F.sum("n_tokens").cast("bigint").alias("spent"))
@@ -1600,15 +1566,12 @@ def start_budget_mix_stream(
         _write_state_rows(
             spark_active,
             sorted(merged.items()),
-            "source string, spent long",
-            os.path.join(state_dir, f"epoch={e}"),
+            state_schema,
+            _epoch_dir(state_dir, e),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(admit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, admit, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1639,21 +1602,12 @@ def start_image_dedup_stream(
     semantics — a crashed-and-replayed epoch rewrites the same dirs, no
     double-append, no self-match.
     """
-    from crowdsorsa_etl_spark.operators.multimodal import (
-        _AHASH_BANDS,
-        _ahash_banded_rows,
-        image_index_write_epoch,
-    )
-
     if not (0 <= max_hamming < _AHASH_BANDS):
         raise ValueError(f"pigeonhole needs 0 <= max_hamming < {_AHASH_BANDS}")
 
     spark_active = docs_stream.sparkSession
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         b = materialize(_ahash_banded_rows(
             batch_df,
             payload_col=payload_col,
@@ -1661,7 +1615,6 @@ def start_image_dedup_stream(
             bucket_prefixes=bucket_prefixes,
         ))
         bands_root = index_path.rstrip("/") + "/bands"
-        out_path = os.path.join(out_dir, f"epoch={e}")
         if _epochs(bands_root):
             pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
             corpus = (
@@ -1700,7 +1653,7 @@ def start_image_dedup_stream(
             matches = spark_active.createDataFrame(
                 [], "id_a long, id_b long, hamming int"
             )
-        matches.write.mode("overwrite").parquet(out_path)
+        matches.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
         image_index_write_epoch(
             batch_df,
             index_path,
@@ -1710,11 +1663,8 @@ def start_image_dedup_stream(
             bucket_prefixes=bucket_prefixes,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1756,16 +1706,11 @@ def start_linkage_stream(
     feature-expression dict (Column expressions cannot be built before
     the joined schema exists on the executor-side plan).
     """
-    from crowdsorsa_etl_spark.operators.linkage import fs_link_multipass
-
     if not block_passes:
         raise ValueError("need at least one blocking pass")
     spark_active = dirty_stream.sparkSession
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         batch = materialize(batch_df)
         clean = spark_active.read.parquet(clean_path)
         pruned = None
@@ -1788,15 +1733,10 @@ def start_linkage_stream(
             upper=upper,
             lower=lower,
         )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={e}")
-        )
+        scored.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
 
-    return (
-        dirty_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        dirty_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1815,39 +1755,27 @@ def start_entity_registry_stream(
     edge log is never revisited), and the updated registry lands under
     ``registry_path/epoch=<e>``.
 
-    Replay contract: the epoch-state protocol (:func:`_newest_before`) —
+    Replay contract: the epoch-state protocol (:func:`_prior_state`) —
     no double-fold. After any sequence of batches the latest epoch is
     bit-identical to a full CC recompute over all edges seen (the
     operator's hashed invariant), which the parity test drives
     end-to-end. Registry growth is |nodes|, not |edges|; compact old
     epoch dirs like the ledger when listings grow.
     """
-    from crowdsorsa_etl_spark.operators.clusters import (
-        connected_components,
-        incremental_components,
-    )
-
     spark_active = edges_stream.sparkSession
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
-        prev = _newest_before(registry_path, e)
-        if prev is not None:
-            labels = spark_active.read.parquet(prev)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
+        labels = _prior_state(
+            spark_active, registry_path, e, "id long, component long"
+        )
+        if labels is not None:
             reg = incremental_components(labels, batch_df, src=src, dst=dst)
         else:
             reg = connected_components(batch_df, src=src, dst=dst)
-        reg.write.mode("overwrite").parquet(
-            os.path.join(registry_path, f"epoch={e}")
-        )
+        reg.write.mode("overwrite").parquet(_epoch_dir(registry_path, e))
 
-    return (
-        edges_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        edges_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1866,26 +1794,20 @@ def start_shuffle_shard_stream(
     global position space, under ``store_path/epoch=<e>/rows`` with the
     new high-water mark in ``epoch=<e>/next``.
 
-    Replay contract: the epoch-state protocol (:func:`_newest_before`) —
+    Replay contract: the epoch-state protocol (:func:`_prior_state`) —
     a replayed epoch can never double-append. The live store is the union
     of all epoch ``rows`` dirs (``spark.read.parquet(store/epoch=*/rows)``);
     positions across any replay sequence equal the batch-sequential
     ``shard_store_init``/``append`` fold, which the parity test drives.
     Epoch dirs are per-batch sized — compact old ones like the ledger
     when listings grow."""
-    from crowdsorsa_etl_spark.operators.sharding import _positions
-
     spark_active = docs_stream.sparkSession
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
-        prev = _newest_before(store_path, e)
-        start = 0
-        if prev is not None:
-            nxt = spark_active.read.parquet(os.path.join(prev, "next"))
-            start = nxt.collect()[0]["next_pos"]
+    def on_batch(batch_df: DataFrame, e: int) -> None:
+        nxt = _prior_state(
+            spark_active, store_path, e, "next_pos long", "next"
+        )
+        start = 0 if nxt is None else nxt.collect()[0]["next_pos"]
         pos, total = _positions(batch_df, id_col, seed, start)
         (
             pos.withColumn(
@@ -1893,20 +1815,17 @@ def start_shuffle_shard_stream(
                 F.floor(F.col("pos") / F.lit(shard_docs)).cast("int"),
             )
             .write.mode("overwrite")
-            .parquet(os.path.join(store_path, f"epoch={e}", "rows"))
+            .parquet(_epoch_dir(store_path, e, "rows"))
         )
         _write_state_rows(
             spark_active,
             [(int(start + total),)],
             "next_pos long",
-            os.path.join(store_path, f"epoch={e}", "next"),
+            _epoch_dir(store_path, e, "next"),
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -1943,30 +1862,15 @@ def start_mix_stream(
       store's positions — the store itself is NEVER rewritten (the
       epoch-reshuffle posture: order is a manifest, not bytes).
 
-    Replay safety: the epoch-state protocol (:func:`_newest_before`) — no
+    Replay safety: the epoch-state protocol (:func:`_prior_state`) — no
     double count. Final-state == batch-rebuild is gated by
     tests/test_round16.py.
     """
-    from crowdsorsa_etl_spark.functions.text import (
-        normalize_text,
-        quality_score,
-    )
-    from crowdsorsa_etl_spark.operators.dsir import FX
-
     spark_active = docs_stream.sparkSession
+    totals_schema = "lang string, n_docs long, n_tokens long"
+    phases_schema = "phase int, n_docs long"
 
-    def _carried(e: int, name: str, schema: str) -> DataFrame | None:
-        prev = _newest_before(store_path, e)
-        if prev is None:
-            return None
-        return spark_active.read.schema(schema).parquet(
-            os.path.join(prev, name)
-        )
-
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         n_tok = F.size(F.split(normalize_text(F.col(text_col)), " "))
         q = quality_score(F.col(text_col))
         phase = (
@@ -1979,8 +1883,12 @@ def start_mix_stream(
         b_phase = batch_df.groupBy(phase.cast("int").alias("phase")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs")
         )
-        c_lang = _carried(e, "totals", "lang string, n_docs long, n_tokens long")
-        c_phase = _carried(e, "phase_totals", "phase int, n_docs long")
+        c_lang = _prior_state(
+            spark_active, store_path, e, totals_schema, "totals"
+        )
+        c_phase = _prior_state(
+            spark_active, store_path, e, phases_schema, "phase_totals"
+        )
         totals = (
             b_lang.unionAll(c_lang) if c_lang is not None else b_lang
         ).groupBy("lang").agg(
@@ -1992,19 +1900,18 @@ def start_mix_stream(
         ).groupBy("phase").agg(
             F.sum("n_docs").cast("bigint").alias("n_docs")
         )
-        ep = os.path.join(store_path, f"epoch={e}")
-        totals.write.mode("overwrite").parquet(os.path.join(ep, "totals"))
-        phases.write.mode("overwrite").parquet(
-            os.path.join(ep, "phase_totals")
-        )
+        totals_path = _epoch_dir(store_path, e, "totals")
+        phases_path = _epoch_dir(store_path, e, "phase_totals")
+        totals.write.mode("overwrite").parquet(totals_path)
+        phases.write.mode("overwrite").parquet(phases_path)
         # re-read the just-written state so plan/manifest derive from one
         # materialization (not a second evaluation of the agg)
-        totals_r = spark_active.read.schema(
-            "lang string, n_docs long, n_tokens long"
-        ).parquet(os.path.join(ep, "totals"))
-        phases_r = spark_active.read.schema(
-            "phase int, n_docs long"
-        ).parquet(os.path.join(ep, "phase_totals"))
+        totals_r = spark_active.read.schema(totals_schema).parquet(
+            totals_path
+        )
+        phases_r = spark_active.read.schema(phases_schema).parquet(
+            phases_path
+        )
         fx = totals_r.select(
             "*",
             F.round(F.pow(F.col("n_tokens"), F.lit(alpha)) * F.lit(FX), 0)
@@ -2025,7 +1932,7 @@ def start_mix_stream(
                 "oversample"
             ),
         )
-        plan.write.mode("overwrite").parquet(os.path.join(ep, "plan"))
+        plan.write.mode("overwrite").parquet(_epoch_dir(store_path, e, "plan"))
         # phase boundary manifest: offset = docs in all lower phases
         # (3-row frame; the self-join cumsum keeps it engine-trivial)
         p2 = phases_r.select(
@@ -2040,13 +1947,12 @@ def start_mix_stream(
                 .alias("phase_offset")
             )
         )
-        manifest.write.mode("overwrite").parquet(os.path.join(ep, "phases"))
+        manifest.write.mode("overwrite").parquet(
+            _epoch_dir(store_path, e, "phases")
+        )
 
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        docs_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -2070,40 +1976,28 @@ def start_hll_stream(
     * ``epoch=<e>/summary``  — one row: v_zero, sum_fx (exact BIGINT
       fold), est (operators/hll estimate with the LC branch).
 
-    Replay safety: the epoch-state protocol (:func:`_newest_before`);
+    Replay safety: the epoch-state protocol (:func:`_prior_state`);
     merge idempotence (max) additionally makes even a double-fold of the
     same batch harmless — the property tests/test_round16.py pins as
     stream-final == one-shot batch sketch.
     """
-    from crowdsorsa_etl_spark.operators.hll import (
-        HLL_M,
-        HLL_WBITS,
-        hll_estimate_expr,
-        hll_registers,
-    )
-
     spark_active = events_stream.sparkSession
+    regs_schema = "idx int, r int"
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
-        prev = _newest_before(store_path, e)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         regs = hll_registers(batch_df, key_col, seed=seed)
-        if prev is not None:
-            carried = spark_active.read.schema("idx int, r int").parquet(
-                os.path.join(prev, "registers")
-            )
+        carried = _prior_state(
+            spark_active, store_path, e, regs_schema, "registers"
+        )
+        if carried is not None:
             regs = (
                 regs.unionAll(carried)
                 .groupBy("idx")
                 .agg(F.max("r").cast("int").alias("r"))
             )
-        ep = os.path.join(store_path, f"epoch={e}")
-        regs.write.mode("overwrite").parquet(os.path.join(ep, "registers"))
-        regs_r = spark_active.read.schema("idx int, r int").parquet(
-            os.path.join(ep, "registers")
-        )
+        regs_path = _epoch_dir(store_path, e, "registers")
+        regs.write.mode("overwrite").parquet(regs_path)
+        regs_r = spark_active.read.schema(regs_schema).parquet(regs_path)
         fold = regs_r.agg(
             (F.lit(HLL_M) - F.count(F.lit(1))).cast("bigint").alias("v_zero"),
             (
@@ -2127,13 +2021,10 @@ def start_hll_stream(
             F.round(
                 hll_estimate_expr(F.col("sum_fx"), F.col("v_zero")), 6
             ).alias("est"),
-        ).write.mode("overwrite").parquet(os.path.join(ep, "summary"))
+        ).write.mode("overwrite").parquet(_epoch_dir(store_path, e, "summary"))
 
-    return (
-        events_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        events_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -2163,7 +2054,7 @@ def start_kll_stream(
     * ``epoch=<e>/summary`` — one row: n_total (exact — merge conserves
       weight), est_p50, est_p99.
 
-    Replay safety is the epoch-state protocol (:func:`_newest_before`);
+    Replay safety is the epoch-state protocol (:func:`_prior_state`);
     a full checkpoint loss re-runs the whole fold onto nothing, landing
     on the identical final state. NOTE the contrast with HLL: max-merge
     is idempotent, so HLL replay safety holds even without versioning;
@@ -2173,40 +2064,31 @@ def start_kll_stream(
     preserve the rank-error bound, not the cell set); the pytest gate
     pins stream-final == the same fold replayed in batch, exact weight
     conservation, and the merge-degraded rank bound."""
-    from crowdsorsa_etl_spark.operators.kll import (
-        kll_cells_sorted,
-        kll_merge,
-        kll_quantile,
-    )
-
     spark_active = values_stream.sparkSession
     ties = list(tiebreak_cols or [])
     cells_schema = "level int, pos bigint, value bigint, weight bigint"
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
-        prev = _newest_before(store_path, e)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         batch_cells = [
             (r["level"], r["pos"], r["value"], r["weight"])
             for r in kll_cells_sorted(
                 batch_df, value_col, ties, k=k, max_levels=max_levels
             ).collect()
         ]
+        prev = _prior_state(spark_active, store_path, e, cells_schema, "cells")
         if prev is not None:
             carried = [
                 (r["level"], r["pos"], r["value"], r["weight"])
-                for r in spark_active.read.schema(cells_schema)
-                .parquet(os.path.join(prev, "cells"))
-                .collect()
+                for r in prev.collect()
             ]
             merged = kll_merge(carried, batch_cells, k, max_levels)
         else:
             merged = batch_cells
-        ep = os.path.join(store_path, f"epoch={e}")
         _write_state_rows(
-            spark_active, merged, cells_schema, os.path.join(ep, "cells")
+            spark_active,
+            merged,
+            cells_schema,
+            _epoch_dir(store_path, e, "cells"),
         )
         n_total = sum(w for *_x, w in merged)
         _write_state_rows(
@@ -2219,14 +2101,11 @@ def start_kll_stream(
                 )
             ],
             "n_total bigint, est_p50 bigint, est_p99 bigint",
-            os.path.join(ep, "summary"),
+            _epoch_dir(store_path, e, "summary"),
         )
 
-    return (
-        values_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        values_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -2265,18 +2144,9 @@ def start_kmv_stream(
     State is ≤ k BIGINTs regardless of stream length — the right
     100 TB shape (the distinct build is map-side combined per batch;
     the driver folds two ≤k-element lists)."""
-    from crowdsorsa_etl_spark.operators.kmv import (
-        H_SPACE,
-        kmv_hash_spark,
-        theta_split,
-    )
-
     spark_active = keys_stream.sparkSession
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         batch_hashes = [
             r["h"]
             for r in (
@@ -2288,23 +2158,17 @@ def start_kmv_stream(
                 .collect()
             )
         ]
-        prev = _newest_before(store_path, e)
+        prev = _prior_state(spark_active, store_path, e, "h bigint", "sketch")
         if prev is not None:
-            carried = [
-                r["h"]
-                for r in spark_active.read.schema("h bigint")
-                .parquet(os.path.join(prev, "sketch"))
-                .collect()
-            ]
+            carried = [r["h"] for r in prev.collect()]
             merged = sorted(set(carried) | set(batch_hashes))[:k]
         else:
             merged = batch_hashes
-        ep = os.path.join(store_path, f"epoch={e}")
         _write_state_rows(
             spark_active,
             [(h,) for h in merged],
             "h bigint",
-            os.path.join(ep, "sketch"),
+            _epoch_dir(store_path, e, "sketch"),
         )
         sample, theta = theta_split(merged, k)
         est = round(len(sample) * float(H_SPACE) / float(theta), 6)
@@ -2312,14 +2176,11 @@ def start_kmv_stream(
             spark_active,
             [(len(merged), theta, est)],
             "n_retained int, theta bigint, est double",
-            os.path.join(ep, "summary"),
+            _epoch_dir(store_path, e, "summary"),
         )
 
-    return (
-        keys_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        keys_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )
 
 
@@ -2340,7 +2201,7 @@ def start_psi_stream(
     NOW", with O(|categories|) carried state.
 
     Count folding is ADDITIVE (a replayed batch would double-count), so
-    the epoch-state protocol (:func:`_newest_before`) is load-bearing
+    the epoch-state protocol (:func:`_prior_state`) is load-bearing
     exactly as in ``start_kll_stream``. PSI uses the q120 Laplace-(+1)
     smoothed form over the union of reference and observed categories —
     identical arithmetic, so the stream's epoch score equals the batch
@@ -2349,8 +2210,6 @@ def start_psi_stream(
     Per epoch writes: ``epoch=<e>/counts`` (category, n) and
     ``epoch=<e>/summary`` (n_rows, n_categories, psi_micro BIGINT,
     psi double)."""
-    import math
-
     if not ref_counts:
         raise ValueError("ref_counts must be a non-empty mapping")
     ref = {str(k): int(v) for k, v in ref_counts.items()}
@@ -2370,10 +2229,7 @@ def start_psi_stream(
             total += round(term * 1_000_000)
         return total
 
-    def on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        e = int(epoch_id)
+    def on_batch(batch_df: DataFrame, e: int) -> None:
         batch_counts = {
             str(r["c"]): int(r["n"])
             for r in batch_df.groupBy(
@@ -2382,21 +2238,17 @@ def start_psi_stream(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        prev = _newest_before(store_path, e)
+        prev = _prior_state(
+            spark_active, store_path, e, "c string, n bigint", "counts"
+        )
         merged = dict(batch_counts)
-        if prev is not None:
-            for r in (
-                spark_active.read.schema("c string, n bigint")
-                .parquet(os.path.join(prev, "counts"))
-                .collect()
-            ):
-                merged[r["c"]] = merged.get(r["c"], 0) + int(r["n"])
-        ep = os.path.join(store_path, f"epoch={e}")
+        for r in [] if prev is None else prev.collect():
+            merged[r["c"]] = merged.get(r["c"], 0) + int(r["n"])
         _write_state_rows(
             spark_active,
             sorted(merged.items()),
             "c string, n bigint",
-            os.path.join(ep, "counts"),
+            _epoch_dir(store_path, e, "counts"),
         )
         pm = _psi_micro(merged)
         _write_state_rows(
@@ -2410,12 +2262,9 @@ def start_psi_stream(
                 )
             ],
             "n_rows bigint, n_categories int, psi_micro bigint, psi double",
-            os.path.join(ep, "summary"),
+            _epoch_dir(store_path, e, "summary"),
         )
 
-    return (
-        rows_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
+    return _start_per_epoch(
+        rows_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
     )

@@ -292,16 +292,29 @@ STREAMING = os.path.join(PKG, "streaming", "pipeline.py")
 _EPOCH_PARSE = ('startswith("epoch=")', 'split("=", 1)', "os.listdir(")
 
 
+def _owners(tree) -> dict[int, str]:
+    """line -> name of the top-level function or assignment holding it."""
+    owner = {}
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            name = node.name
+        elif isinstance(node, ast.Assign) and isinstance(
+            node.targets[0], ast.Name
+        ):
+            name = node.targets[0].id
+        else:
+            continue
+        for ln in range(node.lineno, node.end_lineno + 1):
+            owner[ln] = name
+    return owner
+
+
 def _epoch_protocol_violations(src: str) -> list[str]:
     """Epoch-dir listing outside ``_epochs`` and local-row state writes
     (``createDataFrame(...)`` narrowed to one partition and written)
     outside ``_write_state_rows``."""
     tree = ast.parse(src)
-    owner = {}  # line -> name of the top-level function containing it
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            for ln in range(node.lineno, node.end_lineno + 1):
-                owner[ln] = node.name
+    owner = _owners(tree)
     bad = []
     for ln, line in enumerate(src.splitlines(), 1):
         if owner.get(ln) != "_epochs" and any(p in line for p in _EPOCH_PARSE):
@@ -352,6 +365,102 @@ def start_x_stream(spark, root, e):
 '''
     bad = _epoch_protocol_violations(src)
     assert len(bad) == 2 and "line 9" in bad[0] and "line 11" in bad[1], bad
+
+
+def _epoch_runner_violations(src: str) -> list[str]:
+    """Stream wiring, prior-state reads, epoch-path formatting and imports
+    that bypass the module's one place for each: ``foreachBatch`` outside
+    ``_start_per_epoch`` (which must hold exactly one), ``_newest_before``
+    called from anywhere but ``_prior_state``, an ``epoch=`` string or
+    f-string outside ``_EPOCH_DIR``/``_epoch_dir`` (docstrings exempt),
+    and any function-level import."""
+    tree = ast.parse(src)
+    owner = _owners(tree)
+    docstrings = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(
+            n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        )
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    bad = []
+    wirings = 0
+    for node in ast.walk(tree):
+        where = owner.get(getattr(node, "lineno", 0))
+        if isinstance(node, ast.Call):
+            chain = _dotted(node.func)
+            if chain[-1] == "foreachBatch":
+                if where == "_start_per_epoch":
+                    wirings += 1
+                else:
+                    bad.append((node.lineno, "foreachBatch outside the runner"))
+            if chain == ["_newest_before"] and where != "_prior_state":
+                bad.append((node.lineno, "_newest_before outside _prior_state"))
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "epoch=" in node.value
+            and id(node) not in docstrings
+            and where not in ("_EPOCH_DIR", "_epoch_dir")
+        ):
+            bad.append((node.lineno, "hand-formatted epoch= path"))
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            bad += [
+                (sub.lineno, "function-level import")
+                for sub in ast.walk(node)
+                if isinstance(sub, (ast.Import, ast.ImportFrom))
+            ]
+    if wirings != 1:
+        bad.append((0, f"{wirings} foreachBatch calls in _start_per_epoch"))
+    return [f"line {ln}: {what}" for ln, what in sorted(set(bad))]
+
+
+def test_streaming_tier_has_one_epoch_runner():
+    """Every stream starts through ``_start_per_epoch``, reads its prior
+    state through ``_prior_state`` and formats ``epoch=<e>`` paths through
+    ``_epoch_dir``; the module imports its dependencies once, at the top."""
+    with open(STREAMING) as fh:
+        bad = _epoch_runner_violations(fh.read())
+    assert not bad, f"streaming/pipeline.py bypasses the epoch runner: {bad}"
+
+
+def test_epoch_runner_guard_flags_hand_wired_sites():
+    src = '''
+_EPOCH_DIR = re.compile(r"epoch=(-?\\d+)")
+
+def _epoch_dir(root, e):
+    return f"{root}/epoch={e}"
+
+def _prior_state(spark, root, e, schema):
+    return _newest_before(root, e)
+
+def _start_per_epoch(stream, on_epoch):
+    return stream.writeStream.foreachBatch(on_epoch).start()
+
+def start_x_stream(stream, root):
+    """Writes ``root/epoch=<e>``."""
+    import math
+
+    def on_batch(batch_df, e):
+        prev = _newest_before(root, e)
+        batch_df.write.parquet(f"{root}/epoch={e}")
+        return math.pi, prev
+
+    return stream.writeStream.foreachBatch(on_batch).start()
+'''
+    assert _epoch_runner_violations(src) == [
+        "line 15: function-level import",
+        "line 18: _newest_before outside _prior_state",
+        "line 19: hand-formatted epoch= path",
+        "line 22: foreachBatch outside the runner",
+    ]
+    no_runner = src.replace(".foreachBatch(on_epoch)", "")
+    assert _epoch_runner_violations(no_runner)[0] == (
+        "line 0: 0 foreachBatch calls in _start_per_epoch"
+    )
 
 
 # --- query registry: one order list, one module per domain --------------

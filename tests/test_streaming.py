@@ -1715,6 +1715,55 @@ class TestEpochStateHelpers:
         assert _newest_before(root, 7) == os.path.join(root, "epoch=3")
         assert _newest_before(root, 100) == os.path.join(root, "epoch=7")
 
+    def test_uri_root_raises_instead_of_listing_empty(self, tmp_path):
+        """A URI root used to list as a missing local dir, so every
+        carried-state stream silently restarted from the current batch."""
+        import pytest
+
+        from crowdsorsa_etl_spark.streaming.pipeline import (
+            _epochs,
+            compact_shard_epochs,
+        )
+
+        root = self._store(tmp_path, "epoch=0", "epoch=1")
+        assert _epochs(root) == [0, 1]
+        for uri in (f"file://{root}", f"file:{root}", "hdfs://nn:8020/s"):
+            with pytest.raises(ValueError, match="local paths only"):
+                _epochs(uri)
+        with pytest.raises(ValueError, match="local paths only"):
+            compact_shard_epochs(None, f"file://{root}")
+        with pytest.raises(ValueError, match="local paths only"):
+            compact_shard_epochs(None, root, f"file://{root}")
+        assert _epochs(root) == [0, 1]  # nothing was touched
+
+    def test_prior_state_of_missing_root_is_none(self, tmp_path):
+        from crowdsorsa_etl_spark.streaming.pipeline import _prior_state
+
+        # no spark session is touched when there is nothing to read
+        assert _prior_state(None, str(tmp_path / "missing"), 3, "n long") is None
+        root = self._store(tmp_path, "epoch=3")
+        assert _prior_state(None, root, 3, "n long") is None
+
+    def test_prior_state_reads_sub_path_with_declared_schema(
+        self, spark, tmp_path
+    ):
+        """The newest epoch below ``e`` is read at ``name`` with the
+        declared schema — not the schema the file would infer (int here),
+        and never the running epoch's own state."""
+        from crowdsorsa_etl_spark.streaming.pipeline import (
+            _epoch_dir,
+            _prior_state,
+        )
+
+        root = str(tmp_path)
+        for e, n in ((0, 10), (2, 20), (5, 50)):
+            spark.createDataFrame([(n,)], "n int").write.parquet(
+                _epoch_dir(root, e, "counts")
+            )
+        prev = _prior_state(spark, root, 5, "n long", "counts")
+        assert prev.schema.simpleString() == "struct<n:bigint>"
+        assert [r["n"] for r in prev.collect()] == [20]
+
     def test_hll_stream_ignores_stray_epoch_dir(self, spark, tmp_path):
         """A leftover ``epoch=0__old`` in the store (a crash mid-swap)
         must neither crash the stream nor change where it lands: the
