@@ -14,18 +14,110 @@ from the previous event; valid_to is the next version's valid_from (NULL on
 the current version). Consecutive events with unchanged tracked values
 collapse into their version — SCD2 records CHANGES, not events.
 
-Scale shape: ONE hash shuffle on the key — the change-detection lag, the
-version-numbering row_number, and the valid_to lead all share the same
-(key × order) window partitioning, so Catalyst plans a single Exchange +
-one sort for the whole operator (plan-asserted in tests).
+Scale shape: ONE hash shuffle on the key, for the full build and for the
+incremental apply alike. The change-detection lag, the version-numbering
+row_number, the valid_to lead and the per-key aggregates all share the same
+(key × order) window partitioning (:func:`_collapse`), so Catalyst plans a
+single Exchange + one sort for the whole operator; the apply unions the
+stored versions with the batch BEFORE that exchange, so deciding which keys
+a batch touches and what their watermark is costs no extra job, join or
+broadcast (plan-asserted in tests).
+
+Every parquet read here declares its schema (derived from the batch), and
+the watermark buffer keeps its row count and max timestamp in a
+``_stats.json`` next to the rows, so the driver never launches a Spark job
+to learn what it already wrote.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+import datetime as _dt
+import json
+import os
+from datetime import timedelta
 
-from crowdsorsa_etl_spark.operators.checkpointing import materialize
+from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
+
+
+def _collapse(
+    rows: DataFrame,
+    *,
+    key_cols: list[str],
+    ts_col: str,
+    tracked_cols: list[str],
+    order: list[str],
+    tagged: bool = False,
+) -> DataFrame:
+    """The run collapse behind :func:`scd2_build` and the incremental apply.
+
+    ``order`` names the (ascending) columns that order a key's rows after
+    ``ts_col``. ``tagged`` marks the apply's union: rows of keys the batch
+    does not touch (``_aff == 0``) are stored versions that pass through
+    verbatim from their ``_vord`` (version), ``_valid_to``, ``_is_current``
+    and ``_seen`` (last_seen_ts) columns, and a touched key's current
+    version never gets a last_seen_ts below the previous watermark
+    ``_last``.
+    """
+    w, whole = _windows(key_cols, [ts_col, *order])
+
+    def changed(c: str) -> Column:
+        # null-safe inequality: NULL → value and value → NULL both open a
+        # new version; NULL → NULL does not
+        return ~F.col(c).eqNullSafe(F.lag(c).over(w))
+
+    # row_number, not lag(ts).isNull(): a NULL timestamp in the log would
+    # make the SECOND row's lag NULL too and open a spurious version
+    is_change = F.row_number().over(w) == 1  # first event per key
+    for c in tracked_cols:
+        is_change = is_change | changed(c)
+    stored = F.col("_aff") == 0  # read only for a tagged union
+    if tagged:
+        is_change = is_change | stored
+
+    # the raw event just before this one: at a change row that is the
+    # PREVIOUS run's final event — so a version's last_seen_ts is the NEXT
+    # version row's _prev_raw (the final version's is the key max). The
+    # key max is a whole-frame window over w: still one Exchange, one sort.
+    marked = (
+        rows.withColumn("_chg", is_change)
+        .withColumn("_prev_raw", F.lag(ts_col).over(w))
+        .withColumn("_key_max", F.max(ts_col).over(whole))
+        .filter(F.col("_chg"))
+    )
+    nxt = F.lead(ts_col).over(w)
+    seen = F.coalesce(F.lead("_prev_raw").over(w), F.col("_key_max"))
+    if tagged:
+        # a batch whose events for a key were ALL dropped as late must not
+        # REGRESS the guard: replaying priors at valid_from forgets tails
+        seen = F.when(
+            nxt.isNull(), F.greatest(seen, F.col("_last"))
+        ).otherwise(seen)
+    out = {
+        "valid_to": (nxt, "_valid_to"),
+        "version": (F.row_number().over(w).cast("int"), "_vord"),
+        "is_current": (nxt.isNull(), "_is_current"),
+        "last_seen_ts": (seen, "_seen"),
+    }
+    return marked.select(
+        *key_cols,
+        *tracked_cols,
+        F.col(ts_col).alias("valid_from"),
+        *[
+            (F.when(stored, F.col(kept)).otherwise(e) if tagged else e)
+            .alias(c)
+            for c, (e, kept) in out.items()
+        ],
+    )
+
+
+def _windows(key_cols: list[str], order: list[str]):
+    """(ordered window, its whole-partition frame) over one partitioning."""
+    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).asc() for c in order])
+    return w, w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
 
 def scd2_build(
@@ -45,43 +137,29 @@ def scd2_build(
     late-event guard needs — an event earlier than the current version's
     last_seen_ts could split an already-collapsed run.
     """
-    order = [F.col(ts_col).asc()] + [
-        F.col(c).asc() for c in (tie_break_cols or [])
-    ]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-
-    def changed(c: str) -> Column:
-        # null-safe inequality: NULL → value and value → NULL both open a
-        # new version; NULL → NULL does not
-        return ~F.col(c).eqNullSafe(F.lag(c).over(w))
-
-    # row_number, not lag(ts).isNull(): a NULL timestamp in the log would
-    # make the SECOND row's lag NULL too and open a spurious version
-    is_change = F.row_number().over(w) == 1  # first event per key
-    for c in tracked_cols:
-        is_change = is_change | changed(c)
-
-    # the raw event just before this one: at a change row that is the
-    # PREVIOUS run's final event — so a version's last_seen_ts is the NEXT
-    # version row's _prev_raw (the final version's is the key max). Both
-    # extra windows share w's partitioning: still one Exchange.
-    w_key = Window.partitionBy(*key_cols)
-    marked = (
-        changes.withColumn("_chg", is_change)
-        .withColumn("_prev_raw", F.lag(ts_col).over(w))
-        .withColumn("_key_max", F.max(ts_col).over(w_key))
-        .filter(F.col("_chg"))
+    return _collapse(
+        changes,
+        key_cols=key_cols,
+        ts_col=ts_col,
+        tracked_cols=tracked_cols,
+        order=list(tie_break_cols or []),
     )
-    return marked.select(
-        *key_cols,
-        *tracked_cols,
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
-        F.row_number().over(w).cast("int").alias("version"),
-        F.lead(ts_col).over(w).isNull().alias("is_current"),
-        F.coalesce(F.lead("_prev_raw").over(w), F.col("_key_max")).alias(
-            "last_seen_ts"
-        ),
+
+
+def _versions_schema(
+    events: T.StructType, key_cols: list[str], ts_col: str, tracked_cols: list[str]
+) -> T.StructType:
+    """The on-disk versions layout, derived from the batch's schema."""
+    ts = events[ts_col].dataType
+    return T.StructType(
+        [T.StructField(c, events[c].dataType) for c in (*key_cols, *tracked_cols)]
+        + [
+            T.StructField("valid_from", ts),
+            T.StructField("valid_to", ts),
+            T.StructField("version", T.IntegerType()),
+            T.StructField("is_current", T.BooleanType()),
+            T.StructField("last_seen_ts", ts),
+        ]
     )
 
 
@@ -99,11 +177,15 @@ def scd2_apply_batch(
     """Incrementally maintain a parquet SCD2 table from change-log batches
     (the ``foreachBatch`` body for streaming CDC ingestion).
 
-    Only the batch's AFFECTED KEYS are touched: their existing versions are
-    replayed as a change log (a version row IS its run's opening event),
-    unioned with the new events, and re-collapsed with :func:`scd2_build`;
-    untouched keys' rows are carried over verbatim. Runs collapse ACROSS
-    batches: a batch that continues a key's current value opens no version.
+    Only the batch's AFFECTED KEYS are re-collapsed: their existing
+    versions are replayed as a change log (a version row IS its run's
+    opening event) together with the new events; untouched keys' rows are
+    carried over verbatim. Runs collapse ACROSS batches: a batch that
+    continues a key's current value opens no version. Stored versions
+    (``_src=0``) and batch events (``_src=1``) are unioned first, and per-key
+    window aggregates over the union decide whether a key is touched
+    (``max(_src)``) and its watermark (``max(last_seen_ts)``), so the whole
+    apply is one plan with one hash exchange.
 
     MONOTONIC-APPEND CONTRACT (the reason this can use collapsed versions
     instead of retaining raw events): an event AT OR BEFORE its key's LAST
@@ -115,39 +197,39 @@ def scd2_apply_batch(
     and the guard rejects anything ≤ the key's max of it (NULL timestamps
     on existing keys too — they cannot be ordered against history):
     ``on_late="error"`` (default) raises; ``"drop"`` skips them (the
-    watermark-expired branch of a streaming pipeline). Strictly-later
-    events merge exactly; same-timestamp PRIOR versions keep their
-    original order on replay (source-rank + original version tie-breaks).
+    watermark-expired branch of a streaming pipeline). Error mode counts
+    late events with an ``Observation`` on the write itself and raises
+    before the swap, so the table is never touched. Strictly-later events
+    merge exactly; same-timestamp PRIOR versions keep their original order
+    on replay (source-rank + original version tie-breaks).
 
     After an incremental rebuild, the key's max ``last_seen_ts`` never
     regresses (the current version's value is floored at the previous
     watermark — a drop-mode batch whose events ALL turn out late must not
     lower the guard for the next batch); historical versions'
     last_seen_ts are best-effort (their collapsed tails are gone by
-    design). Tables written before last_seen_ts existed are upgraded on
-    read with ``valid_from`` as a conservative watermark.
+    design). Tables written before last_seen_ts existed read it as NULL
+    and are upgraded with ``valid_from`` as a conservative watermark.
 
-    Returns the new full versions DataFrame. The table swap uses
-    write-to-temp + rename-aside (``sinks/writers._swap_dirs``), so a crash
-    mid-write leaves the old or new table recoverable — never neither; a
-    crash BETWEEN the two swap renames leaves the table under
-    ``<dir>__old``, which the fresh-build branch detects and refuses to
-    silently shadow with a one-batch rebuild.
+    Returns the new full versions DataFrame, read back from the written
+    files. The table swap uses write-to-temp + rename-aside
+    (``sinks/writers._swap_dirs``), so a crash mid-write leaves the old or
+    new table recoverable — never neither; a crash BETWEEN the two swap
+    renames leaves the table under ``<dir>__old``, which the fresh-build
+    branch detects and refuses to silently shadow with a one-batch rebuild.
     """
     if on_late not in {"error", "drop"}:
         raise ValueError(f"on_late must be 'error' or 'drop', got {on_late!r}")
-    from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
 
     ties = list(tie_break_cols or [])
     events = batch.select(*key_cols, ts_col, *tracked_cols, *ties)
+    vschema = _versions_schema(events.schema, key_cols, ts_col, tracked_cols)
+    build_kw = dict(key_cols=key_cols, ts_col=ts_col, tracked_cols=tracked_cols)
 
     jvm = spark._jvm
     P = jvm.org.apache.hadoop.fs.Path
     jvm_path = P(versions_dir)
     fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    build_kw = dict(
-        key_cols=key_cols, ts_col=ts_col, tracked_cols=tracked_cols
-    )
     if not fs.exists(jvm_path):
         # a crash between _swap_dirs' two renames leaves the real table at
         # __old; treating that as "no table" would silently restart history
@@ -160,76 +242,104 @@ def scd2_apply_batch(
                 "place (its contents are the last complete table) before "
                 "applying more batches"
             )
-        out = materialize(scd2_build(events, tie_break_cols=ties, **build_kw))
-        out.write.mode("overwrite").parquet(versions_dir)
-        return out
+        scd2_build(events, tie_break_cols=ties, **build_kw).write.mode(
+            "overwrite"
+        ).parquet(versions_dir)
+        return spark.read.schema(vschema).parquet(versions_dir)
 
-    versions = spark.read.parquet(versions_dir)
-    if "last_seen_ts" not in versions.columns:  # pre-last_seen_ts table
-        versions = versions.withColumn("last_seen_ts", F.col("valid_from"))
-    affected = events.select(*key_cols).distinct()
-    untouched = versions.join(affected, key_cols, "left_anti")
-    current = versions.join(affected, key_cols, "left_semi")
+    def typed_null(name: str, dtype) -> Column:
+        return F.lit(None).cast(dtype).alias(name)
 
-    # watermark = last SEEN raw event per key (not max valid_from — see
-    # docstring): anything at-or-before it could split a collapsed run or
-    # tie against a collapsed tail event that no longer exists to order by
-    last = current.groupBy(*key_cols).agg(F.max("last_seen_ts").alias("_last"))
-    with_last = events.join(F.broadcast(last), key_cols, "left")
-    is_late = F.col("_last").isNotNull() & (
-        F.col(ts_col).isNull() | (F.col(ts_col) <= F.col("_last"))
-    )
-    if on_late == "error":  # "drop" never pays the extra count job
-        n_late = with_last.filter(is_late).count()
-        if n_late:
-            raise ValueError(
-                f"{n_late} batch event(s) do not come strictly after their "
-                "key's last seen event; a collapsed SCD2 table cannot "
-                "replay run splits or watermark-boundary ties — feed late "
-                "data through a raw-log rebuild, or pass on_late='drop' "
-                "for watermark-expired events"
-            )
-    ok = with_last.filter(~is_late).drop("_last")
-
-    # existing versions replayed as events. Same-timestamp PRIOR versions
-    # keep their original order via (_src, original version) tie-breaks.
-    tie_types = dict(events.dtypes)
-    prior = current.select(
+    ts_type = vschema["valid_from"].dataType
+    # existing versions replayed as events, carrying their stored columns
+    # for the verbatim pass-through of untouched keys
+    prior = spark.read.schema(vschema).parquet(versions_dir).select(
         *key_cols,
         F.col("valid_from").alias(ts_col),
         *tracked_cols,
+        *[typed_null(c, events.schema[c].dataType) for c in ties],
         F.lit(0).alias("_src"),
         F.col("version").alias("_vord"),
-        *[F.lit(None).cast(tie_types[c]).alias(c) for c in ties],
+        F.col("valid_to").alias("_valid_to"),
+        F.col("is_current").alias("_is_current"),
+        F.coalesce("last_seen_ts", "valid_from").alias("_seen"),
     )
-    merged = prior.unionByName(
-        ok.withColumn("_src", F.lit(1))
-        .withColumn("_vord", F.lit(None).cast("int"))
-        .select(prior.columns)
+    fresh = events.select(
+        "*",
+        F.lit(1).alias("_src"),
+        typed_null("_vord", T.IntegerType()),
+        typed_null("_valid_to", ts_type),
+        typed_null("_is_current", T.BooleanType()),
+        typed_null("_seen", ts_type),
     )
-    rebuilt = scd2_build(
-        merged, tie_break_cols=["_src", "_vord", *ties], **build_kw
+    # same-timestamp PRIOR versions keep their original order via the
+    # (_src, original version) tie-breaks, ahead of the caller's ties
+    order = ["_src", "_vord", *ties]
+    _, whole = _windows(key_cols, [ts_col, *order])
+    tagged = (
+        prior.unionByName(fresh)
+        .withColumn("_aff", F.max("_src").over(whole))
+        # watermark = last SEEN raw event per key (not max valid_from — see
+        # docstring): anything at-or-before it could split a collapsed run
+        # or tie against a collapsed tail event that no longer exists
+        .withColumn("_last", F.max("_seen").over(whole))
     )
-    # floor the current version's last_seen_ts at the previous watermark:
-    # replaying priors at valid_from forgets collapsed tails, and a batch
-    # whose events for a key were ALL dropped as late would otherwise
-    # REGRESS the guard and admit the run-splitting event on its next try
-    rebuilt = rebuilt.join(F.broadcast(last), key_cols, "left").withColumn(
-        "last_seen_ts",
-        F.when(
-            F.col("is_current"),
-            F.greatest(F.col("last_seen_ts"), F.col("_last")),
-        ).otherwise(F.col("last_seen_ts")),
-    ).drop("_last")
-    # ONE materialization: write the union to tmp (this still reads the
-    # old versions_dir — the swap happens after), then serve the result
-    # from the swapped files. The previous localCheckpoint-then-write
-    # paid a second full pass per batch for the same lineage cut.
-    out = untouched.unionByName(rebuilt)
+    is_late = (
+        (F.col("_src") == 1)
+        & F.col("_last").isNotNull()
+        & (F.col(ts_col).isNull() | (F.col(ts_col) <= F.col("_last")))
+    )
+    late = None
+    if on_late == "error":  # "drop" never pays for the metric
+        late = Observation()
+        tagged = tagged.observe(late, F.sum(is_late.cast("int")).alias("n"))
+    out = _collapse(tagged.filter(~is_late), order=order, tagged=True, **build_kw)
+    # ONE materialization: write to tmp (this still reads the old
+    # versions_dir — the swap happens after), then serve the result from
+    # the swapped files
     tmp = versions_dir.rstrip("/") + "__scd2_tmp"
     out.write.mode("overwrite").parquet(tmp)
+    n_late = (late.get["n"] or 0) if late is not None else 0
+    if n_late:
+        fs.delete(P(tmp), True)
+        raise ValueError(
+            f"{n_late} batch event(s) do not come strictly after their "
+            "key's last seen event; a collapsed SCD2 table cannot "
+            "replay run splits or watermark-boundary ties — feed late "
+            "data through a raw-log rebuild, or pass on_late='drop' "
+            "for watermark-expired events"
+        )
     _swap_dirs(jvm, fs, versions_dir, tmp)
-    return spark.read.parquet(versions_dir)
+    return spark.read.schema(vschema).parquet(versions_dir)
+
+
+def _json_write(path: str, obj) -> None:
+    """tmp + os.replace, so a killed writer never leaves a partial file."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _json_read(path: str):
+    """The parsed JSON object at ``path``, or None if absent/corrupt."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def _encode_ts(value):
+    if isinstance(value, (_dt.datetime, _dt.date)):
+        return value.isoformat()
+    return value
+
+
+def _decode_ts(value, ts_type: str):
+    if value is not None and ts_type.startswith(("timestamp", "date")):
+        return _dt.datetime.fromisoformat(value)
+    return value
 
 
 def _wm_sidecar_write(buffer_dir: str, wm_value, ts_type: str) -> None:
@@ -237,65 +347,59 @@ def _wm_sidecar_write(buffer_dir: str, wm_value, ts_type: str) -> None:
 
     The watermark is ONE driver-side scalar; storing it as a one-row
     parquet cost a full Spark write job per batch plus a read+collect job
-    per read (r16 optimization, guide §5: the driver should not pay
-    cluster jobs for its own metadata). tmp + os.replace keeps a killed
-    writer from leaving a partial file."""
-    import datetime as _dt
-    import json
-    import os
-
+    per read (the driver should not pay cluster jobs for its own
+    metadata)."""
     os.makedirs(buffer_dir.rstrip("/"), exist_ok=True)
-    path = os.path.join(buffer_dir.rstrip("/"), "wm.json")
-    val = (
-        wm_value.isoformat()
-        if isinstance(wm_value, (_dt.datetime, _dt.date))
-        else wm_value
+    _json_write(
+        os.path.join(buffer_dir.rstrip("/"), "wm.json"),
+        {"wm": _encode_ts(wm_value), "type": ts_type},
     )
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"wm": val, "type": ts_type}, fh)
-    os.replace(tmp, path)
 
 
 def _wm_sidecar_read(buffer_dir: str):
     """Watermark from the JSON sidecar, or None if absent/corrupt."""
-    import datetime as _dt
-    import json
-    import os
-
-    path = os.path.join(buffer_dir.rstrip("/"), "wm.json")
-    if not os.path.exists(path):
+    obj = _json_read(os.path.join(buffer_dir.rstrip("/"), "wm.json"))
+    if not isinstance(obj, dict):
         return None
-    try:
-        with open(path) as fh:
-            obj = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    val = obj.get("wm")
-    if val is None:
-        return None
-    if str(obj.get("type", "")).startswith("timestamp") or str(
-        obj.get("type", "")
-    ).startswith("date"):
-        return _dt.datetime.fromisoformat(val)
-    return val
+    return _decode_ts(obj.get("wm"), str(obj.get("type", "")))
 
 
-def _read_buffer(spark, buffer_dir: str, events_schema):
-    """(held_events | None, prev_watermark | None) from the buffer dir."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(buffer_dir).getFileSystem(spark._jsc.hadoopConfiguration())
-    held = wm = None
-    if fs.exists(P(buffer_dir.rstrip("/") + "/events")):
-        held = spark.read.parquet(buffer_dir.rstrip("/") + "/events")
+def _buffer_stats(ev_dir: str):
+    """(held row count, max ts, held schema) from ``<events>/_stats.json``,
+    or None for a buffer written before the stats existed. Spark's file
+    index skips ``_``-prefixed names, so the file never reads as data."""
+    obj = _json_read(os.path.join(ev_dir, "_stats.json"))
+    if not isinstance(obj, dict):
+        return None
+    schema = T.StructType.fromJson(obj["schema"])
+    return obj["n"], _decode_ts(obj["max"], obj["type"]), schema
+
+
+def _held(spark, ev_dir: str, schema: T.StructType | None):
+    """The held raw events, or None when the buffer has no events dir.
+    ``schema`` is None only for a pre-stats buffer of unknown layout."""
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    fs = P(ev_dir).getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(P(ev_dir)):
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(ev_dir)
+
+
+def _prev_watermark(spark, buffer_dir: str, ts_type: T.DataType):
+    """The buffer's stream watermark, or None before the first batch."""
     wm = _wm_sidecar_read(buffer_dir)
-    if wm is None and fs.exists(P(buffer_dir.rstrip("/") + "/wm")):
-        # legacy layout: one-row parquet written by pre-r16 code — a warm
-        # fixture cache may still carry it
-        rows = spark.read.parquet(buffer_dir.rstrip("/") + "/wm").collect()
+    legacy = buffer_dir.rstrip("/") + "/wm"
+    if wm is None and os.path.isdir(legacy):
+        # legacy layout: a one-row parquet (column ``wm``) written by
+        # pre-sidecar code — a warm fixture cache may still carry it
+        rows = (
+            spark.read.schema(T.StructType([T.StructField("wm", ts_type)]))
+            .parquet(legacy)
+            .collect()
+        )
         wm = rows[0][0] if rows else None
-    return held, wm
+    return wm
 
 
 def scd2_apply_batch_buffered(
@@ -330,7 +434,11 @@ def scd2_apply_batch_buffered(
        (property-tested); the inner call runs with ``on_late='drop'``,
        which by the same argument can only ever drop crash-replayed
        events — idempotent recovery, never silent data loss;
-    3. events above the new watermark are held (re-written buffer).
+    3. events above the new watermark are held (re-written buffer). The
+       hold write observes its own row count and max timestamp and stores
+       them, with the buffer's schema, as ``_stats.json`` inside the new
+       buffer dir before the swap, so the stats always describe the rows
+       next to them and :func:`scd2_flush_buffer` needs no aggregate job.
 
     Returns the on-disk versions table after this batch (None when nothing
     has finalized yet). ``scd2_flush_buffer`` drains the tail at stream
@@ -340,11 +448,13 @@ def scd2_apply_batch_buffered(
     """
     if on_late not in {"error", "drop"}:
         raise ValueError(f"on_late must be 'error' or 'drop', got {on_late!r}")
-    from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
 
     ties = list(tie_break_cols or [])
     events = batch.select(*key_cols, ts_col, *tracked_cols, *ties)
-    held, prev_wm = _read_buffer(spark, buffer_dir, events.schema)
+    ts_type = events.schema[ts_col].dataType
+    ev_dir = buffer_dir.rstrip("/") + "/events"
+    held = _held(spark, ev_dir, events.schema)
+    prev_wm = _prev_watermark(spark, buffer_dir, ts_type)
 
     # ONE aggregate answers everything the old path paid four jobs for
     # (beyond-bound count, max_ts, finalize-nonempty probe, plus a pool
@@ -385,7 +495,6 @@ def scd2_apply_batch_buffered(
     max_ts = stats["mx"]
     if max_ts is None:  # empty batch + empty buffer
         return None
-    from datetime import timedelta
 
     wm_value = max_ts - timedelta(seconds=float(max_delay_seconds))
     if prev_wm is not None and prev_wm > wm_value:
@@ -407,18 +516,28 @@ def scd2_apply_batch_buffered(
             on_late="drop",  # only crash-replays can trip it (see docstring)
         )
     # the new buffer derives from the OLD buffer files, so write aside
-    # and rename-swap instead of overwriting what the plan is reading
-    # (this replaces the old whole-pool localCheckpoint — one fewer full
-    # materialization per batch, same crash window as the versions swap)
-    ev_dir = buffer_dir.rstrip("/") + "/events"
+    # and rename-swap instead of overwriting what the plan is reading;
+    # the stats land in the tmp dir first and move with the rows
     ev_tmp = ev_dir + "__scd2_tmp"
-    hold.write.mode("overwrite").parquet(ev_tmp)
+    seen = Observation()
+    hold.observe(
+        seen, F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mx")
+    ).write.mode("overwrite").parquet(ev_tmp)
+    _json_write(
+        os.path.join(ev_tmp, "_stats.json"),
+        {
+            "n": seen.get["n"],
+            "max": _encode_ts(seen.get["mx"]),
+            "type": ts_type.simpleString(),
+            "schema": hold.schema.jsonValue(),
+        },
+    )
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(ev_dir).getFileSystem(
         spark._jsc.hadoopConfiguration()
     )
     _swap_dirs(jvm, fs, ev_dir, ev_tmp)  # handles the no-prior-dir case
-    _wm_sidecar_write(buffer_dir, wm_value, dict(pool.dtypes)[ts_col])
+    _wm_sidecar_write(buffer_dir, wm_value, ts_type.simpleString())
     return out
 
 
@@ -433,20 +552,23 @@ def scd2_flush_buffer(
     tie_break_cols: list[str] | None = None,
 ) -> DataFrame | None:
     """Finalize every held event (end-of-stream / planned shutdown). The
-    buffer is emptied; the watermark advances to the flushed max."""
-    ties = list(tie_break_cols or [])
-    held, prev_wm = _read_buffer(spark, buffer_dir, None)
+    buffer is emptied; the watermark advances to the flushed max.
+
+    The held count and max come from the buffer's ``_stats.json``; only a
+    buffer written before the stats existed pays one aggregate job."""
+    ev_dir = buffer_dir.rstrip("/") + "/events"
+    known = _buffer_stats(ev_dir)
+    held = _held(spark, ev_dir, known[2] if known else None)
     if held is None:
         return None
-    # one agg answers both the empty probe and the watermark; no
-    # localCheckpoint — scd2_apply_batch fully materializes (write+swap)
-    # before the buffer files are overwritten below
-    row = held.agg(
-        F.max(ts_col).alias("mx"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    if row["n"] == 0:
+    if known is None:
+        row = held.agg(
+            F.count(F.lit(1)).alias("n"), F.max(ts_col).alias("mx")
+        ).collect()[0]
+        known = (row["n"], row["mx"], held.schema)
+    n, max_ts, schema = known
+    if n == 0:
         return None
-    max_ts = row["mx"]
     out = scd2_apply_batch(
         spark,
         versions_dir,
@@ -454,18 +576,15 @@ def scd2_flush_buffer(
         key_cols=key_cols,
         ts_col=ts_col,
         tracked_cols=tracked_cols,
-        tie_break_cols=ties,
+        tie_break_cols=tie_break_cols,
         on_late="drop",
     )
     # drain by DELETING the events dir (a missing dir reads as held=None,
-    # exactly like an empty table) — one fewer Spark write job than the
-    # old explicit-empty-frame write; deletion happens only after
-    # scd2_apply_batch fully materialized (write+swap) above. The
-    # watermark is a sidecar scalar (see _wm_sidecar_write).
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    ev_path = P(buffer_dir.rstrip("/") + "/events")
-    fs = ev_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(ev_path, True)
-    _wm_sidecar_write(buffer_dir, max_ts, dict(held.dtypes)[ts_col])
+    # exactly like an empty table) — deletion happens only after
+    # scd2_apply_batch fully materialized (write+swap) above
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    P(ev_dir).getFileSystem(spark._jsc.hadoopConfiguration()).delete(
+        P(ev_dir), True
+    )
+    _wm_sidecar_write(buffer_dir, max_ts, schema[ts_col].dataType.simpleString())
     return out

@@ -19,7 +19,6 @@ Coverage map to SURVEY.md §2 is noted on each query.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import shutil
@@ -39,7 +38,7 @@ from crowdsorsa_etl_spark.operators.dedup import (
 from crowdsorsa_etl_spark.operators.ngramlm import kneser_ney_token_scores
 from crowdsorsa_etl_spark.operators.similarity import cosine_topk
 from crowdsorsa_etl_spark.operators.substring import _shingle_positions
-from crowdsorsa_etl_spark.sources.parquet import load_table
+from crowdsorsa_etl_spark.sources.parquet import content_fingerprint, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -73,33 +72,22 @@ def _sf_cache_dir(sf_dir: str, tag: str, table: str) -> str:
     """Per-fixture scratch dir for queries that materialize a derived layout
     (partitioned copy, zone-mapped copy, snapshot store).
 
-    The path is keyed on a content fingerprint of the source table (file
-    names + sizes + mtimes), not just the fixture basename: regenerating the
-    sf fixture in place changes the fingerprint, so stale cached layouts are
-    never served. Concurrent processes hashing the same unchanged fixture
+    The path is keyed on the source table's :func:`content_fingerprint`
+    (file names + sizes + mtimes, the same key ``load_table``'s schema memo
+    uses), not just the fixture basename: regenerating the sf fixture in
+    place changes the fingerprint, so stale cached layouts are never
+    served. Concurrent processes hashing the same unchanged fixture
     share one path — safe because every directory artifact under it is
     published through :func:`_at_rest` (JSON tables through
     :func:`_json_sidecar_write`) and builds are idempotent for identical
     input.
     """
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        entries = sorted(os.listdir(src))
-    elif os.path.exists(src):
-        entries = [os.path.basename(src)]
-        src = os.path.dirname(src)
-    else:
-        entries = []
-    for name in entries:
-        st = os.stat(os.path.join(src, name))
-        h.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
     return os.path.join(
         tempfile.gettempdir(),
         f"crowdsorsa_{tag}_"
         + os.path.basename(sf_dir.rstrip("/"))
         + "_"
-        + h.hexdigest()[:12],
+        + content_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))[:12],
     )
 
 

@@ -7,9 +7,11 @@ status logged INFO/ERROR with wall-clock stamps, 100 ms sleep per row
 ``logs{year}.json`` with the token regex-scrubbed.
 
 Engine design:
-* ``foreachPartition`` — each partition opens ONE connection pool and pushes
-  its rows; the rate limit is per partition, so global throughput = limit ×
-  partitions and scales horizontally instead of the reference's global 10/s.
+* ``mapPartitions`` — each partition pushes its rows with its own rate
+  limiter, so global throughput = limit × partitions and scales
+  horizontally instead of the reference's global 10/s. Each POST attempt
+  opens its own connection (``_post_one`` calls ``urlopen`` per attempt);
+  there is no per-partition connection pool or keep-alive.
 * token-bucket limiter + exponential-backoff retry on 5xx/connection errors
   (the reference has no retry at all — a failed POST is only logged).
 * audit rows are RETURNED as data (mapPartitions), not side-collected:

@@ -11,18 +11,60 @@ pruning happens automatically on partition columns in the path.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from crowdsorsa_etl_spark.schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# path → (content fingerprint, inferred schema): one entry per path,
+# replaced when the files change, so sharing it process-wide never
+# serves a stale schema
+_SCHEMAS: dict[str, tuple[str, StructType]] = {}
+
+
+def content_fingerprint(path: str) -> str:
+    """md5 hex of the file names, sizes and ``mtime_ns`` of a parquet table
+    (a directory or one file); a missing path hashes to the empty digest.
+    Rewriting the table in place changes it, so anything keyed on it is
+    never served stale."""
+    h = hashlib.md5()
+    if os.path.isdir(path):
+        entries = sorted(os.listdir(path))
+    elif os.path.exists(path):
+        entries = [os.path.basename(path)]
+        path = os.path.dirname(path)
+    else:
+        entries = []
+    for name in entries:
+        st = os.stat(os.path.join(path, name))
+        h.update(f"{name}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()
+
+
+def _file_schema(spark: SparkSession, path: str) -> StructType:
+    """The physical schema of ``path``, inferred (one Spark job) only when
+    its content fingerprint is new; later reads of the same files reuse it."""
+    fp = content_fingerprint(path)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != fp:
+        hit = _SCHEMAS[path] = (fp, spark.read.parquet(path).schema)
+    return hit[1]
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one fixture table. Schemas are declared, never inferred.
+    """Read one fixture table.
+
+    The file's physical schema is inferred once per content fingerprint
+    (:func:`content_fingerprint`) and passed to every later read with
+    ``.schema(...)``, so re-reading an unchanged fixture launches no Spark
+    job and a regenerated one is inferred again. ``FIXTURE_TABLES`` then
+    fixes the column set and the timestamp normalization below.
 
     Session contract (applies to ANY SparkSession passed in, including an
     externally built one such as the driver harness):
@@ -45,7 +87,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_file_schema(spark, path)).parquet(path)
     expected = FIXTURE_TABLES.get(name)
     declared = {f.name: f.dataType for f in expected.fields} if expected else {}
     # Fixture timestamp columns have shipped as INT64 TIMESTAMP(NANOS) (read

@@ -3,10 +3,13 @@ validity-interval chaining, and the single-Exchange plan contract."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.operators import scd
 from crowdsorsa_etl_spark.operators.scd import scd2_build
 
 
@@ -280,6 +283,51 @@ class TestScd2ApplyBatch:
             (1, "A"), (2, "B"),
         ]
 
+    def test_incremental_write_is_one_exchange(self, spark, tmp_path, monkeypatch):
+        """Affected keys, their watermark and the re-collapse share one
+        (key × order) partitioning: the versions write plans exactly one
+        hash Exchange and no broadcast."""
+        plans = []
+
+        def spy(*a, **kw):
+            out = collapse(*a, **kw)
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
+            return out
+
+        collapse = scd._collapse
+        d = tmp_path / "scd2"
+        self._apply(spark, d, [(1, _ts("2024-01-01T00:00:00"), "A", 1),
+                               (9, _ts("2024-01-01T00:00:00"), "Z", 2)])
+        monkeypatch.setattr(scd, "_collapse", spy)
+        self._apply(spark, d, [(1, _ts("2024-01-02T00:00:00"), "B", 3)])
+        assert len(plans) == 1
+        assert plans[0].count("Exchange hashpartitioning") == 1
+        assert "BroadcastExchange" not in plans[0]
+
+    def test_legacy_table_without_last_seen_upgrades_and_merges(
+        self, spark, tmp_path
+    ):
+        """A versions table written before last_seen_ts existed reads the
+        column as NULL, upgrades it to valid_from, and still merges a batch
+        exactly like a full rebuild."""
+        d = tmp_path / "scd2"
+        b1 = [
+            (1, _ts("2024-01-01T00:00:00"), "A", 1),
+            (1, _ts("2024-01-02T00:00:00"), "B", 2),
+            (9, _ts("2024-01-01T00:00:00"), "Z", 3),  # untouched by batch 2
+        ]
+        b2 = [
+            (1, _ts("2024-01-03T00:00:00"), "B", 4),
+            (1, _ts("2024-01-04T00:00:00"), "A", 5),
+            (2, _ts("2024-01-01T00:00:00"), "C", 6),
+        ]
+        self._full(spark, b1).drop("last_seen_ts").write.parquet(str(d))
+        got = self._apply(spark, d, b2)
+        assert self._key(got) == self._key(self._full(spark, b1 + b2))
+        seen = {(r.user_id, r.version): r.last_seen_ts for r in got.collect()}
+        assert seen[(9, 1)] == _ts("2024-01-01T00:00:00")  # = valid_from
+        assert seen[(1, 3)] == _ts("2024-01-04T00:00:00")
+
 
 class TestScd2Stream:
     def test_streaming_maintenance_matches_batch(self, spark, tmp_path):
@@ -462,6 +510,79 @@ class TestScd2Buffered:
         assert self._key(spark.read.parquet(str(vd))) == self._key(
             self._full(spark, rows)
         )
+
+    def test_legacy_buffer_without_stats_flushes_every_event(
+        self, spark, tmp_path
+    ):
+        """A buffer written before ``_stats.json`` existed falls back to
+        one aggregate and still finalizes every held event."""
+        vd, bd = tmp_path / "v", tmp_path / "b"
+        rows = [
+            (1, _ts("2024-01-01T00:00:00"), "A", 1),
+            (1, _ts("2024-01-02T00:00:00"), "B", 2),
+            (2, _ts("2024-01-02T00:00:00"), "X", 3),
+        ]
+        assert self._apply(spark, vd, bd, rows) is None  # all held
+        os.remove(str(bd / "events" / "_stats.json"))
+        self._flush(spark, vd, bd)
+        got = self._key(spark.read.parquet(str(vd)))
+        assert got == self._key(self._full(spark, rows))
+
+    def test_crash_before_hold_swap_leaves_no_stale_stats(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The stats are written inside the new buffer dir before its swap:
+        a crash between the hold write and the swap leaves the live buffer
+        with the stats of its own rows, and replaying the batch recovers."""
+        vd, bd = tmp_path / "v", tmp_path / "b"
+        b1 = [(1, _ts("2024-01-01T00:00:00"), "A", 1),
+              (1, _ts("2024-01-02T00:00:00"), "B", 2)]
+        b2 = [(1, _ts("2024-01-04T00:00:00"), "C", 3),
+              (2, _ts("2024-01-05T00:00:00"), "D", 4)]
+        self._apply(spark, vd, bd, b1)
+        swap = scd._swap_dirs
+
+        def crash_on_hold(jvm, fs, path, tmp):
+            if path.endswith("/events"):
+                raise OSError("simulated crash before the buffer swap")
+            swap(jvm, fs, path, tmp)
+
+        monkeypatch.setattr(scd, "_swap_dirs", crash_on_hold)
+        with pytest.raises(OSError, match="simulated"):
+            self._apply(spark, vd, bd, b2)
+        monkeypatch.undo()
+
+        def stats_match_rows():
+            n, mx, schema = scd._buffer_stats(str(bd / "events"))
+            held = spark.read.schema(schema).parquet(str(bd / "events"))
+            row = held.agg(F.count(F.lit(1)), F.max("ts")).collect()[0]
+            assert (n, mx) == (row[0], row[1])
+
+        stats_match_rows()  # still b1's rows and b1's stats
+        self._apply(spark, vd, bd, b2)  # the replay after the crash
+        stats_match_rows()
+        self._flush(spark, vd, bd)
+        assert self._key(spark.read.parquet(str(vd))) == self._key(
+            self._full(spark, b1 + b2)
+        )
+
+    def test_warm_apply_and_flush_job_counts(self, spark, tmp_path, count_jobs):
+        """Pinned Spark job counts on a small table, once the buffer and the
+        versions table exist: the buffered apply pays the pool aggregate
+        (2 jobs), the one-shuffle versions write (2) and the hold write (1);
+        the flush pays only the versions write — no schema inference, no
+        aggregate."""
+        vd, bd = tmp_path / "v", tmp_path / "b"
+        self._apply(spark, vd, bd, [
+            (1, _ts("2024-01-01T00:00:00"), "A", 1),
+            (1, _ts("2024-01-05T00:00:00"), "B", 2),
+        ])
+        _, n_apply = count_jobs(lambda: self._apply(spark, vd, bd, [
+            (1, _ts("2024-01-06T00:00:00"), "C", 3),
+            (2, _ts("2024-01-07T00:00:00"), "D", 4),
+        ]))
+        _, n_flush = count_jobs(lambda: self._flush(spark, vd, bd))
+        assert (n_apply, n_flush) == (5, 2)
 
 
 class TestScd2StreamBuffered:

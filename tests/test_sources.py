@@ -1,5 +1,5 @@
-"""Parquet sink maintenance (compaction, upsert) and the malformed-record
-policy of Spark's text readers."""
+"""Parquet sink maintenance (compaction, upsert), the fixture loader's
+schema memo, and the malformed-record policy of Spark's text readers."""
 
 from __future__ import annotations
 
@@ -47,6 +47,30 @@ class TestUpsert:
         upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")
         upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")  # replay
         assert spark.read.parquet(path).count() == 1
+
+
+class TestLoadTableSchemaMemo:
+    def test_unchanged_file_is_inferred_once(self, spark, tmp_path, count_jobs):
+        """The first read of a fixture infers its schema (one job); a second
+        read of the same files launches none; rewriting the file changes its
+        content fingerprint, so the new layout is inferred again."""
+        from crowdsorsa_etl_spark.sources.parquet import load_table
+
+        sf = str(tmp_path)
+        path = str(tmp_path / "memo_t.parquet")
+        spark.range(10).write.parquet(path)
+        df, first = count_jobs(lambda: load_table(spark, "memo_t", sf))
+        _, second = count_jobs(lambda: load_table(spark, "memo_t", sf))
+        assert (first, second) == (1, 0)
+        assert df.columns == ["id"]
+
+        spark.range(10).selectExpr("id", "id * 2 AS twice").write.mode(
+            "overwrite"
+        ).parquet(path)
+        df, rewritten = count_jobs(lambda: load_table(spark, "memo_t", sf))
+        assert rewritten == 1
+        assert df.columns == ["id", "twice"]
+        assert df.agg({"twice": "sum"}).collect()[0][0] == 90
 
 
 class TestCorruptRecords:
