@@ -16,7 +16,7 @@ language-ID heuristic, quality scoring, token counting, fingerprinting.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -34,18 +34,18 @@ MOJIBAKE_MAP: dict[str, str] = {
 }
 
 
-def repair_mojibake(col: Column, pairs: dict[str, str] | None = None) -> Column:
+def repair_mojibake(col: Column) -> Column:
     """Chained literal replacements fixing latin1/UTF-8 double encoding."""
     out = col
-    for bad, good in (pairs or MOJIBAKE_MAP).items():
+    for bad, good in MOJIBAKE_MAP.items():
         out = F.replace(out, F.lit(bad), F.lit(good))
     return out
 
 
-def fix_year_typo(col: Column, bad: str = "2026", good: str = "2024") -> Column:
+def fix_year_typo(col: Column) -> Column:
     """First-occurrence substitution (R ``sub``); date strings carry the year
     once and first, so anchoring at the start is an exact equivalent."""
-    return F.regexp_replace(col, "^" + bad, good)
+    return F.regexp_replace(col, "^2026", "2024")
 
 
 # ---------------------------------------------------------------------------
@@ -61,6 +61,14 @@ def normalize_text(col: Column) -> Column:
     trim, collapse whitespace runs to single spaces, lowercase. Keep the
     two in lockstep — a drift silently desynchronizes oracles."""
     return F.lower(F.regexp_replace(F.trim(col), _WS, " "))
+
+
+def normalized_tokens(df: DataFrame, text_col: str) -> DataFrame:
+    """One ``token`` row per non-empty word of the normalized text — the
+    token stream the frequency sketches (Misra–Gries, Count-Min) count."""
+    return df.select(
+        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("token")
+    ).filter(F.col("token") != "")
 
 
 #: tiny per-language stopword seeds for the n-gram language heuristic
@@ -232,7 +240,7 @@ def char_entropy(col: Column) -> Column:
     )
 
 
-def char_entropy_sql(text_expr: str = "text") -> str:
+def char_entropy_sql() -> str:
     """DuckDB scalar replay of :func:`char_entropy` for a ``documents``-like
     row source — returns a SELECT producing (doc_id, entropy)."""
     return f"""
@@ -245,7 +253,7 @@ def char_entropy_sql(text_expr: str = "text") -> str:
                AS total
       FROM (
         SELECT doc_id,
-               unnest(string_split(lower(regexp_replace(trim({text_expr}),
+               unnest(string_split(lower(regexp_replace(trim(text),
                                                         '\\s+', ' ', 'g')),
                                    '')) AS ch
         FROM documents

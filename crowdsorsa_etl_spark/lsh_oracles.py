@@ -222,8 +222,8 @@ _COSINE = (
 
 def _srp_bucket_sql(vec: str, dim: int, table: int, n_bits: int) -> str:
     """One table's packed bucket key: sum of bit weights where the projection
-    onto plane (table, bit) is positive — mirrors similarity.srp_signature /
-    srp_buckets_arrow bit packing exactly."""
+    onto plane (table, bit) is positive — mirrors similarity.srp_buckets_arrow
+    bit packing exactly."""
     from crowdsorsa_etl_spark.operators.similarity import _srp_plane
 
     terms = []

@@ -54,9 +54,9 @@ def _positions_sql(expr: str) -> list[str]:
     return [md5_word_sql(expr, 1 + 4 * i, 4) for i in range(BLOOM_K)]
 
 
-def bloom_build(keys: DataFrame, key_col: str = "s") -> DataFrame:
+def bloom_build(keys: DataFrame) -> DataFrame:
     """(word int, bits bigint) packed filter over distinct keys."""
-    pos = F.explode(F.array(*_positions_spark(F.col(key_col)))).alias("pos")
+    pos = F.explode(F.array(*_positions_spark(F.col("s")))).alias("pos")
     return (
         keys.select(pos)
         .select(
@@ -68,7 +68,7 @@ def bloom_build(keys: DataFrame, key_col: str = "s") -> DataFrame:
     )
 
 
-def bloom_probe(probes: DataFrame, flt: DataFrame, key_col: str = "s") -> DataFrame:
+def bloom_probe(probes: DataFrame, flt: DataFrame) -> DataFrame:
     """probes + boolean ``bloom_pass``: all k positions set. ``flt`` is
     broadcast (it is KBs by construction). Duplicate probe keys are fine:
     membership compares hits against the probed-position COUNT per key,
@@ -76,11 +76,11 @@ def bloom_probe(probes: DataFrame, flt: DataFrame, key_col: str = "s") -> DataFr
     genuine member as false for any key probed more than once — a
     false-negative, the one error class a Bloom filter must never make).
     Output is one row per DISTINCT key."""
-    pos_arr = F.array(*_positions_spark(F.col(key_col)))
+    pos_arr = F.array(*_positions_spark(F.col("s")))
     exploded = probes.select(
-        key_col, F.posexplode(pos_arr).alias("_i", "pos")
+        "s", F.posexplode(pos_arr).alias("_i", "pos")
     ).select(
-        key_col,
+        "s",
         "_i",
         F.expr(f"pos div {_WORD}").cast("int").alias("word"),
         F.expr(f"shiftleft(cast(1 as bigint), pos % {_WORD})").alias("_b"),
@@ -88,27 +88,25 @@ def bloom_probe(probes: DataFrame, flt: DataFrame, key_col: str = "s") -> DataFr
     hit = (
         exploded.join(F.broadcast(flt), "word", "left")
         .select(
-            key_col,
+            "s",
             (
                 F.coalesce(F.col("bits"), F.lit(0)).bitwiseAND(F.col("_b"))
                 != 0
             ).cast("int").alias("_hit"),
         )
-        .groupBy(key_col)
+        .groupBy("s")
         .agg((F.sum("_hit") == F.count(F.lit(1))).alias("bloom_pass"))
     )
     return hit
 
 
-def bloom_prune_sql(
-    eval_keys_sql: str, probe_keys_sql: str, key: str = "s"
-) -> str:
+def bloom_prune_sql(eval_keys_sql: str, probe_keys_sql: str) -> str:
     """One-row oracle: filter-chain md5 (pins every packed word), probe
     counts, exact-match split, measured FP rate."""
     pos_build = " UNION ALL ".join(
-        f"SELECT {p} AS pos FROM ek" for p in _positions_sql(key)
+        f"SELECT {p} AS pos FROM ek" for p in _positions_sql("s")
     )
-    pos_probe = ", ".join(_positions_sql(key))
+    pos_probe = ", ".join(_positions_sql("s"))
     probe_hits = " + ".join(
         f"""CASE WHEN (coalesce((SELECT bits FROM flt
              WHERE flt.word = CAST(p{i} // {_WORD} AS INT)), 0)
@@ -133,10 +131,10 @@ def bloom_prune_sql(
       FROM flt
     ),
     probed AS (
-      SELECT {key},
+      SELECT s,
              ({probe_hits}) = {BLOOM_K} AS pass,
-             {key} IN (SELECT {key} FROM ek) AS truth
-      FROM (SELECT {key}, {pos_probe.replace(key, key)} FROM pk) _p({key}, p0, p1, p2, p3)
+             s IN (SELECT s FROM ek) AS truth
+      FROM (SELECT s, {pos_probe} FROM pk) _p(s, p0, p1, p2, p3)
     ),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n_probes,

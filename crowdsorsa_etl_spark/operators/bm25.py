@@ -40,13 +40,11 @@ K1 = 1.2
 B = 0.75
 
 
-def build_postings(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def build_postings(docs: DataFrame) -> DataFrame:
     """(doc_id, t, tf): one shuffle (the groupBy), map-side combined."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t"),
+        F.col("doc_id"),
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("t"),
     )
     return toks.groupBy("doc_id", "t").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
@@ -60,15 +58,13 @@ def doc_lengths(postings: DataFrame) -> DataFrame:
     )
 
 
-def query_terms(
-    queries: DataFrame, *, text_col: str = "text", id_col: str = "query_id"
-) -> DataFrame:
+def query_terms(queries: DataFrame) -> DataFrame:
     """(query_id, t) from a query TABLE, tokenized exactly like the corpus.
     Duplicate terms within one query are kept (each occurrence contributes,
     mirroring the split semantics of the literal-query form)."""
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t"),
+        F.col("query_id"),
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("t"),
     )
 
 
@@ -138,17 +134,13 @@ def bm25_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_text_col: str = "text",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """One-shot BM25: build postings in-plan and score a query TABLE."""
-    postings = build_postings(docs, text_col=text_col, id_col=id_col)
+    postings = build_postings(docs)
     return score_topk(
         postings,
         doc_lengths(postings),
-        query_terms(queries, text_col=query_text_col, id_col=query_id_col),
+        query_terms(queries),
         k=k,
     )
 
@@ -158,13 +150,11 @@ def bm25_topk(
 # ---------------------------------------------------------------------------
 
 
-def bm25_write_index(
-    docs: DataFrame, path: str, *, text_col: str = "text", id_col: str = "doc_id"
-) -> None:
+def bm25_write_index(docs: DataFrame, path: str) -> None:
     """Materialize postings + doc lengths under ``path`` (subdirs
     ``postings``/``dlen``). Everything derivable (df, N, avgdl) is computed
     at query time from these — no stored state can go stale."""
-    postings = build_postings(docs, text_col=text_col, id_col=id_col)
+    postings = build_postings(docs)
     postings.write.mode("overwrite").parquet(path.rstrip("/") + "/postings")
     spark = docs.sparkSession
     doc_lengths(spark.read.parquet(path.rstrip("/") + "/postings")).write.mode(
@@ -172,20 +162,14 @@ def bm25_write_index(
     ).parquet(path.rstrip("/") + "/dlen")
 
 
-def bm25_append_index(
-    new_docs: DataFrame,
-    path: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def bm25_append_index(new_docs: DataFrame, path: str) -> None:
     """Incremental maintenance on corpus APPEND: the delta's postings and
     lengths land as new files — existing rows are never read or rewritten
     (postings are distributive over documents). Contract: ``new_docs``
     doc_ids are new; re-appending an existing doc double-counts it (dedupe
     upstream — the curation ledger is the engine's tool for exactly that).
     """
-    postings = build_postings(new_docs, text_col=text_col, id_col=id_col)
+    postings = build_postings(new_docs)
     postings.cache()
     postings.write.mode("append").parquet(path.rstrip("/") + "/postings")
     doc_lengths(postings).write.mode("append").parquet(
@@ -200,34 +184,19 @@ def bm25_query_index(
     queries: DataFrame,
     *,
     k: int = 10,
-    query_text_col: str = "text",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Score a query table against the index at rest. df/N/avgdl fold from
     the stored components, so results after N appends are IDENTICAL to a
     full rebuild (gated cross-engine by llm_bm25_incremental's oracle)."""
     postings = spark.read.parquet(path.rstrip("/") + "/postings")
     dlen = spark.read.parquet(path.rstrip("/") + "/dlen")
-    return score_topk(
-        postings,
-        dlen,
-        query_terms(queries, text_col=query_text_col, id_col=query_id_col),
-        k=k,
-    )
+    return score_topk(postings, dlen, query_terms(queries), k=k)
 
 
-def rrf_fuse(
-    rankings: list[DataFrame],
-    *,
-    k_rrf: int = 60,
-    top_n: int = 10,
-    query_col: str = "query_id",
-    item_col: str = "item_id",
-    rank_col: str = "rank",
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], *, top_n: int = 10) -> DataFrame:
     """Reciprocal-rank fusion of N per-query rankings — the standard hybrid
     retrieval combiner (BM25 ⊕ dense cosine ⊕ ...): each list contributes
-    1/(k_rrf + rank) for the items it ranked, missing items contribute 0,
+    1/(60 + rank) for the items it ranked, missing items contribute 0,
     fused top-n per query wins.
 
     Scale shape: inputs are already per-query top-k lists (bounded — k·|Q|
@@ -241,11 +210,9 @@ def rrf_fuse(
         raise ValueError("rrf_fuse needs at least one ranking")
     contribs = [
         df.select(
-            F.col(query_col).alias("query_id"),
-            F.col(item_col).alias("item_id"),
-            F.round(1.0 / (F.lit(k_rrf) + F.col(rank_col)), 6).alias(
-                f"_c{i}"
-            ),
+            F.col("query_id"),
+            F.col("item_id"),
+            F.round(1.0 / (F.lit(60) + F.col("rank")), 6).alias(f"_c{i}"),
         )
         for i, df in enumerate(rankings)
     ]

@@ -128,7 +128,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 def bpe_learn_merges(
     df: DataFrame,
     *,
-    text_col: str = "text",
     n_merges: int = 8,
     strategy: str = "auto",
     max_driver_words: int = 2_000_000,
@@ -191,9 +190,9 @@ def bpe_learn_merges(
     # fanout measured slower and was reverted in r16 — this map side
     # carries the full _norm regex chain and dominated the learn's wall.
     words = (
-        cpu_fanout(df.select(F.col(text_col)))
+        cpu_fanout(df.select(F.col("text")))
         .select(
-            F.explode(F.split(_norm(F.col(text_col)), " ")).alias("word")
+            F.explode(F.split(_norm(F.col("text")), " ")).alias("word")
         )
         .filter(F.length("word") > 0)
         .groupBy("word")
@@ -517,8 +516,6 @@ def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     strategy: str = "auto",
 ) -> DataFrame:
     """Tokenize documents with a learned merge table (the APPLY side of BPE).
@@ -541,27 +538,22 @@ def bpe_encode(
       production shape at every vocab size.
     - ``"auto"`` (default): always batch (measured, not assumed).
 
-    Output: (id_col, n_tokens bigint, tokens_md5) — md5 of the final
+    Output: (doc_id, n_tokens bigint, tokens_md5) — md5 of the final
     space-joined symbol stream, so any drift in merge application (order,
     greediness, a missed adjacent occurrence) breaks the oracle hash.
     Documents with no tokens after normalization are dropped (both engines).
     """
     stream = _token_stream(
-        df, merges, text_col=text_col, id_col=id_col, strategy=strategy
+        df, merges, text_col="text", id_col="doc_id", strategy=strategy
     )
     return stream.select(
-        id_col,
+        "doc_id",
         F.size(F.split(F.col("_toks"), " ")).cast("bigint").alias("n_tokens"),
         F.md5(F.col("_toks")).alias("tokens_md5"),
     )
 
 
-def bpe_vocab(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_vocab(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """The (token, token_id) vocabulary a tokenizer ships: base symbols are
     the corpus's distinct post-normalization characters, id'd in sorted
     order from 0; each merge's new symbol follows at
@@ -576,7 +568,7 @@ def bpe_vocab(
             df.select(
                 F.explode(
                     F.filter(
-                        F.split(_norm(F.col(text_col)), " "),
+                        F.split(_norm(F.col("text")), " "),
                         lambda w: F.length(w) > 0,
                     )
                 ).alias("word")
@@ -597,16 +589,13 @@ def bpe_encode_ids(
     merges: list[tuple[str, str]],
     vocab: dict[str, int],
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    strategy: str = "auto",
     ids_col: str | None = None,
 ) -> DataFrame:
     """Tokenize to REAL token ids — the last step of a training-data export
     (shards of id arrays, not text). ``vocab`` is the collected
     :func:`bpe_vocab` artifact (bounded by construction).
 
-    Output: (id_col, n_tokens bigint, ids_md5 string) — md5 of the
+    Output: (doc_id, n_tokens bigint, ids_md5 string) — md5 of the
     comma-joined id stream; with ``ids_col`` set, additionally the raw
     ``array<int>`` id sequence under that name (the column a shard writer
     persists). Id mapping happens JVM-side via a literal map expression
@@ -615,7 +604,7 @@ def bpe_encode_ids(
     (``concat_ws`` would otherwise skip a bare NULL).
     """
     stream = _token_stream(
-        df, merges, text_col=text_col, id_col=id_col, strategy=strategy
+        df, merges, text_col="text", id_col="doc_id", strategy="auto"
     )
     vocab_map = F.create_map(
         *[F.lit(x) for kv in vocab.items() for x in (kv[0], str(kv[1]))]
@@ -625,7 +614,7 @@ def bpe_encode_ids(
         lambda s: F.coalesce(vocab_map[s], F.lit("?oov?")),
     )
     out = stream.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.split(F.col("_toks"), " ")).cast("bigint").alias("n_tokens"),
         F.md5(F.concat_ws(",", ids_str)).alias("ids_md5"),
         *(
@@ -706,29 +695,25 @@ def bpe_oov_stats(
     df: DataFrame,
     merges: list[tuple[str, str]],
     vocab: dict[str, int],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Tokenizer COVERAGE on new data: apply a vocabulary learned on one
     corpus to another and count the symbols that fall outside it — the
     train/serve drift gate every shipped tokenizer needs (a rising OOV
     rate means the corpus moved under the vocabulary).
 
-    Output: (id_col, n_tokens bigint, n_oov bigint) per document. Pure
+    Output: (doc_id, n_tokens bigint, n_oov bigint) per document. Pure
     codegen: the merge table applies as literals and the vocabulary test
     is a constant-folded map lookup — no joins, no shuffle beyond the
     scan."""
     stream = _token_stream(
-        df, merges, text_col=text_col, id_col=id_col, strategy=strategy
+        df, merges, text_col="text", id_col="doc_id", strategy="auto"
     )
     vocab_map = F.create_map(
         *[F.lit(x) for kv in vocab.items() for x in (kv[0], str(kv[1]))]
     )
     syms = F.split(F.col("_toks"), " ")
     return stream.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(syms).cast("bigint").alias("n_tokens"),
         F.size(F.filter(syms, lambda s: vocab_map[s].isNull()))
         .cast("bigint")
@@ -736,12 +721,7 @@ def bpe_oov_stats(
     )
 
 
-def bpe_oov_sql(
-    n_merges: int = 8,
-    *,
-    train_predicate: str = "doc_id % 2 = 0",
-    eval_predicate: str = "doc_id % 2 = 1",
-) -> str:
+def bpe_oov_sql(n_merges: int = 8) -> str:
     """DuckDB oracle for :func:`bpe_oov_stats` with the learn/apply split
     made explicit: merge statistics and the vocabulary come ONLY from the
     train slice; the learned stages then rewrite the EVAL slice's word
@@ -754,7 +734,7 @@ def bpe_oov_sql(
         f"""words AS MATERIALIZED (
       SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
         SELECT unnest(string_split({norm}, ' ')) AS word FROM documents
-        WHERE {train_predicate}
+        WHERE doc_id % 2 = 0
       ) WHERE len(word) > 0 GROUP BY word
     ),
     w0 AS MATERIALIZED (
@@ -764,7 +744,7 @@ def bpe_oov_sql(
     evalw AS MATERIALIZED (
       SELECT DISTINCT word FROM (
         SELECT unnest(string_split({norm}, ' ')) AS word FROM documents
-        WHERE {eval_predicate}
+        WHERE doc_id % 2 = 1
       ) WHERE len(word) > 0
     ),
     e0 AS MATERIALIZED (
@@ -774,7 +754,7 @@ def bpe_oov_sql(
     docw AS MATERIALIZED (
       SELECT doc_id, i AS ord, arr[i] AS word
       FROM (SELECT doc_id, string_split({norm}, ' ') AS arr FROM documents
-            WHERE {eval_predicate}),
+            WHERE doc_id % 2 = 1),
            UNNEST(range(1, len(arr) + 1)) AS t(i)
       WHERE len(arr[i]) > 0
     )"""

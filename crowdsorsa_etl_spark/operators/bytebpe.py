@@ -56,6 +56,8 @@ from crowdsorsa_etl_spark.operators.bpe import (
 )
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
+_MAX_DRIVER_WORDS = 2_000_000
+
 __all__ = [
     "bytebpe_learn",
     "bytebpe_encode",
@@ -103,65 +105,40 @@ def bytebpe_decode(tokens: list[str]) -> bytes:
     return bytes.fromhex("".join(tokens))
 
 
-def bytebpe_learn(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    n_merges: int = 12,
-    max_vocab_words: int | None = None,
-    max_driver_words: int = 2_000_000,
-) -> DataFrame:
+def bytebpe_learn(df: DataFrame, *, n_merges: int = 12) -> DataFrame:
     """Learn ``n_merges`` byte-level BPE merges over the corpus.
 
     Output: (merge_rank int, pair string, total bigint) — the ordered merge
     artifact, pairs space-joined in hex-symbol form ('68 65').
 
     Same trainer discipline as :func:`bpe.bpe_learn_merges`'s driver path:
-    ONE distributed (word, count) aggregation, optional top-N frequency cap
-    with the (cnt DESC, rep ASC) total order, then the in-memory merge loop
-    with incremental pair-count maintenance. An uncapped dictionary larger
-    than ``max_driver_words`` raises with guidance (the capped dictionary
-    IS the scale path — no per-merge cluster-job fallback by design).
+    ONE distributed (word, count) aggregation, then the in-memory merge
+    loop with incremental pair-count maintenance. A dictionary larger than
+    ``_MAX_DRIVER_WORDS`` raises (no per-merge cluster-job fallback by
+    design).
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if max_vocab_words is not None and max_vocab_words < 1:
-        raise ValueError(
-            f"max_vocab_words must be >= 1, got {max_vocab_words}"
-        )
     words = (
-        df.select(
-            F.explode(F.split(_norm(F.col(text_col)), " ")).alias("word")
-        )
+        df.select(F.explode(F.split(_norm(F.col("text")), " ")).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .select(_byte_spaced(F.col("word")).alias("rep"), "cnt")
     )
-    if max_vocab_words is not None:
-        words = words.orderBy(F.desc("cnt"), F.asc("rep")).limit(
-            max_vocab_words
-        )
     words = materialize(words)
-    if max_vocab_words is None and words.count() > max_driver_words:
+    if words.count() > _MAX_DRIVER_WORDS:
         raise ValueError(
-            f"uncapped dictionary exceeds max_driver_words="
-            f"{max_driver_words}; set max_vocab_words (the production "
-            "frequency cap)"
+            f"dictionary exceeds {_MAX_DRIVER_WORDS} words, the driver-side "
+            "merge loop's bound"
         )
     return _learn_merges_driver(words, n_merges)
 
 
-def bytebpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bytebpe_encode(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Tokenize documents with a learned byte-level merge table.
 
-    Output: (id_col, n_tokens bigint, tokens_md5 string) — md5 of the full
+    Output: (doc_id, n_tokens bigint, tokens_md5 string) — md5 of the full
     space-joined hex-symbol stream per document, the
     :func:`bpe.bpe_encode` gate shape. One Arrow ``mapInPandas`` stage;
     words normalize/split Spark-side, the pandas stage seeds each unique
@@ -173,7 +150,7 @@ def bytebpe_encode(
 
     from pyspark.sql.types import StringType, StructField, StructType
 
-    id_field = df.schema[id_col]
+    id_field = df.schema["doc_id"]
     rank_of = {tuple(p): i for i, p in enumerate(merges)}
     pair_at = list(map(tuple, merges))
 
@@ -194,19 +171,19 @@ def bytebpe_encode(
                         cache[w] = rep
                     parts.append(rep)
                 toks.append(" ".join(parts))
-            yield pd.DataFrame({id_col: pdf[id_col], "_toks": toks})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "_toks": toks})
 
     words = F.filter(
-        F.split(_norm(F.col(text_col)), " "), lambda w: F.length(w) > 0
+        F.split(_norm(F.col("text")), " "), lambda w: F.length(w) > 0
     )
     schema = StructType([id_field, StructField("_toks", StringType())])
     stream = (
-        df.select(F.col(id_col), words.alias("_words"))
+        df.select(F.col("doc_id"), words.alias("_words"))
         .mapInPandas(encode, schema)
         .filter(F.length("_toks") > 0)
     )
     return stream.select(
-        id_col,
+        "doc_id",
         F.size(F.split(F.col("_toks"), " "))
         .cast("bigint")
         .alias("n_tokens"),
@@ -295,23 +272,13 @@ def bytebpe_oov_stats(
     )
 
 
-def _bytebpe_learn_ctes(
-    n_merges: int,
-    *,
-    max_vocab_words: int | None = None,
-    prefix: str = "",
-) -> list[str]:
+def _bytebpe_learn_ctes(n_merges: int, *, prefix: str = "") -> list[str]:
     """words/w0 + the unrolled learn/rewrite stages, byte-spaced seed.
     The learn stages are ``bpe._learn_stage_sql`` / ``_stage_rewrite_sql``
     verbatim — only w0's decomposition differs from the char-level chain.
     ``prefix`` renames every CTE so the byte chain composes with the char
     chain in one statement (llm_tokenizer_compression).
     """
-    cap = (
-        f" ORDER BY cnt DESC, rep ASC LIMIT {int(max_vocab_words)}"
-        if max_vocab_words is not None
-        else ""
-    )
     ctes = [
         f"""{prefix}words AS MATERIALIZED (
       SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
@@ -321,7 +288,7 @@ def _bytebpe_learn_ctes(
     ),
     {prefix}w0 AS MATERIALIZED (
       SELECT word, {_BYTE_SPACED_SQL} AS rep, cnt
-      FROM {prefix}words{cap}
+      FROM {prefix}words
     )"""
     ]
     for i in range(1, n_merges + 1):
@@ -335,15 +302,13 @@ def _bytebpe_learn_ctes(
     return ctes
 
 
-def bytebpe_merges_sql(
-    n_merges: int = 12, *, max_vocab_words: int | None = None
-) -> str:
+def bytebpe_merges_sql(n_merges: int = 12) -> str:
     """DuckDB oracle for :func:`bytebpe_learn`: identical normalization,
     byte-spaced seeds via ``hex(encode(word))`` (uppercase in both
     engines), the shared learn-stage argmax and space-doubling rewrite.
     The b{i} stages of the learn chain carry only (pair); totals re-derive
     from the p{i} tables for the output rows."""
-    ctes = _bytebpe_learn_ctes(n_merges, max_vocab_words=max_vocab_words)
+    ctes = _bytebpe_learn_ctes(n_merges)
     selects = [
         f"""SELECT CAST({i} AS INT) AS merge_rank, p.pair, p.total
         FROM p{i} p JOIN b{i} b ON p.pair = b.pair"""
@@ -380,12 +345,7 @@ def bytebpe_encode_sql(n_merges: int = 12) -> str:
     )
 
 
-def bytebpe_oov_sql(
-    n_merges: int = 12,
-    *,
-    probe_table: str = "part",
-    probe_text: str = "p_name",
-) -> str:
+def bytebpe_oov_sql(n_merges: int = 12) -> str:
     """DuckDB oracle for :func:`bytebpe_oov_stats`: the documents-learned
     merges rewrite the PROBE table's word dictionary (apply-only chain —
     probe words never influence a merge choice), then every final symbol
@@ -393,14 +353,14 @@ def bytebpe_oov_sql(
     and whole-word misses aggregate — the same measured-membership shape
     as ``bpe_oov_sql``, whose char-level n_unk is nonzero on this probe."""
     probe_norm = (
-        f"lower(regexp_replace(trim({probe_text}), '\\s+', ' ', 'g'))"
+        "lower(regexp_replace(trim(p_name), '\\s+', ' ', 'g'))"
     )
     ctes = _bytebpe_learn_ctes(n_merges)
     ctes.append(
         f"""probew AS MATERIALIZED (
       SELECT DISTINCT word FROM (
         SELECT unnest(string_split({probe_norm}, ' ')) AS word
-        FROM {probe_table}
+        FROM part
       ) WHERE len(word) > 0
     ),
     e0 AS MATERIALIZED (
@@ -457,9 +417,6 @@ def bytebpe_oov_sql(
 def bytebpe_token_ids(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Tokenize to REAL token ids under the GPT-2 id convention: ids
     0..255 ARE the byte values, merge tokens follow at 256 + rank - 1 —
@@ -467,7 +424,7 @@ def bytebpe_token_ids(
     job (unlike the char-level sorted-vocab mapping, which shifts when
     the alphabet grows).
 
-    Output: (id_col, n_tokens bigint, ids_md5 string) — md5 of the
+    Output: (doc_id, n_tokens bigint, ids_md5 string) — md5 of the
     comma-joined id stream in token order, the bpe_encode_ids gate shape.
     Raises loudly if two merges ever produce the same token string (a
     merged token is the hex of its byte sequence; a collision would make
@@ -524,24 +481,24 @@ def bytebpe_token_ids(
                 )
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_tokens": pd.array(n_out, dtype="int64"),
                     "ids_md5": md5s,
                 }
             )
 
     words = F.filter(
-        F.split(_norm(F.col(text_col)), " "), lambda w: F.length(w) > 0
+        F.split(_norm(F.col("text")), " "), lambda w: F.length(w) > 0
     )
     schema = StructType(
         [
-            df.schema[id_col],
+            df.schema["doc_id"],
             StructField("n_tokens", LongType()),
             StructField("ids_md5", StringType()),
         ]
     )
     return (
-        df.select(F.col(id_col), words.alias("_words"))
+        df.select(F.col("doc_id"), words.alias("_words"))
         .mapInPandas(encode, schema)
         .filter(F.col("ids_md5").isNotNull())
     )

@@ -18,8 +18,6 @@ from crowdsorsa_etl_spark.functions.text import normalize_text
 def chunk_documents(
     df: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     size: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -32,19 +30,19 @@ def chunk_documents(
             f"stride must be in (0, size]; got stride={stride}, size={size} "
             "(stride > size silently loses tokens)"
         )
-    base = df.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        id_col, F.split(normalize_text(F.col(text_col)), " ").alias("_toks")
+    base = df.filter(F.length(F.trim(F.col("text"))) > 0).select(
+        "doc_id", F.split(normalize_text(F.col("text")), " ").alias("_toks")
     )
     sized = base.withColumn("_n", F.size("_toks")).withColumn(
         "_starts", F.sequence(F.lit(0), F.col("_n") - 1, F.lit(stride))
     )
     return sized.select(
-        id_col,
+        "doc_id",
         F.posexplode("_starts").alias("chunk_idx", "start_token"),
         "_toks",
         "_n",
     ).select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("start_token").cast("int").alias("start_token"),
         F.least(F.lit(size), F.col("_n") - F.col("start_token"))

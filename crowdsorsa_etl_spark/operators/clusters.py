@@ -36,8 +36,6 @@ from crowdsorsa_etl_spark.operators.checkpointing import materialize
 def connected_components(
     edges: DataFrame,
     *,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iterations: int = 20,
 ) -> DataFrame:
     """Return (id, component) where component = min vertex id in the
@@ -45,7 +43,7 @@ def connected_components(
     the corpus afterwards with a coalesce(component, id) for those).
     """
     e = edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+        F.col("id_a").cast("long").alias("src"), F.col("id_b").cast("long").alias("dst")
     )
     # undirected → both directions once
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -123,34 +121,23 @@ def connected_components(
     return labels
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    candidate_pairs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, candidate_pairs: DataFrame) -> DataFrame:
     """Full-corpus cluster assignment: every doc gets a cluster id (its own
     id when it has no near-duplicates) plus a keep/drop flag (keep = the
     minimum id in the cluster)."""
-    comp = connected_components(candidate_pairs, src=src, dst=dst)
-    out = docs.select(F.col(id_col)).join(
-        comp, docs[id_col] == comp.id, "left"
+    comp = connected_components(candidate_pairs)
+    out = docs.select(F.col("doc_id")).join(
+        comp, docs["doc_id"] == comp.id, "left"
     )
     return out.select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-    ).withColumn("keep", F.col(id_col) == F.col("cluster_id"))
+        F.col("doc_id"),
+        F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
+    ).withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
 
 
 def incremental_components(
     labels: DataFrame,
     new_edges: DataFrame,
-    *,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Fold a batch of NEW edges into an existing (id, component)
     registry WITHOUT recomputing components over the full edge history —
@@ -176,8 +163,8 @@ def incremental_components(
     hashes against the one-shot transitive-closure oracle.
     """
     e = new_edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
+        F.col("id_a").cast("long").alias("src"),
+        F.col("id_b").cast("long").alias("dst"),
     ).filter(F.col("src") != F.col("dst"))
     lab = materialize(labels.select(
         F.col("id").cast("long").alias("id"),
@@ -207,7 +194,7 @@ def incremental_components(
         .distinct()
     )
     merged = connected_components(
-        condensed, max_iterations=max_iterations
+        condensed
     )  # (id = old label, component = new label) for MERGING labels only
     mapping = merged.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("_old"), F.col("component").alias("_new")
@@ -228,13 +215,7 @@ def incremental_components(
     return relabeled.unionByName(fresh)
 
 
-def lpa_communities(
-    edges: DataFrame,
-    *,
-    src: str = "id_a",
-    dst: str = "id_b",
-    rounds: int = 4,
-) -> DataFrame:
+def lpa_communities(edges: DataFrame, *, rounds: int = 4) -> DataFrame:
     """Seeded synchronous label propagation (Raghavan et al. 2007) over
     the dup graph: finer communities than connected components on dense
     near-dup graphs (CC merges everything reachable; LPA keeps weakly
@@ -262,8 +243,8 @@ def lpa_communities(
     connected_components above).
     """
     e = edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
+        F.col("id_a").cast("long").alias("src"),
+        F.col("id_b").cast("long").alias("dst"),
     )
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = materialize(sym.filter(F.col("src") != F.col("dst")).distinct())
@@ -298,8 +279,6 @@ def lpa_communities(
 def kcore_filter(
     edges: DataFrame,
     *,
-    src: str = "id_a",
-    dst: str = "id_b",
     k: int = 2,
     rounds: int = 4,
 ) -> DataFrame:
@@ -325,8 +304,8 @@ def kcore_filter(
     connected_components/lpa_communities above).
     """
     e = edges.select(
-        F.col(src).cast("long").alias("src"),
-        F.col(dst).cast("long").alias("dst"),
+        F.col("id_a").cast("long").alias("src"),
+        F.col("id_b").cast("long").alias("dst"),
     )
     sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -27,36 +27,29 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.portable_hash import cw_hash_spark, hex60_spark
 
-from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
+from crowdsorsa_etl_spark.functions.text import normalized_tokens
+
+_DEPTH = 4
+_WIDTH = 1024
 
 
-def _tokens(df: DataFrame, text_col: str) -> DataFrame:
-    return df.select(
-        F.explode(F.split(_norm(F.col(text_col)), " ")).alias("token")
-    ).filter(F.col("token") != "")
-
-
-def count_min_sketch(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
+def count_min_sketch(df: DataFrame) -> DataFrame:
     """Build the sketch over the corpus token stream: one row per non-empty
     cell — (row i, bucket, cnt) with bucket = CW_i(md5word(token)) mod w."""
-    toks = _tokens(df, text_col).select(hex60_spark(F.col("token")).alias("th"))
+    toks = normalized_tokens(df, "text").select(
+        hex60_spark(F.col("token")).alias("th")
+    )
     cells = toks.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        F.pmod(cw_hash_spark(F.col("th"), i), F.lit(width)).alias(
+                        F.pmod(cw_hash_spark(F.col("th"), i), F.lit(_WIDTH)).alias(
                             "bucket"
                         ),
                     )
-                    for i in range(depth)
+                    for i in range(_DEPTH)
                 ]
             )
         ).alias("cell")
@@ -79,20 +72,13 @@ def merge_sketches(*sketches: DataFrame) -> DataFrame:
     return merged.groupBy("i", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
-def count_min_estimate(
-    sketch: DataFrame,
-    probes: DataFrame,
-    *,
-    token_col: str = "token",
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
+def count_min_estimate(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     """Estimated frequency per probe token: min over the d cells the token
     hashes into. Join shape: probes explode to d (i, bucket) keys and
     equi-join the sketch — |probes|·d joined rows, never the corpus."""
     keyed = probes.select(
-        F.col(token_col).alias("token"),
-        hex60_spark(F.col(token_col)).alias("th"),
+        F.col("token"),
+        hex60_spark(F.col("token")).alias("th"),
     ).select(
         "token",
         F.explode(
@@ -100,11 +86,11 @@ def count_min_estimate(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        F.pmod(cw_hash_spark(F.col("th"), i), F.lit(width)).alias(
+                        F.pmod(cw_hash_spark(F.col("th"), i), F.lit(_WIDTH)).alias(
                             "bucket"
                         ),
                     )
-                    for i in range(depth)
+                    for i in range(_DEPTH)
                 ]
             )
         ).alias("cell"),

@@ -89,10 +89,6 @@ def quality_filter_signals(col: Column) -> dict[str, Column]:
 def quality_filter_verdict(
     signals: dict[str, Column],
     min_tokens: int = 50,
-    max_tokens: int = 100_000,
-    min_distinct_ratio: float = 0.05,
-    min_stopword_ratio: float = 0.01,
-    word_len_range: tuple[float, float] = (1.0, 12.0),
 ) -> tuple[Column, Column]:
     """(keep, reason) — reason is the FIRST failing rule, 'ok' if kept.
 
@@ -104,10 +100,10 @@ def quality_filter_verdict(
         # first-fail chain would fall through to 'ok' — catch it explicitly
         ("null_text", signals["n_tokens"].isNull()),
         ("too_short", signals["n_tokens"] < min_tokens),
-        ("too_long", signals["n_tokens"] > max_tokens),
-        ("repetitive", signals["distinct_ratio"] < min_distinct_ratio),
-        ("no_stopwords", signals["stopword_ratio"] < min_stopword_ratio),
-        ("word_len", ~signals["mean_word_len"].between(*word_len_range)),
+        ("too_long", signals["n_tokens"] > 100_000),
+        ("repetitive", signals["distinct_ratio"] < 0.05),
+        ("no_stopwords", signals["stopword_ratio"] < 0.01),
+        ("word_len", ~signals["mean_word_len"].between(1.0, 12.0)),
     ]
     reason = F.lit("ok")
     for name, cond in reversed(rules):
@@ -122,38 +118,29 @@ def quality_filter_verdict(
 _HEX = "0123456789abcdef"
 
 
-def hash_bucket(key: Column, buckets: int = 256) -> Column:
-    """Stable 0..buckets-1 bucket from md5 of the key's string form.
+def hash_bucket(key: Column) -> Column:
+    """Stable 0..255 bucket from the first two hex nibbles of the md5 of
+    the key's string form.
 
     md5 (not Spark ``hash()``/``xxhash64``) so the assignment is identical
     in every engine and every Spark version — a training-data split must
-    never silently reshuffle between runs. Consumes exactly as many hex
-    nibbles as ``buckets`` requires (2 for ≤256, 3 for ≤4096, …) so any
-    bucket count up to 16^8 yields the full, near-uniform range.
+    never silently reshuffle between runs.
     """
-    if not 1 <= buckets <= 16**8:
-        raise ValueError(f"buckets must be in [1, 16^8], got {buckets}")
-    n_nibbles = 2
-    while 16**n_nibbles < buckets:
-        n_nibbles += 1
     h = F.md5(key.cast("string"))
     val = F.lit(0)
-    for i in range(1, n_nibbles + 1):
+    for i in (1, 2):
         nib = F.instr(F.lit(_HEX), F.substring(h, i, 1)) - 1
         val = val * 16 + nib
-    return (val % buckets).cast("int")
+    return (val % 256).cast("int")
 
 
-def assign_split(
-    key: Column, train_pct: int = 90, val_pct: int = 5
-) -> Column:
-    """'train' / 'val' / 'test' by hash bucket — stable, leak-free, joinless."""
+def assign_split(key: Column) -> Column:
+    """'train' / 'val' / 'test' (90 / 5 / 5 %) by hash bucket — stable,
+    leak-free, joinless."""
     b = hash_bucket(key)
-    train_hi = 256 * train_pct // 100
-    val_hi = 256 * (train_pct + val_pct) // 100
     return (
-        F.when(b < train_hi, F.lit("train"))
-        .when(b < val_hi, F.lit("val"))
+        F.when(b < 256 * 90 // 100, F.lit("train"))
+        .when(b < 256 * 95 // 100, F.lit("val"))
         .otherwise(F.lit("test"))
     )
 
@@ -197,7 +184,6 @@ def token_budget_sample(
     budgets: dict[str, int],
     *,
     token_col: str = "n_tokens",
-    key_col: str = "doc_id",
     group_col: str = "source",
     default_budget: int = 0,
 ) -> DataFrame:
@@ -224,11 +210,10 @@ def token_budget_sample(
     is unchanged because the order key is hash-uniform.
     """
     order_key = F.md5(
-        F.concat(F.lit("budget:"), F.col(key_col).cast("string"))
+        F.concat(F.lit("budget:"), F.col("doc_id").cast("string"))
     )
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(order_key, F.col(key_col))
+        Window.partitionBy(group_col).orderBy(order_key, F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     budget = F.lit(default_budget)
@@ -247,7 +232,6 @@ def pack_token_sequences(
     *,
     max_len: int,
     eos_id: int | None = None,
-    seq_ids_col: str = "ids",
 ) -> DataFrame:
     """Pack token-id documents into FIXED-length training sequences — the
     step a dataloader actually consumes: concatenate every document's id
@@ -256,7 +240,7 @@ def pack_token_sequences(
     tokens. GPT-style packing: sequences cross document boundaries, only
     the final sequence may be short.
 
-    Output: ``(seq_id bigint, seq_len int, <seq_ids_col> array<int>)`` —
+    Output: ``(seq_id bigint, seq_len int, ids array<int>)`` —
     ``seq_id`` is the 0-based global sequence index, ids are in stream
     order.
 
@@ -326,9 +310,9 @@ def pack_token_sequences(
                     ),
                     lambda s: s["_chunk"],
                 )
-            ).alias(seq_ids_col),
+            ).alias("ids"),
         )
-        .select("seq_id", "seq_len", seq_ids_col)
+        .select("seq_id", "seq_len", "ids")
     )
 
 
@@ -338,7 +322,6 @@ def sequence_provenance(
     order_cols: list[Column],
     *,
     max_len: int,
-    id_col: str = "doc_id",
     count_eos: bool = True,
 ) -> DataFrame:
     """Which document occupies which token span of each packed training
@@ -348,7 +331,7 @@ def sequence_provenance(
     names every sequence (and the exact token span inside it) the doc
     reached.
 
-    Output: ``(seq_id bigint, <id_col>, start_in_seq int, end_in_seq
+    Output: ``(seq_id bigint, doc_id, start_in_seq int, end_in_seq
     int)`` — 0-based, end-exclusive span inside the sequence; a doc
     crossing a cut yields one row per touched sequence. ``count_eos``
     counts the EOS separator as part of its document's span (matching
@@ -388,7 +371,7 @@ def sequence_provenance(
     )
     return spans.select(
         F.col("seq_id").cast("bigint").alias("seq_id"),
-        F.col(id_col),
+        F.col("doc_id"),
         F.greatest(F.lit(0), (F.col("_off") - F.col("seq_id") * m))
         .cast("int")
         .alias("start_in_seq"),
@@ -406,8 +389,6 @@ def mask_doc_spans(
     forget: DataFrame,
     *,
     mask_id: int,
-    ids_col: str = "ids",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a forget-list to packed training sequences: every token span
     the provenance map attributes to a forgotten document is overwritten
@@ -416,7 +397,7 @@ def mask_doc_spans(
     downstream curriculum state all stay valid).
 
     ``seqs`` is :func:`pack_token_sequences` output, ``spans`` is
-    :func:`sequence_provenance` output, ``forget`` carries the ``id_col``
+    :func:`sequence_provenance` output, ``forget`` carries the ``doc_id``
     values to forget.
 
     Distributed shape: the forget set prunes the span map with a semi
@@ -428,7 +409,7 @@ def mask_doc_spans(
     seq_id equi-join.
     """
     hit = spans.join(
-        forget.select(F.col(id_col)).distinct(), id_col, "left_semi"
+        forget.select(F.col("doc_id")).distinct(), "doc_id", "left_semi"
     )
     per_seq = hit.groupBy("seq_id").agg(
         F.collect_list(
@@ -439,9 +420,9 @@ def mask_doc_spans(
         ).alias("_spans")
     )
     out = seqs.join(per_seq, "seq_id", "left")
-    masked = F.when(F.col("_spans").isNull(), F.col(ids_col)).otherwise(
+    masked = F.when(F.col("_spans").isNull(), F.col("ids")).otherwise(
         F.transform(
-            F.col(ids_col),
+            F.col("ids"),
             lambda x, i: F.when(
                 F.exists(
                     F.col("_spans"),
@@ -451,16 +432,10 @@ def mask_doc_spans(
             ).otherwise(x),
         )
     )
-    return out.withColumn(ids_col, masked).drop("_spans")
+    return out.withColumn("ids", masked).drop("_spans")
 
 
-def compression_signals(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
+def compression_signals(docs: DataFrame) -> DataFrame:
     """(doc_id, raw_bytes, zlib_bytes, compression_ratio): the DEFLATE
     compressibility quality signal — highly repetitive boilerplate
     compresses far below natural language, keyboard-mash far above; web
@@ -471,27 +446,27 @@ def compression_signals(
     Embarrassingly parallel mapInPandas (stdlib zlib per Arrow batch, no
     shuffle, no driver traffic). No SQL engine exposes DEFLATE, so this is
     a pytest-gated tier (`tests/test_curation.py`): verified against
-    direct zlib calls, with the fixed ``level`` pinning determinism —
+    direct zlib calls, with the fixed level 6 pinning determinism —
     zlib output is fully deterministic for a given (input, level,
     library version), and one cluster ships one zlib.
     """
     import pandas as pd
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     schema = (
         f"doc_id {id_field.dataType.simpleString()}, raw_bytes long, "
         "zlib_bytes long, compression_ratio double"
     )
-    src = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    src = docs.select(F.col("doc_id"), F.col("text"))
 
     def comp(batches):
         import zlib
 
         for pdf in batches:
             raw, comp_len, ratio = [], [], []
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 b = (t or "").encode("utf-8")
-                z = len(zlib.compress(b, level))
+                z = len(zlib.compress(b, 6))
                 raw.append(len(b))
                 comp_len.append(z)
                 ratio.append(round(z / len(b), 6) if b else None)
@@ -507,12 +482,7 @@ def compression_signals(
     return src.mapInPandas(comp, schema)
 
 
-def entropy_signals(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def entropy_signals(docs: DataFrame) -> DataFrame:
     """(doc_id, entropy): Shannon entropy of the normalized character
     distribution, Arrow-batched.
 
@@ -533,10 +503,10 @@ def entropy_signals(
 
     from crowdsorsa_etl_spark.functions.text import normalize_text
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     src = docs.select(
-        F.col(id_col).alias("doc_id"),
-        normalize_text(F.col(text_col)).alias("_norm"),
+        F.col("doc_id"),
+        normalize_text(F.col("text")).alias("_norm"),
     )
 
     def ent(batches):
@@ -562,14 +532,7 @@ def entropy_signals(
     )
 
 
-def epoch_upsample(
-    df: DataFrame,
-    weights: dict[str, float],
-    *,
-    key_col: str = "doc_id",
-    group_col: str = "source",
-    default_weight: float = 1.0,
-) -> DataFrame:
+def epoch_upsample(df: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Epoch-aware UPsampling — the >1× side of mixture construction
     (GPT-3/Dolma-style "repeat the high-quality sources": wiki ×3.5, books
     ×2, web ×1). ``hash_bucket`` downsampling covers rates < 1;
@@ -590,14 +553,14 @@ def epoch_upsample(
     md5, one bounded ``sequence`` explode. Output: input columns +
     n_epochs (int) + epoch (int, 0-based).
     """
-    w = F.lit(float(default_weight))
+    w = F.lit(1.0)
     for g, x in sorted(weights.items()):
         if x < 0:
             raise ValueError(f"negative weight for {g!r}: {x}")
-        w = F.when(F.col(group_col) == g, F.lit(float(x))).otherwise(w)
+        w = F.when(F.col("source") == g, F.lit(float(x))).otherwise(w)
     full = F.floor(w).cast("int")
     bucket = hash_bucket(
-        F.concat(F.lit("epoch:"), F.col(key_col).cast("string"))
+        F.concat(F.lit("epoch:"), F.col("doc_id").cast("string"))
     )
     n_epochs = (
         full + (bucket < ((w - full) * 256).cast("int")).cast("int")
@@ -612,16 +575,10 @@ def epoch_upsample(
     return out.withColumn("epoch", F.explode(epochs))
 
 
-def type_token_growth(
-    df: DataFrame,
-    *,
-    buckets: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def type_token_growth(df: DataFrame, *, buckets: int = 10) -> DataFrame:
     """Heaps'-law type-token growth profile: cumulative token count and
     cumulative vocabulary size at ``buckets`` equal-width corpus prefixes
-    (by ``id_col`` order) — the curve a tokenizer/vocabulary design reads
+    (by ``doc_id`` order) — the curve a tokenizer/vocabulary design reads
     to see whether the corpus's vocabulary is saturating (V ≈ K·Nᵝ,
     β < 1) or still growing linearly (dirty OCR, id-like junk).
 
@@ -639,17 +596,17 @@ def type_token_growth(
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
     words = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
             F.filter(
-                F.split(normalize_text(F.col(text_col)), " "),
+                F.split(normalize_text(F.col("text")), " "),
                 lambda w: F.length(w) > 0,
             )
         ).alias("word"),
     )
     bounds = df.agg(
-        F.min(id_col).cast("bigint").alias("_lo"),
-        (F.max(id_col) + 1).cast("bigint").alias("_hi"),
+        F.min("doc_id").cast("bigint").alias("_lo"),
+        (F.max("doc_id") + 1).cast("bigint").alias("_hi"),
     )
     bucket = F.floor(
         (F.col("_id") - F.col("_lo")) * buckets / (F.col("_hi") - F.col("_lo"))
@@ -691,7 +648,6 @@ def stratified_split(
     df: DataFrame,
     *,
     strata_cols: list[str],
-    key_col: str = "doc_id",
     train_pct: int = 90,
     val_pct: int = 5,
 ) -> DataFrame:
@@ -722,9 +678,9 @@ def stratified_split(
             f"bad percentages: train={train_pct}, val={val_pct}"
         )
     order_key = F.md5(
-        F.concat(F.lit("split:"), F.col(key_col).cast("string"))
+        F.concat(F.lit("split:"), F.col("doc_id").cast("string"))
     )
-    w = Window.partitionBy(*strata_cols).orderBy(order_key, F.col(key_col))
+    w = Window.partitionBy(*strata_cols).orderBy(order_key, F.col("doc_id"))
     ws = Window.partitionBy(*strata_cols)
     rank = F.row_number().over(w).cast("bigint")
     total = F.count(F.lit(1)).over(ws).cast("bigint")

@@ -34,6 +34,11 @@ from crowdsorsa_etl_spark.functions.text import shingles
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
+_NUM_HASHES = 16
+_BANDS = 8
+_SHINGLE_K = 3
+_BUCKET_PREFIXES = 64
+
 
 # Hash family selector. Default xxhash64 (fastest; Spark-only). With
 # ``portable=True`` every hash derives from md5 via functions/portable_hash,
@@ -61,25 +66,21 @@ def _combine_hash(cols, portable: bool, seed: int | None = None):
     return F.xxhash64(*pre, *cols)
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One row per distinct normalized text: keeper id + duplicate count."""
     return (
-        df.select(F.col(id_col), F.md5(_norm(F.col(text_col))).alias("text_md5"))
+        df.select(F.col("doc_id"), F.md5(_norm(F.col("text"))).alias("text_md5"))
         .groupBy("text_md5")
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
 
 
-def exact_dedup_keep_first(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_keep_first(df: DataFrame) -> DataFrame:
     """The deduplicated corpus itself (keep min-id row per text hash)."""
-    w = Window.partitionBy(F.md5(_norm(F.col(text_col)))).orderBy(F.col(id_col))
+    w = Window.partitionBy(F.md5(_norm(F.col("text")))).orderBy(F.col("doc_id"))
     return df.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") == 1
     ).drop("_rn")
@@ -164,14 +165,8 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int, portable: bool) -> Data
 def minhash_lsh_candidates_cross(
     corpus: DataFrame,
     probe: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
     *,
     portable: bool = False,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Cross-corpus banded MinHash-LSH: candidate (corpus, probe) pairs —
     the FUZZY decontamination primitive (exact n-gram contamination checks
@@ -181,19 +176,16 @@ def minhash_lsh_candidates_cross(
     probe side (an eval/benchmark set — small by definition) broadcasts,
     so the corpus never shuffles for the match: signature build is the
     corpus's one hash shuffle, then a broadcast hash join on (band,
-    bucket). Set ``broadcast_probe=False`` for probe sets too big to
-    broadcast (falls back to a shuffle join on the band keys).
+    bucket).
     """
     sig_c = minhash_signatures(
-        corpus, text_col, id_col, num_hashes, shingle_k, portable=portable
+        corpus, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
     )
     sig_p = minhash_signatures(
-        probe, text_col, id_col, num_hashes, shingle_k, portable=portable
+        probe, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
     )
-    a = _banded(sig_c, num_hashes, bands, portable).alias("a")
-    b = _banded(sig_p, num_hashes, bands, portable).alias("b")
-    if broadcast_probe:
-        b = F.broadcast(b)
+    a = _banded(sig_c, _NUM_HASHES, _BANDS, portable).alias("a")
+    b = F.broadcast(_banded(sig_p, _NUM_HASHES, _BANDS, portable).alias("b"))
     return (
         a.join(
             b,
@@ -207,8 +199,6 @@ def minhash_lsh_candidates_cross(
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 8,
     shingle_k: int = 3,
@@ -223,7 +213,7 @@ def minhash_lsh_candidates(
     # materialize signatures once — the a/b sides of the self-join would
     # otherwise each recompute the whole explode→window→agg pipeline
     sig = materialize(minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, portable=portable
+        df, "text", "doc_id", num_hashes, shingle_k, portable=portable
     ))
     banded = _banded(sig, num_hashes, bands, portable)
 
@@ -243,13 +233,7 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    portable: bool = False,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
     """64-bit SimHash per doc: for each bit j, sum ±1 votes of token-hash
     bit j over all tokens; bit j of the result = (sum > 0).
 
@@ -262,8 +246,8 @@ def simhash_signatures(
     # portable path uses the FULL 64-bit md5 word (h64), not hex60 — every
     # bit position carries a vote, so a 60-bit word would pin bits 60-63
     ex = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(_norm(F.col(text_col)), " ")).alias("t"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(_norm(F.col("text")), " ")).alias("t"),
     ).select("id", (h64_spark(F.col("t")) if portable else F.xxhash64("t")).alias("h"))
 
     def vote(j: int):
@@ -287,8 +271,6 @@ def simhash_signatures(
 
 def simhash_buckets(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     portable: bool = False,
     signatures: DataFrame | None = None,
@@ -303,7 +285,7 @@ def simhash_buckets(
     sig = (
         signatures
         if signatures is not None
-        else simhash_signatures(df, text_col, id_col, portable=portable)
+        else simhash_signatures(df, portable=portable)
     )
     return (
         sig
@@ -323,47 +305,36 @@ def simhash_buckets(
 
 def simhash_hamming_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     radius: int = 8,
-    bands: int | None = None,
     portable: bool = False,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs with simhash hamming distance ≤ ``radius``.
 
     Pigeonhole LSH over bit bands: split the 64-bit signature into
-    ``bands`` contiguous bit bands (default ``radius + 1``). Two signatures
-    within hamming ``radius`` differ in at most ``radius`` bands, so with
-    ``bands ≥ radius + 1`` at least one band matches EXACTLY — candidates
+    ``radius + 1`` contiguous bit bands. Two signatures within hamming
+    ``radius`` differ in at most ``radius`` bands, so at least one band
+    matches EXACTLY — candidates
     are found with an equi-join on (band, band_bits), never an all-pairs
     scan. Full hamming distance is then verified with
     ``bit_count(sig_a XOR sig_b)`` on candidates only.
 
-    Shuffle shape mirrors MinHash-LSH: ``bands`` fixed-width rows per doc,
+    Shuffle shape mirrors MinHash-LSH: ``radius + 1`` rows per doc,
     |pairs| bounded by real band collisions — 100 TB-safe.
 
     Output: (id_a, id_b, hamming), id_a < id_b, one row per pair.
     """
-    if bands is None:
-        bands = radius + 1
+    bands = radius + 1
     if bands > 64:
-        raise ValueError("bands must be ≤ 64 (64-bit signatures)")
-    if bands < radius + 1:
-        # fewer bands than radius+1 breaks the pigeonhole guarantee: a pair
-        # within the radius could differ in every band and never collide
-        raise ValueError(
-            f"bands ({bands}) must be ≥ radius + 1 ({radius + 1}) for the "
-            "pigeonhole guarantee to hold"
-        )
+        raise ValueError("radius + 1 bands must be ≤ 64 (64-bit signatures)")
     width = 64 // bands  # last band absorbs the remainder bits
 
     sig = (
         signatures
         if signatures is not None
         else materialize(simhash_signatures(
-            df, text_col, id_col, portable=portable
+            df, portable=portable
         ))
     )
 
@@ -410,24 +381,17 @@ def simhash_hamming_candidates(
     )
 
 
-def token_jaccard_pairs(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str = "lang",
-    threshold: float = 0.5,
-) -> DataFrame:
+def token_jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard similarity over distinct-token sets for all doc pairs
-    sharing ``block_col``. Blocking bounds the quadratic term; at 100 TB use
+    sharing ``lang``. Blocking bounds the quadratic term; at 100 TB use
     LSH first and this only to verify candidates.
 
     Output: (id_a, id_b, jaccard) with jaccard rounded to 6 dp.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        F.explode(F.array_distinct(F.split(_norm(F.col(text_col)), " "))).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.col("lang").alias("blk"),
+        F.explode(F.array_distinct(F.split(_norm(F.col("text")), " "))).alias("tok"),
     )
     sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n_toks"))
 
@@ -467,9 +431,6 @@ def token_jaccard_pairs(
 def shingle_jaccard_pairs(
     df: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
     portable: bool = False,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -477,7 +438,7 @@ def shingle_jaccard_pairs(
     the banded MinHash tier (MinHash estimates shingle-set resemblance, so
     auditing its candidates against token-set Jaccard would measure the
     wrong quantity). Shingle identity is the same Carter-Wegman combine of
-    ``shingle_k`` consecutive token hashes that ``minhash_signatures``
+    ``_SHINGLE_K`` consecutive token hashes that ``minhash_signatures``
     min-aggregates, trailing short shingles included, so the two tiers see
     the identical set universe.
 
@@ -496,14 +457,14 @@ def shingle_jaccard_pairs(
     sets of the (possibly capped) universe, rounded 6 dp.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias("pos", "t"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
     ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
     w = Window.partitionBy("id").orderBy("pos")
     sh = toks.select(
         "id",
         _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, shingle_k)],
+            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, _SHINGLE_K)],
             portable,
         ).alias("h"),
     ).distinct()
@@ -547,12 +508,8 @@ def shingle_jaccard_pairs(
 def shingle_containment_pairs(
     df: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
     portable: bool = False,
     threshold: float = 0.5,
-    max_df: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC containment over the distinct-shingle sets: c(A→B) =
     |A∩B| / |A| — the quantity Jaccard structurally underestimates when a
@@ -561,33 +518,25 @@ def shingle_containment_pairs(
     quote-farm / boilerplate-wrapper detector of crawl pipelines, the
     set-containment-join literature's problem shape.
 
-    Same set universe, pair generation (inverted-index AllPairs join), and
-    ``max_df`` heat-cap semantics as :func:`shingle_jaccard_pairs`, so the
-    two tiers are directly comparable on the same pairs. Output keeps both
+    Same set universe and pair generation (inverted-index AllPairs join)
+    as :func:`shingle_jaccard_pairs` (without its heat cap), so the two
+    tiers are directly comparable on the same pairs. Output keeps both
     directions' exact integers — (id_a, id_b, n_shared, n_a, n_b,
     containment_a, containment_b) — filtered to pairs where EITHER
     direction reaches ``threshold`` (the unrounded single-division ratio,
     bit-identical across engines)."""
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias("pos", "t"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
     ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
     w = Window.partitionBy("id").orderBy("pos")
     sh = toks.select(
         "id",
         _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, shingle_k)],
+            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, _SHINGLE_K)],
             portable,
         ).alias("h"),
     ).distinct()
-    if max_df is not None:
-        hot = (
-            sh.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("h")
-        )
-        sh = sh.join(hot, "h", "left_anti")
     sizes = sh.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sh")
     )
@@ -623,8 +572,6 @@ def jaccard_verify_pairs(
     cand: DataFrame,
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact token-set Jaccard scoring of CANDIDATE pairs — the verify tier
@@ -649,16 +596,16 @@ def jaccard_verify_pairs(
     # Both tables are candidate-bounded — small by LSH construction.
     cand = materialize(cand)
     ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionAll(cand.select(F.col("id_b").alias(id_col)))
+        cand.select(F.col("id_a").alias("doc_id"))
+        .unionAll(cand.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     toks = materialize(
-        docs.join(F.broadcast(ids), id_col, "left_semi")
+        docs.join(F.broadcast(ids), "doc_id", "left_semi")
         .select(
-            F.col(id_col).alias("_tid"),
+            F.col("doc_id").alias("_tid"),
             F.explode(
-                F.array_distinct(F.split(_norm(F.col(text_col)), " "))
+                F.array_distinct(F.split(_norm(F.col("text")), " "))
             ).alias("tok"),
         )
     )
@@ -690,8 +637,6 @@ def jaccard_verify_pairs(
 
 def winnow_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     k: int = 4,
     window: int = 4,
@@ -712,8 +657,8 @@ def winnow_fingerprints(
     Output: (id, fp) — one row per distinct fingerprint hash per doc.
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias("pos", "t"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
     ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
     w_doc = Window.partitionBy("id").orderBy("pos")
     kg = toks.select(
@@ -738,30 +683,25 @@ def winnow_fingerprints(
 
 def winnow_overlap_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     *,
     k: int = 4,
     window: int = 4,
     min_shared: int = 2,
-    max_doc_freq: int = 100,
     portable: bool = False,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints — the
-    copy-detection join. Fingerprints occurring in more than
-    ``max_doc_freq`` documents (boilerplate k-grams) are dropped BEFORE the
+    copy-detection join. Fingerprints occurring in more than 100
+    documents (boilerplate k-grams) are dropped BEFORE the
     self-join, bounding the per-key blowup the way stop-shingle removal
     does — without the cap one ubiquitous phrase makes the join quadratic.
 
     Output: (id_a, id_b, n_shared).
     """
-    fps = winnow_fingerprints(
-        df, text_col, id_col, k=k, window=window, portable=portable
-    )
+    fps = winnow_fingerprints(df, k=k, window=window, portable=portable)
     rare = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") <= max_doc_freq)
+        .filter(F.col("_df") <= 100)
         .select("fp")
     )
     fps = fps.join(rare, "fp")  # semi-join shape; AQE broadcasts when small
@@ -787,36 +727,30 @@ def lsh_write_index(
     docs: DataFrame,
     path: str,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
     portable: bool = False,
-    bucket_prefixes: int = 64,
 ) -> None:
     """Materialize the corpus's banded MinHash rows under ``path``/bands,
-    PARTITIONED by a bucket prefix (``pmod(bucket, bucket_prefixes)``) — the
+    PARTITIONED by a bucket prefix (``pmod(bucket, _BUCKET_PREFIXES)``) — the
     dedup analogue of the IVF/BM25 index-at-rest tier: an incoming batch
     reads only the partitions its own buckets hash into, so per-batch match
     cost is driven by batch size, not corpus size (the scan shows
     PartitionFilters, asserted in tests).
 
-    Contract: query/append must pass the SAME (num_hashes, bands,
-    shingle_k, portable, bucket_prefixes) — signatures are only comparable
-    under one parameterization (same stance as the BM25/IVF indexes).
+    Contract: query/append must pass the SAME ``portable`` — signatures
+    are only comparable under one parameterization (same stance as the
+    BM25/IVF indexes); the module constants fix the rest.
     """
     banded = _banded(
         minhash_signatures(
-            docs, text_col, id_col, num_hashes, shingle_k, portable=portable
+            docs, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
         ),
-        num_hashes,
-        bands,
+        _NUM_HASHES,
+        _BANDS,
         portable,
     )
     (
         banded.withColumn(
-            "pfx", F.pmod(F.col("bucket"), F.lit(bucket_prefixes)).cast("int")
+            "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
         )
         .write.mode("overwrite")
         .partitionBy("pfx")
@@ -828,13 +762,7 @@ def lsh_append_index(
     new_docs: DataFrame,
     path: str,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
     portable: bool = False,
-    bucket_prefixes: int = 64,
 ) -> None:
     """Corpus APPEND: the delta's banded rows land as new files in the same
     prefix partitions — existing rows are never read or rewritten (banded
@@ -843,15 +771,15 @@ def lsh_append_index(
     ledger) before appending."""
     banded = _banded(
         minhash_signatures(
-            new_docs, text_col, id_col, num_hashes, shingle_k, portable=portable
+            new_docs, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
         ),
-        num_hashes,
-        bands,
+        _NUM_HASHES,
+        _BANDS,
         portable,
     )
     (
         banded.withColumn(
-            "pfx", F.pmod(F.col("bucket"), F.lit(bucket_prefixes)).cast("int")
+            "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
         )
         .write.mode("append")
         .partitionBy("pfx")
@@ -864,14 +792,7 @@ def lsh_match_index(
     path: str,
     batch: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 8,
-    shingle_k: int = 3,
     portable: bool = False,
-    bucket_prefixes: int = 64,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Candidate (corpus, batch) near-dup pairs against the index at rest:
     (id_a = corpus id, id_b = batch id, n_bands_matched) — identical output
@@ -879,29 +800,27 @@ def lsh_match_index(
     llm_dedup_index's oracle), without recomputing a single corpus
     signature.
 
-    The batch's distinct bucket prefixes (≤ ``bucket_prefixes`` ints — a
+    The batch's distinct bucket prefixes (≤ ``_BUCKET_PREFIXES`` ints — a
     bounded driver round-trip, like IVF's probed lists) become a partition
     filter on the index scan; the batch side broadcasts, so the corpus
     index is never shuffled. Per-batch cost: batch signature build + a
     pruned index read."""
     b = _banded(
         minhash_signatures(
-            batch, text_col, id_col, num_hashes, shingle_k, portable=portable
+            batch, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
         ),
-        num_hashes,
-        bands,
+        _NUM_HASHES,
+        _BANDS,
         portable,
     ).withColumn(
-        "pfx", F.pmod(F.col("bucket"), F.lit(bucket_prefixes)).cast("int")
+        "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
     )
     b = materialize(b)  # prefix collect + join reuse one computation
     pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
     corpus = spark.read.parquet(path.rstrip("/") + "/bands").filter(
         F.col("pfx").isin(pfxs)
     )
-    probe = b.alias("b")
-    if broadcast_batch:
-        probe = F.broadcast(probe)
+    probe = F.broadcast(b.alias("b"))
     return (
         corpus.alias("a")
         .join(
@@ -914,21 +833,11 @@ def lsh_match_index(
     )
 
 
-def cdc_chunk_stats(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    prime: int = 31,
-    modulus: int = 1 << 20,
-    mask: int = 15,
-    max_bytes: int = 256,
-) -> DataFrame:
+def cdc_chunk_stats(df: DataFrame, *, k: int = 4) -> DataFrame:
     """Content-defined chunking dedup (LBFS/rsync discipline — the
     storage-level dedup a blob lake runs): a k-byte polynomial rolling
     hash cuts each payload at content-determined boundaries
-    (``h % (mask+1) == 0``), so an insertion shifts ONE chunk instead of
+    (``h % 16 == 0``), so an insertion shifts ONE chunk instead of
     re-aligning every fixed-size block; identical chunks across documents
     then collapse in a hash-keyed groupBy. Output: duplicated chunks only
     — (chunk_md5, chunk_len, n_copies, n_docs).
@@ -941,7 +850,7 @@ def cdc_chunk_stats(
     per-position hash, no shuffle); the only exchange is the chunk-hash
     groupBy with map-side combine — a data-lake-sized corpus dedups with
     one shuffle whose keys are content hashes (uniform by construction).
-    ``max_bytes`` bounds the demo tier; production payloads stream whole.
+    The first 256 bytes of each payload are chunked.
     """
     import binascii
     import hashlib
@@ -951,7 +860,7 @@ def cdc_chunk_stats(
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    pows = [pow(prime, j, modulus) for j in range(k)]
+    pows = [pow(31, j, 1 << 20) for j in range(k)]
 
     def gen(batches):
         for pdf in batches:
@@ -966,8 +875,8 @@ def cdc_chunk_stats(
                 )
                 lens.append(len(chunk))
 
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                body = (text or "").encode("utf-8")[:max_bytes]
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
+                body = (text or "").encode("utf-8")[:256]
                 n = len(body)
                 if n == 0:
                     continue
@@ -976,7 +885,7 @@ def cdc_chunk_stats(
                 for j, pw in enumerate(pows):
                     h[k - 1 :] += b[k - 1 - j : n - j] * pw
                 bound = np.zeros(n, dtype=bool)
-                bound[k - 1 :] = (h[k - 1 :] % modulus) % (mask + 1) == 0
+                bound[k - 1 :] = (h[k - 1 :] % (1 << 20)) % 16 == 0
                 start = 0
                 for i in np.flatnonzero(bound):
                     emit(did, body[start : i + 1])
@@ -984,17 +893,17 @@ def cdc_chunk_stats(
                 if start < n:
                     emit(did, body[start:n])
             yield pd.DataFrame(
-                {id_col: ids, "chunk_md5": md5s, "chunk_len": lens}
+                {"doc_id": ids, "chunk_md5": md5s, "chunk_len": lens}
             )
 
-    chunks = df.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, chunk_md5 string, chunk_len int"
+    chunks = df.select("doc_id", "text").mapInPandas(
+        gen, "doc_id long, chunk_md5 string, chunk_len int"
     )
     return (
         chunks.groupBy("chunk_md5", "chunk_len")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_copies"),
-            F.countDistinct(id_col).cast("bigint").alias("n_docs"),
+            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
         )
         .filter(F.col("n_copies") > 1)
     )

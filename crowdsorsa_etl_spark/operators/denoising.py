@@ -47,22 +47,17 @@ def _sentinel(k: Column) -> Column:
     return F.concat(F.lit("<extra_id_"), k.cast("string"), F.lit(">"))
 
 
-def span_corrupt(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def span_corrupt(df: DataFrame) -> DataFrame:
     """T5 span corruption over the shared normalized token stream.
 
-    Output: (id_col, n_tokens, n_spans, n_masked, input_text,
+    Output: (doc_id, n_tokens, n_spans, n_masked, input_text,
     target_text). A token at index i is masked iff
     ``i mod SPAN_PERIOD ∈ [SPAN_START, SPAN_START+SPAN_LEN)``; the span id
     is ``i // SPAN_PERIOD``. Empty docs are dropped (no tokens to corrupt).
     All work is per-row higher-order-function arithmetic — no exchange.
     """
-    nt = normalize_text(F.col(text_col))
-    base = df.select(F.col(id_col), F.split(nt, " ").alias("_arr")).filter(
+    nt = normalize_text(F.col("text"))
+    base = df.select(F.col("doc_id"), F.split(nt, " ").alias("_arr")).filter(
         nt != ""
     )
     arr = F.col("_arr")
@@ -101,7 +96,7 @@ def span_corrupt(
     n_spans = F.size(F.filter(idx, is_start)).cast("bigint")
     body = F.array_join(tgt_items, " ")
     return base.select(
-        id_col,
+        "doc_id",
         n.cast("bigint").alias("n_tokens"),
         n_spans.alias("n_spans"),
         F.size(tgt_items).cast("bigint").alias("n_masked"),
@@ -115,14 +110,14 @@ def span_corrupt(
     )
 
 
-def span_corrupt_sql(norm_sql: str, table: str = "documents") -> str:
+def span_corrupt_sql(norm_sql: str) -> str:
     """DuckDB replay of :func:`span_corrupt` (same constants, same
     sentinel strings, ORDER BY token index inside the per-doc rebuild)."""
     lo, hi = SPAN_START, SPAN_START + SPAN_LEN
     return f"""
     WITH toks AS (
       SELECT doc_id, string_split(nt, ' ') AS arr
-      FROM (SELECT doc_id, {norm_sql} AS nt FROM {table})
+      FROM (SELECT doc_id, {norm_sql} AS nt FROM documents)
       WHERE nt != ''
     ),
     tok AS (
@@ -161,23 +156,17 @@ def span_corrupt_sql(norm_sql: str, table: str = "documents") -> str:
     """
 
 
-def fim_transform(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_tokens: int = 3,
-) -> DataFrame:
+def fim_transform(df: DataFrame, *, min_tokens: int = 3) -> DataFrame:
     """Fill-in-the-middle PSM reordering (Bavarian et al. 2022).
 
     Split points are n//3 and (2n)//3 over the normalized token array;
     docs shorter than ``min_tokens`` are dropped (every region must be
-    non-empty). Output: (id_col, n_tokens, fim_text). Pure per-row array
+    non-empty). Output: (doc_id, n_tokens, fim_text). Pure per-row array
     slicing — no exchange, no Python."""
     if min_tokens < 3:
         raise ValueError(f"min_tokens must be >= 3, got {min_tokens}")
-    nt = normalize_text(F.col(text_col))
-    base = df.select(F.col(id_col), F.split(nt, " ").alias("_arr")).filter(
+    nt = normalize_text(F.col("text"))
+    base = df.select(F.col("doc_id"), F.split(nt, " ").alias("_arr")).filter(
         nt != ""
     )
     arr = F.col("_arr")
@@ -195,27 +184,25 @@ def fim_transform(
         join(F.slice(arr, p1 + 1, p2 - p1)),
     )
     return base.filter(n >= min_tokens).select(
-        id_col,
+        "doc_id",
         n.cast("bigint").alias("n_tokens"),
         fim.alias("fim_text"),
     )
 
 
-def fim_transform_sql(
-    norm_sql: str, table: str = "documents", min_tokens: int = 3
-) -> str:
+def fim_transform_sql(norm_sql: str) -> str:
     """DuckDB replay of :func:`fim_transform` (1-based inclusive list
     slices mirror Spark's slice(start, length))."""
     return f"""
     WITH toks AS (
       SELECT doc_id, string_split(nt, ' ') AS arr, len(string_split(nt, ' ')) AS n
-      FROM (SELECT doc_id, {norm_sql} AS nt FROM {table})
+      FROM (SELECT doc_id, {norm_sql} AS nt FROM documents)
       WHERE nt != ''
     ),
     cut AS (
       SELECT doc_id, arr, CAST(n AS BIGINT) AS n,
              CAST(n // 3 AS INT) AS p1, CAST((2 * n) // 3 AS INT) AS p2
-      FROM toks WHERE n >= {min_tokens}
+      FROM toks WHERE n >= 3
     )
     SELECT doc_id, n AS n_tokens,
            '<fim_prefix> ' || array_to_string(arr[1:p1], ' ')

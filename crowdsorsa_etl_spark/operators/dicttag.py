@@ -96,13 +96,7 @@ def _scan_counts(text: str, goto, fail, word_of, order, n_keywords: int):
     return counts
 
 
-def dictionary_tag(
-    docs: DataFrame,
-    keywords: list[str],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dictionary_tag(docs: DataFrame, keywords: list[str]) -> DataFrame:
     """(doc_id, keyword, n_matches) with n_matches > 0 — overlapping
     occurrence counts of every dictionary keyword in every document."""
     if not keywords:
@@ -111,10 +105,10 @@ def dictionary_tag(
         raise ValueError("dictionary_tag: duplicate keywords")
     kws = list(keywords)
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     src = docs.select(
-        F.col(id_col).alias("doc_id"),
-        normalize_text(F.col(text_col)).alias("_norm"),
+        F.col("doc_id"),
+        normalize_text(F.col("text")).alias("_norm"),
     )
     out_schema = (
         f"doc_id {id_field.dataType.simpleString()}, "
@@ -145,15 +139,13 @@ def dictionary_tag(
     return src.mapInPandas(tag, out_schema)
 
 
-def dictionary_tag_sql(
-    keywords: list[str], *, table: str = "documents", norm_sql: str
-) -> str:
+def dictionary_tag_sql(keywords: list[str], *, norm_sql: str) -> str:
     """Exact DuckDB oracle: enumerate every start position and count
     matches per keyword — O(dict × corpus), fine at oracle scale, and
     literally the definition the automaton implements."""
     values = ", ".join("(%s)" % _sql_str(k) for k in keywords)
     return f"""
-    WITH t AS (SELECT doc_id, {norm_sql} AS norm FROM {table}),
+    WITH t AS (SELECT doc_id, {norm_sql} AS norm FROM documents),
     kw(k) AS (VALUES {values})
     SELECT t.doc_id, kw.k AS keyword, CAST(count(*) AS BIGINT) AS n_matches
     FROM t, kw, UNNEST(range(1, len(t.norm) - len(kw.k) + 2)) AS u(i)

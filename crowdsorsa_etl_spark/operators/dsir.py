@@ -42,6 +42,8 @@ from crowdsorsa_etl_spark.functions.portable_hash import hex60_spark, hex60_sql
 from crowdsorsa_etl_spark.functions.text import normalize_text
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
+_SMOOTHING = 1.0
+
 #: fixed-point scale for bucket log-ratios (6 dp — the registry rounding
 #: convention, expressed as an integer scale so sums stay exact)
 FX = 1_000_000
@@ -51,8 +53,6 @@ def hashed_ngram_buckets(
     docs: DataFrame,
     *,
     buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
     """(doc_id, bucket, *extra_cols): one row per unigram+bigram OCCURRENCE
@@ -60,9 +60,9 @@ def hashed_ngram_buckets(
     hex60. Bigrams join their words with a single space, so a bigram can
     never collide with a unigram of the same spelling only by hashing.
     Docs whose normalized text is empty drop out (no features)."""
-    arr = F.split(normalize_text(F.col(text_col)), " ")
+    arr = F.split(normalize_text(F.col("text")), " ")
     src = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in (extra_cols or [])],
         arr.alias("arr"),
     ).filter((F.size("arr") > 0) & (F.element_at("arr", 1) != ""))
@@ -92,9 +92,6 @@ def dsir_bucket_stats(
     target_pred: Column,
     *,
     buckets: int,
-    smoothing: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(bucket, t_cnt, r_cnt, lr_fx): per-bucket occurrence counts in the
     target (``target_pred`` true) and raw (false) slices, and the smoothed
@@ -102,11 +99,9 @@ def dsir_bucket_stats(
     rows — the bounded model artifact."""
     feats = hashed_ngram_buckets(
         docs.select(
-            F.col(id_col), F.col(text_col), target_pred.alias("_is_t")
+            F.col("doc_id"), F.col("text"), target_pred.alias("_is_t")
         ),
         buckets=buckets,
-        text_col=text_col,
-        id_col=id_col,
         extra_cols=["_is_t"],
     )
     stats = feats.groupBy("bucket").agg(
@@ -121,7 +116,7 @@ def dsir_bucket_stats(
         F.sum("t_cnt").cast("bigint").alias("t_total"),
         F.sum("r_cnt").cast("bigint").alias("r_total"),
     )
-    lam = float(smoothing)
+    lam = 1.0
     lr = F.log(
         (F.col("t_cnt") + F.lit(lam))
         / (F.col("t_total") + F.lit(lam * buckets))
@@ -142,8 +137,6 @@ def dsir_scores(
     stats: DataFrame,
     *,
     buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, n_grams, logratio, avg_logratio, selected): per-doc DSIR
     importance score against a frozen ``stats`` artifact
@@ -152,9 +145,7 @@ def dsir_scores(
     artifact contribute nothing but are counted (``n_grams`` is the full
     feature count) — with stats built over a superset corpus the join
     always hits."""
-    feats = hashed_ngram_buckets(
-        docs, buckets=buckets, text_col=text_col, id_col=id_col
-    )
+    feats = hashed_ngram_buckets(docs, buckets=buckets)
     joined = feats.join(
         F.broadcast(stats.select("bucket", "lr_fx")), "bucket", "left"
     )
@@ -177,9 +168,6 @@ def dsir_weights_onepass(
     target_pred: Column,
     *,
     buckets: int,
-    smoothing: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """:func:`dsir_bucket_stats` + :func:`dsir_scores` fused over ONE
     n-gram pass (r16, guide §2.4): the two-call form tokenizes and
@@ -196,11 +184,9 @@ def dsir_weights_onepass(
     the same snapshot, as in llm_dsir_weights."""
     feats = hashed_ngram_buckets(
         docs.select(
-            F.col(id_col), F.col(text_col), target_pred.alias("_is_t")
+            F.col("doc_id"), F.col("text"), target_pred.alias("_is_t")
         ),
         buckets=buckets,
-        text_col=text_col,
-        id_col=id_col,
         extra_cols=["_is_t"],
     )
     grid = materialize(
@@ -219,7 +205,7 @@ def dsir_weights_onepass(
         F.sum("t_cnt").cast("bigint").alias("t_total"),
         F.sum("r_cnt").cast("bigint").alias("r_total"),
     )
-    lam = float(smoothing)
+    lam = _SMOOTHING
     lr = F.log(
         (F.col("t_cnt") + F.lit(lam))
         / (F.col("t_total") + F.lit(lam * buckets))
@@ -286,12 +272,10 @@ def features_sql(
     """
 
 
-def stats_sql(
-    feats_cte: str, buckets: int, smoothing: float = 1.0
-) -> str:
+def stats_sql(feats_cte: str, buckets: int) -> str:
     """(bucket, t_cnt, r_cnt, lr_fx) from a features CTE carrying
     (doc_id, bucket, is_t)."""
-    lam = float(smoothing)
+    lam = _SMOOTHING
     lr = (
         f"(ln((t_cnt + {lam}) / (t_total + {lam * buckets})) "
         f"- ln((r_cnt + {lam}) / (r_total + {lam * buckets})))"

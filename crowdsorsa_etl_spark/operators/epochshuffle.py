@@ -86,25 +86,22 @@ def with_epoch_pos(
     n: int,
     epoch: int,
     seed: str,
-    *,
-    rounds: int = DEFAULT_ROUNDS,
-    out_col: str = "epos",
 ) -> DataFrame:
-    """Add ``out_col`` = pi_epoch(pos_col) over [0, n). One narrow
+    """Add ``epos`` = pi_epoch(pos_col) over [0, n). One narrow
     projection per round, NOT one nested expression: each round references
     the running value 4 times (partner twice, pair-max, else-branch), so a
     single expression tree grows 4^rounds nodes — Catalyst would choke and
     DuckDB's binder caps nesting at 128. Per-round aliases keep the tree
-    linear in ``rounds``; md5 is non-cheap, so CollapseProject leaves the
+    linear in the round count; md5 is non-cheap, so CollapseProject leaves the
     aliases in place instead of re-inlining them. Still zero exchange —
     rounds are row-local projections fused into the scan stage."""
     if n <= 0:
         raise ValueError("store size must be positive")
     cur = F.col(pos_col).cast("bigint")
-    out = df.withColumn(out_col, cur)
-    for r in range(rounds):
+    out = df.withColumn("epos", cur)
+    for r in range(DEFAULT_ROUNDS):
         out = out.withColumn(
-            out_col, _round_expr_spark(F.col(out_col), n, epoch, seed, r)
+            "epos", _round_expr_spark(F.col("epos"), n, epoch, seed, r)
         )
     return out
 
@@ -136,25 +133,22 @@ def epoch_perm_cte_sql(
     n_expr: str,
     epoch: int,
     seed: str,
-    *,
-    rounds: int = DEFAULT_ROUNDS,
-    prefix: str = "e",
 ) -> tuple[str, str]:
     """(cte_definitions, final_cte_name): the full permutation as a chain
     of per-round CTEs over ``base_cte``. ``carry_cols`` ride along
     unchanged; the running value is column ``x`` (plus ``n`` for the
     domain size) in every stage."""
     defs = [
-        f"{prefix}{epoch}_0 AS (SELECT {carry_cols}, CAST({x_expr} AS BIGINT)"
+        f"e{epoch}_0 AS (SELECT {carry_cols}, CAST({x_expr} AS BIGINT)"
         f" AS x, CAST({n_expr} AS BIGINT) AS n FROM {base_cte})"
     ]
-    for r in range(rounds):
+    for r in range(DEFAULT_ROUNDS):
         step = epoch_round_sql("x", "n", epoch, seed, r)
         defs.append(
-            f"{prefix}{epoch}_{r + 1} AS (SELECT {carry_cols}, {step} AS x,"
-            f" n FROM {prefix}{epoch}_{r})"
+            f"e{epoch}_{r + 1} AS (SELECT {carry_cols}, {step} AS x,"
+            f" n FROM e{epoch}_{r})"
         )
-    return ",\n    ".join(defs), f"{prefix}{epoch}_{rounds}"
+    return ",\n    ".join(defs), f"e{epoch}_{DEFAULT_ROUNDS}"
 
 
 def epoch_manifest(
@@ -164,7 +158,6 @@ def epoch_manifest(
     *,
     shard_docs: int = 64,
     seed: str = "shuf:v1:",
-    rounds: int = DEFAULT_ROUNDS,
 ) -> DataFrame:
     """Per-shard manifest of epoch ``epoch``'s global order — the artifact
     an epoch-e loader reads. READ-ONLY over the store: one scan of
@@ -183,7 +176,7 @@ def epoch_manifest(
     n = _get_next(spark, root)
     rows = spark.read.parquet(f"{root}/rows").select("pos", "doc_id")
     remapped = with_epoch_pos(
-        rows, "pos", n, epoch, seed, rounds=rounds, out_col="epos"
+        rows, "pos", n, epoch, seed
     ).select(
         "doc_id",
         "epos",

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text
 
+_BETA = 2.0
+
 
 def _ngram_counts(
     df: DataFrame, n: int, *, pair_col: str, text_col: str, side: str
@@ -82,16 +84,10 @@ def _clipped(
     )
 
 
-def bleu2_pairs(
-    cands: DataFrame,
-    refs: DataFrame,
-    *,
-    pair_col: str = "pair_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bleu2_pairs(cands: DataFrame, refs: DataFrame) -> DataFrame:
     """(pair_id, c_len, r_len, p1, p2, bp, bleu2) per pair, 6 dp."""
-    u = _clipped(cands, refs, 1, pair_col=pair_col, text_col=text_col)
-    b = _clipped(cands, refs, 2, pair_col=pair_col, text_col=text_col)
+    u = _clipped(cands, refs, 1, pair_col="pair_id", text_col="text")
+    b = _clipped(cands, refs, 2, pair_col="pair_id", text_col="text")
     return bleu2_from_clipped(u, b)
 
 
@@ -139,17 +135,10 @@ def bleu2_from_clipped(u: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def rouge_pairs(
-    cands: DataFrame,
-    refs: DataFrame,
-    n: int,
-    *,
-    pair_col: str = "pair_id",
-    text_col: str = "text",
-) -> DataFrame:
+def rouge_pairs(cands: DataFrame, refs: DataFrame, n: int) -> DataFrame:
     """(pair_id, matched, cand_ngrams, ref_ngrams, recall, precision, f1)
     for ROUGE-N, 6 dp; F1 is 0 where nothing matched."""
-    c = _clipped(cands, refs, n, pair_col=pair_col, text_col=text_col)
+    c = _clipped(cands, refs, n, pair_col="pair_id", text_col="text")
     return rouge_from_clipped(c)
 
 
@@ -182,9 +171,9 @@ def rouge_from_clipped(c: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _counts_sql(src_cte: str, n: int, norm_col: str = "text") -> str:
+def _counts_sql(src_cte: str, n: int) -> str:
     if n == 1:
-        grams = f"unnest(string_split({norm_col}, ' '))"
+        grams = "unnest(string_split(text, ' '))"
         return f"""
       SELECT pair_id, ng, CAST(count(*) AS BIGINT) AS cnt
       FROM (SELECT pair_id, {grams} AS ng FROM {src_cte})
@@ -195,7 +184,7 @@ def _counts_sql(src_cte: str, n: int, norm_col: str = "text") -> str:
       FROM (
         SELECT pair_id,
                array_to_string(arr[i : i + {n} - 1], ' ') AS ng
-        FROM (SELECT pair_id, string_split({norm_col}, ' ') AS arr
+        FROM (SELECT pair_id, string_split(text, ' ') AS arr
               FROM {src_cte}),
              UNNEST(range(1, len(arr) - {n} + 2)) AS t(i)
       )
@@ -297,9 +286,6 @@ def chrf_pairs(
     refs: DataFrame,
     *,
     max_order: int = 3,
-    beta: float = 2.0,
-    pair_col: str = "pair_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(pair_id, f1..f{max_order}, chrf): per-order F-β over clipped char
     n-gram matches, chrF their arithmetic mean. Every per-order F rounds
@@ -307,14 +293,14 @@ def chrf_pairs(
     doubles in the same written order. F is 0 where precision+recall is 0
     (pairs whose candidate produced no n-grams of that order score 0 for
     it — the convention a SQL oracle can replay exactly)."""
-    b2 = float(beta) * float(beta)
+    b2 = _BETA * _BETA
     out = None
     for n in range(1, max_order + 1):
         c = _char_ngram_counts(
-            cands, n, pair_col=pair_col, text_col=text_col, side="c"
+            cands, n, pair_col="pair_id", text_col="text", side="c"
         )
         r = _char_ngram_counts(
-            refs, n, pair_col=pair_col, text_col=text_col, side="r"
+            refs, n, pair_col="pair_id", text_col="text", side="r"
         )
         cl = (
             c.join(r, ["pair_id", "ng"], "full_outer")
@@ -362,7 +348,7 @@ def chrf_pairs(
     )
 
 
-def char_counts_sql(src_cte: str, n: int, norm_col: str = "text") -> str:
+def char_counts_sql(src_cte: str, n: int) -> str:
     """(pair_id, ng, cnt) char n-gram counts — DuckDB mirror of
     :func:`_char_ngram_counts` over a CTE with (pair_id, text) where text
     is already normalized (the space strip happens here)."""
@@ -370,7 +356,7 @@ def char_counts_sql(src_cte: str, n: int, norm_col: str = "text") -> str:
       SELECT pair_id, ng, CAST(count(*) AS BIGINT) AS cnt
       FROM (
         SELECT pair_id, substr(s, i, {n}) AS ng
-        FROM (SELECT pair_id, replace({norm_col}, ' ', '') AS s
+        FROM (SELECT pair_id, replace(text, ' ', '') AS s
               FROM {src_cte}),
              UNNEST(range(1, len(s) - {n} + 2)) AS t(i)
       )
@@ -378,10 +364,10 @@ def char_counts_sql(src_cte: str, n: int, norm_col: str = "text") -> str:
     """
 
 
-def chrf_order_sql(n: int, beta: float = 2.0) -> str:
+def chrf_order_sql(n: int) -> str:
     """CTE body producing (pair_id, f{n}) for char order ``n`` from CTEs
     ``cand``/``ref`` with (pair_id, text)."""
-    b2 = float(beta) * float(beta)
+    b2 = _BETA * _BETA
     return f"""
       SELECT pair_id,
              round(CASE WHEN m > 0

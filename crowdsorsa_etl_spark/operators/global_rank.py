@@ -139,7 +139,6 @@ def with_global_cumsum(
     weight_col: str,
     *,
     cum_col: str = "global_cum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Running total of ``weight_col`` over a global ordering, with no
     single-partition window anywhere in the plan — the same two-phase
@@ -159,8 +158,7 @@ def with_global_cumsum(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
@@ -204,7 +202,6 @@ def with_global_cumsum_multi(
     weight_cols: list[str],
     *,
     cum_cols: list[str] | None = None,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, list[int]]:
     """Running totals of SEVERAL weight columns over ONE global ordering,
     with no single-partition window anywhere in the plan — the
@@ -228,8 +225,7 @@ def with_global_cumsum_multi(
     if len(cum_cols) != len(weight_cols):
         raise ValueError("cum_cols must match weight_cols")
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     part = materialize(
         df.repartitionByRange(num_partitions, *order_cols)

@@ -26,8 +26,6 @@ from crowdsorsa_etl_spark.operators.checkpointing import materialize
 def pagerank(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
 ) -> DataFrame:
@@ -43,10 +41,7 @@ def pagerank(
     # materialize the (deduped) edge list once: every iteration's join
     # re-traverses its lineage otherwise, turning k iterations into k
     # re-scans of the source
-    e = materialize(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-    )
+    e = materialize(edges.select(F.col("src"), F.col("dst")).distinct())
     nodes = materialize(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -91,9 +86,7 @@ def pagerank(
     return ranked.select("node", F.col("rank").cast("double"))
 
 
-def triangle_counts(
-    edges: DataFrame, *, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over an undirected graph.
 
     The classic oriented-edge formulation: orient every edge low→high
@@ -109,8 +102,8 @@ def triangle_counts(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") < F.col("b"))
         .distinct()

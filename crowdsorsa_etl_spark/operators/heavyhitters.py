@@ -44,13 +44,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
-
-
-def _tokens(df: DataFrame, text_col: str) -> DataFrame:
-    return df.select(
-        F.explode(F.split(_norm(F.col(text_col)), " ")).alias("token")
-    ).filter(F.col("token") != "")
+from crowdsorsa_etl_spark.functions.text import (
+    normalize_text as _norm,
+    normalized_tokens,
+)
 
 
 def _mg_fold(tokens: Iterator[str], capacity: int) -> dict[str, int]:
@@ -78,7 +75,7 @@ def mg_partition_summaries(
     partition of (token, est), est ≥ local_count − n_partition/(k+1)."""
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1; got {capacity}")
-    toks = _tokens(df, text_col)
+    toks = normalized_tokens(df, text_col)
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one MG table per PARTITION: the dict survives across the
@@ -131,7 +128,7 @@ def heavy_hitters(
             f"1/(capacity+1)={1.0 / (capacity + 1):.6f}; frequent items "
             "could be missed — raise capacity or min_share"
         )
-    toks = _tokens(df, text_col)
+    toks = normalized_tokens(df, text_col)
     # pass 1 output is ≤ (capacity+1) × partitions rows — safe to pull to
     # the driver (same bounded-collect rationale as similarity.py); the
     # NULL-token sentinels give n without a second corpus scan

@@ -41,12 +41,10 @@ HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 _POW_W = 1 << HLL_WBITS
 
 
-def hll_registers(
-    df: DataFrame, col, *, seed: str = "hll:v1:"
-) -> DataFrame:
+def hll_registers(df: DataFrame, col) -> DataFrame:
     """(idx int, r int) for registers hit at least once; absent idx rows
     are zero registers (callers derive V = m - count(*))."""
-    h = hex60_spark(F.concat(F.lit(seed), F.col(col).cast("string")))
+    h = hex60_spark(F.concat(F.lit("hll:v1:"), F.col(col).cast("string")))
     base = df.select(h.alias("_h")).select(
         F.expr(f"_h div {_POW_W}").cast("int").alias("idx"),
         (F.col("_h") % F.lit(_POW_W)).alias("_w"),
@@ -78,9 +76,9 @@ def hll_estimate_expr(sum_fx: Column, v_zero: Column) -> Column:
     return F.when((raw <= 2.5 * HLL_M) & (v_zero > 0), lc).otherwise(raw)
 
 
-def hll_registers_sql(source_sql: str, value_sql: str, *, seed: str = "hll:v1:") -> str:
+def hll_registers_sql(source_sql: str, value_sql: str) -> str:
     """DuckDB fragment producing the same (idx, r) register rows."""
-    h = hex60_sql(f"'{seed}' || CAST({value_sql} AS VARCHAR)")
+    h = hex60_sql(f"'hll:v1:' || CAST({value_sql} AS VARCHAR)")
     return f"""
       SELECT CAST(h // {_POW_W} AS INT) AS idx,
              CAST(max(CASE WHEN h % {_POW_W} = 0 THEN {HLL_WBITS + 1}
@@ -91,11 +89,11 @@ def hll_registers_sql(source_sql: str, value_sql: str, *, seed: str = "hll:v1:")
     """
 
 
-def hll_summary_sql(source_sql: str, value_sql: str, *, seed: str = "hll:v1:") -> str:
+def hll_summary_sql(source_sql: str, value_sql: str) -> str:
     """One-row oracle: register-chain md5 (pins every cell), exact integer
     2^-M fold, estimate with the same literal constants, exact distinct,
     relative error."""
-    regs = hll_registers_sql(source_sql, value_sql, seed=seed)
+    regs = hll_registers_sql(source_sql, value_sql)
     scale = 1 << (HLL_WBITS + 1)
     raw = f"(CAST({HLL_ALPHA!r} AS DOUBLE) * {float(HLL_M * HLL_M)!r} * {float(scale)!r} / CAST(sum_fx AS DOUBLE))"
     lc = f"({float(HLL_M)!r} * ln({float(HLL_M)!r} / CAST(v_zero AS DOUBLE)))"

@@ -75,12 +75,12 @@ K_DEFAULT = 32
 MAX_LEVELS = 16
 
 
-def kll_plan(n: int, k: int = K_DEFAULT, max_levels: int = MAX_LEVELS) -> list[int]:
+def kll_plan(n: int, k: int = K_DEFAULT) -> list[int]:
     """Stream length at each level for an n-item sorted feed."""
     if k < 2 or k % 2:
         raise ValueError(f"k must be even and >= 2, got {k}")
     ms, m = [], n
-    for _ in range(max_levels):
+    for _ in range(MAX_LEVELS):
         ms.append(m)
         m = (m // k) * (k // 2)
         if m == 0:
@@ -314,13 +314,12 @@ def kll_merge_sql_parts(
     b_sql: str,
     *,
     k: int = K_DEFAULT,
-    max_levels: int = MAX_LEVELS,
     prefix: str = "mg",
 ) -> tuple[list[str], str]:
     """(CTE parts, final union select) for the :func:`kll_merge` replay:
     per level ascending, the combined buffer (both inputs' level cells +
     the carry promoted from below) ranks by value and compacts with the
-    same complete-block even-keep recurrence; level ``max_levels``
+    same complete-block even-keep recurrence; level ``MAX_LEVELS``
     flushes verbatim. Inputs and output are (level, pos, value, weight)
     relations; ``a_sql``/``b_sql`` should reference FLAT top-level CTEs,
     never nest whole WITH statements (see :func:`kll_sql_parts`).
@@ -331,7 +330,7 @@ def kll_merge_sql_parts(
         f"{prefix}_carry0 AS (SELECT CAST(NULL AS BIGINT) AS value WHERE 1=0)",
     ]
     selects = []
-    for lv in range(max_levels + 1):
+    for lv in range(MAX_LEVELS + 1):
         parts.append(
             f"""
     {prefix}_l{lv} AS MATERIALIZED (
@@ -345,7 +344,7 @@ def kll_merge_sql_parts(
       )
     )"""
         )
-        if lv < max_levels:
+        if lv < MAX_LEVELS:
             selects.append(
                 f"""
     SELECT CAST({lv} AS INT) AS level,
@@ -373,27 +372,10 @@ def kll_merge_sql_parts(
     return parts, " UNION ALL ".join(selects)
 
 
-def kll_merge_sql(
-    a_sql: str,
-    b_sql: str,
-    *,
-    k: int = K_DEFAULT,
-    max_levels: int = MAX_LEVELS,
-    prefix: str = "mg",
-) -> str:
-    """Standalone ``WITH`` statement for one merge replay (see
-    :func:`kll_merge_sql_parts`; compose via parts for chained folds)."""
-    parts, select = kll_merge_sql_parts(
-        a_sql, b_sql, k=k, max_levels=max_levels, prefix=prefix
-    )
-    return "WITH " + ",".join(parts) + " " + select
-
-
 def kll_fold_sql(
     batch_sources: list[tuple[str, str, str]],
     *,
     k: int = K_DEFAULT,
-    max_levels: int = MAX_LEVELS,
 ) -> str:
     """ONE FLAT statement replaying a whole carried-sketch fold: a batch
     sketch per (source_sql, value_sql, order_sql) via the rank closed
@@ -404,9 +386,7 @@ def kll_fold_sql(
     3-batch fold nested vs ~1 s flat)."""
     parts: list[str] = []
     for i, (src, val, order) in enumerate(batch_sources):
-        p, sel = kll_sql_parts(
-            src, val, order, k=k, max_levels=max_levels, prefix=f"b{i}_"
-        )
+        p, sel = kll_sql_parts(src, val, order, k=k, prefix=f"b{i}_")
         parts.extend(p)
         parts.append(f"s{i} AS MATERIALIZED ({sel})")
     acc = "SELECT * FROM s0"
@@ -415,7 +395,6 @@ def kll_fold_sql(
             acc,
             f"SELECT * FROM s{i}",
             k=k,
-            max_levels=max_levels,
             prefix=f"f{i}",
         )
         parts.extend(p)
@@ -521,7 +500,6 @@ def kll_grouped_sql(
     order_sql: str,
     *,
     k: int = K_DEFAULT,
-    max_levels: int = MAX_LEVELS,
 ) -> str:
     """DuckDB replay of :func:`kll_cells_grouped`: per-group row_number +
     the integer recurrence with m as the group-size column."""
@@ -538,7 +516,7 @@ def kll_grouped_sql(
     l0 AS (SELECT grp, value, p, m FROM r)"""
     ]
     selects = []
-    for lv in range(max_levels):
+    for lv in range(MAX_LEVELS):
         selects.append(
             f"""
     SELECT grp, CAST({lv} AS INT) AS level,
@@ -559,10 +537,10 @@ def kll_grouped_sql(
         )
     selects.append(
         f"""
-    SELECT grp, CAST({max_levels} AS INT) AS level,
+    SELECT grp, CAST({MAX_LEVELS} AS INT) AS level,
            CAST(p AS BIGINT) AS pos,
            value,
-           CAST({1 << max_levels} AS BIGINT) AS weight
-    FROM l{max_levels}"""
+           CAST({1 << MAX_LEVELS} AS BIGINT) AS weight
+    FROM l{MAX_LEVELS}"""
     )
     return "WITH " + ",".join(parts) + " " + " UNION ALL ".join(selects)

@@ -77,13 +77,11 @@ def theta_split(sketch: list[int], k: int = KMV_K) -> tuple[list[int], int]:
     return list(sketch[: k - 1]), sketch[k - 1]
 
 
-def theta_estimates(
-    sk_a: list[int], sk_b: list[int], k: int = KMV_K
-) -> dict[str, float]:
+def theta_estimates(sk_a: list[int], sk_b: list[int]) -> dict[str, float]:
     """est_a/est_b/est_union/est_inter from two KMV sketches under the
     shared θ = min(θ_A, θ_B); one 6-dp-rounded division per estimate."""
-    sa, ta = theta_split(sk_a, k)
-    sb, tb = theta_split(sk_b, k)
+    sa, ta = theta_split(sk_a)
+    sb, tb = theta_split(sk_b)
     theta = min(ta, tb)
     a = {h for h in sa if h < theta}
     b = {h for h in sb if h < theta}
@@ -103,9 +101,7 @@ def theta_estimates(
     }
 
 
-def kmv_setops_sql(
-    a_keys_sql: str, b_keys_sql: str, key: str, k: int = KMV_K
-) -> str:
+def kmv_setops_sql(a_keys_sql: str, b_keys_sql: str, key: str) -> str:
     """One-row oracle replaying both sketches, θ, all four estimates, and
     exact truth with the intersection's relative error."""
     ha, hb = kmv_hash_sql(key), kmv_hash_sql(key)
@@ -114,18 +110,18 @@ def kmv_setops_sql(
       SELECT h, row_number() OVER (ORDER BY h) AS rn
       FROM (SELECT DISTINCT {ha} AS h FROM ({a_keys_sql})
             WHERE {key} IS NOT NULL)
-      ORDER BY h LIMIT {k}
+      ORDER BY h LIMIT {KMV_K}
     ),
     skb AS MATERIALIZED (
       SELECT h, row_number() OVER (ORDER BY h) AS rn
       FROM (SELECT DISTINCT {hb} AS h FROM ({b_keys_sql})
             WHERE {key} IS NOT NULL)
-      ORDER BY h LIMIT {k}
+      ORDER BY h LIMIT {KMV_K}
     ),
     th AS (
       SELECT least(
-        coalesce((SELECT h FROM ska WHERE rn = {k}), {H_SPACE}),
-        coalesce((SELECT h FROM skb WHERE rn = {k}), {H_SPACE})
+        coalesce((SELECT h FROM ska WHERE rn = {KMV_K}), {H_SPACE}),
+        coalesce((SELECT h FROM skb WHERE rn = {KMV_K}), {H_SPACE})
       ) AS theta
     ),
     sa AS (SELECT h FROM ska, th WHERE h < theta),
@@ -149,7 +145,7 @@ def kmv_setops_sql(
               FROM (SELECT {key} FROM ({a_keys_sql})
                     UNION SELECT {key} FROM ({b_keys_sql}))) AS n_union
     )
-    SELECT CAST({k} AS INT) AS k,
+    SELECT CAST({KMV_K} AS INT) AS k,
            round(ca * pow(2, 60) / theta, 6) AS est_a,
            round(cb * pow(2, 60) / theta, 6) AS est_b,
            round(cu * pow(2, 60) / theta, 6) AS est_union,

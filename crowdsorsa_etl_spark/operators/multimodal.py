@@ -36,6 +36,12 @@ from pyspark.sql import types as T
 from crowdsorsa_etl_spark.functions import imagecodec
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
+_JPEG_QUALITY = 100
+_AUDIO_HOP = 32
+_AVI_FPS = 10
+_AVI_QUALITY = 90
+_BUCKET_PREFIXES = 64
+
 # Malformed payloads that pass the magic-byte sniff can surface as any of
 # these from the stdlib codec (corrupt IDAT → zlib.error, truncated headers
 # → struct.error, palette index out of range → IndexError). A bad payload
@@ -54,21 +60,17 @@ IMAGE_META = T.StructType(
 )
 
 
-def attach_binary_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Fixture adapter: derive a deterministic binary payload column from the
     documents table (UTF-8 bytes prefixed with a fake magic header) so the
     binary plumbing is exercised end-to-end on driver-provided data."""
     payload = F.concat(
-        F.lit(b"\x89IMG"), F.encode(F.col(text_col), "UTF-8")
+        F.lit(b"\x89IMG"), F.encode(F.col("text"), "UTF-8")
     ).cast("binary")
-    return df.select(F.col(id_col), payload.alias("payload"))
+    return df.select(F.col("doc_id"), payload.alias("payload"))
 
 
-def attach_png_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fixture adapter for the REAL decode path: render each document's
     bytes into a tiny genuine PNG (one gray pixel per text byte, row-major
     8×N) via an Arrow batch stage, so downstream ``decode_images`` exercises
@@ -85,17 +87,12 @@ def attach_png_payload(
                 arr = np.zeros((h, w), dtype=np.uint8)
                 arr.flat[: len(body)] = np.frombuffer(body, dtype=np.uint8)
                 payloads.append(imagecodec.encode_png(arr))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     return df.mapInPandas(batches, "doc_id long, payload binary")
 
 
-def attach_jpeg_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    quality: int = 100,
-) -> DataFrame:
+def attach_jpeg_payload(df: DataFrame) -> DataFrame:
     """Fixture adapter for the REAL JPEG path: render each document's bytes
     into a genuine baseline JPEG (one gray pixel per text byte, row-major
     8×N, same layout as ``attach_png_payload``) so ``decode_images``
@@ -107,14 +104,14 @@ def attach_jpeg_payload(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 body = (text or "").encode("utf-8")[:256] or b"\x00"
                 w = 8
                 h = (len(body) + w - 1) // w
                 arr = np.zeros((h, w), dtype=np.uint8)
                 arr.flat[: len(body)] = np.frombuffer(body, dtype=np.uint8)
-                payloads.append(encode_jpeg(arr, quality=quality))
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+                payloads.append(encode_jpeg(arr, quality=_JPEG_QUALITY))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     return df.mapInPandas(batches, "doc_id long, payload binary")
 
@@ -154,13 +151,7 @@ def _decode_one(payload: bytes | None, allow_fake: bool) -> tuple | None:
     )
 
 
-def decode_images(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    allow_fake: bool = False,
-) -> DataFrame:
+def decode_images(df: DataFrame, *, allow_fake: bool = False) -> DataFrame:
     """bytes → typed image metadata via mapInPandas (Arrow batches).
 
     PNG/BMP/baseline-JPEG payloads are decoded for real
@@ -171,10 +162,10 @@ def decode_images(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            decoded = pdf[payload_col].map(lambda p: _decode_one(p, allow_fake))
+            decoded = pdf["payload"].map(lambda p: _decode_one(p, allow_fake))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": decoded.map(lambda d: d and d[0]),
                     "format": decoded.map(lambda d: d and d[1]),
                     "width": decoded.map(lambda d: d and d[2]),
@@ -198,12 +189,7 @@ CHECKSUM_SCHEMA = T.StructType(
 )
 
 
-def image_checksums(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def image_checksums(df: DataFrame) -> DataFrame:
     """bytes → exact integer pixel checksums via the REAL decode path.
 
     ``pix_sum`` = Σ pixel values, ``pix_wsum`` = Σ pixel·(flat_index+1)
@@ -235,10 +221,10 @@ def image_checksums(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            decoded = pdf[payload_col].map(checksum_one)
+            decoded = pdf["payload"].map(checksum_one)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "format": decoded.map(lambda d: d and d[0]),
                     "width": decoded.map(lambda d: d and d[1]),
                     "height": decoded.map(lambda d: d and d[2]),
@@ -262,30 +248,28 @@ FRAME_SCHEMA = T.StructType(
 def sample_frames(
     df: DataFrame,
     *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     every_n_bytes: int = 64,
     max_frames: int = 8,
 ) -> DataFrame:
     """Frame-sampling plumbing: split each payload into fixed-stride chunks
     (stand-in for video keyframe extraction — 1 input row → N frame rows).
     Built-in only: no UDF, the explode happens JVM-side."""
-    n = F.length(F.col(payload_col))
+    n = F.length(F.col("payload"))
     idx = F.sequence(
         F.lit(0),
         F.least(F.floor((n - 1) / every_n_bytes).cast("int"), F.lit(max_frames - 1)),
     )
     return (
         df.select(
-            F.col(id_col),
-            F.col(payload_col),
+            F.col("doc_id"),
+            F.col("payload"),
             F.explode(idx).alias("frame_idx"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("frame_idx").cast("int"),
             F.substring(
-                F.col(payload_col), F.col("frame_idx") * every_n_bytes + 1, every_n_bytes
+                F.col("payload"), F.col("frame_idx") * every_n_bytes + 1, every_n_bytes
             ).alias("frame_bytes"),
         )
     )
@@ -306,8 +290,6 @@ def resize_images(
     *,
     width: int,
     height: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     allow_fake: bool = False,
 ) -> DataFrame:
     """bytes → resized bytes via mapInPandas.
@@ -344,23 +326,17 @@ def resize_images(
         for pdf in it:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "width": width,
                     "height": height,
-                    "payload": pdf[payload_col].map(resize_one),
+                    "payload": pdf["payload"].map(resize_one),
                 }
             )
 
     return df.mapInPandas(batches, RESIZED_SCHEMA)
 
 
-def extract_features(
-    df: DataFrame,
-    *,
-    dim: int = 16,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def extract_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
     """bytes → fixed-dim embedding column via mapInPandas (the
     feature-extract stage of a multimodal pipeline). The deterministic
     stand-in projects byte histograms through a fixed random-ish matrix —
@@ -384,7 +360,7 @@ def extract_features(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             vecs = []
-            for payload in pdf[payload_col]:
+            for payload in pdf["payload"]:
                 if payload is None:
                     vecs.append(None)
                     continue
@@ -399,7 +375,7 @@ def extract_features(
                 if norm:
                     vec /= norm
                 vecs.append([float(x) for x in vec])
-            yield pd.DataFrame({"vec_id": pdf[id_col], "embedding": vecs})
+            yield pd.DataFrame({"vec_id": pdf["doc_id"], "embedding": vecs})
 
     return df.mapInPandas(
         batches, f"vec_id long, embedding array<float>"
@@ -416,13 +392,7 @@ def extract_features(
 # ---------------------------------------------------------------------------
 
 
-def attach_wav_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    sample_rate: int = 16_000,
-) -> DataFrame:
+def attach_wav_payload(df: DataFrame) -> DataFrame:
     """Fixture adapter for the real audio decode path: synthesize a PCM16
     waveform from each document's UTF-8 bytes (sample_i = (byte_i − 128)
     · 256 — full int16 swing, sign split at 0x80) and wrap it in a
@@ -435,32 +405,25 @@ def attach_wav_payload(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 body = (text or "").encode("utf-8")[:256] or b"\x00"
                 samples = (
                     np.frombuffer(body, dtype=np.uint8).astype(np.int32) - 128
                 ) * 256
                 payloads.append(
                     audiocodec.encode_wav_pcm16(
-                        samples.astype(np.int16), sample_rate=sample_rate
+                        samples.astype(np.int16), sample_rate=16_000
                     )
                 )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     return df.mapInPandas(batches, "doc_id long, payload binary")
 
 
-def audio_frame_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    *,
-    frame: int = 64,
-    hop: int = 32,
-) -> DataFrame:
+def audio_frame_features(df: DataFrame, *, frame: int = 64) -> DataFrame:
     """WAV payload → integer frame features: decode through the real
     codec, then per document — sample count, header sample rate, full
-    frames at (frame, hop) (one short frame when the signal is shorter
+    frames at (frame, ``_AUDIO_HOP``) (one short frame when the signal is shorter
     than ``frame``), summed per-frame energy Σs², the max frame energy,
     and signal zero crossings (sign-split count). All integers: the
     oracle re-derives every value from the source bytes."""
@@ -468,8 +431,8 @@ def audio_frame_features(
 
     from crowdsorsa_etl_spark.functions import audiocodec
 
-    if frame < 1 or hop < 1:
-        raise ValueError(f"frame and hop must be >= 1; got {frame}, {hop}")
+    if frame < 1:
+        raise ValueError(f"frame must be >= 1; got {frame}")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -482,7 +445,7 @@ def audio_frame_features(
                 "max_frame_energy": [],
                 "zero_crossings": [],
             }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 if payload is None:
                     continue
                 samples, rate, _ = audiocodec.decode_wav(bytes(payload))
@@ -493,7 +456,7 @@ def audio_frame_features(
                 else:
                     frames = [
                         s[i : i + frame]
-                        for i in range(0, n - frame + 1, hop)
+                        for i in range(0, n - frame + 1, _AUDIO_HOP)
                     ]
                 energies = [int((f * f).sum()) for f in frames]
                 neg = s < 0
@@ -526,12 +489,7 @@ _AHASH_PIXELS = 64
 _AHASH_BANDS = 8
 
 
-def image_ahash(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def image_ahash(df: DataFrame) -> DataFrame:
     """Perceptual average-hash over the REAL decode path: the first 64
     row-major pixels of the first channel (zero-padded), each thresholded
     against the 64-sample mean with INTEGER math (``v*64 >= sum`` — no
@@ -556,21 +514,15 @@ def image_ahash(
         for pdf in it:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
-                    "bands": pdf[payload_col].map(ahash_one),
+                    "doc_id": pdf["doc_id"],
+                    "bands": pdf["payload"].map(ahash_one),
                 }
             )
 
     return df.mapInPandas(batches, AHASH_SCHEMA)
 
 
-def image_ahash_dups(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    max_hamming: int = 7,
-) -> DataFrame:
+def image_ahash_dups(df: DataFrame, *, max_hamming: int = 7) -> DataFrame:
     """Near-duplicate IMAGES: pairs (id_a < id_b, hamming <= max_hamming)
     over the 64-bit aHash. Candidates come from the band-equality
     pigeonhole (sound for max_hamming < n_bands: fewer than 8 differing
@@ -582,9 +534,7 @@ def image_ahash_dups(
         raise ValueError(
             f"pigeonhole needs 0 <= max_hamming < {_AHASH_BANDS}"
         )
-    sig = materialize(image_ahash(
-        df, payload_col=payload_col, id_col=id_col
-    ).filter(F.col("bands").isNotNull()))
+    sig = materialize(image_ahash(df).filter(F.col("bands").isNotNull()))
     banded = sig.select(
         F.col("doc_id").alias("id"),
         F.posexplode("bands").alias("band", "v"),
@@ -619,15 +569,7 @@ def image_ahash_dups(
     )
 
 
-def attach_avi_payload(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    fps: int = 10,
-    quality: int = 90,
-    codec: str = "mjpeg",
-) -> DataFrame:
+def attach_avi_payload(df: DataFrame, *, codec: str = "mjpeg") -> DataFrame:
     """Fixture adapter for the REAL video decode path: render each
     document's bytes into a genuine AVI container
     (``functions/videocodec.py``) — ``(octet_length % 3) + 1`` frames of
@@ -651,7 +593,7 @@ def attach_avi_payload(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             payloads = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 raw = (text or "").encode("utf-8")
                 n_frames = (len(raw) % 3) + 1
                 body = raw[: 64 * n_frames] or b"\x00"
@@ -662,11 +604,13 @@ def attach_avi_payload(
                     arr[: len(chunk)] = np.frombuffer(chunk, dtype=np.uint8)
                     frames.append(arr.reshape(8, 8))
                 payloads.append(
-                    encode_avi_mjpeg(frames, fps=fps, quality=quality)
+                    encode_avi_mjpeg(
+                        frames, fps=_AVI_FPS, quality=_AVI_QUALITY
+                    )
                     if codec == "mjpeg"
-                    else encode_avi_raw(frames, fps=fps)
+                    else encode_avi_raw(frames, fps=_AVI_FPS)
                 )
-            yield pd.DataFrame({"doc_id": pdf[id_col], "payload": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
     return df.mapInPandas(batches, "doc_id long, payload binary")
 
@@ -687,8 +631,6 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 
 def decode_video_frames(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     *,
     every_n: int = 1,
     max_frames: int = 8,
@@ -752,13 +694,13 @@ def decode_video_frames(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 out.extend(decode_one(doc_id, payload))
             yield pd.DataFrame(
                 out, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields]
             )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+    return df.select(F.col("doc_id"), F.col("payload")).mapInPandas(
         batches, VIDEO_FRAME_SCHEMA
     )
 
@@ -796,11 +738,7 @@ VIDEO_SIG_SCHEMA = T.StructType(
 )
 
 
-def video_frame_signatures(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def video_frame_signatures(df: DataFrame) -> DataFrame:
     """Per-frame perceptual signatures through the REAL video decode
     path: parse the AVI container, decode EVERY frame (DIB exact or MJPG
     Huffman), and aHash each frame's first channel — 1 video row →
@@ -837,21 +775,19 @@ def video_frame_signatures(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 out.extend(sig_rows(doc_id, payload))
             yield pd.DataFrame(
                 out, columns=[f.name for f in VIDEO_SIG_SCHEMA.fields]
             )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+    return df.select(F.col("doc_id"), F.col("payload")).mapInPandas(
         batches, VIDEO_SIG_SCHEMA
     )
 
 
 def video_ahash_dups(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     *,
     min_shared: int = 1,
     max_freq: int | None = None,
@@ -875,7 +811,7 @@ def video_ahash_dups(
     """
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1; got {min_shared}")
-    sig = video_frame_signatures(df, payload_col=payload_col, id_col=id_col)
+    sig = video_frame_signatures(df)
     return band_signature_dups(sig, min_shared=min_shared, max_freq=max_freq)
 
 
@@ -952,13 +888,7 @@ def band_signature_dups(
     )
 
 
-def audio_frame_signatures(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    *,
-    frame: int = 64,
-) -> DataFrame:
+def audio_frame_signatures(df: DataFrame, *, frame: int = 64) -> DataFrame:
     """Per-frame acoustic fingerprints through the REAL audio decode path:
     parse the WAV container, split the PCM16 signal into non-overlapping
     ``frame``-sample windows (the tail window is zero-padded by the shared
@@ -999,21 +929,19 @@ def audio_frame_signatures(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 out.extend(sig_rows(doc_id, payload))
             yield pd.DataFrame(
                 out, columns=[f.name for f in VIDEO_SIG_SCHEMA.fields]
             )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+    return df.select(F.col("doc_id"), F.col("payload")).mapInPandas(
         batches, VIDEO_SIG_SCHEMA
     )
 
 
 def audio_fingerprint_dups(
     df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     *,
     frame: int = 64,
     min_shared: int = 1,
@@ -1024,56 +952,34 @@ def audio_fingerprint_dups(
     clips on matching window fingerprints, Shazam-style, never all-pairs).
     Same distributed shape and output columns; see
     :func:`band_signature_dups`."""
-    sig = audio_frame_signatures(
-        df, payload_col=payload_col, id_col=id_col, frame=frame
-    )
+    sig = audio_frame_signatures(df, frame=frame)
     return band_signature_dups(sig, min_shared=min_shared, max_freq=max_freq)
 
 
-def _ahash_banded_rows(
-    df: DataFrame,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    bucket_prefixes: int = 64,
-) -> DataFrame:
+def _ahash_banded_rows(df: DataFrame) -> DataFrame:
     """(id, band, v, bands, pfx): one row per aHash band per image, the
     full 8-band signature carried alongside for exact hamming verify, and
-    the partition prefix ``pmod(v, bucket_prefixes)``."""
-    sig = image_ahash(df, payload_col=payload_col, id_col=id_col).filter(
-        F.col("bands").isNotNull()
-    )
+    the partition prefix ``pmod(v, _BUCKET_PREFIXES)`` that every index
+    writer and matcher shares."""
+    sig = image_ahash(df).filter(F.col("bands").isNotNull())
     return sig.select(
         F.col("doc_id").alias("id"),
         F.posexplode("bands").alias("band", "v"),
         F.col("bands"),
     ).withColumn(
-        "pfx", F.pmod(F.col("v"), F.lit(bucket_prefixes)).cast("int")
+        "pfx", F.pmod(F.col("v"), F.lit(_BUCKET_PREFIXES)).cast("int")
     )
 
 
-def image_index_write(
-    df: DataFrame,
-    path: str,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    bucket_prefixes: int = 64,
-    mode: str = "overwrite",
-) -> None:
+def image_index_write(df: DataFrame, path: str) -> None:
     """Materialize the corpus's aHash band rows under ``path``/bands,
     PARTITIONED by a band-value prefix — the IMAGE analogue of
     ``dedup.lsh_write_index``: an incoming batch reads only the partitions
     its own band values hash into, so per-batch match cost is batch-sized,
-    not corpus-sized. ``mode="append"`` is the corpus-append path (band
-    rows are distributive over images; existing files never rewritten).
-    Contract: match/append must reuse the same ``bucket_prefixes``."""
-    _ahash_banded_rows(
-        df,
-        payload_col=payload_col,
-        id_col=id_col,
-        bucket_prefixes=bucket_prefixes,
-    ).write.mode(mode).partitionBy("pfx").parquet(path.rstrip("/") + "/bands")
+    not corpus-sized. Match reads with the same ``_BUCKET_PREFIXES``."""
+    _ahash_banded_rows(df).write.mode(
+        "overwrite"
+    ).partitionBy("pfx").parquet(path.rstrip("/") + "/bands")
 
 
 def image_index_match(
@@ -1081,41 +987,30 @@ def image_index_match(
     path: str,
     batch: DataFrame,
     *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     max_hamming: int = 7,
-    bucket_prefixes: int = 64,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-duplicate (corpus, batch) image pairs against the index at
     rest: (id_a = corpus id, id_b = batch id, hamming) with the same
     band-equality pigeonhole + integer xor/bit_count verify as
     ``image_ahash_dups`` (sound for max_hamming < 8: fewer than 8
     differing bits cannot touch all 8 bands). The batch's distinct band
-    prefixes (a bounded ≤ ``bucket_prefixes`` driver list) become a
+    prefixes (a bounded ≤ ``_BUCKET_PREFIXES`` driver list) become a
     partition filter on the index scan; the batch side broadcasts, so the
     corpus index is never shuffled."""
     if not (0 <= max_hamming < _AHASH_BANDS):
         raise ValueError(
             f"pigeonhole needs 0 <= max_hamming < {_AHASH_BANDS}"
         )
-    b = materialize(_ahash_banded_rows(
-        batch,
-        payload_col=payload_col,
-        id_col=id_col,
-        bucket_prefixes=bucket_prefixes,
-    ))  # prefix collect + join reuse one computation
+    # prefix collect + join reuse one computation
+    b = materialize(_ahash_banded_rows(batch))
     pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
     corpus = spark.read.parquet(path.rstrip("/") + "/bands").filter(
         F.col("pfx").isin(pfxs)
     )
-    probe = b.alias("b")
-    if broadcast_batch:
-        probe = F.broadcast(probe)
     cand = (
         corpus.alias("a")
         .join(
-            probe,
+            F.broadcast(b.alias("b")),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.v") == F.col("b.v")),
         )
@@ -1141,25 +1036,12 @@ def image_index_match(
     ).filter(F.col("hamming") <= max_hamming)
 
 
-def image_index_write_epoch(
-    df: DataFrame,
-    path: str,
-    epoch: int,
-    *,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    bucket_prefixes: int = 64,
-) -> None:
+def image_index_write_epoch(df: DataFrame, path: str, epoch: int) -> None:
     """Epoch-versioned index write: the batch's band rows land under
     ``path``/bands/epoch=<epoch>/pfx=* with OVERWRITE of that epoch dir —
     a replayed epoch rewrites its own rows instead of double-appending
     (the shard-stream replay contract applied to an index at rest).
     Seed a pre-existing corpus with ``epoch=-1``."""
-    _ahash_banded_rows(
-        df,
-        payload_col=payload_col,
-        id_col=id_col,
-        bucket_prefixes=bucket_prefixes,
-    ).write.mode("overwrite").partitionBy("pfx").parquet(
+    _ahash_banded_rows(df).write.mode("overwrite").partitionBy("pfx").parquet(
         path.rstrip("/") + f"/bands/epoch={int(epoch)}"
     )

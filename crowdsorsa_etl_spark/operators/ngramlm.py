@@ -80,18 +80,12 @@ def _bigrams(docs: DataFrame, *, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def kneser_ney_token_scores(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = DISCOUNT,
-) -> DataFrame:
+def kneser_ney_token_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, lp): one 6-dp-rounded interpolated-KN log-probability per
     bigram OCCURRENCE — the per-token stream the document aggregates
     (mean score, CCNet buckets, min-k% membership inference) all consume.
     Count tables aggregate over bigram TYPES, not occurrences."""
-    big = _bigrams(docs, text_col=text_col, id_col=id_col)
+    big = _bigrams(docs, text_col="text", id_col="doc_id")
 
     bc = big.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("bc")
@@ -108,7 +102,7 @@ def kneser_ney_token_scores(
     )
     types = bc.agg(F.count(F.lit(1)).cast("bigint").alias("ttypes"))
 
-    d = F.lit(float(discount))
+    d = F.lit(float(DISCOUNT))
     p = (
         F.greatest(F.col("bc") - d, F.lit(0.0)) / F.col("ctx")
         + d
@@ -130,9 +124,6 @@ def kneser_ney_token_scores(
 def kneser_ney_bigram_scores(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = DISCOUNT,
     token_scores: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, n_bigrams, avg_logprob): interpolated-KN mean bigram
@@ -148,7 +139,7 @@ def kneser_ney_bigram_scores(
         token_scores
         if token_scores is not None
         else kneser_ney_token_scores(
-            docs, text_col=text_col, id_col=id_col, discount=discount
+            docs
         )
     )
     return (
@@ -166,22 +157,18 @@ def kneser_ney_bigram_scores(
 def min_k_prob_scores(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = DISCOUNT,
-    k_denom: int = 5,
     token_scores: DataFrame | None = None,
 ) -> DataFrame:
     """Min-k%-prob membership inference (Shi et al. 2023, "Detecting
     Pretraining Data"): per document, the mean log-probability of its
-    bottom 1/``k_denom`` fraction of bigram scores (k=20% at the default).
+    bottom 20% of bigram scores.
     A document the LM has MEMORIZED scores high even on its least-likely
     tokens, so a HIGH mink_logprob relative to the corpus flags likely
     training-set membership — the benchmark-contamination probe run
     against a frozen filter LM.
 
-    The cutoff count is exact integer arithmetic (ceil(n/k_denom) via
-    (n + k_denom - 1) div k_denom — no float k% multiply whose last ulp
+    The cutoff count is exact integer arithmetic (ceil(n/5) via
+    (n + 4) div 5 — no float k% multiply whose last ulp
     could move the ceil across engines), and the bottom-m multiset is
     tie-robust: values at the cutoff boundary are equal, so any
     tie-resolution yields the same mean. One per-doc window (partitioned,
@@ -198,21 +185,17 @@ def min_k_prob_scores(
 
     Output: (doc_id, n_bigrams, m_bottom, mink_logprob).
     """
-    if k_denom < 1:
-        raise ValueError(f"k_denom must be >= 1, got {k_denom}")
     tok = (
         token_scores
         if token_scores is not None
         else kneser_ney_token_scores(
-            docs, text_col=text_col, id_col=id_col, discount=discount
+            docs
         )
     )
     counts = tok.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_bigrams")
     )
-    m = (
-        (F.col("n_bigrams") + F.lit(k_denom - 1)) / F.lit(k_denom)
-    ).cast("bigint")
+    m = ((F.col("n_bigrams") + F.lit(4)) / F.lit(5)).cast("bigint")
     w = Window.partitionBy("doc_id").orderBy(F.col("lp").asc())
     lpu = F.round(F.col("lp") * F.lit(1_000_000.0)).cast("bigint")
     return (
@@ -230,13 +213,13 @@ def min_k_prob_scores(
     )
 
 
-def _kn_scored_ctes(*, discount: float, table: str) -> str:
+def _kn_scored_ctes() -> str:
     """CTE text toks→big→bc→lft→rgt→ttl→scored producing (doc_id, lp) —
     the per-occurrence KN score stream shared by the mean-score, bucket,
     and min-k% oracles (one fragment, one set of conventions)."""
     return f"""toks AS (
       SELECT doc_id, string_split(lower(trim(text)), ' ') AS arr
-      FROM {table}
+      FROM documents
     ),
     big AS (
       SELECT doc_id, arr[i] AS w1, arr[i+1] AS w2
@@ -258,8 +241,8 @@ def _kn_scored_ctes(*, discount: float, table: str) -> str:
     ttl AS (SELECT CAST(count(*) AS BIGINT) AS ttypes FROM bc),
     scored AS (
       SELECT big.doc_id,
-             round(ln(greatest(bc.bc - {discount}, 0.0) / lft.ctx
-                      + {discount} * lft.nleft / lft.ctx
+             round(ln(greatest(bc.bc - {DISCOUNT}, 0.0) / lft.ctx
+                      + {DISCOUNT} * lft.nleft / lft.ctx
                         * (rgt.nright * 1.0 / ttl.ttypes)), 6) AS lp
       FROM big
       JOIN bc  ON big.w1 = bc.w1 AND big.w2 = bc.w2
@@ -269,31 +252,24 @@ def _kn_scored_ctes(*, discount: float, table: str) -> str:
     )"""
 
 
-def kneser_ney_bigram_sql(
-    *, discount: float = DISCOUNT, table: str = "documents"
-) -> str:
+def kneser_ney_bigram_sql() -> str:
     """DuckDB oracle replaying :func:`kneser_ney_bigram_scores` verbatim
     (same count tables, same 6-dp pre-sum rounding)."""
     return f"""
-    WITH {_kn_scored_ctes(discount=discount, table=table)}
+    WITH {_kn_scored_ctes()}
     SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
            round(round(sum(lp), 6) / count(*), 6) AS avg_logprob
     FROM scored GROUP BY doc_id
     """
 
 
-def min_k_prob_sql(
-    *,
-    discount: float = DISCOUNT,
-    table: str = "documents",
-    k_denom: int = 5,
-) -> str:
+def min_k_prob_sql() -> str:
     """DuckDB oracle replaying :func:`min_k_prob_scores`: same per-token
     score stream, the same exact-integer bottom-count
-    ceil(n/k_denom) = (n + k_denom - 1) // k_denom, the same tie-robust
+    ceil(n/5) = (n + 4) // 5, the same tie-robust
     bottom-m selection, the same BIGINT fixed-point mean."""
     return f"""
-    WITH {_kn_scored_ctes(discount=discount, table=table)},
+    WITH {_kn_scored_ctes()},
     ranked AS (
       SELECT doc_id, CAST(round(lp * 1000000.0) AS BIGINT) AS lpu,
              row_number() OVER (PARTITION BY doc_id ORDER BY lp ASC) AS rn,
@@ -302,29 +278,24 @@ def min_k_prob_sql(
       FROM scored
     )
     SELECT doc_id, n_bigrams,
-           CAST((n_bigrams + {k_denom - 1}) // {k_denom} AS BIGINT)
+           CAST((n_bigrams + 4) // 5 AS BIGINT)
              AS m_bottom,
            CAST(sum(lpu) AS DOUBLE)
-             / CAST(((n_bigrams + {k_denom - 1}) // {k_denom})
+             / CAST(((n_bigrams + 4) // 5)
                     * 1000000 AS DOUBLE)
              AS mink_logprob
     FROM ranked
-    WHERE rn <= (n_bigrams + {k_denom - 1}) // {k_denom}
+    WHERE rn <= (n_bigrams + 4) // 5
     GROUP BY doc_id, n_bigrams
     """
 
 
-def perplexity_buckets(
-    scores: DataFrame,
-    *,
-    score_col: str = "avg_logprob",
-    group_col: str = "lang",
-    bin_scale: int = BIN_SCALE,
-) -> DataFrame:
+def perplexity_buckets(scores: DataFrame) -> DataFrame:
     """Assign each row a CCNet bucket ('head' | 'middle' | 'tail') of its
-    ``group_col`` population by LM score, via integer histogram thresholds.
+    ``lang`` population by ``avg_logprob``, via integer histogram
+    thresholds.
 
-    Bins are ``floor(-score * bin_scale)`` — ascending bin = better
+    Bins are ``floor(-avg_logprob * BIN_SCALE)`` — ascending bin = better
     (higher log-prob) document, so the first third is the head, matching
     CCNet's "head = lowest perplexity" convention. Thresholds are the
     first bin whose cumulative count reaches ``ceil(n/3)`` (head) and
@@ -332,20 +303,20 @@ def perplexity_buckets(
     HISTOGRAM rows, never over documents. Ties inside one bin share a
     bucket by construction — deterministic on both engines.
     """
-    bin_col = F.floor(-F.col(score_col) * bin_scale).cast("bigint")
+    bin_col = F.floor(-F.col("avg_logprob") * BIN_SCALE).cast("bigint")
     binned = scores.withColumn("ppl_bin", bin_col)
 
-    hist = binned.groupBy(group_col, "ppl_bin").agg(
+    hist = binned.groupBy("lang", "ppl_bin").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
-    w = Window.partitionBy(group_col).orderBy("ppl_bin")
+    w = Window.partitionBy("lang").orderBy("ppl_bin")
     cum = hist.select(
-        group_col,
+        "lang",
         "ppl_bin",
         F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(group_col)).alias("total"),
+        F.sum("cnt").over(Window.partitionBy("lang")).alias("total"),
     )
-    thresholds = cum.groupBy(group_col).agg(
+    thresholds = cum.groupBy("lang").agg(
         F.min(
             F.when(
                 F.col("cum") >= F.ceil(F.col("total") / 3.0), F.col("ppl_bin")
@@ -363,52 +334,46 @@ def perplexity_buckets(
         .when(F.col("ppl_bin") <= F.col("t_middle"), F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
-    return binned.join(F.broadcast(thresholds), group_col).select(
+    return binned.join(F.broadcast(thresholds), "lang").select(
         *scores.columns, bucket.alias("bucket")
     )
 
 
-def perplexity_buckets_sql(
-    *,
-    scores_cte: str,
-    score_col: str = "avg_logprob",
-    group_col: str = "lang",
-    bin_scale: int = BIN_SCALE,
-) -> str:
+def perplexity_buckets_sql(*, scores_cte: str) -> str:
     """Oracle fragment: expects ``scores_cte`` to name a CTE with columns
-    (``group_col``, ``score_col``, ...); yields SELECT * of the CTE plus
+    (``lang``, ``avg_logprob``, ...); yields SELECT * of the CTE plus
     ``bucket``. The cumulative window runs over histogram rows, exactly
     like the engine side."""
     return f"""
     binned AS (
-      SELECT s.*, CAST(floor(-{score_col} * {bin_scale}) AS BIGINT)
+      SELECT s.*, CAST(floor(-avg_logprob * {BIN_SCALE}) AS BIGINT)
                AS ppl_bin
       FROM {scores_cte} s
     ),
     hist AS (
-      SELECT {group_col}, ppl_bin, CAST(count(*) AS BIGINT) AS cnt
-      FROM binned GROUP BY {group_col}, ppl_bin
+      SELECT lang, ppl_bin, CAST(count(*) AS BIGINT) AS cnt
+      FROM binned GROUP BY lang, ppl_bin
     ),
     cum AS (
-      SELECT {group_col}, ppl_bin,
-             sum(cnt) OVER (PARTITION BY {group_col} ORDER BY ppl_bin)
+      SELECT lang, ppl_bin,
+             sum(cnt) OVER (PARTITION BY lang ORDER BY ppl_bin)
                AS cum,
-             sum(cnt) OVER (PARTITION BY {group_col}) AS total
+             sum(cnt) OVER (PARTITION BY lang) AS total
       FROM hist
     ),
     thr AS (
-      SELECT {group_col},
+      SELECT lang,
              min(CASE WHEN cum >= ceil(total / 3.0) THEN ppl_bin END)
                AS t_head,
              min(CASE WHEN cum >= ceil(total * 2.0 / 3.0) THEN ppl_bin END)
                AS t_middle
-      FROM cum GROUP BY {group_col}
+      FROM cum GROUP BY lang
     ),
     bucketed AS (
       SELECT binned.* EXCLUDE (ppl_bin),
              CASE WHEN ppl_bin <= t_head THEN 'head'
                   WHEN ppl_bin <= t_middle THEN 'middle'
                   ELSE 'tail' END AS bucket
-      FROM binned JOIN thr USING ({group_col})
+      FROM binned JOIN thr USING (lang)
     )
     """

@@ -34,7 +34,6 @@ def embedding_covariance(
     emb: DataFrame,
     dim: int,
     *,
-    vec_col: str = "embedding",
     round_dp: int = 4,
 ) -> DataFrame:
     """Upper-triangle sample covariance of the first ``dim`` vector slots:
@@ -71,11 +70,9 @@ def embedding_covariance(
         lambda p: F.struct(
             p["i"].alias("i"),
             p["j"].alias("j"),
-            F.element_at(F.col(vec_col), p["i"] + 1)
-            .cast("double")
+            F.element_at(F.col("embedding"), p["i"] + 1).cast("double")
             .alias("xi"),
-            F.element_at(F.col(vec_col), p["j"] + 1)
-            .cast("double")
+            F.element_at(F.col("embedding"), p["j"] + 1).cast("double")
             .alias("xj"),
         ),
     )
@@ -86,13 +83,7 @@ def embedding_covariance(
     )
 
 
-def pca_fit(
-    emb: DataFrame,
-    dim: int,
-    k: int,
-    *,
-    vec_col: str = "embedding",
-):
+def pca_fit(emb: DataFrame, dim: int, k: int):
     """Fit: returns (mean list[d], components list[k][d], eigenvalues
     list[k]) — components are unit-norm eigenvectors of the sample
     covariance, sorted by descending eigenvalue, sign-fixed so each
@@ -105,14 +96,12 @@ def pca_fit(
 
     if not (1 <= k <= dim):
         raise ValueError(f"need 1 <= k <= dim, got k={k} dim={dim}")
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
+    x = lambda i: F.element_at(F.col("embedding"), i + 1).cast("double")  # noqa: E731
     mean_row = emb.agg(
         *[F.avg(x(i)).alias(f"m{i}") for i in range(dim)]
     ).collect()[0]
     mean = [float(mean_row[f"m{i}"]) for i in range(dim)]
-    cov_rows = embedding_covariance(
-        emb, dim, vec_col=vec_col, round_dp=12
-    ).collect()
+    cov_rows = embedding_covariance(emb, dim, round_dp=12).collect()
     c = np.zeros((dim, dim))
     for r in cov_rows:
         c[r["i"], r["j"]] = r["cov"]
@@ -132,14 +121,11 @@ def pca_project(
     emb: DataFrame,
     mean: list[float],
     components: list[list[float]],
-    *,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
 ) -> DataFrame:
-    """Append ``out_col``: array<double> of length k, the centered input
+    """Append ``proj``: array<double> of length k, the centered input
     projected onto the fitted components. Pure literal multiply-add
     expressions — narrow, zero Exchange, no Python in the plan."""
-    x = lambda i: F.element_at(F.col(vec_col), i + 1).cast("double")  # noqa: E731
+    x = lambda i: F.element_at(F.col("embedding"), i + 1).cast("double")  # noqa: E731
     cols = []
     for comp in components:
         terms = [
@@ -151,4 +137,4 @@ def pca_project(
         for t in terms[1:]:
             acc = acc + t
         cols.append(acc)
-    return emb.withColumn(out_col, F.array(*cols))
+    return emb.withColumn("proj", F.array(*cols))

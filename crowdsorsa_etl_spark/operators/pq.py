@@ -147,8 +147,6 @@ def pq_topk(
     m: int = 4,
     k_codes: int = 32,
     candidate_margin: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     sample_size: int = 2048,
     iterations: int = 4,
     max_queries: int = MAX_QUERY_ROWS,
@@ -164,16 +162,14 @@ def pq_topk(
         corpus,
         m=m,
         k_codes=k_codes,
-        id_col=id_col,
-        vec_col=vec_col,
         sample_size=sample_size,
         iterations=iterations,
     )
     sub = books.shape[2]
-    enc = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
+    enc = pq_encode(corpus, books)
 
     q_rows = _collect_bounded(
-        queries.select(id_col, vec_col), max_queries, "query set"
+        queries.select("vec_id", "embedding"), max_queries, "query set"
     )
     spark = corpus.sparkSession
     q_data = []
@@ -222,14 +218,14 @@ def pq_topk(
     )
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnorm"),
     )
     q_vecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qnorm"),
     )
     rescored = (
         c.join(F.broadcast(cand), "neighbor_id")
@@ -377,13 +373,7 @@ def _load_index_artifacts(spark, path: str):
     return centroids, books, by_residual
 
 
-def ivfpq_append_index(
-    new_vectors: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def ivfpq_append_index(new_vectors: DataFrame, path: str) -> None:
     """Append a vector batch into an existing IVF-PQ index — the
     index-maintenance tier matching dedup.lsh_append_index and
     bm25.bm25_append_index.
@@ -407,17 +397,15 @@ def ivfpq_append_index(
 
     spark = new_vectors.sparkSession
     centroids, books, by_residual = _load_index_artifacts(spark, path)
-    assigned = ivf_assign(new_vectors, centroids, id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(new_vectors, centroids)
     enc = pq_encode(
         new_vectors,
         books,
-        id_col=id_col,
-        vec_col=vec_col,
         centroids=centroids if by_residual else None,
-    ).withColumnRenamed("id", id_col)
+    ).withColumnRenamed("id", "vec_id")
     (
-        assigned.join(enc, id_col)
-        .select(id_col, "codes", vec_col, "list_id")
+        assigned.join(enc, "vec_id")
+        .select("vec_id", "codes", "embedding", "list_id")
         .write.mode("append")
         .partitionBy("list_id")
         .parquet(path)
@@ -461,9 +449,6 @@ def ivfpq_query_index(
     k: int = 5,
     n_probe: int = 4,
     candidate_margin: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Search a persisted IVF-PQ index: probe ``n_probe`` lists per query
     driver-side (bounded centroid set), scan ONLY those partitions'
@@ -497,7 +482,7 @@ def ivfpq_query_index(
     m, k_codes, sub = books.shape
 
     q_rows = _collect_bounded(
-        queries.select(id_col, vec_col), max_queries, "query set"
+        queries.select("vec_id", "embedding"), MAX_QUERY_ROWS, "query set"
     )
     probes = []
     q_data = []
@@ -526,7 +511,7 @@ def ivfpq_query_index(
     # list_id isin → PARTITION filter: only probed directories are scanned,
     # and the ADC branch reads only (id, codes) of them (column pruning)
     index = spark.read.parquet(path).filter(F.col("list_id").isin(probed_lists))
-    scored = index.select(id_col, "codes", "list_id")
+    scored = index.select("vec_id", "codes", "list_id")
     if by_residual:
         # q_df already carries (query_id, list_id): the equi-join on
         # list_id pairs each code row with every query probing its list,
@@ -537,7 +522,7 @@ def ivfpq_query_index(
             F.broadcast(q_df), "query_id"
         )
     adc = (
-        scored.filter(F.col(id_col) != F.col("query_id"))
+        scored.filter(F.col("vec_id") != F.col("query_id"))
         .withColumn(
             "adc",
             F.round(
@@ -555,23 +540,23 @@ def ivfpq_query_index(
         )
     )
     w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col(id_col).asc()
+        F.col("adc").asc(), F.col("vec_id").asc()
     )
     cand = (
         adc.withColumn("_r", F.row_number().over(w_adc))
         .filter(F.col("_r") <= k + candidate_margin)
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
 
     c = spark.read.parquet(path).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnorm"),
     )
     q_vecs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qnorm"),
     )
     rescored = (
         c.join(F.broadcast(cand), "neighbor_id")

@@ -15,24 +15,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """float vectors → (id, qvec array<tinyint>, scale float).
 
     Symmetric per-vector quantization: ``scale = 127 / max|x|``,
     ``q_i = round(x_i * scale)`` ∈ [-127, 127]. Zero vectors quantize to
     zeros with scale 0. Dequantize with ``x ≈ q / scale``.
     """
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     amax = F.array_max(F.transform(vec, lambda x: F.abs(x)))
     scale = F.when(amax > 0, F.lit(127.0) / amax).otherwise(F.lit(0.0))
     qvec = F.transform(vec, lambda x: F.round(x * scale).cast("tinyint"))
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         qvec.alias("qvec"),
         scale.cast("float").alias("scale"),
     )

@@ -59,13 +59,7 @@ def threshold_fraction(threshold: float) -> tuple[int, int]:
     return frac.numerator, frac.denominator
 
 
-def shingle_sets(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
+def shingle_sets(df: DataFrame, *, shingle_k: int = 3) -> DataFrame:
     """(id, shingle) DISTINCT rows: word ``shingle_k``-grams of the shared
     normalized text. Docs with fewer than ``shingle_k`` tokens produce no
     rows (they have no k-shingle set to compare).
@@ -78,12 +72,12 @@ def shingle_sets(
     cluster scale)."""
     from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
-    df = cpu_fanout(df.select(F.col(id_col), F.col(text_col)))
-    toks = F.split(_norm(F.col(text_col)), " ")
+    df = cpu_fanout(df.select(F.col("doc_id"), F.col("text")))
+    toks = F.split(_norm(F.col("text")), " ")
     idx = F.sequence(F.lit(1), F.size(toks) - F.lit(shingle_k - 1))
     return (
         df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.explode(
                 F.when(F.size(toks) >= shingle_k, idx).otherwise(
                     F.array().cast("array<int>")
@@ -104,8 +98,6 @@ def shingle_sets(
 def setsim_prefix_join(
     df: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.5,
     shingle_k: int = 3,
 ) -> DataFrame:
@@ -119,9 +111,7 @@ def setsim_prefix_join(
     # the shingle table feeds the rank window AND both verify sides —
     # pin it once instead of re-running the explode+distinct three times
     # (at cluster scale: persist to storage rather than executor memory)
-    sh = materialize(shingle_sets(
-        df, text_col=text_col, id_col=id_col, shingle_k=shingle_k
-    ))
+    sh = materialize(shingle_sets(df, shingle_k=shingle_k))
 
     # global canonical order: rare shingles first (minimizes prefix-join
     # fan-out). The frequency attaches via a window over the shingle key —
@@ -239,13 +229,9 @@ def setsim_prefix_join(
 def editdist_join(
     df: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_dist: int = 6,
     num_hashes: int = 16,
     bands: int = 8,
-    shingle_k: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """Pairs (id_a < id_b) with levenshtein(norm(a), norm(b)) <= max_dist.
 
@@ -265,16 +251,12 @@ def editdist_join(
 
     cand = minhash_lsh_candidates(
         df,
-        text_col=text_col,
-        id_col=id_col,
         num_hashes=num_hashes,
         bands=bands,
-        shingle_k=shingle_k,
-        portable=portable,
     ).select("id_a", "id_b")
 
     texts = df.select(
-        F.col(id_col).alias("id"), _norm(F.col(text_col)).alias("txt")
+        F.col("doc_id").alias("id"), _norm(F.col("text")).alias("txt")
     )
     ta = texts.select(
         F.col("id").alias("id_a"), F.col("txt").alias("txt_a")

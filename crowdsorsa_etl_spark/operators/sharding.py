@@ -93,13 +93,12 @@ def shard_store_init(
     docs: DataFrame,
     root: str,
     *,
-    id_col: str = "doc_id",
     shard_docs: int = 64,
     seed: str = DEFAULT_SEED,
 ) -> None:
     """Batch 0: full seeded shuffle, positions from 0."""
     spark = docs.sparkSession
-    pos, total = _positions(docs, id_col, seed, 0)
+    pos, total = _positions(docs, "doc_id", seed, 0)
     _write(pos, root, shard_docs, "overwrite")
     _set_next(spark, root, total)
 
@@ -108,7 +107,6 @@ def shard_store_append(
     new_docs: DataFrame,
     root: str,
     *,
-    id_col: str = "doc_id",
     shard_docs: int = 64,
     seed: str = DEFAULT_SEED,
 ) -> None:
@@ -131,7 +129,7 @@ def shard_store_append(
     lazy recompute between reserve and write is deterministic."""
     spark = new_docs.sparkSession
     start = _get_next(spark, root)
-    pos, total = _positions(new_docs, id_col, seed, start)
+    pos, total = _positions(new_docs, "doc_id", seed, start)
     _set_next(spark, root, start + total)
     _write(pos, root, shard_docs, "append")
 

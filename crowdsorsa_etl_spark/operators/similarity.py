@@ -26,6 +26,9 @@ from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
+_ITERATIONS = 5
+_SAMPLE_SIZE = 2048
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -70,9 +73,6 @@ def cosine_topk(
     queries: DataFrame,
     *,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query vector.
 
@@ -80,19 +80,18 @@ def cosine_topk(
     shuffles; the only wide op is the per-query top-k, done with a window on
     (query_id) after filtering to candidate scores.
     """
-    qid = query_id_col or id_col
     # norms precomputed per ROW (|Q|+|N| sqrt-dot evaluations), not per pair
     # (|Q|×|N|) — higher-order-function exprs are interpreted, so hoisting
     # them out of the join is a ~3x win on the scoring stage
     q = queries.select(
-        F.col(qid).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnorm"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -120,13 +119,10 @@ def hard_negative_topk(
     queries: DataFrame,
     *,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     query_id_col: str | None = None,
 ) -> DataFrame:
     """Hard-negative mining for retrieval/contrastive training: for each
-    query vector, the top-k most-similar corpus vectors whose ``label_col``
+    query vector, the top-k most-similar corpus vectors whose ``label``
     DIFFERS from the query's — the highest-scoring wrong answers, which is
     what a contrastive batch wants next to its positives (random negatives
     are too easy to carry gradient signal).
@@ -142,25 +138,25 @@ def hard_negative_topk(
     Output: (query_id, query_label, neighbor_id, neighbor_label, cosine,
     rank) with cosine rounded 6 dp and rank 1..k per query.
     """
-    qid = query_id_col or id_col
+    qid = query_id_col or "vec_id"
     q = queries.select(
         F.col(qid).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qnorm"),
+        F.col("label").alias("query_label"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnorm"),
     )
     # The self-exclusion predicate is only meaningful when query ids live
     # in the corpus id domain; with a separate query_id_col, a corpus id
     # that merely COLLIDES with a query id is a legitimate hard negative
     # and must not be dropped (ADVICE r11).
     mismatch = F.col("query_label") != F.col("neighbor_label")
-    if query_id_col is None or query_id_col == id_col:
+    if query_id_col is None or query_id_col == "vec_id":
         mismatch = (F.col("query_id") != F.col("neighbor_id")) & mismatch
     scored = c.join(
         F.broadcast(q),
@@ -195,10 +191,6 @@ def cosine_topk_vectorized(
     queries: DataFrame,
     *,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str | None = None,
-    candidate_margin: int = 16,
     max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Exact cosine top-k with numpy matrix math per Arrow batch.
@@ -211,7 +203,7 @@ def cosine_topk_vectorized(
     batch, never the corpus.
 
     BIT-EXACT contract (round 7): BLAS scores only SELECT candidates — the
-    top ``k + candidate_margin`` per query — which are then re-scored with
+    top ``k + 16`` per query — which are then re-scored with
     the expression path (``dot / (norm·norm)``, round 6) and re-ranked, so
     the output is identical to :func:`cosine_topk` and the DuckDB oracle.
     BLAS pairwise summation differs from sequential accumulation by ≲1e-12;
@@ -229,23 +221,22 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
-    qid = query_id_col or id_col
     q_rows = _collect_bounded(
-        queries.select(F.col(qid), F.col(vec_col)), max_queries, "query set"
+        queries.select(F.col("vec_id"), F.col("embedding")), max_queries, "query set"
     )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
     bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-    n_cand = k + candidate_margin
+    n_cand = k + 16
 
     def score(batches):
         ids, mat = bc.value
         for pdf in batches:
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            c_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
             sims = c_mat @ mat.T  # (batch, n_queries)
-            n_ids = pdf[id_col].to_numpy()
+            n_ids = pdf["vec_id"].to_numpy()
             out = pd.DataFrame(
                 {
                     "query_id": np.repeat(ids, len(n_ids)),
@@ -267,11 +258,11 @@ def cosine_topk_vectorized(
             ).groupby("query_id", sort=False).head(n_cand)
             # survivors carry their raw vector out of the Arrow stage —
             # the exact re-score then needs no second corpus scan
-            vec_by_id = dict(zip(n_ids, pdf[vec_col]))
+            vec_by_id = dict(zip(n_ids, pdf["embedding"]))
             kept = kept.assign(_cvec=kept["neighbor_id"].map(vec_by_id))
             yield kept
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
         score,
         "query_id long, neighbor_id long, cosine_blas double,"
         " _cvec array<float>",
@@ -289,9 +280,9 @@ def cosine_topk_vectorized(
     # tie-break as cosine_topk → bit-identical output (the carried _cvec
     # holds the same float32 values the corpus column does)
     q = queries.select(
-        F.col(qid).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        l2_norm(F.col(vec_col)).alias("_qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
+        l2_norm(F.col("embedding")).alias("_qnorm"),
     )
     rescored = cand.join(F.broadcast(q), "query_id").withColumn(
         "cosine",
@@ -329,22 +320,6 @@ def _srp_plane(dim: int, table: int, bit: int) -> list[float]:
     return vals
 
 
-def srp_signature(vec: Column, dim: int, table: int, n_bits: int = 8) -> Column:
-    """n_bits sign bits of projections onto deterministic hyperplanes,
-    packed into one bigint bucket key (expression form; see
-    :func:`srp_buckets_arrow` for the vectorized all-tables form)."""
-    bucket = F.lit(0).cast("bigint")
-    for bit in range(n_bits):
-        plane = F.array(*[F.lit(v) for v in _srp_plane(dim, table, bit)])
-        proj = dot(vec, plane)
-        bucket = bucket.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("bigint"), bit)).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return bucket
-
-
 def srp_buckets_arrow(vec: Column, dim: int, n_tables: int, n_bits: int) -> Column:
     """All ``n_tables`` SRP bucket keys in ONE BLAS matmul per Arrow batch.
 
@@ -352,9 +327,8 @@ def srp_buckets_arrow(vec: Column, dim: int, n_tables: int, n_bits: int) -> Colu
     row (n_tables × n_bits of them) — ~70 µs each at dim 64. Here the full
     plane matrix multiplies each batch once: X @ P.T, sign, pack bits.
     Returns array<bigint> of length n_tables (index = table id); explode
-    with posexplode to get (table, bucket) rows. Same planes as
-    srp_signature (identical buckets up to float-summation-order ties at
-    proj == 0, which measure zero for real data).
+    with posexplode to get (table, bucket) rows. Bit ``b`` of table ``t``
+    is set where the projection onto ``_srp_plane(dim, t, b)`` is positive.
     """
     planes = np.array(
         [
@@ -384,20 +358,17 @@ def lsh_topk(
     *,
     dim: int,
     k: int = 5,
-    n_tables: int = 4,
-    n_bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: SRP-bucket both sides per table, equi-join on
-    (table, bucket), exact cosine re-rank of candidates only."""
+    """Approximate top-k: SRP-bucket both sides per table (4 tables of 8
+    bits), equi-join on (table, bucket), exact cosine re-rank of
+    candidates only."""
 
     def bucketize(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(vec_col).alias(f"_{out_id}_vec"),
+            F.col("vec_id").alias(out_id),
+            F.col("embedding").alias(f"_{out_id}_vec"),
             F.posexplode(
-                srp_buckets_arrow(F.col(vec_col), dim, n_tables, n_bits)
+                srp_buckets_arrow(F.col("embedding"), dim, 4, 8)
             ).alias("table", "bucket"),
         )
 
@@ -433,13 +404,7 @@ def lsh_topk(
 # ---------------------------------------------------------------------------
 
 
-def embedding_cosine_pairs(
-    emb: DataFrame,
-    *,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_cosine_pairs(emb: DataFrame, *, threshold: float) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold — the oracle-checkable ground
     truth for embedding near-dup detection. Quadratic (|N|²/2 dot products,
     broadcast-nested-loop self-join): at 100 TB use
@@ -449,14 +414,14 @@ def embedding_cosine_pairs(
     Output: (id_a, id_b, cosine) with id_a < id_b, cosine rounded to 6 dp.
     """
     a = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_av"),
-        l2_norm(F.col(vec_col)).alias("_an"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_av"),
+        l2_norm(F.col("embedding")).alias("_an"),
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_bv"),
-        l2_norm(F.col(vec_col)).alias("_bn"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_bv"),
+        l2_norm(F.col("embedding")).alias("_bn"),
     )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
@@ -494,10 +459,6 @@ def embedding_cosine_pairs_lsh(
     *,
     dim: int,
     threshold: float,
-    n_tables: int = 12,
-    n_bits: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     portable: bool = False,
 ) -> DataFrame:
     """Approximate embedding near-dup pairs: SRP-bucket self-join candidates
@@ -505,11 +466,9 @@ def embedding_cosine_pairs_lsh(
     bucket keys shuffle; candidate count bounded by real bucket collisions,
     never |N|²).
 
-    Tuning: P(two vectors share one table's bucket) = (1 - θ/π)^n_bits with
-    θ = arccos(threshold); recall = 1 - (1 - p)^n_tables. Fewer bits / more
-    tables raise recall at the cost of larger candidate sets — the defaults
-    target recall ≳0.95 at threshold ≈ 0.35. For high-threshold near-dup
-    (≥0.9, the usual dedup case) raise n_bits to 8-10.
+    Geometry: 12 tables of 3 bits. P(two vectors share one table's
+    bucket) = (1 - θ/π)^3 with θ = arccos(threshold); recall =
+    1 - (1 - p)^12 — recall ≳0.95 at threshold ≈ 0.35.
 
     Shuffle discipline: the banded self-join and the pair dedup carry ONLY
     (id, table, bucket) — fixed-width keys, no vectors. Vectors are
@@ -535,9 +494,9 @@ def embedding_cosine_pairs_lsh(
     from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
     bucketed = materialize(emb.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.posexplode(
-            srp_buckets_arrow(F.col(vec_col), dim, n_tables, n_bits)
+            srp_buckets_arrow(F.col("embedding"), dim, 12, 3)
         ).alias("table", "bucket"),
     ))
     # widen the CHECKPOINTED bucket table (fixed-width rows, no vectors)
@@ -561,8 +520,8 @@ def embedding_cosine_pairs_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    ea = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_av"))
-    eb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_bv"))
+    ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_av"))
+    eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_bv"))
     if portable:
         # norms hoisted per VECTOR (|N| fold evaluations, before the pair
         # join) — the norm is a deterministic function of the vector, so the
@@ -611,7 +570,6 @@ def ivf_train_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     sample_size: int = 2048,
-    iterations: int = 5,
 ):
     """Spherical k-means on a deterministic bounded sample (first
     ``sample_size`` vectors by id) — driver-side numpy, like FAISS's train
@@ -626,7 +584,7 @@ def ivf_train_centroids(
     x = np.array([r[1] for r in rows], dtype=np.float64)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     centroids = x[:n_lists].copy()  # deterministic init
-    for _ in range(iterations):
+    for _ in range(_ITERATIONS):
         assign = np.argmax(x @ centroids.T, axis=1)
         for j in range(n_lists):
             members = x[assign == j]
@@ -642,7 +600,6 @@ def kmeans_train_distributed(
     n_clusters: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    iterations: int = 5,
 ):
     """Spherical k-means trained on the FULL corpus with distributed Lloyd
     iterations — the 100 TB replacement for :func:`ivf_train_centroids`'s
@@ -678,7 +635,7 @@ def kmeans_train_distributed(
     dim = cents.shape[1]
     vec_only = corpus.select(vec_col)  # column-pruned: training never needs ids
 
-    for _ in range(iterations):
+    for _ in range(_ITERATIONS):
         bc = spark.sparkContext.broadcast(cents)
 
         def partials(batches):
@@ -792,9 +749,6 @@ def ivf_topk(
     k: int = 5,
     n_lists: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
     trainer: str = "sample",
     max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
@@ -815,15 +769,15 @@ def ivf_topk(
     centroids = _train(
         corpus,
         n_lists=n_lists,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_size=sample_size,
+        id_col="vec_id",
+        vec_col="embedding",
+        sample_size=_SAMPLE_SIZE,
         trainer=trainer,
     )
-    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(corpus, centroids)
 
     q_rows = _collect_bounded(
-        queries.select(id_col, vec_col), max_queries, "query set"
+        queries.select("vec_id", "embedding"), max_queries, "query set"
     )
     spark = corpus.sparkSession
     probes = []
@@ -845,26 +799,26 @@ def ivf_topk(
         # a deterministic function of the vector, so bit-identical to the
         # per-pair form (r16; the same hoist embedding_cosine_pairs_lsh
         # documents)
-        assigned.withColumn("_nn", l2_norm(F.col(vec_col)))
+        assigned.withColumn("_nn", l2_norm(F.col("embedding")))
         .join(F.broadcast(probe_df), "list_id")
         .join(F.broadcast(q_df), "query_id")
-        .filter(F.col("query_id") != F.col(id_col))
+        .filter(F.col("query_id") != F.col("vec_id"))
         .withColumn(
             "cosine",
             F.round(
-                dot(F.col(vec_col), F.col("_qv"))
+                dot(F.col("embedding"), F.col("_qv"))
                 / (F.col("_nn") * F.col("_qn")),
                 6,
             ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+        F.col("cosine").desc(), F.col("vec_id").asc()
     )
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine", "rank")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
     )
 
 
@@ -875,11 +829,6 @@ def ivf_topk_curve(
     k: int = 5,
     n_lists: int = 16,
     probe_list: tuple[int, ...] = (1, 2, 4, 8, 16),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
-    trainer: str = "sample",
-    max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
     """:func:`ivf_topk` at EVERY probe budget in ``probe_list``, from ONE
     shared pass: train once, assign once, score each (query, candidate)
@@ -906,15 +855,15 @@ def ivf_topk_curve(
     centroids = _train(
         corpus,
         n_lists=n_lists,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_size=sample_size,
-        trainer=trainer,
+        id_col="vec_id",
+        vec_col="embedding",
+        sample_size=_SAMPLE_SIZE,
+        trainer="sample",
     )
-    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(corpus, centroids)
 
     q_rows = _collect_bounded(
-        queries.select(id_col, vec_col), max_queries, "query set"
+        queries.select("vec_id", "embedding"), MAX_QUERY_ROWS, "query set"
     )
     spark = corpus.sparkSession
     probes = []
@@ -937,19 +886,19 @@ def ivf_topk_curve(
     scored = materialize(  # score once; every budget's window reuses it
         # corpus-side norm hoisted below the probe joins (see ivf_topk):
         # one fold per corpus vector, not one per (query, candidate) pair
-        assigned.withColumn("_nn", l2_norm(F.col(vec_col)))
+        assigned.withColumn("_nn", l2_norm(F.col("embedding")))
         .join(F.broadcast(probe_df), "list_id")
         .join(F.broadcast(q_df), "query_id")
-        .filter(F.col("query_id") != F.col(id_col))
+        .filter(F.col("query_id") != F.col("vec_id"))
         .withColumn(
             "cosine",
             F.round(
-                dot(F.col(vec_col), F.col("_qv"))
+                dot(F.col("embedding"), F.col("_qv"))
                 / (F.col("_nn") * F.col("_qn")),
                 6,
             ),
         )
-        .select("query_id", F.col(id_col).alias("neighbor_id"),
+        .select("query_id", F.col("vec_id").alias("neighbor_id"),
                 "cosine", "probe_rank")
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -978,10 +927,6 @@ def ivf_write_index(
     path: str,
     *,
     n_lists: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
-    trainer: str = "sample",
 ) -> None:
     """Persist an IVF index as a parquet layout PARTITIONED BY list_id —
     the at-rest analog of FAISS inverted lists: a later search that probes
@@ -989,17 +934,17 @@ def ivf_write_index(
     scan, verified by plan test), i.e. ~n_probe/n_lists of the index bytes.
 
     Centroids are stored alongside (``<path>/_centroids``) so search needs
-    no retraining. ``trainer="distributed"`` trains on the full corpus.
+    no retraining.
     """
     centroids = _train(
         corpus,
         n_lists=n_lists,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_size=sample_size,
-        trainer=trainer,
+        id_col="vec_id",
+        vec_col="embedding",
+        sample_size=_SAMPLE_SIZE,
+        trainer="sample",
     )
-    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(corpus, centroids)
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(path)
     spark = corpus.sparkSession
     cent_rows = [
@@ -1017,9 +962,6 @@ def ivf_query_index(
     *,
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Search a persisted IVF index: assign each query to its n_probe
     nearest stored centroids driver-side (bounded), then scan ONLY the
@@ -1033,7 +975,7 @@ def ivf_query_index(
         centroids[r.list_id] = r.centroid
 
     q_rows = _collect_bounded(
-        queries.select(id_col, vec_col), max_queries, "query set"
+        queries.select("vec_id", "embedding"), MAX_QUERY_ROWS, "query set"
     )
     probes = []
     for r in q_rows:
@@ -1053,26 +995,26 @@ def ivf_query_index(
     index = spark.read.parquet(path).filter(F.col("list_id").isin(probed_lists))
     cand = (
         # corpus-side norm hoisted below the probe joins (see ivf_topk)
-        index.withColumn("_nn", l2_norm(F.col(vec_col)))
+        index.withColumn("_nn", l2_norm(F.col("embedding")))
         .join(F.broadcast(probe_df), "list_id")
         .join(F.broadcast(q_df), "query_id")
-        .filter(F.col("query_id") != F.col(id_col))
+        .filter(F.col("query_id") != F.col("vec_id"))
         .withColumn(
             "cosine",
             F.round(
-                dot(F.col(vec_col), F.col("_qv"))
+                dot(F.col("embedding"), F.col("_qv"))
                 / (F.col("_nn") * F.col("_qn")),
                 6,
             ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
+        F.col("cosine").desc(), F.col("vec_id").asc()
     )
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "cosine", "rank")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
     )
 
 
@@ -1081,9 +1023,6 @@ def semdedup(
     *,
     n_clusters: int = 16,
     epsilon: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
     trainer: str = "sample",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic deduplication in embedding
@@ -1098,19 +1037,19 @@ def semdedup(
     (:func:`kmeans_train_distributed`) — required at scale, where n_clusters
     must grow with the corpus (the paper uses ~1e5 clusters) to keep the
     in-cluster |c|² pair step bounded; the bounded-sample default caps
-    n_clusters at ~sample_size.
+    n_clusters at ~2048, the sample size.
 
     Output: (id, list_id, centroid_sim, keep) — one row per corpus vector.
     """
     cents = _train(
         corpus,
         n_lists=n_clusters,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample_size=sample_size,
+        id_col="vec_id",
+        vec_col="embedding",
+        sample_size=_SAMPLE_SIZE,
         trainer=trainer,
     )
-    assigned = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(corpus, cents)
     cent_df = corpus.sparkSession.createDataFrame(
         [(int(i), [float(v) for v in c]) for i, c in enumerate(cents)],
         "list_id int, centroid array<float>",
@@ -1119,28 +1058,28 @@ def semdedup(
         assigned.join(F.broadcast(cent_df), "list_id")
         .withColumn(
             "centroid_sim",
-            F.round(cosine(F.col(vec_col), F.col("centroid")), 6),
+            F.round(cosine(F.col("embedding"), F.col("centroid")), 6),
         )
         .drop("centroid")
         .withColumn(
             "rank",
             F.row_number().over(
                 Window.partitionBy("list_id").orderBy(
-                    F.col("centroid_sim").desc(), F.col(id_col)
+                    F.col("centroid_sim").desc(), F.col("vec_id")
                 )
             ),
         )
     )
     a = ranked.select(
         "list_id",
-        F.col(id_col).alias("_a_id"),
-        F.col(vec_col).alias("_a_vec"),
+        F.col("vec_id").alias("_a_id"),
+        F.col("embedding").alias("_a_vec"),
         F.col("rank").alias("_a_rank"),
     )
     b = ranked.select(
         "list_id",
-        F.col(id_col).alias("_b_id"),
-        F.col(vec_col).alias("_b_vec"),
+        F.col("vec_id").alias("_b_id"),
+        F.col("embedding").alias("_b_vec"),
         F.col("rank").alias("_b_rank"),
     )
     removed = (
@@ -1150,14 +1089,14 @@ def semdedup(
         # the interpreted zip_with/aggregate expression costs ~70 µs/pair,
         # the BLAS batch path ~100× less (same lesson as the LSH verifier)
         .filter(_cosine_arrow(F.col("_a_vec"), F.col("_b_vec")) > epsilon)
-        .select(F.col("_b_id").alias(id_col))
+        .select(F.col("_b_id").alias("vec_id"))
         .distinct()
         .withColumn("_rm", F.lit(1))
     )
     return (
-        ranked.join(removed, id_col, "left")
+        ranked.join(removed, "vec_id", "left")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             "list_id",
             "centroid_sim",
             F.col("_rm").isNull().alias("keep"),
@@ -1199,8 +1138,6 @@ def bitext_margin_pairs(
     tgt: DataFrame,
     *,
     k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk 2019 — the
     LASER/CCMatrix method that mined billions of parallel sentence pairs):
@@ -1229,14 +1166,14 @@ def bitext_margin_pairs(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     s = src.select(
-        F.col(id_col).alias("src_id"),
-        F.col(vec_col).alias("_sv"),
-        l2_norm(F.col(vec_col)).alias("_sn"),
+        F.col("vec_id").alias("src_id"),
+        F.col("embedding").alias("_sv"),
+        l2_norm(F.col("embedding")).alias("_sn"),
     )
     t = tgt.select(
-        F.col(id_col).alias("tgt_id"),
-        F.col(vec_col).alias("_tv"),
-        l2_norm(F.col(vec_col)).alias("_tn"),
+        F.col("vec_id").alias("tgt_id"),
+        F.col("embedding").alias("_tv"),
+        l2_norm(F.col("embedding")).alias("_tn"),
     )
     scored = materialize(
         s.join(F.broadcast(t))

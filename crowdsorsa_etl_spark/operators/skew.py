@@ -28,7 +28,6 @@ def salted_join(
     dim_key: str,
     salt_buckets: int = 16,
     salt_source: str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
     """fact ⋈ dim on key with S-way salting.
 
@@ -46,7 +45,7 @@ def salted_join(
         exploded_dim,
         (salted_fact[fact_key] == exploded_dim[dim_key])
         & (salted_fact["_salt"] == exploded_dim["_salt"]),
-        how,
+        "inner",
     )
     return joined.drop("_salt")
 

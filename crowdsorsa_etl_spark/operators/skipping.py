@@ -30,6 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# one bloom geometry for build and probe: ~0.2% false positives at ~1.1k
+# distinct values per file
+_BLOOM_BITS = 8192
+_BLOOM_HASHES = 5
+
+
 def collect_file_stats(
     spark: SparkSession, path: str, cols: list[str]
 ) -> DataFrame:
@@ -84,39 +90,29 @@ def canonical_type_for_value(value) -> str:
 
 
 def collect_bloom_stats(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    *,
-    n_bits: int = 8192,
-    n_hashes: int = 5,
-    value_type: str | None = None,
+    spark: SparkSession, path: str, col: str, *, n_bits: int = _BLOOM_BITS
 ) -> DataFrame:
     """Per-file bloom bitsets for equality probes on ``col``:
     (file_path, bloom map<int, bigint>) — the bitset stored sparsely as
     64-bit words keyed by word index (only non-zero words materialize).
 
     ``n_bits`` must be a power of two (positions slice into word/bit with
-    shifts). Defaults give ~0.2% false positives at ~1.1k distinct values
-    per file. Built with ONE partial-aggregable groupBy chain: explode the
-    k positions per row, bit_or the masks per (file, word), collect the
-    sparse words per file.
+    shifts), and the probe side reads with ``_BLOOM_BITS``. Built with ONE
+    partial-aggregable groupBy chain: explode the k positions per row,
+    bit_or the masks per (file, word), collect the sparse words per file.
 
     Build and probe must hash the SAME physical type (xxhash64 hashes INT
-    and BIGINT differently — a mismatch silently prunes every file). With
-    ``value_type=None`` (default) the type derives from the column's
-    declared type by CLASS — integrals → bigint, fractionals → double,
-    else string — and ``bloom_prune``/``read_bloom_pruned`` derive the
-    identical class from the probe value's python type, so defaults agree
-    for int32/int64/string/double columns alike. Pass an explicit
-    ``value_type`` (to BOTH sides) only to override the class mapping.
+    and BIGINT differently — a mismatch silently prunes every file). The
+    type derives from the column's declared type by CLASS — integrals →
+    bigint, fractionals → double, else string — and
+    ``bloom_prune``/``read_bloom_pruned`` derive the identical class from
+    the probe value's python type, so both sides agree for
+    int32/int64/string/double columns alike.
     """
     if n_bits & (n_bits - 1):
         raise ValueError(f"n_bits must be a power of two, got {n_bits}")
     base = spark.read.parquet(path)
-    if value_type is None:
-        decl = dict(base.dtypes)[col]
-        value_type = _canonical_hash_type(decl.split("(")[0])
+    value_type = _canonical_hash_type(dict(base.dtypes)[col].split("(")[0])
     df = base.select(
         F.col("_metadata.file_path").alias("file_path"),
         F.col(col).cast(value_type).alias("_v"),
@@ -125,7 +121,7 @@ def collect_bloom_stats(
         F.array(
             *[
                 F.pmod(F.xxhash64(F.col("_v"), F.lit(i)), F.lit(n_bits))
-                for i in range(n_hashes)
+                for i in range(_BLOOM_HASHES)
             ]
         )
     ).alias("pos")
@@ -150,9 +146,7 @@ def collect_bloom_stats(
     )
 
 
-def _bloom_positions(
-    spark: SparkSession, value, value_type: str, n_bits: int, n_hashes: int
-) -> list[int]:
+def _bloom_positions(spark: SparkSession, value, value_type: str) -> list[int]:
     """The probe value's k bit positions, computed with the SAME xxhash64
     the index builder used (one bounded 1-row job — hashing must happen
     where the build hashing happened, on the JVM)."""
@@ -162,33 +156,23 @@ def _bloom_positions(
             *[
                 F.pmod(
                     F.xxhash64(F.lit(value).cast(value_type), F.lit(i)),
-                    F.lit(n_bits),
+                    F.lit(_BLOOM_BITS),
                 ).alias(f"p{i}")
-                for i in range(n_hashes)
+                for i in range(_BLOOM_HASHES)
             ]
         )
         .first()
     )
-    return [row[f"p{i}"] for i in range(n_hashes)]
+    return [row[f"p{i}"] for i in range(_BLOOM_HASHES)]
 
 
-def bloom_prune(
-    spark: SparkSession,
-    bloom_stats: DataFrame,
-    value,
-    *,
-    value_type: str | None = None,
-    n_bits: int = 8192,
-    n_hashes: int = 5,
-) -> DataFrame:
-    """Files whose bloom bitset has ALL k bits of ``value`` set.
-    ``value_type=None`` derives the canonical hash type from the probe
-    value's python type (must match the build-side derivation — see
-    collect_bloom_stats)."""
-    if value_type is None:
-        value_type = canonical_type_for_value(value)
+def bloom_prune(spark: SparkSession, bloom_stats: DataFrame, value) -> DataFrame:
+    """Files whose bloom bitset has ALL k bits of ``value`` set. The hash
+    type derives from the probe value's python type (must match the
+    build-side derivation — see collect_bloom_stats)."""
+    value_type = canonical_type_for_value(value)
     cond = F.lit(True)
-    for p in _bloom_positions(spark, value, value_type, n_bits, n_hashes):
+    for p in _bloom_positions(spark, value, value_type):
         word, bit = p >> 6, p & 63
         mask = (1 << bit) if bit < 63 else -(1 << 63)  # signed int64 literal
         cond = cond & (
@@ -201,28 +185,12 @@ def bloom_prune(
 
 
 def read_bloom_pruned(
-    spark: SparkSession,
-    bloom_stats: DataFrame,
-    col: str,
-    value,
-    *,
-    value_type: str | None = None,
-    n_bits: int = 8192,
-    n_hashes: int = 5,
+    spark: SparkSession, bloom_stats: DataFrame, col: str, value
 ) -> DataFrame:
     """Scan only the files whose bloom filter may contain ``value``, then
     re-apply the exact equality (bloom is file-granular and admits false
     positives; it never admits false negatives)."""
-    if value_type is None:
-        value_type = canonical_type_for_value(value)
-    survivors = bloom_prune(
-        spark,
-        bloom_stats,
-        value,
-        value_type=value_type,
-        n_bits=n_bits,
-        n_hashes=n_hashes,
-    )
+    survivors = bloom_prune(spark, bloom_stats, value)
     files = [r["file_path"] for r in survivors.collect()]
     if not files:  # sound: value provably absent — empty result, kept schema
         all_files = [
@@ -235,7 +203,7 @@ def read_bloom_pruned(
             )
         return spark.read.parquet(*all_files).filter(F.lit(False))
     return spark.read.parquet(*files).filter(
-        F.col(col) == F.lit(value).cast(value_type)
+        F.col(col) == F.lit(value).cast(canonical_type_for_value(value))
     )
 
 

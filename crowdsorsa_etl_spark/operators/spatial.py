@@ -43,19 +43,16 @@ def grid_spatial_join(
     polygons: DataFrame,
     *,
     cell_size: float,
-    point_id: str = "point_id",
-    x_col: str = "x",
-    y_col: str = "y",
-    poly_id: str = "poly_id",
-    wkb_col: str = "geometry_wkb",
 ) -> DataFrame:
     """(point_id, poly_id) for every point strictly inside a polygon."""
     env = polygons.select(
-        F.col(poly_id), F.col(wkb_col), st_envelope(F.col(wkb_col)).alias("e")
+        F.col("poly_id"),
+        F.col("geometry_wkb"),
+        st_envelope(F.col("geometry_wkb")).alias("e"),
     )
     cells = env.select(
-        poly_id,
-        wkb_col,
+        "poly_id",
+        "geometry_wkb",
         F.explode(
             F.sequence(
                 F.floor(F.col("e.xmin") / cell_size).cast("long"),
@@ -65,8 +62,8 @@ def grid_spatial_join(
         F.col("e.ymin").alias("_ymin"),
         F.col("e.ymax").alias("_ymax"),
     ).select(
-        poly_id,
-        wkb_col,
+        "poly_id",
+        "geometry_wkb",
         "cx",
         F.explode(
             F.sequence(
@@ -76,19 +73,19 @@ def grid_spatial_join(
         ).alias("cy"),
     )
     pts = points.select(
-        F.col(point_id),
-        F.col(x_col).alias("_px"),
-        F.col(y_col).alias("_py"),
-        F.floor(F.col(x_col) / cell_size).cast("long").alias("cx"),
-        F.floor(F.col(y_col) / cell_size).cast("long").alias("cy"),
+        F.col("point_id"),
+        F.col("x").alias("_px"),
+        F.col("y").alias("_py"),
+        F.floor(F.col("x") / cell_size).cast("long").alias("cx"),
+        F.floor(F.col("y") / cell_size).cast("long").alias("cy"),
     )
     cand = pts.join(cells, ["cx", "cy"])
     # no dedup needed: a point lives in exactly ONE cell, and a polygon
     # contributes that cell at most once, so each (point, polygon) pair
     # surfaces at most once
     return cand.filter(
-        st_contains_point(F.col(wkb_col), F.col("_px"), F.col("_py"))
-    ).select(point_id, poly_id)
+        st_contains_point(F.col("geometry_wkb"), F.col("_px"), F.col("_py"))
+    ).select("point_id", "poly_id")
 
 
 def _envelopes(polys: DataFrame, idc: str, wkbc: str) -> DataFrame:

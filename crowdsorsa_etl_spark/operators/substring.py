@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
 
+_MIN_RUN = 8
+
 __all__ = [
     "duplicated_substring_spans",
     "substring_decontamination_spans",
@@ -83,13 +85,11 @@ def duplicated_substring_spans(
     df: DataFrame,
     *,
     min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans of >= ``min_run`` tokens per document.
 
-    Output: (id_col, span_start int, span_end int, n_tokens int) — 0-based
+    Output: (doc_id, span_start int, span_end int, n_tokens int) — 0-based
     inclusive token positions; ``n_tokens = span_end - span_start + 1``.
     A span is the union of duplicated windows: every token in it is covered
     by some ``min_run``-token window that occurs at least twice somewhere
@@ -104,7 +104,11 @@ def duplicated_substring_spans(
     # ``shingles`` injects a precomputed (id, pos, sh) table — the
     # per-fixture materialized artifact (queries/_shared._doc_shingles),
     # the same injection contract as substring_decontamination_spans
-    sh = shingles if shingles is not None else _shingle_positions(df, id_col, text_col, k)
+    sh = (
+        shingles
+        if shingles is not None
+        else _shingle_positions(df, "doc_id", "text", k)
+    )
 
     # flagged = corpus-wide shingle count >= 2, as groupBy-count + semi
     # join rather than a count window over partitionBy(sh): the partial
@@ -122,18 +126,18 @@ def duplicated_substring_spans(
         .filter(F.col("_c") >= 2)
         .select("sh")
     )
-    flagged = sh.join(dup_sh, "sh", "left_semi").select(id_col, "pos")
+    flagged = sh.join(dup_sh, "sh", "left_semi").select("doc_id", "pos")
 
     # gaps-and-islands per doc: start positions <= k apart cover
     # overlapping-or-touching k-token windows (unique order key: pos)
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     w_run = w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     marked = flagged.withColumn(
         "_ni",
         F.when(F.col("pos") - F.lag("pos").over(w_doc) <= k, 0).otherwise(1),
     )
     islands = marked.withColumn("_isl", F.sum("_ni").over(w_run))
-    return islands.groupBy(id_col, "_isl").agg(
+    return islands.groupBy("doc_id", "_isl").agg(
         F.min("pos").cast("int").alias("span_start"),
         (F.max("pos") + F.lit(k - 1)).cast("int").alias("span_end"),
         (F.max("pos") - F.min("pos") + F.lit(k)).cast("int").alias("n_tokens"),
@@ -145,8 +149,6 @@ def substring_decontamination_spans(
     eval_df: DataFrame,
     *,
     min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     corpus_shingles: DataFrame | None = None,
     eval_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -163,7 +165,7 @@ def substring_decontamination_spans(
     window hashes (an eval set is benchmark-sized — Catalyst broadcasts it
     from observed size, so the corpus scan stays shuffle-free in the
     common case), then per-doc gaps-and-islands coalescing. Output:
-    (id_col, span_start int, span_end int, n_tokens int).
+    (doc_id, span_start int, span_end int, n_tokens int).
     """
     if min_run < 2:
         raise ValueError(f"min_run must be >= 2, got {min_run}")
@@ -174,23 +176,23 @@ def substring_decontamination_spans(
     sh = (
         corpus_shingles
         if corpus_shingles is not None
-        else _shingle_positions(corpus, id_col, text_col, k)
+        else _shingle_positions(corpus, "doc_id", "text", k)
     )
     ev = (
         eval_shingles
         if eval_shingles is not None
-        else _shingle_positions(eval_df, id_col, text_col, k)
+        else _shingle_positions(eval_df, "doc_id", "text", k)
     ).select("sh").distinct()
-    flagged = sh.join(ev, "sh", "left_semi").select(id_col, "pos")
+    flagged = sh.join(ev, "sh", "left_semi").select("doc_id", "pos")
 
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     w_run = w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     marked = flagged.withColumn(
         "_ni",
         F.when(F.col("pos") - F.lag("pos").over(w_doc) <= k, 0).otherwise(1),
     )
     islands = marked.withColumn("_isl", F.sum("_ni").over(w_run))
-    return islands.groupBy(id_col, "_isl").agg(
+    return islands.groupBy("doc_id", "_isl").agg(
         F.min("pos").cast("int").alias("span_start"),
         (F.max("pos") + F.lit(k - 1)).cast("int").alias("span_end"),
         (F.max("pos") - F.min("pos") + F.lit(k)).cast("int").alias("n_tokens"),
@@ -201,14 +203,12 @@ def remove_duplicated_substrings(
     df: DataFrame,
     *,
     min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     spans: DataFrame | None = None,
 ) -> DataFrame:
     """Drop every token covered by a duplicated >= ``min_run``-token run
     (the EXACTSUBSTR removal step) and return per-doc clean stats.
 
-    Output: (id_col, n_kept bigint, clean_md5 string) — md5 of the
+    Output: (doc_id, n_kept bigint, clean_md5 string) — md5 of the
     space-joined surviving tokens in original order ('' when everything
     was removed), so any off-by-one in span coverage breaks the hash.
     Documents whose normalized text is empty are dropped (both engines).
@@ -223,19 +223,17 @@ def remove_duplicated_substrings(
     the token chain uses; when None, spans are derived here.
     """
     if spans is None:
-        spans = duplicated_substring_spans(
-            df, min_run=min_run, text_col=text_col, id_col=id_col
-        )
-    per_doc = spans.groupBy(id_col).agg(
+        spans = duplicated_substring_spans(df, min_run=min_run)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    arr = _token_array(text_col)
-    toks = df.select(F.col(id_col), arr.alias("_arr")).filter(
+    arr = _token_array("text")
+    toks = df.select(F.col("doc_id"), arr.alias("_arr")).filter(
         F.size(F.col("_arr")) > F.lit(0)
     )
     # split('') yields [''] — the empty doc; drop it like the oracle does
     toks = toks.filter(~((F.size("_arr") == 1) & (F.element_at("_arr", 1) == "")))
-    joined = toks.join(per_doc, id_col, "left").withColumn(
+    joined = toks.join(per_doc, "doc_id", "left").withColumn(
         "_spans",
         F.coalesce(
             F.col("_spans"),
@@ -257,7 +255,7 @@ def remove_duplicated_substrings(
     )
     clean = F.concat_ws(" ", F.transform(kept, lambda x: x["w"]))
     return joined.select(
-        id_col,
+        "doc_id",
         F.size(kept).cast("bigint").alias("n_kept"),
         F.md5(clean).alias("clean_md5"),
     )
@@ -276,40 +274,24 @@ def remove_duplicated_substrings(
 _PFX_LEN = 2
 
 
-def substring_write_index(
-    eval_df: DataFrame,
-    path: str,
-    *,
-    min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Persist the eval set's distinct ``min_run``-token window hashes,
+def substring_write_index(eval_df: DataFrame, path: str) -> None:
+    """Persist the eval set's distinct ``_MIN_RUN``-token window hashes,
     partitioned by the first ``_PFX_LEN`` hex chars (256 partitions —
     uniform by md5 construction)."""
     sh = (
-        _shingle_positions(eval_df, id_col, text_col, min_run)
-        .select("sh")
+        _shingle_positions(eval_df, "doc_id", "text", _MIN_RUN).select("sh")
         .distinct()
         .withColumn("pfx", F.substring("sh", 1, _PFX_LEN))
     )
     sh.write.mode("overwrite").partitionBy("pfx").parquet(path)
 
 
-def substring_append_index(
-    eval_df: DataFrame,
-    path: str,
-    *,
-    min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def substring_append_index(eval_df: DataFrame, path: str) -> None:
     """Append a new eval shard's window hashes — pure file append into the
     prefix partitions; existing rows untouched. Duplicate hashes across
     appends are harmless (the probe is a left-semi join)."""
     sh = (
-        _shingle_positions(eval_df, id_col, text_col, min_run)
-        .select("sh")
+        _shingle_positions(eval_df, "doc_id", "text", _MIN_RUN).select("sh")
         .distinct()
         .withColumn("pfx", F.substring("sh", 1, _PFX_LEN))
     )
@@ -322,8 +304,6 @@ def substring_match_index(
     batch: DataFrame,
     *,
     min_run: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Overlap spans of a training BATCH against the persisted eval index.
 
@@ -333,7 +313,7 @@ def substring_match_index(
     :func:`substring_decontamination_spans`.
     """
     k = min_run
-    sh = _shingle_positions(batch, id_col, text_col, k).withColumn(
+    sh = _shingle_positions(batch, "doc_id", "text", k).withColumn(
         "pfx", F.substring("sh", 1, _PFX_LEN)
     )
     pfxs = sorted(
@@ -342,11 +322,11 @@ def substring_match_index(
     if not pfxs:
         from pyspark.sql.types import IntegerType, StructField, StructType
 
-        id_type = batch.schema[id_col].dataType
+        id_type = batch.schema["doc_id"].dataType
         return spark.createDataFrame(
             [],
             StructType(
-                [StructField(id_col, id_type)]
+                [StructField("doc_id", id_type)]
                 + [
                     StructField(c, IntegerType())
                     for c in ("span_start", "span_end", "n_tokens")
@@ -359,15 +339,15 @@ def substring_match_index(
     index = spark.read.parquet(path).filter(F.col("pfx").isin(pfxs))
     flagged = sh.join(
         F.broadcast(index), ["pfx", "sh"], "left_semi"
-    ).select(id_col, "pos")
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    ).select("doc_id", "pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     w_run = w_doc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     marked = flagged.withColumn(
         "_ni",
         F.when(F.col("pos") - F.lag("pos").over(w_doc) <= k, 0).otherwise(1),
     )
     islands = marked.withColumn("_isl", F.sum("_ni").over(w_run))
-    return islands.groupBy(id_col, "_isl").agg(
+    return islands.groupBy("doc_id", "_isl").agg(
         F.min("pos").cast("int").alias("span_start"),
         (F.max("pos") + F.lit(k - 1)).cast("int").alias("span_end"),
         (F.max("pos") - F.min("pos") + F.lit(k)).cast("int").alias("n_tokens"),

@@ -62,9 +62,7 @@ def _token_positions(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).withColumn("pos", F.col("pos").cast("int"))
 
 
-def suffix_ranks(
-    df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[list[DataFrame], DataFrame]:
+def suffix_ranks(df: DataFrame) -> tuple[list[DataFrame], DataFrame]:
     """Prefix-doubling rank tables.
 
     Returns ``(tables, final)``: ``tables[t]`` is (id, pos, rank) where
@@ -73,7 +71,7 @@ def suffix_ranks(
     up to ties between textually identical suffixes. Every table is
     lineage-truncated (reused by the LCP descend).
     """
-    tok = materialize(_token_positions(df, id_col, text_col))
+    tok = materialize(_token_positions(df, "doc_id", "text"))
     vocab, _ = with_global_row_number(
         tok.select("tok").distinct(), [F.col("tok")], rn_col="_r"
     )
@@ -204,21 +202,15 @@ def _adjacent_lcp(tables: list[DataFrame], final: DataFrame) -> DataFrame:
     )
 
 
-def suffix_spans_exact(
-    df: DataFrame,
-    *,
-    min_len: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def suffix_spans_exact(df: DataFrame, *, min_len: int = 8) -> DataFrame:
     """Maximal duplicated token spans of >= ``min_len`` tokens, computed
     from the suffix array + adjacent LCP — no hashes anywhere.
 
-    Output: (id_col, span_start int, span_end int, n_tokens int), the
+    Output: (doc_id, span_start int, span_end int, n_tokens int), the
     same contract as ``duplicated_substring_spans`` — identical output on
     any corpus where md5 is collision-free, which the audit query gates.
     """
-    tables, final = suffix_ranks(df, id_col=id_col, text_col=text_col)
+    tables, final = suffix_ranks(df)
     lcp = _adjacent_lcp(tables, final)
     # longest repeated prefix per position = max LCP with either neighbor
     lrp = (
@@ -257,7 +249,7 @@ def suffix_spans_exact(
             (F.max("end") - F.min("pos") + 1).cast("int").alias("n_tokens"),
         )
         .drop("_isl")
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 

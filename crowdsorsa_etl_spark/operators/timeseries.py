@@ -38,8 +38,6 @@ def ewma(
     order_cols: list[str] | None = None,
     alpha: float = 0.5,
     span: int = 10,
-    out_col: str = "ewma",
-    ndigits: int = 6,
 ) -> DataFrame:
     """Append a bounded-span EWMA column over each key's ordered stream.
 
@@ -71,5 +69,5 @@ def ewma(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    out: Column = F.round(num / den, ndigits)
-    return df.withColumn(out_col, out)
+    out: Column = F.round(num / den, 6)
+    return df.withColumn("ewma", out)

@@ -58,12 +58,10 @@ ENUM_MAX_LEN = 12  # oracle enumerates 2^(L-1) masks; 2^11 = 2048 tops
 _UNAT = 1_000_000
 
 
-def word_counts(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(w, cnt): corpus word-occurrence counts over normalized text."""
     toks = docs.select(
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("w")
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
     ).filter(F.length("w") > 0)
     return toks.groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
 
@@ -71,13 +69,10 @@ def word_counts(
 def unigram_seed_vocab(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
     min_count: int = MIN_COUNT,
     wc: DataFrame | None = None,
 ) -> DataFrame:
-    """(piece, cnt): every substring of length ≤ ``max_piece_len`` of any
+    """(piece, cnt): every substring of length ≤ ``MAX_PIECE_LEN`` of any
     corpus word, weighted by word occurrences × OVERLAPPING in-word
     occurrences; pruned to ``cnt >= min_count`` EXCEPT single characters,
     which always survive (segmentation must stay feasible for every corpus
@@ -88,7 +83,7 @@ def unigram_seed_vocab(
     across the seed pass and every EM round — the corpus is scanned
     exactly once per train call)."""
     if wc is None:
-        wc = word_counts(docs, text_col=text_col, id_col=id_col)
+        wc = word_counts(docs)
     w = F.col("w")
     # all (start, len) windows as an array of substrings, via HOFs
     starts = F.sequence(F.lit(1), F.length(w))
@@ -97,7 +92,7 @@ def unigram_seed_vocab(
             starts,
             lambda i: F.filter(
                 F.transform(
-                    F.sequence(F.lit(1), F.lit(int(max_piece_len))),
+                    F.sequence(F.lit(1), F.lit(MAX_PIECE_LEN)),
                     lambda l: F.when(
                         i + l <= F.length(w) + 1, w.substr(i, l)
                     ),
@@ -124,7 +119,7 @@ def piece_costs(vocab_rows: list) -> dict[str, int]:
 
 
 def viterbi_segment_word(
-    word: str, costs: dict[str, int], max_piece_len: int = MAX_PIECE_LEN
+    word: str, costs: dict[str, int]
 ) -> tuple[int, int, int, list[str]] | None:
     """Tuple-min Viterbi for one word: returns (cost_unats, n_pieces,
     boundary_mask, pieces) or None if no feasible segmentation exists.
@@ -134,7 +129,7 @@ def viterbi_segment_word(
     best: list = [INF] * (L + 1)
     best[0] = (0, 0, 0, [])
     for pos in range(1, L + 1):
-        for plen in range(1, min(max_piece_len, pos) + 1):
+        for plen in range(1, min(MAX_PIECE_LEN, pos) + 1):
             s = pos - plen  # 0-indexed piece start
             prev = best[s]
             if prev[3] is None:
@@ -151,12 +146,7 @@ def viterbi_segment_word(
     return None if got[3] is None else got
 
 
-def segment_words(
-    words: DataFrame,
-    costs: dict[str, int],
-    *,
-    max_piece_len: int = MAX_PIECE_LEN,
-) -> DataFrame:
+def segment_words(words: DataFrame, costs: dict[str, int]) -> DataFrame:
     """(w, seg, n_pieces, cost_unats): Viterbi segmentation of each
     distinct word; ``seg`` is the piece stream joined by spaces.
     Infeasible words (impossible when the vocab keeps all corpus chars)
@@ -168,7 +158,7 @@ def segment_words(
         for pdf in batches:
             ws, segs, nps, cs = [], [], [], []
             for w in pdf["w"]:
-                got = viterbi_segment_word(w, costs, max_piece_len)
+                got = viterbi_segment_word(w, costs)
                 if got is None:
                     continue
                 ws.append(w)
@@ -184,30 +174,19 @@ def segment_words(
     )
 
 
-def unigram_tokenize(
-    docs: DataFrame,
-    costs: dict[str, int],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
-    enum_max_len: int | None = ENUM_MAX_LEN,
-) -> DataFrame:
+def unigram_tokenize(docs: DataFrame, costs: dict[str, int]) -> DataFrame:
     """(doc_id, n_pieces, stream_md5): per-doc Viterbi piece stream in
-    word order, fingerprinted like ``bpe_encode``. ``enum_max_len``
+    word order, fingerprinted like ``bpe_encode``. ``ENUM_MAX_LEN``
     filters words to the oracle's enumeration bound on BOTH engines (a
-    no-op on the fixtures); pass None to lift it."""
+    no-op on the fixtures)."""
     wtoks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(normalize_text(F.col("text")), " ")).alias(
             "pos", "w"
         ),
     ).filter(F.length("w") > 0)
-    if enum_max_len is not None:
-        wtoks = wtoks.filter(F.length("w") <= enum_max_len)
-    segs = segment_words(
-        wtoks.select("w").distinct(), costs, max_piece_len=max_piece_len
-    )
+    wtoks = wtoks.filter(F.length("w") <= ENUM_MAX_LEN)
+    segs = segment_words(wtoks.select("w").distinct(), costs)
     joined = wtoks.join(segs, "w")
     ordered = F.transform(
         F.array_sort(
@@ -225,10 +204,6 @@ def unigram_em_counts(
     docs: DataFrame,
     costs: dict[str, int],
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
-    enum_max_len: int | None = ENUM_MAX_LEN,
     wc: DataFrame | None = None,
 ) -> DataFrame:
     """(piece, new_cnt): hard-EM count re-estimation — each corpus word
@@ -240,18 +215,14 @@ def unigram_em_counts(
     the (w, cnt) rows are identical either way."""
     if wc is None:
         wtoks = docs.select(
-            F.explode(
-                F.split(normalize_text(F.col(text_col)), " ")
-            ).alias("w")
-        ).filter(F.length("w") > 0)
-        if enum_max_len is not None:
-            wtoks = wtoks.filter(F.length("w") <= enum_max_len)
+            F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w")
+        ).filter((F.length("w") > 0) & (F.length("w") <= ENUM_MAX_LEN))
         wc = wtoks.groupBy("w").agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")
         )
-    elif enum_max_len is not None:
-        wc = wc.filter(F.length("w") <= enum_max_len)
-    segs = segment_words(wc.select("w"), costs, max_piece_len=max_piece_len)
+    else:
+        wc = wc.filter(F.length("w") <= ENUM_MAX_LEN)
+    segs = segment_words(wc.select("w"), costs)
     pieces = wc.join(segs, "w").select(
         F.explode(F.split("seg", " ")).alias("piece"), "cnt"
     )
@@ -265,17 +236,11 @@ def unigram_em_counts(
 # ---------------------------------------------------------------------------
 
 
-def _vocab_ctes(
-    *,
-    norm_sql: str,
-    table: str = "documents",
-    max_piece_len: int = MAX_PIECE_LEN,
-    min_count: int = MIN_COUNT,
-) -> str:
+def _vocab_ctes(*, norm_sql: str) -> str:
     """CTE chain: words → wcnt → vocab (piece, cnt) → tot → costs."""
     return f"""
     wtoks AS (
-      SELECT unnest(string_split({norm_sql}, ' ')) AS w FROM {table}
+      SELECT unnest(string_split({norm_sql}, ' ')) AS w FROM documents
     ),
     wcnt AS (
       SELECT w, CAST(count(*) AS BIGINT) AS cnt
@@ -287,11 +252,11 @@ def _vocab_ctes(
         SELECT substr(w, i, l) AS piece, cnt
         FROM wcnt,
              UNNEST(range(1, len(w) + 1)) AS a(i),
-             UNNEST(range(1, {max_piece_len} + 1)) AS b(l)
+             UNNEST(range(1, {MAX_PIECE_LEN} + 1)) AS b(l)
         WHERE i + l <= len(w) + 1
       )
       GROUP BY piece
-      HAVING sum(cnt) >= {min_count} OR len(piece) = 1
+      HAVING sum(cnt) >= {MIN_COUNT} OR len(piece) = 1
     ),
     tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM vocab),
     costs AS (
@@ -303,15 +268,13 @@ def _vocab_ctes(
     """
 
 
-def _best_seg_ctes(
-    *, enum_max_len: int = ENUM_MAX_LEN
-) -> str:
+def _best_seg_ctes() -> str:
     """CTE chain (appends after _vocab_ctes): enumerate every boundary
     mask of every distinct word, score feasible segmentations with the
     integer costs, pick the tuple-min. Produces ``best`` (w, m, cost,
     n_pieces) and ``best_pieces`` (w, s, piece) for downstream use."""
     return f"""
-    dw AS (SELECT DISTINCT w FROM wcnt WHERE len(w) <= {enum_max_len}),
+    dw AS (SELECT DISTINCT w FROM wcnt WHERE len(w) <= {ENUM_MAX_LEN}),
     masks AS (
       SELECT w, m
       FROM dw,
@@ -359,21 +322,21 @@ def _best_seg_ctes(
     """
 
 
-def unigram_vocab_sql(*, norm_sql: str, table: str = "documents") -> str:
+def unigram_vocab_sql(*, norm_sql: str) -> str:
     return f"""
-    WITH {_vocab_ctes(norm_sql=norm_sql, table=table)}
+    WITH {_vocab_ctes(norm_sql=norm_sql)}
     SELECT piece, cnt FROM vocab
     """
 
 
-def unigram_tokenize_sql(*, norm_sql: str, table: str = "documents") -> str:
+def unigram_tokenize_sql(*, norm_sql: str) -> str:
     return f"""
-    WITH {_vocab_ctes(norm_sql=norm_sql, table=table)},
+    WITH {_vocab_ctes(norm_sql=norm_sql)},
     {_best_seg_ctes()},
     dwords AS (
       SELECT doc_id, generate_subscripts(arr, 1) AS pos, unnest(arr) AS w
       FROM (SELECT doc_id, string_split({norm_sql}, ' ') AS arr
-            FROM {table})
+            FROM documents)
     ),
     dvalid AS (
       SELECT doc_id, pos, w FROM dwords
@@ -386,9 +349,9 @@ def unigram_tokenize_sql(*, norm_sql: str, table: str = "documents") -> str:
     """
 
 
-def unigram_em_sql(*, norm_sql: str, table: str = "documents") -> str:
+def unigram_em_sql(*, norm_sql: str) -> str:
     return f"""
-    WITH {_vocab_ctes(norm_sql=norm_sql, table=table)},
+    WITH {_vocab_ctes(norm_sql=norm_sql)},
     {_best_seg_ctes()}
     SELECT bp.piece, CAST(sum(wcnt.cnt) AS BIGINT) AS new_cnt
     FROM best_pieces bp
@@ -397,15 +360,7 @@ def unigram_em_sql(*, norm_sql: str, table: str = "documents") -> str:
     """
 
 
-def unigram_token_ids(
-    docs: DataFrame,
-    costs: dict[str, int],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
-    enum_max_len: int | None = ENUM_MAX_LEN,
-) -> DataFrame:
+def unigram_token_ids(docs: DataFrame, costs: dict[str, int]) -> DataFrame:
     """(doc_id, n_tokens, ids_md5): REAL token ids for the unigram
     tokenizer — piece ids are ranks in piece-sorted vocab order (the
     deterministic id assignment a shipped tokenizer.json would pin), the
@@ -414,16 +369,13 @@ def unigram_token_ids(
     expression — JVM-side, no second Python stage."""
     ids = {p: i for i, p in enumerate(sorted(costs))}
     wtoks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(normalize_text(F.col("text")), " ")).alias(
             "pos", "w"
         ),
     ).filter(F.length("w") > 0)
-    if enum_max_len is not None:
-        wtoks = wtoks.filter(F.length("w") <= enum_max_len)
-    segs = segment_words(
-        wtoks.select("w").distinct(), costs, max_piece_len=max_piece_len
-    )
+    wtoks = wtoks.filter(F.length("w") <= ENUM_MAX_LEN)
+    segs = segment_words(wtoks.select("w").distinct(), costs)
     id_map = F.create_map(
         *[F.lit(x) for p, i in sorted(ids.items()) for x in (p, i)]
     )
@@ -444,9 +396,9 @@ def unigram_token_ids(
     )
 
 
-def unigram_token_ids_sql(*, norm_sql: str, table: str = "documents") -> str:
+def unigram_token_ids_sql(*, norm_sql: str) -> str:
     return f"""
-    WITH {_vocab_ctes(norm_sql=norm_sql, table=table)},
+    WITH {_vocab_ctes(norm_sql=norm_sql)},
     {_best_seg_ctes()},
     vids AS (
       SELECT piece,
@@ -464,7 +416,7 @@ def unigram_token_ids_sql(*, norm_sql: str, table: str = "documents") -> str:
     dwords AS (
       SELECT doc_id, generate_subscripts(arr, 1) AS pos, unnest(arr) AS w
       FROM (SELECT doc_id, string_split({norm_sql}, ' ') AS arr
-            FROM {table})
+            FROM documents)
     ),
     dvalid AS (
       SELECT doc_id, pos, w FROM dwords
@@ -487,11 +439,6 @@ def unigram_train(
     *,
     n_rounds: int = 3,
     prune_alpha: float = 0.25,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_piece_len: int = MAX_PIECE_LEN,
-    min_count: int = MIN_COUNT,
-    enum_max_len: int | None = ENUM_MAX_LEN,
 ) -> DataFrame:
     """SentencePiece's training loop (Kudo 2018 §3.2), not just one step:
     seed vocabulary → repeat ``n_rounds`` times [E-step: Viterbi-segment
@@ -526,15 +473,11 @@ def unigram_train(
     if not (0.0 <= prune_alpha < 1.0):
         raise ValueError(f"prune_alpha must be in [0, 1), got {prune_alpha}")
     spark = docs.sparkSession
-    wc = materialize(word_counts(docs, text_col=text_col, id_col=id_col))
+    wc = materialize(word_counts(docs))
     vocab = {
         r["piece"]: r["cnt"]
         for r in unigram_seed_vocab(
             docs,
-            text_col=text_col,
-            id_col=id_col,
-            max_piece_len=max_piece_len,
-            min_count=min_count,
             wc=wc,
         ).collect()
     }
@@ -548,10 +491,6 @@ def unigram_train(
             for r in unigram_em_counts(
                 docs,
                 costs,
-                text_col=text_col,
-                id_col=id_col,
-                max_piece_len=max_piece_len,
-                enum_max_len=enum_max_len,
                 wc=wc,
             ).collect()
         }
@@ -625,7 +564,6 @@ def _train_round_ctes(r: int, *, prune_alpha: float) -> str:
 def unigram_train_sql(
     *,
     norm_sql: str,
-    table: str = "documents",
     n_rounds: int = 3,
     prune_alpha: float = 0.25,
 ) -> str:
@@ -661,7 +599,7 @@ def unigram_train_sql(
         for r in range(1, n_rounds + 1)
     )
     return f"""
-    WITH {_vocab_ctes(norm_sql=norm_sql, table=table)},
+    WITH {_vocab_ctes(norm_sql=norm_sql)},
     {enum}
     {rounds}
     SELECT piece, cnt FROM vocab{n_rounds}

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
 
+_N_STEPS = 12
+
 __all__ = [
     "wordpiece_learn",
     "wordpiece_vocab",
@@ -97,7 +99,6 @@ def _capped_reps(
 def wordpiece_learn(
     df: DataFrame,
     *,
-    text_col: str = "text",
     n_merges: int = 32,
     max_vocab_words: int | None = None,
     max_driver_words: int = 2_000_000,
@@ -116,7 +117,7 @@ def wordpiece_learn(
     if max_vocab_words is not None and max_vocab_words < 1:
         raise ValueError(f"max_vocab_words must be >= 1, got {max_vocab_words}")
     spark = df.sparkSession
-    reps_df = _capped_reps(_word_dict(df, text_col), max_vocab_words)
+    reps_df = _capped_reps(_word_dict(df, "text"), max_vocab_words)
     if max_vocab_words is None:
         n_dict = reps_df.count()
         if n_dict > max_driver_words:
@@ -174,12 +175,7 @@ def wordpiece_learn(
     )
 
 
-def wordpiece_vocab(
-    df: DataFrame,
-    merges: DataFrame,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
+def wordpiece_vocab(df: DataFrame, merges: DataFrame) -> DataFrame:
     """The inference vocabulary: every single-character symbol the corpus
     can produce (bare word-initial form AND '##' continuation form) plus
     every merged token, distinct. Output: (tok string).
@@ -194,9 +190,7 @@ def wordpiece_vocab(
             F.explode(
                 F.split(
                     F.regexp_replace(
-                        F.regexp_replace(
-                            _norm(F.col(text_col)), " ", ""
-                        ),
+                        F.regexp_replace(_norm(F.col("text")), " ", ""),
                         "(.)",
                         "$1 ",
                     ),
@@ -275,13 +269,7 @@ def wordpiece_encode_words(
     )
 
 
-def wordpiece_token_ids(
-    df: DataFrame,
-    merges: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def wordpiece_token_ids(df: DataFrame, merges: DataFrame) -> DataFrame:
     """Encode every document to WordPiece token ids — the training-export
     column, mirroring ``bpe.bpe_encode_ids``. Vocabulary ids are the
     sorted-token dense numbering over :func:`wordpiece_vocab` plus
@@ -295,13 +283,13 @@ def wordpiece_token_ids(
     stream itself is never exploded piece-by-piece Spark-side: each word
     carries its comma-joined id string.
 
-    Output: (id_col, n_tokens bigint, ids_md5 string) — md5 of the
+    Output: (doc_id, n_tokens bigint, ids_md5 string) — md5 of the
     comma-joined id stream in document order; an out-of-vocabulary piece
     (impossible when the vocab came from this corpus) poisons the md5
     loudly via a sentinel, the bpe_encode_ids discipline.
     """
-    vocab_df = wordpiece_vocab(df, merges, text_col=text_col)
-    enc = wordpiece_encode_words(df, vocab_df, text_col=text_col)
+    vocab_df = wordpiece_vocab(df, merges)
+    enc = wordpiece_encode_words(df, vocab_df)
     toks = sorted(
         {r["tok"] for r in vocab_df.collect()} | {UNK}
     )
@@ -325,12 +313,10 @@ def wordpiece_token_ids(
     # small-fixture scan is one split — widen first (no-op at cluster
     # scale; r16: this stage ran 2.3 s on one task)
     docw = (
-        cpu_fanout(df.select(F.col(id_col), F.col(text_col)))
+        cpu_fanout(df.select(F.col("doc_id"), F.col("text")))
         .select(
-            F.col(id_col),
-            F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias(
-                "pos", "w"
-            ),
+            F.col("doc_id"),
+            F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "w"),
         )
         .filter(F.length("w") > 0)
         .join(enc_ids, F.col("w") == F.col("_w"))
@@ -339,7 +325,7 @@ def wordpiece_token_ids(
         F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("_wids")))),
         lambda x: x["_wids"],
     )
-    return docw.groupBy(id_col).agg(
+    return docw.groupBy("doc_id").agg(
         F.sum("_n").cast("bigint").alias("n_tokens"),
         F.md5(F.concat_ws(",", ordered)).alias("ids_md5"),
     )
@@ -461,13 +447,12 @@ def wordpiece_encode_sql(
     n_merges: int = 32,
     *,
     max_vocab_words: int | None = None,
-    n_steps: int = 12,
 ) -> str:
     """DuckDB oracle for :func:`wordpiece_encode_words` over the vocab of
     :func:`wordpiece_vocab`: the learn CTEs build the merge list, the
     alphabet CTE mirrors the corpus-wide distinct chars, and the greedy
-    longest-match loop is unrolled ``n_steps`` times (each step consumes
-    >= 1 character, so n_steps bounds the encodable word length; the
+    longest-match loop is unrolled 12 times (each step consumes
+    >= 1 character, so the step count bounds the encodable word length; the
     fixture maximum is 8).
 
     State per word: (word, cnt, toks VARCHAR accumulator, rest). A step
@@ -479,7 +464,7 @@ def wordpiece_encode_sql(
     are the same token.
     """
     ctes, final = _encode_ctes(
-        n_merges, max_vocab_words=max_vocab_words, n_steps=n_steps
+        n_merges, max_vocab_words=max_vocab_words, n_steps=_N_STEPS
     )
     return (
         "WITH "
@@ -591,7 +576,6 @@ def wordpiece_token_ids_sql(
     n_merges: int = 32,
     *,
     max_vocab_words: int | None = None,
-    n_steps: int = 12,
 ) -> str:
     """DuckDB oracle for :func:`wordpiece_token_ids`: the full greedy-
     encode chain per unique word, a (token -> id) table over the sorted
@@ -599,7 +583,7 @@ def wordpiece_token_ids_sql(
     order, and md5 of the comma-joined id stream per document — the same
     gate shape as the BPE token-id oracle (bpe_token_ids_sql)."""
     ctes, final = _encode_ctes(
-        n_merges, max_vocab_words=max_vocab_words, n_steps=n_steps
+        n_merges, max_vocab_words=max_vocab_words, n_steps=_N_STEPS
     )
     ctes = ctes + [
         f"""vocabid AS (
@@ -649,9 +633,6 @@ def wordpiece_oov_sql(
     n_merges: int = 32,
     *,
     max_vocab_words: int | None = None,
-    n_steps: int = 12,
-    probe_table: str = "part",
-    probe_text: str = "p_name",
 ) -> str:
     """DuckDB oracle for the WordPiece coverage probe: the documents-
     learned vocabulary encodes the PROBE table's word dictionary, and one
@@ -661,9 +642,9 @@ def wordpiece_oov_sql(
     ctes, final = _encode_ctes(
         n_merges,
         max_vocab_words=max_vocab_words,
-        n_steps=n_steps,
-        probe_table=probe_table,
-        probe_text=probe_text,
+        n_steps=_N_STEPS,
+        probe_table="part",
+        probe_text="p_name",
     )
     return (
         "WITH "

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_BITS = 16
+
 
 def _bits_for(n: int, bits: int | None) -> int:
     if bits is None:
@@ -69,14 +71,14 @@ def z_value_n_sql(exprs: Sequence[str], bits: int | None = None) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def z_value(x: Column, y: Column, bits: int = 16) -> Column:
+def z_value(x: Column, y: Column) -> Column:
     """2-key form (x even bit positions, y odd) — kept as the common case;
     delegates to :func:`z_value_n`."""
-    return z_value_n([x, y], bits)
+    return z_value_n([x, y], _BITS)
 
 
-def z_value_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
-    return z_value_n_sql([x_expr, y_expr], bits)
+def z_value_sql(x_expr: str, y_expr: str) -> str:
+    return z_value_n_sql([x_expr, y_expr], _BITS)
 
 
 def zorder_write(

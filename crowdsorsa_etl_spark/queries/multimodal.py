@@ -804,7 +804,7 @@ _CI_MAXDOC = 200  # image tier budget (decode cost), same as the image packs
 _CI_HAMMING = 7  # pigeonhole-sound for 8 bands
 
 
-def _ci_img_key_sql(col: str = "doc_id") -> str:
+def _ci_img_key_sql() -> str:
     # 64 bytes (two md5s), digits -> spaces: the rendered "image" fills all
     # 64 aHash samples with group-dependent letter/space structure, so the
     # mean-thresholded bits genuinely differ across groups (measured 18-46
@@ -813,7 +813,7 @@ def _ci_img_key_sql(col: str = "doc_id") -> str:
     # drags the 64-sample mean below every real byte, every hash becomes
     # the same ones-then-zeros pattern, and ALL C(200,2) pairs "match"
     # (measured, rejected twice: bare 'img-N' and single-md5 keys).
-    grp = f"'img-' || CAST({col} % {_CI_GROUPS} AS VARCHAR)"
+    grp = f"'img-' || CAST(doc_id % {_CI_GROUPS} AS VARCHAR)"
     return (
         f"regexp_replace(md5({grp}) || md5({grp} || 'x'), "
         "'[0-9]', ' ', 'g')"

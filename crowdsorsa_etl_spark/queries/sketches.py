@@ -9,10 +9,12 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark import lsh_oracles
 from crowdsorsa_etl_spark.functions.portable_hash import hex60_spark, hex60_sql
-from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.functions.text import (
+    normalize_text,
+    normalized_tokens,
+)
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 from crowdsorsa_etl_spark.operators.cmsketch import (
-    _tokens,
     count_min_estimate,
     count_min_sketch,
 )
@@ -234,7 +236,7 @@ def q92_countmin_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     sketch = materialize(count_min_sketch(docs))
     exact = (
-        _tokens(docs, "text")
+        normalized_tokens(docs, "text")
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("exact_cnt"))
         .orderBy(F.col("exact_cnt").desc(), "token")
@@ -905,7 +907,7 @@ def llm_hll_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming/pipeline.start_kll_stream does per micro-batch epoch. The
 # oracle replays every batch sketch from row_number() arithmetic AND the
 # two merges from the same complete-block even-keep recurrence
-# (kll_merge_sql), so the hash gate pins the exact carried-state cells a
+# (kll_merge_sql_parts), so the hash gate pins the exact carried-state cells a
 # stream would hold after epoch 3 — not an estimate. NOTE: merged cells
 # are deliberately NOT the one-shot sketch of the union (KLL merge
 # preserves the rank-error bound, not the cell set — unlike HLL's

@@ -21,8 +21,7 @@ Engine design:
 * idempotency: an optional pre-push dedup on ``documentId`` (the reference
   blindly re-POSTs everything each run).
 
-Transport is stdlib ``urllib`` (requests isn't in the image); everything is
-import-guarded so the module also serves as the interface spec.
+Transport is stdlib ``urllib`` (requests isn't in the image).
 """
 
 from __future__ import annotations
@@ -40,6 +39,13 @@ from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.config import SinkConfig
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
+from crowdsorsa_etl_spark.sinks.ledger import (
+    compact_ledger,
+    epoch_ledger_rows,
+    key_prefix,
+    read_ledger_keys,
+    settled_batch_slice,
+)
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -86,43 +92,32 @@ def _redact(text: str | None, token: str) -> str | None:
     return text.replace(token, "")
 
 
-def _post_one(
-    url: str, body: bytes, timeout: float, opener=None
-) -> tuple[int, str]:
+def _post_one(url: str, body: bytes, timeout: float) -> tuple[int, str]:
     req = urllib.request.Request(
         url, data=body, headers={"Content-Type": "application/json"}, method="POST"
     )
-    open_fn = opener or urllib.request.urlopen
-    with open_fn(req, timeout=timeout) as resp:  # noqa: S310 (url from config)
+    with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310 (url from config)
         return resp.status, resp.read().decode("utf-8", "replace")
 
 
-def push_partition(
-    rows: Iterator[Row],
-    cfg: SinkConfig,
-    *,
-    key_col: str = "obs_id",
-    json_col: str = "document_json",
-    opener=None,
-    clock=time.time,
-) -> Iterator[tuple]:
+def push_partition(rows: Iterator[Row], cfg: SinkConfig) -> Iterator[tuple]:
     """Push one partition's documents; yield one audit tuple per document.
 
     Runs on executors inside mapPartitions — no driver involvement, no
-    collect. ``opener``/``clock`` are injection points for tests.
+    collect.
     """
     bucket = _TokenBucket(cfg.docs_per_second_per_partition)
     url = f"{cfg.api_url.rstrip('/')}/v0/warehouse/push?access_token={cfg.access_token}"
 
     for row in rows:
-        doc_key = row[key_col]
-        body = row[json_col].encode("utf-8")
+        doc_key = row["obs_id"]
+        body = row["document_json"].encode("utf-8")
         status, err, response, attempts = -1, None, None, 0
         for attempt in range(1, cfg.max_retries + 1):
             attempts = attempt
             bucket.acquire()
             try:
-                status, response = _post_one(url, body, cfg.timeout_s, opener)
+                status, response = _post_one(url, body, cfg.timeout_s)
                 err = None
             except urllib.error.HTTPError as exc:  # non-2xx with a response
                 status = exc.code
@@ -145,7 +140,7 @@ def push_partition(
             attempts,
             _redact(err, cfg.access_token),
             _redact(response, cfg.access_token),
-            time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(clock())),
+            time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime(time.time())),
         )
 
 
@@ -153,8 +148,6 @@ def push_documents(
     docs: DataFrame,
     cfg: SinkConfig,
     *,
-    key_col: str = "obs_id",
-    json_col: str = "document_json",
     dedup: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -166,14 +159,14 @@ def push_documents(
     ``num_partitions`` controls parallelism and therefore the global rate:
     global docs/s = cfg.docs_per_second_per_partition × partitions.
     """
-    selected = docs.select(key_col, json_col)
+    selected = docs.select("obs_id", "document_json")
     if dedup:
-        selected = selected.dropDuplicates([key_col])
+        selected = selected.dropDuplicates(["obs_id"])
     if num_partitions is not None:
         selected = selected.repartition(num_partitions)
 
     def run(it: Iterator[Row]) -> Iterator[tuple]:
-        return push_partition(it, cfg, key_col=key_col, json_col=json_col)
+        return push_partition(it, cfg)
 
     return selected.rdd.mapPartitions(run).toDF(AUDIT_SCHEMA)
 
@@ -184,9 +177,6 @@ def push_documents_idempotent(
     *,
     ledger_dir: str,
     epoch_id: int,
-    key_col: str = "obs_id",
-    json_col: str = "document_json",
-    num_partitions: int | None = None,
     compact_every: int | None = None,
 ) -> DataFrame:
     """Exactly-once-per-documentId push across STREAM RESTARTS.
@@ -228,55 +218,44 @@ def push_documents_idempotent(
     prefix-partitioned base every N epochs so the scan itself stops
     growing with the number of elapsed epochs.
     """
-    from crowdsorsa_etl_spark.sinks.ledger import (
-        compact_ledger,
-        epoch_ledger_rows,
-        key_prefix,
-        read_ledger_keys,
-        settled_batch_slice,
-    )
-
     spark = batch_df.sparkSession
-    batch = batch_df.select(key_col, json_col)
+    batch = batch_df.select("obs_id", "document_json")
     # ≤256 distinct md5-derived prefixes — a bounded driver-side collect
     # that buys directory-level pruning of the compacted ledger base
     prefixes = [
-        r[0] for r in batch.select(key_prefix(key_col)).distinct().collect()
+        r[0] for r in batch.select(key_prefix("obs_id")).distinct().collect()
     ]
     # missing ledger = first epoch; any OTHER read failure propagates
     # (silently treating it as first-epoch would re-POST every document)
     seen = read_ledger_keys(
         spark,
         ledger_dir,
-        [key_col, "ok", "status_code"],
+        ["obs_id", "ok", "status_code"],
         key_prefixes=prefixes,
     )
-    settled_prior = settled_batch_slice(seen, batch, key_col)
+    settled_prior = settled_batch_slice(seen, batch, "obs_id")
     fresh = batch
     if settled_prior is not None:
         settled_prior = materialize(settled_prior)  # batch-bounded
         fresh = batch.join(
-            F.broadcast(settled_prior.select(key_col)), key_col, "left_anti"
+            F.broadcast(settled_prior.select("obs_id")), "obs_id", "left_anti"
         )
     audit = materialize(push_documents(
         fresh,
         cfg,
-        key_col=key_col,
-        json_col=json_col,
         dedup=True,
-        num_partitions=num_partitions,
     ))  # materialize: the POSTs must happen exactly once
     permanent_4xx = (
         F.col("status_code").between(400, 499)
         & ~F.col("status_code").isin(sorted(TRANSIENT_4XX))
     )
     settled_now = audit.filter(F.col("ok") | permanent_4xx).select(
-        F.col("doc_key").alias(key_col), "ok", "status_code"
+        F.col("doc_key").alias("obs_id"), "ok", "status_code"
     )
     # replay safety: the epoch partition records the FULL batch key set with
     # original ok/status preserved (sinks/ledger.epoch_ledger_rows) —
     # settled_prior is already the batch-bounded slice of the history
-    ledger_rows = epoch_ledger_rows(settled_now, settled_prior, batch, key_col)
+    ledger_rows = epoch_ledger_rows(settled_now, settled_prior, batch, "obs_id")
     # cut lineage before overwriting a path the plan reads from
     (
         materialize(ledger_rows)
@@ -284,7 +263,7 @@ def push_documents_idempotent(
         .parquet(f"{ledger_dir}/epoch={epoch_id}")
     )
     if compact_every and epoch_id % compact_every == compact_every - 1:
-        compact_ledger(spark, ledger_dir, key_col=key_col)
+        compact_ledger(spark, ledger_dir, key_col="obs_id")
     return audit
 
 

@@ -35,8 +35,12 @@ cost must NOT grow with stream age. Three mechanisms keep it flat:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
 
 #: width of the key-prefix partition value in the compacted base layout
 #: (2 hex chars → 256 partitions).
@@ -158,13 +162,7 @@ def epoch_ledger_rows(
     return settled_now.unionByName(prior)
 
 
-def compact_ledger(
-    spark,
-    ledger_dir: str,
-    *,
-    key_col: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
+def compact_ledger(spark, ledger_dir: str, *, key_col: str) -> int:
     """Fold every ``epoch=*`` partition into the deduplicated base table
     (partitioned by the ``PREFIX_LEN``-hex-char key prefix ``_kp``), then
     delete the epoch partitions. Caps per-batch read cost at O(base) no
@@ -183,10 +181,6 @@ def compact_ledger(
 
     Returns the number of distinct keys in the compacted base.
     """
-    import math
-
-    from crowdsorsa_etl_spark.sinks.writers import _swap_dirs
-
     jvm_path, fs = _hadoop_fs(spark, ledger_dir)
     bpath = base_path(ledger_dir)
     jvm_bpath, _ = _hadoop_fs(spark, bpath)
@@ -211,7 +205,7 @@ def compact_ledger(
         total_bytes += fs.getContentSummary(jvm_path).getLength()
     if fs.exists(jvm_bpath):
         total_bytes += fs.getContentSummary(jvm_bpath).getLength()
-    n = max(1, math.ceil(total_bytes / target_file_bytes))
+    n = max(1, math.ceil(total_bytes / (128 * 1024 * 1024)))
 
     tmp = bpath + "__compact_tmp"
     (

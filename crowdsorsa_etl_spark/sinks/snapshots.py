@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,8 +99,6 @@ def snapshot_write(df: DataFrame, path: str) -> int:
         manifest["versions"] = sorted(set(manifest["versions"]) | {version})
         _write_manifest(path, manifest)
     except BaseException:
-        import shutil
-
         shutil.rmtree(os.path.join(path, f"v={version}"), ignore_errors=True)
         try:
             os.remove(_claim_path(path, version))
@@ -113,8 +112,6 @@ def snapshot_repair(path: str) -> list[int]:
     """Remove claims (and partial data dirs) for versions that never made it
     into the manifest — the cleanup for a writer that died mid-commit.
     Returns the version numbers whose claims were cleared."""
-    import shutil
-
     committed = set(_read_manifest(path)["versions"])
     cleared = []
     if not os.path.isdir(path):
@@ -146,8 +143,6 @@ def snapshot_vacuum(path: str, *, keep_last: int = 2) -> list[int]:
     """Drop all but the newest ``keep_last`` versions; returns removed ones.
     The manifest shrinks first, then data dirs are deleted — a reader racing
     the vacuum sees a valid (if shorter) history, never a dangling pointer."""
-    import shutil
-
     manifest = _read_manifest(path)
     versions = sorted(manifest["versions"])
     drop = versions[:-keep_last] if keep_last > 0 else versions

@@ -10,14 +10,17 @@ The reference's only file sink is a driver-side ``cat`` of pretty JSON
 * ``write_bucketed`` — bucketBy on a join key: later joins/aggs on that key
   skip their shuffle entirely (bucket-aware scan). Requires saveAsTable
   (bucket metadata lives in the catalog).
-* ``write_json_audit`` — the reference's ``logs{year}.json`` analogue,
-  partitioned, no ``coalesce(1)`` (a single-file write serializes the whole
-  job through one task at scale).
+
+The reference's ``logs{year}.json`` analogue is the push audit,
+``http_push.write_audit_log``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 
 def write_partitioned(
@@ -25,12 +28,9 @@ def write_partitioned(
     path: str,
     *,
     partition_by: list[str],
-    mode: str = "overwrite",
-    max_records_per_file: int = 5_000_000,
 ) -> None:
     (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
+        df.write.mode("overwrite").option("maxRecordsPerFile", 5_000_000)
         .partitionBy(*partition_by)
         .parquet(path)
     )
@@ -43,16 +43,11 @@ def write_bucketed(
     bucket_by: list[str],
     num_buckets: int = 32,
     sort_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.format("parquet").saveAsTable(table)
-
-
-def write_json_audit(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 def epoch_parquet_writer(path: str):
@@ -117,7 +112,6 @@ def compact_parquet(
     path: str,
     *,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: list[str] | None = None,
 ) -> int:
     """Small-files compaction — the operational fix for the classic 100 TB
     failure mode where streaming/incremental writes leave thousands of tiny
@@ -128,8 +122,6 @@ def compact_parquet(
     and swaps via write-to-temp + rename-aside (see ``_swap_dirs`` for the
     crash-window guarantees). Returns the new file-ish partition count.
     """
-    import math
-
     jvm = spark._jvm
     jsc = spark._jsc
     hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
@@ -139,10 +131,7 @@ def compact_parquet(
 
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compact_tmp"
-    writer = df.repartition(n).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    df.repartition(n).write.mode("overwrite").parquet(tmp)
 
     _swap_dirs(jvm, fs, path, tmp)
     return n
@@ -167,9 +156,6 @@ def upsert_parquet(
     MERGE (Delta/Iceberg slot in above this same parquet layout); this is
     the dependency-free batch-cadence version.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
     fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -141,7 +141,6 @@ def read_evolved(
     *,
     rename_map: dict[str, str] | None = None,
     merge_schema: bool = True,
-    on_extra: str = "drop",
 ) -> DataFrame:
     """Read a (possibly mixed-schema) parquet directory and conform it.
 
@@ -154,7 +153,7 @@ def read_evolved(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(path)
-    return conform(df, target, rename_map=rename_map, on_extra=on_extra)
+    return conform(df, target, rename_map=rename_map)
 
 
 # ---------------------------------------------------------------------------

@@ -30,8 +30,6 @@ import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from crowdsorsa_etl_spark.functions.geo import polygons_to_wkb
-
 Ring = list[tuple[float, float]]
 
 
@@ -57,28 +55,9 @@ def _group_rings(rings: list[Ring]) -> list[list[Ring]]:
     return polys
 
 
-def _wkb_point(x: float, y: float) -> bytes:
-    return struct.pack("<BIdd", 1, 1, x, y)
-
-
-def _wkb_multipoint(points: list[tuple[float, float]]) -> bytes:
-    return struct.pack("<BII", 1, 4, len(points)) + b"".join(
-        _wkb_point(x, y) for x, y in points
-    )
-
-
-def _wkb_multilinestring(lines: list[Ring]) -> bytes:
-    parts = [struct.pack("<BII", 1, 5, len(lines))]
-    for line in lines:
-        parts.append(struct.pack("<BII", 1, 2, len(line)))
-        parts.extend(struct.pack("<dd", x, y) for x, y in line)
-    return b"".join(parts)
-
-
-# --- Z/M-preserving WKB writers (ISO type offsets: +1000 Z, +2000 M) ------
-# Used only under parse_shp(preserve_zm=True); the 2-D path keeps the
-# writers above (and functions/geo.polygons_to_wkb) byte-for-byte so the
-# season-pipeline oracles never move.
+# --- WKB writers (ISO type offsets: +1000 Z, +2000 M) ---------------------
+# With has_z = has_m = False they emit plain 2-D WKB, byte for byte what
+# functions/geo.polygons_to_wkb writes.
 
 _M_NODATA = -1e38  # spec: M < -10^38 means "no data"
 
@@ -206,22 +185,19 @@ def parse_shp(buf: bytes, *, preserve_zm: bool = False) -> list[bytes | None]:
             out.append(None)
         elif shape_type in (1, 11, 21):
             x, y = struct.unpack_from("<dd", buf, pos + 4)
+            z_vals = m_vals = None
             if preserve_zm and shape_type == 11:
-                (z,) = struct.unpack_from("<d", buf, pos + 20)
-                has_m = pos + 36 <= rec_end
-                m = struct.unpack_from("<d", buf, pos + 28)[0] if has_m else None
-                if has_m and m < _M_NODATA:
-                    has_m, m = False, None
-                p = (x, y, z) + ((m,) if has_m else ())
-                out.append(_wkb_point_zm(p, True, has_m))
+                z_vals = [struct.unpack_from("<d", buf, pos + 20)[0]]
+                if pos + 36 <= rec_end:
+                    m_vals = [struct.unpack_from("<d", buf, pos + 28)[0]]
             elif preserve_zm and shape_type == 21:
-                (m,) = struct.unpack_from("<d", buf, pos + 20)
-                if m < _M_NODATA:
-                    out.append(_wkb_point(x, y))
-                else:
-                    out.append(_wkb_point_zm((x, y, m), False, True))
-            else:
-                out.append(_wkb_point(x, y))
+                m_vals = [struct.unpack_from("<d", buf, pos + 20)[0]]
+            if m_vals is not None and m_vals[0] < _M_NODATA:
+                m_vals = None
+            [p] = _with_zm([(x, y)], z_vals, m_vals)
+            out.append(
+                _wkb_point_zm(p, z_vals is not None, m_vals is not None)
+            )
         elif shape_type in (8, 18, 28):
             (num_points,) = struct.unpack_from("<i", buf, pos + 36)
             flat = struct.unpack_from(f"<{2 * num_points}d", buf, pos + 40)
@@ -231,16 +207,13 @@ def parse_shp(buf: bytes, *, preserve_zm: bool = False) -> list[bytes | None]:
                 z_vals, m_vals = _zm_arrays(
                     buf, pos + 40 + 16 * num_points, rec_end, num_points, shape_type
                 )
-            if z_vals is not None or m_vals is not None:
-                out.append(
-                    _wkb_multipoint_zm(
-                        _with_zm(xy, z_vals, m_vals),
-                        z_vals is not None,
-                        m_vals is not None,
-                    )
+            out.append(
+                _wkb_multipoint_zm(
+                    _with_zm(xy, z_vals, m_vals),
+                    z_vals is not None,
+                    m_vals is not None,
                 )
-            else:
-                out.append(_wkb_multipoint(xy))
+            )
         elif shape_type in (3, 5, 13, 15, 23, 25):
             num_parts, num_points = struct.unpack_from("<ii", buf, pos + 36)
             parts = struct.unpack_from(f"<{num_parts}i", buf, pos + 44)
@@ -252,25 +225,16 @@ def parse_shp(buf: bytes, *, preserve_zm: bool = False) -> list[bytes | None]:
                 z_vals, m_vals = _zm_arrays(
                     buf, pts_off + 16 * num_points, rec_end, num_points, shape_type
                 )
-            points: list[tuple] = (
-                _with_zm(xy, z_vals, m_vals)
-                if (z_vals is not None or m_vals is not None)
-                else xy
-            )
+            points = _with_zm(xy, z_vals, m_vals)
             rings = [
                 points[parts[j] : (parts[j + 1] if j + 1 < num_parts else num_points)]
                 for j in range(num_parts)
             ]
-            if z_vals is not None or m_vals is not None:
-                hz, hm = z_vals is not None, m_vals is not None
-                if shape_type in (13, 23):
-                    out.append(_wkb_multilinestring_zm(rings, hz, hm))
-                else:
-                    out.append(_wkb_multipolygon_zm(_group_rings(rings), hz, hm))
-            elif shape_type in (3, 13, 23):
-                out.append(_wkb_multilinestring(rings))
+            hz, hm = z_vals is not None, m_vals is not None
+            if shape_type in (3, 13, 23):
+                out.append(_wkb_multilinestring_zm(rings, hz, hm))
             else:
-                out.append(polygons_to_wkb(_group_rings(rings)))
+                out.append(_wkb_multipolygon_zm(_group_rings(rings), hz, hm))
         else:
             raise ValueError(f"unsupported shape type {shape_type}")
         pos = rec_end
@@ -323,15 +287,13 @@ def read_shapefile_zip(
     zip_path: str,
     *,
     encoding: str = "latin-1",
-    preserve_zm: bool = False,
 ) -> DataFrame:
     """unzip → parse .dbf + .shp → DataFrame with a geometry_wkb column.
 
     Schema comes from the .dbf field descriptors (the connector's explicit
-    inference boundary — everything downstream is typed).
-    ``preserve_zm=True`` keeps Z/M ordinates as ISO WKB Z/M/ZM types
-    (parse_shp contract); default stays the 2-D promotion the season
-    pipelines consume.
+    inference boundary — everything downstream is typed). Geometries
+    take parse_shp's 2-D promotion, which is what the season pipelines
+    consume.
     """
     with tempfile.TemporaryDirectory() as tmp:
         with zipfile.ZipFile(zip_path) as zf:
@@ -346,7 +308,7 @@ def read_shapefile_zip(
         if shp_path is None or dbf_path is None:
             raise FileNotFoundError("zip must contain .shp and .dbf members")
         with open(shp_path, "rb") as fh:
-            geoms = parse_shp(fh.read(), preserve_zm=preserve_zm)
+            geoms = parse_shp(fh.read())
         with open(dbf_path, "rb") as fh:
             names, rows = parse_dbf(fh.read(), encoding)
 
@@ -391,7 +353,6 @@ def write_shapefile_zip(
     rows: list[list[object]],
     geometries: list[list[list[Ring]]],
     encoding: str = "latin-1",
-    base_name: str = "data",
 ) -> None:
     """Write a minimal polygon shapefile zip (enough for the reader + tests)."""
 
@@ -468,5 +429,5 @@ def write_shapefile_zip(
     dbf = out.getvalue()
 
     with zipfile.ZipFile(zip_path, "w") as zf:
-        zf.writestr(f"{base_name}.shp", shp)
-        zf.writestr(f"{base_name}.dbf", dbf)
+        zf.writestr("data.shp", shp)
+        zf.writestr("data.dbf", dbf)

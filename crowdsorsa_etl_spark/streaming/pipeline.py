@@ -310,7 +310,6 @@ def read_kafka_event_stream(
     *,
     bootstrap_servers: str,
     topic: str,
-    starting_offsets: str = "latest",
 ) -> DataFrame:
     """Kafka event stream (requires the spark-sql-kafka connector jar on the
     classpath; absent from the test image, where decode_kafka_events is
@@ -319,19 +318,17 @@ def read_kafka_event_stream(
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
+        .option("startingOffsets", "latest")
         .load()
     )
     return decode_kafka_events(raw)
 
 
-def tumbling_counts(
-    events: DataFrame, *, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Tumbling event-time window counts with late-data handling."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -343,29 +340,21 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
 
 
-def session_counts(
-    events: DataFrame, *, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Session windows (dynamic gap-based) per user — the streaming analogue
     of operators/topk.sessionize."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("session_start"),
@@ -376,24 +365,22 @@ def session_counts(
     )
 
 
-def deduped_events(events: DataFrame, *, watermark: str = "2 hours") -> DataFrame:
+def deduped_events(events: DataFrame) -> DataFrame:
     """Idempotent ingest: drop replayed event_ids within the watermark
     horizon (state is bounded by the watermark — trap: unbounded without)."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id", "ts"])
+    return events.withWatermark("ts", "2 hours").dropDuplicates(["event_id", "ts"])
 
 
-def deduped_events_within_watermark(
-    events: DataFrame, *, watermark: str = "2 hours"
-) -> DataFrame:
+def deduped_events_within_watermark(events: DataFrame) -> DataFrame:
     """Spark 3.5+ ``dropDuplicatesWithinWatermark``: dedup on event_id ALONE
     — duplicates whose retransmitted copies carry a *different* timestamp
     (the at-least-once-producer reality) still collapse, as long as the
     copies arrive within the watermark delay of each other. The classic
     ``dropDuplicates([id, ts])`` treats a re-stamped copy as a new event;
     keying on id alone without this operator would keep UNBOUNDED state.
-    State per key expires ``watermark`` after first sight — same bound, more
+    State per key expires 2 hours after first sight — same bound, more
     honest semantics for retried producers."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -403,8 +390,6 @@ def start_http_push_stream(
     cfg: SinkConfig,
     *,
     checkpoint_dir: str,
-    key_col: str = "obs_id",
-    json_col: str = "document_json",
     ledger_dir: str | None = None,
 ):
     """writeStream.foreachBatch → the batch HTTP sink. Checkpointing gives
@@ -422,13 +407,9 @@ def start_http_push_stream(
                 cfg,
                 ledger_dir=ledger_dir,
                 epoch_id=e,
-                key_col=key_col,
-                json_col=json_col,
             )
             return
-        audit = push_documents(
-            batch_df, cfg, key_col=key_col, json_col=json_col, dedup=True
-        )
+        audit = push_documents(batch_df, cfg)
         # count() forces the push; audit persistence is the caller's writer
         audit.count()
 
@@ -502,15 +483,10 @@ def start_curation_stream(
     *,
     checkpoint_dir: str,
     ledger_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_size: int = 64,
-    chunk_stride: int = 48,
     compact_every: int | None = None,
     postings_dir: str | None = None,
     decontam_index_dir: str | None = None,
     decontam_spans_dir: str | None = None,
-    decontam_min_run: int = 8,
 ):
     """Streaming LLM-data curation: the batch funnel (quality filter →
     exact dedup → chunking) as an incremental ingest pipeline.
@@ -552,21 +528,15 @@ def start_curation_stream(
     ``compact_every`` set — the epoch partitions fold into a deduplicated
     prefix-partitioned base every N epochs, capping the scan itself.
     """
-    if not 0 < chunk_stride <= chunk_size:  # validate at WIRING time, not
-        raise ValueError(                    # mid-epoch inside the stream
-            f"chunk_stride must be in (0, chunk_size]; got {chunk_stride}, "
-            f"size {chunk_size}"
-        )
-
     def ingest(batch_df: DataFrame, e: int) -> None:
         spark = batch_df.sparkSession
-        sig = quality_filter_signals(F.col(text_col))
+        sig = quality_filter_signals(F.col("text"))
         keep, _reason = quality_filter_verdict(sig)
         kept = batch_df.where(keep).withColumn(
-            "_md5", F.md5(normalize_text(F.col(text_col)))
+            "_md5", F.md5(normalize_text(F.col("text")))
         )
         # within-batch keep-first, then anti-join the cross-batch ledger
-        w = Window.partitionBy("_md5").orderBy(F.col(id_col))
+        w = Window.partitionBy("_md5").orderBy(F.col("doc_id"))
         batch_fresh = (
             kept.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
@@ -592,17 +562,9 @@ def start_curation_stream(
             )
         fresh = materialize(fresh)  # one evaluation feeds sink + ledger
 
-        chunk_documents(
-            fresh,
-            text_col=text_col,
-            id_col=id_col,
-            size=chunk_size,
-            stride=chunk_stride,
-        ).write.mode("append").parquet(out_dir)
+        chunk_documents(fresh).write.mode("append").parquet(out_dir)
         if postings_dir is not None:
-            bm25_append_index(
-                fresh, postings_dir, text_col=text_col, id_col=id_col
-            )
+            bm25_append_index(fresh, postings_dir)
         if decontam_index_dir is not None:
             spans_dir = (
                 decontam_spans_dir
@@ -618,9 +580,6 @@ def start_curation_stream(
                 spark,
                 decontam_index_dir,
                 batch_fresh,
-                min_run=decontam_min_run,
-                text_col=text_col,
-                id_col=id_col,
             ).write.mode("overwrite").parquet(_epoch_dir(spans_dir, e))
         # commit point: the epoch's FULL ingested key set (replay rewrites
         # the same set — sinks/ledger.epoch_ledger_rows). Remaining
@@ -704,12 +663,10 @@ def attribution_join(
     views: DataFrame,
     clicks: DataFrame,
     *,
-    horizon: str = "30 minutes",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join: each click joins every view by the same user
-    within the trailing ``horizon`` — the classic attribution shape.
+    within the trailing 30 minutes — the classic attribution shape.
 
     Both sides carry watermarks and the join condition bounds event time on
     BOTH ends, so Spark can size the join state to
@@ -730,7 +687,7 @@ def attribution_join(
             F.col("event_id").alias("view_id"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", "2 hours")
     )
     c = (
         clicks.select(
@@ -738,15 +695,15 @@ def attribution_join(
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "2 hours")
     )
     return c.join(
         v,
         F.expr(
-            f"""
+            """
             user_id = v_user_id AND
             view_ts <= click_ts AND
-            view_ts >= click_ts - INTERVAL {horizon}
+            view_ts >= click_ts - INTERVAL 30 minutes
             """
         ),
         how,
@@ -834,7 +791,6 @@ def start_heavy_hitters_stream(
     state_dir: str,
     *,
     checkpoint_dir: str,
-    text_col: str = "text",
     capacity: int = 64,
 ):
     """Streaming Misra–Gries maintenance: a bounded frequent-token summary
@@ -858,9 +814,7 @@ def start_heavy_hitters_stream(
     spark_active = docs_stream.sparkSession
 
     def fold(batch_df: DataFrame, e: int) -> None:
-        batch_sum = mg_partition_summaries(
-            batch_df, text_col, capacity=capacity
-        )
+        batch_sum = mg_partition_summaries(batch_df, capacity=capacity)
         prev = _prior_state(spark_active, state_dir, e, _MG_SCHEMA)
         if prev is not None:
             batch_sum = batch_sum.unionByName(prev)
@@ -930,8 +884,6 @@ def start_shard_stream(
     state_dir: str,
     *,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shard_budget: int = 20_000,
     merges: list[tuple[str, str]] | None = None,
     vocab: dict[str, int] | None = None,
@@ -973,28 +925,20 @@ def start_shard_stream(
         rows = [] if prev is None else prev.collect()
         offset = int(rows[0]["total"]) if rows else 0
         if merges is not None:
-            d = bpe_encode_ids(
-                batch_df,
-                merges,
-                vocab,
-                text_col=text_col,
-                id_col=id_col,
-                ids_col="token_ids",
-            )
+            d = bpe_encode_ids(batch_df, merges, vocab, ids_col="token_ids")
             extra = ["ids_md5", "token_ids"]
         else:
             d = batch_df.select(
-                F.col(id_col),
-                F.size(F.split(F.lower(F.trim(text_col)), " "))
-                .cast("bigint")
+                F.col("doc_id"),
+                F.size(F.split(F.lower(F.trim("text")), " ")).cast("bigint")
                 .alias("n_tokens"),
             )
             extra = []
         out = with_global_cumsum(
-            d, [F.col(id_col)], "n_tokens", cum_col="_batch_cum"
+            d, [F.col("doc_id")], "n_tokens", cum_col="_batch_cum"
         ).withColumn("cum_tokens", F.col("_batch_cum") + F.lit(offset))
         out = out.select(
-            id_col,
+            "doc_id",
             "n_tokens",
             *extra,
             "cum_tokens",
@@ -1140,8 +1084,6 @@ def start_sequence_pack_stream(
     vocab: dict[str, int],
     eos_id: int,
     max_len: int = 512,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """Continuous FIXED-length training-sequence export — the streaming
     form of ``curation.pack_token_sequences``: every micro-batch's
@@ -1178,14 +1120,7 @@ def start_sequence_pack_stream(
         seqs_done = int(rows[0]["seqs_done"]) if rows else 0
         carry = list(rows[0]["carry"] or []) if rows else []
         d = materialize(
-            bpe_encode_ids(
-                batch_df,
-                merges,
-                vocab,
-                text_col=text_col,
-                id_col=id_col,
-                ids_col="token_ids",
-            )
+            bpe_encode_ids(batch_df, merges, vocab, ids_col="token_ids")
             .withColumn(
                 "_ids",
                 F.concat(F.col("token_ids"), F.array(F.lit(int(eos_id)))),
@@ -1197,7 +1132,7 @@ def start_sequence_pack_stream(
             # llm_token_id_shards fix, applied to every trigger here)
         )
         base = seqs_done * max_len + len(carry)
-        cum = with_global_cumsum(d, [F.col(id_col)], "_n", cum_col="_cum")
+        cum = with_global_cumsum(d, [F.col("doc_id")], "_n", cum_col="_cum")
         tok = cum.select(
             (F.lit(base) + F.col("_cum") - F.col("_n")).alias("_off"),
             F.posexplode("_ids").alias("_pos", "_id"),
@@ -1355,9 +1290,6 @@ def start_lm_score_stream(
     out_dir: str,
     *,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    discount: float = 0.75,
 ):
     """Perplexity filtering AT INGEST — the streaming form of
     llm_kneser_ney_logprob: an interpolated-KN bigram model is trained
@@ -1383,7 +1315,7 @@ def start_lm_score_stream(
     itself the output is bit-identical to the batch query (parity-gated
     in tests/test_streaming.py).
     """
-    big_ref = _bigrams(reference, text_col=text_col, id_col=id_col)
+    big_ref = _bigrams(reference, text_col="text", id_col="doc_id")
     bc = big_ref.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("bc")
     )
@@ -1396,10 +1328,10 @@ def start_lm_score_stream(
     )
     types = bc.agg(F.count(F.lit(1)).cast("bigint").alias("ttypes"))
 
-    d = F.lit(float(discount))
+    d = F.lit(0.75)
 
     def score(batch_df: DataFrame, e: int) -> None:
-        big = _bigrams(batch_df, text_col=text_col, id_col=id_col)
+        big = _bigrams(batch_df, text_col="text", id_col="doc_id")
         joined = (
             big.join(bc, ["w1", "w2"], "left")
             .join(left, "w1", "left")
@@ -1444,9 +1376,6 @@ def start_dsir_stream(
     *,
     checkpoint_dir: str,
     buckets: int = 4096,
-    smoothing: float = 1.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """DSIR importance scoring AT INGEST — the streaming form of
     llm_dsir_weights: the bounded bucket artifact (≤ ``buckets`` rows) is
@@ -1463,19 +1392,10 @@ def start_dsir_stream(
     batch drawn from the reference's raw slice the output is bit-identical
     to the batch query (parity-gated in tests/test_streaming.py).
     """
-    stats = dsir_bucket_stats(
-        reference,
-        target_pred,
-        buckets=buckets,
-        smoothing=smoothing,
-        text_col=text_col,
-        id_col=id_col,
-    )
+    stats = dsir_bucket_stats(reference, target_pred, buckets=buckets)
 
     def score(batch_df: DataFrame, e: int) -> None:
-        out = dsir_scores(
-            batch_df, stats, buckets=buckets, text_col=text_col, id_col=id_col
-        )
+        out = dsir_scores(batch_df, stats, buckets=buckets)
         out.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
 
     return _start_per_epoch(
@@ -1490,9 +1410,6 @@ def start_budget_mix_stream(
     state_dir: str,
     *,
     checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
 ):
     """Per-source token-budget admission AT INGEST — the streaming form of
     llm_token_budget / ``curation.token_budget_sample``: a corpus mixer
@@ -1532,9 +1449,9 @@ def start_budget_mix_stream(
             for r in ([] if prev is None else prev.collect())
         }
         d = batch_df.select(
-            F.col(id_col),
-            F.col(group_col).alias("source"),
-            token_count(F.col(text_col)).cast("bigint").alias("n_tokens"),
+            F.col("doc_id"),
+            F.col("source"),
+            token_count(F.col("text")).cast("bigint").alias("n_tokens"),
         )
         remaining = {
             s: max(b - carried.get(s, 0), 0) for s, b in budgets.items()
@@ -1543,7 +1460,6 @@ def start_budget_mix_stream(
             d,
             remaining,
             token_col="n_tokens",
-            key_col=id_col,
             group_col="source",
             default_budget=0,
         )
@@ -1581,10 +1497,7 @@ def start_image_dedup_stream(
     out_dir: str,
     *,
     checkpoint_dir: str,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     max_hamming: int = 7,
-    bucket_prefixes: int = 64,
 ):
     """IMAGE dedup at ingest — the multimodal mirror of the text
     decontamination/dedup-index streams: every micro-batch of (id,
@@ -1608,12 +1521,7 @@ def start_image_dedup_stream(
     spark_active = docs_stream.sparkSession
 
     def on_batch(batch_df: DataFrame, e: int) -> None:
-        b = materialize(_ahash_banded_rows(
-            batch_df,
-            payload_col=payload_col,
-            id_col=id_col,
-            bucket_prefixes=bucket_prefixes,
-        ))
+        b = materialize(_ahash_banded_rows(batch_df))
         bands_root = index_path.rstrip("/") + "/bands"
         if _epochs(bands_root):
             pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
@@ -1654,14 +1562,7 @@ def start_image_dedup_stream(
                 [], "id_a long, id_b long, hamming int"
             )
         matches.write.mode("overwrite").parquet(_epoch_dir(out_dir, e))
-        image_index_write_epoch(
-            batch_df,
-            index_path,
-            e,
-            payload_col=payload_col,
-            id_col=id_col,
-            bucket_prefixes=bucket_prefixes,
-        )
+        image_index_write_epoch(batch_df, index_path, e)
 
     return _start_per_epoch(
         docs_stream, on_batch, checkpoint_dir=checkpoint_dir, mode="append"
@@ -1745,8 +1646,6 @@ def start_entity_registry_stream(
     registry_path: str,
     *,
     checkpoint_dir: str,
-    src: str = "id_a",
-    dst: str = "id_b",
 ):
     """Entity/cluster registry maintenance AT INGEST — the streaming form
     of ``clusters.incremental_components``: each micro-batch of edges
@@ -1769,9 +1668,9 @@ def start_entity_registry_stream(
             spark_active, registry_path, e, "id long, component long"
         )
         if labels is not None:
-            reg = incremental_components(labels, batch_df, src=src, dst=dst)
+            reg = incremental_components(labels, batch_df)
         else:
-            reg = connected_components(batch_df, src=src, dst=dst)
+            reg = connected_components(batch_df)
         reg.write.mode("overwrite").parquet(_epoch_dir(registry_path, e))
 
     return _start_per_epoch(
@@ -1784,9 +1683,7 @@ def start_shuffle_shard_stream(
     store_path: str,
     *,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
     shard_docs: int = 64,
-    seed: str = "shuf:v1:",
 ):
     """Training-shard layout AT INGEST — the streaming form of
     ``sharding.shard_store_append``: each micro-batch is shuffled within
@@ -1808,7 +1705,7 @@ def start_shuffle_shard_stream(
             spark_active, store_path, e, "next_pos long", "next"
         )
         start = 0 if nxt is None else nxt.collect()[0]["next_pos"]
-        pos, total = _positions(batch_df, id_col, seed, start)
+        pos, total = _positions(batch_df, "doc_id", "shuf:v1:", start)
         (
             pos.withColumn(
                 "shard_id",
@@ -1834,11 +1731,6 @@ def start_mix_stream(
     store_path: str,
     *,
     checkpoint_dir: str,
-    alpha: float = 0.3,
-    text_col: str = "text",
-    lang_col: str = "lang",
-    phase_hi: float = 0.666666,
-    phase_lo: float = 0.333333,
 ):
     """Streaming layout planner: temperature mix + curriculum boundaries
     over the GROWING store, carried-state instead of scratch recompute.
@@ -1871,12 +1763,12 @@ def start_mix_stream(
     phases_schema = "phase int, n_docs long"
 
     def on_batch(batch_df: DataFrame, e: int) -> None:
-        n_tok = F.size(F.split(normalize_text(F.col(text_col)), " "))
-        q = quality_score(F.col(text_col))
+        n_tok = F.size(F.split(normalize_text(F.col("text")), " "))
+        q = quality_score(F.col("text"))
         phase = (
-            F.when(q >= phase_hi, 0).when(q >= phase_lo, 1).otherwise(2)
+            F.when(q >= 0.666666, 0).when(q >= 0.333333, 1).otherwise(2)
         )
-        b_lang = batch_df.groupBy(F.col(lang_col).alias("lang")).agg(
+        b_lang = batch_df.groupBy(F.col("lang")).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(n_tok).cast("bigint").alias("n_tokens"),
         )
@@ -1914,7 +1806,7 @@ def start_mix_stream(
         )
         fx = totals_r.select(
             "*",
-            F.round(F.pow(F.col("n_tokens"), F.lit(alpha)) * F.lit(FX), 0)
+            F.round(F.pow(F.col("n_tokens"), F.lit(0.3)) * F.lit(FX), 0)
             .cast("bigint")
             .alias("term_fx"),
         )
@@ -1961,8 +1853,6 @@ def start_hll_stream(
     store_path: str,
     *,
     checkpoint_dir: str,
-    key_col: str = "user_id",
-    seed: str = "hll:v1:",
 ):
     """Streaming distinct-count: fold each micro-batch's HLL registers
     into the carried register table (per-register max — HLL merge IS the
@@ -1985,7 +1875,7 @@ def start_hll_stream(
     regs_schema = "idx int, r int"
 
     def on_batch(batch_df: DataFrame, e: int) -> None:
-        regs = hll_registers(batch_df, key_col, seed=seed)
+        regs = hll_registers(batch_df, "user_id")
         carried = _prior_state(
             spark_active, store_path, e, regs_schema, "registers"
         )
@@ -2035,8 +1925,6 @@ def start_kll_stream(
     checkpoint_dir: str,
     value_col: str = "v",
     tiebreak_cols: list[str] | None = None,
-    k: int = 32,
-    max_levels: int = 16,
 ):
     """Streaming quantiles, completing the sketch triad next to
     ``start_hll_stream`` (distinct) and the Misra-Gries stream (heavy
@@ -2071,9 +1959,7 @@ def start_kll_stream(
     def on_batch(batch_df: DataFrame, e: int) -> None:
         batch_cells = [
             (r["level"], r["pos"], r["value"], r["weight"])
-            for r in kll_cells_sorted(
-                batch_df, value_col, ties, k=k, max_levels=max_levels
-            ).collect()
+            for r in kll_cells_sorted(batch_df, value_col, ties).collect()
         ]
         prev = _prior_state(spark_active, store_path, e, cells_schema, "cells")
         if prev is not None:
@@ -2081,7 +1967,7 @@ def start_kll_stream(
                 (r["level"], r["pos"], r["value"], r["weight"])
                 for r in prev.collect()
             ]
-            merged = kll_merge(carried, batch_cells, k, max_levels)
+            merged = kll_merge(carried, batch_cells)
         else:
             merged = batch_cells
         _write_state_rows(

@@ -25,8 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from crowdsorsa_etl_spark.functions.text import normalized_tokens
 from crowdsorsa_etl_spark.operators.cmsketch import (
-    _tokens,
     count_min_estimate,
     count_min_sketch,
 )
@@ -88,7 +88,7 @@ def main() -> None:
     docs = load_table(spark, "documents", sf_dir)
     sketch = count_min_sketch(docs).localCheckpoint()
     exact = (
-        _tokens(docs, "text")
+        normalized_tokens(docs, "text")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact"))
         .orderBy(F.col("exact").desc(), "token")

@@ -534,6 +534,14 @@ def test_query_modules_are_domains_with_hoisted_imports():
     assert not bad, bad
 
 
+def test_sink_modules_hoist_their_imports():
+    """The sinks import their dependencies once, at the top: ``writers``
+    needs only pyspark, ``ledger`` imports ``writers`` and ``http_push``
+    imports ``ledger``, so no cycle calls for a local import."""
+    bad = _registry_layout_violations(os.path.join(PKG, "sinks"))
+    assert not bad, bad
+
+
 def test_registry_layout_guard_flags_round_modules_and_local_imports(tmp_path):
     (tmp_path / "round9_pack.py").write_text("X = 1\n")
     (tmp_path / "llm_pack.py").write_text("Y = 2\n")
@@ -648,3 +656,206 @@ def test_materialize_writes_reliable_files_eagerly_with_a_dir(spark, tmp_path):
             assert sorted(r.id for r in out.collect()) == list(range(100))
     finally:
         spark.sparkContext.setCheckpointDir(None)
+
+
+# --- parameters only where a caller sets one -----------------------------
+
+REPO = os.path.dirname(PKG)
+_CALLER_TREES = (
+    "crowdsorsa_etl_spark",
+    "perfbench",
+    "tools",
+    "examples",
+    "tests",
+    "bench.py",
+    "__spark_entry__.py",
+)
+
+# modules whose signatures the sweep leaves alone
+_UNSWEPT_MODULES = {
+    "parity_oracles.py": "the DuckDB reference side; its SQL feeds the ORACLES digest",
+    "lsh_oracles.py": "the DuckDB reference side; its SQL feeds the ORACLES digest",
+}
+
+# defaults that stay without a caller: deployment and outside-input settings
+_UNCALLED_DEFAULTS_OK = {
+    "config_for_season.branch": "the laji.fi branch a deployment pushes to",
+    "documents_2023.source_id": "the laji.fi source a deployment registers",
+    "documents_2024.source_id": "the laji.fi source a deployment registers",
+    "read_shapefile_zip.encoding": "the DBF code page of an outside archive",
+    "write_shapefile_zip.encoding": "the DBF code page of an outside archive",
+    "observations_2024.seed": "the module's md5 names the season fixture dir",
+}
+
+_TRANSPARENT_DECORATORS = {"staticmethod", "classmethod"}
+
+
+def _py_sources(root: str, trees) -> dict[str, str]:
+    out = {}
+    for t in trees:
+        top = os.path.join(root, t)
+        walk = [(root, [], [t])] if t.endswith(".py") else os.walk(top)
+        for dirpath, _dirs, files in walk:
+            for f in files:
+                if f.endswith(".py"):
+                    path = os.path.join(dirpath, f)
+                    with open(path) as fh:
+                        out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def _callee(func) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+def _uncalled_defaults(package: dict[str, str], callers: dict[str, str]) -> list[str]:
+    """``module::function.param`` for every defaulted parameter of a
+    ``def`` in ``package`` that no call in ``callers`` sets, by keyword or
+    by position. Calls are matched by name (``f(...)``, ``m.f(...)``), a
+    class call by its ``__init__``. A function the walk cannot see every
+    call of is skipped rather than guessed at: one referenced as a value
+    (a UDF, callback, decorated query or dict entry), one decorated, one
+    reached by a ``*args``/``**kwargs`` call, and a ``x=x`` loop binding."""
+    trees = [ast.parse(src) for src in callers.values()]
+    real = {}  # ``from m import f as g``: g -> f
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    if a.asname:
+                        real[a.asname] = a.name
+    calls: dict[str, list[tuple[int, set]]] = {}
+    opaque: set[str] = set()
+    for tree in trees:
+        in_call = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = _callee(node.func)
+                if name is None:
+                    continue
+                name = real.get(name, name)
+                if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                    k.arg is None for k in node.keywords
+                ):
+                    opaque.add(name)
+                calls.setdefault(name, []).append(
+                    (len(node.args), {k.arg for k in node.keywords})
+                )
+            elif id(node) not in in_call and isinstance(node, ast.Name):
+                if isinstance(node.ctx, ast.Load):
+                    opaque.add(real.get(node.id, node.id))
+            elif id(node) not in in_call and isinstance(node, ast.Attribute):
+                opaque.add(node.attr)
+
+    bad = []
+    for mod, src in package.items():
+        if os.path.basename(mod) in _UNSWEPT_MODULES:
+            continue
+        tree = ast.parse(src)
+        owner = {
+            id(d): n
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ClassDef)
+            for d in n.body
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            decos = {_callee(d) for d in node.decorator_list}
+            if decos - _TRANSPARENT_DECORATORS:
+                continue
+            cls = owner.get(id(node))
+            name, shift = node.name, 0
+            label = node.name if cls is None else f"{cls.name}.{node.name}"
+            if cls is not None and "staticmethod" not in decos:
+                shift = 1
+                if name == "__init__":
+                    name = cls.name
+                elif name.startswith("__"):
+                    continue
+            if name in opaque:
+                continue
+            a = node.args
+            positional = a.posonlyargs + a.args
+            pairs = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+            pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p, default in pairs:
+                if isinstance(default, ast.Name) and default.id == p.arg:
+                    continue
+                if f"{label}.{p.arg}" in _UNCALLED_DEFAULTS_OK:
+                    continue
+                idx = positional.index(p) - shift if p in positional else None
+                if any(
+                    p.arg in kws or (idx is not None and npos > idx)
+                    for npos, kws in calls.get(name, [])
+                ):
+                    continue
+                bad.append(f"{mod}::{label}.{p.arg}")
+    return sorted(bad)
+
+
+def test_every_default_has_a_caller():
+    """A defaulted parameter no call site sets is a constant with a second
+    name: each one doubles the configurations nobody runs. Keep it inline
+    (or a module constant) until a caller needs another value."""
+    package = _py_sources(REPO, ["crowdsorsa_etl_spark"])
+    bad = _uncalled_defaults(package, _py_sources(REPO, _CALLER_TREES))
+    assert not bad, f"{len(bad)} defaulted parameters without a caller: {bad}"
+
+
+def test_default_guard_flags_never_set_defaults_and_skips_unseen_calls():
+    module = """
+def f(a, b=1, *, c="x", d=2):
+    return a, b, c, d
+
+def g(x, y=3):
+    return x, y
+
+def h(z, w=4):
+    return z, w
+
+def cb(v, u=5):
+    return v, u
+
+def loop(xs):
+    out = []
+    for x in xs:
+        def step(x=x):
+            return x
+        out.append(step())
+    return out
+
+class K:
+    def __init__(self, n, m=6):
+        self.n = n
+
+    def run(self, q=7):
+        return q
+"""
+    use = """
+from pkg.m import K, cb, f, g as gg, h
+
+f(1, c="y")
+gg(1, 2)
+kw = {}
+h(1, **kw)
+register(cb)
+K(1).run()
+"""
+    package = {"pkg/m.py": module}
+    found = _uncalled_defaults(package, {"pkg/m.py": module, "use.py": use})
+    assert found == [
+        "pkg/m.py::K.__init__.m",
+        "pkg/m.py::K.run.q",
+        "pkg/m.py::f.b",
+        "pkg/m.py::f.d",
+    ]
+    # a single keyword call site is enough to keep a default
+    found = _uncalled_defaults(
+        package, {"pkg/m.py": module, "use.py": use + "f(1, 2, d=0)\n"}
+    )
+    assert "pkg/m.py::f.d" not in found and "pkg/m.py::f.b" not in found

@@ -834,8 +834,8 @@ class TestCountMinSketch:
     def test_estimate_never_underestimates_and_merge_is_rebuild(self, spark):
         from pyspark.sql import functions as F
 
+        from crowdsorsa_etl_spark.functions.text import normalized_tokens
         from crowdsorsa_etl_spark.operators.cmsketch import (
-            _tokens,
             count_min_estimate,
             count_min_sketch,
             merge_sketches,
@@ -847,7 +847,7 @@ class TestCountMinSketch:
         sketch = count_min_sketch(docs).localCheckpoint()
 
         exact = (
-            _tokens(docs, "text")
+            normalized_tokens(docs, "text")
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("exact"))
         )

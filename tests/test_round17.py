@@ -135,7 +135,7 @@ class TestKllStream:
 
     def test_q117_matches_oracle(self, spark):
         """Cell-exact differential: the registered fold vs the DuckDB
-        merge-replay oracle (kll_sql per batch + kll_merge_sql chain)."""
+        merge-replay oracle (kll_sql per batch + kll_merge_sql_parts chain)."""
         import duckdb
 
         from crowdsorsa_etl_spark.queries import ORACLES, QUERIES

@@ -120,6 +120,11 @@ class TestShpDialectCoverage:
         typ, n = struct.unpack_from("<xII", wkb, 0)
         assert (typ, n) == (4, 2)
         assert struct.unpack_from("<dd", wkb, 9 + 5) == (0.0, 0.0)
+        assert wkb == bytes.fromhex(
+            "010400000002000000"
+            "0101000000" "0000000000000000" "0000000000000000"
+            "0101000000" "0000000000000c40" "000000000000f8bf"
+        )
 
     def test_polyline_two_parts(self):
         import struct
@@ -139,6 +144,16 @@ class TestShpDialectCoverage:
         off2 = 9 + 9 + 2 * 16
         t2, n2 = struct.unpack_from("<xII", wkb, off2)
         assert (t2, n2) == (2, 3)
+        assert wkb == bytes.fromhex(
+            "010500000002000000"
+            "010200000002000000"
+            "0000000000000000" "0000000000000000"
+            "000000000000f03f" "000000000000f03f"
+            "010200000003000000"
+            "0000000000001440" "0000000000001440"
+            "0000000000001840" "0000000000001440"
+            "0000000000001c40" "0000000000001040"
+        )
 
     def test_null_and_polygon_still_work(self):
         import struct
@@ -155,6 +170,41 @@ class TestShpDialectCoverage:
         got = parse_shp(_shp_file([null_rec, rec]))
         assert got[0] is None
         assert _parse_wkb(got[1]) == [[ring]]
+
+    def test_2d_point_and_polygon_bytes(self):
+        """Plain 2-D WKB, pinned byte for byte: a Point and a two-polygon
+        MultiPolygon whose first polygon carries a hole (ring winding
+        groups the hole with the ring before it)."""
+        import struct
+
+        from crowdsorsa_etl_spark.sources.shapefile import parse_shp
+
+        outer = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]
+        hole = [(1.0, 1.0), (2.0, 1.0), (2.0, 2.0), (1.0, 2.0), (1.0, 1.0)]
+        outer2 = [
+            (10.0, 10.0), (10.0, 11.0), (11.0, 11.0), (11.0, 10.0), (10.0, 10.0)
+        ]
+        pts = outer + hole + outer2
+        poly = struct.pack("<i4dii", 5, 0, 0, 11, 11, 3, len(pts))
+        poly += struct.pack("<3i", 0, 5, 10)
+        for x, y in pts:
+            poly += struct.pack("<dd", x, y)
+        point = struct.pack("<idd", 1, 24.5, 61.25)
+        got_point, got_poly = parse_shp(_shp_file([point, poly]))
+        assert got_point == bytes.fromhex(
+            "010100000000000000008038400000000000a04e40"
+        )
+        assert got_poly == bytes.fromhex(
+            "0106000000020000000103000000020000000500000000000000000000000000"
+            "0000000000000000000000000000000000000000104000000000000010400000"
+            "0000000010400000000000001040000000000000000000000000000000000000"
+            "00000000000005000000000000000000f03f000000000000f03f000000000000"
+            "0040000000000000f03f00000000000000400000000000000040000000000000"
+            "f03f0000000000000040000000000000f03f000000000000f03f010300000001"
+            "0000000500000000000000000024400000000000002440000000000000244000"
+            "0000000000264000000000000026400000000000002640000000000000264000"
+            "0000000000244000000000000024400000000000002440"
+        )
 
     def test_unknown_type_raises(self):
         import struct
