@@ -1,16 +1,15 @@
-"""Pipeline configuration — the engine's replacement for the reference's
-env-branch config block (S1, ``crowdsorsa-etl-2023.R:12-26``: prod vs dev API
-url / source id / token chosen by the ``BRANCH`` env var).
+"""HTTP push sink configuration — the engine's replacement for the
+reference's env-branch config block (S1, ``crowdsorsa-etl-2023.R:12-26``:
+prod vs dev API url / source id / token chosen by the ``BRANCH`` env var).
 
-Config is an explicit dataclass instead of interpreter globals; the git
-shell-out in the reference's ``.Rprofile`` becomes an ordinary environment
-read with a safe default.
+A deployment passes its endpoint and token as an explicit ``SinkConfig``
+and its laji.fi source id as ``documents_2023/2024(source_id=)``, instead
+of branching on interpreter globals set by a git shell-out.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -18,7 +17,6 @@ class SinkConfig:
     """HTTP push sink settings (reference S29-S30)."""
 
     api_url: str = "https://apitest.example.invalid/"
-    source_id: str = "KE.1501"
     access_token: str = ""
     # reference hard-codes Sys.sleep(.1) → ≤10 docs/s single-threaded
     # (crowdsorsa-etl-2023.R:220); here the limit is per partition so
@@ -27,41 +25,3 @@ class SinkConfig:
     max_retries: int = 3
     retry_backoff_s: float = 0.5
     timeout_s: float = 30.0
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    branch: str = field(default_factory=lambda: os.environ.get("BRANCH", "dev"))
-    season: int = 2024
-    # 2023 omits `facts` when area < 1 m2 (crowdsorsa-etl-2023.R:175-179);
-    # 2024 always emits them (crowdsorsa-etl-2024.R:137-144).
-    facts_min_area: float | None = None
-    crs_label: str = "EUREF"
-    # WGS84 area backend: "spherical" is sf::st_area's s2 path — sf's
-    # default since 1.0 and therefore the reference's numbers
-    # (crowdsorsa-etl-2023.R:40); "ellipsoidal" is the GEOS/PROJ
-    # sf_use_s2(FALSE) parity (authalic-latitude model). The default stays
-    # spherical because the models differ ~0.6% at the survey's latitudes
-    # and the fixture polygons' ceil() does NOT absorb that (191/200 area
-    # facts flip) — golden/byte-exact parity with the reference output IS
-    # the contract. Planar CRSes ignore this.
-    area_model: str = "spherical"
-    collection_id: str = "HR.5835"
-    sink: SinkConfig = field(default_factory=SinkConfig)
-
-    @property
-    def is_prod(self) -> bool:
-        return self.branch == "main"
-
-
-def config_for_season(season: int, branch: str | None = None) -> PipelineConfig:
-    branch = branch if branch is not None else os.environ.get("BRANCH", "dev")
-    if season == 2023:
-        return PipelineConfig(
-            branch=branch, season=2023, facts_min_area=1.0, crs_label="WGS84"
-        )
-    if season == 2024:
-        return PipelineConfig(
-            branch=branch, season=2024, facts_min_area=None, crs_label="EUREF"
-        )
-    raise ValueError(f"unknown season: {season}")

@@ -105,14 +105,8 @@ def _ring_area_planar(ring: list[tuple[float, float]]) -> float:
     return s / 2.0
 
 
-#: WGS84 ellipsoid constants (for the optional ellipsoidal area model)
-_WGS84_A = 6378137.0
-_WGS84_E2 = 6.69437999014e-3
-
-
 def _ring_excess(ring: list[tuple[float, float]]) -> float:
-    """Signed spherical excess (steradians) of a lon/lat ring — the
-    radius-free core of both area models below."""
+    """Signed spherical excess (steradians) of a lon/lat ring."""
     if len(ring) < 4:
         return 0.0
     total = 0.0
@@ -134,85 +128,18 @@ def _ring_area_geodesic(ring: list[tuple[float, float]]) -> float:
 
     L'Huilier-style accumulation equivalent to s2's spherical area — matches
     sf::st_area's s2 path (sf's default since 1.0) to well within the
-    reference's ceiling() rounding.
-
-    Model tolerance: sf with s2 DISABLED computes a true ellipsoidal area
-    (GEOS/PROJ geodesic). Against that, this spherical model deviates by
-    the local-curvature factor (sqrt(M·N)/R_mean)² — up to ~0.6% at the
-    reference data's 60-65°N latitudes (largest where |φ| is high). Use
-    ``_ring_area_ellipsoidal`` / ``area_m2(..., model="ellipsoidal")`` when
-    ellipsoidal parity matters; tests/test_geo.py pins the delta bound.
+    reference's ceiling() rounding. (sf with s2 disabled would compute an
+    ellipsoidal area instead, ~0.6% apart at the reference data's 60-65°N,
+    enough to flip most fixture polygons' ceil(); the reference runs sf's
+    default, so this model is the contract.)
     """
     return _ring_excess(ring) * _EARTH_RADIUS_M * _EARTH_RADIUS_M
 
 
-def _local_gaussian_radius(lat_deg: float) -> float:
-    """sqrt(M·N): the radius of the sphere that best matches the WGS84
-    ellipsoid's curvature at latitude φ (Gauss's osculating sphere).
-    Kept as the independent cross-check the ellipsoidal tests use: a tiny
-    square's exact area is Δλ·N·cosφ × Δφ·M, a formula sharing nothing
-    with the authalic transform below."""
-    s2_ = math.sin(math.radians(lat_deg)) ** 2
-    w2 = 1.0 - _WGS84_E2 * s2_
-    n = _WGS84_A / math.sqrt(w2)  # prime-vertical radius
-    m = _WGS84_A * (1.0 - _WGS84_E2) / (w2 * math.sqrt(w2))  # meridional
-    return math.sqrt(m * n)
-
-
-def _authalic_q(sin_phi: float) -> float:
-    """Snyder (1987) eq. 3-12: the authalic-latitude auxiliary q(φ).
-    2π·a²·q(π/2) is the exact WGS84 surface area."""
-    e = math.sqrt(_WGS84_E2)
-    es = e * sin_phi
-    return (1.0 - _WGS84_E2) * (
-        sin_phi / (1.0 - _WGS84_E2 * sin_phi * sin_phi)
-        - (1.0 / (2.0 * e)) * math.log((1.0 - es) / (1.0 + es))
-    )
-
-
-_Q_POLE = _authalic_q(1.0)
-#: authalic radius² — the sphere with EXACTLY the WGS84 surface area
-_AUTHALIC_R2 = _WGS84_A * _WGS84_A * _Q_POLE / 2.0
-
-
-def _authalic_lat_deg(lat_deg: float) -> float:
-    """Geodetic → authalic latitude (degrees). The authalic projection is
-    area-preserving ellipsoid→sphere BY CONSTRUCTION (longitude unchanged,
-    q-proportional latitude), so polygon areas computed on the authalic
-    sphere are ellipsoid areas exactly."""
-    s = _authalic_q(math.sin(math.radians(lat_deg))) / _Q_POLE
-    return math.degrees(math.asin(max(-1.0, min(1.0, s))))
-
-
-def _ring_area_ellipsoidal(ring: list[tuple[float, float]]) -> float:
-    """Signed ellipsoidal area (m²) via the authalic sphere (Snyder 1987,
-    eqs. 3-11/3-12): transform every vertex latitude to its authalic
-    latitude and evaluate the spherical excess on the authalic-radius
-    sphere. The transform preserves the area element exactly; the only
-    approximation is edge interpretation (ellipsoid geodesics map to
-    near-great-circles, an O(e²·sagitta) effect — ~1e-9 relative for
-    survey-scale polygons, small even at continental scale), so this is
-    the dependency-free stand-in for Karney's GeographicLib polygon area
-    (pyproj absent in this image). tests/test_geo.py pins it against the
-    independent local-metric formula and the known WGS84 surface area.
-    """
-    if len(ring) < 4:
-        return 0.0
-    aring = [(lon, _authalic_lat_deg(lat)) for lon, lat in ring]
-    return _ring_excess(aring) * _AUTHALIC_R2
-
-
-_AREA_FNS = {
-    "planar": _ring_area_planar,
-    "spherical": _ring_area_geodesic,
-    "ellipsoidal": _ring_area_ellipsoidal,
-}
-
-
-def _multipolygon_area(buf: bytes | None, model: str) -> float | None:
+def _multipolygon_area(buf: bytes | None, area_fn) -> float | None:
+    """Area of a WKB (multi)polygon under one ring kernel, holes subtracted."""
     if buf is None:
         return None
-    area_fn = _AREA_FNS[model]
     total = 0.0
     for rings in _parse_wkb(bytes(buf)):
         for j, ring in enumerate(rings):
@@ -223,36 +150,21 @@ def _multipolygon_area(buf: bytes | None, model: str) -> float | None:
 
 @F.pandas_udf(T.DoubleType())
 def st_area_planar(wkb: pd.Series) -> pd.Series:
-    return wkb.map(lambda b: _multipolygon_area(b, "planar"))
+    return wkb.map(lambda b: _multipolygon_area(b, _ring_area_planar))
 
 
 @F.pandas_udf(T.DoubleType())
 def st_area_geodesic(wkb: pd.Series) -> pd.Series:
-    return wkb.map(lambda b: _multipolygon_area(b, "spherical"))
+    return wkb.map(lambda b: _multipolygon_area(b, _ring_area_geodesic))
 
 
-@F.pandas_udf(T.DoubleType())
-def st_area_ellipsoidal(wkb: pd.Series) -> pd.Series:
-    return wkb.map(lambda b: _multipolygon_area(b, "ellipsoidal"))
-
-
-def area_m2(wkb: Column, crs_label: str, *, model: str = "spherical") -> Column:
+def area_m2(wkb: Column, crs_label: str) -> Column:
     """``ceiling(st_area(geom))`` (crowdsorsa-etl-2023.R:40) — geodesic for
     WGS84 (2023), planar for EUREF (2024). Returns double like the reference
-    (R ``ceiling`` keeps numeric).
-
-    ``model`` selects the WGS84 backend: "spherical" (s2 parity — sf's
-    default) or "ellipsoidal" (GEOS/PROJ-with-s2-disabled parity via the
-    local-Gaussian-radius model; differs from spherical by up to ~0.6% at
-    the reference's latitudes). Planar CRS ignores the model.
+    (R ``ceiling`` keeps numeric). The WGS84 model is s2's sphere, sf's
+    default since 1.0 and therefore the reference's numbers.
     """
-    if crs_label == "WGS84":
-        raw = (
-            st_area_ellipsoidal(wkb) if model == "ellipsoidal"
-            else st_area_geodesic(wkb)
-        )
-    else:
-        raw = st_area_planar(wkb)
+    raw = st_area_geodesic(wkb) if crs_label == "WGS84" else st_area_planar(wkb)
     return F.ceil(raw).cast("double")
 
 

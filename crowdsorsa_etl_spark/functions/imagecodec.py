@@ -1,7 +1,7 @@
 """Stdlib-only image codecs: PNG (zlib + struct) and BMP (struct).
 
 The container has no PIL/ffmpeg, but PNG and BMP are simple enough to decode
-with the standard library — which turns the multimodal decode/resize stages
+with the standard library — which turns the multimodal decode stages
 (``operators/multimodal.py``) from deterministic fakes into real codecs for
 the two most common lossless formats. Reference parity: the reference has no
 image path at all; this backs the engine-general multimodal surface
@@ -204,29 +204,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return np.ascontiguousarray(px[:, :, [2, 1, 0, 3]])
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    """uint8 array (h, w, 3) RGB → 24-bit bottom-up BMP bytes."""
-    if img.ndim == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
-    h, w, c = img.shape
-    if c != 3:
-        raise ValueError("encode_bmp takes RGB (h, w, 3)")
-    row_bytes = ((w * 3 + 3) // 4) * 4
-    pad = row_bytes - w * 3
-    body = bytearray()
-    bgr = np.ascontiguousarray(img[:, :, ::-1], dtype=np.uint8)
-    for y in range(h - 1, -1, -1):  # bottom-up
-        body.extend(bgr[y].tobytes())
-        body.extend(b"\x00" * pad)
-    data_offset = 14 + 40
-    file_size = data_offset + len(body)
-    file_hdr = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, data_offset)
-    info_hdr = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
-    )
-    return file_hdr + info_hdr + bytes(body)
-
-
 # --------------------------------------------------------------------------
 # Operations on decoded images
 # --------------------------------------------------------------------------
@@ -254,11 +231,3 @@ def mean_luma(img: np.ndarray) -> float:
     else:
         y = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
     return float(y.mean() / 255.0)
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample to (height, width). Pure numpy indexing."""
-    h, w = img.shape[:2]
-    ys = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int), h - 1)
-    xs = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int), w - 1)
-    return np.ascontiguousarray(img[ys][:, xs])

@@ -205,44 +205,10 @@ def tagged_shingles(col: Column, ks: tuple[int, ...]) -> Column:
     return F.concat(*arrays)
 
 
-def char_entropy(col: Column) -> Column:
-    """Shannon entropy (nats) of the NORMALIZED character distribution —
-    the information-density quality signal (boilerplate and keyboard-mash
-    both sit far from natural-language entropy; Gopher-class filters cut
-    on it).
-
-    Built-in only, zero shuffle: per-doc char counts come from
-    ``array_distinct`` × ``filter``-count higher-order functions —
-    O(len × alphabet) JVM-side work inside whole-stage codegen, which at
-    a ≤ ~100-symbol alphabet beats shipping the corpus through Arrow.
-
-    Float parity (registry convention): each character's ``-p·ln p`` term
-    rounds to 6 dp BEFORE the sum (both engines then sum identical
-    multiples of 1e-6 in any order), and the total re-rounds to 6 dp.
-    """
-    norm = normalize_text(col)
-    chars = F.split(norm, "")
-    n = F.size(chars)
-    term = lambda c: F.round(  # noqa: E731
-        -(
-            F.size(F.filter(chars, lambda x: x == c)) / n
-        )
-        * F.log(F.size(F.filter(chars, lambda x: x == c)) / n),
-        6,
-    )
-    return F.round(
-        F.aggregate(
-            F.array_distinct(chars),
-            F.lit(0.0),
-            lambda acc, c: acc + term(c),
-        ),
-        6,
-    )
-
-
 def char_entropy_sql() -> str:
-    """DuckDB scalar replay of :func:`char_entropy` for a ``documents``-like
-    row source — returns a SELECT producing (doc_id, entropy)."""
+    """DuckDB replay of ``operators/curation.entropy_signals`` for a
+    ``documents``-like row source — returns a SELECT producing
+    (doc_id, entropy)."""
     return f"""
     SELECT doc_id,
            round(sum(round(-(cnt * 1.0 / total) * ln(cnt * 1.0 / total),

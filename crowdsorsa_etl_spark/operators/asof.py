@@ -14,11 +14,7 @@ naive ``range-predicate join + dedup``:
     cost:   exactly ONE shuffle of |L|+|R| rows and one sort per partition —
             linear, no candidate blowup. NOTE on skew: AQE's skew handling
             applies to joins, not window sorts — a single hot key still
-            sorts on one task here. When one key dominates (|rows| per key
-            ≫ a task's memory), use :func:`asof_join_bucketed`, which runs
-            the same union-merge within coarse (key, time-bucket) windows
-            and composes the carry-forward across buckets — identical
-            results (equality-tested), per-task sort bounded by the bucket.
+            sorts on one task here.
 
 Right-side payload is packed into a single struct so the carried values always
 come from the *same* right row.
@@ -26,7 +22,7 @@ come from the *same* right row.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -39,11 +35,10 @@ def asof_join(
     right_time: str,
     right_payload: list[str],
     tiebreak: str | None = None,
-    strict: bool = False,
 ) -> DataFrame:
     """For each left row, attach the most recent right row with the same key
-    and ``right.t <= left.t`` (``<`` when ``strict``). Unmatched left rows keep
-    NULL payload (left-join semantics).
+    and ``right.t <= left.t``. Unmatched left rows keep NULL payload
+    (left-join semantics).
 
     ``tiebreak``: right column ordered ascending so that among right rows with
     equal time the LAST (max tiebreak) one wins — keeps results deterministic.
@@ -70,11 +65,10 @@ def asof_join(
         *[c for c in left_cols if c != on],
     ).unionByName(r_tag, allowMissingColumns=True)
 
-    # strict: right rows at t sort AFTER left rows at t → not visible at t
-    side_order = F.col("_side").asc() if not strict else F.col("_side").desc()
+    # right rows at t sort BEFORE left rows at t → visible at t
     w = (
         Window.partitionBy(on)
-        .orderBy(F.col("_t").asc(), side_order, F.col("_tie").asc())
+        .orderBy(F.col("_t").asc(), F.col("_side").asc(), F.col("_tie").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
 
@@ -87,110 +81,3 @@ def asof_join(
         *[F.col(f"_carried.{c}").alias(c) for c in right_payload],
     )
     return out
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_payload: list[str],
-    tiebreak: str | None = None,
-    strict: bool = False,
-    bucket_micros: int = 3_600_000_000,
-) -> DataFrame:
-    """Hot-key-safe as-of join: the union-merge recipe composed across
-    coarse time buckets, for keys whose row count exceeds one task's sort
-    budget (AQE cannot split a window sort — see module docstring).
-
-    1. Bucket both sides by ``floor(time / bucket_micros)``.
-    2. Per (key, bucket), reduce the right side to its LATEST row
-       (``max_by`` — one row per bucket, no sort).
-    3. Prefix-carry those summaries across buckets per key (a window over
-       #buckets rows, not #rows) → the carry-in seed for every bucket.
-    4. Run the same union-merge WITHIN each (key, bucket), seeding each
-       bucket with its carry-in as a synthetic earliest right row.
-
-    The per-task sort shrinks from |rows-per-key| to |rows-per-key-bucket|;
-    results are IDENTICAL to :func:`asof_join` (equality-tested). A carry-in
-    from an earlier bucket is strictly earlier than any left time in the
-    bucket, so strict/non-strict semantics are preserved.
-    """
-    payload = F.struct(*[F.col(c) for c in right_payload]).alias("_asof_payload")
-    payload_t = right.select(payload).schema["_asof_payload"].dataType
-
-    def bkt(col: str):
-        return F.floor(F.unix_micros(F.col(col).cast("timestamp")) / bucket_micros)
-
-    r_tag = right.select(
-        F.col(on),
-        bkt(right_time).alias("_bkt"),
-        F.col(right_time).alias("_t"),
-        F.lit(0).alias("_side"),
-        F.lit(1).alias("_pre"),
-        payload,
-        (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long").alias("_tie"),
-    )
-
-    # (2) one latest-right row per (key, bucket) — max_by avoids a sort
-    summaries = r_tag.groupBy(on, "_bkt").agg(
-        F.max_by("_asof_payload", F.struct("_t", "_tie")).alias("_s")
-    )
-
-    # (3) prefix-carry over the union of left/right bucket keys so buckets
-    # with only left rows still receive a seed
-    all_buckets = (
-        left.select(F.col(on), bkt(left_time).alias("_bkt"))
-        .union(summaries.select(on, "_bkt"))
-        .distinct()
-    )
-    w_carry = (
-        Window.partitionBy(on)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        all_buckets.join(summaries, [on, "_bkt"], "left")
-        .withColumn("_carry", F.last("_s", ignorenulls=True).over(w_carry))
-        .filter(F.col("_carry").isNotNull())
-        .select(
-            F.col(on),
-            F.col("_bkt"),
-            F.lit(None).cast("timestamp").alias("_t"),
-            F.lit(0).alias("_side"),
-            F.lit(0).alias("_pre"),  # sorts before every real row
-            F.col("_carry").alias("_asof_payload"),
-            F.lit(None).cast("long").alias("_tie"),
-        )
-    )
-
-    left_cols = list(left.columns)
-    l_tag = left.select(
-        F.col(on),
-        bkt(left_time).alias("_bkt"),
-        F.col(left_time).alias("_t"),
-        F.lit(1).alias("_side"),
-        F.lit(1).alias("_pre"),
-        F.lit(None).cast(payload_t).alias("_asof_payload"),
-        F.lit(None).cast("long").alias("_tie"),
-        *[c for c in left_cols if c != on],
-    )
-
-    combined = l_tag.unionByName(r_tag, allowMissingColumns=True).unionByName(
-        carry, allowMissingColumns=True
-    )
-    side_order = F.col("_side").asc() if not strict else F.col("_side").desc()
-    w = (
-        Window.partitionBy(on, "_bkt")
-        .orderBy(F.col("_pre").asc(), F.col("_t").asc(), side_order, F.col("_tie").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = combined.withColumn(
-        "_carried", F.last("_asof_payload", ignorenulls=True).over(w)
-    )
-    return carried.filter(F.col("_side") == 1).select(
-        *left_cols,
-        *[F.col(f"_carried.{c}").alias(c) for c in right_payload],
-    )

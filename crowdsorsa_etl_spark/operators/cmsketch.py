@@ -61,17 +61,6 @@ def count_min_sketch(df: DataFrame) -> DataFrame:
     )
 
 
-def merge_sketches(*sketches: DataFrame) -> DataFrame:
-    """Sketch merge = cell-wise sum (the mergeability that makes this a
-    per-partition / per-day / per-shard summary)."""
-    if not sketches:
-        raise ValueError("need at least one sketch")
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("i", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def count_min_estimate(sketch: DataFrame, probes: DataFrame) -> DataFrame:
     """Estimated frequency per probe token: min over the d cells the token
     hashes into. Join shape: probes explode to d (i, bucket) keys and

@@ -19,8 +19,15 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from crowdsorsa_etl_spark.functions.text import normalize_text
+from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
 
 # --------------------------------------------------------------------------
 # PII redaction
@@ -260,7 +267,6 @@ def pack_token_sequences(
     At 100 TB this is exactly two shuffles over the token stream, both
     array-framed.
     """
-    from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
 
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1; got {max_len}")
@@ -344,7 +350,6 @@ def sequence_provenance(
     most), and the span bounds are codegen min/max — so the map costs
     one range exchange over DOC-count rows, not a token-level shuffle.
     """
-    from crowdsorsa_etl_spark.operators.global_rank import with_global_cumsum
 
     if max_len < 1:
         raise ValueError(f"max_len must be >= 1; got {max_len}")
@@ -435,73 +440,23 @@ def mask_doc_spans(
     return out.withColumn("ids", masked).drop("_spans")
 
 
-def compression_signals(docs: DataFrame) -> DataFrame:
-    """(doc_id, raw_bytes, zlib_bytes, compression_ratio): the DEFLATE
-    compressibility quality signal — highly repetitive boilerplate
-    compresses far below natural language, keyboard-mash far above; web
-    curation cuts on both tails (the signal behind char_entropy's exact
-    cousin, but sensitive to LONG-RANGE repetition a character histogram
-    cannot see).
-
-    Embarrassingly parallel mapInPandas (stdlib zlib per Arrow batch, no
-    shuffle, no driver traffic). No SQL engine exposes DEFLATE, so this is
-    a pytest-gated tier (`tests/test_curation.py`): verified against
-    direct zlib calls, with the fixed level 6 pinning determinism —
-    zlib output is fully deterministic for a given (input, level,
-    library version), and one cluster ships one zlib.
-    """
-    import pandas as pd
-
-    id_field = docs.schema["doc_id"]
-    schema = (
-        f"doc_id {id_field.dataType.simpleString()}, raw_bytes long, "
-        "zlib_bytes long, compression_ratio double"
-    )
-    src = docs.select(F.col("doc_id"), F.col("text"))
-
-    def comp(batches):
-        import zlib
-
-        for pdf in batches:
-            raw, comp_len, ratio = [], [], []
-            for t in pdf["text"]:
-                b = (t or "").encode("utf-8")
-                z = len(zlib.compress(b, 6))
-                raw.append(len(b))
-                comp_len.append(z)
-                ratio.append(round(z / len(b), 6) if b else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "raw_bytes": raw,
-                    "zlib_bytes": comp_len,
-                    "compression_ratio": ratio,
-                }
-            )
-
-    return src.mapInPandas(comp, schema)
-
-
 def entropy_signals(docs: DataFrame) -> DataFrame:
     """(doc_id, entropy): Shannon entropy of the normalized character
     distribution, Arrow-batched.
 
-    Same semantics (and 6-dp per-term rounding) as
-    `functions/text.char_entropy`, ~20× faster: Spark's higher-order
-    functions are CodegenFallback — every lambda element evaluates
-    INTERPRETED over InternalRows, so the HOF form costs
-    O(len × alphabet) interpreted evals per doc (≈ 12 s at sf0.1). Here
-    the normalization stays Spark-side (single source of truth) and the
-    counting is one Counter pass per doc inside an Arrow batch.
+    Arrow-batched because Spark's higher-order functions are
+    CodegenFallback — every lambda element evaluates INTERPRETED over
+    InternalRows, so a HOF form (``array_distinct`` × ``filter``-count)
+    costs O(len × alphabet) interpreted evals per doc (≈ 12 s at sf0.1,
+    ~20× this). Here the normalization stays Spark-side (single source
+    of truth) and the counting is one Counter pass per doc inside an
+    Arrow batch.
     Summation is over per-char terms each rounded to 1e-6, in sorted-char
     order — both engines sum identical multiples of 1e-6, so the
     re-rounded total is order-independent (registry convention).
     Docs whose normalized text is empty or NULL drop out, matching the
     SQL oracle's GROUP BY over exploded chars.
     """
-    import math
-
-    from crowdsorsa_etl_spark.functions.text import normalize_text
 
     id_field = docs.schema["doc_id"]
     src = docs.select(
@@ -510,9 +465,6 @@ def entropy_signals(docs: DataFrame) -> DataFrame:
     )
 
     def ent(batches):
-        import pandas as pd
-        from collections import Counter
-
         for pdf in batches:
             ids, es = [], []
             for doc_id, t in zip(pdf["doc_id"], pdf["_norm"]):
@@ -591,7 +543,6 @@ def type_token_growth(df: DataFrame, *, buckets: int = 10) -> DataFrame:
 
     Output: (bucket int, cum_tokens bigint, cum_vocab bigint).
     """
-    from crowdsorsa_etl_spark.functions.text import normalize_text
 
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")

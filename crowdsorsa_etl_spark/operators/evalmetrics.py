@@ -84,13 +84,6 @@ def _clipped(
     )
 
 
-def bleu2_pairs(cands: DataFrame, refs: DataFrame) -> DataFrame:
-    """(pair_id, c_len, r_len, p1, p2, bp, bleu2) per pair, 6 dp."""
-    u = _clipped(cands, refs, 1, pair_col="pair_id", text_col="text")
-    b = _clipped(cands, refs, 2, pair_col="pair_id", text_col="text")
-    return bleu2_from_clipped(u, b)
-
-
 def bleu2_from_clipped(u: DataFrame, b: DataFrame) -> DataFrame:
     """The metric projection over precomputed clipped-count tables
     (orders 1 and 2, the :func:`_clipped` shape) — the per-pair count
@@ -133,13 +126,6 @@ def bleu2_from_clipped(u: DataFrame, b: DataFrame) -> DataFrame:
         F.round(bp, 6).alias("bp"),
         F.round(bleu, 6).alias("bleu2"),
     )
-
-
-def rouge_pairs(cands: DataFrame, refs: DataFrame, n: int) -> DataFrame:
-    """(pair_id, matched, cand_ngrams, ref_ngrams, recall, precision, f1)
-    for ROUGE-N, 6 dp; F1 is 0 where nothing matched."""
-    c = _clipped(cands, refs, n, pair_col="pair_id", text_col="text")
-    return rouge_from_clipped(c)
 
 
 def rouge_from_clipped(c: DataFrame) -> DataFrame:

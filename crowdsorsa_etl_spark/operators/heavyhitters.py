@@ -78,24 +78,18 @@ def mg_partition_summaries(
     toks = normalized_tokens(df, text_col)
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one MG table per PARTITION: the dict survives across the
-        # partition's Arrow batches, so memory stays O(capacity)
-        counters: dict[str, int] = {}
+        # one MG table per PARTITION: the fold consumes the partition's
+        # Arrow batches as one token stream, so memory stays O(capacity)
         n_part = 0
-        for pdf in batches:
-            col = pdf["token"]
-            n_part += len(col)
-            for tok in col:
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < capacity:
-                    counters[tok] = 1
-                else:
-                    drained = [t for t, c in counters.items() if c == 1]
-                    for t in counters:
-                        counters[t] -= 1
-                    for t in drained:
-                        del counters[t]
+
+        def tokens() -> Iterator[str]:
+            nonlocal n_part
+            for pdf in batches:
+                col = pdf["token"]
+                n_part += len(col)
+                yield from col
+
+        counters = _mg_fold(tokens(), capacity)
         if n_part:
             # sentinel row (token=NULL) carries the partition's token
             # count so callers get n without a second corpus scan
@@ -155,19 +149,6 @@ def heavy_hitters(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") >= F.lit(threshold))
     )
-
-
-def merge_summaries(*summaries: DataFrame) -> DataFrame:
-    """MG summaries merge by summing per-token estimates (Agarwal et al.
-    2012: the union's estimate error is the sum of the parts' bounds —
-    still ≤ n_total/(capacity+1)). Shape-compatible with the
-    incremental-MV state fold (operators/incremental.py)."""
-    if not summaries:
-        raise ValueError("need at least one summary")
-    merged = summaries[0]
-    for s in summaries[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("token").agg(F.sum("est").alias("est"))
 
 
 def mg_grouped_summaries(

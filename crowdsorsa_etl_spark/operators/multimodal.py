@@ -7,7 +7,7 @@ crowdsorsa-etl-2023.R:32-40 → WKB BinaryType here). Parquet stores binary
 pages untouched; any partitioning works; nothing about the pipeline is
 media-specific until a decode UDF runs.
 
-Decode/feature-extract/resize/frame-sample run as Arrow-batched
+Decode and feature extraction run as Arrow-batched
 ``mapInPandas`` stages: bytes in → feature columns out, one batch at a time,
 so peak executor memory is one Arrow batch of payloads, not a partition.
 
@@ -28,12 +28,20 @@ import struct
 import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crowdsorsa_etl_spark.functions import imagecodec
+from crowdsorsa_etl_spark.functions import audiocodec, imagecodec
+from crowdsorsa_etl_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
+from crowdsorsa_etl_spark.functions.videocodec import (
+    decode_avi,
+    decode_dib_frame,
+    encode_avi_mjpeg,
+    encode_avi_raw,
+)
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 
 _JPEG_QUALITY = 100
@@ -75,7 +83,6 @@ def attach_png_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     bytes into a tiny genuine PNG (one gray pixel per text byte, row-major
     8×N) via an Arrow batch stage, so downstream ``decode_images`` exercises
     the stdlib codec end-to-end on driver-provided data."""
-    import numpy as np
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -97,9 +104,6 @@ def attach_jpeg_payload(df: DataFrame) -> DataFrame:
     into a genuine baseline JPEG (one gray pixel per text byte, row-major
     8×N, same layout as ``attach_png_payload``) so ``decode_images``
     exercises the stdlib Huffman/DCT decoder end-to-end."""
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions.jpegcodec import encode_jpeg
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -200,7 +204,6 @@ def image_checksums(df: DataFrame) -> DataFrame:
     SQL straight from the source bytes, independent of this code path).
     Integer outputs only: no float-rounding parity risk cross-engine.
     """
-    import numpy as np
 
     def checksum_one(payload):
         if payload is None:
@@ -236,106 +239,6 @@ def image_checksums(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, CHECKSUM_SCHEMA)
 
 
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame,
-    *,
-    every_n_bytes: int = 64,
-    max_frames: int = 8,
-) -> DataFrame:
-    """Frame-sampling plumbing: split each payload into fixed-stride chunks
-    (stand-in for video keyframe extraction — 1 input row → N frame rows).
-    Built-in only: no UDF, the explode happens JVM-side."""
-    n = F.length(F.col("payload"))
-    idx = F.sequence(
-        F.lit(0),
-        F.least(F.floor((n - 1) / every_n_bytes).cast("int"), F.lit(max_frames - 1)),
-    )
-    return (
-        df.select(
-            F.col("doc_id"),
-            F.col("payload"),
-            F.explode(idx).alias("frame_idx"),
-        )
-        .select(
-            F.col("doc_id"),
-            F.col("frame_idx").cast("int"),
-            F.substring(
-                F.col("payload"), F.col("frame_idx") * every_n_bytes + 1, every_n_bytes
-            ).alias("frame_bytes"),
-        )
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    width: int,
-    height: int,
-    allow_fake: bool = False,
-) -> DataFrame:
-    """bytes → resized bytes via mapInPandas.
-
-    PNG/BMP payloads are REALLY resized: stdlib decode → nearest-neighbor
-    resample → re-encode in the same format. Other formats fall back to a
-    deterministic truncate/cycle-pad fake (exercises the bytes-in/bytes-out
-    batching contract) when ``allow_fake=True``, or a null payload
-    otherwise — never an exception mid-job.
-    """
-    budget = max(1, (width * height) // 64)
-
-    def resize_one(payload):
-        if payload is None:
-            return None
-        body = bytes(payload)
-        try:
-            fmt, px = imagecodec.decode_image(body)
-        except _DECODE_ERRORS:
-            if not allow_fake:
-                return None
-            if len(body) >= budget:
-                return body[:budget]
-            reps = (budget + len(body) - 1) // max(len(body), 1)
-            return (body * reps)[:budget]
-        resized = imagecodec.resize_nearest(px, width, height)
-        if fmt == "bmp":
-            if resized.ndim == 3 and resized.shape[2] == 4:
-                resized = resized[:, :, :3]
-            return imagecodec.encode_bmp(resized)
-        return imagecodec.encode_png(resized)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(resize_one),
-                }
-            )
-
-    return df.mapInPandas(batches, RESIZED_SCHEMA)
-
-
 def extract_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
     """bytes → fixed-dim embedding column via mapInPandas (the
     feature-extract stage of a multimodal pipeline). The deterministic
@@ -345,7 +248,6 @@ def extract_features(df: DataFrame, *, dim: int = 16) -> DataFrame:
     the similarity operators (cosine_topk / lsh_topk / ivf_topk), which is
     the point: multimodal similarity search composes from existing pieces.
     """
-    import numpy as np
 
     # deterministic projection matrix (256 byte-values → dim), no RNG state
     proj = np.array(
@@ -398,9 +300,6 @@ def attach_wav_payload(df: DataFrame) -> DataFrame:
     · 256 — full int16 swing, sign split at 0x80) and wrap it in a
     genuine WAV container so downstream ops exercise header parse +
     sample decode end-to-end."""
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions import audiocodec
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -427,9 +326,6 @@ def audio_frame_features(df: DataFrame, *, frame: int = 64) -> DataFrame:
     than ``frame``), summed per-frame energy Σs², the max frame energy,
     and signal zero crossings (sign-split count). All integers: the
     oracle re-derives every value from the source bytes."""
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions import audiocodec
 
     if frame < 1:
         raise ValueError(f"frame must be >= 1; got {frame}")
@@ -580,12 +476,6 @@ def attach_avi_payload(df: DataFrame, *, codec: str = "mjpeg") -> DataFrame:
     frames (lossless archival profile — the one whose per-frame hashes
     are exactly replayable in SQL). The frame count and geometry are
     closed-form in the text length either way."""
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions.videocodec import (
-        encode_avi_mjpeg,
-        encode_avi_raw,
-    )
 
     if codec not in ("mjpeg", "raw"):
         raise ValueError(f"codec must be 'mjpeg' or 'raw'; got {codec!r}")
@@ -648,13 +538,6 @@ def decode_video_frames(
     (bad RIFF, non-MJPG codec, corrupt frame JPEG) degrades to one
     ``format='unsupported'`` row with null fields — never a task failure.
     """
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions.jpegcodec import decode_jpeg
-    from crowdsorsa_etl_spark.functions.videocodec import (
-        decode_avi,
-        decode_dib_frame,
-    )
 
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1; got {every_n}")
@@ -710,7 +593,6 @@ def _ahash_bands_from_flat(flat) -> list[int]:
     the 64-sample mean with integer math (``v*64 >= sum``) → 8 big-endian
     8-bit band values. One definition for images AND video frames, and
     the exact rule every oracle replays."""
-    import numpy as np
 
     flat = np.asarray(flat, dtype=np.int64).reshape(-1)[:_AHASH_PIXELS]
     if flat.shape[0] < _AHASH_PIXELS:
@@ -745,12 +627,6 @@ def video_frame_signatures(df: DataFrame) -> DataFrame:
     n_frames signature rows ``(doc_id, frame_idx, bands array<long>)``.
     A malformed payload contributes no rows (the near-dup contract: a
     corrupt video can't match anything, and must not fail the task)."""
-
-    from crowdsorsa_etl_spark.functions.jpegcodec import decode_jpeg
-    from crowdsorsa_etl_spark.functions.videocodec import (
-        decode_avi,
-        decode_dib_frame,
-    )
 
     def sig_rows(doc_id, payload):
         if payload is None:
@@ -898,9 +774,6 @@ def audio_frame_signatures(df: DataFrame, *, frame: int = 64) -> DataFrame:
     ceil(n_samples / frame) signature rows ``(doc_id, frame_idx, bands)``.
     A malformed payload contributes no rows (a corrupt clip cannot match
     anything, and must not fail the task)."""
-    import numpy as np
-
-    from crowdsorsa_etl_spark.functions import audiocodec
 
     if frame < 1:
         raise ValueError(f"frame must be >= 1; got {frame}")

@@ -37,7 +37,9 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark.operators.similarity import (
     MAX_QUERY_ROWS,
     _collect_bounded,
+    _train,
     dot,
+    ivf_assign,
     l2_norm,
 )
 
@@ -292,7 +294,6 @@ def ivfpq_write_index(
     so the composed DuckDB oracles (lsh_oracles.ivfpq_topk_sql /
     ivfpq_residual_topk_sql) replay the whole index build symbolically.
     """
-    from crowdsorsa_etl_spark.operators.similarity import _train, ivf_assign
 
     centroids = _train(
         corpus,
@@ -390,10 +391,9 @@ def ivfpq_append_index(new_vectors: DataFrame, path: str) -> None:
     directory layout.
 
     When the corpus distribution drifts from the frozen centroids, append
-    quality degrades — watch ``ivfpq_index_stats`` (falling within-list
-    centroid cosine, skewing list sizes) as the retrain trigger.
+    quality degrades (falling within-list centroid cosine, skewing list
+    sizes); retraining rebuilds the index from scratch.
     """
-    from crowdsorsa_etl_spark.operators.similarity import ivf_assign
 
     spark = new_vectors.sparkSession
     centroids, books, by_residual = _load_index_artifacts(spark, path)
@@ -409,35 +409,6 @@ def ivfpq_append_index(new_vectors: DataFrame, path: str) -> None:
         .write.mode("append")
         .partitionBy("list_id")
         .parquet(path)
-    )
-
-
-def ivfpq_index_stats(spark, path: str) -> DataFrame:
-    """Per-list health stats of a persisted IVF-PQ index — the retrain
-    trigger for the append path: (list_id, n_vectors, mean_centroid_cos).
-    A drifting corpus shows up as skewed list sizes and falling mean
-    cosine of vectors to their own list centroid; compare against the
-    numbers recorded at build time to decide when frozen artifacts have
-    aged out. One pruned-column scan + a broadcast join — no Python."""
-    # centroid norm hoisted onto the broadcast side: one fold per LIST,
-    # not one per index row (value identical — same fold, same array)
-    cent = spark.read.parquet(path.rstrip("/") + "/_centroids").withColumn(
-        "_cn", l2_norm(F.col("centroid"))
-    )
-    index = spark.read.parquet(path).select("list_id", "embedding")
-    joined = index.join(F.broadcast(cent), "list_id")
-    cos = F.round(
-        dot(F.col("embedding"), F.col("centroid"))
-        / (l2_norm(F.col("embedding")) * F.col("_cn")),
-        6,
-    )
-    return (
-        joined.withColumn("_cos", cos)
-        .groupBy("list_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
-            F.round(F.avg("_cos"), 6).alias("mean_centroid_cos"),
-        )
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
+from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
 _ITERATIONS = 5
 _SAMPLE_SIZE = 2048
@@ -218,8 +219,6 @@ def cosine_topk_vectorized(
     values the corpus scan holds, so the expression-path cosine stays
     bit-identical.
     """
-    import numpy as np
-    import pandas as pd
 
     q_rows = _collect_bounded(
         queries.select(F.col("vec_id"), F.col("embedding")), max_queries, "query set"
@@ -491,8 +490,6 @@ def embedding_cosine_pairs_lsh(
     """
     # materialize buckets once — the a/b sides of the self-join would each
     # re-run the projection UDF otherwise
-    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
-
     bucketed = materialize(emb.select(
         F.col("vec_id").alias("id"),
         F.posexplode(
@@ -578,7 +575,6 @@ def ivf_train_centroids(
 
     Returns a unit-normalized (n_lists, dim) ndarray.
     """
-    import numpy as np
 
     rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
     x = np.array([r[1] for r in rows], dtype=np.float64)
@@ -723,13 +719,10 @@ def ivf_assign(
     Arrow batch; at scale, WRITE the result partitioned by list_id so probes
     prune partitions at scan time (the parquet analog of FAISS's inverted
     lists)."""
-    import numpy as np
 
     bc = corpus.sparkSession.sparkContext.broadcast(centroids)
 
     def assign(batches):
-        import pandas as pd
-
         c = bc.value
         for pdf in batches:
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
@@ -764,7 +757,6 @@ def ivf_topk(
     (:func:`kmeans_train_distributed`) so n_lists can track √N at scale;
     the default bounded sample mirrors FAISS's train step.
     """
-    import numpy as np
 
     centroids = _train(
         corpus,
@@ -844,7 +836,6 @@ def ivf_topk_curve(
 
     Output: (n_probe int, query_id, neighbor_id, cosine, rank).
     """
-    import numpy as np
 
     probe_list = tuple(sorted(set(int(p) for p in probe_list)))
     if not probe_list or probe_list[0] < 1 or probe_list[-1] > n_lists:
@@ -920,102 +911,6 @@ def ivf_topk_curve(
         )
         out = tk if out is None else out.unionAll(tk)
     return out
-
-
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    n_lists: int = 16,
-) -> None:
-    """Persist an IVF index as a parquet layout PARTITIONED BY list_id —
-    the at-rest analog of FAISS inverted lists: a later search that probes
-    n_probe lists reads only those directories (partition pruning at the
-    scan, verified by plan test), i.e. ~n_probe/n_lists of the index bytes.
-
-    Centroids are stored alongside (``<path>/_centroids``) so search needs
-    no retraining.
-    """
-    centroids = _train(
-        corpus,
-        n_lists=n_lists,
-        id_col="vec_id",
-        vec_col="embedding",
-        sample_size=_SAMPLE_SIZE,
-        trainer="sample",
-    )
-    assigned = ivf_assign(corpus, centroids)
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(path)
-    spark = corpus.sparkSession
-    cent_rows = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(centroids)
-    ]
-    spark.createDataFrame(cent_rows, "list_id int, centroid array<float>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/_centroids")
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Search a persisted IVF index: assign each query to its n_probe
-    nearest stored centroids driver-side (bounded), then scan ONLY the
-    probed list partitions (``list_id IN (...)`` prunes directories) and
-    re-rank exactly. Same output contract as cosine_topk."""
-    import numpy as np
-
-    cent_rows = spark.read.parquet(path.rstrip("/") + "/_centroids").collect()
-    centroids = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
-    for r in cent_rows:
-        centroids[r.list_id] = r.centroid
-
-    q_rows = _collect_bounded(
-        queries.select("vec_id", "embedding"), MAX_QUERY_ROWS, "query set"
-    )
-    probes = []
-    for r in q_rows:
-        qv = np.asarray(r[1], dtype=np.float64)
-        qv /= max(np.linalg.norm(qv), 1e-12)
-        for l in np.argsort(-(centroids @ qv))[:n_probe]:
-            probes.append((int(r[0]), int(l)))
-    probe_df = spark.createDataFrame(probes, "query_id long, list_id int")
-    probed_lists = sorted({l for _, l in probes})
-
-    q_df = spark.createDataFrame(
-        [(int(r[0]), [float(v) for v in r[1]]) for r in q_rows],
-        "query_id long, _qv array<float>",
-    ).withColumn("_qn", l2_norm(F.col("_qv")))
-
-    # the isin filter is a PARTITION filter: only probed directories scan
-    index = spark.read.parquet(path).filter(F.col("list_id").isin(probed_lists))
-    cand = (
-        # corpus-side norm hoisted below the probe joins (see ivf_topk)
-        index.withColumn("_nn", l2_norm(F.col("embedding")))
-        .join(F.broadcast(probe_df), "list_id")
-        .join(F.broadcast(q_df), "query_id")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                dot(F.col("embedding"), F.col("_qv"))
-                / (F.col("_nn") * F.col("_qn")),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
-    )
 
 
 def semdedup(

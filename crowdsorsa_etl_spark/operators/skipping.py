@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 
 
 # one bloom geometry for build and probe: ~0.2% false positives at ~1.1k
-# distinct values per file
+# distinct values per file; a power of two, because positions slice into
+# word/bit with shifts
 _BLOOM_BITS = 8192
 _BLOOM_HASHES = 5
 
@@ -89,16 +90,14 @@ def canonical_type_for_value(value) -> str:
     return "string"
 
 
-def collect_bloom_stats(
-    spark: SparkSession, path: str, col: str, *, n_bits: int = _BLOOM_BITS
-) -> DataFrame:
+def collect_bloom_stats(spark: SparkSession, path: str, col: str) -> DataFrame:
     """Per-file bloom bitsets for equality probes on ``col``:
     (file_path, bloom map<int, bigint>) — the bitset stored sparsely as
     64-bit words keyed by word index (only non-zero words materialize).
 
-    ``n_bits`` must be a power of two (positions slice into word/bit with
-    shifts), and the probe side reads with ``_BLOOM_BITS``. Built with ONE
-    partial-aggregable groupBy chain: explode the k positions per row,
+    Build and probe share the ``_BLOOM_BITS``/``_BLOOM_HASHES`` geometry
+    (a filter built with other positions than it is probed with prunes
+    files that hold the value). Built with ONE partial-aggregable groupBy chain: explode the k positions per row,
     bit_or the masks per (file, word), collect the sparse words per file.
 
     Build and probe must hash the SAME physical type (xxhash64 hashes INT
@@ -109,8 +108,6 @@ def collect_bloom_stats(
     the probe value's python type, so both sides agree for
     int32/int64/string/double columns alike.
     """
-    if n_bits & (n_bits - 1):
-        raise ValueError(f"n_bits must be a power of two, got {n_bits}")
     base = spark.read.parquet(path)
     value_type = _canonical_hash_type(dict(base.dtypes)[col].split("(")[0])
     df = base.select(
@@ -120,7 +117,7 @@ def collect_bloom_stats(
     pos = F.explode(
         F.array(
             *[
-                F.pmod(F.xxhash64(F.col("_v"), F.lit(i)), F.lit(n_bits))
+                F.pmod(F.xxhash64(F.col("_v"), F.lit(i)), F.lit(_BLOOM_BITS))
                 for i in range(_BLOOM_HASHES)
             ]
         )

@@ -188,27 +188,3 @@ def hilbert_cte_sql(
     )
     SELECT id, d AS h FROM hil WHERE s = 0
     """
-
-
-def hilbert_write(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    *,
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
-    """zorder_write's Hilbert twin: cluster files along the Hilbert curve
-    of (x_col, y_col)."""
-    hed = df.withColumn(
-        "_h", hilbert_value(F.col(x_col), F.col(y_col), bits)
-    )
-    parts = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        hed.repartitionByRange(parts, "_h")
-        .sortWithinPartitions("_h")
-        .drop("_h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

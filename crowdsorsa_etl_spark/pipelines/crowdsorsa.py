@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.config import PipelineConfig, config_for_season
 from crowdsorsa_etl_spark.functions import geo
 from crowdsorsa_etl_spark.functions.docmodel import (
     build_document,
@@ -30,15 +29,12 @@ from crowdsorsa_etl_spark.functions.text import fix_year_typo, repair_mojibake
 def documents_2023(
     observations: DataFrame,
     municipality_dim: DataFrame,
-    config: PipelineConfig | None = None,
     source_id: str = "KE.1501",
 ) -> DataFrame:
     """2023 season: municipality recode + broadcast lookup, full datetime
     parse (hour/minute emitted), mojibake repair, geometry validity pass,
     facts only when area ≥ 1 m². (crowdsorsa-etl-2023.R:28-179)
     """
-    cfg = config or config_for_season(2023)
-
     # municipality recode BEFORE the dim lookup (2023.R:51-52, trap 5)
     obs = observations.withColumn(
         "muni_code",
@@ -55,9 +51,7 @@ def documents_2023(
             "pinta_ala",
             F.coalesce(
                 F.col("area_m2"),
-                geo.area_m2(
-                    F.col("geom_valid"), cfg.crs_label, model=cfg.area_model
-                ),
+                geo.area_m2(F.col("geom_valid"), "WGS84"),
             ),
         )
         # validated geometry when area > 0, raw otherwise (2023.R:63-80, trap S14)
@@ -84,11 +78,11 @@ def documents_2023(
         taxon_id=taxon_id_col(taxon, 2023),
         control_date=F.col("torjunta"),
         geometry_geojson=geo.st_as_geojson_struct(F.col("geom_out")),
-        crs_label=cfg.crs_label,
+        crs_label="WGS84",
         source_id=source_id,
-        collection_id=cfg.collection_id,
+        collection_id="HR.5835",
         area=F.col("pinta_ala"),
-        facts_min_area=cfg.facts_min_area,
+        facts_min_area=1.0,
         hour=F.hour(ts),
         minute=F.minute(ts),
     )
@@ -102,22 +96,19 @@ def documents_2023(
 
 def documents_2024(
     observations: DataFrame,
-    config: PipelineConfig | None = None,
     source_id: str = "KE.1501",
 ) -> DataFrame:
     """2024 season: year-typo repair before date parse (trap 6), municipality
     name inline (no join), lowercase taxon, abundance fields, facts always
     present, planar EUREF area. (crowdsorsa-etl-2024.R:30-147)
     """
-    cfg = config or config_for_season(2024)
-
     obs = (
         observations.withColumn("havaittu_fixed", fix_year_typo(F.col("havaittu")))
         .withColumn("torjuttu_fixed", fix_year_typo(F.col("torjuttu")))
         .withColumn(
             "pinta_ala",
             F.coalesce(
-                F.col("area_m2"), geo.area_m2(F.col("geometry_wkb"), cfg.crs_label)
+                F.col("area_m2"), geo.area_m2(F.col("geometry_wkb"), "EUREF")
             ),
         )
     )
@@ -135,11 +126,11 @@ def documents_2024(
         taxon_id=taxon_id_col(taxon, 2024),
         control_date=F.col("torjuttu_fixed"),
         geometry_geojson=geo.st_as_geojson_struct(F.col("geometry_wkb")),
-        crs_label=cfg.crs_label,
+        crs_label="EUREF",
         source_id=source_id,
-        collection_id=cfg.collection_id,
+        collection_id="HR.5835",
         area=F.col("pinta_ala"),
-        facts_min_area=cfg.facts_min_area,
+        facts_min_area=None,
         abundance=F.col("tiheys"),
     )
 

@@ -973,11 +973,9 @@ def llm_dictionary_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # llm_char_entropy — information-density quality signal: Shannon entropy
-# of each doc's normalized character distribution, computed entirely with
-# higher-order functions (array_distinct × filter-count) — zero shuffle,
-# zero Python, whole-stage codegen. The sibling zlib compression-ratio
-# signal (operators/curation.compression_signals) is pytest-gated (no SQL
-# zlib exists to oracle against).
+# of each doc's normalized character distribution (operators/curation.
+# entropy_signals: Spark-side normalization, one Counter pass per doc in an
+# Arrow batch), zero shuffle.
 # ===========================================================================
 
 
@@ -987,10 +985,7 @@ def _char_entropy_sql() -> str:
 
 @register("llm_char_entropy", _char_entropy_sql())
 def llm_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, entropy): per-doc character entropy in nats, 6 dp —
-    the Arrow-batched form (the pure-HOF `functions/text.char_entropy`
-    is semantically identical but runs interpreted, ~20× slower; a
-    parity test pins the two to each other)."""
+    """(doc_id, entropy): per-doc character entropy in nats, 6 dp."""
     return entropy_signals(_t(spark, sf_dir, "documents"))
 
 

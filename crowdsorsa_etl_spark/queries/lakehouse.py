@@ -828,7 +828,7 @@ def q100_scd2_buffered(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q105_hilbert_layout — Hilbert-curve clustering keys over (customer,
 # order-day): the stronger space-filling curve next to q49's Z-order
 # (consecutive curve positions are always grid neighbors — no Morton
-# seams), behind operators/zorder.hilbert_write. Spark runs the xy2d bit
+# seams), from operators/zorder.hilbert_value. Spark runs the xy2d bit
 # loop as a runtime F.aggregate fold; the oracle replays the IDENTICAL
 # loop as a bounded-depth recursive CTE generated from the same
 # constants (zorder.hilbert_cte_sql) — integer-exact, no float parity

@@ -7,17 +7,14 @@ The reference's only file sink is a driver-side ``cat`` of pretty JSON
   (e.g. season/date): readers prune whole directories; writes parallelize
   per partition. ``maxRecordsPerFile`` bounds file sizes so a skewed
   partition value can't produce one giant file.
-* ``write_bucketed`` — bucketBy on a join key: later joins/aggs on that key
-  skip their shuffle entirely (bucket-aware scan). Requires saveAsTable
-  (bucket metadata lives in the catalog).
+* ``upsert_parquet`` — key-based upsert over a plain parquet table,
+  swapped in by rename-aside.
 
 The reference's ``logs{year}.json`` analogue is the push audit,
 ``http_push.write_audit_log``.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,20 +33,6 @@ def write_partitioned(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_by: list[str],
-    num_buckets: int = 32,
-    sort_by: list[str] | None = None,
-) -> None:
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.format("parquet").saveAsTable(table)
-
-
 def epoch_parquet_writer(path: str):
     """Exactly-once parquet delivery for ``writeStream.foreachBatch`` — the
     dependency-free transactional pattern (what Delta's txn log gives you,
@@ -61,8 +44,7 @@ def epoch_parquet_writer(path: str):
     IDEMPOTENT — epoch N always lands in the same directory, and a replay
     replaces it with identical content instead of appending duplicates.
     Readers see the union via ordinary partition discovery (the ``epoch``
-    partition column doubles as delivery lineage); downstream compaction
-    (``compact_parquet``) folds the per-epoch dirs once they go cold.
+    partition column doubles as delivery lineage).
     """
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
@@ -105,36 +87,6 @@ def _swap_dirs(jvm, fs, path: str, tmp: str) -> None:
         raise IOError(f"could not promote {tmp} to {path}")
     if had_prev:
         fs.delete(old, True)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction — the operational fix for the classic 100 TB
-    failure mode where streaming/incremental writes leave thousands of tiny
-    parquet files whose per-file open/footer cost dominates scans.
-
-    Sizes the rewrite from the CURRENT on-disk bytes (Hadoop FS API, no
-    driver listing of file contents), repartitions to ceil(bytes/target),
-    and swaps via write-to-temp + rename-aside (see ``_swap_dirs`` for the
-    crash-window guarantees). Returns the new file-ish partition count.
-    """
-    jvm = spark._jvm
-    jsc = spark._jsc
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-    total_bytes = fs.getContentSummary(hadoop_path).getLength()
-    n = max(1, math.ceil(total_bytes / target_file_bytes))
-
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-
-    _swap_dirs(jvm, fs, path, tmp)
-    return n
 
 
 def upsert_parquet(

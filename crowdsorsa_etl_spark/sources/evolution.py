@@ -14,8 +14,7 @@ Semantics (SURVEY.md §1.3):
   on the reader, which is Spark's native union-of-footers evolution;
 * missing column → typed NULL (backfill);
 * renamed column → ``rename_map`` ({old: new});
-* extra column → dropped by default, ``on_extra='error'`` to fail loudly, or
-  ``quarantine_extras`` to split them into a side table for audit;
+* extra column → dropped by default, ``on_extra='error'`` to fail loudly;
 * type drift → safe widening casts only (int→long→double, float→double,
   date→timestamp); anything lossy raises.
 
@@ -111,27 +110,6 @@ def conform(
         if extras:
             raise ValueError(f"unexpected columns not in target schema: {extras}")
     return df.select(*out_cols)
-
-
-def quarantine_extras(
-    df: DataFrame,
-    target: T.StructType,
-    *,
-    rename_map: dict[str, str] | None = None,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """The audit side of ``conform``: key columns + every column NOT consumed
-    by the target schema, so drifted-in fields land in a reviewable side
-    table instead of being silently dropped."""
-    rename_map = rename_map or {}
-    target_names = {f.name for f in target.fields}
-    consumed = {
-        n
-        for n in df.columns
-        if n in target_names or rename_map.get(n) in target_names
-    }
-    extras = [n for n in df.columns if n not in consumed]
-    return df.select(*[*(key_cols or []), *extras])
 
 
 def read_evolved(

@@ -19,11 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from crowdsorsa_etl_spark.functions.docmodel import TAXA_2023, TAXA_2024
 from crowdsorsa_etl_spark.functions.geo import polygons_to_wkb
-from crowdsorsa_etl_spark.schemas import (
-    MUNICIPALITY_KEY,
-    OBSERVATIONS_2023,
-    OBSERVATIONS_2024,
-)
+from crowdsorsa_etl_spark.schemas import MUNICIPALITY_KEY, OBSERVATIONS_2023
 
 #: Statistics Finland municipality codes, FULL 2023 classification (public
 #: data, 309 municipalities — the table behind ``geofi::municipality_key_2023``
@@ -221,10 +217,6 @@ def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
             )
         )
     return rows
-
-
-def observations_2024(spark: SparkSession, n: int = 200, seed: int = 11) -> DataFrame:
-    return spark.createDataFrame(observation_rows_2024(n, seed), OBSERVATIONS_2024)
 
 
 def municipality_dim(spark: SparkSession) -> DataFrame:

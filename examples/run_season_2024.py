@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from crowdsorsa_etl_spark.config import SinkConfig, config_for_season
+from crowdsorsa_etl_spark.config import SinkConfig
 from crowdsorsa_etl_spark.pipelines.crowdsorsa import documents_2024
 from crowdsorsa_etl_spark.session import get_spark
 from crowdsorsa_etl_spark.sinks.http_push import push_documents, write_audit_log
@@ -96,7 +96,7 @@ def main() -> None:
     obs = read_shapefile_zip(spark, zip_path).withColumn(
         "area_m2", F.lit(None).cast("double")
     )
-    docs = documents_2024(obs, config_for_season(2024))
+    docs = documents_2024(obs)
 
     # 3. archive the documents as partitioned parquet (new vs reference)
     docs_with_date = docs.withColumn(

@@ -504,6 +504,20 @@ def test_order_check_reorders_both_dicts_in_place():
     assert list(oracles.items()) == [("a", "A"), ("c", "C")]
 
 
+def _function_level_imports(path: str) -> list[str]:
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    local = {
+        sub.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for sub in ast.walk(node)
+        if isinstance(sub, (ast.Import, ast.ImportFrom))
+    }
+    f = os.path.basename(path)
+    return [f"{f}:{ln}: function-level import" for ln in sorted(local)]
+
+
 def _registry_layout_violations(qdir: str) -> list[str]:
     """Modules named after the build round that added them (``round*``,
     ``*_pack``) and function-level imports, for every module in ``qdir``."""
@@ -514,16 +528,7 @@ def _registry_layout_violations(qdir: str) -> list[str]:
         stem = f[:-3]
         if stem.startswith("round") or stem.endswith("_pack"):
             bad.append(f"{f}: round-named module")
-        with open(os.path.join(qdir, f)) as fh:
-            tree = ast.parse(fh.read())
-        local = {
-            sub.lineno
-            for node in ast.walk(tree)
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-            for sub in ast.walk(node)
-            if isinstance(sub, (ast.Import, ast.ImportFrom))
-        }
-        bad += [f"{f}:{ln}: function-level import" for ln in sorted(local)]
+        bad += _function_level_imports(os.path.join(qdir, f))
     return bad
 
 
@@ -534,11 +539,19 @@ def test_query_modules_are_domains_with_hoisted_imports():
     assert not bad, bad
 
 
+# operator modules that import their dependencies once, at the top
+_HOISTED_OPERATORS = ("curation.py", "multimodal.py", "pq.py", "similarity.py")
+
+
 def test_sink_modules_hoist_their_imports():
-    """The sinks import their dependencies once, at the top: ``writers``
-    needs only pyspark, ``ledger`` imports ``writers`` and ``http_push``
-    imports ``ledger``, so no cycle calls for a local import."""
+    """The sinks and the hoisted operator modules import their
+    dependencies once, at the top: ``writers`` needs only pyspark,
+    ``ledger`` imports ``writers`` and ``http_push`` imports ``ledger``;
+    ``pq`` imports ``similarity``, which imports neither ``pq`` nor
+    ``curation``, so no cycle calls for a local import."""
     bad = _registry_layout_violations(os.path.join(PKG, "sinks"))
+    for f in _HOISTED_OPERATORS:
+        bad += _function_level_imports(os.path.join(PKG, "operators", f))
     assert not bad, bad
 
 
@@ -679,12 +692,10 @@ _UNSWEPT_MODULES = {
 
 # defaults that stay without a caller: deployment and outside-input settings
 _UNCALLED_DEFAULTS_OK = {
-    "config_for_season.branch": "the laji.fi branch a deployment pushes to",
     "documents_2023.source_id": "the laji.fi source a deployment registers",
     "documents_2024.source_id": "the laji.fi source a deployment registers",
     "read_shapefile_zip.encoding": "the DBF code page of an outside archive",
     "write_shapefile_zip.encoding": "the DBF code page of an outside archive",
-    "observations_2024.seed": "the module's md5 names the season fixture dir",
 }
 
 _TRANSPARENT_DECORATORS = {"staticmethod", "classmethod"}
@@ -859,3 +870,120 @@ K(1).run()
         package, {"pkg/m.py": module, "use.py": use + "f(1, 2, d=0)\n"}
     )
     assert "pkg/m.py::f.d" not in found and "pkg/m.py::f.b" not in found
+
+
+# --- code only where a non-test caller runs it ---------------------------
+
+_NON_TEST_TREES = tuple(t for t in _CALLER_TREES if t != "tests")
+
+# modules (path under the package) whose top-level names the sweep skips
+_CALLER_SWEEP_EXEMPT = {
+    "streaming/pipeline.py": "its stream starters are driven by tests and "
+    "examples; which of them stay is an open ROADMAP decision",
+    "parity_oracles.py": "the DuckDB reference side: fixtures and oracle "
+    "SQL the tests and the ORACLES digest read",
+    "lsh_oracles.py": "the DuckDB reference side: fixtures and oracle "
+    "SQL the tests and the ORACLES digest read",
+}
+
+# top-level names that stay with test callers only
+_TEST_ONLY_OK = {
+    "kll_cells_py": "the sequential KLL reference the KLL tests compare "
+    "the closed form against",
+    "kll_plan": "the per-level stream lengths the KLL tests compare the "
+    "closed form against",
+    "snapshot_repair": "crash recovery an operator runs by hand after a "
+    "writer dies mid-commit",
+}
+
+
+def _is_registered(node) -> bool:
+    return any(
+        _callee(d.func if isinstance(d, ast.Call) else d) == "register"
+        for d in node.decorator_list
+    )
+
+
+def _test_only_defs(package: dict[str, str], callers: dict[str, str]) -> list[str]:
+    """``module::name`` for every top-level function or class in
+    ``package`` that no file in ``callers`` names outside the definition
+    itself: as a ``Name``, an attribute or an imported name. A
+    ``@register`` query counts as used: the registry runs it."""
+    refs: dict[str, list[tuple[str, int]]] = {}
+    for mod, src in callers.items():
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            else:
+                continue
+            for name in names:
+                refs.setdefault(name, []).append((mod, node.lineno))
+
+    bad = []
+    for mod, src in package.items():
+        if mod.split("/", 1)[-1] in _CALLER_SWEEP_EXEMPT:
+            continue
+        for node in ast.parse(src).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            if _is_registered(node) or node.name in _TEST_ONLY_OK:
+                continue
+            if not any(
+                not (m == mod and node.lineno <= ln <= node.end_lineno)
+                for m, ln in refs.get(node.name, [])
+            ):
+                bad.append(f"{mod}::{node.name}")
+    return sorted(bad)
+
+
+def test_every_function_has_a_non_test_caller():
+    """A function only tests reach is code the pipeline never runs: it
+    costs reading and upkeep and its tests prove nothing about the
+    product. Delete it (or fold it into its test) rather than keep it."""
+    package = _py_sources(REPO, ["crowdsorsa_etl_spark"])
+    bad = _test_only_defs(package, _py_sources(REPO, _NON_TEST_TREES))
+    assert not bad, f"{len(bad)} functions with only test callers: {bad}"
+
+
+def test_caller_guard_flags_test_only_functions(tmp_path):
+    files = {
+        "pkg/m.py": """
+@register("q1", "SELECT 1")
+def q1(spark, sf_dir):
+    return helper(spark)
+
+def helper(x):
+    return x
+
+def only_tests(n):
+    return only_tests(n - 1) if n else 0
+
+def snapshot_repair(path):
+    return path
+
+class Unused:
+    pass
+""",
+        "pkg/streaming/pipeline.py": "def start_x_stream(df):\n    return df\n",
+        "pkg/aliased.py": "def run():\n    return 1\n\n\ndef via_attr():\n    return 2\n",
+        "tools/cli.py": "from pkg.aliased import run as go\n"
+        "import pkg.aliased as a\n\ngo()\na.via_attr()\n",
+        "tests/test_m.py": "from pkg.m import Unused, only_tests\n"
+        "only_tests(2)\nUnused()\n",
+    }
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    root = str(tmp_path)
+    package = _py_sources(root, ["pkg"])
+    found = _test_only_defs(package, _py_sources(root, ["pkg", "tools"]))
+    assert found == ["pkg/m.py::Unused", "pkg/m.py::only_tests"]
+    # the test file's calls would hide both, were tests counted as callers
+    everyone = _py_sources(root, ["pkg", "tools", "tests"])
+    assert _test_only_defs(package, everyone) == []

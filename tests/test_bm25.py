@@ -117,27 +117,3 @@ class TestTriangleCounts:
         )
         got = {r.node: r.n_triangles for r in triangle_counts(edges).collect()}
         assert got == {1: 1, 2: 2, 3: 2, 4: 1}
-
-
-class TestPostingsCompaction:
-    def test_compaction_preserves_results(self, spark, tmp_path):
-        """Repeated appends leave many small files; writers.compact_parquet
-        on the postings/dlen dirs is the operational fix and must not
-        change a single score."""
-        from crowdsorsa_etl_spark.sinks.writers import compact_parquet
-
-        docs = load_table(spark, "documents", SF_DIR)
-        q = _queries(spark)
-        path = str(tmp_path / "idx")
-        bm25_write_index(docs.filter(F.col("doc_id") % 4 == 0), path)
-        for m in (1, 2, 3):
-            bm25_append_index(docs.filter(F.col("doc_id") % 4 == m), path)
-        before = sorted(
-            map(tuple, bm25_query_index(spark, path, q, k=10).collect())
-        )
-        compact_parquet(spark, f"{path}/postings")
-        compact_parquet(spark, f"{path}/dlen")
-        after = sorted(
-            map(tuple, bm25_query_index(spark, path, q, k=10).collect())
-        )
-        assert after == before

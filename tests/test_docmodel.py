@@ -172,9 +172,11 @@ class TestPipelineBulk:
         assert all(len(d["publicDocument"]["keywords"]) == 2 for d in docs)
 
     def test_2024_runs_on_generated_fixture(self, spark):
-        from crowdsorsa_etl_spark.sources.observations import observations_2024
+        from crowdsorsa_etl_spark.schemas import OBSERVATIONS_2024
+        from crowdsorsa_etl_spark.sources.observations import observation_rows_2024
 
-        out = documents_2024(observations_2024(spark, n=50))
+        obs = spark.createDataFrame(observation_rows_2024(50), OBSERVATIONS_2024)
+        out = documents_2024(obs)
         rows = out.collect()
         assert len(rows) == 50
         for r in rows:

@@ -1,4 +1,4 @@
-"""Schema-evolution drift matrix: conform/quarantine/read_evolved against
+"""Schema-evolution drift matrix: conform/read_evolved against
 every drift class the 2023→2024 reference inputs exhibit (rename, added
 column, type widening, extras), plus real mixed-schema parquet reads."""
 
@@ -12,7 +12,6 @@ from crowdsorsa_etl_spark.sources.evolution import (
     RENAME_2023,
     RENAME_2024,
     conform,
-    quarantine_extras,
     read_evolved,
 )
 
@@ -85,24 +84,6 @@ class TestConformMatrix:
         with pytest.raises(ValueError, match="surprise"):
             conform(df, TARGET, on_extra="error")
 
-    def test_quarantine_extras(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", "drifted", 9)],
-            "doc_id long, text string, surprise string, extra2 int",
-        )
-        q = quarantine_extras(df, TARGET, key_cols=["doc_id"])
-        assert q.columns == ["doc_id", "surprise", "extra2"]
-        assert q.first().surprise == "drifted"
-
-    def test_quarantine_respects_rename_map(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", "x")], "id long, text string, surprise string"
-        )
-        q = quarantine_extras(
-            df, TARGET, rename_map={"id": "doc_id"}, key_cols=["id"]
-        )
-        assert q.columns == ["id", "surprise"]  # renamed col is consumed
-
 
 class TestMixedSchemaRead:
     def test_merge_schema_dir(self, spark, tmp_path):
@@ -146,9 +127,10 @@ class TestReferenceDrift:
     crowdsorsa-etl-2024.R:44-50) through one unified schema."""
 
     def test_both_seasons_conform_and_union(self, spark):
+        from crowdsorsa_etl_spark.schemas import OBSERVATIONS_2024
         from crowdsorsa_etl_spark.sources.observations import (
+            observation_rows_2024,
             observations_2023,
-            observations_2024,
         )
 
         s23 = conform(
@@ -157,7 +139,7 @@ class TestReferenceDrift:
             rename_map=RENAME_2023,
         )
         s24 = conform(
-            observations_2024(spark, n=50),
+            spark.createDataFrame(observation_rows_2024(50), OBSERVATIONS_2024),
             OBSERVATIONS_UNIFIED,
             rename_map=RENAME_2024,
         )

@@ -11,6 +11,8 @@ from crowdsorsa_etl_spark.functions.geo import (
     _make_valid_py,
     _multipolygon_area,
     _parse_wkb,
+    _ring_area_geodesic,
+    _ring_area_planar,
     area_m2,
     polygons_to_wkb,
     st_as_geojson_struct,
@@ -35,10 +37,10 @@ class TestWkbRoundtrip:
 
 class TestArea:
     def test_planar_square(self):
-        assert _multipolygon_area(polygons_to_wkb([UNIT_SQUARE]), "planar") == 1.0
+        assert _multipolygon_area(polygons_to_wkb([UNIT_SQUARE]), _ring_area_planar) == 1.0
 
     def test_planar_hole_subtracts(self):
-        area = _multipolygon_area(polygons_to_wkb([SQUARE_WITH_HOLE]), "planar")
+        area = _multipolygon_area(polygons_to_wkb([SQUARE_WITH_HOLE]), _ring_area_planar)
         assert area == 100.0 - 4.0
 
     def test_geodesic_matches_known_value(self):
@@ -52,7 +54,7 @@ class TestArea:
                 (25.0, 60.0),
             ]
         ]
-        area = _multipolygon_area(polygons_to_wkb([sq]), "spherical")
+        area = _multipolygon_area(polygons_to_wkb([sq]), _ring_area_geodesic)
         expected = 111195.0 * 0.001 * 111195.0 * 0.001 * math.cos(math.radians(60.0))
         assert abs(area - expected) / expected < 0.02
 
@@ -101,8 +103,6 @@ class TestMakeValidSelfIntersection:
             assert len(rings[0]) == 4  # closed triangle
             assert rings[0][0] == rings[0][-1]
         # each triangle has area 1/4; crossing point is (0.5, 0.5)
-        from crowdsorsa_etl_spark.functions.geo import _ring_area_planar
-
         areas = sorted(abs(_ring_area_planar(r[0])) for r in fixed)
         assert areas == pytest.approx([0.25, 0.25])
         assert any((0.5, 0.5) in r[0] for r in fixed)
@@ -128,216 +128,3 @@ class TestMakeValidSelfIntersection:
         with_hole = [rings for rings in fixed if len(rings) == 2]
         assert len(with_hole) == 1
         assert (0.1, 0.45) in with_hole[0][1]
-
-
-class TestEllipsoidalModel:
-    """Spherical-vs-ellipsoidal delta bound (VERDICT r2 Missing #4): sf with
-    s2 disabled computes ellipsoidal area; our spherical model deviates by
-    the local-curvature factor (sqrt(MN)/R_mean)^2. Pin that the documented
-    bound holds on the golden polygons and that the ellipsoidal backend is
-    exact against a hand-computed factor."""
-
-    def test_delta_within_documented_bound_at_reference_latitudes(self):
-        from crowdsorsa_etl_spark.functions.geo import (
-            _multipolygon_area,
-        )
-
-        # observation-scale squares across the fixture's latitude band
-        for lat in (60.0, 62.5, 65.0):
-            sq = [[(25.0, lat), (25.001, lat), (25.001, lat + 0.001),
-                   (25.0, lat + 0.001), (25.0, lat)]]
-            wkb = polygons_to_wkb([sq])
-            sph = _multipolygon_area(wkb, "spherical")
-            ell = _multipolygon_area(wkb, "ellipsoidal")
-            delta = abs(sph - ell) / ell
-            # documented: up to ~0.6% at 60-65N, never zero, never > 0.8%
-            assert 0.002 < delta < 0.008, (lat, delta)
-
-    def test_ellipsoidal_matches_local_radius_scaling(self):
-        from crowdsorsa_etl_spark.functions.geo import (
-            _EARTH_RADIUS_M,
-            _local_gaussian_radius,
-            _multipolygon_area,
-        )
-
-        lat = 61.0
-        sq = [[(24.0, lat), (24.002, lat), (24.002, lat + 0.002),
-               (24.0, lat + 0.002), (24.0, lat)]]
-        wkb = polygons_to_wkb([sq])
-        sph = _multipolygon_area(wkb, "spherical")
-        ell = _multipolygon_area(wkb, "ellipsoidal")
-        # same excess, different radius: ratio is exactly (R_local/R_mean)^2
-        r = _local_gaussian_radius(lat + 0.001)  # ring mean latitude
-        assert ell / sph == pytest.approx((r / _EARTH_RADIUS_M) ** 2, rel=1e-6)
-
-    def test_area_m2_model_flag(self, spark):
-        df = spark.createDataFrame(
-            [(polygons_to_wkb(
-                [[[(25.0, 62.0), (25.001, 62.0), (25.001, 62.001),
-                   (25.0, 62.001), (25.0, 62.0)]]]
-            ),)],
-            "g binary",
-        )
-        sph = df.select(area_m2(F.col("g"), "WGS84").alias("a")).first().a
-        ell = df.select(
-            area_m2(F.col("g"), "WGS84", model="ellipsoidal").alias("a")
-        ).first().a
-        assert sph != ell
-        assert abs(sph - ell) / ell < 0.008
-
-
-class TestAuthalicEllipsoid:
-    """The authalic-latitude ellipsoidal backend (Snyder 1987): exact
-    WGS84 surface-area constant, an independent local-metric cross-check,
-    and the documented spherical-model band as an executable property."""
-
-    def test_authalic_constants_give_known_wgs84_surface_area(self):
-        import math
-
-        from crowdsorsa_etl_spark.functions.geo import _AUTHALIC_R2
-
-        # authalic radius 6371007.1810 m; 4πR_q² is the WGS84 ellipsoid
-        # surface area, 5.100656217×10^14 m²
-        assert math.sqrt(_AUTHALIC_R2) == pytest.approx(6371007.1810, abs=1e-3)
-        assert 4.0 * math.pi * _AUTHALIC_R2 == pytest.approx(
-            5.100656217240886e14, rel=1e-12
-        )
-
-    def test_authalic_latitude_fixed_points_and_shrink(self):
-        from crowdsorsa_etl_spark.functions.geo import _authalic_lat_deg
-
-        assert _authalic_lat_deg(0.0) == pytest.approx(0.0, abs=1e-12)
-        assert _authalic_lat_deg(90.0) == pytest.approx(90.0, abs=1e-9)
-        # authalic latitude is pulled toward the equator (|β| < |φ|) —
-        # at 45° by ~0.096° on WGS84
-        assert 44.8 < _authalic_lat_deg(45.0) < 45.0
-        assert _authalic_lat_deg(-45.0) == pytest.approx(
-            -_authalic_lat_deg(45.0), abs=1e-12
-        )
-
-    def test_matches_independent_local_metric_formula(self):
-        """Exact area of a tiny geodetic square is Δλ·N·cosφ × Δφ·M — a
-        formula sharing NO code with the authalic transform. Agreement to
-        1e-6 relative at equator, mid, and polar latitudes."""
-        import math
-
-        from crowdsorsa_etl_spark.functions.geo import (
-            _WGS84_A,
-            _WGS84_E2,
-            _multipolygon_area,
-        )
-
-        for lat in (0.0, 25.0, 45.0, 61.0, 78.0):
-            d = 0.001
-            sq = [[(10.0, lat), (10.0 + d, lat), (10.0 + d, lat + d),
-                   (10.0, lat + d), (10.0, lat)]]
-            ell = _multipolygon_area(polygons_to_wkb([sq]), "ellipsoidal")
-            phi = math.radians(lat + d / 2.0)
-            w2 = 1.0 - _WGS84_E2 * math.sin(phi) ** 2
-            n = _WGS84_A / math.sqrt(w2)
-            m = _WGS84_A * (1.0 - _WGS84_E2) / (w2 * math.sqrt(w2))
-            expect = (
-                math.radians(d) * n * math.cos(phi) * math.radians(d) * m
-            )
-            assert ell == pytest.approx(expect, rel=1e-6), lat
-
-    def test_band_property_vs_spherical(self):
-        """hypothesis property: for any small ring anywhere on the globe,
-        |ellipsoidal/spherical − 1| stays inside the (sqrt(MN)/R_mean)²
-        envelope — −0.67% at the equator rising to +0.90% at the poles;
-        the reference's 60-65°N sits at ~+0.6% (the documented band)."""
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from crowdsorsa_etl_spark.functions.geo import _multipolygon_area
-
-        @settings(max_examples=60, deadline=None)
-        @given(
-            lat=st.floats(min_value=-80.0, max_value=80.0),
-            lon=st.floats(min_value=-179.0, max_value=179.0),
-            d=st.floats(min_value=1e-4, max_value=0.05),
-        )
-        def check(lat, lon, d):
-            sq = [[(lon, lat), (lon + d, lat), (lon + d, lat + d),
-                   (lon, lat + d), (lon, lat)]]
-            wkb = polygons_to_wkb([sq])
-            sph = _multipolygon_area(wkb, "spherical")
-            ell = _multipolygon_area(wkb, "ellipsoidal")
-            assert abs(ell / sph - 1.0) < 0.0095
-
-        check()
-        # and the tight band at the reference's survey latitudes
-        for lat in (60.0, 62.5, 65.0):
-            sq = [[(25.0, lat), (25.01, lat), (25.01, lat + 0.01),
-                   (25.0, lat + 0.01), (25.0, lat)]]
-            wkb = polygons_to_wkb([sq])
-            sph = _multipolygon_area(wkb, "spherical")
-            ell = _multipolygon_area(wkb, "ellipsoidal")
-            assert 0.004 < ell / sph - 1.0 < 0.007
-
-
-class TestFlagshipAreaModel:
-    """The 2023 flagship's area-model contract: the default (spherical,
-    sf/s2 parity — the reference's own numbers) is byte-stable, and the
-    ellipsoidal flag demonstrably CHANGES fixture area facts — the case
-    where the models differ post-ceil, and why the default stays put."""
-
-    def test_fixture_ceils_flip_under_ellipsoidal(self, spark):
-        from crowdsorsa_etl_spark import parity_oracles
-        from crowdsorsa_etl_spark.functions.geo import (
-            st_area_ellipsoidal,
-            st_area_geodesic,
-            st_make_valid_multi,
-        )
-        from crowdsorsa_etl_spark.schemas import OBSERVATIONS_2023
-
-        d = parity_oracles.ensure_observation_fixtures()
-        g = (
-            spark.read.schema(OBSERVATIONS_2023)
-            .parquet(f"{d}/observations_2023.parquet")
-            .select(st_make_valid_multi(F.col("geometry_wkb")).alias("g"))
-        )
-        both = g.select(
-            F.ceil(st_area_geodesic(F.col("g"))).alias("sph"),
-            F.ceil(st_area_ellipsoidal(F.col("g"))).alias("ell"),
-        ).collect()
-        flips = sum(1 for r in both if r["sph"] != r["ell"])
-        # the ~0.6% model delta at 60-65°N exceeds 1 m² on these polygons:
-        # ceil() does NOT absorb it, so switching the default would break
-        # reference parity — this pins that fact executable
-        assert flips > len(both) * 0.5
-
-    def test_pipeline_area_model_flag_plumbs_through(self, spark):
-        from crowdsorsa_etl_spark import parity_oracles
-        from crowdsorsa_etl_spark.config import config_for_season
-        from crowdsorsa_etl_spark.pipelines.crowdsorsa import documents_2023
-        from crowdsorsa_etl_spark.schemas import (
-            MUNICIPALITY_KEY,
-            OBSERVATIONS_2023,
-        )
-        from dataclasses import replace
-
-        d = parity_oracles.ensure_observation_fixtures()
-        obs = (
-            spark.read.schema(OBSERVATIONS_2023)
-            .parquet(f"{d}/observations_2023.parquet")
-            .filter(F.col("area_m2").isNull())
-            .limit(20)
-        )
-        dim = spark.read.schema(MUNICIPALITY_KEY).parquet(
-            f"{d}/municipality_key.parquet"
-        )
-        cfg = config_for_season(2023)
-        assert cfg.area_model == "spherical"  # the reference-parity default
-        base = {
-            r["obs_id"]: r["document_json"]
-            for r in documents_2023(obs, dim, cfg).collect()
-        }
-        ell = {
-            r["obs_id"]: r["document_json"]
-            for r in documents_2023(
-                obs, dim, replace(cfg, area_model="ellipsoidal")
-            ).collect()
-        }
-        assert base.keys() == ell.keys()
-        assert any(base[k] != ell[k] for k in base)

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark.operators.heavyhitters import (
     _mg_fold,
     heavy_hitters,
-    merge_summaries,
     mg_partition_summaries,
 )
 
@@ -97,16 +96,6 @@ class TestSummaries:
         rows = mg_partition_summaries(df, "text", capacity=8).collect()
         total = sum(r["est"] for r in rows if r["token"] is None)
         assert total == 7
-
-    def test_merge_sums_estimates(self, spark):
-        s1 = spark.createDataFrame([("a", 3), ("b", 1)], "token string, est long")
-        s2 = spark.createDataFrame([("a", 2), ("c", 4)], "token string, est long")
-        got = {r["token"]: r["est"] for r in merge_summaries(s1, s2).collect()}
-        assert got == {"a": 5, "b": 1, "c": 4}
-
-    def test_merge_requires_input(self):
-        with pytest.raises(ValueError):
-            merge_summaries()
 
     def test_capacity_guard(self, spark):
         with pytest.raises(ValueError, match="capacity"):

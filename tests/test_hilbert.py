@@ -1,6 +1,6 @@
-"""Hilbert curve layout: parity with the reference xy2d loop,
+"""Hilbert curve keys: parity with the reference xy2d loop and
 space-filling-curve properties (bijectivity, unit-step adjacency — the
-property Z-order lacks), and the clustered write."""
+property Z-order lacks)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark.operators.zorder import (
     hilbert_cte_sql,
     hilbert_value,
-    hilbert_write,
 )
 
 
@@ -90,32 +89,3 @@ class TestHilbertValue:
             ).collect()
         }
         assert got == oracle
-
-
-class TestHilbertWrite:
-    def test_files_cover_disjoint_curve_ranges(self, spark, tmp_path):
-        import itertools
-
-        pts = [
-            (x, y) for x, y in itertools.product(range(16), range(16))
-        ]
-        df = spark.createDataFrame(pts, "x long, y long")
-        path = str(tmp_path / "hil")
-        hilbert_write(df, path, "x", "y", bits=4, num_files=4)
-        back = spark.read.parquet(path)
-        assert back.count() == 256
-        # per-file curve ranges must not overlap (range partitioning)
-        withf = back.select(
-            "x",
-            "y",
-            hilbert_value(F.col("x"), F.col("y"), 4).alias("h"),
-            F.input_file_name().alias("f"),
-        )
-        ranges = (
-            withf.groupBy("f")
-            .agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-            .collect()
-        )
-        spans = sorted((r["lo"], r["hi"]) for r in ranges)
-        for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-            assert hi1 < lo2

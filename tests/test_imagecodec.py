@@ -1,5 +1,5 @@
 """Stdlib PNG/BMP codec: round-trips, all five PNG filters, palette, BMP
-padding/orientation, resize and luma math. No Spark session needed."""
+padding/orientation and luma math. No Spark session needed."""
 
 from __future__ import annotations
 
@@ -18,6 +18,24 @@ def _rng_img(h, w, c, seed=7):
     return rng.integers(0, 256, size=shape, dtype=np.uint8).reshape(h, w, -1)
 
 
+def _encode_bmp(img):
+    """uint8 array (h, w, 3) RGB → 24-bit bottom-up BMP bytes (fixture
+    builder for the decoder tests)."""
+    h, w, _ = img.shape
+    row_bytes = ((w * 3 + 3) // 4) * 4
+    pad = row_bytes - w * 3
+    body = bytearray()
+    bgr = np.ascontiguousarray(img[:, :, ::-1], dtype=np.uint8)
+    for y in range(h - 1, -1, -1):  # bottom-up
+        body.extend(bgr[y].tobytes())
+        body.extend(b"\x00" * pad)
+    file_hdr = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+    info_hdr = struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
+    )
+    return file_hdr + info_hdr + bytes(body)
+
+
 class TestPngRoundtrip:
     @pytest.mark.parametrize("channels", [1, 2, 3, 4])
     def test_roundtrip_exact(self, channels):
@@ -33,7 +51,7 @@ class TestPngRoundtrip:
 
     def test_sniff(self):
         assert ic.sniff_format(ic.encode_png(_rng_img(2, 2, 3))) == "png"
-        assert ic.sniff_format(ic.encode_bmp(_rng_img(2, 2, 3))) == "bmp"
+        assert ic.sniff_format(_encode_bmp(_rng_img(2, 2, 3))) == "bmp"
         assert ic.sniff_format(b"\xff\xd8\xffJPEG-ish") == "jpeg"
         assert ic.sniff_format(b"RIFFxxxxWEBP") is None
 
@@ -136,12 +154,12 @@ class TestPngFilters:
 class TestBmp:
     def test_roundtrip_with_row_padding(self):
         img = _rng_img(4, 3, 3)  # width 3 → 9 bytes/row → 3 pad bytes
-        out = ic.decode_bmp(ic.encode_bmp(img))
+        out = ic.decode_bmp(_encode_bmp(img))
         assert np.array_equal(out, img)
 
     def test_top_down_bmp(self):
         img = _rng_img(3, 2, 3)
-        data = bytearray(ic.encode_bmp(img[::-1]))  # encoder writes bottom-up
+        data = bytearray(_encode_bmp(img[::-1]))  # encoder writes bottom-up
         data[22:26] = struct.pack("<i", -3)  # negative height = top-down
         out = ic.decode_bmp(bytes(data))
         assert np.array_equal(out, img[::-1][::-1])
@@ -157,23 +175,13 @@ class TestBmp:
         assert out[0, 1].tolist() == [7, 6, 5, 8]
 
     def test_compressed_rejected(self):
-        data = bytearray(ic.encode_bmp(_rng_img(2, 2, 3)))
+        data = bytearray(_encode_bmp(_rng_img(2, 2, 3)))
         data[30:34] = struct.pack("<I", 1)  # RLE8
         with pytest.raises(ValueError):
             ic.decode_bmp(bytes(data))
 
 
 class TestOps:
-    def test_resize_nearest_identity(self):
-        img = _rng_img(4, 4, 3)
-        assert np.array_equal(ic.resize_nearest(img, 4, 4), img)
-
-    def test_resize_nearest_upscale_2x(self):
-        img = np.array([[0, 255]], dtype=np.uint8).reshape(1, 2, 1)
-        out = ic.resize_nearest(img, 4, 2)
-        assert out.shape == (2, 4, 1)
-        assert out[:, :, 0].tolist() == [[0, 0, 255, 255]] * 2
-
     def test_mean_luma_known_values(self):
         white = np.full((2, 2, 3), 255, dtype=np.uint8)
         assert ic.mean_luma(white) == pytest.approx(1.0, abs=1e-9)
@@ -186,6 +194,6 @@ class TestOps:
     def test_decode_image_dispatch(self):
         img = _rng_img(3, 3, 3)
         assert ic.decode_image(ic.encode_png(img))[0] == "png"
-        assert ic.decode_image(ic.encode_bmp(img))[0] == "bmp"
+        assert ic.decode_image(_encode_bmp(img))[0] == "bmp"
         with pytest.raises(ValueError):
             ic.decode_image(b"GIF89a...")

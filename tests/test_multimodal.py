@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from crowdsorsa_etl_spark.operators.multimodal import (
     attach_binary_payload,
     decode_images,
-    sample_frames,
 )
 from crowdsorsa_etl_spark.sources.parquet import load_table
 
@@ -57,60 +56,8 @@ class TestMultimodal:
         b = {r.doc_id: r.mean_luma for r in decode_images(p, allow_fake=True).collect()}
         assert a == b
 
-    def test_frame_sampling(self, spark):
-        docs = load_table(spark, "documents", SF_DIR).limit(5)
-        payloads = attach_binary_payload(docs)
-        frames = sample_frames(payloads, every_n_bytes=64, max_frames=4)
-        rows = frames.collect()
-        assert all(0 <= r.frame_idx < 4 for r in rows)
-        assert all(1 <= len(r.frame_bytes) <= 64 for r in rows)
-        # per-doc frame indices are dense from 0
-        by_doc: dict[int, list[int]] = {}
-        for r in rows:
-            by_doc.setdefault(r.doc_id, []).append(r.frame_idx)
-        for idxs in by_doc.values():
-            assert sorted(idxs) == list(range(len(idxs)))
-
 
 class TestResizeAndFeatures:
-    def test_resize_hits_byte_budget(self, spark):
-        from crowdsorsa_etl_spark.operators.multimodal import (
-            attach_binary_payload,
-            resize_images,
-        )
-        from crowdsorsa_etl_spark.sources.parquet import load_table
-
-        docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-        out = resize_images(
-            attach_binary_payload(docs), width=64, height=64, allow_fake=True
-        )
-        rows = out.collect()
-        assert rows and all(len(r.payload) == (64 * 64) // 64 for r in rows)
-        assert all(r.width == 64 and r.height == 64 for r in rows)
-
-    def test_resize_unknown_format_null_without_fake(self, spark):
-        from crowdsorsa_etl_spark.operators.multimodal import resize_images
-
-        df = spark.createDataFrame([(1, b"x")], "doc_id long, payload binary")
-        rows = resize_images(df, width=8, height=8).collect()
-        assert rows[0].payload is None  # not an exception mid-job
-
-    def test_resize_real_png_roundtrip(self, spark):
-        from crowdsorsa_etl_spark.functions import imagecodec
-        from crowdsorsa_etl_spark.operators.multimodal import (
-            attach_png_payload,
-            resize_images,
-        )
-
-        docs = load_table(spark, "documents", SF_DIR).limit(8)
-        out = resize_images(attach_png_payload(docs), width=16, height=16)
-        rows = out.collect()
-        assert len(rows) == 8
-        for r in rows:
-            fmt, px = imagecodec.decode_image(bytes(r.payload))
-            assert fmt == "png"
-            assert px.shape[:2] == (16, 16)
-
     def test_features_compose_with_similarity_search(self, spark):
         from crowdsorsa_etl_spark.operators.multimodal import (
             attach_binary_payload,

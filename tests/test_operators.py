@@ -599,104 +599,6 @@ class TestWinnowing:
         assert 10 <= n <= 40
 
 
-class TestAsofJoinBucketed:
-    def _random_frames(self, spark, seed=3, n_left=200, n_right=150):
-        import random
-
-        rng = random.Random(seed)
-        base = dt.datetime(2024, 1, 1)
-        # key 7 is a hot key (~half of all rows)
-        left_rows = [
-            (
-                i,
-                7 if rng.random() < 0.5 else rng.randrange(4),
-                base + dt.timedelta(minutes=rng.randrange(0, 3000)),
-            )
-            for i in range(n_left)
-        ]
-        right_rows = [
-            (
-                7 if rng.random() < 0.5 else rng.randrange(4),
-                base + dt.timedelta(minutes=rng.randrange(0, 3000)),
-                100 + j,
-            )
-            for j in range(n_right)
-        ]
-        left = spark.createDataFrame(left_rows, "event_id long, key long, t timestamp")
-        right = spark.createDataFrame(right_rows, "key long, rt timestamp, val long")
-        return left, right
-
-    def test_equals_plain_asof_on_hot_key_data(self, spark):
-        from crowdsorsa_etl_spark.operators.asof import asof_join, asof_join_bucketed
-
-        left, right = self._random_frames(spark)
-        kw = dict(
-            on="key", left_time="t", right_time="rt",
-            right_payload=["val"], tiebreak="val",
-        )
-        plain = {r.event_id: r.val for r in asof_join(left, right, **kw).collect()}
-        # 2h buckets over a 50h span → ~25 buckets; many carry-in seams
-        bucketed = {
-            r.event_id: r.val
-            for r in asof_join_bucketed(
-                left, right, bucket_micros=7_200_000_000, **kw
-            ).collect()
-        }
-        assert bucketed == plain
-
-    def test_equals_plain_asof_strict(self, spark):
-        from crowdsorsa_etl_spark.operators.asof import asof_join, asof_join_bucketed
-
-        left, right = self._random_frames(spark, seed=11)
-        kw = dict(
-            on="key", left_time="t", right_time="rt",
-            right_payload=["val"], tiebreak="val", strict=True,
-        )
-        plain = {r.event_id: r.val for r in asof_join(left, right, **kw).collect()}
-        bucketed = {
-            r.event_id: r.val
-            for r in asof_join_bucketed(
-                left, right, bucket_micros=3_600_000_000, **kw
-            ).collect()
-        }
-        assert bucketed == plain
-
-
-class TestIVFPersistedIndex:
-    def test_index_roundtrip_and_partition_pruning(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.operators.similarity import (
-            ivf_query_index,
-            ivf_topk,
-            ivf_write_index,
-        )
-        from crowdsorsa_etl_spark.sources.parquet import load_table
-
-        emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-        path = str(tmp_path / "ivf_index")
-        ivf_write_index(emb, path, n_lists=8)
-
-        q = emb.filter(F.col("vec_id") < 5)
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_query_index(spark, path, q, k=5, n_probe=8).collect()
-        }
-        # probing ALL 8 lists == exact in-memory IVF with full probes
-        want = {
-            (r.query_id, r.neighbor_id)
-            for r in ivf_topk(emb, q, k=5, n_lists=8, n_probe=8).collect()
-        }
-        # both probe everything → same exact re-rank result set sizes
-        assert len(got) == len(want) == 25
-
-        # partition pruning: the probed scan must carry list_id as a
-        # PartitionFilter, not a data filter
-        probed = spark.read.parquet(path).filter(F.col("list_id").isin([0, 1]))
-        plan = probed._sc._jvm.PythonSQLUtils.explainString(
-            probed._jdf.queryExecution(), "formatted"
-        )
-        assert "PartitionFilters" in plan and "list_id" in plan.split("PartitionFilters")[1].split("\n")[0]
-
-
 class TestSkewStress:
     """The salting recipes under DELIBERATE skew: one hot key carrying
     ~1000x the median key's rows — the shape that serializes a plain
@@ -838,7 +740,6 @@ class TestCountMinSketch:
         from crowdsorsa_etl_spark.operators.cmsketch import (
             count_min_estimate,
             count_min_sketch,
-            merge_sketches,
         )
         from crowdsorsa_etl_spark.sources.parquet import load_table
 
@@ -861,11 +762,16 @@ class TestCountMinSketch:
         heavy = [r for r in joined if r.exact >= 50]
         assert heavy and all(r.cm_est <= 2 * r.exact for r in heavy)
 
-        # mergeability: sketch(half A) + sketch(half B) == sketch(all)
+        # mergeability: sketch(half A) + sketch(half B) == sketch(all),
+        # where a merge sums the cell counts
         a = count_min_sketch(docs.filter(F.col("doc_id") % 2 == 0))
         b = count_min_sketch(docs.filter(F.col("doc_id") % 2 == 1))
         merged = {
-            (r.i, r.bucket, r.cnt) for r in merge_sketches(a, b).collect()
+            (r.i, r.bucket, r.cnt)
+            for r in a.unionByName(b)
+            .groupBy("i", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+            .collect()
         }
         whole = {(r.i, r.bucket, r.cnt) for r in sketch.collect()}
         assert merged == whole

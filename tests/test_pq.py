@@ -270,20 +270,3 @@ class TestIVFPQIncremental:
         ) or "list_id IN" in plan
         for node in ("BatchEvalPython", "MapInPandas", "ArrowEvalPython"):
             assert node not in plan, f"unexpected Python stage {node}"
-
-    def test_index_stats_cover_appended_rows(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.operators.pq import (
-            ivfpq_append_index,
-            ivfpq_index_stats,
-            ivfpq_write_index,
-        )
-
-        emb, base, batch = self._split(spark)
-        path = str(tmp_path / "inc")
-        ivfpq_write_index(base, path, n_lists=8, m=8, k_codes=16, sample_size=32)
-        before = ivfpq_index_stats(spark, path).collect()
-        ivfpq_append_index(batch, path)
-        after = ivfpq_index_stats(spark, path).collect()
-        assert sum(r.n_vectors for r in before) == base.count()
-        assert sum(r.n_vectors for r in after) == emb.count()
-        assert all(-1.0 <= r.mean_centroid_cos <= 1.0 for r in after)

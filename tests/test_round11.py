@@ -4,7 +4,6 @@ dictionary tagging, information-density signals, unigram-LM tokenizer."""
 from __future__ import annotations
 
 import math
-import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +12,11 @@ from crowdsorsa_etl_spark.operators.dicttag import (
     _build_automaton,
     _scan_counts,
     dictionary_tag,
+)
+from crowdsorsa_etl_spark.operators.evalmetrics import (
+    _clipped,
+    bleu2_from_clipped,
+    rouge_from_clipped,
 )
 from crowdsorsa_etl_spark.operators.ngramlm import (
     kneser_ney_bigram_scores,
@@ -198,44 +202,16 @@ class TestPerplexityBuckets:
 
 class TestEntropySignals:
     def test_uniform_alphabet_entropy(self, spark):
-        from crowdsorsa_etl_spark.functions.text import char_entropy
+        from crowdsorsa_etl_spark.operators.curation import entropy_signals
 
         df = spark.createDataFrame(
             [(1, "abcd"), (2, "aaaa")], "doc_id long, text string"
         )
-        got = {
-            r["doc_id"]: r["e"]
-            for r in df.select(
-                "doc_id", char_entropy(F.col("text")).alias("e")
-            ).collect()
-        }
+        got = {r["doc_id"]: r["entropy"] for r in entropy_signals(df).collect()}
         assert got[1] == pytest.approx(
             sum(round(0.25 * math.log(4), 6) for _ in range(4)), abs=1e-9
         )
         assert got[2] == 0.0
-
-    def test_compression_signals_match_stdlib(self, spark):
-        from crowdsorsa_etl_spark.operators.curation import (
-            compression_signals,
-        )
-
-        texts = ["abc " * 50, "the quick brown fox", ""]
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        got = {r["doc_id"]: r for r in compression_signals(df).collect()}
-        for i, t in enumerate(texts):
-            b = t.encode()
-            assert got[i]["raw_bytes"] == len(b)
-            assert got[i]["zlib_bytes"] == len(zlib.compress(b, 6))
-            if b:
-                assert got[i]["compression_ratio"] == pytest.approx(
-                    round(len(zlib.compress(b, 6)) / len(b), 6)
-                )
-            else:
-                assert got[i]["compression_ratio"] is None
-        # repetitive text compresses materially below prose
-        assert got[0]["compression_ratio"] < got[1]["compression_ratio"]
 
 
 def _brute_best_segmentation(word: str, costs: dict, maxp: int):
@@ -322,10 +298,12 @@ class TestUnigramTokenizer:
         assert got[2]["n_pieces"] == 1
 
 
+def _clip(cand, ref, n: int):
+    return _clipped(cand, ref, n, pair_col="pair_id", text_col="text")
+
+
 class TestEvalMetrics:
     def test_bleu2_hand_computed(self, spark):
-        from crowdsorsa_etl_spark.operators.evalmetrics import bleu2_pairs
-
         cand = spark.createDataFrame(
             [(1, "the cat sat on the mat"), (2, "a b c")],
             "pair_id long, text string",
@@ -334,7 +312,8 @@ class TestEvalMetrics:
             [(1, "the cat is on the mat"), (2, "x y z")],
             "pair_id long, text string",
         )
-        got = {r["pair_id"]: r for r in bleu2_pairs(cand, ref).collect()}
+        bleu = bleu2_from_clipped(_clip(cand, ref, 1), _clip(cand, ref, 2))
+        got = {r["pair_id"]: r for r in bleu.collect()}
         # pair 1: unigrams cand {the:2,cat,sat,on,mat}, ref {the:2,cat,
         # is,on,mat} -> matched = 2+1+0+1+1 = 5 of 6; bigrams cand
         # {the cat, cat sat, sat on, on the, the mat} ref {the cat,
@@ -353,8 +332,6 @@ class TestEvalMetrics:
         assert got[2]["bleu2"] == 0.0 and got[2]["p1"] == 0.0
 
     def test_brevity_penalty_applies_to_short_candidates(self, spark):
-        from crowdsorsa_etl_spark.operators.evalmetrics import bleu2_pairs
-
         cand = spark.createDataFrame(
             [(1, "the cat")], "pair_id long, text string"
         )
@@ -363,21 +340,20 @@ class TestEvalMetrics:
         )
         import math
 
-        r = bleu2_pairs(cand, ref).collect()[0]
+        bleu = bleu2_from_clipped(_clip(cand, ref, 1), _clip(cand, ref, 2))
+        r = bleu.collect()[0]
         assert r["bp"] == pytest.approx(round(math.exp(1 - 6 / 2), 6))
         assert r["p1"] == 1.0 and r["p2"] == 1.0
         assert r["bleu2"] == pytest.approx(round(math.exp(1 - 3.0), 6))
 
     def test_rouge2_recall_precision_f1(self, spark):
-        from crowdsorsa_etl_spark.operators.evalmetrics import rouge_pairs
-
         cand = spark.createDataFrame(
             [(1, "a b c d")], "pair_id long, text string"
         )
         ref = spark.createDataFrame(
             [(1, "a b x c d")], "pair_id long, text string"
         )
-        r = rouge_pairs(cand, ref, 2).collect()[0]
+        r = rouge_from_clipped(_clip(cand, ref, 2)).collect()[0]
         # cand bigrams {ab,bc,cd}; ref {ab,bx,xc,cd} -> matched {ab,cd}=2
         assert r["matched"] == 2
         assert r["recall"] == pytest.approx(0.5)
@@ -462,15 +438,26 @@ class TestRecordLinkage:
 
 class TestEntropyParity:
     def test_hof_and_arrow_paths_agree(self, spark):
-        """functions/text.char_entropy (pure-HOF, interpreted) and
-        operators/curation.entropy_signals (Arrow) are the same
-        function; pin them to each other on fixture data."""
-        from crowdsorsa_etl_spark.functions.text import (
-            char_entropy,
-            normalize_text,
-        )
+        """operators/curation.entropy_signals (Arrow) equals the same
+        entropy written as Spark higher-order functions (array_distinct ×
+        filter-count, interpreted, ~20× slower): an independent reference
+        on fixture data, with the same 6-dp per-term rounding."""
+        from crowdsorsa_etl_spark.functions.text import normalize_text
         from crowdsorsa_etl_spark.operators.curation import entropy_signals
 
+        chars = F.split(normalize_text(F.col("text")), "")
+        n = F.size(chars)
+
+        def term(c):
+            p = F.size(F.filter(chars, lambda x: x == c)) / n
+            return F.round(-p * F.log(p), 6)
+
+        hof_entropy = F.round(
+            F.aggregate(
+                F.array_distinct(chars), F.lit(0.0), lambda acc, c: acc + term(c)
+            ),
+            6,
+        )
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
         ).limit(100)
@@ -479,7 +466,7 @@ class TestEntropyParity:
             for r in docs.filter(
                 F.length(normalize_text(F.col("text"))) > 0
             )
-            .select("doc_id", char_entropy(F.col("text")).alias("e"))
+            .select("doc_id", hof_entropy.alias("e"))
             .collect()
         }
         arrow = {

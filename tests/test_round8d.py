@@ -509,74 +509,6 @@ class TestStreamingShards:
             compact_shard_epochs(spark, str(tmp_path), keep_epochs=0)
 
 
-class TestPca:
-    DIM, K = 16, 4
-
-    def _emb(self, spark):
-        from crowdsorsa_etl_spark.sources.parquet import load_table
-
-        return load_table(spark, "embeddings", SF_DIR)
-
-    def test_fit_matches_numpy(self, spark):
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        from crowdsorsa_etl_spark.operators.pca import pca_fit
-
-        mean, comps, vals = pca_fit(self._emb(spark), self.DIM, self.K)
-        x = np.array(
-            pq.read_table(f"{SF_DIR}/embeddings.parquet")["embedding"]
-            .to_pylist()
-        )[:, : self.DIM].astype(float)
-        np.testing.assert_allclose(mean, x.mean(axis=0), atol=1e-9)
-        ev, evec = np.linalg.eigh(np.cov(x, rowvar=False))
-        order = np.argsort(ev)[::-1][: self.K]
-        np.testing.assert_allclose(vals, ev[order], rtol=1e-6)
-        for got, idx in zip(comps, order):
-            ref = evec[:, idx]
-            if ref[int(np.argmax(np.abs(ref)))] < 0:
-                ref = -ref
-            np.testing.assert_allclose(got, ref, atol=1e-6)
-
-    def test_components_orthonormal(self, spark):
-        import numpy as np
-
-        from crowdsorsa_etl_spark.operators.pca import pca_fit
-
-        _, comps, _ = pca_fit(self._emb(spark), self.DIM, self.K)
-        c = np.array(comps)
-        np.testing.assert_allclose(c @ c.T, np.eye(self.K), atol=1e-9)
-
-    def test_projection_variance_equals_eigenvalues(self, spark):
-        import numpy as np
-
-        from crowdsorsa_etl_spark.operators.pca import pca_fit, pca_project
-
-        emb = self._emb(spark)
-        mean, comps, vals = pca_fit(emb, self.DIM, self.K)
-        proj = pca_project(emb, mean, comps).select("proj").collect()
-        p = np.array([r["proj"] for r in proj])
-        np.testing.assert_allclose(
-            p.var(axis=0, ddof=1), vals, rtol=1e-6
-        )
-        # projections are centered
-        np.testing.assert_allclose(p.mean(axis=0), 0, atol=1e-9)
-
-    def test_projection_plan_is_narrow(self, spark):
-        from crowdsorsa_etl_spark.operators.pca import pca_fit, pca_project
-
-        emb = self._emb(spark)
-        mean, comps, _ = pca_fit(emb, self.DIM, self.K)
-        plan = (
-            pca_project(emb, mean, comps)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan
-        assert "EvalPython" not in plan
-
-
 class TestQualityClassifier:
     def test_matches_python_reference(self, spark):
         import math

@@ -208,12 +208,3 @@ class TestBloomIndex:
             for r in read_bloom_pruned(spark, stats, "code", probe).collect()
         )
         assert got == exact and len(got) > 0
-
-    def test_power_of_two_guard(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from crowdsorsa_etl_spark.operators.skipping import collect_bloom_stats
-
-        path = self._layout(spark, tmp_path)
-        with _pytest.raises(ValueError):
-            collect_bloom_stats(spark, path, "cust", n_bits=1000)

@@ -1,26 +1,9 @@
-"""Parquet sink maintenance (compaction, upsert), the fixture loader's
+"""Parquet sink maintenance (upsert), the fixture loader's
 schema memo, and the malformed-record policy of Spark's text readers."""
 
 from __future__ import annotations
 
 import pytest
-
-
-class TestCompaction:
-    def test_compact_reduces_file_count(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.sinks.writers import compact_parquet
-
-        path = str(tmp_path / "shattered")
-        # simulate incremental ingest: 40 tiny files
-        spark.range(4000).repartition(40).write.parquet(path)
-        import glob
-
-        before = len(glob.glob(f"{path}/part-*.parquet"))
-        assert before >= 40
-        n = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
-        after = len(glob.glob(f"{path}/part-*.parquet"))
-        assert n == 1 and after < before
-        assert spark.read.parquet(path).count() == 4000
 
 
 class TestUpsert:

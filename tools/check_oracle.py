@@ -8,9 +8,11 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import multiprocessing
 import os
 import sys
 import time
+from concurrent.futures import ProcessPoolExecutor
 
 import duckdb
 import pandas as pd
@@ -42,6 +44,39 @@ def source_fingerprint() -> str:
         with open(p, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()
+
+
+def memory_mb() -> tuple[int, int]:
+    """(VmRSS, VmHWM) of this process in MB: its current and peak resident
+    memory, from /proc/self/status (Linux; (0, 0) elsewhere)."""
+    got = {}
+    try:
+        with open("/proc/self/status") as fh:
+            for line in fh:
+                key, _, value = line.partition(":")
+                if key in ("VmRSS", "VmHWM"):
+                    got[key] = int(value.split()[0]) // 1024
+    except OSError:
+        pass
+    return got.get("VmRSS", 0), got.get("VmHWM", 0)
+
+
+def _oracle_in_worker(sf_dir: str, sql: str) -> tuple[pd.DataFrame, int]:
+    with duckdb.connect() as con:
+        for t in FIXTURE_TABLES:
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        return con.sql(sql).df(), memory_mb()[1]
+
+
+def oracle_df(sf_dir: str, sql: str) -> tuple[pd.DataFrame, int]:
+    """Run one oracle on its own DuckDB connection in a fresh process and
+    return its frame and that process's peak RSS in MB. DuckDB's allocator
+    keeps what a heavy oracle took after the connection closes
+    (llm_bpe_merges_256 left 6.6 GB resident), so only a process exit
+    holds a sweep to one oracle's memory at a time."""
+    spawn = multiprocessing.get_context("spawn")
+    with ProcessPoolExecutor(1, mp_context=spawn) as worker:
+        return worker.submit(_oracle_in_worker, sf_dir, sql).result()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -85,12 +120,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
     spark = get_spark(app_name="check_oracle")
     failures = 0
     record: dict[str, dict] = {}
@@ -115,7 +144,7 @@ def main() -> None:
             record[name] = {"status": "rows_only", "rows": len(spark_pdf)}
             continue
         try:
-            oracle_pdf = con.sql(ORACLES[name]).df()
+            oracle_pdf, oracle_peak = oracle_df(sf_dir, ORACLES[name])
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {exc}")
             record[name] = {"status": "fail", "err": f"duckdb: {exc}"}
@@ -129,7 +158,11 @@ def main() -> None:
                 print(f"      {e}")
             record[name] = {"status": "fail", "err": "; ".join(errs)[:400]}
         else:
-            print(f"OK    {name}: {len(spark_pdf)} rows [{time.monotonic() - t0:.2f}s]")
+            rss, hwm = memory_mb()
+            print(
+                f"OK    {name}: {len(spark_pdf)} rows [{time.monotonic() - t0:.2f}s,"
+                f" rss {rss} MB, peak {hwm} MB, oracle peak {oracle_peak} MB]"
+            )
             record[name] = {"status": "hash_match", "rows": len(spark_pdf)}
     total_s = round(time.monotonic() - t_start, 1)
     print(f"TOTAL {total_s}s for {len(QUERIES) if not only else len(only)} queries")
