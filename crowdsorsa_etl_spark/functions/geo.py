@@ -136,16 +136,22 @@ def _ring_area_geodesic(ring: list[tuple[float, float]]) -> float:
     return _ring_excess(ring) * _EARTH_RADIUS_M * _EARTH_RADIUS_M
 
 
-def _multipolygon_area(buf: bytes | None, area_fn) -> float | None:
-    """Area of a WKB (multi)polygon under one ring kernel, holes subtracted."""
-    if buf is None:
-        return None
+def _polys_area(polys: list[list[list[tuple[float, float]]]], area_fn) -> float:
+    """Area of parsed (multi)polygon rings under one ring kernel, holes
+    subtracted."""
     total = 0.0
-    for rings in _parse_wkb(bytes(buf)):
+    for rings in polys:
         for j, ring in enumerate(rings):
             a = abs(area_fn(ring))
             total += a if j == 0 else -a  # holes subtract
     return abs(total)
+
+
+def _multipolygon_area(buf: bytes | None, area_fn) -> float | None:
+    """Area of a WKB (multi)polygon under one ring kernel, holes subtracted."""
+    if buf is None:
+        return None
+    return _polys_area(_parse_wkb(bytes(buf)), area_fn)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -256,16 +262,15 @@ def _point_in_ring(p: tuple[float, float], ring: list[tuple[float, float]]) -> b
     return inside
 
 
-def _make_valid_py(buf: bytes | None) -> bytes | None:
+def _make_valid_polys(
+    polys: list[list[list[tuple[float, float]]]],
+) -> list[list[list[tuple[float, float]]]]:
     """``st_make_valid`` + ``st_cast(.., "MULTIPOLYGON")``
-    (crowdsorsa-etl-2023.R:36-38): close unclosed rings, drop degenerate
-    rings (<4 points after closing), split self-crossing rings into simple
-    ones (a bowtie shell becomes two polygons, exactly as GEOS does), and
-    normalize to MULTIPOLYGON. Holes are repaired the same way and assigned
-    to the output shell that contains them."""
-    if buf is None:
-        return None
-    polys = _parse_wkb(bytes(buf))
+    (crowdsorsa-etl-2023.R:36-38) on parsed rings: close unclosed rings,
+    drop degenerate rings (<4 points after closing), split self-crossing
+    rings into simple ones (a bowtie shell becomes two polygons, exactly as
+    GEOS does). Holes are repaired the same way and assigned to the output
+    shell that contains them."""
     fixed: list[list[list[tuple[float, float]]]] = []
     for rings in polys:
         closed = []
@@ -291,7 +296,14 @@ def _make_valid_py(buf: bytes | None) -> bytes | None:
                         holes_by_shell[si].append(piece)
                         break  # unlocatable pieces are dropped
         fixed.extend([shell] + holes_by_shell[si] for si, shell in enumerate(shells))
-    return polygons_to_wkb(fixed)
+    return fixed
+
+
+def _make_valid_py(buf: bytes | None) -> bytes | None:
+    """``_make_valid_polys`` on a WKB value, normalized to MULTIPOLYGON."""
+    if buf is None:
+        return None
+    return polygons_to_wkb(_make_valid_polys(_parse_wkb(bytes(buf))))
 
 
 @F.pandas_udf(T.BinaryType())
@@ -358,25 +370,88 @@ def st_contains_point(wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     )
 
 
-def _to_geojson_py(buf: bytes | None) -> dict | None:
-    if buf is None:
-        return None
-    polys = _parse_wkb(bytes(buf))
+def _geojson(polys: list[list[list[tuple[float, float]]]] | None) -> dict:
+    """GEOJSON_GEOMETRY of parsed rings; a null geometry is a struct whose
+    fields are null, not a null struct."""
+    if polys is None:
+        return {"type": None, "coordinates": None}
     coords = [[[list(pt) for pt in ring] for ring in rings] for rings in polys]
     return {"type": "MultiPolygon", "coordinates": coords}
 
 
 @F.pandas_udf(GEOJSON_GEOMETRY)
 def st_as_geojson_struct(wkb: pd.Series) -> pd.DataFrame:
-    parsed = wkb.map(_to_geojson_py)
     return pd.DataFrame(
-        {
-            "type": parsed.map(lambda g: None if g is None else g["type"]),
-            "coordinates": parsed.map(
-                lambda g: None if g is None else g["coordinates"]
-            ),
-        }
+        [_geojson(None if b is None else _parse_wkb(bytes(b))) for b in wkb],
+        columns=["type", "coordinates"],
     )
+
+
+# --- one geometry pass per season ------------------------------------------
+# Each season pipeline reads its geometry through ONE pandas UDF that parses
+# the WKB once and returns struct(area, geojson): one ArrowEvalPython node
+# per plan, where the per-step UDFs above cost a Python stage each. They
+# run the same kernels, so a season UDF equals the composition of the
+# public UDFs (tests/test_geo.py checks it). An incoming NaN ``area_m2``
+# reads as null here: pandas has one missing value for doubles.
+
+SEASON_GEOMETRY = T.StructType(
+    [
+        T.StructField("area", T.DoubleType()),
+        T.StructField("geojson", GEOJSON_GEOMETRY),
+    ]
+)
+
+
+def _ceil_area(polys: list[list[list[tuple[float, float]]]], area_fn) -> float:
+    """``area_m2``'s ``F.ceil(..).cast("double")`` on one value."""
+    return float(math.ceil(_polys_area(polys, area_fn)))
+
+
+def _season_2023(buf: bytes | None, area: float | None):
+    """documents_2023's geometry rule (crowdsorsa-etl-2023.R:34-40, 63-80):
+    ``area = coalesce(area_m2, ceil(geodesic area of the repaired rings))``,
+    and the GeoJSON is of the repaired rings when ``area > 0``, else of the
+    raw ones."""
+    if buf is None:
+        return area, None
+    raw = _parse_wkb(bytes(buf))
+    valid = _make_valid_polys(raw)
+    if area is None:
+        area = _ceil_area(valid, _ring_area_geodesic)
+    return area, (valid if area > 0 else raw)
+
+
+def _season_2024(buf: bytes | None, area: float | None):
+    """documents_2024's geometry rule: ``area = coalesce(area_m2, ceil(planar
+    EUREF area))`` and the GeoJSON of the raw rings."""
+    if buf is None:
+        return area, None
+    polys = _parse_wkb(bytes(buf))
+    if area is None:
+        area = _ceil_area(polys, _ring_area_planar)
+    return area, polys
+
+
+def _season_frame(wkb: pd.Series, area_m2: pd.Series, rule) -> pd.DataFrame:
+    areas, geojson = [], []
+    for buf, a in zip(wkb, area_m2):
+        area, polys = rule(buf, None if pd.isna(a) else float(a))
+        areas.append(area)
+        geojson.append(_geojson(polys))
+    return pd.DataFrame(
+        {"area": pd.Series(areas, dtype="float64"), "geojson": geojson}
+    )
+
+
+@F.pandas_udf(SEASON_GEOMETRY)
+def geometry_2023(wkb: pd.Series, area_m2: pd.Series) -> pd.DataFrame:
+    return _season_frame(wkb, area_m2, _season_2023)
+
+
+@F.pandas_udf(SEASON_GEOMETRY)
+def geometry_2024(wkb: pd.Series, area_m2: pd.Series) -> pd.DataFrame:
+    return _season_frame(wkb, area_m2, _season_2024)
 
 
 def _cross3(q1, q2, p) -> float:

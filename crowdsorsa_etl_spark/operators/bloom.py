@@ -40,13 +40,12 @@ from crowdsorsa_etl_spark.functions.portable_hash import (
 )
 
 BLOOM_K = 4
-BLOOM_BITS = 1 << 16  # 16-bit positions, straight from 4-hex-digit words
 _WORD = 63
 
 
 def _positions_spark(col) -> list:
     """k probe positions from one md5: hex windows [1,4], [5,8], [9,12],
-    [13,16] — 16 bits each, already < BLOOM_BITS."""
+    [13,16] — 16 bits each, so every position is below 2^16 with no modulo."""
     return [md5_word_spark(col, 1 + 4 * i, 4) for i in range(BLOOM_K)]
 
 

@@ -29,8 +29,6 @@ from crowdsorsa_etl_spark.functions.portable_hash import (
     h64_spark,
     hex60_spark,
 )
-from crowdsorsa_etl_spark.functions.text import shingles
-
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
 

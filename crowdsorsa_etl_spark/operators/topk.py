@@ -6,7 +6,7 @@ needs them for dedup keep-first, as-of joins, and event analytics.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

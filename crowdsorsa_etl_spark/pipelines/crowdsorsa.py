@@ -6,10 +6,12 @@ per-row for-loop (2023.R:46-222). Here each pipeline is one DataFrame chain:
     scan → clean → derive → broadcast dim join → nested-struct projection
 
 No row iteration, no driver-side collect; the whole per-row body runs inside
-one whole-stage-codegen span per partition (geometry pandas-UDFs are the only
-Arrow exits). At 100 TB the input is a partitioned parquet/shapefile-derived
-table and the same plan applies unchanged — the dim join is broadcast so the
-pipeline stays shuffle-free end to end.
+one whole-stage-codegen span per partition. The one Arrow exit is the
+season's geometry pandas UDF (``geo.geometry_2023``/``geometry_2024``), which
+parses each WKB once and returns the area and the GeoJSON together. At
+100 TB the input is a partitioned parquet/shapefile-derived table and the
+same plan applies unchanged — the dim join is broadcast so the pipeline
+stays shuffle-free end to end.
 """
 
 from __future__ import annotations
@@ -43,24 +45,11 @@ def documents_2023(
         ),
     )
 
-    # geometry shadow column with repaired rings (2023.R:34-38), area from
-    # the repaired geometry, geodesic because the 2023 CRS is WGS84 (trap 8)
-    obs = (
-        obs.withColumn("geom_valid", geo.st_make_valid_multi(F.col("geometry_wkb")))
-        .withColumn(
-            "pinta_ala",
-            F.coalesce(
-                F.col("area_m2"),
-                geo.area_m2(F.col("geom_valid"), "WGS84"),
-            ),
-        )
-        # validated geometry when area > 0, raw otherwise (2023.R:63-80, trap S14)
-        .withColumn(
-            "geom_out",
-            F.when(F.col("pinta_ala") > 0, F.col("geom_valid")).otherwise(
-                F.col("geometry_wkb")
-            ),
-        )
+    # repaired rings (2023.R:34-38), area from the repaired geometry,
+    # geodesic because the 2023 CRS is WGS84 (trap 8); GeoJSON of the
+    # repaired rings when area > 0, raw otherwise (2023.R:63-80, trap S14)
+    obs = obs.withColumn(
+        "geo", geo.geometry_2023(F.col("geometry_wkb"), F.col("area_m2"))
     )
 
     # the dim is ~300 rows → broadcast hash join, never a shuffle (2023.R:52-53)
@@ -77,11 +66,11 @@ def documents_2023(
         taxon=taxon,
         taxon_id=taxon_id_col(taxon, 2023),
         control_date=F.col("torjunta"),
-        geometry_geojson=geo.st_as_geojson_struct(F.col("geom_out")),
+        geometry_geojson=F.col("geo.geojson"),
         crs_label="WGS84",
         source_id=source_id,
         collection_id="HR.5835",
-        area=F.col("pinta_ala"),
+        area=F.col("geo.area"),
         facts_min_area=1.0,
         hour=F.hour(ts),
         minute=F.minute(ts),
@@ -106,10 +95,7 @@ def documents_2024(
         observations.withColumn("havaittu_fixed", fix_year_typo(F.col("havaittu")))
         .withColumn("torjuttu_fixed", fix_year_typo(F.col("torjuttu")))
         .withColumn(
-            "pinta_ala",
-            F.coalesce(
-                F.col("area_m2"), geo.area_m2(F.col("geometry_wkb"), "EUREF")
-            ),
+            "geo", geo.geometry_2024(F.col("geometry_wkb"), F.col("area_m2"))
         )
     )
 
@@ -125,11 +111,11 @@ def documents_2024(
         taxon=taxon,
         taxon_id=taxon_id_col(taxon, 2024),
         control_date=F.col("torjuttu_fixed"),
-        geometry_geojson=geo.st_as_geojson_struct(F.col("geometry_wkb")),
+        geometry_geojson=F.col("geo.geojson"),
         crs_label="EUREF",
         source_id=source_id,
         collection_id="HR.5835",
-        area=F.col("pinta_ala"),
+        area=F.col("geo.area"),
         facts_min_area=None,
         abundance=F.col("tiheys"),
     )

@@ -26,12 +26,10 @@ Transport is stdlib ``urllib`` (requests isn't in the image).
 
 from __future__ import annotations
 
-import json
 import time
 import urllib.error
 import urllib.request
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from crowdsorsa_etl_spark.functions.docmodel import TAXA_2023, TAXA_2024
 from crowdsorsa_etl_spark.functions.geo import polygons_to_wkb
 from crowdsorsa_etl_spark.schemas import MUNICIPALITY_KEY, OBSERVATIONS_2023
+from crowdsorsa_etl_spark.sources.local import local_frame
 
 #: Statistics Finland municipality codes, FULL 2023 classification (public
 #: data, 309 municipalities — the table behind ``geofi::municipality_key_2023``
@@ -186,7 +187,9 @@ def observation_rows_2023(n: int = 200, seed: int = 7) -> list[tuple]:
 
 
 def observations_2023(spark: SparkSession, n: int = 200, seed: int = 7) -> DataFrame:
-    return spark.createDataFrame(observation_rows_2023(n, seed), OBSERVATIONS_2023)
+    rows = observation_rows_2023(n, seed)
+    columns = [[r[i] for r in rows] for i in range(len(OBSERVATIONS_2023))]
+    return local_frame(spark, columns, OBSERVATIONS_2023)
 
 
 def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
@@ -221,4 +224,4 @@ def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
 
 def municipality_dim(spark: SparkSession) -> DataFrame:
     """The broadcast dimension replacing geofi::municipality_key_2023."""
-    return spark.createDataFrame(MUNICIPALITIES, MUNICIPALITY_KEY)
+    return local_frame(spark, [list(c) for c in zip(*MUNICIPALITIES)], MUNICIPALITY_KEY)

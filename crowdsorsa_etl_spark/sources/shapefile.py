@@ -8,11 +8,11 @@ DataFrame of typed attribute columns plus a ``geometry_wkb`` BinaryType
 column (the engine's canonical geometry representation, functions/geo.py).
 
 Scale notes: season shapefiles are small (thousands of rows — bounded by the
-reference's own ≤10 docs/s sink), so parsing happens driver-side and
-``spark.createDataFrame`` ships the rows. For genuinely large archives the
-same ``parse_shp``/``parse_dbf`` functions run distributed over
-``spark.read.format("binaryFile")`` + ``mapInPandas`` — the parser is
-byte-buffer-in/rows-out either way.
+reference's own ≤10 docs/s sink), so parsing happens driver-side and the
+decoded columns reach Spark as one pyarrow table (``sources/local.py``): the
+scan is a ``LocalTableScan`` and starts no Python worker. Decoding on
+executors for large archives is ROADMAP D8; ``parse_shp``/``parse_dbf`` are
+byte-buffer-in/rows-out, so they would stay the one decoder there.
 
 DBF text is decoded as latin-1 (the classic dbf codepage) — which is exactly
 how the 2023 file's UTF-8 bytes got double-encoded into ``Ã¤``/``Ã¶``
@@ -29,6 +29,9 @@ import tempfile
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from crowdsorsa_etl_spark.sources.local import local_frame
 
 Ring = list[tuple[float, float]]
 
@@ -314,31 +317,27 @@ def read_shapefile_zip(
 
     if len(geoms) != len(rows):
         raise ValueError(f".shp has {len(geoms)} records but .dbf has {len(rows)}")
-    data = [tuple(row) + (geom,) for row, geom in zip(rows, geoms)]
-
-    # build an explicit schema from observed python types
-    from pyspark.sql import types as T
-
-    def _typ(values):
-        for v in values:
-            if v is not None:
-                if isinstance(v, bool):
-                    return T.BooleanType()
-                if isinstance(v, int):
-                    return T.LongType()
-                if isinstance(v, float):
-                    return T.DoubleType()
-                return T.StringType()
-        return T.StringType()
-
+    columns = [[r[i] for r in rows] for i in range(len(names))]
     schema = T.StructType(
-        [
-            T.StructField(name, _typ([r[i] for r in rows]), True)
-            for i, name in enumerate(names)
-        ]
+        [T.StructField(n, _field_type(c), True) for n, c in zip(names, columns)]
         + [T.StructField("geometry_wkb", T.BinaryType(), True)]
     )
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, columns + [geoms], schema)
+
+
+def _field_type(values: list[object]) -> T.DataType:
+    """The Spark type of a decoded .dbf column, from its first non-null
+    value (parse_dbf's Python types); an all-null column is a string."""
+    for v in values:
+        if v is not None:
+            if isinstance(v, bool):
+                return T.BooleanType()
+            if isinstance(v, int):
+                return T.LongType()
+            if isinstance(v, float):
+                return T.DoubleType()
+            return T.StringType()
+    return T.StringType()
 
 
 # ---------------------------------------------------------------------------

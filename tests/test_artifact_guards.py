@@ -987,3 +987,52 @@ class Unused:
     # the test file's calls would hide both, were tests counted as callers
     everyone = _py_sources(root, ["pkg", "tools", "tests"])
     assert _test_only_defs(package, everyone) == []
+
+
+# --- every top-level import is used --------------------------------------
+
+
+def _unused_imports(package: dict[str, str]) -> list[str]:
+    """``module:line: name`` for every name a module-level ``import`` binds
+    that nothing else in the module reads. ``__init__.py`` files are
+    skipped (their imports are the package's re-exports), and so are
+    ``__future__`` imports."""
+    bad = []
+    for mod, src in package.items():
+        if os.path.basename(mod) == "__init__.py":
+            continue
+        tree = ast.parse(src)
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            bad += [f"{mod}:{node.lineno}: {b}" for b in bound if b not in read]
+    return sorted(bad)
+
+
+def test_every_top_level_import_is_used():
+    """An import nothing reads is a dead name the function guards above
+    do not see: it costs an import at start-up and misleads a reader
+    about what the module depends on."""
+    bad = _unused_imports(_py_sources(REPO, ["crowdsorsa_etl_spark"]))
+    assert not bad, f"{len(bad)} unused imports: {bad}"
+
+
+def test_import_guard_flags_unused_names():
+    package = {
+        "pkg/m.py": "from __future__ import annotations\n"
+        "import json\nimport os.path\nimport pyarrow as pa\n"
+        "from dataclasses import dataclass, field\n"
+        "from x import y as z\n\n"
+        "def f() -> pa.Table:\n    return os.path.join(field(), 'a')\n",
+        "pkg/__init__.py": "from pkg.m import f\n",
+    }
+    assert _unused_imports(package) == [
+        "pkg/m.py:2: json",
+        "pkg/m.py:5: dataclass",
+        "pkg/m.py:6: z",
+    ]

@@ -313,3 +313,181 @@ class TestZmPreservation:
         it, = struct.unpack_from("<xI", wkb, 9)
         assert it == 1001
         assert struct.unpack_from("<ddd", wkb, 9 + 5) == (1.0, 2.0, 9.0)
+
+
+# --- Arrow-built source frames ----------------------------------------------
+
+# the two season exports' DBF layouts (name, type, width, decimals)
+_SEASON_FIELDS = {
+    2023: [
+        ("id", "C", 16, 0),
+        ("kuntakoodi", "C", 4, 0),
+        ("havaittu", "C", 19, 0),
+        ("laji", "C", 40, 0),
+        ("torjunta", "C", 10, 0),
+    ],
+    2024: [
+        ("tunniste", "C", 16, 0),
+        ("kunta", "C", 24, 0),
+        ("havaittu", "C", 10, 0),
+        ("torjuttu", "C", 10, 0),
+        ("laji", "C", 30, 0),
+        ("tiheys", "N", 8, 2),
+    ],
+}
+# every .dbf type the reader decodes, nulls in the numeric fields and an
+# all-null column (which must stay a string column)
+_ODD_FIELDS = [
+    ("name", "C", 12, 0),
+    ("count", "N", 6, 0),
+    ("ratio", "N", 8, 3),
+    ("empty", "C", 8, 0),
+    ("flag", "L", 1, 0),
+    ("seen", "D", 8, 0),
+]
+_ODD_ROWS = [
+    ["jättiputki", 3, 0.125, None, True, "20240601"],
+    ["Lupiini", None, None, None, False, None],
+    ["kurtturuusu", -7, 12.5, None, None, "20241231"],
+]
+
+
+def _season_zip(path: str, season: int, n: int) -> str:
+    from crowdsorsa_etl_spark.sources.observations import (
+        observation_rows_2023,
+        observation_rows_2024,
+    )
+
+    rows = observation_rows_2023(n) if season == 2023 else observation_rows_2024(n)
+    n_attr = len(_SEASON_FIELDS[season])
+    write_shapefile_zip(
+        path,
+        field_specs=_SEASON_FIELDS[season],
+        rows=[list(r[:n_attr]) for r in rows],
+        geometries=[_parse_wkb(r[n_attr]) for r in rows],
+    )
+    return path
+
+
+@pytest.fixture()
+def season_zips(tmp_path):
+    """The season fixtures, plus one whose text is UTF-8 written as bytes
+    that the latin-1 reader turns into mojibake."""
+    odd = str(tmp_path / "odd.zip")
+    write_shapefile_zip(
+        odd,
+        field_specs=_ODD_FIELDS,
+        rows=_ODD_ROWS,
+        geometries=[[SQUARE]] * len(_ODD_ROWS),
+        encoding="utf-8",
+    )
+    return {
+        2023: _season_zip(str(tmp_path / "s2023.zip"), 2023, 60),
+        2024: _season_zip(str(tmp_path / "s2024.zip"), 2024, 60),
+        "odd": odd,
+    }
+
+
+class TestArrowSource:
+    def test_rows_and_schema_are_what_the_parsers_decode(self, spark, season_zips):
+        import zipfile
+
+        from pyspark.sql import types as T
+
+        from crowdsorsa_etl_spark.sources.shapefile import parse_dbf, parse_shp
+
+        spark_type = {bool: T.BooleanType(), int: T.LongType(), float: T.DoubleType()}
+        for key, path in season_zips.items():
+            with zipfile.ZipFile(path) as zf:
+                names, rows = parse_dbf(zf.read("data.dbf"))
+                geoms = parse_shp(zf.read("data.shp"))
+            df = read_shapefile_zip(spark, path)
+            types = [
+                spark_type.get(
+                    next((type(r[i]) for r in rows if r[i] is not None), str),
+                    T.StringType(),
+                )
+                for i in range(len(names))
+            ]
+            assert [(f.name, f.dataType) for f in df.schema.fields] == list(
+                zip(names + ["geometry_wkb"], types + [T.BinaryType()])
+            ), key
+            got = [tuple(r) for r in df.collect()]
+            assert got == [tuple(r) + (g,) for r, g in zip(rows, geoms)], key
+
+        odd = {r.name: r for r in read_shapefile_zip(spark, season_zips["odd"]).collect()}
+        assert set(odd) == {"jÃ¤ttiputki", "Lupiini", "kurtturuusu"}  # latin-1 mojibake
+        assert odd["Lupiini"]["count"] is None and odd["Lupiini"].ratio is None
+        assert odd["kurtturuusu"]["count"] == -7 and odd["kurtturuusu"].ratio == 12.5
+        assert odd["Lupiini"].seen is None and odd["kurtturuusu"].seen == "2024-12-31"
+        assert [odd[k].flag for k in ("Lupiini", "kurtturuusu")] == [False, None]
+        schema = read_shapefile_zip(spark, season_zips["odd"]).schema
+        assert schema["empty"].dataType == T.StringType()
+        assert schema["count"].dataType == T.LongType()
+
+    def test_season_plans_start_one_python_stage(self, spark, season_zips):
+        """Each season's document plan reads its source as a LocalTableScan
+        (no PythonRDD behind an ExistingRDD scan) and runs ONE Arrow UDF.
+        A list-built source or a geometry UDF split in two fails here."""
+        from crowdsorsa_etl_spark.pipelines.crowdsorsa import documents_2023
+        from crowdsorsa_etl_spark.sources.observations import municipality_dim
+
+        for season in (2023, 2024):
+            obs = read_shapefile_zip(spark, season_zips[season]).withColumn(
+                "area_m2", F.lit(None).cast("double")
+            )
+            docs = (
+                documents_2023(obs, municipality_dim(spark))
+                if season == 2023
+                else documents_2024(obs)
+            )
+            plan = docs._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "ExistingRDD" not in plan and "EvalPython" not in plan.replace(
+                "ArrowEvalPython", ""
+            ), plan
+            if season == 2023:
+                broadcast = plan[plan.index("BroadcastExchange"):]
+                assert "LocalTableScan [kunta" in broadcast, plan
+            assert docs.count() == 60
+
+    def test_streaming_example_path_equals_batch(self, spark, tmp_path):
+        """``observations_2023`` → parquet drops → file stream →
+        ``documents_2023`` (the streaming example's path) yields the batch
+        documents."""
+        from crowdsorsa_etl_spark.pipelines.crowdsorsa import documents_2023
+        from crowdsorsa_etl_spark.schemas import OBSERVATIONS_2023
+        from crowdsorsa_etl_spark.sources.observations import (
+            municipality_dim,
+            observations_2023,
+        )
+
+        inbox = tmp_path / "inbox"
+        for i, seed in enumerate((7, 8)):
+            observations_2023(spark, n=20, seed=seed).coalesce(1).write.parquet(
+                str(inbox / f"drop_{i}")
+            )
+        stream = spark.readStream.schema(OBSERVATIONS_2023).option(
+            "maxFilesPerTrigger", 1
+        ).parquet(str(inbox / "drop_*"))
+        query = (
+            documents_2023(stream, municipality_dim(spark))
+            .select("obs_id", "document_json")
+            .writeStream.format("memory")
+            .queryName("season2023_stream_docs")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        streamed = sorted(tuple(r) for r in spark.table("season2023_stream_docs").collect())
+        batch = documents_2023(
+            observations_2023(spark, n=20, seed=7).unionByName(
+                observations_2023(spark, n=20, seed=8)
+            ),
+            municipality_dim(spark),
+        )
+        assert streamed == sorted(
+            tuple(r) for r in batch.select("obs_id", "document_json").collect()
+        )
+        assert len(streamed) == 40
