@@ -404,8 +404,17 @@ SEASON_GEOMETRY = T.StructType(
 
 
 def _ceil_area(polys: list[list[list[tuple[float, float]]]], area_fn) -> float:
-    """``area_m2``'s ``F.ceil(..).cast("double")`` on one value."""
-    return float(math.ceil(_polys_area(polys, area_fn)))
+    """``area_m2``'s ``F.ceil(..).cast("double")`` on one value. A NaN area
+    (NaN coordinates in the .shp) stays NaN, which Arrow hands Spark as
+    null, as it did from ``st_area_*``. Spark's ceil of a double is a Java
+    ``(long)`` cast, so an area at or beyond 2**63 (an overflowing planar
+    product) clamps to the long range."""
+    a = _polys_area(polys, area_fn)
+    if math.isnan(a):
+        return a
+    if abs(a) >= 2.0**63:
+        return math.copysign(2.0**63, a)
+    return float(math.ceil(a))
 
 
 def _season_2023(buf: bytes | None, area: float | None):

@@ -1,4 +1,4 @@
-"""Driver-held columns → a DataFrame that starts no Python worker.
+"""Driver-held rows → a DataFrame that starts no Python worker.
 
 ``spark.createDataFrame(list)`` plans a ``Scan ExistingRDD`` over a
 PythonRDD: PySpark re-serializes the list through an identity ``map``, so
@@ -17,12 +17,12 @@ from pyspark.sql.types import StructType
 
 
 def local_frame(
-    spark: SparkSession, columns: list[list], schema: StructType
+    spark: SparkSession, rows: list[tuple], schema: StructType
 ) -> DataFrame:
-    """One list of Python values per field of ``schema``, in field order."""
+    """Rows of Python values, one per field of ``schema`` in field order."""
     arrow = to_arrow_schema(schema)
     table = pa.Table.from_arrays(
-        [pa.array(values, type=f.type) for values, f in zip(columns, arrow)],
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)

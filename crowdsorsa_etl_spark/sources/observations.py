@@ -187,9 +187,7 @@ def observation_rows_2023(n: int = 200, seed: int = 7) -> list[tuple]:
 
 
 def observations_2023(spark: SparkSession, n: int = 200, seed: int = 7) -> DataFrame:
-    rows = observation_rows_2023(n, seed)
-    columns = [[r[i] for r in rows] for i in range(len(OBSERVATIONS_2023))]
-    return local_frame(spark, columns, OBSERVATIONS_2023)
+    return local_frame(spark, observation_rows_2023(n, seed), OBSERVATIONS_2023)
 
 
 def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
@@ -224,4 +222,4 @@ def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
 
 def municipality_dim(spark: SparkSession) -> DataFrame:
     """The broadcast dimension replacing geofi::municipality_key_2023."""
-    return local_frame(spark, [list(c) for c in zip(*MUNICIPALITIES)], MUNICIPALITY_KEY)
+    return local_frame(spark, MUNICIPALITIES, MUNICIPALITY_KEY)

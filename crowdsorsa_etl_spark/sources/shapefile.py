@@ -27,6 +27,7 @@ import os
 import struct
 import tempfile
 import zipfile
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -317,15 +318,19 @@ def read_shapefile_zip(
 
     if len(geoms) != len(rows):
         raise ValueError(f".shp has {len(geoms)} records but .dbf has {len(rows)}")
-    columns = [[r[i] for r in rows] for i in range(len(names))]
     schema = T.StructType(
-        [T.StructField(n, _field_type(c), True) for n, c in zip(names, columns)]
+        [
+            T.StructField(n, _field_type(r[i] for r in rows), True)
+            for i, n in enumerate(names)
+        ]
         + [T.StructField("geometry_wkb", T.BinaryType(), True)]
     )
-    return local_frame(spark, columns + [geoms], schema)
+    return local_frame(
+        spark, [(*row, geom) for row, geom in zip(rows, geoms)], schema
+    )
 
 
-def _field_type(values: list[object]) -> T.DataType:
+def _field_type(values: Iterable[object]) -> T.DataType:
     """The Spark type of a decoded .dbf column, from its first non-null
     value (parse_dbf's Python types); an all-null column is a string."""
     for v in values:

@@ -183,8 +183,10 @@ class TestSeasonGeometry:
             self._composed(F.col("g"), F.col("a"), crs).alias("composed"),
         ).collect()
         assert len(rows) == len(cases)
-        for r in rows:
-            assert r.fused.asDict(recursive=True) == r.composed.asDict(recursive=True)
+        for r in rows:  # repr: a NaN coordinate equals itself
+            assert repr(r.fused.asDict(recursive=True)) == repr(
+                r.composed.asDict(recursive=True)
+            )
         return [r.fused for r in rows]
 
     def test_areas_within_1e9_of_an_integer(self, spark):
@@ -232,3 +234,18 @@ class TestSeasonGeometry:
         assert [g.area for g in got] == [0.0, -3.0, 7.0]
         assert [len(g.geojson.coordinates[0][0]) for g in got] == [4, 4, 5]
         self._assert_equal(spark, [(wkb, 0.0), (wkb, -3.0)], "EUREF")
+
+    def test_non_finite_and_overflowing_areas(self, spark):
+        """A NaN area reaches Spark as null (so 2023 keeps the raw rings);
+        Spark's ceil casts to long, so an infinite or >= 2**63 one clamps
+        to 2**63."""
+        nan = float("nan")
+        cases = [
+            (polygons_to_wkb([_lonlat_square(nan, 60.0, 0.001)]), None),
+            (polygons_to_wkb([_lonlat_square(0.0, 0.0, 1e200)]), None),
+            (polygons_to_wkb([_lonlat_square(0.0, 0.0, 1e12)]), None),
+        ]
+        got = self._assert_equal(spark, cases, "EUREF")
+        assert [g.area for g in got] == [None, 2.0**63, 2.0**63]
+        got = self._assert_equal(spark, cases, "WGS84")
+        assert got[0].area is None
