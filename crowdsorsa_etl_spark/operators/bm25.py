@@ -167,7 +167,8 @@ def bm25_append_index(new_docs: DataFrame, path: str) -> None:
     lengths land as new files — existing rows are never read or rewritten
     (postings are distributive over documents). Contract: ``new_docs``
     doc_ids are new; re-appending an existing doc double-counts it (dedupe
-    upstream — the curation ledger is the engine's tool for exactly that).
+    upstream — a keyed ledger, ``sinks/ledger.py``, is the engine's tool
+    for exactly that).
     """
     postings = build_postings(new_docs)
     postings.cache()

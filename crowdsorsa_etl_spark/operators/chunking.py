@@ -1,10 +1,8 @@
 """Fixed-window training-chunk materialization — THE chunk grid.
 
-One implementation shared by the batch query (llm_doc_chunking) and the
-streaming curation ingest (streaming.start_curation_stream), so the two
-corpora can never silently diverge in schema or tail handling: documents
-split once, chunk starts via sequence(), posexplode, slice — a fully
-narrow whole-stage-codegen plan (no joins, no exchange).
+The grid behind llm_doc_chunking: documents split once, chunk starts via
+sequence(), posexplode, slice — a fully narrow whole-stage-codegen plan
+(no joins, no exchange).
 """
 
 from __future__ import annotations

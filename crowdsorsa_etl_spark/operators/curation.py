@@ -189,26 +189,24 @@ def pack_sequences(
 def token_budget_sample(
     df: DataFrame,
     budgets: dict[str, int],
-    *,
-    token_col: str = "n_tokens",
-    group_col: str = "source",
-    default_budget: int = 0,
 ) -> DataFrame:
-    """Quota sampling to an ABSOLUTE per-group token budget — the "mix this
-    corpus as 30B tokens of web + 5B of code" primitive. ``llm_domain_mix``
-    keeps a fixed FRACTION per source; this keeps docs, in deterministic
-    md5 order, until the group's token budget is exhausted.
+    """Quota sampling to an ABSOLUTE per-``source`` token budget — the
+    "mix this corpus as 30B tokens of web + 5B of code" primitive.
+    ``llm_domain_mix`` keeps a fixed FRACTION per source; this keeps docs,
+    in deterministic md5 order, until the source's token budget is
+    exhausted.
 
-    A doc is kept when the budget is not yet spent at the doc's START
-    (``cum - own < budget``): the document that crosses the budget line is
-    taken whole, never truncated — matching how corpus mixers overshoot by
-    at most one document rather than splitting one.
+    A doc (``n_tokens`` long) is kept when the budget is not yet spent at
+    the doc's START (``cum - own < budget``): the document that crosses
+    the budget line is taken whole, never truncated — matching how corpus
+    mixers overshoot by at most one document rather than splitting one.
 
     Deterministic and engine-stable: the admission order is
     ``(md5('budget:' || key), key)`` — re-running the pipeline (or replaying
     it in another engine) admits the identical document set.
 
-    Output: input columns + cum_tokens (bigint) + kept (boolean).
+    Output: input columns + cum_tokens (bigint) + kept (boolean). A source
+    without a budget keeps nothing.
 
     At 100 TB: one window per group key. A group that dominates the corpus
     makes that window a single reducer — for such skew, compute per-partition
@@ -220,15 +218,15 @@ def token_budget_sample(
         F.concat(F.lit("budget:"), F.col("doc_id").cast("string"))
     )
     w = (
-        Window.partitionBy(group_col).orderBy(order_key, F.col("doc_id"))
+        Window.partitionBy("source").orderBy(order_key, F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    budget = F.lit(default_budget)
+    budget = F.lit(0)
     for g, b in sorted(budgets.items()):
-        budget = F.when(F.col(group_col) == g, F.lit(b)).otherwise(budget)
-    cum = F.sum(token_col).over(w).cast("bigint")
+        budget = F.when(F.col("source") == g, F.lit(b)).otherwise(budget)
+    cum = F.sum("n_tokens").over(w).cast("bigint")
     return df.withColumn("cum_tokens", cum).withColumn(
-        "kept", (F.col("cum_tokens") - F.col(token_col)) < budget
+        "kept", (F.col("cum_tokens") - F.col("n_tokens")) < budget
     )
 
 

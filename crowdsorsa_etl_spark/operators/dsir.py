@@ -87,101 +87,22 @@ def hashed_ngram_buckets(
     )
 
 
-def dsir_bucket_stats(
-    docs: DataFrame,
-    target_pred: Column,
-    *,
-    buckets: int,
-) -> DataFrame:
-    """(bucket, t_cnt, r_cnt, lr_fx): per-bucket occurrence counts in the
-    target (``target_pred`` true) and raw (false) slices, and the smoothed
-    log-likelihood ratio as a fixed-point integer (·10⁶). ≤ ``buckets``
-    rows — the bounded model artifact."""
-    feats = hashed_ngram_buckets(
-        docs.select(
-            F.col("doc_id"), F.col("text"), target_pred.alias("_is_t")
-        ),
-        buckets=buckets,
-        extra_cols=["_is_t"],
-    )
-    stats = feats.groupBy("bucket").agg(
-        F.sum(F.when(F.col("_is_t"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("t_cnt"),
-        F.sum(F.when(F.col("_is_t"), 0).otherwise(1))
-        .cast("bigint")
-        .alias("r_cnt"),
-    )
-    totals = stats.agg(
-        F.sum("t_cnt").cast("bigint").alias("t_total"),
-        F.sum("r_cnt").cast("bigint").alias("r_total"),
-    )
-    lam = 1.0
-    lr = F.log(
-        (F.col("t_cnt") + F.lit(lam))
-        / (F.col("t_total") + F.lit(lam * buckets))
-    ) - F.log(
-        (F.col("r_cnt") + F.lit(lam))
-        / (F.col("r_total") + F.lit(lam * buckets))
-    )
-    return stats.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        "t_cnt",
-        "r_cnt",
-        F.round(lr * F.lit(FX), 0).cast("bigint").alias("lr_fx"),
-    )
-
-
-def dsir_scores(
-    docs: DataFrame,
-    stats: DataFrame,
-    *,
-    buckets: int,
-) -> DataFrame:
-    """(doc_id, n_grams, logratio, avg_logratio, selected): per-doc DSIR
-    importance score against a frozen ``stats`` artifact
-    (:func:`dsir_bucket_stats`). ``selected`` is the deterministic
-    threshold-at-0 variant. Grams hashing to buckets absent from the
-    artifact contribute nothing but are counted (``n_grams`` is the full
-    feature count) — with stats built over a superset corpus the join
-    always hits."""
-    feats = hashed_ngram_buckets(docs, buckets=buckets)
-    joined = feats.join(
-        F.broadcast(stats.select("bucket", "lr_fx")), "bucket", "left"
-    )
-    out = joined.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-        F.sum(F.coalesce("lr_fx", F.lit(0))).cast("bigint").alias("_fx"),
-    )
-    logratio = F.col("_fx") / F.lit(float(FX))
-    return out.select(
-        "doc_id",
-        "n_grams",
-        F.round(logratio, 6).alias("logratio"),
-        F.round(logratio / F.col("n_grams"), 6).alias("avg_logratio"),
-        (F.col("_fx") > 0).alias("selected"),
-    )
-
-
 def dsir_weights_onepass(
     docs: DataFrame,
     target_pred: Column,
     *,
     buckets: int,
 ) -> DataFrame:
-    """:func:`dsir_bucket_stats` + :func:`dsir_scores` fused over ONE
-    n-gram pass (r16, guide §2.4): the two-call form tokenizes and
-    explodes the corpus twice — once building the model over all docs,
-    again scoring the pool. Here the occurrence stream folds immediately
-    to a (doc_id, bucket, is_t, cnt) grid (map-side combined; ≤ min(4096,
-    grams) rows per doc — far narrower than the token stream) which is
-    materialized once and feeds BOTH the bucket model and the per-doc
-    scores. Arithmetic is identical: t_cnt/r_cnt = Σ cnt over the grid
-    slices, per-doc _fx = Σ cnt·lr_fx — exact BIGINT sums either way.
-
-    Use the two-call form when the model is FROZEN across epochs (the
-    streaming scorer); this fused form when model and scores come from
-    the same snapshot, as in llm_dsir_weights."""
+    """(doc_id, n_grams, logratio, avg_logratio, selected): DSIR scores
+    of the raw pool (``target_pred`` false) against a bucket model built
+    from the same snapshot, in ONE n-gram pass (r16, guide §2.4). The
+    occurrence stream folds immediately to a (doc_id, bucket, is_t, cnt)
+    grid (map-side combined; ≤ min(4096, grams) rows per doc — far
+    narrower than the token stream) which is materialized once and feeds
+    BOTH the bucket model (t_cnt/r_cnt = Σ cnt over the grid slices, the
+    smoothed log-ratio as fixed-point ``lr_fx``) and the per-doc scores
+    (_fx = Σ cnt·lr_fx) — exact BIGINT sums. ``selected`` is the
+    deterministic threshold-at-0 variant."""
     feats = hashed_ngram_buckets(
         docs.select(
             F.col("doc_id"), F.col("text"), target_pred.alias("_is_t")

@@ -379,8 +379,8 @@ def kll_fold_sql(
 ) -> str:
     """ONE FLAT statement replaying a whole carried-sketch fold: a batch
     sketch per (source_sql, value_sql, order_sql) via the rank closed
-    form, then left-fold merges in list order — the exact state
-    ``start_kll_stream`` holds after the last epoch. Flat composition is
+    form, then left-fold merges in list order — the exact state a
+    carried-sketch fold holds after the last batch. Flat composition is
     load-bearing: nesting each stage's WITH inside the next re-plans it
     per reference, exponential in fold depth (measured 39.7 s for a
     3-batch fold nested vs ~1 s flat)."""

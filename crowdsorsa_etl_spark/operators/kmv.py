@@ -51,8 +51,9 @@ def kmv_hash_sql(expr: str) -> str:
     return md5_word_sql(f"'{KMV_SEED}' || CAST({expr} AS VARCHAR)", 1, 15)
 
 
-def kmv_sketch(df: DataFrame, key_col: str, k: int = KMV_K) -> list[int]:
-    """The k smallest distinct 60-bit hashes of ``key_col`` (ascending).
+def kmv_sketch(df: DataFrame, key_col: str) -> list[int]:
+    """The ``KMV_K`` smallest distinct 60-bit hashes of ``key_col``
+    (ascending).
     Distributed build (distinct + TakeOrdered), sketch-sized collect."""
     rows = (
         # NULL keys hash to NULL, which Spark's orderBy sorts FIRST
@@ -63,18 +64,18 @@ def kmv_sketch(df: DataFrame, key_col: str, k: int = KMV_K) -> list[int]:
         .select(kmv_hash_spark(F.col(key_col)).alias("h"))
         .distinct()
         .orderBy("h")
-        .limit(k)
+        .limit(KMV_K)
         .collect()
     )
     return [r["h"] for r in rows]
 
 
-def theta_split(sketch: list[int], k: int = KMV_K) -> tuple[list[int], int]:
-    """(retained sample, theta): whole set + θ=2^60 when under k entries,
-    else the k−1 values strictly below the k-th smallest (= θ)."""
-    if len(sketch) < k:
+def theta_split(sketch: list[int]) -> tuple[list[int], int]:
+    """(retained sample, theta): whole set + θ=2^60 when under ``KMV_K``
+    entries, else the k−1 values strictly below the k-th smallest (= θ)."""
+    if len(sketch) < KMV_K:
         return list(sketch), H_SPACE
-    return list(sketch[: k - 1]), sketch[k - 1]
+    return list(sketch[: KMV_K - 1]), sketch[KMV_K - 1]
 
 
 def theta_estimates(sk_a: list[int], sk_b: list[int]) -> dict[str, float]:

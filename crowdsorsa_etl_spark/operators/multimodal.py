@@ -907,14 +907,3 @@ def image_index_match(
     return cand.select(
         "id_a", "id_b", hamming.cast("int").alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
-
-
-def image_index_write_epoch(df: DataFrame, path: str, epoch: int) -> None:
-    """Epoch-versioned index write: the batch's band rows land under
-    ``path``/bands/epoch=<epoch>/pfx=* with OVERWRITE of that epoch dir —
-    a replayed epoch rewrites its own rows instead of double-appending
-    (the shard-stream replay contract applied to an index at rest).
-    Seed a pre-existing corpus with ``epoch=-1``."""
-    _ahash_banded_rows(df).write.mode("overwrite").partitionBy("pfx").parquet(
-        path.rstrip("/") + f"/bands/epoch={int(epoch)}"
-    )

@@ -1,8 +1,8 @@
 """SCD2 (slowly-changing dimension, type 2) builder from a change log.
 
 The warehouse-side complement of the engine's CDC surface: ``diff.py``
-computes what changed between snapshots, ``writers.upsert_parquet`` keeps
-latest-per-key, ``snapshots.py`` versions whole tables — this module turns
+computes what changed between snapshots, ``snapshots.py`` versions whole
+tables — this module turns
 an append-only change/event log into per-key VERSION HISTORY rows
 (valid_from / valid_to validity intervals, is_current flag), the standard
 dimension shape for as-of analytics joins (``operators/asof.py`` consumes

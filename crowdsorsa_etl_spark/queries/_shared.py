@@ -283,7 +283,7 @@ def _kn_token_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins). Deterministic: counts are exact BIGINTs and the score is
     the same rounded expression every time; at 100 TB this IS the
     production posture — a filter LM is trained once and its scores
-    serve from a table (SCALE.md's start_lm_score_stream form)."""
+    serve from a table."""
     path = _at_rest(
         os.path.join(
             _sf_cache_dir(sf_dir, "knscores_v1", "documents"), "lp.parquet"

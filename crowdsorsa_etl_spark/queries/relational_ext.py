@@ -378,8 +378,8 @@ def q32_first_last_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q33_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (1 h window, 15 min slide) as a batch query — each
-    event lands in exactly 4 overlapping windows; identical semantics to the
-    streaming sliding_counts (streaming/pipeline.py)."""
+    event lands in exactly 4 overlapping windows (Spark's ``window(ts,
+    '1 hour', '15 minutes')`` semantics)."""
     events = _t(spark, sf_dir, "events")
     return (
         events.groupBy(

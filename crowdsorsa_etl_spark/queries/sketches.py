@@ -898,21 +898,20 @@ def llm_hll_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# q117_kll_stream_fold — the streaming-KLL contract in batch form: the
+# q117_kll_stream_fold — a carried-sketch KLL fold in batch form: the
 # lineitem cents stream splits into 3 deterministic arrival batches
 # (l_orderkey % 3, fold order 0,1,2); each batch builds its closed-form
 # deterministic KLL cells DISTRIBUTED (one per-batch rank + one
 # projection, operators/kll.py), and the sketch-sized cell lists fold
-# driver-side through kll_merge — exactly what
-# streaming/pipeline.start_kll_stream does per micro-batch epoch. The
+# driver-side through kll_merge, as a stream would per micro-batch. The
 # oracle replays every batch sketch from row_number() arithmetic AND the
 # two merges from the same complete-block even-keep recurrence
 # (kll_merge_sql_parts), so the hash gate pins the exact carried-state cells a
 # stream would hold after epoch 3 — not an estimate. NOTE: merged cells
 # are deliberately NOT the one-shot sketch of the union (KLL merge
 # preserves the rank-error bound, not the cell set — unlike HLL's
-# idempotent max-merge); tests/test_round17.py pins stream == this fold,
-# weight conservation, and the merge-degraded rank bound.
+# idempotent max-merge); tests/test_round17.py pins this fold against
+# its oracle, weight conservation, and the merge-degraded rank bound.
 # ===========================================================================
 
 _N_BATCHES = 3

@@ -182,8 +182,8 @@ def push_documents_idempotent(
     Structured Streaming's foreachBatch is at-least-once: a crash between a
     completed push and the checkpoint's epoch commit replays the whole batch
     on restart, re-POSTing every document. This wrapper keeps a pushed-keys
-    ledger (epoch-partitioned parquet, overwrite-per-epoch like
-    sinks/writers.epoch_parquet_writer):
+    ledger (epoch-partitioned parquet; each epoch overwrites its own
+    ``epoch=<id>`` directory, so a replay rewrites rather than appends):
 
     1. anti-join the batch against every key already in the ledger,
     2. push only the remainder (push_documents, dedup within batch),

@@ -1,11 +1,11 @@
-"""Epoch-partitioned keyed ledger — the shared replay-safety core behind
-both exactly-once sinks (HTTP push, streaming curation ingest).
+"""Epoch-partitioned keyed ledger — the replay-safety core behind the
+exactly-once HTTP push (``http_push.push_documents_idempotent``).
 
 The pattern: foreachBatch is at-least-once, so a crash between a completed
 side effect and the checkpoint commit replays the whole batch. A parquet
 ledger of settled keys, anti-joined before the side effect and rewritten
 per epoch after it, upgrades the composition to effectively-once per key
-across restarts. Two invariants both consumers must hold (learned the hard
+across restarts. Two invariants every consumer must hold (learned the hard
 way — see the round-7 advice trail in sinks/http_push.py):
 
 * a ledger that EXISTS but cannot be read must RAISE — degrading to

@@ -245,11 +245,19 @@ def parse_shp(buf: bytes, *, preserve_zm: bool = False) -> list[bytes | None]:
     return out
 
 
-def parse_dbf(
-    buf: bytes, encoding: str = "latin-1"
-) -> tuple[list[str], list[list[object]]]:
-    """Parse a .dbf buffer → (column names, rows). Types: C→str, N/F→float
-    (int when no decimals), D→ISO date string, L→bool."""
+def parse_dbf(buf: bytes) -> tuple[list[str], list[list[object]]]:
+    """Parse a latin-1 .dbf buffer → (column names, rows), skipping the
+    records flagged deleted."""
+    names, records = _dbf_records(buf, "latin-1")
+    return names, [r for r in records if r is not None]
+
+
+def _dbf_records(
+    buf: bytes, encoding: str
+) -> tuple[list[str], list[list[object] | None]]:
+    """Parse a .dbf buffer → (column names, one entry per record): the
+    decoded row, or None for a record flagged deleted (``*``). Types:
+    C→str, N/F→float (int when no decimals), D→ISO date string, L→bool."""
     n_records, header_size, record_size = struct.unpack_from("<IHH", buf, 4)
     fields = []
     pos = 32
@@ -261,10 +269,11 @@ def parse_dbf(
         fields.append((raw_name.decode(encoding), ftype, flen, fdec))
         pos += 32
     names = [f[0] for f in fields]
-    rows: list[list[object]] = []
+    rows: list[list[object] | None] = []
     for r in range(n_records):
         rec_off = header_size + r * record_size
-        if buf[rec_off : rec_off + 1] == b"*":  # deleted row
+        if buf[rec_off : rec_off + 1] == b"*":
+            rows.append(None)
             continue
         off = rec_off + 1
         row: list[object] = []
@@ -297,7 +306,8 @@ def read_shapefile_zip(
     Schema comes from the .dbf field descriptors (the connector's explicit
     inference boundary — everything downstream is typed). Geometries
     take parse_shp's 2-D promotion, which is what the season pipelines
-    consume.
+    consume. A record flagged deleted in the .dbf is dropped together
+    with its .shp geometry, as GDAL's shapefile driver does.
     """
     with tempfile.TemporaryDirectory() as tmp:
         with zipfile.ZipFile(zip_path) as zf:
@@ -314,10 +324,13 @@ def read_shapefile_zip(
         with open(shp_path, "rb") as fh:
             geoms = parse_shp(fh.read())
         with open(dbf_path, "rb") as fh:
-            names, rows = parse_dbf(fh.read(), encoding)
+            names, records = _dbf_records(fh.read(), encoding)
 
-    if len(geoms) != len(rows):
-        raise ValueError(f".shp has {len(geoms)} records but .dbf has {len(rows)}")
+    if len(geoms) != len(records):
+        raise ValueError(
+            f".shp has {len(geoms)} records but .dbf has {len(records)}"
+        )
+    rows = [(*r, geom) for r, geom in zip(records, geoms) if r is not None]
     schema = T.StructType(
         [
             T.StructField(n, _field_type(r[i] for r in rows), True)
@@ -325,9 +338,7 @@ def read_shapefile_zip(
         ]
         + [T.StructField("geometry_wkb", T.BinaryType(), True)]
     )
-    return local_frame(
-        spark, [(*row, geom) for row, geom in zip(rows, geoms)], schema
-    )
+    return local_frame(spark, rows, schema)
 
 
 def _field_type(values: Iterable[object]) -> T.DataType:

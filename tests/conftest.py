@@ -26,8 +26,8 @@ def pytest_collection_modifyitems(config, items):
 
     pytest.ini deselects them by default so the driver-visible tier
     finishes inside the driver's window; the round close runs the full
-    suite with ``-m "slow or not slow"``. Stale list entries (renamed or
-    removed tests) simply match nothing."""
+    suite with ``-m "slow or not slow"``. An entry that names no test
+    would match nothing, so ``test_artifact_guards`` fails on one."""
     slow = _slow_nodeids()
     if not slow:
         return

@@ -287,8 +287,7 @@ def test_at_rest_ignores_markerless_leftover_stage(tmp_path):
 
 STREAMING = os.path.join(PKG, "streaming", "pipeline.py")
 
-# the bare-int() / isdigit() parses, and any directory listing (the regex
-# listings in compact_shard_epochs were the third parser)
+# the bare-int() / isdigit() parses, and any directory listing
 _EPOCH_PARSE = ('startswith("epoch=")', 'split("=", 1)', "os.listdir(")
 
 
@@ -878,8 +877,6 @@ _NON_TEST_TREES = tuple(t for t in _CALLER_TREES if t != "tests")
 
 # modules (path under the package) whose top-level names the sweep skips
 _CALLER_SWEEP_EXEMPT = {
-    "streaming/pipeline.py": "its stream starters are driven by tests and "
-    "examples; which of them stay is an open ROADMAP decision",
     "parity_oracles.py": "the DuckDB reference side: fixtures and oracle "
     "SQL the tests and the ORACLES digest read",
     "lsh_oracles.py": "the DuckDB reference side: fixtures and oracle "
@@ -892,6 +889,8 @@ _TEST_ONLY_OK = {
     "the closed form against",
     "kll_plan": "the per-level stream lengths the KLL tests compare the "
     "closed form against",
+    "kll_quantile": "reads a quantile off the sketch the KLL accuracy "
+    "tests compare against exact quantiles",
     "snapshot_repair": "crash recovery an operator runs by hand after a "
     "writer dies mid-commit",
 }
@@ -983,10 +982,18 @@ class Unused:
     root = str(tmp_path)
     package = _py_sources(root, ["pkg"])
     found = _test_only_defs(package, _py_sources(root, ["pkg", "tools"]))
-    assert found == ["pkg/m.py::Unused", "pkg/m.py::only_tests"]
-    # the test file's calls would hide both, were tests counted as callers
+    # the streaming module is swept like any other
+    assert found == [
+        "pkg/m.py::Unused",
+        "pkg/m.py::only_tests",
+        "pkg/streaming/pipeline.py::start_x_stream",
+    ]
+    # the test file's calls would hide the first two, were tests counted
+    # as callers
     everyone = _py_sources(root, ["pkg", "tools", "tests"])
-    assert _test_only_defs(package, everyone) == []
+    assert _test_only_defs(package, everyone) == [
+        "pkg/streaming/pipeline.py::start_x_stream"
+    ]
 
 
 # --- every top-level import is used --------------------------------------
@@ -1035,4 +1042,75 @@ def test_import_guard_flags_unused_names():
         "pkg/m.py:2: json",
         "pkg/m.py:5: dataclass",
         "pkg/m.py:6: z",
+    ]
+
+
+# --- the slow-tier list names only real tests ----------------------------
+
+
+def _test_paths(src: str) -> set[str]:
+    """``test`` and ``Class::test`` for every function a test module
+    defines at top level or in a top-level class."""
+    paths = set()
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            paths.add(node.name)
+        elif isinstance(node, ast.ClassDef):
+            paths |= {
+                f"{node.name}::{m.name}"
+                for m in node.body
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            }
+    return paths
+
+
+def _stale_slow_entries(root: str, entries: list[str]) -> list[str]:
+    """Entries (``file::[Class::]test[param]``) whose file is missing or
+    defines no such test. The ``[param]`` suffix is not checked."""
+    defined: dict[str, set[str]] = {}
+    bad = []
+    for entry in entries:
+        path, _, rest = entry.split("[", 1)[0].partition("::")
+        if path not in defined:
+            full = os.path.join(root, path)
+            if os.path.isfile(full):
+                with open(full) as fh:
+                    defined[path] = _test_paths(fh.read())
+            else:
+                defined[path] = set()
+        if rest not in defined[path]:
+            bad.append(entry)
+    return bad
+
+
+def test_slow_list_names_only_real_tests():
+    """conftest marks the tests/slow_tests.txt entries slow and silently
+    matches nothing for an entry whose test is gone, so a stale entry
+    would hide that the list no longer says what the slow tier holds."""
+    with open(os.path.join(REPO, "tests", "slow_tests.txt")) as fh:
+        entries = [
+            ln.strip() for ln in fh if ln.strip() and not ln.startswith("#")
+        ]
+    bad = _stale_slow_entries(REPO, entries)
+    assert not bad, f"{len(bad)} slow_tests.txt entries name no test: {bad}"
+
+
+def test_slow_list_guard_flags_missing_files_and_tests(tmp_path):
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_m.py").write_text(
+        "def test_a():\n    pass\n\n\n"
+        "class TestK:\n    def test_b(self):\n        pass\n"
+    )
+    entries = [
+        "tests/test_m.py::test_a",
+        "tests/test_m.py::test_a[p1]",
+        "tests/test_m.py::TestK::test_b",
+        "tests/test_m.py::TestK::test_gone",
+        "tests/test_m.py::test_b",
+        "tests/test_gone.py::test_a",
+    ]
+    assert _stale_slow_entries(str(tmp_path), entries) == [
+        "tests/test_m.py::TestK::test_gone",
+        "tests/test_m.py::test_b",
+        "tests/test_gone.py::test_a",
     ]

@@ -102,108 +102,6 @@ class TestSummaries:
             mg_partition_summaries(_docs(spark, ["a"]), "text", capacity=0)
 
 
-class TestStreamingHeavyHitters:
-    def _stage(self, spark, tmp_path, src, schema, name, rows):
-        import os
-
-        staging = str(tmp_path / f"_stage_{name}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-    def test_cross_batch_summary_guarantee(self, spark, tmp_path):
-        """The maintained summary never drops a token above n/(k+1), and
-        the sentinel total tracks the whole stream."""
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_heavy_hitters_stream,
-            streaming_heavy_hitter_candidates,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        # 'hot' appears across batches; cold tokens unique
-        b1 = [(i, f"hot cold{i}a cold{i}b") for i in range(10)]
-        b2 = [(100 + i, f"hot warm{i}") for i in range(10)]
-        self._stage(spark, tmp_path, src, schema, "b1.parquet", b1)
-        self._stage(spark, tmp_path, src, schema, "b2.parquet", b2)
-
-        state = str(tmp_path / "state")
-        q = start_heavy_hitters_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            state,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            capacity=8,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        cands = streaming_heavy_hitter_candidates(spark, state)
-        rows = {r["token"]: r for r in cands.collect()}
-        n_total = next(iter(rows.values()))["n_total"]
-        assert n_total == 50  # 30 + 20 tokens
-        # true count of 'hot' = 20 > 50/9 -> must be present
-        assert "hot" in rows
-        # MG bound: est <= true, true - est <= n/(k+1)
-        assert rows["hot"]["est"] <= 20
-        assert 20 - rows["hot"]["est"] <= 50 / 9
-
-    def test_replayed_epoch_does_not_double_count(self, spark, tmp_path):
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_heavy_hitters_stream,
-            streaming_heavy_hitter_candidates,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        self._stage(
-            spark, tmp_path, src, schema, "b1.parquet",
-            [(1, "alpha alpha beta")],
-        )
-        state = str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-
-        def run():
-            q = start_heavy_hitters_stream(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                state,
-                checkpoint_dir=ckpt,
-                capacity=8,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        run()
-        # simulate crash-before-commit: epoch 0 will replay
-        os.remove(os.path.join(ckpt, "commits", "0"))
-        crc = os.path.join(ckpt, "commits", ".0.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        run()
-
-        rows = {
-            r["token"]: r
-            for r in streaming_heavy_hitter_candidates(spark, state).collect()
-        }
-        assert rows["alpha"]["est"] == 2  # not 4
-        assert rows["alpha"]["n_total"] == 3
-
-
 class TestGroupedHeavyHitters:
     def test_exact_per_group_set(self, spark):
         """Grouped MG output == the exact per-group >=min_share token set

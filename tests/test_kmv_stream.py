@@ -1,9 +1,7 @@
-"""Streaming KMV (theta) sketch gates: the stream's final state must
-equal the ONE-SHOT kmv_sketch of the whole key set (min-k merge is
-union-collapsing), a checkpoint-loss replay must land on the identical
-state (idempotent merge — the HLL-class replay story, stronger than
-KLL's version-guard-dependent one), and the per-epoch summary must match
-operators/kmv.theta_split arithmetic exactly."""
+"""Streaming PSI drift gates: the stream's carried category counts and
+epoch PSI equal the batch q120 arithmetic against the same frozen
+reference, and a checkpoint-loss replay lands on the identical state
+(additive counts would double-count without the epoch-state protocol)."""
 
 from __future__ import annotations
 
@@ -13,123 +11,6 @@ import shutil
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-class TestKmvStream:
-    def _events(self, spark):
-        from crowdsorsa_etl_spark.queries._shared import _t
-
-        return _t(spark, SF_DIR, "events").select("event_id", "user_id")
-
-    def _stage_files(self, spark, tmp_path, n_batches=3):
-        ev = self._events(spark)
-        src = str(tmp_path / "ev")
-        os.makedirs(src)
-        for i in range(n_batches):
-            staging = str(tmp_path / f"_s{i}")
-            ev.filter(F.col("event_id") % n_batches == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(
-                os.path.join(staging, part),
-                os.path.join(src, f"b{i}.parquet"),
-            )
-        return src
-
-    def _final_state(self, spark, store):
-        epochs = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(store)
-            if d.startswith("epoch=")
-        ]
-        last = os.path.join(store, f"epoch={max(epochs)}")
-        hashes = [
-            r["h"]
-            for r in spark.read.schema("h bigint")
-            .parquet(os.path.join(last, "sketch"))
-            .orderBy("h")
-            .collect()
-        ]
-        summary = (
-            spark.read.schema("n_retained int, theta bigint, est double")
-            .parquet(os.path.join(last, "summary"))
-            .collect()[0]
-        )
-        return hashes, summary
-
-    def test_stream_equals_oneshot_and_replay_safe(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.operators.kmv import (
-            H_SPACE,
-            kmv_sketch,
-            theta_split,
-        )
-        from crowdsorsa_etl_spark.streaming.pipeline import start_kmv_stream
-
-        k = 64
-        src = self._stage_files(spark, tmp_path)
-        store = str(tmp_path / "store")
-
-        def run():
-            q = start_kmv_stream(
-                spark.readStream.schema("event_id long, user_id long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                store,
-                checkpoint_dir=str(tmp_path / "ckpt"),
-                key_col="user_id",
-                k=k,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        run()
-        hashes, summary = self._final_state(spark, store)
-        # min-k merge collapses: stream-final == one-shot sketch of ALL keys
-        oneshot = kmv_sketch(self._events(spark), "user_id", k=k)
-        assert hashes == oneshot
-        sample, theta = theta_split(oneshot, k)
-        assert summary["n_retained"] == len(oneshot)
-        assert summary["theta"] == theta
-        assert summary["est"] == round(
-            len(sample) * float(H_SPACE) / float(theta), 6
-        )
-        # checkpoint loss -> full replay lands on the identical state
-        # (idempotent merge; no version guard needed, but the layout has one)
-        shutil.rmtree(str(tmp_path / "ckpt"))
-        run()
-        assert self._final_state(spark, store)[0] == oneshot
-
-    def test_under_k_stream_is_exact(self, spark, tmp_path):
-        """Fewer distinct keys than k: every hash retained, theta = 2^60,
-        est = exact distinct count."""
-        from crowdsorsa_etl_spark.operators.kmv import H_SPACE
-        from crowdsorsa_etl_spark.streaming.pipeline import start_kmv_stream
-
-        src = self._stage_files(spark, tmp_path)
-        store = str(tmp_path / "store")
-        n_users = self._events(spark).select("user_id").distinct().count()
-        q = start_kmv_stream(
-            spark.readStream.schema("event_id long, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            store,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            key_col="user_id",
-            k=100_000,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        hashes, summary = self._final_state(spark, store)
-        assert len(hashes) == n_users
-        assert summary["theta"] == H_SPACE
-        assert summary["est"] == float(n_users)
 
 
 class TestPsiStream:

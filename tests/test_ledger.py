@@ -11,7 +11,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 import hashlib
 
@@ -119,114 +118,6 @@ class TestLedgerCore:
         assert got == {"new1", "old1"}  # full batch key set, never "other"
 
 
-class TestCurationStreamCompaction:
-    @staticmethod
-    def _stage(spark, tmp_path, src, schema, name, rows):
-        staging = str(tmp_path / f"_st_{name}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-    def test_dedup_survives_compaction_boundary(self, spark, tmp_path):
-        """A duplicate document arriving AFTER its key was folded from an
-        epoch partition into the compacted base must still be dropped, and
-        stream-age cost stays flat: with compact_every=1 the epoch root is
-        re-folded every batch, so the per-batch read always lists exactly
-        one base directory tree regardless of how many epochs elapsed."""
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_curation_stream,
-        )
-
-        text1 = " ".join(f"the token{i} and data value" for i in range(40))
-        text2 = " ".join(f"the other{i} in stream chunk" for i in range(50))
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        out = str(tmp_path / "chunks")
-        ledger = str(tmp_path / "ledger")
-
-        stage = lambda n, r: self._stage(spark, tmp_path, src, schema, n, r)  # noqa: E731
-        stage("b1.parquet", [(1, text1)])
-        stage("b2.parquet", [(2, text2)])
-        stage("b3.parquet", [(3, text1)])  # dup of 1, two compactions later
-
-        q = start_curation_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            out,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            ledger_dir=ledger,
-            compact_every=1,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        chunks = spark.read.parquet(out)
-        docs = {r.doc_id for r in chunks.select("doc_id").distinct().collect()}
-        assert docs == {1, 2}  # post-compaction duplicate still dropped
-
-        # every epoch got folded: flat read cost — one base, no epoch dirs
-        assert not os.path.exists(ledger)
-        assert os.path.isdir(base_path(ledger))
-        seen = read_ledger_keys(spark, ledger, ["_md5"])
-        assert seen.count() == 2
-
-    def test_replay_after_compaction_is_idempotent(self, spark, tmp_path):
-        """Kill after a compacted epoch (commit marker deleted), restart:
-        the replayed epoch finds its keys in the BASE (its own epoch
-        partition no longer exists), re-ingests nothing, and rebuilding +
-        re-compacting leaves the same key set."""
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_curation_stream,
-        )
-
-        text = " ".join(f"the word{i} and data value" for i in range(40))
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        out = str(tmp_path / "chunks")
-        ckpt = str(tmp_path / "ckpt")
-        ledger = str(tmp_path / "ledger")
-
-        def run():
-            q = start_curation_stream(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                out,
-                checkpoint_dir=ckpt,
-                ledger_dir=ledger,
-                compact_every=1,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        stage = lambda n, r: self._stage(spark, tmp_path, src, schema, n, r)  # noqa: E731
-        stage("b1.parquet", [(1, text)])
-        run()
-        n_first = spark.read.parquet(out).count()
-        assert n_first > 0
-
-        os.remove(os.path.join(ckpt, "commits", "0"))
-        crc = os.path.join(ckpt, "commits", ".0.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        stage("b2.parquet", [(2, text + " extra tail beyond the duplicate")])
-        run()
-
-        chunks = spark.read.parquet(out)
-        assert chunks.filter("doc_id = 1").count() == n_first
-        assert chunks.count() == n_first + chunks.filter("doc_id = 2").count()
-        assert read_ledger_keys(spark, ledger, ["_md5"]).count() == 2
-
-
 class TestHttpPushCompaction:
     def test_push_ledger_compaction_no_repost(self, spark, tmp_path):
         """push_documents_idempotent with compact_every: epoch partitions
@@ -297,56 +188,3 @@ class TestHttpPushCompaction:
             assert {r.obs_id for r in seen.collect()} == {"p1", "p2", "p3"}
         finally:
             server.shutdown()
-
-
-class TestCurationStreamPostings:
-    def test_streaming_postings_equal_batch_rebuild(self, spark, tmp_path):
-        """With postings_dir set, the curation stream maintains the BM25
-        index incrementally; after the stream drains, scoring through the
-        index equals a batch BM25 over exactly the kept, deduped corpus."""
-        from crowdsorsa_etl_spark.operators.bm25 import (
-            bm25_query_index,
-            bm25_topk,
-        )
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_curation_stream,
-        )
-
-        text1 = " ".join(f"the token{i} and data value" for i in range(40))
-        text2 = " ".join(f"the other{i} in stream chunk" for i in range(50))
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-
-        stage = TestCurationStreamCompaction._stage
-        stage(spark, tmp_path, src, schema, "b1.parquet",
-              [(1, text1), (2, "1 2")])        # 2 fails the quality gate
-        stage(spark, tmp_path, src, schema, "b2.parquet",
-              [(3, text1), (4, text2)])        # 3 duplicates 1
-
-        postings = str(tmp_path / "bm25")
-        q = start_curation_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            str(tmp_path / "chunks"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            ledger_dir=str(tmp_path / "ledger"),
-            postings_dir=postings,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        queries = spark.createDataFrame(
-            [(1, "the token1 data"), (2, "stream chunk")],
-            "query_id int, text string",
-        )
-        got = sorted(map(tuple,
-            bm25_query_index(spark, postings, queries, k=10).collect()))
-        kept = spark.createDataFrame(
-            [(1, text1), (4, text2)], schema  # junk + dup never indexed
-        )
-        want = sorted(map(tuple, bm25_topk(kept, queries, k=10).collect()))
-        assert got == want

@@ -191,143 +191,6 @@ class TestWordPiece:
             assert r["merged"] in toks
 
 
-class TestLinkageStream:
-    """Ingest-time record linkage: stream output over all epochs must
-    equal the batch multipass operator over the union of the batches
-    (linkage is per-pair stateless), with the clean reference PRUNED per
-    batch — a pruning bug that drops a blockable reference row breaks
-    parity."""
-
-    _WEIGHTS = {
-        "name": (0.9, 0.1),
-        "phone": (0.9, 0.05),
-        "acct": (0.8, 0.2),
-    }
-
-    @staticmethod
-    def _features():
-        from pyspark.sql import functions as F
-
-        return {
-            "name": F.col("c_name") == F.col("d_name"),
-            "phone": F.col("c_phone") == F.col("d_phone"),
-            "acct": F.col("c_acct") == F.col("d_acct"),
-        }
-
-    def _clean(self, spark):
-        rows = [
-            (1, "alice", "555-0001", 10.0, 7, "ce", "001"),
-            (2, "bob", "555-0002", 20.0, 7, "ob", "002"),
-            (3, "carol", "555-0003", 30.0, 7, "ol", "003"),
-            (4, "dave", "555-0004", 40.0, 8, "ve", "004"),
-        ]
-        return spark.createDataFrame(
-            rows,
-            "c_id long, c_name string, c_phone string, c_acct double,"
-            " blk_nation int, blk_tail string, blk_ph string",
-        )
-
-    def _dirty_batches(self):
-        # b1: 101 = exact dup of 1; 102 = bob with mangled name (blocks
-        #     only via the phone pass)
-        # b2: 103 = carol with mangled phone (blocks only via the name
-        #     pass); 104 = junk colliding with alice's tail block only
-        b1 = [
-            (101, "alice", "555-0001", 10.0, 7, "ce", "001"),
-            (102, "bo", "555-0002", 20.0, 7, "bo", "002"),
-        ]
-        b2 = [
-            (103, "carol", "555-9999", 30.0, 7, "ol", "999"),
-            (104, "zzce", "555-7777", 99.0, 7, "ce", "777"),
-        ]
-        return b1, b2
-
-    _DIRTY_SCHEMA = (
-        "d_id long, d_name string, d_phone string, d_acct double,"
-        " blk_nation int, blk_tail string, blk_ph string"
-    )
-
-    def test_stream_matches_batch_operator(self, spark, tmp_path):
-        import os
-
-        from crowdsorsa_etl_spark.operators.linkage import fs_link_multipass
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_linkage_stream,
-        )
-
-        clean_path = str(tmp_path / "clean")
-        self._clean(spark).write.parquet(clean_path)
-
-        b1, b2 = self._dirty_batches()
-        src = str(tmp_path / "dirty")
-        os.makedirs(src)
-        for name, rows in (("b1.parquet", b1), ("b2.parquet", b2)):
-            staging = str(tmp_path / f"_stage_{name}")
-            spark.createDataFrame(rows, self._DIRTY_SCHEMA).coalesce(
-                1
-            ).write.mode("overwrite").parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        out = str(tmp_path / "out")
-        passes = [["blk_nation", "blk_tail"], ["blk_nation", "blk_ph"]]
-        q = start_linkage_stream(
-            spark.readStream.schema(self._DIRTY_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            clean_path,
-            out,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            left_id="c_id",
-            right_id="d_id",
-            block_passes=passes,
-            features_builder=self._features,
-            weights=self._WEIGHTS,
-            upper=1.5,
-            lower=0.0,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        def key(rows):
-            return {
-                (r["c_id"], r["d_id"], r["fs_score"], r["fs_class"])
-                for r in rows
-            }
-
-        got = key(spark.read.parquet(out).collect())
-        want = key(
-            fs_link_multipass(
-                self._clean(spark),
-                spark.createDataFrame(b1 + b2, self._DIRTY_SCHEMA),
-                left_id="c_id",
-                right_id="d_id",
-                block_passes=passes,
-                features=self._features(),
-                weights=self._WEIGHTS,
-                upper=1.5,
-                lower=0.0,
-            ).collect()
-        )
-        assert got == want
-        # the three perturbation shapes all surface: exact dup matches,
-        # each single-pass block matches, the junk collision scores low
-        cls = {(c, d): k for c, d, _s, k in got}
-        assert cls[(1, 101)] == "match"
-        assert cls[(2, 102)] == "match"
-        assert cls[(3, 103)] == "match"
-        assert cls[(1, 104)] != "match"
-        # epoch layout: one dir per micro-batch (overwrite-own-epoch)
-        epochs = {
-            d for d in os.listdir(out) if d.startswith("epoch=")
-        }
-        assert epochs == {"epoch=0", "epoch=1"}
-
-
 class TestHardNegatives:
     def test_excludes_same_label_and_self(self, spark):
         from crowdsorsa_etl_spark.operators.similarity import (
@@ -519,65 +382,6 @@ class TestIncrementalComponents:
         assert {(r["id"], r["component"]) for r in reg0.collect()} == {
             (r["id"], r["component"]) for r in reg1.collect()
         }
-
-
-class TestEntityRegistryStream:
-    def test_latest_epoch_equals_full_recompute(self, spark, tmp_path):
-        import os
-
-        from crowdsorsa_etl_spark.operators.clusters import (
-            connected_components,
-        )
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_entity_registry_stream,
-        )
-
-        b0 = [(1, 2), (3, 4), (10, 11)]
-        b1 = [(2, 3), (0, 11)]  # merge {1,2}/{3,4}; 0 relabels {10,11}
-        src = str(tmp_path / "edges")
-        os.makedirs(src)
-        for name, rows in (("b0.parquet", b0), ("b1.parquet", b1)):
-            staging = str(tmp_path / f"_stage_{name}")
-            spark.createDataFrame(rows, "id_a long, id_b long").coalesce(
-                1
-            ).write.mode("overwrite").parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        reg_path = str(tmp_path / "registry")
-        q = start_entity_registry_stream(
-            spark.readStream.schema("id_a long, id_b long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            reg_path,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        epochs = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(reg_path)
-            if d.startswith("epoch=")
-        )
-        assert epochs == [0, 1]
-        got = {
-            (r["id"], r["component"])
-            for r in spark.read.parquet(
-                os.path.join(reg_path, f"epoch={epochs[-1]}")
-            ).collect()
-        }
-        want = {
-            (r["id"], r["component"])
-            for r in connected_components(
-                spark.createDataFrame(b0 + b1, "id_a long, id_b long")
-            ).collect()
-        }
-        assert got == want
 
 
 class TestPow2BucketParity:

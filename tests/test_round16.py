@@ -407,130 +407,6 @@ class TestSuffixArray:
         assert rows[13]["tokens_shingle"] <= rows[8]["tokens_shingle"]
 
 
-class TestMixStream:
-    def _split_source(self, spark, tmp_path, n_files=3):
-        import os
-
-        from crowdsorsa_etl_spark.queries._shared import _t
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        docs = _t(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
-        for i in range(n_files):
-            staging = str(tmp_path / f"_stage_{i}")
-            docs.filter(F.col("doc_id") % n_files == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(staging)
-            part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, f"b{i}.parquet"))
-        return src
-
-    def _run(self, spark, src, store, ckpt):
-        from crowdsorsa_etl_spark.streaming.pipeline import start_mix_stream
-
-        q = start_mix_stream(
-            spark.readStream.schema("doc_id long, text string, lang string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            store,
-            checkpoint_dir=ckpt,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    def _final_epoch(self, spark, store, name, schema):
-        import os
-
-        epochs = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(store)
-            if d.startswith("epoch=")
-        ]
-        return spark.read.schema(schema).parquet(
-            os.path.join(store, f"epoch={max(epochs)}", name)
-        )
-
-    def test_stream_final_plan_equals_batch_rebuild(self, spark, tmp_path):
-        """After the last micro-batch the carried-totals plan must equal
-        the scratch batch recompute over the full corpus — the invariant
-        an incremental planner lives on."""
-        from crowdsorsa_etl_spark.queries import QUERIES
-
-        src = self._split_source(spark, tmp_path)
-        store = str(tmp_path / "store")
-        self._run(spark, src, store, str(tmp_path / "ckpt"))
-        stream_plan = sorted(
-            tuple(r)
-            for r in self._final_epoch(
-                spark,
-                store,
-                "plan",
-                "lang string, n_docs long, n_tokens long,"
-                " weight double, oversample double",
-            ).collect()
-        )
-        batch_plan = sorted(
-            tuple(r)
-            for r in QUERIES["llm_temperature_mix"](spark, SF_DIR).collect()
-        )
-        assert stream_plan == batch_plan
-
-    def test_phase_manifest_matches_batch_counts(self, spark, tmp_path):
-        """Curriculum boundaries from carried per-phase totals == cumsum
-        of a scratch full-corpus phase count."""
-        from crowdsorsa_etl_spark.functions.text import quality_score
-        from crowdsorsa_etl_spark.queries._shared import _t
-
-        src = self._split_source(spark, tmp_path)
-        store = str(tmp_path / "store")
-        self._run(spark, src, store, str(tmp_path / "ckpt"))
-        got = {
-            r["phase"]: (r["n_docs"], r["phase_offset"])
-            for r in self._final_epoch(
-                spark, store, "phases", "phase int, n_docs long, phase_offset long"
-            ).collect()
-        }
-        q = quality_score(F.col("text"))
-        phase = F.when(q >= 0.666666, 0).when(q >= 0.333333, 1).otherwise(2)
-        counts = dict(
-            (r["p"], r["n"])
-            for r in _t(spark, SF_DIR, "documents")
-            .groupBy(phase.alias("p"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        off = 0
-        for p in sorted(counts):
-            assert got[p] == (counts[p], off)
-            off += counts[p]
-
-    def test_replay_never_double_counts(self, spark, tmp_path):
-        """Lose the checkpoint, replay the whole source: every epoch
-        re-derives from its true predecessor — final totals identical."""
-        import shutil
-
-        src = self._split_source(spark, tmp_path)
-        store = str(tmp_path / "store")
-        self._run(spark, src, store, str(tmp_path / "ckpt"))
-        first = sorted(
-            tuple(r)
-            for r in self._final_epoch(
-                spark, store, "totals", "lang string, n_docs long, n_tokens long"
-            ).collect()
-        )
-        shutil.rmtree(str(tmp_path / "ckpt"))
-        self._run(spark, src, store, str(tmp_path / "ckpt"))
-        again = sorted(
-            tuple(r)
-            for r in self._final_epoch(
-                spark, store, "totals", "lang string, n_docs long, n_tokens long"
-            ).collect()
-        )
-        assert first == again
-
-
 class TestHllSketch:
     def test_rho_matches_python_reference(self, spark):
         """Register index and rho from the DataFrame program must equal a
@@ -685,67 +561,6 @@ class TestKllGrouped:
             got = sorted((r["level"], r["pos"], r["value"]) for r in rows)
             ref = sorted((lv, pos, v) for lv, pos, v, _w in kll_cells_py(vals[g]))
             assert got == ref, g
-
-
-class TestHllStream:
-    def test_stream_final_equals_batch_sketch_and_replay_safe(
-        self, spark, tmp_path
-    ):
-        """Carried-register stream over 3 batches must end at exactly the
-        one-shot sketch; losing the checkpoint and replaying must land on
-        the same registers (max-merge idempotence)."""
-        import os
-        import shutil
-
-        from crowdsorsa_etl_spark.operators.hll import hll_registers
-        from crowdsorsa_etl_spark.queries._shared import _t
-        from crowdsorsa_etl_spark.streaming.pipeline import start_hll_stream
-
-        src = str(tmp_path / "ev")
-        os.makedirs(src)
-        ev = _t(spark, SF_DIR, "events").select("user_id")
-        for i in range(3):
-            staging = str(tmp_path / f"_s{i}")
-            ev.filter(F.col("user_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, f"b{i}.parquet"))
-        store = str(tmp_path / "store")
-
-        def run():
-            q = start_hll_stream(
-                spark.readStream.schema("user_id long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                store,
-                checkpoint_dir=str(tmp_path / "ckpt"),
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        def final_regs():
-            epochs = [
-                int(d.split("=", 1)[1])
-                for d in os.listdir(store)
-                if d.startswith("epoch=")
-            ]
-            return {
-                r["idx"]: r["r"]
-                for r in spark.read.schema("idx int, r int").parquet(
-                    os.path.join(store, f"epoch={max(epochs)}", "registers")
-                ).collect()
-            }
-
-        run()
-        first = final_regs()
-        batch = {r["idx"]: r["r"] for r in hll_registers(ev, "user_id").collect()}
-        assert first == batch
-        shutil.rmtree(str(tmp_path / "ckpt"))
-        run()
-        assert final_regs() == batch
 
 
 class TestJlTransform:

@@ -239,276 +239,6 @@ class TestLshIndex:
         assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-class TestStreamingShards:
-    def _stage(self, spark, tmp_path, src, schema, name, rows):
-        import os
-
-        staging = str(tmp_path / f"_stage_{name}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-    def _run(self, spark, src, schema, out, state, ckpt, budget=10):
-        from crowdsorsa_etl_spark.streaming.pipeline import start_shard_stream
-
-        q = start_shard_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            out,
-            state,
-            checkpoint_dir=ckpt,
-            shard_budget=budget,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    def test_shards_continue_across_epochs(self, spark, tmp_path):
-        import os
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        # 4 tokens per doc, budget 10: shard boundaries at 10/20/...
-        b1 = [(i, "w x y z") for i in range(3)]       # cum 4,8,12
-        b2 = [(10 + i, "w x y z") for i in range(3)]  # cum 16,20,24
-        self._stage(spark, tmp_path, src, schema, "b1.parquet", b1)
-        self._stage(spark, tmp_path, src, schema, "b2.parquet", b2)
-
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        self._run(spark, src, schema, out, state, str(tmp_path / "ckpt"))
-
-        rows = {
-            r.doc_id: r
-            for r in spark.read.parquet(out).collect()
-        }
-        assert len(rows) == 6
-        # cross-epoch continuation: batch-2 docs start at cum 12, not 0
-        assert rows[10].cum_tokens == 16
-        # the exact batch semantics of q108: shard = start // budget
-        for r in rows.values():
-            assert r.shard_id == (r.cum_tokens - r.n_tokens) // 10
-        # starts: doc0=0, doc2=8 -> shard 0; doc10=12, doc11=16 -> shard 1;
-        # doc12 starts at 20 -> shard 2
-        assert rows[0].shard_id == 0 and rows[2].shard_id == 0
-        assert rows[10].shard_id == 1 and rows[12].shard_id == 2
-
-    def test_replayed_epoch_does_not_advance_counter(self, spark, tmp_path):
-        import os
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        self._stage(
-            spark, tmp_path, src, schema, "b1.parquet", [(1, "a b c")]
-        )
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-        self._run(spark, src, schema, out, state, ckpt)
-        # crash-before-commit: epoch 0 replays
-        os.remove(os.path.join(ckpt, "commits", "0"))
-        crc = os.path.join(ckpt, "commits", ".0.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        self._run(spark, src, schema, out, state, ckpt)
-
-        latest = spark.read.schema("total long").parquet(
-            os.path.join(state, "epoch=0")
-        ).collect()
-        assert latest[0]["total"] == 3  # not 6
-        got = spark.read.parquet(out).collect()
-        assert len(got) == 1 and got[0].cum_tokens == 3
-
-    def _epoch_dirs(self, out):
-        import os
-        import re
-
-        return sorted(
-            int(m.group(1))
-            for d in os.listdir(out)
-            if (m := re.match(r"^epoch=(-?\d+)$", d))
-        )
-
-    def test_compaction_folds_old_epochs_preserving_shards(
-        self, spark, tmp_path
-    ):
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            compact_shard_epochs,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        for b in range(4):  # 4 single-file micro-batches = 4 epochs
-            self._stage(
-                spark, tmp_path, src, schema, f"b{b}.parquet",
-                [(10 * b + i, "w x y z") for i in range(3)],
-            )
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        self._run(spark, src, schema, out, state, str(tmp_path / "ckpt"))
-
-        before = {
-            r.doc_id: (r.n_tokens, r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert self._epoch_dirs(out) == [0, 1, 2, 3]
-
-        folded = compact_shard_epochs(spark, out, state, keep_epochs=2)
-        assert folded == 2
-        assert self._epoch_dirs(out) == [-1, 2, 3]
-        after = {
-            r.doc_id: (r.n_tokens, r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert after == before  # every row, every shard id preserved
-        # state pruned to the newest two epochs
-        assert self._epoch_dirs(state) == [2, 3]
-        # second call: nothing older than the keep window — a no-op
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 0
-
-    def test_replay_after_compaction_keeps_shard_ids(self, spark, tmp_path):
-        """The keep-window exists for exactly this: an epoch that replays
-        AFTER a compaction must overwrite its own still-live dir and land
-        on the same carried total, leaving the full table unchanged."""
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            compact_shard_epochs,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        for b in range(3):
-            self._stage(
-                spark, tmp_path, src, schema, f"b{b}.parquet",
-                [(10 * b + i, "w x y z") for i in range(3)],
-            )
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-        self._run(spark, src, schema, out, state, ckpt)
-        before = {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        }
-
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 1
-        # crash-before-commit of the LAST epoch, then replay it
-        os.remove(os.path.join(ckpt, "commits", "2"))
-        crc = os.path.join(ckpt, "commits", ".2.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        self._run(spark, src, schema, out, state, ckpt)
-
-        after = {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert after == before
-        # live epochs are now [1, 2] — nothing older than the keep window,
-        # so a further compaction is a no-op and the table is unchanged
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 0
-        assert {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        } == before
-
-    def test_compaction_repairs_crashed_swap(self, spark, tmp_path):
-        """Crash between _swap_dirs' two renames leaves epoch=-1__old; the
-        next compaction run must repair it (promote or drop) rather than
-        die parsing the dir name, and the table must stay intact."""
-        import os
-        import shutil
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            compact_shard_epochs,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        for b in range(4):
-            self._stage(
-                spark, tmp_path, src, schema, f"b{b}.parquet",
-                [(10 * b + i, "w x y z") for i in range(3)],
-            )
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        self._run(spark, src, schema, out, state, str(tmp_path / "ckpt"))
-        before = {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 2
-
-        base = os.path.join(out, "epoch=-1")
-        stale = base + "__old"
-
-        # case 1: crash after rename-aside, before promote → base missing
-        os.rename(base, stale)
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 0
-        assert os.path.isdir(base) and not os.path.isdir(stale)
-        assert {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        } == before
-
-        # case 2: crash after promote, before old-copy delete → both exist
-        shutil.copytree(base, stale)
-        assert compact_shard_epochs(spark, out, state, keep_epochs=2) == 0
-        assert os.path.isdir(base) and not os.path.isdir(stale)
-        assert {
-            r.doc_id: (r.cum_tokens, r.shard_id)
-            for r in spark.read.parquet(out).collect()
-        } == before
-
-    def test_compaction_refuses_on_duplicate_ids(self, spark, tmp_path):
-        """Distinct rows sharing a doc_id after the exact-duplicate drop
-        mean replay is no longer bit-deterministic — compaction must fail
-        loudly instead of silently folding (and possibly losing) data."""
-        import os
-
-        import pytest as _pytest
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            compact_shard_epochs,
-        )
-
-        out = str(tmp_path / "out")
-        schema = "doc_id long, n_tokens long, cum_tokens long, shard_id long"
-        spark.createDataFrame([(1, 4, 4, 0)], schema).write.partitionBy(
-            "shard_id"
-        ).parquet(os.path.join(out, "epoch=0"))
-        # same doc_id, different cum_tokens → not an exact duplicate
-        spark.createDataFrame([(1, 4, 8, 0)], schema).write.partitionBy(
-            "shard_id"
-        ).parquet(os.path.join(out, "epoch=1"))
-        spark.createDataFrame([(2, 4, 12, 1)], schema).write.partitionBy(
-            "shard_id"
-        ).parquet(os.path.join(out, "epoch=2"))
-        spark.createDataFrame([(3, 4, 16, 1)], schema).write.partitionBy(
-            "shard_id"
-        ).parquet(os.path.join(out, "epoch=3"))
-
-        with _pytest.raises(ValueError, match="doc_id"):
-            compact_shard_epochs(spark, out, keep_epochs=2)
-
-    def test_compaction_rejects_bad_keep(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            compact_shard_epochs,
-        )
-
-        with _pytest.raises(ValueError):
-            compact_shard_epochs(spark, str(tmp_path), keep_epochs=0)
-
-
 class TestQualityClassifier:
     def test_matches_python_reference(self, spark):
         import math
@@ -619,95 +349,3 @@ class TestImagePhash:
         png = self._payloads(spark, ["x"])
         with pytest.raises(ValueError, match="pigeonhole"):
             image_ahash_dups(png, max_hamming=8)
-
-
-class TestShardStreamTokenIds:
-    """start_shard_stream with merges+vocab: the export budgets on REAL
-    BPE token counts and carries ids_md5 + the raw token_ids arrays — the
-    drained stream must match the batch bpe_encode_ids exactly, with the
-    cumulative total continuing across epochs."""
-
-    def test_token_id_shards_match_batch(self, spark, tmp_path):
-        import os
-
-        from crowdsorsa_etl_spark.operators.bpe import (
-            bpe_encode_ids,
-            bpe_learn_merges,
-            bpe_vocab,
-        )
-        from crowdsorsa_etl_spark.streaming.pipeline import start_shard_stream
-
-        schema = "doc_id long, text string"
-        b1 = [(1, "low lower lowest"), (2, "new newest newer")]
-        b2 = [(3, "the widest wide low new"), (4, "")]
-        corpus = spark.createDataFrame(b1 + b2, schema)
-        merges = [
-            tuple(r["pair"].split(" "))
-            for r in bpe_learn_merges(corpus, n_merges=6).collect()
-        ]
-        vocab = {
-            r["token"]: r["token_id"]
-            for r in bpe_vocab(corpus, merges).collect()
-        }
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        TestStreamingShards._stage(
-            self, spark, tmp_path, src, schema, "b1.parquet", b1
-        )
-        TestStreamingShards._stage(
-            self, spark, tmp_path, src, schema, "b2.parquet", b2
-        )
-        out, state = str(tmp_path / "out"), str(tmp_path / "state")
-        q = start_shard_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            out,
-            state,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            shard_budget=5,
-            merges=merges,
-            vocab=vocab,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        got = {r.doc_id: r for r in spark.read.parquet(out).collect()}
-        want = {
-            r["doc_id"]: r
-            for r in bpe_encode_ids(
-                corpus, merges, vocab, ids_col="token_ids"
-            ).collect()
-        }
-        # doc 4 is empty → dropped on both sides
-        assert set(got) == set(want) == {1, 2, 3}
-        for d, w in want.items():
-            g = got[d]
-            assert g.n_tokens == w["n_tokens"]
-            assert g.ids_md5 == w["ids_md5"]
-            assert list(g.token_ids) == list(w["token_ids"])
-        # cumulative totals continue across epochs in doc order per epoch
-        cum = {d: got[d].cum_tokens for d in got}
-        assert cum[1] == want[1]["n_tokens"]
-        assert cum[2] == cum[1] + want[2]["n_tokens"]
-        assert cum[3] == cum[2] + want[3]["n_tokens"]
-        for g in got.values():  # q108 shard math over real token counts
-            assert g.shard_id == (g.cum_tokens - g.n_tokens) // 5
-
-    def test_merges_without_vocab_rejected(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from crowdsorsa_etl_spark.streaming.pipeline import start_shard_stream
-
-        schema = "doc_id long, text string"
-        with _pytest.raises(ValueError, match="together"):
-            start_shard_stream(
-                spark.readStream.schema(schema).parquet(str(tmp_path)),
-                str(tmp_path / "o"),
-                str(tmp_path / "s"),
-                checkpoint_dir=str(tmp_path / "c"),
-                merges=[("a", "b")],
-            )

@@ -329,63 +329,6 @@ class TestScd2ApplyBatch:
         assert seen[(1, 3)] == _ts("2024-01-04T00:00:00")
 
 
-class TestScd2Stream:
-    def test_streaming_maintenance_matches_batch(self, spark, tmp_path):
-        """File-stream → foreachBatch SCD2: after both files process, the
-        versions table equals scd2_build over the full log."""
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import start_scd2_stream
-
-        src = str(tmp_path / "changes")
-        os.makedirs(src)
-        schema = "user_id long, ts timestamp, status string, eid long"
-        b1 = [(1, _ts("2024-01-01T00:00:00"), "A", 1),
-              (1, _ts("2024-01-02T00:00:00"), "B", 2)]
-        b2 = [(1, _ts("2024-01-03T00:00:00"), "B", 3),
-              (2, _ts("2024-01-01T00:00:00"), "C", 4)]
-
-        def stage(name, rows):
-            staging = str(tmp_path / f"_st_{name}")
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            part = [f for f in os.listdir(staging) if f.endswith(".parquet")][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        stage("b1.parquet", b1)
-        stage("b2.parquet", b2)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = start_scd2_stream(
-            stream, str(tmp_path / "versions"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            key_cols=["user_id"], ts_col="ts", tracked_cols=["status"],
-            tie_break_cols=["eid"],
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        got = sorted(
-            (r.user_id, r.version, r.status, r.is_current)
-            for r in spark.read.parquet(str(tmp_path / "versions")).collect()
-        )
-        want = sorted(
-            (r.user_id, r.version, r.status, r.is_current)
-            for r in scd2_build(
-                spark.createDataFrame(b1 + b2, schema),
-                key_cols=["user_id"], ts_col="ts", tracked_cols=["status"],
-                tie_break_cols=["eid"],
-            ).collect()
-        )
-        assert got == want
-
-
 class TestScd2Buffered:
     SCHEMA = "user_id long, ts timestamp, status string, eid long"
     KW = dict(
@@ -583,86 +526,3 @@ class TestScd2Buffered:
         ]))
         _, n_flush = count_jobs(lambda: self._flush(spark, vd, bd))
         assert (n_apply, n_flush) == (5, 2)
-
-
-class TestScd2StreamBuffered:
-    def test_stream_with_disorder_equals_ordered_rebuild(self, spark, tmp_path):
-        """start_scd2_stream with a disorder bound: a late event delivered
-        in a later micro-batch (within the bound) still splits the run —
-        table after flush == fully-ordered rebuild."""
-        import os
-
-        from crowdsorsa_etl_spark.operators.scd import scd2_flush_buffer
-        from crowdsorsa_etl_spark.streaming.pipeline import start_scd2_stream
-
-        src = str(tmp_path / "changes")
-        os.makedirs(src)
-        schema = "user_id long, ts timestamp, status string, eid long"
-        all_rows = [
-            (1, _ts("2024-01-01T00:00:00"), "A", 1),
-            (1, _ts("2024-01-02T00:00:00"), "B", 2),  # delivered late
-            (1, _ts("2024-01-03T00:00:00"), "A", 3),
-            (1, _ts("2024-01-05T00:00:00"), "A", 4),  # advances watermark
-        ]
-        b1 = [all_rows[0], all_rows[2]]
-        b2 = [all_rows[1], all_rows[3]]
-
-        def stage(name, rows):
-            staging = str(tmp_path / f"_st_{name}")
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        stage("b1.parquet", b1)
-        stage("b2.parquet", b2)
-        kw = dict(
-            key_cols=["user_id"], ts_col="ts", tracked_cols=["status"],
-            tie_break_cols=["eid"],
-        )
-        vd, bd = str(tmp_path / "versions"), str(tmp_path / "buffer")
-        q = start_scd2_stream(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            vd,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            max_delay_seconds=172800.0,  # 2 days
-            buffer_dir=bd,
-            **kw,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        scd2_flush_buffer(spark, vd, bd, **kw)
-
-        got = sorted(
-            (r.user_id, r.version, r.status, r.valid_from, r.is_current)
-            for r in spark.read.parquet(vd).collect()
-        )
-        want = sorted(
-            (r.user_id, r.version, r.status, r.valid_from, r.is_current)
-            for r in scd2_build(
-                spark.createDataFrame(all_rows, schema), **kw
-            ).collect()
-        )
-        assert got == want
-        assert [s for _, _, s, _, _ in got] == ["A", "B", "A"]  # run split
-
-    def test_mismatched_buffer_args_raise(self, spark, tmp_path):
-        import pytest
-
-        from crowdsorsa_etl_spark.streaming.pipeline import start_scd2_stream
-
-        with pytest.raises(ValueError, match="together"):
-            start_scd2_stream(
-                spark.readStream.format("rate").load(),
-                str(tmp_path / "v"),
-                checkpoint_dir=str(tmp_path / "c"),
-                key_cols=["k"], ts_col="ts", tracked_cols=["v"],
-                max_delay_seconds=10.0,
-            )

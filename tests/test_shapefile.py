@@ -68,6 +68,38 @@ class TestShapefileReader:
         assert u2["reportedTaxonId"] == "http://tun.fi/MX.41695"  # jättiputki
         assert u2["facts"][0]["integerValue"] == 100  # 10x10 planar square
 
+    def test_deleted_dbf_record_drops_with_its_geometry(self, spark, tmp_path):
+        """A .dbf record flagged ``*`` is dropped together with its .shp
+        geometry, so the rows after it keep their own geometries."""
+        import struct
+        import zipfile
+
+        path = str(tmp_path / "deleted.zip")
+        rows = [[f"OBS-{i}", "Espoo", "2024-06-01", None, "Lupiini", 1.0]
+                for i in (1, 2, 3)]
+        squares = [
+            [[[(x, 0.0), (x + 1, 0.0), (x + 1, 1.0), (x, 1.0), (x, 0.0)]]]
+            for x in (0.0, 10.0, 20.0)
+        ]
+        write_shapefile_zip(
+            path, field_specs=FIELDS, rows=rows, geometries=squares
+        )
+        with zipfile.ZipFile(path) as zf:
+            shp, dbf = zf.read("data.shp"), bytearray(zf.read("data.dbf"))
+        header_size, record_size = struct.unpack_from("<HH", dbf, 8)
+        dbf[header_size + record_size] = ord("*")  # delete the middle row
+        with zipfile.ZipFile(path, "w") as zf:
+            zf.writestr("data.shp", shp)
+            zf.writestr("data.dbf", bytes(dbf))
+
+        got = {
+            r.tunniste: _parse_wkb(bytes(r.geometry_wkb))[0][0]
+            for r in read_shapefile_zip(spark, path).collect()
+        }
+        assert sorted(got) == ["OBS-1", "OBS-3"]
+        assert min(x for x, _y in got["OBS-1"]) == 0.0
+        assert min(x for x, _y in got["OBS-3"]) == 20.0
+
 
 def _shp_file(records: list[bytes]) -> bytes:
     """Assemble a minimal valid .shp from raw record-content buffers."""

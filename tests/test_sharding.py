@@ -156,122 +156,3 @@ class TestShardStoreCrashSafety:
         assert sorted(rows[i][0] for i in range(100, 106)) == list(
             range(19, 25)
         )
-
-
-class TestShardStream:
-    def test_stream_fold_equals_batch_fold(self, spark, tmp_path):
-        import os
-
-        from crowdsorsa_etl_spark.streaming.pipeline import start_shuffle_shard_stream
-
-        b0, b1 = list(range(0, 9)), list(range(20, 27))
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        for name, ids in (("b0.parquet", b0), ("b1.parquet", b1)):
-            staging = str(tmp_path / f"_stage_{name}")
-            spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long"
-            ).coalesce(1).write.mode("overwrite").parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        store = str(tmp_path / "store")
-        q = start_shuffle_shard_stream(
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            store,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            shard_docs=4,
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        epochs = sorted(
-            d for d in os.listdir(store) if d.startswith("epoch=")
-        )
-        assert len(epochs) == 2
-        got = {
-            r["doc_id"]: (r["pos"], r["shard_id"])
-            for r in spark.read.parquet(f"{store}/epoch=*/rows").collect()
-        }
-
-        # batch-sequential fold over the same splits
-        batch_root = str(tmp_path / "batch_store")
-        shard_store_init(_ids(spark, b0), batch_root, shard_docs=4)
-        shard_store_append(_ids(spark, b1), batch_root, shard_docs=4)
-        want = _rows(spark, batch_root)
-        assert got == want
-
-        # high-water mark carried across epochs
-        last = spark.read.parquet(
-            os.path.join(store, epochs[-1], "next")
-        ).collect()[0]["next_pos"]
-        assert last == len(b0) + len(b1)
-
-    def test_checkpoint_replay_never_double_appends(self, spark, tmp_path):
-        """The crash-replay contract: deleting the checkpoint and
-        re-running the SAME source re-fires epochs 0..n, each overwriting
-        its own dir and re-deriving from its true predecessor — the store
-        after replay is byte-identical to the first run."""
-        import os
-        import shutil
-
-        from crowdsorsa_etl_spark.streaming.pipeline import (
-            start_shuffle_shard_stream,
-        )
-
-        src = str(tmp_path / "docs")
-        os.makedirs(src)
-        for name, ids in (("b0.parquet", range(0, 6)), ("b1.parquet", range(9, 14))):
-            staging = str(tmp_path / f"_stage_{name}")
-            spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long"
-            ).coalesce(1).write.mode("overwrite").parquet(staging)
-            part = [
-                f for f in os.listdir(staging) if f.endswith(".parquet")
-            ][0]
-            os.rename(os.path.join(staging, part), os.path.join(src, name))
-
-        store = str(tmp_path / "store")
-
-        def run():
-            q = start_shuffle_shard_stream(
-                spark.readStream.schema("doc_id long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src),
-                store,
-                checkpoint_dir=str(tmp_path / "ckpt"),
-                shard_docs=4,
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-
-        run()
-        first = {
-            r["doc_id"]: (r["pos"], r["shard_id"])
-            for r in spark.read.parquet(f"{store}/epoch=*/rows").collect()
-        }
-        # crash simulation: lose the checkpoint, replay the whole source
-        shutil.rmtree(str(tmp_path / "ckpt"))
-        run()
-        again = {
-            r["doc_id"]: (r["pos"], r["shard_id"])
-            for r in spark.read.parquet(f"{store}/epoch=*/rows").collect()
-        }
-        assert again == first  # no double-append, no position drift
-        last = max(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(store)
-            if d.startswith("epoch=")
-        )
-        nxt = spark.read.parquet(
-            os.path.join(store, f"epoch={last}", "next")
-        ).collect()[0]["next_pos"]
-        assert nxt == len(first)

@@ -1,35 +1,9 @@
-"""Parquet sink maintenance (upsert), the fixture loader's
-schema memo, and the malformed-record policy of Spark's text readers."""
+"""The fixture loader's schema memo and the malformed-record policy of
+Spark's text readers."""
 
 from __future__ import annotations
 
 import pytest
-
-
-class TestUpsert:
-    def test_latest_per_key_wins(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.sinks.writers import upsert_parquet
-
-        path = str(tmp_path / "tbl")
-        base = spark.createDataFrame(
-            [(1, "a", 10), (2, "b", 10), (3, "c", 10)], "id long, v string, ver long"
-        )
-        upsert_parquet(spark, path, base, key_cols=["id"], order_col="ver")
-        updates = spark.createDataFrame(
-            [(2, "B", 20), (4, "d", 5)], "id long, v string, ver long"
-        )
-        upsert_parquet(spark, path, updates, key_cols=["id"], order_col="ver")
-        got = {r.id: (r.v, r.ver) for r in spark.read.parquet(path).collect()}
-        assert got == {1: ("a", 10), 2: ("B", 20), 3: ("c", 10), 4: ("d", 5)}
-
-    def test_replay_is_idempotent(self, spark, tmp_path):
-        from crowdsorsa_etl_spark.sinks.writers import upsert_parquet
-
-        path = str(tmp_path / "tbl2")
-        batch = spark.createDataFrame([(1, "a", 10)], "id long, v string, ver long")
-        upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")
-        upsert_parquet(spark, path, batch, key_cols=["id"], order_col="ver")  # replay
-        assert spark.read.parquet(path).count() == 1
 
 
 class TestLoadTableSchemaMemo:
