@@ -1,12 +1,12 @@
 """Engine-portable hash primitives (Spark ⇄ DuckDB lockstep).
 
-The dedup/LSH operators default to ``xxhash64`` — the fastest 64-bit hash
-Spark ships — but xxhash64 exists only in Spark, so signatures built from it
-cannot be reproduced by the DuckDB oracle and the driver's correctness gate
-records those queries as rows-only. These helpers derive hash words from
-``md5``, which both engines implement bit-identically over UTF-8 bytes, so
-the SAME signature pipeline can be written as a Spark plan and as an ANSI-ish
-SQL string and hash-compared end to end.
+Spark's fastest 64-bit hash, ``xxhash64``, exists only in Spark, so
+signatures built from it cannot be reproduced by the DuckDB oracle. These
+helpers derive hash words from ``md5``, which both engines implement
+bit-identically over UTF-8 bytes, so the SAME signature pipeline can be
+written as a Spark plan and as an ANSI-ish SQL string and hash-compared end
+to end. The dedup/LSH operators (``operators/dedup.py``) use them for every
+hash.
 
 Two word widths:
 
@@ -18,9 +18,9 @@ Two word widths:
   signed-overflow-safe combine (``(hi - 2^32·[hi ≥ 2^31]) · 2^32 + lo``).
   Used by SimHash, where every bit position carries a vote.
 
-Multi-value combines concatenate with ``concat_ws(',')`` — BOTH engines skip
-NULL args, which preserves the xxhash64 null-skipping semantics the
-non-portable operators rely on for trailing sub-shingles.
+Multi-value combines skip NULL inputs in BOTH engines (``concat_ws(',')``
+for ``combine60``, a no-op step for the Carter-Wegman combine), which the
+shingle operators rely on for trailing sub-shingles.
 
 Each primitive has a ``*_spark`` (→ pyspark Column) and a ``*_sql``
 (→ DuckDB SQL fragment) form generated from the same parameters; tests and
@@ -131,8 +131,8 @@ def combine_cw_spark(*cols: Column, seed: int = 0) -> Column:
     """Polynomial combine of several non-negative bigint words mod 2^31-1 —
     the integer-only portable multi-value hash (one multiply-add per word vs
     one md5 digest + string concat for :func:`combine60_spark`). NULL inputs
-    are skipped (the step is a no-op), preserving xxhash64/concat_ws
-    null-skipping semantics for trailing sub-shingles."""
+    are skipped (the step is a no-op), like concat_ws, so trailing
+    sub-shingles hash the words they have."""
     h: Column = F.lit(_cw_seed(seed)).cast("bigint")
     for c in cols:
         step = (h * F.lit(CW_MULT) + F.pmod(c.cast("bigint"), F.lit(CW_PRIME))) % F.lit(

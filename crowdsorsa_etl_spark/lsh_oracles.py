@@ -1,9 +1,9 @@
-"""DuckDB oracle SQL generators for the portable-hash LSH operators.
+"""DuckDB oracle SQL generators for the LSH operators.
 
 Each generator mirrors, fragment by fragment, the Spark plan built by the
-corresponding ``operators/dedup.py`` function with ``portable=True``: same
-normalization, same md5-derived token words (functions/portable_hash), same
-null-skipping Carter-Wegman polynomial combines, same band layout. Parameters are the
+corresponding ``operators/dedup.py`` function: same normalization, same
+md5-derived token words (functions/portable_hash), same null-skipping
+Carter-Wegman polynomial combines, same band layout. Parameters are the
 single source of truth — the band loop that builds the Spark ``F.struct``
 array also unrolls the SQL ``UNION ALL`` here, so a parameter change cannot
 desynchronize the two engines.
@@ -60,7 +60,7 @@ def _shingle_ctes(shingle_k: int) -> str:
 def minhash_lsh_sql(
     num_hashes: int = 16, bands: int = 8, shingle_k: int = 3
 ) -> str:
-    """Oracle for minhash_lsh_candidates(..., portable=True)."""
+    """Oracle for minhash_lsh_candidates."""
     rows_per_band = num_hashes // bands
     mh_aggs = ",\n           ".join(
         f"min({cw_hash_sql('h', i)}) AS mh{i}" for i in range(num_hashes)
@@ -122,7 +122,7 @@ def _simhash_sig_cte() -> str:
 def containment_pairs_sql(
     threshold: float = 0.5, shingle_k: int = 3
 ) -> str:
-    """Oracle for dedup.shingle_containment_pairs(..., portable=True):
+    """Oracle for dedup.shingle_containment_pairs:
     the same shingle CTE fragment as the MinHash/Jaccard tiers (one set
     universe), distinct sets, inverted-index pair join, exact integer
     counts, single-division unrounded threshold."""
@@ -148,7 +148,7 @@ def containment_pairs_sql(
 
 
 def simhash_buckets_sql() -> str:
-    """Oracle for simhash_buckets(..., portable=True)."""
+    """Oracle for simhash_buckets."""
     return f"""
     WITH {_simhash_sig_cte()}
     SELECT simhash,
@@ -159,7 +159,7 @@ def simhash_buckets_sql() -> str:
 
 
 def simhash_hamming_sql(radius: int = 4, bands: int | None = None) -> str:
-    """Oracle for simhash_hamming_candidates(..., portable=True).
+    """Oracle for simhash_hamming_candidates.
 
     Spark extracts band bits with shiftrightunsigned; DuckDB's >> is an
     arithmetic shift, so every band — including the last, which Spark leaves
@@ -293,7 +293,7 @@ def embedding_dups_lsh_sql(
     n_tables: int = 12,
     n_bits: int = 3,
 ) -> str:
-    """Oracle for similarity.embedding_cosine_pairs_lsh(..., portable=True):
+    """Oracle for similarity.embedding_cosine_pairs_lsh:
     SRP-bucket self-join candidates (id_a < id_b), dedup, sequential-cosine
     verify against the threshold."""
     cos = _COSINE.format(a="ea.v", b="eb.v")
@@ -673,7 +673,7 @@ def semdedup_sql(
 def winnow_overlap_sql(
     k: int = 4, window: int = 4, min_shared: int = 2, max_doc_freq: int = 100
 ) -> str:
-    """Oracle for winnow_overlap_pairs(..., portable=True)."""
+    """Oracle for winnow_overlap_pairs."""
     lead_cols = ", ".join(f"lead(th, {j}) OVER w AS t{j}" for j in range(1, k))
     kgram = combine_cw_sql("th", *[f"t{j}" for j in range(1, k)])
     return f"""
@@ -1157,7 +1157,7 @@ def lsh_audit_sql(
 ) -> str:
     """Oracle for the llm_lsh_audit query: precision/recall of the banded
     MinHash candidate set against exact shingle-set Jaccard ground truth
-    (operators/dedup.shingle_jaccard_pairs with portable=True).
+    (operators/dedup.shingle_jaccard_pairs).
 
     Both sides are rebuilt here from the SAME shingle CTE fragment the
     candidate oracle uses (_shingle_ctes), so the audit measures the real

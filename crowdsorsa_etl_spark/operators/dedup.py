@@ -7,7 +7,8 @@ Four strategies, all shuffle-bounded and driver-free:
                      the shuffle key is fixed-width, not the document body.
 * minhash_lsh      — word-shingle → k minhashes → band keys → candidates from
                      same-band buckets. Built-in exprs only (explode +
-                     xxhash64 + map-side-combined min aggregates);
+                     md5 token words + Carter-Wegman combines +
+                     map-side-combined min aggregates);
                      cost is |bands| rows per doc shuffled, never |docs|².
 * simhash          — 64-bit simhash from token hashes; near-dups = equal
                      simhash bucket (exact tier) or hamming ≤ r via
@@ -16,10 +17,18 @@ Four strategies, all shuffle-bounded and driver-free:
                      by a blocking key (e.g. lang) to bound the pair blowup;
                      the SQL-oracle-checkable ground truth for the approximate
                      methods.
+
+Every hash is built from ``functions/portable_hash``, which DuckDB computes
+bit-identically, so ``lsh_oracles.py`` replays each signature pipeline.
 """
 
 from __future__ import annotations
 
+import binascii
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -36,32 +45,6 @@ _NUM_HASHES = 16
 _BANDS = 8
 _SHINGLE_K = 3
 _BUCKET_PREFIXES = 64
-
-
-# Hash family selector. Default xxhash64 (fastest; Spark-only). With
-# ``portable=True`` every hash derives from md5 via functions/portable_hash,
-# so the identical signature pipeline is expressible as DuckDB SQL (see
-# lsh_oracles.py) and the driver's oracle gate can hash-compare the output
-# instead of recording rows-only. md5 is paid once per TOKEN; multi-value
-# combines (shingles, band buckets, k-grams) use the integer Carter-Wegman
-# polynomial — one multiply-add per word, no per-shingle digest (the round-5
-# md5-per-shingle combine cost 1.68× the xxhash64 tier). Same null-skipping
-# semantics: xxhash64 skips NULL args; the CW combine skips NULL words.
-def _tok_hash(col, portable: bool):
-    return hex60_spark(col) if portable else F.xxhash64(col)
-
-
-def _combine_hash(cols, portable: bool, seed: int | None = None):
-    # Convention: seed=None is the unseeded combine (family member 0), and
-    # band callers pass seed=b+1, so every band — including band 0 — uses a
-    # family member distinct from the unseeded shingle combine (round-6
-    # advice). NOTE an explicit seed=0 would still BE the unseeded member;
-    # decorrelation is the callers' 1-based convention, not a property of
-    # this function.
-    if portable:
-        return combine_cw_spark(*cols, seed=seed if seed is not None else 0)
-    pre = [] if seed is None else [F.lit(seed)]
-    return F.xxhash64(*pre, *cols)
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -84,19 +67,52 @@ def exact_dedup_keep_first(df: DataFrame) -> DataFrame:
     ).drop("_rn")
 
 
+# One hash family, derived from md5 via functions/portable_hash, so every
+# signature pipeline here is expressible as DuckDB SQL (see lsh_oracles.py)
+# and the oracle gate hash-compares the output. md5 is paid once per TOKEN
+# (``hex60``); multi-value combines (shingles, band buckets, k-grams) use
+# the integer Carter-Wegman polynomial — one multiply-add per word, no
+# per-shingle digest — and skip NULL words, so trailing positions past the
+# doc end hash the shorter sub-shingle.
+#
+# Seeds: the unseeded combine is family member 0, and band callers pass
+# seed=b+1, so every band — including band 0 — uses a family member
+# distinct from the shingle combine.
+def _token_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, pos, th): one ``hex60`` word per normalized token."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias("pos", "t"),
+    ).select("id", "pos", hex60_spark(F.col("t")).alias("th"))
+
+
+def _shingle_hashes(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """(id, h) per token position: the combine of the ``shingle_k`` token
+    words starting there. Positions near the doc end combine fewer words
+    (the lead() nulls are skipped)."""
+    w = Window.partitionBy("id").orderBy("pos")
+    return _token_hashes(df, id_col, text_col).select(
+        "id",
+        combine_cw_spark(
+            F.col("th"),
+            *[F.lead("th", j).over(w) for j in range(1, shingle_k)],
+        ).alias("h"),
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     num_hashes: int = 16,
     shingle_k: int = 3,
-    *,
-    portable: bool = False,
 ) -> DataFrame:
     """k minhashes per doc as columns mh0..mh{k-1}.
 
     A shingle's identity is the TUPLE OF ITS TOKEN HASHES, not the joined
-    string: posexplode tokens → xxhash64 each once → combine ``shingle_k``
+    string: posexplode tokens → hash each once → combine ``shingle_k``
     consecutive hashes with lead() over a per-doc window → min-aggregate the
     k family hashes. No per-shingle string slicing/concatenation (measured
     6× faster than string shingles at sf0.1, which itself was 60× faster
@@ -108,33 +124,18 @@ def minhash_signatures(
     hash fewer than ``shingle_k`` tokens (nulls skipped), so short docs
     still get a full signature.
     """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(_norm(F.col(text_col)), " ")).alias("pos", "t"),
-    ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
-    w = Window.partitionBy("id").orderBy("pos")
-    sh = toks.select(
-        "id",
-        _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, shingle_k)],
-            portable,
-        ).alias("h"),
-    )
-    # family members: portable uses Carter-Wegman (a_i·x + b_i) mod 2^31-1
-    # over the md5-derived shingle word — integer-multiply cost instead of
-    # num_hashes md5 digests PER SHINGLE, bit-identical in DuckDB
+    sh = _shingle_hashes(df, id_col, text_col, shingle_k)
+    # family members: Carter-Wegman (a_i·x + b_i) mod 2^31-1 over the
+    # shingle word — integer-multiply cost instead of num_hashes md5
+    # digests PER SHINGLE, bit-identical in DuckDB
     aggs = [
-        F.min(
-            cw_hash_spark(F.col("h"), i)
-            if portable
-            else F.xxhash64(F.lit(i), F.col("h"))
-        ).alias(f"mh{i}")
+        F.min(cw_hash_spark(F.col("h"), i)).alias(f"mh{i}")
         for i in range(num_hashes)
     ]
     return sh.groupBy("id").agg(*aggs)
 
 
-def _banded(sig: DataFrame, num_hashes: int, bands: int, portable: bool) -> DataFrame:
+def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, band, bucket) rows from a signature table — |bands| per doc."""
     rows_per_band = num_hashes // bands
     return sig.select(
@@ -144,12 +145,11 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int, portable: bool) -> Data
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
-                        _combine_hash(
-                            [
+                        combine_cw_spark(
+                            *[
                                 F.col(f"mh{b * rows_per_band + r}")
                                 for r in range(rows_per_band)
                             ],
-                            portable,
                             seed=b + 1,  # b+1: band 0 ≠ unseeded combine
                         ).alias("bucket"),
                     )
@@ -160,12 +160,14 @@ def _banded(sig: DataFrame, num_hashes: int, bands: int, portable: bool) -> Data
     ).select("id", "bk.band", "bk.bucket")
 
 
-def minhash_lsh_candidates_cross(
-    corpus: DataFrame,
-    probe: DataFrame,
-    *,
-    portable: bool = False,
-) -> DataFrame:
+def _band_rows(docs: DataFrame) -> DataFrame:
+    """(id, band, bucket) under the module's signature parameterization —
+    the rows the cross-corpus match and the index at rest compare."""
+    sig = minhash_signatures(docs, "text", "doc_id", _NUM_HASHES, _SHINGLE_K)
+    return _banded(sig, _NUM_HASHES, _BANDS)
+
+
+def minhash_lsh_candidates_cross(corpus: DataFrame, probe: DataFrame) -> DataFrame:
     """Cross-corpus banded MinHash-LSH: candidate (corpus, probe) pairs —
     the FUZZY decontamination primitive (exact n-gram contamination checks
     miss paraphrases; banded signature collisions catch them).
@@ -176,14 +178,8 @@ def minhash_lsh_candidates_cross(
     corpus's one hash shuffle, then a broadcast hash join on (band,
     bucket).
     """
-    sig_c = minhash_signatures(
-        corpus, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
-    )
-    sig_p = minhash_signatures(
-        probe, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
-    )
-    a = _banded(sig_c, _NUM_HASHES, _BANDS, portable).alias("a")
-    b = F.broadcast(_banded(sig_p, _NUM_HASHES, _BANDS, portable).alias("b"))
+    a = _band_rows(corpus).alias("a")
+    b = F.broadcast(_band_rows(probe).alias("b"))
     return (
         a.join(
             b,
@@ -200,8 +196,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 8,
     shingle_k: int = 3,
-    *,
-    portable: bool = False,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
@@ -210,13 +204,13 @@ def minhash_lsh_candidates(
     """
     # materialize signatures once — the a/b sides of the self-join would
     # otherwise each recompute the whole explode→window→agg pipeline
-    sig = materialize(minhash_signatures(
-        df, "text", "doc_id", num_hashes, shingle_k, portable=portable
-    ))
-    banded = _banded(sig, num_hashes, bands, portable)
+    sig = materialize(
+        minhash_signatures(df, "text", "doc_id", num_hashes, shingle_k)
+    )
+    banded = _banded(sig, num_hashes, bands)
 
     # same-band-bucket self-join; dedup ordered pairs. The join key
-    # (band, bucket) is uniform under xxhash64, so no skew salting needed.
+    # (band, bucket) is uniform under the CW combine, so no skew salting.
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -231,7 +225,7 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: for each bit j, sum ±1 votes of token-hash
     bit j over all tokens; bit j of the result = (sum > 0).
 
@@ -241,12 +235,12 @@ def simhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
     (The nested transform()/aggregate() expression form re-evaluates the
     token array per bit — 64x the string work.)
     """
-    # portable path uses the FULL 64-bit md5 word (h64), not hex60 — every
-    # bit position carries a vote, so a 60-bit word would pin bits 60-63
+    # the FULL 64-bit md5 word (h64), not hex60 — every bit position
+    # carries a vote, so a 60-bit word would pin bits 60-63
     ex = df.select(
         F.col("doc_id").alias("id"),
         F.explode(F.split(_norm(F.col("text")), " ")).alias("t"),
-    ).select("id", (h64_spark(F.col("t")) if portable else F.xxhash64("t")).alias("h"))
+    ).select("id", h64_spark(F.col("t")).alias("h"))
 
     def vote(j: int):
         mask = F.shiftleft(F.lit(1).cast("bigint"), j)
@@ -268,10 +262,7 @@ def simhash_signatures(df: DataFrame, *, portable: bool = False) -> DataFrame:
 
 
 def simhash_buckets(
-    df: DataFrame,
-    *,
-    portable: bool = False,
-    signatures: DataFrame | None = None,
+    df: DataFrame, *, signatures: DataFrame | None = None
 ) -> DataFrame:
     """Docs grouped by identical simhash (the exact-collision tier; hamming-r
     search is `simhash_hamming_candidates` below).
@@ -280,11 +271,7 @@ def simhash_buckets(
     depends on task scheduling, so the raw array is nondeterministic across
     runs — sort_array + concat_ws makes the output stable and hashable.
     """
-    sig = (
-        signatures
-        if signatures is not None
-        else simhash_signatures(df, portable=portable)
-    )
+    sig = signatures if signatures is not None else simhash_signatures(df)
     return (
         sig
         .groupBy("simhash")
@@ -305,7 +292,6 @@ def simhash_hamming_candidates(
     df: DataFrame,
     *,
     radius: int = 8,
-    portable: bool = False,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs with simhash hamming distance ≤ ``radius``.
@@ -331,9 +317,7 @@ def simhash_hamming_candidates(
     sig = (
         signatures
         if signatures is not None
-        else materialize(simhash_signatures(
-            df, portable=portable
-        ))
+        else materialize(simhash_signatures(df))
     )
 
     def band_bits(b: int):
@@ -427,10 +411,7 @@ def token_jaccard_pairs(df: DataFrame, *, threshold: float = 0.5) -> DataFrame:
 
 
 def shingle_jaccard_pairs(
-    df: DataFrame,
-    *,
-    portable: bool = False,
-    max_df: int | None = None,
+    df: DataFrame, *, max_df: int | None = None
 ) -> DataFrame:
     """Exact Jaccard over distinct-SHINGLE-hash sets — the ground truth for
     the banded MinHash tier (MinHash estimates shingle-set resemblance, so
@@ -454,18 +435,7 @@ def shingle_jaccard_pairs(
     (surviving) shingle; jaccard = |A∩B| / |A∪B| over the distinct-shingle
     sets of the (possibly capped) universe, rounded 6 dp.
     """
-    toks = df.select(
-        F.col("doc_id").alias("id"),
-        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
-    ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
-    w = Window.partitionBy("id").orderBy("pos")
-    sh = toks.select(
-        "id",
-        _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, _SHINGLE_K)],
-            portable,
-        ).alias("h"),
-    ).distinct()
+    sh = _shingle_hashes(df, "doc_id", "text", _SHINGLE_K).distinct()
     if max_df is not None:
         hot = (
             sh.groupBy("h")
@@ -504,10 +474,7 @@ def shingle_jaccard_pairs(
 
 
 def shingle_containment_pairs(
-    df: DataFrame,
-    *,
-    portable: bool = False,
-    threshold: float = 0.5,
+    df: DataFrame, *, threshold: float = 0.5
 ) -> DataFrame:
     """ASYMMETRIC containment over the distinct-shingle sets: c(A→B) =
     |A∩B| / |A| — the quantity Jaccard structurally underestimates when a
@@ -523,18 +490,7 @@ def shingle_containment_pairs(
     containment_a, containment_b) — filtered to pairs where EITHER
     direction reaches ``threshold`` (the unrounded single-division ratio,
     bit-identical across engines)."""
-    toks = df.select(
-        F.col("doc_id").alias("id"),
-        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
-    ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
-    w = Window.partitionBy("id").orderBy("pos")
-    sh = toks.select(
-        "id",
-        _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w) for j in range(1, _SHINGLE_K)],
-            portable,
-        ).alias("h"),
-    ).distinct()
+    sh = _shingle_hashes(df, "doc_id", "text", _SHINGLE_K).distinct()
     sizes = sh.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sh")
     )
@@ -638,7 +594,6 @@ def winnow_fingerprints(
     *,
     k: int = 4,
     window: int = 4,
-    portable: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al., the MOSS
     algorithm): rolling k-gram hashes, one fingerprint per sliding window
@@ -654,20 +609,17 @@ def winnow_fingerprints(
 
     Output: (id, fp) — one row per distinct fingerprint hash per doc.
     """
-    toks = df.select(
-        F.col("doc_id").alias("id"),
-        F.posexplode(F.split(_norm(F.col("text")), " ")).alias("pos", "t"),
-    ).select("id", "pos", _tok_hash(F.col("t"), portable).alias("th"))
+    toks = _token_hashes(df, "doc_id", "text")
     w_doc = Window.partitionBy("id").orderBy("pos")
     kg = toks.select(
         "id",
         "pos",
-        _combine_hash(
-            [F.col("th")] + [F.lead("th", j).over(w_doc) for j in range(1, k)],
-            portable,
+        combine_cw_spark(
+            F.col("th"),
+            *[F.lead("th", j).over(w_doc) for j in range(1, k)],
         ).alias("h"),
-        # standard winnowing hashes only FULL k-grams: xxhash64 skips null
-        # inputs, so trailing positions (lead beyond doc end) would hash
+        # standard winnowing hashes only FULL k-grams: the combine skips
+        # null inputs, so trailing positions (lead beyond doc end) would hash
         # sub-k-grams and could surface as spurious window minima shared
         # between unrelated docs with common suffixes — drop them.
         F.lead("th", k - 1).over(w_doc).alias("_last"),
@@ -685,7 +637,6 @@ def winnow_overlap_pairs(
     k: int = 4,
     window: int = 4,
     min_shared: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints — the
     copy-detection join. Fingerprints occurring in more than 100
@@ -695,7 +646,7 @@ def winnow_overlap_pairs(
 
     Output: (id_a, id_b, n_shared).
     """
-    fps = winnow_fingerprints(df, k=k, window=window, portable=portable)
+    fps = winnow_fingerprints(df, k=k, window=window)
     rare = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -721,77 +672,40 @@ def winnow_overlap_pairs(
 # ---------------------------------------------------------------------------
 
 
-def lsh_write_index(
-    docs: DataFrame,
-    path: str,
-    *,
-    portable: bool = False,
-) -> None:
+def _index_rows(docs: DataFrame) -> DataFrame:
+    """``_band_rows`` plus the bucket-prefix partition column ``pfx``."""
+    return _band_rows(docs).withColumn(
+        "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
+    )
+
+
+def lsh_write_index(docs: DataFrame, path: str) -> None:
     """Materialize the corpus's banded MinHash rows under ``path``/bands,
     PARTITIONED by a bucket prefix (``pmod(bucket, _BUCKET_PREFIXES)``) — the
     dedup analogue of the IVF/BM25 index-at-rest tier: an incoming batch
     reads only the partitions its own buckets hash into, so per-batch match
     cost is driven by batch size, not corpus size (the scan shows
-    PartitionFilters, asserted in tests).
-
-    Contract: query/append must pass the SAME ``portable`` — signatures
-    are only comparable under one parameterization (same stance as the
-    BM25/IVF indexes); the module constants fix the rest.
+    PartitionFilters, asserted in tests). The module constants fix the
+    signature parameterization, so every index is comparable with every
+    batch.
     """
-    banded = _banded(
-        minhash_signatures(
-            docs, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
-        ),
-        _NUM_HASHES,
-        _BANDS,
-        portable,
-    )
-    (
-        banded.withColumn(
-            "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
-        )
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(path.rstrip("/") + "/bands")
+    _index_rows(docs).write.mode("overwrite").partitionBy("pfx").parquet(
+        path.rstrip("/") + "/bands"
     )
 
 
-def lsh_append_index(
-    new_docs: DataFrame,
-    path: str,
-    *,
-    portable: bool = False,
-) -> None:
+def lsh_append_index(new_docs: DataFrame, path: str) -> None:
     """Corpus APPEND: the delta's banded rows land as new files in the same
     prefix partitions — existing rows are never read or rewritten (banded
     signatures are distributive over documents, like BM25 postings).
     Contract: ``new_docs`` ids are new; dedupe upstream (the curation
     ledger) before appending."""
-    banded = _banded(
-        minhash_signatures(
-            new_docs, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
-        ),
-        _NUM_HASHES,
-        _BANDS,
-        portable,
-    )
-    (
-        banded.withColumn(
-            "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
-        )
-        .write.mode("append")
-        .partitionBy("pfx")
-        .parquet(path.rstrip("/") + "/bands")
+    _index_rows(new_docs).write.mode("append").partitionBy("pfx").parquet(
+        path.rstrip("/") + "/bands"
     )
 
 
-def lsh_match_index(
-    spark,
-    path: str,
-    batch: DataFrame,
-    *,
-    portable: bool = False,
-) -> DataFrame:
+def lsh_match_index(spark, path: str, batch: DataFrame) -> DataFrame:
     """Candidate (corpus, batch) near-dup pairs against the index at rest:
     (id_a = corpus id, id_b = batch id, n_bands_matched) — identical output
     to ``minhash_lsh_candidates_cross`` over the same corpus (gated by
@@ -803,17 +717,8 @@ def lsh_match_index(
     filter on the index scan; the batch side broadcasts, so the corpus
     index is never shuffled. Per-batch cost: batch signature build + a
     pruned index read."""
-    b = _banded(
-        minhash_signatures(
-            batch, "text", "doc_id", _NUM_HASHES, _SHINGLE_K, portable=portable
-        ),
-        _NUM_HASHES,
-        _BANDS,
-        portable,
-    ).withColumn(
-        "pfx", F.pmod(F.col("bucket"), F.lit(_BUCKET_PREFIXES)).cast("int")
-    )
-    b = materialize(b)  # prefix collect + join reuse one computation
+    # prefix collect + join reuse one computation
+    b = materialize(_index_rows(batch))
     pfxs = sorted(r["pfx"] for r in b.select("pfx").distinct().collect())
     corpus = spark.read.parquet(path.rstrip("/") + "/bands").filter(
         F.col("pfx").isin(pfxs)
@@ -850,12 +755,6 @@ def cdc_chunk_stats(df: DataFrame, *, k: int = 4) -> DataFrame:
     one shuffle whose keys are content hashes (uniform by construction).
     The first 256 bytes of each payload are chunked.
     """
-    import binascii
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     pows = [pow(31, j, 1 << 20) for j in range(k)]

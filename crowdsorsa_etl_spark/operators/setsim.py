@@ -46,6 +46,8 @@ from pyspark.sql import functions as F
 
 from crowdsorsa_etl_spark.functions.text import normalize_text as _norm
 from crowdsorsa_etl_spark.operators.checkpointing import materialize
+from crowdsorsa_etl_spark.operators.dedup import minhash_lsh_candidates
+from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
 
 __all__ = ["shingle_sets", "setsim_prefix_join", "editdist_join"]
 
@@ -70,8 +72,6 @@ def shingle_sets(df: DataFrame, *, shingle_k: int = 3) -> DataFrame:
     cold llm_setsim_join profile) — widen first (``cpu_fanout`` is a
     no-op whenever the scan already yields session parallelism, i.e. at
     cluster scale)."""
-    from crowdsorsa_etl_spark.operators.fanout import cpu_fanout
-
     df = cpu_fanout(df.select(F.col("doc_id"), F.col("text")))
     toks = F.split(_norm(F.col("text")), " ")
     idx = F.sequence(F.lit(1), F.size(toks) - F.lit(shingle_k - 1))
@@ -247,8 +247,6 @@ def editdist_join(
     At 100 TB: identical shape to the minhash dedup tier (banded buckets,
     never all-pairs); levenshtein runs only on candidate pairs.
     """
-    from crowdsorsa_etl_spark.operators.dedup import minhash_lsh_candidates
-
     cand = minhash_lsh_candidates(
         df,
         num_hashes=num_hashes,

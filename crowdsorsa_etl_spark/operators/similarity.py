@@ -458,7 +458,6 @@ def embedding_cosine_pairs_lsh(
     *,
     dim: int,
     threshold: float,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate embedding near-dup pairs: SRP-bucket self-join candidates
     + vectorized exact cosine verification — the 100 TB path (fixed-width
@@ -481,12 +480,10 @@ def embedding_cosine_pairs_lsh(
     Output: (id_a, id_b, cosine) — a subset of embedding_cosine_pairs
     (candidates missed by every table are lost; recall is gated in tests).
 
-    ``portable=True`` scores the verified pairs with the sequential
-    expression-path cosine (``dot``/``l2_norm`` fold) instead of the BLAS
-    pandas UDF, so the values match DuckDB's ``list_dot_product`` evaluation
-    order bit-for-bit after rounding — the oracle-parity tier
-    (lsh_oracles.embedding_dups_lsh_sql). The default stays the vectorized
-    verifier: at scale the Arrow batch matmul is the measured win.
+    The BLAS pandas UDF is the bulk filter; the surviving pairs are
+    rescored with the sequential expression-path cosine (``dot``/``l2_norm``
+    fold), so the values match DuckDB's ``list_dot_product`` evaluation
+    order bit-for-bit after rounding (lsh_oracles.embedding_dups_lsh_sql).
     """
     # materialize buckets once — the a/b sides of the self-join would each
     # re-run the projection UDF otherwise
@@ -517,40 +514,33 @@ def embedding_cosine_pairs_lsh(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    ea = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_av"))
-    eb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_bv"))
-    if portable:
-        # norms hoisted per VECTOR (|N| fold evaluations, before the pair
-        # join) — the norm is a deterministic function of the vector, so the
-        # value is identical to computing it per pair, at 1/|pairs| the cost
-        ea = ea.withColumn("_an", l2_norm(F.col("_av")))
-        eb = eb.withColumn("_bn", l2_norm(F.col("_bv")))
-    verified = (
+    # norms hoisted per VECTOR (|N| fold evaluations, before the pair
+    # join) — the norm is a deterministic function of the vector, so the
+    # value is identical to computing it per pair, at 1/|pairs| the cost
+    ea = emb.select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("_av")
+    ).withColumn("_an", l2_norm(F.col("_av")))
+    eb = emb.select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("_bv")
+    ).withColumn("_bn", l2_norm(F.col("_bv")))
+    # BLAS is the bulk filter (with last-ulp slack so it can never drop a
+    # pair the sequential score would keep); the interpreted expression-path
+    # cosine — DuckDB's evaluation order — is recomputed only on the
+    # ~threshold-surviving pairs, so oracle parity costs one fold over
+    # survivors, not three folds over every candidate.
+    return (
         pairs.join(ea, "id_a")
         .join(eb, "id_b")
         .withColumn("cosine", _cosine_arrow(F.col("_av"), F.col("_bv")))
-    )
-    if portable:
-        # BLAS stays the bulk filter (with last-ulp slack so it can never
-        # drop a pair the sequential score would keep); the interpreted
-        # expression-path cosine — DuckDB's evaluation order — is recomputed
-        # only on the ~threshold-surviving pairs, so oracle parity costs one
-        # fold over survivors, not three folds over every candidate.
-        return (
-            verified.filter(F.col("cosine") >= threshold - 1e-4)
-            .withColumn(
-                "cosine",
-                F.round(
-                    dot(F.col("_av"), F.col("_bv"))
-                    / (F.col("_an") * F.col("_bn")),
-                    6,
-                ),
-            )
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine")
+        .filter(F.col("cosine") >= threshold - 1e-4)
+        .withColumn(
+            "cosine",
+            F.round(
+                dot(F.col("_av"), F.col("_bv")) / (F.col("_an") * F.col("_bn")),
+                6,
+            ),
         )
-    return (
-        verified.filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
 

@@ -208,7 +208,7 @@ def _scratch_copy(seed: str):
 
 
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-fixture materialized portable-MinHash candidate pairs over the
+    """Per-fixture materialized MinHash candidate pairs over the
     FULL documents table (id_a, id_b, n_bands_matched) — shared by
     llm_minhash_lsh, llm_dedup_clusters, llm_dedup_canonical,
     llm_split_leakage, and llm_cluster_policy, which previously each
@@ -220,7 +220,7 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             _sf_cache_dir(sf_dir, "lshpairs_v1", "documents"), "pairs.parquet"
         ),
         lambda stage: minhash_lsh_candidates(
-            _t(spark, sf_dir, "documents"), portable=True
+            _t(spark, sf_dir, "documents")
         ).write.parquet(stage),
     )
     return spark.read.parquet(path)
@@ -315,7 +315,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
 
 
 def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-fixture materialized portable 64-bit SimHash signatures
+    """Per-fixture materialized md5-derived 64-bit SimHash signatures
     (id, simhash) over documents — shared by llm_simhash and
     llm_simhash_hamming (each previously re-ran the token-hash vote
     aggregation). Deterministic md5-derived h64 votes."""
@@ -324,7 +324,7 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
             _sf_cache_dir(sf_dir, "simhash_v1", "documents"), "sig.parquet"
         ),
         lambda stage: simhash_signatures(
-            _t(spark, sf_dir, "documents"), portable=True
+            _t(spark, sf_dir, "documents")
         ).write.parquet(stage),
     )
     return spark.read.parquet(path)
@@ -335,7 +335,7 @@ def _shingle_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id_a, id_b, jaccard) — the AllPairs inverted-index join the LSH
     audit judges the sketch against. Ground truth at rest: an audit's
     reference table is computed once per corpus snapshot; the audit's
-    LIVE work is the precision/recall joins. Deterministic (portable
+    LIVE work is the precision/recall joins. Deterministic (md5 +
     Carter-Wegman shingle hashes, exact integer intersection/union)."""
     path = _at_rest(
         os.path.join(
@@ -343,7 +343,7 @@ def _shingle_jaccard_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
             "truth.parquet",
         ),
         lambda stage: shingle_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), portable=True
+            _t(spark, sf_dir, "documents")
         ).write.parquet(stage),
     )
     return spark.read.parquet(path)

@@ -133,32 +133,28 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("llm_minhash_lsh", lsh_oracles.minhash_lsh_sql())
 def llm_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded MinHash-LSH candidate pairs, portable-hash variant: every
-    signature word derives from md5 (functions/portable_hash), so the DuckDB
-    oracle re-derives the identical signatures and the driver hash-compares
-    the pairs — a full end-to-end correctness gate, not rows-only. The
-    xxhash64 default stays available for perf-sensitive library use."""
+    """Banded MinHash-LSH candidate pairs: every signature word derives from
+    md5 (functions/portable_hash), so the DuckDB oracle re-derives the
+    identical signatures and the driver hash-compares the pairs — a full
+    end-to-end correctness gate, not rows-only."""
     return _lsh_pairs(spark, sf_dir)
 
 
 @register("llm_simhash", lsh_oracles.simhash_buckets_sql())
 def llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-collision SimHash buckets over md5-derived 64-bit signatures
-    (portable=True → the oracle replays the same 64 bit-votes in SQL)."""
+    (the oracle replays the same 64 bit-votes in SQL)."""
     return simhash_buckets(
-        _t(spark, sf_dir, "documents"),
-        portable=True,
-        signatures=_simhash_sigs(spark, sf_dir),
+        _t(spark, sf_dir, "documents"), signatures=_simhash_sigs(spark, sf_dir)
     )
 
 
 @register("llm_simhash_hamming", lsh_oracles.simhash_hamming_sql(radius=4))
 def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming ≤ 4 near-dup pairs via pigeonhole bit-band LSH. Portable
-    md5-derived signatures since round 5: the DuckDB oracle re-derives
-    signatures, bands, candidate pairs, and bit_count verification, closing
-    the rows-only gap; the brute-force-equality gate in
-    tests/test_operators.py still covers the xxhash64 default.
+    """Hamming ≤ 4 near-dup pairs via pigeonhole bit-band LSH over
+    md5-derived signatures: the DuckDB oracle re-derives signatures, bands,
+    candidate pairs, and bit_count verification; the brute-force-equality
+    gate in tests/test_operators.py covers the radius-8 banding.
 
     radius=4 → 5 bands × 12 bits: 4096 buckets per band keeps bucket
     occupancy low even on this dup-heavy corpus (radius 8 would mean 7-bit
@@ -166,7 +162,6 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_hamming_candidates(
         _t(spark, sf_dir, "documents"),
         radius=4,
-        portable=True,
         signatures=_simhash_sigs(spark, sf_dir),
     )
 
@@ -174,12 +169,10 @@ def llm_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("llm_winnow_overlap", lsh_oracles.winnow_overlap_sql(min_shared=2))
 def llm_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (rolling-hash) fingerprint overlap pairs — MOSS-style copy
-    detection. Portable md5 k-gram hashes since round 5, so the DuckDB
-    oracle replays the k-gram → window-min → doc-freq-cap → join pipeline
-    verbatim; the shared-substring guarantee stays unit-tested."""
-    return winnow_overlap_pairs(
-        _t(spark, sf_dir, "documents"), min_shared=2, portable=True
-    )
+    detection. md5-derived k-gram hashes, so the DuckDB oracle replays the
+    k-gram → window-min → doc-freq-cap → join pipeline verbatim; the
+    shared-substring guarantee stays unit-tested."""
+    return winnow_overlap_pairs(_t(spark, sf_dir, "documents"), min_shared=2)
 
 
 @register(
@@ -426,17 +419,13 @@ def llm_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Staged by _at_rest: two concurrent builders must not both run
         # lsh_append_index against one dir (duplicated banded rows would
         # inflate n_bands_matched).
-        lsh_write_index(
-            corpus.filter(F.col("doc_id") % 2 == 0), stage, portable=True
-        )
-        lsh_append_index(
-            corpus.filter(F.col("doc_id") % 2 == 1), stage, portable=True
-        )
+        lsh_write_index(corpus.filter(F.col("doc_id") % 2 == 0), stage)
+        lsh_append_index(corpus.filter(F.col("doc_id") % 2 == 1), stage)
 
     path = _at_rest(
         _sf_cache_dir(sf_dir, "lshidx_v1_h16b8s3", "documents"), build
     )
-    cand = lsh_match_index(spark, path, probe, portable=True)
+    cand = lsh_match_index(spark, path, probe)
     return jaccard_verify_pairs(cand, docs, threshold=0.3).select(
         F.col("id_a").alias("doc_id"),
         F.col("id_b").alias("batch_id"),
@@ -1039,9 +1028,7 @@ def llm_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs where either side's shingle set is >= 50% contained
     in the other: exact integers + both directional ratios."""
     return shingle_containment_pairs(
-        _t(spark, sf_dir, "documents"),
-        portable=True,
-        threshold=_CONTAIN_THRESHOLD,
+        _t(spark, sf_dir, "documents"), threshold=_CONTAIN_THRESHOLD
     )
 
 

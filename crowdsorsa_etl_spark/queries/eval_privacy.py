@@ -166,7 +166,7 @@ def llm_fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     probe = docs.filter(F.col("doc_id") % 20 == 0)
-    cand = minhash_lsh_candidates_cross(corpus, probe, portable=True)
+    cand = minhash_lsh_candidates_cross(corpus, probe)
     return jaccard_verify_pairs(cand, docs, threshold=0.5).select(
         F.col("id_a").alias("doc_id"),
         F.col("id_b").alias("eval_id"),

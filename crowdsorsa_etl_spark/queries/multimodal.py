@@ -782,7 +782,7 @@ def llm_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 # captions, or near-identical captions pointing at different images); this
 # tier joins the image near-dup pairs (REAL PNG encode → stdlib decode →
 # integer aHash → 8-band pigeonhole, the llm_image_phash_dups machinery)
-# with the caption near-dup pairs (portable-hash banded MinHash-LSH, the
+# with the caption near-dup pairs (md5-hash banded MinHash-LSH, the
 # llm_minhash_lsh machinery) by pair key — a FULL OUTER join of two
 # bucketed pair sets, never all-pairs — and classifies each pair as
 # both / image_only / caption_only. The fixture models the web shape:
@@ -881,7 +881,7 @@ def llm_caption_image_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_png_payload(keyed, text_col="img_key"),
         max_hamming=_CI_HAMMING,
     )
-    cap_pairs = minhash_lsh_candidates(docs, portable=True)
+    cap_pairs = minhash_lsh_candidates(docs)
     joined = img_pairs.alias("i").join(
         cap_pairs.alias("c"),
         (F.col("i.id_a") == F.col("c.id_a"))

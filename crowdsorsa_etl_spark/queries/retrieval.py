@@ -122,11 +122,11 @@ def llm_embedding_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH embedding near-dup pairs — the 100 TB path. Oracle since
     round 6: the DuckDB SQL replays bucket assignment from the same plane
     literals and verifies the deduped candidates with the sequential
-    expression-path cosine (portable=True); recall vs the exact pairs stays
-    gated in tests/test_operators.py, and the BLAS verifier remains the
-    library default."""
+    expression-path cosine the operator rescores with after its BLAS
+    prefilter; recall vs the exact pairs stays gated in
+    tests/test_operators.py."""
     return embedding_cosine_pairs_lsh(
-        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.35, portable=True
+        _t(spark, sf_dir, "embeddings"), dim=64, threshold=0.35
     )
 
 

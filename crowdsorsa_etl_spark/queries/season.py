@@ -40,7 +40,7 @@ from crowdsorsa_etl_spark.schemas import (
 #   (neither engine escapes '/').
 # ===========================================================================
 
-_FLAGSHIP_NET_SQL = (
+_NET_SQL = (
     "CAST(CAST(l_extendedprice AS DECIMAL(12,2))"
     " * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))"
     " AS DOUBLE)"
@@ -53,11 +53,11 @@ _FLAGSHIP_DOC_SQL = f"""
                '{{"lineNumber":' || l_linenumber
                || ',"partKey":' || l_partkey
                || ',"quantity":' || CAST(l_quantity AS VARCHAR)
-               || ',"netPrice":' || CAST({_FLAGSHIP_NET_SQL} AS VARCHAR)
+               || ',"netPrice":' || CAST({_NET_SQL} AS VARCHAR)
                || ',"returnFlag":' || to_json(l_returnflag) || '}}',
                ','
                ORDER BY l_linenumber, l_partkey, l_quantity,
-                        {_FLAGSHIP_NET_SQL}, l_returnflag
+                        {_NET_SQL}, l_returnflag
              ) || ']' AS units_json
       FROM lineitem GROUP BY 1
     ),
@@ -183,19 +183,13 @@ def crowdsorsa_documents_2024(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (which oracles the scalar fields through a JSON round-trip); together
 # they cover every layer of S25 except the serializer itself.
 #
-# netPrice is the EXACT decimal product cast to double: double→DECIMAL(12,2)
-# inputs make the product exact fixed-point (no rounding step at all), and
-# the final decimal→double conversion is deterministic in both engines —
-# sidestepping the Spark-HALF_UP vs DuckDB-half-even divergence that any
-# round-to-2 of a .xx45/.xx55 product hits.
+# netPrice (``_NET_SQL``, the flagship document's expression) is the EXACT
+# decimal product cast to double: double→DECIMAL(12,2) inputs make the
+# product exact fixed-point (no rounding step at all), and the final
+# decimal→double conversion is deterministic in both engines — sidestepping
+# the Spark-HALF_UP vs DuckDB-half-even divergence that any round-to-2 of a
+# .xx45/.xx55 product hits.
 # ===========================================================================
-
-
-_NET_SQL = (
-    "CAST(CAST(l_extendedprice AS DECIMAL(12,2))"
-    " * (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))"
-    " AS DOUBLE)"
-)
 
 _UNITS_AGG_SQL = f"""
     WITH u AS (

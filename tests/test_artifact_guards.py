@@ -539,7 +539,14 @@ def test_query_modules_are_domains_with_hoisted_imports():
 
 
 # operator modules that import their dependencies once, at the top
-_HOISTED_OPERATORS = ("curation.py", "multimodal.py", "pq.py", "similarity.py")
+_HOISTED_OPERATORS = (
+    "curation.py",
+    "dedup.py",
+    "multimodal.py",
+    "pq.py",
+    "setsim.py",
+    "similarity.py",
+)
 
 
 def test_sink_modules_hoist_their_imports():
@@ -547,7 +554,8 @@ def test_sink_modules_hoist_their_imports():
     dependencies once, at the top: ``writers`` needs only pyspark,
     ``ledger`` imports ``writers`` and ``http_push`` imports ``ledger``;
     ``pq`` imports ``similarity``, which imports neither ``pq`` nor
-    ``curation``, so no cycle calls for a local import."""
+    ``curation``, and ``setsim`` imports ``dedup``, which does not import
+    ``setsim``, so no cycle calls for a local import."""
     bad = _registry_layout_violations(os.path.join(PKG, "sinks"))
     for f in _HOISTED_OPERATORS:
         bad += _function_level_imports(os.path.join(PKG, "operators", f))
@@ -1048,37 +1056,50 @@ def test_import_guard_flags_unused_names():
 # --- the slow-tier list names only real tests ----------------------------
 
 
-def _test_paths(src: str) -> set[str]:
+def _is_parametrized(fn: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call)
+        and isinstance(d.func, ast.Attribute)
+        and d.func.attr == "parametrize"
+        for d in fn.decorator_list
+    )
+
+
+def _test_paths(src: str) -> dict[str, bool]:
     """``test`` and ``Class::test`` for every function a test module
-    defines at top level or in a top-level class."""
-    paths = set()
+    defines at top level or in a top-level class, each mapped to whether
+    a ``parametrize`` decorator gives its node IDs a ``[param]`` suffix."""
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    paths = {}
     for node in ast.parse(src).body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            paths.add(node.name)
+        if isinstance(node, funcs):
+            paths[node.name] = _is_parametrized(node)
         elif isinstance(node, ast.ClassDef):
-            paths |= {
-                f"{node.name}::{m.name}"
-                for m in node.body
-                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
-            }
+            for m in node.body:
+                if isinstance(m, funcs):
+                    paths[f"{node.name}::{m.name}"] = _is_parametrized(m)
     return paths
 
 
 def _stale_slow_entries(root: str, entries: list[str]) -> list[str]:
-    """Entries (``file::[Class::]test[param]``) whose file is missing or
-    defines no such test. The ``[param]`` suffix is not checked."""
-    defined: dict[str, set[str]] = {}
+    """Entries (``file::[Class::]test[param]``) whose file is missing,
+    defines no such test, or whose ``[param]`` suffix does not match the
+    test: a suffix on an unparametrized test, or none on a parametrized
+    one. conftest matches node IDs exactly, so either mismatch matches
+    nothing. The suffix's value is not checked."""
+    defined: dict[str, dict[str, bool]] = {}
     bad = []
     for entry in entries:
-        path, _, rest = entry.split("[", 1)[0].partition("::")
+        node, bracket, _ = entry.partition("[")
+        path, _, rest = node.partition("::")
         if path not in defined:
             full = os.path.join(root, path)
             if os.path.isfile(full):
                 with open(full) as fh:
                     defined[path] = _test_paths(fh.read())
             else:
-                defined[path] = set()
-        if rest not in defined[path]:
+                defined[path] = {}
+        if defined[path].get(rest) != bool(bracket):
             bad.append(entry)
     return bad
 
@@ -1098,18 +1119,25 @@ def test_slow_list_names_only_real_tests():
 def test_slow_list_guard_flags_missing_files_and_tests(tmp_path):
     (tmp_path / "tests").mkdir()
     (tmp_path / "tests" / "test_m.py").write_text(
+        "import pytest\n\n\n"
         "def test_a():\n    pass\n\n\n"
-        "class TestK:\n    def test_b(self):\n        pass\n"
+        "class TestK:\n    def test_b(self):\n        pass\n\n"
+        "    @pytest.mark.parametrize('x', [1, 2])\n"
+        "    def test_p(self, x):\n        pass\n"
     )
     entries = [
         "tests/test_m.py::test_a",
         "tests/test_m.py::test_a[p1]",
         "tests/test_m.py::TestK::test_b",
+        "tests/test_m.py::TestK::test_p[1]",
+        "tests/test_m.py::TestK::test_p",
         "tests/test_m.py::TestK::test_gone",
         "tests/test_m.py::test_b",
         "tests/test_gone.py::test_a",
     ]
     assert _stale_slow_entries(str(tmp_path), entries) == [
+        "tests/test_m.py::test_a[p1]",
+        "tests/test_m.py::TestK::test_p",
         "tests/test_m.py::TestK::test_gone",
         "tests/test_m.py::test_b",
         "tests/test_gone.py::test_a",

@@ -426,7 +426,7 @@ class TestSplitLeakage:
             ],
             "doc_id long, text string",
         )
-        pairs = minhash_lsh_candidates(docs, portable=True).select(
+        pairs = minhash_lsh_candidates(docs).select(
             "id_a",
             "id_b",
             assign_split(F.col("id_a")).alias("split_a"),

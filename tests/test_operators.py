@@ -341,11 +341,9 @@ class TestLSHRecallGates:
         recall = len(truth & cand) / len(truth)
         assert recall >= 0.95, f"minhash-LSH recall {recall:.3f} < 0.95"
 
-    @pytest.mark.parametrize("portable", [False, True])
-    def test_simhash_hamming_equals_bruteforce(self, spark, portable):
-        """Pigeonhole-banding exactness, for BOTH hash families: the default
-        xxhash64 signatures and the md5-portable ones the oracle-checked
-        registry queries use (the guarantee is hash-family-independent)."""
+    def test_simhash_hamming_equals_bruteforce(self, spark):
+        """Pigeonhole-banding exactness: hamming candidates equal the
+        brute-force pairs over the same signatures."""
         from crowdsorsa_etl_spark.operators.dedup import (
             simhash_hamming_candidates,
             simhash_signatures,
@@ -355,7 +353,7 @@ class TestLSHRecallGates:
         docs = load_table(spark, "documents", "/root/testdata/sf0.001")
         sigs = {
             r.id: r.simhash
-            for r in simhash_signatures(docs, portable=portable).collect()
+            for r in simhash_signatures(docs).collect()
         }
         ids = sorted(sigs)
         for radius in (4, 8):
@@ -367,17 +365,15 @@ class TestLSHRecallGates:
             }
             cand = {
                 (r.id_a, r.id_b)
-                for r in simhash_hamming_candidates(
-                    docs, radius=radius, portable=portable
-                ).collect()
+                for r in simhash_hamming_candidates(docs, radius=radius).collect()
             }
             # pigeonhole banding guarantees EVERY pair within radius collides
             # in at least one band — candidates must equal brute force exactly
             assert cand == brute
 
     def test_portable_minhash_recall_and_winnow_guarantee(self, spark):
-        """The portable (md5) hash family preserves the operators' semantic
-        gates: minhash-LSH recall vs exact Jaccard, and winnowing's
+        """The md5 + Carter-Wegman hash family preserves the operators'
+        semantic gates: minhash-LSH recall vs exact Jaccard, and winnowing's
         shared-run guarantee (a pair sharing ≥ k+window-1 tokens must share
         a fingerprint)."""
         from crowdsorsa_etl_spark.operators.dedup import winnow_overlap_pairs
@@ -390,14 +386,12 @@ class TestLSHRecallGates:
         }
         cand = {
             (r.id_a, r.id_b)
-            for r in minhash_lsh_candidates(
-                docs, shingle_k=1, portable=True
-            ).collect()
+            for r in minhash_lsh_candidates(docs, shingle_k=1).collect()
         }
         recall = len(truth & cand) / len(truth)
-        assert recall >= 0.95, f"portable minhash-LSH recall {recall:.3f} < 0.95"
+        assert recall >= 0.95, f"minhash-LSH recall {recall:.3f} < 0.95"
 
-        # winnowing shared-run guarantee, portable family: two docs sharing
+        # winnowing shared-run guarantee: two docs sharing
         # a run of ≥ k + window - 1 = 7 tokens MUST share a fingerprint
         shared = "alpha bravo charlie delta echo foxtrot golf"
         synth = spark.createDataFrame(
@@ -410,11 +404,9 @@ class TestLSHRecallGates:
         )
         pairs = {
             (r.id_a, r.id_b)
-            for r in winnow_overlap_pairs(
-                synth, min_shared=1, portable=True
-            ).collect()
+            for r in winnow_overlap_pairs(synth, min_shared=1).collect()
         }
-        assert (1, 2) in pairs, "winnow portable missed the shared-run pair"
+        assert (1, 2) in pairs, "winnow missed the shared-run pair"
         assert not any(3 in p for p in pairs)
 
 

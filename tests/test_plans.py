@@ -324,7 +324,7 @@ class TestRound6Plans:
         assert "BroadcastNestedLoop" not in plan
 
     def test_embedding_dups_lsh_portable_rescore_after_prefilter(self, spark):
-        """The portable tier must keep the BLAS verifier as the bulk filter
+        """The LSH tier must keep the BLAS verifier as the bulk filter
         (ArrowEvalPython present) and never fall into a nested-loop join."""
         plan = plan_of(QUERIES["llm_embedding_dups_lsh"](spark, SF_DIR))
         assert "NestedLoop" not in plan

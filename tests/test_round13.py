@@ -77,12 +77,6 @@ class TestShingleJaccard:
         assert set(capped) == {(0, 1)}
         assert capped[(0, 1)] == round(3 / 9, 6)
 
-    def test_portable_and_fast_hash_agree(self, spark):
-        docs = self._docs(spark)
-        assert _pairs_dict(shingle_jaccard_pairs(docs)) == _pairs_dict(
-            shingle_jaccard_pairs(docs, portable=True)
-        )
-
     def test_lsh_candidates_are_subset_of_truth_support(self, spark):
         # every band collision implies >= 1 shared shingle on this fixture
         docs = self._docs(spark)
